@@ -1,20 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
+    import QueryRun.{json, loadNow}
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val run = QueryRun()
+    val spark = run.spark
     // warm the session once (JIT, codegen, parquet reader init, and the
     // custom sketch expressions' hash loops) so one-time startup cost
     // isn't attributed to whichever query happens to run first
-    try {
+    QueryRun.warmUp("bench", "session") {
       spark.read.parquet(s"$sfDir/region.parquet").count()
       import org.apache.spark.sql.functions._
       import graft.ops.{DedupOps, SimilarityOps}
@@ -38,13 +32,8 @@ object Bench {
       SimilarityOps.exactCosinePairs(vecs, "id", "v", 0.99).count()
       SimilarityOps.annSelfJoin(vecs, "id", "v", 64, k = 2,
         planesPerBand = 6, bands = 4).count()
-    } catch { case _: Throwable => () }
-    // dev convenience: SPARK_GRAFT_ONLY=q16_jaccard_pairs,q18_simhash
-    // restricts the run; unset (the driver's mode) runs everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.filter { case (n, _) => names(n) })
+    }
+    val selected = QueryRun.selected
     // warm every selected query once at the smallest SF before timing:
     // codegen compilation + C2 JIT of each plan's generated classes land
     // here, so the recorded numbers measure engine throughput at the
@@ -55,9 +44,8 @@ object Bench {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.001")
     if (warmDir.nonEmpty && new java.io.File(warmDir).isDirectory) {
-      selected.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count()
-        catch { case _: Throwable => () }
+      selected.foreach { case (name, fn) =>
+        QueryRun.warmUp("bench", name)(fn(spark, warmDir).count())
       }
       // release everything the warm-up pinned (checkpointed edge sets,
       // persisted partials) so the timed phase doesn't inherit its heap:
@@ -79,114 +67,28 @@ object Bench {
     // (b) /proc/loadavg is sampled at start and reported in the total
     // line, so a contaminated run is *labeled* instead of silently
     // poisoning round-over-round comparisons.
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
-    // per-query executor task time (SparkListener stage metrics, r11
-    // verdict #4): wall time alone can't separate a plan regression
-    // from machine contention — wall up with task time flat is
-    // contention by definition (the tasks did the same work, they just
-    // waited for CPU). One atomic accumulates executorRunTime across
-    // all tasks; per-query deltas are snapshotted around the timed runs
-    // behind a listener-bus flush barrier (events are async).
-    val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    // per-query GC time (r14 verdict #1): the r14 headline artifact
-    // recorded a 2.4x total regression that the per-run spreads said
-    // was GC thrash or external CPU pressure, but the artifact itself
-    // couldn't prove which. Two additions make it self-adjudicating:
-    // task-attributed jvmGCTime (snapshotted per query, like task_sec)
-    // separates "the JVM was collecting during this query's tasks"
-    // from plan cost, and a /proc/loadavg sample before EVERY run
-    // (not just at launch) timestamps external pressure onto the
-    // specific runs it poisoned.
-    val gcMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            taskMs.addAndGet(m.executorRunTime)
-            gcMs.addAndGet(m.jvmGCTime)
-          }
-        }
-      })
-    def taskMsNow(): (Long, Long) = {
-      org.apache.spark.graftglue.ListenerGlue
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      (taskMs.get(), gcMs.get())
-    }
-    def loadNow(): Double = try {
-      java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split("\\s+")(0).toDouble
-    } catch { case _: Throwable => -1.0 }
-    // (steal_jiffies, total_jiffies) from /proc/stat's aggregate cpu
-    // line — per-query deltas put HYPERVISOR pressure in the artifact.
-    // loadavg can't see it (a guest under 50% steal reports an idle
-    // loadavg while every wall clock doubles) and jvmGCTime can't
-    // either; steal% is the one signal that separates "the host took
-    // our cycles" from every in-JVM explanation. On a bare machine
-    // the column reads 0.0 and costs nothing.
-    def stealNow(): (Long, Long) = try {
-      val p = java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/stat")).linesIterator.next()
-        .split("\\s+")
-      val vals = p.drop(1).take(8).map(_.toLong)
-      (if (vals.length >= 8) vals(7) else 0L, vals.sum)
-    } catch { case _: Throwable => (0L, 0L) }
+    val runs = QueryRun.runs
     val load1 = loadNow()
     if (load1 > 1.5) System.err.println(
       f"BENCH WARNING: /proc/loadavg=$load1%.2f at start — external CPU " +
         "interference will inflate these numbers (see SCALING.md, r5 incident)")
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      s(s.length / 2)
-    }
-    // JSON string escape for everything interpolated into the artifact
-    // and the stdout lines: sfDir comes from the environment, and a
-    // quote or backslash in it would otherwise emit invalid JSON that
-    // round-over-round tooling can't parse
-    def jesc(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val stealStart = stealNow()
+    val stealStart = QueryRun.stealNow()
     val allRuns = selected.map { case (name, fn) =>
-      val (task0, gc0) = taskMsNow()
-      val (steal0, jif0) = stealNow()
-      val loads = Seq.newBuilder[Double]
-      val times = (1 to runs).flatMap { _ =>
-        loads += loadNow()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"BENCH FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-            None
-        }
+      name -> run.measure(e => System.err.println(
+        s"BENCH FAIL $name: ${e.getClass.getName}: ${e.getMessage}")) {
+        fn(spark, sfDir).count()
       }
-      // mean task seconds per run (the per-run split isn't observable
-      // from one accumulator, and the median-vs-mean gap is noise at
-      // task granularity — the signal is round-over-round level shifts)
-      val (task1, gc1) = taskMsNow()
-      val (steal1, jif1) = stealNow()
-      val taskSec = (task1 - task0) / 1e3 / runs
-      val gcSec = (gc1 - gc0) / 1e3 / runs
-      val stealPct =
-        if (jif1 > jif0) 100.0 * (steal1 - steal0) / (jif1 - jif0) else 0.0
-      name -> (times, taskSec, gcSec, loads.result(), stealPct)
     }
-    val results = allRuns.map { case (name, (times, _, _, _, _)) =>
+    val results = allRuns.map { case (name, m) =>
       // ANY failed run marks the query failed in the artifact (-1.0):
       // a median over the surviving runs would make an intermittently
       // OOMing query look healthy to JSON-only round-over-round tooling
-      name -> (if (times.size < runs) -1.0 else median(times))
+      name -> (if (m.failed) -1.0 else m.median)
     }
-    val qs = results.map { case (k, v) => "\"" + jesc(k) + "\":" + v }
+    val qs = results.map { case (k, v) => json(k) + ":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.filter(_ >= 0).sum else 0.0
-    val gcTotal = allRuns.valuesIterator.map(_._3).sum
+    val gcTotal = allRuns.valuesIterator.map(_.gcSec).sum
     // Full per-query artifact on disk (r9 verdict #2): the driver's
     // BENCH tail truncates to ~2000 chars (~54 of 274 queries), so
     // round-over-round adjudication needs the complete medians AND the
@@ -197,24 +99,19 @@ object Bench {
     // artifact with its subset (r11 incident): default to a scratch
     // path unless the full registry ran or the caller chose explicitly
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (only.isEmpty) "bench/latest_full.json"
+      if (QueryRun.only.isEmpty) "bench/latest_full.json"
       else "/tmp/bench_subset.json")
     if (outPath.nonEmpty) try {
-      val detail = allRuns.toSeq.sortBy(_._1).map {
-        case (name, (times, taskSec, gcSec, loads, stealPct)) =>
-          val med = results(name)
-          s"""  "${jesc(name)}": {"median": $med, "task_sec": ${f"$taskSec%.3f"}, "gc_sec": ${f"$gcSec%.3f"}, "steal_pct": ${f"$stealPct%.2f"}, "load1_runs": [${loads.map(l => f"$l%.2f").mkString(", ")}], "runs": [${times.mkString(", ")}]}"""
+      val detail = allRuns.toSeq.sortBy(_._1).map { case (name, m) =>
+        s"""  ${json(name)}: {"median": ${results(name)}, "task_sec": ${f"${m.taskSec}%.3f"}, "gc_sec": ${f"${m.gcSec}%.3f"}, "steal_pct": ${f"${m.stealPct}%.2f"}, "load1_runs": [${m.loads.map(l => f"$l%.2f").mkString(", ")}], "runs": [${m.times.mkString(", ")}]}"""
       }.mkString(",\n")
-      val json =
+      val doc =
         s"""{
-           |"sf": "${jesc(sfDir)}",
+           |"sf": ${json(sfDir)},
            |"runs_per_query": $runs,
            |"load1_at_start": $load1,
            |"load1_at_end": ${f"${loadNow()}%.2f"},
-           |"steal_pct_overall": ${
-             val (s1, j1) = stealNow()
-             f"${if (j1 > stealStart._2) 100.0 * (s1 - stealStart._1) /
-               (j1 - stealStart._2) else 0.0}%.2f"},
+           |"steal_pct_overall": ${f"${QueryRun.stealPct(stealStart)}%.2f"},
            |"gc_sec_total": ${f"$gcTotal%.3f"},
            |"total_of_medians": $total,
            |"n_queries": ${results.size},
@@ -224,7 +121,7 @@ object Bench {
            |}""".stripMargin
       val p = java.nio.file.Paths.get(outPath)
       Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      java.nio.file.Files.writeString(p, json)
+      java.nio.file.Files.writeString(p, doc)
       System.err.println(s"[bench] full per-query artifact: $outPath")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] artifact write failed: ${e.getMessage}")
@@ -232,8 +129,8 @@ object Bench {
     // Per-query detail first; the short total line LAST so the driver's
     // tail-capture always sees a complete, parseable total (BENCH_r02 lost
     // its headline number to a front-loaded total on one very long line).
-    println(s"""{"metric":"queries","queries":$qs,"sf":"${jesc(sfDir)}"}""")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"${jesc(sfDir)}","runs_per_query":$runs,"load1_at_start":$load1,"load1_at_end":${f"${loadNow()}%.2f"},"gc_sec_total":${f"$gcTotal%.3f"}}""")
+    println(s"""{"metric":"queries","queries":$qs,"sf":${json(sfDir)}}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":${json(sfDir)},"runs_per_query":$runs,"load1_at_start":$load1,"load1_at_end":${f"${loadNow()}%.2f"},"gc_sec_total":${f"$gcTotal%.3f"}}""")
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan and per-run wall time of
   * named queries — the `.explain` iteration loop for plan tuning.
   *
@@ -13,50 +11,18 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-    try spark.read.parquet(s"$sfDir/region.parquet").count()
-    catch { case _: Throwable => () }
-    val stages = new org.apache.spark.scheduler.SparkListener {
-      // appended from the listener-bus thread, read/cleared from main —
-      // every access synchronizes on the buffer itself
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val m = si.taskMetrics
-        val line = f"[stage ${si.stageId}%3d] ${si.numTasks}%3d tasks " +
-          f"run=${m.executorRunTime / 1e3}%6.2fs cpu=${m.executorCpuTime / 1e9}%6.2fs " +
-          f"shufW=${m.shuffleWriteMetrics.recordsWritten}%8d recs ${si.name.take(60)}"
-        buf.synchronized { buf += line }
-      }
-    }
-    spark.sparkContext.addSparkListener(stages)
+    val run = QueryRun()
+    val spark = run.spark
     args.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => println(s"[explain] unknown query: $name")
         case Some(fn) =>
           println(s"\n===== $name =====")
           fn(spark, sfDir).explain("formatted")
-          val times = (0 to runs).map { i =>
-            if (i == 1) stages.buf.synchronized(stages.buf.clear()) // drop warm-up stages
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).count()
-            (System.nanoTime() - t0) / 1e9
-          }.drop(1) // warm-up
-          Thread.sleep(300) // let stage events drain (best effort)
-          stages.buf.synchronized {
-            stages.buf.foreach(println)
-            stages.buf.clear()
-          }
-          println(f"[explain] $name timed: ${times.map(t => f"$t%.2f").mkString(", ")} s (median ${times.sorted.apply(times.size / 2)}%.2f)")
+          QueryRun.warmUp("explain", name)(fn(spark, sfDir).count())
+          val m = run.measure()(fn(spark, sfDir).count())
+          m.metrics.stages.foreach(println)
+          println(f"[explain] $name timed: ${m.times.map(t => f"$t%.2f").mkString(", ")} s (median ${m.median}%.2f)")
       }
     }
     spark.stop()

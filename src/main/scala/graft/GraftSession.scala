@@ -22,6 +22,10 @@ import org.apache.spark.sql.SparkSession
   *   - UTC session timezone — deterministic timestamp display/parse.
   *   - custom SQL functions registered (minhash_sig, simhash64,
   *     shingles, ngrams, cosine_sim, winnow, stem_tokens).
+  *   - `local()` only: Spark UI off — no tool or test reads it, and
+  *     every local session in this repo is built here (Bench, Verify,
+  *     Explain, ScaleProbe, the test suites; `Smoke` alone stays bare, to
+  *     check `SparkEntry.entry` in a session with no engine conf).
   * Shuffle partitions are a deploy-time decision: `local()` sizes them
   * to the core count; `configure` leaves the cluster default alone.
   */
@@ -41,6 +45,7 @@ object GraftSession {
     val spark = configure(SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
+      .config("spark.ui.enabled", "false")
       .config("spark.sql.shuffle.partitions", cores.toString))
       .getOrCreate()
     graft.functions.GraftFunctions.register(spark)

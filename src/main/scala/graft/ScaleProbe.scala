@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Self-measured scale probe (dev tool, not part of the engine): builds
@@ -40,8 +40,8 @@ import org.apache.spark.sql.functions._
   *     queries never join those dims.)
   *
   * Usage: runMain graft.ScaleProbe [mult] [q1,q2,...]
-  * Env: SPARK_GRAFT_PROBE_RUNS (timed runs per scale, default 3 — use 1
-  * at ×100 where a single warm run is minutes), SPARK_GRAFT_CPUS.
+  * Env: SPARK_GRAFT_RUNS (timed runs per scale, default 3 — use 1 at
+  * ×100 where a single warm run is minutes), SPARK_GRAFT_CPUS.
   * Writes the corpus under /tmp/graft_scaleprobe/sfX<mult> (reused if
   * present AND built by this builder version).
   */
@@ -71,36 +71,8 @@ object ScaleProbe {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val probe = args.lift(1).map(_.split(",").map(_.trim).toSeq)
       .getOrElse(defaultProbe)
-    val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "3").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-
-    // task-metric accumulators, snapshotted per query behind the
-    // listener-bus flush barrier (events are async)
-    val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spillB = new java.util.concurrent.atomic.AtomicLong(0L)
-    val peakMem = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            taskMs.addAndGet(m.executorRunTime)
-            spillB.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-            peakMem.getAndAccumulate(m.peakExecutionMemory, math.max)
-          }
-        }
-      })
-    def flush(): Unit = org.apache.spark.graftglue.ListenerGlue
-      .waitUntilListenerBusEmpty(spark.sparkContext)
+    val run = QueryRun()
+    val spark = run.spark
 
     val base = "/root/testdata/sf0.1"
     val big = s"/tmp/graft_scaleprobe/sfX$mult"
@@ -110,23 +82,13 @@ object ScaleProbe {
     if (!fresh) buildCorpus(spark, base, big, mult)
 
     /** (median wall, mean task sec, peak task mem MB, spill MB) over
-      * `runs` timed runs after one warm run. */
-    def measure(fn: (SparkSession, String) => DataFrame, dir: String)
+      * the timed runs after one warm run. */
+    def measure(fn: QueryRun.Query, dir: String)
         : (Double, Double, Double, Double) = {
-      fn(spark, dir).count() // warm: codegen + page cache
-      flush()
-      peakMem.set(0L) // peak is per-probe-phase, not process-lifetime
-      val task0 = taskMs.get(); val spill0 = spillB.get()
-      val ts = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      flush()
-      (ts.sorted.apply(runs / 2),
-        (taskMs.get() - task0) / 1e3 / runs,
-        peakMem.get() / 1048576.0,
-        (spillB.get() - spill0) / 1048576.0)
+      QueryRun.warmUp("scaleprobe", dir)(fn(spark, dir).count())
+      val m = run.measure()(fn(spark, dir).count())
+      (m.median, m.taskSec, m.metrics.peakBytes / 1048576.0,
+        m.metrics.spillBytes / 1048576.0)
     }
 
     // probe-only entries (not registry queries): the SemDeDup auto
@@ -135,7 +97,7 @@ object ScaleProbe {
     // ∝ n²/k; with k ∝ n (constant target cluster size) it stays
     // linear. targetClusterSize 1024 gives k=5 at sf0.1 (comparable
     // work to the registry's k=4) and k∝n beyond.
-    val probeOnly: Map[String, (SparkSession, String) => DataFrame] = Map(
+    val probeOnly: Map[String, QueryRun.Query] = Map(
       "semdedup_auto" -> ((s, dir) =>
         graft.ops.SimilarityOps.semanticDedupAuto(
           Tables.t(s, dir, "embeddings"), "vec_id", "embedding",

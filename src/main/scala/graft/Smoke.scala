@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Local smoke of the driver's t1 check: SparkEntry.entry must return >0
-  * rows on sf0.001 in a session the driver would create (no special conf). */
+  * rows on sf0.001 in a bare session with no special conf.
+  * The one main that does not build its session through
+  * `GraftSession.local`, on purpose: the entry point has to work without
+  * the extensions, registered functions and confs that `local()` adds. */
 object Smoke {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()

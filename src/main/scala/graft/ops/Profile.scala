@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -44,6 +44,13 @@ object Profile {
         sum((d * d).cast(dec)).cast("double").as(s"__ssq_$c"))
     }
     val one = df.agg(aggs.head, aggs.tail: _*)
+    // round on the binary value, as round(x·10^s)/10^s: Spark's
+    // round(x, s) rounds the double's shortest decimal form half up, so a
+    // mean like 1529997/60000 (stored just below 25.49995) would read
+    // 25.5 where every binary-rounding engine reads 25.4999. At scale 0
+    // the two forms agree.
+    val p = math.pow(10, scale)
+    def rnd(x: Column): Column = round(x * p) / p
     // melt the 1-row wide aggregate into per-column rows; array+explode
     // over a 1-row frame is driver-free and keeps the schema uniform
     val rows = cols.map { c =>
@@ -57,8 +64,8 @@ object Profile {
         col(s"__ndv_$c").as("n_distinct"),
         col(s"__min_$c").as("min_val"),
         col(s"__max_$c").as("max_val"),
-        round(s / n, scale).as("mean"),
-        round((ssq - s * s / n) / n, scale).as("variance"))
+        rnd(s / n).as("mean"),
+        rnd((ssq - s * s / n) / n).as("variance"))
     }
     one.select(explode(array(rows: _*)).as("p")).select("p.*")
   }

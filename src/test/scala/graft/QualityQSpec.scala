@@ -32,6 +32,13 @@ class QualityQSpec extends SparkSpec {
     assert(b.getDouble(6) == 20.0)
     // pop variance over non-null {10,20,30}: (1400 - 3600/3)/3
     assert(math.abs(b.getDouble(7) - 200.0 / 3).abs < 1e-4)
+
+    // a rounding tie: the mean 1529997/60000 = 25.49995 is stored just
+    // below the tie, so rounding the binary value (as DuckDB does) gives
+    // 25.4999, not 25.5
+    val tie = Profile.numericProfile(spark.range(60000).select(
+      when(col("id") < 29997, 26).otherwise(25).as("q")), Seq("q"), scale = 4)
+    assert(tie.head().getDouble(6) == 25.4999)
   }
 
   test("numericProfile: all columns fold into ONE scan") {

@@ -5,15 +5,5 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session per test JVM (suites use getOrCreate). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // production session setup: SQL functions + optimizer rule
-    graft.functions.GraftFunctions.register(s)
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
 }

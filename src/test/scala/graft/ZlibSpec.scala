@@ -72,15 +72,16 @@ class ZlibSpec extends AnyFunSuite {
     val default1 = Zlib.deflate(data)
     val fast = Zlib.deflate(data,
       level = java.util.zip.Deflater.BEST_SPEED)
-    val default2 = Zlib.deflate(data) // same pooled instance as `fast`
+    // pools are per level, so this reuses default1's deflater, not fast's
+    val default2 = Zlib.deflate(data)
     assert(java.util.Arrays.equals(default1, default2),
       "default-level output must be byte-identical after a BEST_SPEED use")
     assert(java.util.Arrays.equals(Zlib.inflate(fast), data))
     // gzip stays byte-identical to GZIPOutputStream at the default
-    // level EXCEPT the header's OS byte (offset 9): the JDK writes
-    // 0xff (unknown), Zlib writes 0x00 — both valid RFC 1952; Zlib's
-    // value is pinned because synthesized fixtures have hashed over it
-    // since r15
+    // level EXCEPT the header's OS byte (offset 9), which is not
+    // compared: the JDK's value depends on its version (0xff "unknown"
+    // on JDK >= 16). Zlib's 0x00 is pinned because synthesized fixtures
+    // have hashed over it since r15
     val bos = new java.io.ByteArrayOutputStream()
     val g = new java.util.zip.GZIPOutputStream(bos)
     g.write(data); g.close()
@@ -91,6 +92,6 @@ class ZlibSpec extends AnyFunSuite {
       jdk, 10, jdk.length), "deflate body + trailer must match the JDK")
     assert(java.util.Arrays.equals(ours, 0, 9, jdk, 0, 9),
       "header fields before the OS byte must match the JDK")
-    assert((jdk(9) & 0xff) == 0xff && ours(9) == 0)
+    assert(ours(9) == 0)
   }
 }
