@@ -19,6 +19,7 @@ if [ -n "$stray" ]; then
 fi
 # docs/scripts-only commits don't need the JVM spin-up
 if git diff --cached --name-only | grep -q '\.scala$\|\.sbt$'; then
-  echo "[precommit] sbt compile (Scala staged; round-3 lesson) ..."
-  sbt -batch compile < /dev/null
+  # Test/compile builds main too, and catches a change that breaks a test
+  echo "[precommit] sbt Test/compile (Scala staged; round-3 lesson) ..."
+  sbt -batch Test/compile < /dev/null
 fi

@@ -9,9 +9,10 @@ import graft.ops.{Categorize, Standardize, TextOps}
   * payload per source and project onto the 13-column canonical schema
   * (SURVEY.md §2.3 P1/P2/P3, §2.4 J2).
   *
-  * Dispatch (transform_data.py:526-541) is predicate partitioning — a
-  * `transform_kind` column + per-kind select + unionByName — not a join,
-  * so the whole normalization is one narrow codegen'd pass over bronze. */
+  * Dispatch (transform_data.py:526-541) is a `kind` tag, not a join or a
+  * per-kind union: rows of the no-direct-row kind are dropped, the rest
+  * share one payload parse and projection, and each kind's validity rule
+  * is one predicate of one filter — a single narrow pass over bronze. */
 object Normalize {
 
   /** P2: source_spider → display name (transform_data.py:159-165). */
@@ -35,20 +36,19 @@ object Normalize {
     "venue_address", "venue_city", "description", "source", "category",
     "genre", "season", "latitude", "longitude")
 
-  /** One per-source projection (P1): parse payload, fill per-source
-    * defaults, cast coords; `requireVenue` adds the stricter P3 filter. */
-  private def project(df: DataFrame, requireVenue: Boolean,
-      defaultCity: String = "Nashville"): DataFrame = {
+  /** The projection (P1): parse the payload once, fill the city and
+    * source defaults, cast coords; `kind` rides along for the filter. */
+  private def project(df: DataFrame): DataFrame = {
     val p = df.withColumn("j", from_json(col("raw_json"), Schemas.businessItem))
-    val base = p.select(
+    p.select(
       col("id"),
-      col("source_spider"),
+      col("kind"),
       Standardize.collapseWs(col("j.name")).as("name"),
       col("j.url").as("url"),
       col("j.event_date").as("event_date"),
       col("j.venue_name").as("venue_name"),
       col("j.venue_address").as("venue_address"),
-      coalesce(col("j.venue_city"), lit(defaultCity)).as("venue_city"),
+      coalesce(col("j.venue_city"), lit("Nashville")).as("venue_city"),
       col("j.description").as("description"),
       coalesce(col("j.source"), displayName(col("source_spider")))
         .as("source"),
@@ -57,8 +57,6 @@ object Normalize {
       col("j.season").as("season"),
       Standardize.safeDouble(col("j.latitude")).as("latitude"),
       Standardize.safeDouble(col("j.longitude")).as("longitude"))
-    val named = base.filter(Standardize.isValidString(col("name")))
-    if (requireVenue) named.filter(col("venue_name").isNotNull) else named
   }
 
   /** J2 dispatch predicates (transform_data.py:526-541), including the
@@ -95,20 +93,15 @@ object Normalize {
 
   /** Full bronze → canonical normalization (batch or foreachBatch body). */
   def normalize(bronze: DataFrame, refYear: Int = 2025): DataFrame = {
-    val tagged = bronze.withColumn("kind", kind(col("source_spider")))
-    def part(k: String) = tagged.filter(col("kind") === k)
-
-    // strict-venue sources (transform_data.py:86-87,109-110,204-205)
-    val strict = Seq("ticketmaster", "seatgeek", "arcgis")
-      .map(k => project(part(k), requireVenue = true))
-    // lenient sources
-    val lenient = Seq("yelp", "google_places", "generic", "document")
-      .map(k => project(part(k), requireVenue = false))
     // ai_text payloads route through the (stubbed) extractor elsewhere;
     // here they contribute no direct rows.
-    val unioned = (strict ++ lenient).reduce(_ unionByName _)
-
-    val std = unioned
+    val tagged = bronze.withColumn("kind", kind(col("source_spider")))
+      .filter(col("kind") =!= "ai_text")
+    // strict-venue sources (transform_data.py:86-87,109-110,204-205)
+    val strict = col("kind").isin("ticketmaster", "seatgeek", "arcgis")
+    val std = project(tagged)
+      .filter(Standardize.isValidString(col("name")) &&
+        (!strict || col("venue_name").isNotNull))
       .withColumn("event_date",
         Standardize.standardizeDate(col("event_date"), col("source"), refYear))
       .withColumn("venue_name",

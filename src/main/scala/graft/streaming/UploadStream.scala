@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model.Schemas
@@ -18,6 +18,12 @@ import graft.pipeline.Etl
   * Checkpointing + the url anti-join give exactly-once effective loads on
   * top of at-least-once task retries (R4). */
 object UploadStream {
+
+  /** The read errors that mean "no silver yet": a missing dir, or one
+    * with no data files. Anything else (a corrupt or unreadable file)
+    * fails the batch, so the checkpoint replays it, instead of skipping
+    * the url anti-join and appending duplicates. */
+  private val noSilver = Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
   /** `maxFilesPerTrigger` paces a large backfill: AvailableNow still
     * drains EVERYTHING, but in bounded micro-batches instead of one
@@ -39,7 +45,9 @@ object UploadStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val existing =
           try Some(spark.read.parquet(silverDir))
-          catch { case _: Exception => None } // first batch: no silver yet
+          catch {
+            case e: AnalysisException if noSilver(e.getCondition) => None
+          }
         val appended = Etl.dedupForLoad(Etl.transform(batch, refYear),
           existing)
         appended.write.mode("append").parquet(silverDir)

@@ -68,6 +68,40 @@ class NormalizeEtlSpec extends SparkSpec {
     assert(yl.getAs[String]("venue_city") == "Nashville")    // default city
   }
 
+  test("dispatch: every kind keeps or drops rows by its own rule") {
+    val kinds = Seq[(Long, String, String)](
+      (11L, "nashville_arcgis", payload( // strict, venue present
+        "name" -> "park concert", "url" -> "http://arc/1",
+        "venue_name" -> "centennial park")),
+      (12L, "nashville_arcgis", payload( // strict, no venue -> dropped
+        "name" -> "lost mural", "url" -> "http://arc/2")),
+      (13L, "google_places", payload( // lenient: kept without a venue
+        "name" -> "hot chicken", "url" -> "http://gp/1",
+        "venue_city" -> "Franklin")),
+      (14L, "events_csv_feed", payload( // "csv" route (lenient)
+        "name" -> "csv fair", "url" -> "http://csv/1")),
+      (15L, "city_document_scan", payload( // "document" route (lenient)
+        "name" -> "doc expo", "url" -> "http://doc/1",
+        "source" -> "City Docs")),
+      (16L, "manual_upload_pdf", payload( // ai_text: no direct rows
+        "name" -> "pdf gala", "url" -> "http://pdf/1",
+        "venue_name" -> "hall")),
+      (17L, "manual_upload_csv", payload( // startsWith beats "csv"
+        "name" -> "csv upload", "url" -> "http://mcsv/1")),
+      (18L, null, payload( // null spider -> generic
+        "name" -> "mystery gig", "url" -> "http://gen/1")),
+    ).toDF("id", "source_spider", "raw_json")
+    val out = graft.ingest.Normalize.normalize(kinds).collect()
+      .map(r => r.getAs[String]("url") ->
+        (r.getAs[String]("venue_city"), r.getAs[String]("source"))).toMap
+    assert(out == Map(
+      "http://arc/1" -> ("Nashville", "Nashville ArcGIS"),
+      "http://gp/1" -> ("Franklin", "Google Places"),
+      "http://csv/1" -> ("Nashville", "Events Csv Feed"),
+      "http://doc/1" -> ("Nashville", "City Docs"),
+      "http://gen/1" -> ("Nashville", null)))
+  }
+
   test("A5 observed load metrics ride along with the action (one pass)") {
     val (obs, observed) = Etl.observedLoad(silver)
     observed.write.format("noop").mode("overwrite").save()

@@ -562,4 +562,18 @@ class PlanSpec extends SparkSpec {
     assert(joinLines.exists(_.contains("substring")),
       s"prefix blocking key not in any join's keys: ${joinLines.mkString(" | ")}")
   }
+
+  test("bronze → silver transform reads bronze once, with no union") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    val dir = java.nio.file.Files.createTempDirectory("graft_bronze")
+      .resolve("bronze").toString
+    Seq((1L, "ticketmaster", """{"name": "a", "venue_name": "v"}"""),
+      (2L, "yelp", """{"name": "b"}"""))
+      .toDF("id", "source_spider", "raw_json").write.parquet(dir)
+    val plan = graft.pipeline.Etl.transform(spark.read.parquet(dir))
+      .queryExecution.optimizedPlan
+    assert(plan.collect { case u: Union => u }.isEmpty, plan.toString)
+    assert(plan.collectLeaves().size == 1, plan.toString)
+  }
 }

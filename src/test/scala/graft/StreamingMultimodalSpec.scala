@@ -34,6 +34,27 @@ class StreamingMultimodalSpec extends SparkSpec {
       == Set("http://tm/a", "http://tm/b", "http://tm/c"))
   }
 
+  test("R4 upload stream: an unreadable silver fails the batch, appends nothing") {
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    val base = Files.createTempDirectory("graft_badsilver").toString
+    val up = s"$base/uploads"; val silver = s"$base/silver"
+    Files.createDirectories(Paths.get(up))
+    Files.createDirectories(Paths.get(silver))
+    Files.writeString(Paths.get(s"$silver/part-0.parquet"), "not parquet")
+    Files.writeString(Paths.get(s"$up/batch1.jsonl"),
+      s"""{"id": 1, "source_spider": "yelp", "raw_json": "{\\"name\\": \\"bbq\\", \\"url\\": \\"http://y/1\\"}"}""")
+    val q = UploadStream.start(spark, up, silver, s"$base/ck")
+    // the url anti-join cannot run, so the batch must not append
+    intercept[StreamingQueryException](q.awaitTermination())
+    val files = Files.list(Paths.get(silver)).toArray.map(_.toString).toSeq
+    assert(files == Seq(s"$silver/part-0.parquet"))
+    // a silver dir with no data files yet is "no silver", not an error
+    val empty = s"$base/empty_silver"
+    Files.createDirectories(Paths.get(empty))
+    UploadStream.start(spark, up, empty, s"$base/ck2").awaitTermination()
+    assert(spark.read.parquet(empty).count() == 1)
+  }
+
   test("R1 cron mode: ProcessingTime trigger spans micro-batches, dedups") {
     import org.apache.spark.sql.streaming.Trigger
     val base = Files.createTempDirectory("graft_cron").toString
