@@ -17,6 +17,16 @@ if [ -n "$stray" ]; then
   echo "$stray"
   exit 1
 fi
+# one document accessor: the typed (doc_id, text) prelude of the codec
+# pipelines is Tables.docText; a query module does not spread
+# t(s, dir, "documents") and cast it to (Long, String) by hand
+prelude=$(perl -0777 -ne 'while (/ensureParallel(\(\s*t\(s, dir, "documents"\)(?:[^()]++|(\((?:[^()]++|(?2))*\)))*\))\s*\.as\[\(Long, String\)\]/g) { printf "%s:%d\n", $ARGV, 1 + (substr($_, 0, $-[0]) =~ tr/\n//) }' \
+  src/main/scala/graft/queries/*.scala)
+if [ -n "$prelude" ]; then
+  echo "[precommit] hand-written documents prelude (use Tables.docText):"
+  echo "$prelude"
+  exit 1
+fi
 # docs/scripts-only commits don't need the JVM spin-up
 if git diff --cached --name-only | grep -q '\.scala$\|\.sbt$'; then
   # Test/compile builds main too, and catches a change that breaks a test

@@ -89,6 +89,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.filter(_ >= 0).sum else 0.0
     val gcTotal = allRuns.valuesIterator.map(_.gcSec).sum
+    val steal = f"${QueryRun.stealPct(stealStart)}%.2f"
     // Full per-query artifact on disk (r9 verdict #2): the driver's
     // BENCH tail truncates to ~2000 chars (~54 of 274 queries), so
     // round-over-round adjudication needs the complete medians AND the
@@ -97,9 +98,11 @@ object Bench {
     // §BENCH). Committed per round as bench/r<N>_full.json.
     // a SPARK_GRAFT_ONLY-restricted dev run must not clobber the round
     // artifact with its subset (r11 incident): default to a scratch
-    // path unless the full registry ran or the caller chose explicitly
+    // path unless the full registry ran or the caller chose explicitly.
+    // The path names the core count, so a run at one count does not
+    // overwrite another's (the r16 8-core/32-core incident).
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (QueryRun.only.isEmpty) "bench/latest_full.json"
+      if (QueryRun.only.isEmpty) s"bench/latest_full_c${QueryRun.cpus}.json"
       else "/tmp/bench_subset.json")
     if (outPath.nonEmpty) try {
       val detail = allRuns.toSeq.sortBy(_._1).map { case (name, m) =>
@@ -111,7 +114,7 @@ object Bench {
            |"runs_per_query": $runs,
            |"load1_at_start": $load1,
            |"load1_at_end": ${f"${loadNow()}%.2f"},
-           |"steal_pct_overall": ${f"${QueryRun.stealPct(stealStart)}%.2f"},
+           |"steal_pct_overall": $steal,
            |"gc_sec_total": ${f"$gcTotal%.3f"},
            |"total_of_medians": $total,
            |"n_queries": ${results.size},
@@ -130,7 +133,7 @@ object Bench {
     // tail-capture always sees a complete, parseable total (BENCH_r02 lost
     // its headline number to a front-loaded total on one very long line).
     println(s"""{"metric":"queries","queries":$qs,"sf":${json(sfDir)}}""")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":${json(sfDir)},"runs_per_query":$runs,"load1_at_start":$load1,"load1_at_end":${f"${loadNow()}%.2f"},"gc_sec_total":${f"$gcTotal%.3f"}}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":${json(sfDir)},"runs_per_query":$runs,"load1_at_start":$load1,"load1_at_end":${f"${loadNow()}%.2f"},"gc_sec_total":${f"$gcTotal%.3f"},"steal_pct_overall":$steal}""")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.types.DecimalType
@@ -35,9 +35,13 @@ object Tables {
     (SparkSession, String, String), DataFrame]()
   SessionCaches.register(() => tableCache.clear())
 
+  // A session built without GraftSession (the driver's bare one) gets
+  // the engine's functions and optimizer rule here, on its first table
+  // resolution; registering again is a no-op.
   private def tUncached(spark: SparkSession, dir: String,
       name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.functions.GraftFunctions.register(spark)
     val df = spark.read.parquet(s"$dir/$name.parquet")
     val ntzFixed = df.schema.fields.foldLeft(df) { (d, f) =>
       if (f.dataType == org.apache.spark.sql.types.TimestampNTZType)
@@ -47,6 +51,24 @@ object Tables {
     if (name == "events" && df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       ntzFixed.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else ntzFixed
+  }
+
+  /** The `documents` table as typed `(doc_id, text)` rows, optionally
+    * filtered by `where`, spread over every core
+    * (`Partitioning.ensureParallel`): the input of the per-document codec
+    * pipelines, whose typed closures are each query's CPU-heavy stage. */
+  def docText(spark: SparkSession, dir: String): Dataset[(Long, String)] =
+    spread(spark, t(spark, dir, "documents"))
+
+  def docText(spark: SparkSession, dir: String,
+      where: Column): Dataset[(Long, String)] =
+    spread(spark, t(spark, dir, "documents").filter(where))
+
+  private def spread(spark: SparkSession,
+      docs: DataFrame): Dataset[(Long, String)] = {
+    import spark.implicits._
+    graft.ops.Partitioning.ensureParallel(
+      docs.select(col("doc_id"), col("text"))).as[(Long, String)]
   }
 
   /** Exact money-sum: cast each double to DECIMAL(scale) first so the sum is

@@ -125,7 +125,10 @@ object GraftFunctions {
     all.foreach { case (id, info, builder) =>
       reg.registerFunction(id, info, builder)
     }
-    if (!spark.experimental.extraOptimizations.contains(ShingleFilterSimplify))
-      spark.experimental.extraOptimizations ++= Seq(ShingleFilterSimplify)
+    val exp = spark.experimental
+    exp.synchronized { // first table reads of a session may race here
+      if (!exp.extraOptimizations.contains(ShingleFilterSimplify))
+        exp.extraOptimizations ++= Seq(ShingleFilterSimplify)
+    }
   }
 }

@@ -447,39 +447,13 @@ object PdfCodec {
   def appendIncrementalUpdate(base: Array[Byte], lines: Seq[String],
       objNum: Int = 4): Array[Byte] = {
     val raw = new String(base, "ISO-8859-1")
-    val sxAt = raw.lastIndexOf("startxref")
-    require(sxAt >= 0, "base PDF without startxref")
-    val prevXref = """\s*(\d+)""".r.findPrefixMatchOf(
-        raw.substring(sxAt + "startxref".length)).map(_.group(1).toLong)
-      .getOrElse(throw new IllegalArgumentException(
-        "base startxref without an offset"))
+    val prev = prevXref(raw)
     val size = """/Size\s+(\d+)""".r.findFirstMatchIn(raw)
       .map(_.group(1).toInt).getOrElse(objNum + 1)
-    def esc(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '(' => "\\("
-      case ')' => "\\)"
-      case c => c.toString
-    }
-    val content = ("BT /F1 12 Tf 72 720 Td " +
-      lines.map(l => s"(${esc(l)}) Tj 0 -14 Td ").mkString + "ET")
-      .getBytes("ISO-8859-1")
-    val data = graft.multimodal.Zlib.deflate(content,
-      level = java.util.zip.Deflater.BEST_SPEED)
-    val out = new ByteArrayOutputStream()
-    out.write(base)
-    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    val objAt = out.size()
-    w(s"$objNum 0 obj << /Length ${data.length} /Filter /FlateDecode " +
-      ">> stream\n")
-    out.write(data)
-    w("\nendstream endobj\n")
-    val xrefAt = out.size()
-    w(s"xref\n0 1\n0000000000 65535 f \n$objNum 1\n" +
-      f"$objAt%010d 00000 n \n")
-    w(s"trailer << /Size $size /Root 1 0 R /Prev $prevXref >>\n" +
-      s"startxref\n$xrefAt\n%%EOF\n")
-    out.toByteArray
+    val data = deflated(textContent(lines))
+    val pdf = PdfWriter.append(base)
+    pdf.flateStream(objNum, data)
+    pdf.classicXref(s" /Prev $prev", size)
   }
 
   /** Fixture: the POST-2005 on-disk layout — the document's only
@@ -490,59 +464,22 @@ object PdfCodec {
     * and decodeLatest agree with the classic-xref encode(). */
   def encodeWithXrefStream(lines: Seq[String],
       predictor: Boolean = true): Array[Byte] = {
-    def esc(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '(' => "\\("
-      case ')' => "\\)"
-      case c => c.toString
-    }
-    def deflated(b: Array[Byte]): Array[Byte] =
-      graft.multimodal.Zlib.deflate(b,
-        level = java.util.zip.Deflater.BEST_SPEED)
-    val content = ("BT /F1 12 Tf 72 720 Td " +
-      lines.map(l => s"(${esc(l)}) Tj 0 -14 Td ").mkString + "ET")
-      .getBytes("ISO-8859-1")
-    val data = deflated(content)
-    val out = new ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    val offsets = Array.newBuilder[Int]
-    w("%PDF-1.5\n")
-    offsets += out.size()
-    w("1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n")
-    offsets += out.size()
-    w("2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n")
-    offsets += out.size()
-    w("3 0 obj << /Type /Page /Parent 2 0 R " +
-      "/Contents 4 0 R /MediaBox [0 0 612 792] >> endobj\n")
-    offsets += out.size()
-    w(s"4 0 obj << /Length ${data.length} /Filter /FlateDecode " +
-      ">> stream\n")
-    out.write(data)
-    w("\nendstream endobj\n")
-    val xrefAt = out.size()
-    val rows = new ByteArrayOutputStream()
-    def row(t: Int, f2: Long, f3: Int): Unit = {
-      rows.write(t)
-      rows.write(((f2 >> 24) & 0xff).toInt)
-      rows.write(((f2 >> 16) & 0xff).toInt)
-      rows.write(((f2 >> 8) & 0xff).toInt)
-      rows.write((f2 & 0xff).toInt)
-      rows.write(f3)
-    }
-    row(0, 0L, 255) // object 0: head of the free list
-    offsets.result().foreach(o => row(1, o.toLong, 0))
-    row(1, xrefAt.toLong, 0) // the xref stream references itself
-    val table = rows.toByteArray
+    val data = deflated(textContent(lines))
+    val pdf = PdfWriter.create("1.5")
+    pdf.pageChain()
+    pdf.flateStream(4, data)
+    val xrefAt = pdf.size
+    val table = xrefRows((0, 0L, 255) +: // object 0: head of the free list
+      (1 to 4).map(n => (1, pdf.offset(n).toLong, 0)) :+
+      (1, xrefAt.toLong, 0)) // the xref stream references itself
     val (xdata, parms) =
       if (predictor)
         (deflated(pngPredictEncode(table, 6, _ => 2)),
           " /DecodeParms << /Predictor 12 /Columns 6 >>")
       else (deflated(table), "")
-    w(s"5 0 obj << /Type /XRef /Size 6 /W [1 4 1] /Root 1 0 R " +
-      s"/Filter /FlateDecode$parms /Length ${xdata.length} >> stream\n")
-    out.write(xdata)
-    w(s"\nendstream endobj\nstartxref\n$xrefAt\n%%EOF\n")
-    out.toByteArray
+    pdf.stream(5, "/Type /XRef /Size 6 /W [1 4 1] /Root 1 0 R " +
+      s"/Filter /FlateDecode$parms /Length ${xdata.length}", xdata)
+    pdf.startxref(xrefAt)
   }
 
   /** Fixture: an incremental update (§7.5.6) whose NEW section is a
@@ -554,56 +491,42 @@ object PdfCodec {
   def appendIncrementalUpdateXrefStream(base: Array[Byte],
       lines: Seq[String], objNum: Int = 4): Array[Byte] = {
     val raw = new String(base, "ISO-8859-1")
-    val sxAt = raw.lastIndexOf("startxref")
-    require(sxAt >= 0, "base PDF without startxref")
-    val prevXref = """\s*(\d+)""".r.findPrefixMatchOf(
-        raw.substring(sxAt + "startxref".length)).map(_.group(1).toLong)
-      .getOrElse(throw new IllegalArgumentException(
-        "base startxref without an offset"))
+    val prev = prevXref(raw)
     // the base's LARGEST /Size governs numbering across chained appends
     val size = """/Size\s+(\d+)""".r.findAllMatchIn(raw)
       .map(_.group(1).toInt).maxOption.getOrElse(objNum + 1)
     val xrefObj = size
-    def esc(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '(' => "\\("
-      case ')' => "\\)"
-      case c => c.toString
-    }
-    def deflated(b: Array[Byte]): Array[Byte] =
-      graft.multimodal.Zlib.deflate(b,
-        level = java.util.zip.Deflater.BEST_SPEED)
-    val content = ("BT /F1 12 Tf 72 720 Td " +
-      lines.map(l => s"(${esc(l)}) Tj 0 -14 Td ").mkString + "ET")
-      .getBytes("ISO-8859-1")
-    val data = deflated(content)
-    val out = new ByteArrayOutputStream()
-    out.write(base)
-    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    val objAt = out.size()
-    w(s"$objNum 0 obj << /Length ${data.length} /Filter /FlateDecode " +
-      ">> stream\n")
-    out.write(data)
-    w("\nendstream endobj\n")
-    val xrefAt = out.size()
-    val rows = new ByteArrayOutputStream()
-    def row(t: Int, f2: Long, f3: Int): Unit = {
-      rows.write(t)
-      rows.write(((f2 >> 24) & 0xff).toInt)
-      rows.write(((f2 >> 16) & 0xff).toInt)
-      rows.write(((f2 >> 8) & 0xff).toInt)
-      rows.write((f2 & 0xff).toInt)
-      rows.write(f3)
-    }
-    row(1, objAt.toLong, 0)
-    row(1, xrefAt.toLong, 0)
-    val xdata = deflated(rows.toByteArray)
-    w(s"$xrefObj 0 obj << /Type /XRef /Size ${xrefObj + 1} " +
+    val data = deflated(textContent(lines))
+    val pdf = PdfWriter.append(base)
+    pdf.flateStream(objNum, data)
+    val xrefAt = pdf.size
+    val xdata = deflated(xrefRows(Seq((1, pdf.offset(objNum).toLong, 0),
+      (1, xrefAt.toLong, 0))))
+    pdf.stream(xrefObj, s"/Type /XRef /Size ${xrefObj + 1} " +
       s"/Index [$objNum 1 $xrefObj 1] /W [1 4 1] /Root 1 0 R " +
-      s"/Prev $prevXref /Filter /FlateDecode /Length ${xdata.length} " +
-      ">> stream\n")
-    out.write(xdata)
-    w(s"\nendstream endobj\nstartxref\n$xrefAt\n%%EOF\n")
+      s"/Prev $prev /Filter /FlateDecode /Length ${xdata.length}", xdata)
+    pdf.startxref(xrefAt)
+  }
+
+  /** The offset a base file's last `startxref` names: the /Prev of an
+    * update appended to it. */
+  private def prevXref(raw: String): Long = {
+    val sxAt = raw.lastIndexOf("startxref")
+    require(sxAt >= 0, "base PDF without startxref")
+    """\s*(\d+)""".r.findPrefixMatchOf(
+        raw.substring(sxAt + "startxref".length)).map(_.group(1).toLong)
+      .getOrElse(throw new IllegalArgumentException(
+        "base startxref without an offset"))
+  }
+
+  /** Cross-reference stream rows, /W [1 4 1]: (type, field 2, field 3). */
+  private def xrefRows(rows: Seq[(Int, Long, Int)]): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    rows.foreach { case (t, f2, f3) =>
+      out.write(t)
+      Seq(24, 16, 8, 0).foreach(sh => out.write(((f2 >> sh) & 0xff).toInt))
+      out.write(f3)
+    }
     out.toByteArray
   }
 
@@ -720,34 +643,11 @@ object PdfCodec {
     * image whole; imageCensus must read the zoo back exactly. */
   def encodeWithImageZoo(lines: Seq[String],
       imgs: Seq[(String, Int, Int, Int)]): Array[Byte] = {
-    def esc(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '(' => "\\("
-      case ')' => "\\)"
-      case c => c.toString
-    }
-    val content = ("BT /F1 12 Tf 72 720 Td " +
-      lines.map(l => s"(${esc(l)}) Tj 0 -14 Td ").mkString + "ET")
-      .getBytes("ISO-8859-1")
-    val cData = graft.multimodal.Zlib.deflate(content,
-      level = java.util.zip.Deflater.BEST_SPEED)
-    val out = new ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    val offsets = Array.newBuilder[Int]
-    w("%PDF-1.5\n")
-    offsets += out.size()
-    w("1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n")
-    offsets += out.size()
-    w("2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n")
-    offsets += out.size()
+    val cData = deflated(textContent(lines))
+    val pdf = PdfWriter.create("1.5")
     val names = imgs.indices.map(k => s"/Im$k ${5 + k} 0 R").mkString(" ")
-    w(s"3 0 obj << /Type /Page /Parent 2 0 R /Contents 4 0 R " +
-      s"/Resources << /XObject << $names >> >> " +
-      "/MediaBox [0 0 612 792] >> endobj\n")
-    offsets += out.size()
-    w(s"4 0 obj << /Length ${cData.length} /Filter /FlateDecode >> stream\n")
-    out.write(cData)
-    w("\nendstream endobj\n")
+    pdf.pageChain(s"/Resources << /XObject << $names >> >> ")
+    pdf.flateStream(4, cData)
     imgs.zipWithIndex.foreach { case ((tok, iw, ih, plen), k) =>
       require(iw >= 1 && ih >= 1 && plen >= 1, s"bad image spec $tok")
       val (filter, extra) = tok match {
@@ -765,20 +665,11 @@ object PdfCodec {
       // opaque payload with text-scanner bait, never decoded
       val payload = Array.tabulate[Byte](plen)(i =>
         ((i * 41 + iw * 7 + ih) % 251).toByte)
-      offsets += out.size()
-      w(s"${5 + k} 0 obj << /Type /XObject /Subtype /Image " +
+      pdf.stream(5 + k, s"/Type /XObject /Subtype /Image " +
         s"/Width $iw /Height $ih$extra " +
-        s"/Length ${payload.length} /Filter $filter >> stream\n")
-      out.write(payload)
-      w("\nendstream endobj\n")
+        s"/Length ${payload.length} /Filter $filter", payload)
     }
-    val xref = out.size()
-    val offs = offsets.result()
-    w(s"xref\n0 ${offs.length + 1}\n0000000000 65535 f \n" +
-      offs.map(o => f"$o%010d 00000 n \n").mkString)
-    w(s"trailer << /Size ${offs.length + 1} /Root 1 0 R >>\n" +
-      s"startxref\n$xref\n%%EOF\n")
-    out.toByteArray
+    pdf.classicXref()
   }
 
   /** Extract the IMAGES a PDF embeds. The reference's ingest is
@@ -1701,17 +1592,8 @@ object PdfCodec {
         s"unknown encryption mode $other — rc4-40 | rc4-128 | aes-128 | " +
           "aes-256")
     }
-    def esc(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '(' => "\\("
-      case ')' => "\\)"
-      case c => c.toString
-    }
-    val content = ("BT /F1 12 Tf 72 720 Td " +
-      lines.map(l => s"(${esc(l)}) Tj 0 -14 Td ").mkString + "ET")
-      .getBytes("ISO-8859-1")
-    val plain = graft.multimodal.Zlib.deflate(content,
-      level = java.util.zip.Deflater.BEST_SPEED)
+    val content = textContent(lines)
+    val plain = deflated(content)
     val p = -44 // typical permissions word (print/modify denied)
     val id0 = PdfCrypt.md5(("graft-pdf-" + mode).getBytes("ISO-8859-1"),
       content).take(16)
@@ -1763,43 +1645,17 @@ object PdfCodec {
         " /CF << /StdCF << /CFM /AESV2 /AuthEvent /DocOpen /Length 16 >> " +
           ">> /StmF /StdCF /StrF /StdCF"
       else ""
-    val out = new ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    val offsets = Array.newBuilder[Int]
-    w("%PDF-1.4\n")
-    offsets += out.size()
-    w("1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n")
-    offsets += out.size()
-    w("2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n")
-    offsets += out.size()
-    w("3 0 obj << /Type /Page /Parent 2 0 R /Contents 4 0 R " +
-      (if (img.isDefined) "/Resources << /XObject << /Im1 6 0 R >> >> "
-       else "") +
-      "/MediaBox [0 0 612 792] >> endobj\n")
-    offsets += out.size()
-    w(s"4 0 obj << /Length ${data.length} /Filter /FlateDecode >> stream\n")
-    out.write(data)
-    w("\nendstream endobj\n")
-    offsets += out.size()
+    val pdf = PdfWriter.create("1.4")
+    pdf.pageChain(
+      if (img.isDefined) "/Resources << /XObject << /Im1 6 0 R >> >> " else "")
+    pdf.flateStream(4, data)
     val emEntry = if (encryptMetadata) "" else " /EncryptMetadata false"
-    w(s"5 0 obj << /Filter /Standard /V $v /R $r /Length $lenBits$cf" +
-      s"$emEntry /O <${hex(o)}> /U <${hex(u)}>$r6Entries /P $p >> endobj\n")
+    pdf.obj(5, s"<< /Filter /Standard /V $v /R $r /Length $lenBits$cf" +
+      s"$emEntry /O <${hex(o)}> /U <${hex(u)}>$r6Entries /P $p >>")
     imgData.foreach { case (iw, ih, enc) =>
-      offsets += out.size()
-      w(s"6 0 obj << /Type /XObject /Subtype /Image /Width $iw " +
-        s"/Height $ih /ColorSpace /DeviceGray /BitsPerComponent 8 " +
-        s"/Length ${enc.length} /Filter /DCTDecode >> stream\n")
-      out.write(enc)
-      w("\nendstream endobj\n")
+      pdf.stream(6, dctImage(iw, ih, "DeviceGray", enc.length), enc)
     }
-    val xref = out.size()
-    val offs = offsets.result()
-    val size = offs.length + 1
-    w(s"xref\n0 $size\n0000000000 65535 f \n" +
-      offs.map(off => f"$off%010d 00000 n \n").mkString)
-    w(s"trailer << /Size $size /Root 1 0 R /Encrypt 5 0 R " +
-      s"/ID [<${hex(id0)}> <${hex(id0)}>] >>\nstartxref\n$xref\n%%EOF\n")
-    out.toByteArray
+    pdf.classicXref(s" /Encrypt 5 0 R /ID [<${hex(id0)}> <${hex(id0)}>]")
   }
 
   /** Fixture: a PDF whose page has BOTH a Flate-compressed text content
@@ -1808,53 +1664,13 @@ object PdfCodec {
     * (SOI/EOI-framed junk) deliberately containing "(trap) Tj" and
     * ">>" byte patterns — decode must skip the image stream whole (by
     * /Subtype /Image + /Length bounding) and extract only the text. */
-  def encodeWithDctImage(lines: Seq[String]): Array[Byte] = {
-    def esc(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '(' => "\\("
-      case ')' => "\\)"
-      case c => c.toString
-    }
-    val content = ("BT /F1 12 Tf 72 720 Td " +
-      lines.map(l => s"(${esc(l)}) Tj 0 -14 Td ").mkString + "ET")
-      .getBytes("ISO-8859-1")
-    val cData = graft.multimodal.Zlib.deflate(content,
-      level = java.util.zip.Deflater.BEST_SPEED)
+  def encodeWithDctImage(lines: Seq[String]): Array[Byte] =
     // fake JPEG: SOI marker, traps for a naive text scanner, EOI marker
-    val img = (Array[Byte](0xFF.toByte, 0xD8.toByte, 0xFF.toByte,
-        0xE0.toByte) ++
-      "(trap) Tj >> endstream-bait <<".getBytes("ISO-8859-1") ++
-      Array.tabulate[Byte](64)(k => (k * 37 % 251).toByte) ++
-      Array[Byte](0xFF.toByte, 0xD9.toByte))
-    val out = new ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    val offsets = Array.newBuilder[Int]
-    w("%PDF-1.4\n")
-    offsets += out.size()
-    w("1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n")
-    offsets += out.size()
-    w("2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n")
-    offsets += out.size()
-    w("3 0 obj << /Type /Page /Parent 2 0 R /Contents 4 0 R " +
-      "/Resources << /XObject << /Im1 5 0 R >> >> " +
-      "/MediaBox [0 0 612 792] >> endobj\n")
-    offsets += out.size()
-    w(s"4 0 obj << /Length ${cData.length} /Filter /FlateDecode >> stream\n")
-    out.write(cData)
-    w("\nendstream endobj\n")
-    offsets += out.size()
-    w(s"5 0 obj << /Type /XObject /Subtype /Image /Width 8 /Height 8 " +
-      s"/ColorSpace /DeviceRGB /BitsPerComponent 8 " +
-      s"/Length ${img.length} /Filter /DCTDecode >> stream\n")
-    out.write(img)
-    w("\nendstream endobj\n")
-    val xref = out.size()
-    val offs = offsets.result()
-    w("xref\n0 6\n0000000000 65535 f \n" +
-      offs.map(o => f"$o%010d 00000 n \n").mkString)
-    w(s"trailer << /Size 6 /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
-    out.toByteArray
-  }
+    withDctImage(lines, 8, 8, "DeviceRGB",
+      Array[Byte](0xFF.toByte, 0xD8.toByte, 0xFF.toByte, 0xE0.toByte) ++
+        "(trap) Tj >> endstream-bait <<".getBytes("ISO-8859-1") ++
+        Array.tabulate[Byte](64)(k => (k * 37 % 251).toByte) ++
+        Array[Byte](0xFF.toByte, 0xD9.toByte))
 
   /** Fixture: a PDF with a Flate text content stream AND a REAL
     * baseline-JPEG image XObject (our JpegCodec bytes in a /DCTDecode
@@ -1863,48 +1679,27 @@ object PdfCodec {
     * decode() must still skip the image for text; extractImages must
     * recover the exact pixels. */
   def encodeWithRealJpeg(lines: Seq[String], imgW: Int, imgH: Int,
-      imgPix: Array[Byte]): Array[Byte] = {
-    def esc(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '(' => "\\("
-      case ')' => "\\)"
-      case c => c.toString
-    }
-    val content = ("BT /F1 12 Tf 72 720 Td " +
-      lines.map(l => s"(${esc(l)}) Tj 0 -14 Td ").mkString + "ET")
-      .getBytes("ISO-8859-1")
-    val cData = graft.multimodal.Zlib.deflate(content,
-      level = java.util.zip.Deflater.BEST_SPEED)
-    val img = graft.multimodal.JpegCodec.encodeGray(imgW, imgH, imgPix)
-    val out = new ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    val offsets = Array.newBuilder[Int]
-    w("%PDF-1.4\n")
-    offsets += out.size()
-    w("1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n")
-    offsets += out.size()
-    w("2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n")
-    offsets += out.size()
-    w("3 0 obj << /Type /Page /Parent 2 0 R /Contents 4 0 R " +
-      "/Resources << /XObject << /Im1 5 0 R >> >> " +
-      "/MediaBox [0 0 612 792] >> endobj\n")
-    offsets += out.size()
-    w(s"4 0 obj << /Length ${cData.length} /Filter /FlateDecode >> stream\n")
-    out.write(cData)
-    w("\nendstream endobj\n")
-    offsets += out.size()
-    w(s"5 0 obj << /Type /XObject /Subtype /Image /Width $imgW " +
-      s"/Height $imgH /ColorSpace /DeviceGray /BitsPerComponent 8 " +
-      s"/Length ${img.length} /Filter /DCTDecode >> stream\n")
-    out.write(img)
-    w("\nendstream endobj\n")
-    val xref = out.size()
-    val offs = offsets.result()
-    w("xref\n0 6\n0000000000 65535 f \n" +
-      offs.map(o => f"$o%010d 00000 n \n").mkString)
-    w(s"trailer << /Size 6 /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
-    out.toByteArray
+      imgPix: Array[Byte]): Array[Byte] =
+    withDctImage(lines, imgW, imgH, "DeviceGray",
+      graft.multimodal.JpegCodec.encodeGray(imgW, imgH, imgPix))
+
+  /** A text page whose resources name one /DCTDecode image, object 5. */
+  private def withDctImage(lines: Seq[String], w: Int, h: Int,
+      colorSpace: String, jpeg: Array[Byte]): Array[Byte] = {
+    val cData = deflated(textContent(lines))
+    val pdf = PdfWriter.create("1.4")
+    pdf.pageChain("/Resources << /XObject << /Im1 5 0 R >> >> ")
+    pdf.flateStream(4, cData)
+    pdf.stream(5, dctImage(w, h, colorSpace, jpeg.length), jpeg)
+    pdf.classicXref()
   }
+
+  /** The stream dict of an 8-bit /DCTDecode image XObject. */
+  private def dctImage(w: Int, h: Int, colorSpace: String,
+      len: Int): String =
+    s"/Type /XObject /Subtype /Image /Width $w /Height $h " +
+      s"/ColorSpace /$colorSpace /BitsPerComponent 8 " +
+      s"/Length $len /Filter /DCTDecode"
 
   /** Fixture: a PDF whose content stream's /Length is an INDIRECT
     * reference `5 0 R` resolved by a separate top-level integer object
@@ -1918,46 +1713,17 @@ object PdfCodec {
   def encodeWithIndirectLength(lines: Seq[String],
       compress: Boolean = true, decoys: Seq[Int] = Nil,
       lenObjFirst: Boolean = false): Array[Byte] = {
-    def esc(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '(' => "\\("
-      case ')' => "\\)"
-      case c => c.toString
-    }
-    val content = ("BT /F1 12 Tf 72 720 Td " +
-      lines.map(l => s"(${esc(l)}) Tj 0 -14 Td ").mkString + "ET")
-      .getBytes("ISO-8859-1")
-    val data = if (!compress) content
-      else graft.multimodal.Zlib.deflate(content,
-      level = java.util.zip.Deflater.BEST_SPEED)
-    val out = new ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    val offs = new Array[Int](6) // ids 0..5; 0 unused
-    w("%PDF-1.4\n")
-    decoys.foreach(v => w(s"% decoy 5 0 obj $v endobj\n"))
-    offs(1) = out.size()
-    w("1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n")
-    offs(2) = out.size()
-    w("2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n")
-    offs(3) = out.size()
-    w("3 0 obj << /Type /Page /Parent 2 0 R /Contents 4 0 R " +
-      "/MediaBox [0 0 612 792] >> endobj\n")
-    def lenObj(): Unit = {
-      offs(5) = out.size()
-      w(s"5 0 obj ${data.length} endobj\n")
-    }
+    val content = textContent(lines)
+    val data = if (compress) deflated(content) else content
+    val pdf = PdfWriter.create("1.4")
+    decoys.foreach(v => pdf.w(s"% decoy 5 0 obj $v endobj\n"))
+    pdf.pageChain()
+    def lenObj(): Unit = pdf.obj(5, data.length.toString)
     if (lenObjFirst) lenObj()
-    offs(4) = out.size()
-    w("4 0 obj << /Length 5 0 R" +
-      (if (compress) " /Filter /FlateDecode" else "") + " >> stream\n")
-    out.write(data)
-    w("\nendstream endobj\n")
+    pdf.stream(4, "/Length 5 0 R" +
+      (if (compress) " /Filter /FlateDecode" else ""), data)
     if (!lenObjFirst) lenObj()
-    val xref = out.size()
-    w("xref\n0 6\n0000000000 65535 f \n" +
-      (1 to 5).map(i => f"${offs(i)}%010d 00000 n \n").mkString)
-    w(s"trailer << /Size 6 /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
-    out.toByteArray
+    pdf.classicXref()
   }
 
   /** Fixture: a PDF 1.5-style file whose content stream's /Length is an
@@ -1971,19 +1737,7 @@ object PdfCodec {
     * /Length indirect (top-level-resolvable), covering that path too. */
   def encodeWithObjStmLength(lines: Seq[String],
       objStmIndirectLen: Boolean = false): Array[Byte] = {
-    def esc(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '(' => "\\("
-      case ')' => "\\)"
-      case c => c.toString
-    }
-    def deflated(b: Array[Byte]): Array[Byte] =
-      graft.multimodal.Zlib.deflate(b,
-        level = java.util.zip.Deflater.BEST_SPEED)
-    val content = ("BT /F1 12 Tf 72 720 Td " +
-      lines.map(l => s"(${esc(l)}) Tj 0 -14 Td ").mkString + "ET")
-      .getBytes("ISO-8859-1")
-    val cData = deflated(content)
+    val cData = deflated(textContent(lines))
     // ObjStm payload: member 5 = the content length integer; member 7 =
     // a decoy dict with hostile bait in a literal string
     val m5 = cData.length.toString
@@ -1991,40 +1745,20 @@ object PdfCodec {
     val header = s"5 0 7 ${m5.length + 1} "
     val first = header.length
     val oData = deflated((header + m5 + " " + m7).getBytes("ISO-8859-1"))
-    val out = new ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    w("%PDF-1.5\n")
-    w("1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n")
-    w("2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n")
-    w("3 0 obj << /Type /Page /Parent 2 0 R /Contents 4 0 R " +
-      "/MediaBox [0 0 612 792] >> endobj\n")
-    w(s"4 0 obj << /Length 5 0 R /Filter /FlateDecode >> stream\n")
-    out.write(cData)
-    w("\nendstream endobj\n")
+    val pdf = PdfWriter.create("1.5")
+    pdf.pageChain()
+    pdf.stream(4, "/Length 5 0 R /Filter /FlateDecode", cData)
     val objStmLen =
       if (objStmIndirectLen) "8 0 R" else oData.length.toString
-    w(s"6 0 obj << /Type /ObjStm /N 2 /First $first " +
-      s"/Length $objStmLen /Filter /FlateDecode >> stream\n")
-    out.write(oData)
-    w("\nendstream endobj\n")
-    if (objStmIndirectLen) w(s"8 0 obj ${oData.length} endobj\n")
-    w(s"trailer << /Size 9 /Root 1 0 R >>\n%%EOF\n")
-    out.toByteArray
+    pdf.stream(6, s"/Type /ObjStm /N 2 /First $first " +
+      s"/Length $objStmLen /Filter /FlateDecode", oData)
+    if (objStmIndirectLen) pdf.obj(8, oData.length.toString)
+    pdf.w("trailer << /Size 9 /Root 1 0 R >>\n%%EOF\n")
+    pdf.bytes
   }
 
   private def build(lines: Seq[String], filterName: String): Array[Byte] = {
-    def esc(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '(' => "\\("
-      case ')' => "\\)"
-      case c => c.toString
-    }
-    val content = ("BT /F1 12 Tf 72 720 Td " +
-      lines.map(l => s"(${esc(l)}) Tj 0 -14 Td ").mkString + "ET")
-      .getBytes("ISO-8859-1")
-    def deflated(b: Array[Byte]): Array[Byte] =
-      graft.multimodal.Zlib.deflate(b,
-        level = java.util.zip.Deflater.BEST_SPEED)
+    val content = textContent(lines)
     // predictor fixtures tile the content into predCols-byte rows;
     // trailing space padding lands AFTER the final ET so the decoded
     // text is unchanged (showOps only emits on Tj)
@@ -2067,23 +1801,104 @@ object PdfCodec {
         s"<< /Predictor 10 /Columns $predCols >>"
       case _ => ""
     }
-    val out = new ByteArrayOutputStream()
+    val pdf = PdfWriter.create("1.4")
+    pdf.pageChain()
+    pdf.stream(4, s"/Length ${data.length}$filter", data)
+    pdf.classicXref()
+  }
+
+  /** The text content stream every fixture carries: one `Tj` per line,
+    * with the literal-string specials `\`, `(` and `)` escaped. */
+  private def textContent(lines: Seq[String]): Array[Byte] = {
+    def esc(s: String): String = s.flatMap {
+      case '\\' => "\\\\"
+      case '(' => "\\("
+      case ')' => "\\)"
+      case c => c.toString
+    }
+    ("BT /F1 12 Tf 72 720 Td " +
+      lines.map(l => s"(${esc(l)}) Tj 0 -14 Td ").mkString + "ET")
+      .getBytes("ISO-8859-1")
+  }
+
+  private def deflated(b: Array[Byte]): Array[Byte] =
+    graft.multimodal.Zlib.deflate(b, level = Deflater.BEST_SPEED)
+
+  /** One fixture file being written: its bytes plus the offset of every
+    * numbered object, so cross-reference sections are computed from
+    * what was written. `update`: the writer appends to an existing file
+    * (an incremental update, §7.5.6). */
+  private final class PdfWriter private (update: Boolean) {
+    private val out = new ByteArrayOutputStream()
+    private val offsets = scala.collection.mutable.TreeMap.empty[Int, Int]
+
+    def size: Int = out.size()
+    def offset(num: Int): Int = offsets(num)
+    def bytes: Array[Byte] = out.toByteArray
     def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    val offsets = Array.newBuilder[Int]
-    w("%PDF-1.4\n")
-    offsets += out.size(); w("1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n")
-    offsets += out.size(); w("2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n")
-    offsets += out.size(); w("3 0 obj << /Type /Page /Parent 2 0 R " +
-      "/Contents 4 0 R /MediaBox [0 0 612 792] >> endobj\n")
-    offsets += out.size()
-    w(s"4 0 obj << /Length ${data.length}$filter >> stream\n")
-    out.write(data)
-    w("\nendstream endobj\n")
-    val xref = out.size()
-    val offs = offsets.result()
-    w("xref\n0 5\n0000000000 65535 f \n" +
-      offs.map(o => f"$o%010d 00000 n \n").mkString)
-    w(s"trailer << /Size 5 /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
-    out.toByteArray
+
+    def obj(num: Int, body: String): Unit = {
+      offsets(num) = out.size()
+      w(s"$num 0 obj $body endobj\n")
+    }
+
+    def stream(num: Int, dict: String, data: Array[Byte]): Unit = {
+      offsets(num) = out.size()
+      w(s"$num 0 obj << $dict >> stream\n")
+      out.write(data)
+      w("\nendstream endobj\n")
+    }
+
+    /** A stream whose `data` is already Flate-encoded. */
+    def flateStream(num: Int, data: Array[Byte]): Unit =
+      stream(num, s"/Length ${data.length} /Filter /FlateDecode", data)
+
+    /** Catalog (1) → pages (2) → one page (3) whose content stream is
+      * object 4; `resources` goes before the page's /MediaBox. */
+    def pageChain(resources: String = ""): Unit = {
+      obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+      obj(2, "<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
+      obj(3, "<< /Type /Page /Parent 2 0 R /Contents 4 0 R " +
+        s"${resources}/MediaBox [0 0 612 792] >>")
+    }
+
+    /** Classic xref table (§7.5.4) and trailer. A new file lists objects
+      * 0..n in one subsection; an update lists the free-list head, then
+      * each object it wrote in its own subsection. */
+    def classicXref(trailer: String = "",
+        size: Int = offsets.size + 1): Array[Byte] = {
+      val xrefAt = out.size()
+      def row(off: Int): String = f"$off%010d 00000 n \n"
+      val free = "0000000000 65535 f \n"
+      val table =
+        if (update) s"0 1\n$free" +
+          offsets.map { case (n, off) => s"$n 1\n${row(off)}" }.mkString
+        else {
+          require(offsets.keys.toSeq == (1 to offsets.size),
+            s"objects must be numbered 1..n, got ${offsets.keys}")
+          s"0 ${offsets.size + 1}\n$free" + offsets.values.map(row).mkString
+        }
+      w(s"xref\n${table}trailer << /Size $size /Root 1 0 R$trailer >>\n")
+      startxref(xrefAt)
+    }
+
+    def startxref(at: Int): Array[Byte] = {
+      w(s"startxref\n$at\n%%EOF\n")
+      bytes
+    }
+  }
+
+  private object PdfWriter {
+    def create(version: String): PdfWriter = {
+      val pdf = new PdfWriter(update = false)
+      pdf.w(s"%PDF-$version\n")
+      pdf
+    }
+
+    def append(base: Array[Byte]): PdfWriter = {
+      val pdf = new PdfWriter(update = true)
+      pdf.out.write(base)
+      pdf
+    }
   }
 }

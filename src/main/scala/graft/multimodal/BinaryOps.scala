@@ -51,6 +51,39 @@ object BinaryOps {
     }
   }
 
+  /** (Σ v, Σ (i+1)·v) over unsigned bytes: the `pix_sum`/`pos_checksum`
+    * pair the pixel-decode queries report, and their oracles recompute
+    * from the source text. */
+  def pixelChecksum(pix: Array[Byte]): (Long, Long) = {
+    var sum = 0L
+    var chk = 0L
+    var i = 0
+    while (i < pix.length) {
+      val v = (pix(i) & 0xff).toLong
+      sum += v
+      chk += (i + 1) * v
+      i += 1
+    }
+    (sum, chk)
+  }
+
+  /** (Σ v, Σ (k+1)·v, max |v|) over signed 16-bit samples: the audio
+    * queries' `amp_sum`/`pos_checksum`/`peak_abs`. */
+  def sampleChecksum(samples: Array[Short]): (Long, Long, Long) = {
+    var sum = 0L
+    var chk = 0L
+    var peak = 0L
+    var k = 0
+    while (k < samples.length) {
+      val v = samples(k).toLong
+      sum += v
+      chk += (k + 1) * v
+      if (math.abs(v) > peak) peak = math.abs(v)
+      k += 1
+    }
+    (sum, chk, peak)
+  }
+
   /** Read a directory of media files as a binary DataFrame (built-in
     * binaryFile source: path, modificationTime, length, content). */
   def readMediaDir(spark: SparkSession, dir: String): DataFrame =

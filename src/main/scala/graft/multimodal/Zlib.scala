@@ -155,7 +155,8 @@ object Zlib {
     * routinely multi-member) inflate transparently: after a member's
     * trailer validates, bytes beginning with the 1f 8b magic start the
     * next member and the outputs concatenate — the behaviour of the
-    * GZIPInputStream code this replaced (r15 ADVICE). */
+    * GZIPInputStream code this replaced (r15 ADVICE). A failure in a
+    * later member says which: "gzip member N at offset X: …". */
   def gunzip(data: Array[Byte]): Array[Byte] = {
     require(data.length >= 18, s"gzip frame of ${data.length} bytes")
     val all = new java.io.ByteArrayOutputStream(
@@ -164,7 +165,11 @@ object Zlib {
     var members = 0
     while (members == 0 || (pos + 1 < data.length &&
         (data(pos) & 0xff) == 0x1f && (data(pos + 1) & 0xff) == 0x8b)) {
-      pos = gunzipMember(data, pos, all)
+      pos = try gunzipMember(data, pos, all) catch {
+        case e: IllegalArgumentException if members > 0 =>
+          throw new IllegalArgumentException(
+            s"gzip member ${members + 1} at offset $pos: ${e.getMessage}", e)
+      }
       members += 1
     }
     require(pos == data.length,

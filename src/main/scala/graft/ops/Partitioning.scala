@@ -68,7 +68,14 @@ object Partitioning {
     * That is deliberate: callers pass a cheap projection over a scan, and
     * a wrong answer in either direction (skipping the spread on a
     * one-split scan, or blind-repartitioning a petabyte input) costs far
-    * more than one extra planning pass. */
+    * more than one extra planning pass.
+    *
+    * Where to spread is chosen per query, not by a plan-shape rule: a
+    * trigger on typed closures would also spread q105 (faster) and q136
+    * (slower), and `ShinglesExpr` sits in spread and unspread stages
+    * alike. The per-document codec pipelines get their spread input from
+    * `Tables.docText`; the expression-family queries call this directly;
+    * `PlanSpec` pins the set of queries that spread a scan. */
   def ensureParallel(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= target) df else df.repartition(target)

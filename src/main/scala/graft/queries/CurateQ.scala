@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.multimodal.BinaryOps.{pixelChecksum, sampleChecksum}
 
 /** Round-5 corpus-curation additions. Everything here follows the repo's
   * exactness discipline — ratios in integer basis points via integral
@@ -150,11 +151,7 @@ object CurateQ {
     // work, no shuffle — the 100 TB envelope of the other codecs.
     "q203_image_decode" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 0 && length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, col("doc_id") % 3 === 0 && length(col("text")) > 0)
         .map { case (id, text) =>
           val bytes = text.getBytes("ISO-8859-1")
           val fmt = if (id % 2 == 0) "png" else "bmp"
@@ -162,15 +159,7 @@ object CurateQ {
             bytes.length, 1, bytes, fmt)
           val (w, h, pix) =
             graft.multimodal.ImageCodec.decodeGray(enc)
-          var sum = 0L
-          var chk = 0L
-          var i = 0
-          while (i < pix.length) {
-            val v = (pix(i) & 0xff).toLong
-            sum += v
-            chk += (i + 1) * v
-            i += 1
-          }
+          val (sum, chk) = pixelChecksum(pix)
           (id, fmt, w.toLong, h.toLong, sum, chk)
         }
         .toDF("doc_id", "fmt", "width", "height", "pix_sum", "pos_checksum")
@@ -187,11 +176,7 @@ object CurateQ {
     // sample and breaks the hash. Per-row executor work, no shuffle.
     "q217_wav_decode" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 1 && length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, col("doc_id") % 3 === 1 && length(col("text")) > 0)
         .map { case (id, text) =>
           val src = text.getBytes("ISO-8859-1")
           val samples = new Array[Short](src.length)
@@ -204,17 +189,7 @@ object CurateQ {
           val (rate, ch, dec) = graft.multimodal.WavCodec.decodePcm16(wav)
           require(ch == 1 && dec.length == samples.length,
             s"roundtrip shape drift: $ch ch, ${dec.length} samples")
-          var sum = 0L
-          var chk = 0L
-          var peak = 0L
-          var k = 0
-          while (k < dec.length) {
-            val v = dec(k).toLong
-            sum += v
-            chk += (k + 1) * v
-            if (math.abs(v) > peak) peak = math.abs(v)
-            k += 1
-          }
+          val (sum, chk, peak) = sampleChecksum(dec)
           (id, rate.toLong, dec.length.toLong, sum, chk, peak)
         }
         .toDF("doc_id", "sample_rate", "n_samples", "amp_sum",
@@ -233,11 +208,7 @@ object CurateQ {
     // executor work, no shuffle.
     "q220_avi_frames" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 2 && length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, col("doc_id") % 3 === 2 && length(col("text")) > 0)
         .flatMap { case (id, text) =>
           val src = text.getBytes("ISO-8859-1")
           val len = src.length
@@ -250,15 +221,7 @@ object CurateQ {
           require(w == 5 && h == 3 && fps == 10 && dec.length == nf,
             s"roundtrip shape drift: ${w}x$h @$fps, ${dec.length} frames")
           dec.zipWithIndex.filter(_._2 % 2 == 0).map { case (fr, fi) =>
-            var sum = 0L
-            var chk = 0L
-            var p = 0
-            while (p < fr.length) {
-              val v = (fr(p) & 0xff).toLong
-              sum += v
-              chk += (p + 1) * v
-              p += 1
-            }
+            val (sum, chk) = pixelChecksum(fr)
             (id, nf.toLong, fi.toLong, sum, chk)
           }
         }

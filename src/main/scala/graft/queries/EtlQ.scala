@@ -43,9 +43,7 @@ object EtlQ {
     // binary column never moves to the driver.
     "q175_docx_roundtrip" -> ((s, dir) => {
       import s.implicits._
-      val decoded = graft.ops.Partitioning.ensureParallel(
-          t(s, dir, "documents").select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      val decoded = docText(s, dir)
         .map { case (id, text) =>
           val para = text + " <&\"njk>" // markup must survive escaping
           val bytes = graft.ingest.DocxCodec.encode(
@@ -78,9 +76,7 @@ object EtlQ {
     // source text; it never sees a PDF byte.
     "q176_pdf_roundtrip" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(t(s, dir, "documents")
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir)
         .map { case (id, text) =>
           val lines = Seq(s"Name: Event $id",
             s"Venue: Hall (njk) \\ $id", text)
@@ -119,9 +115,7 @@ object EtlQ {
     // it never sees a cipher byte. Per-row executor work.
     "q285_pdf_encrypted" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(t(s, dir, "documents")
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir)
         .map { case (id, text) =>
           val mode = (id % 4) match {
             case 0 => "rc4-40"
@@ -152,9 +146,7 @@ object EtlQ {
     // work; the workbook bytes never visit the driver.
     "q177_xlsx_roundtrip" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(t(s, dir, "documents")
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir)
         .map { case (id, text) =>
           val table = Seq(
             Seq("Title", "Venue", "Price", "Info"),
@@ -195,9 +187,7 @@ object EtlQ {
     "q180_html_extract" -> ((s, dir) => {
       import s.implicits._
       import graft.ingest.HtmlCodec
-      graft.ops.Partitioning.ensureParallel(t(s, dir, "documents")
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir)
         .map { case (id, text) =>
           val esc = text.flatMap {
             case '&' => "&amp;"
@@ -261,9 +251,7 @@ object EtlQ {
     "q202_xpath_extract" -> ((s, dir) => {
       import s.implicits._
       import graft.ingest.HtmlCodec
-      graft.ops.Partitioning.ensureParallel(t(s, dir, "documents")
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir)
         .map { case (id, text) =>
           val esc = text.flatMap {
             case '&' => "&amp;"
@@ -332,9 +320,7 @@ object EtlQ {
     // behind a lucky decode. Per-row executor work, no shuffle.
     "q207_pdf_filters" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(t(s, dir, "documents")
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir)
         .map { case (id, text) =>
           val f = (id % 12) match {
             case 0 => "flate"
@@ -381,9 +367,7 @@ object EtlQ {
     "q181_format_dispatch" -> ((s, dir) => {
       import s.implicits._
       import graft.ingest.{DocParse, DocxCodec, PdfCodec, XlsxCodec}
-      graft.ops.Partitioning.ensureParallel(t(s, dir, "documents")
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir)
         .map { case (id, text) =>
           val table = Seq(Seq("Title", "Venue", "Date", "Info"),
             Seq(s"Event $id", s"Hall $id", "2020-01-01", text))
@@ -431,9 +415,7 @@ object EtlQ {
     "q293_binary_quarantine" -> ((s, dir) => {
       import s.implicits._
       import graft.ingest.{DocParse, DocxCodec, PdfCodec, XlsxCodec}
-      graft.ops.Partitioning.ensureParallel(t(s, dir, "documents")
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir)
         .map { case (id, text) =>
           val table = Seq(Seq("Title", "Venue", "Date", "Info"),
             Seq(s"Event $id", s"Hall $id", "2020-01-01", text))
@@ -481,10 +463,7 @@ object EtlQ {
     // 5-vs-3 split or the md5.
     "q303_pdf_incremental" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.ingest.PdfCodec
           val base = PdfCodec.encode(Seq(s"Name: Event $id", text))
@@ -517,10 +496,7 @@ object EtlQ {
     // the live md5.
     "q304_pdf_xref_stream" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.ingest.PdfCodec
           val baseLines = Seq(s"Name: Event $id", text)

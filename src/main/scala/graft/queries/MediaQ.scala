@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.multimodal.BinaryOps.{pixelChecksum, sampleChecksum}
 
 /** Compressed-media codecs under the driver hash — round 12's close of
   * the r11 "What's missing #1" perimeter (compressed formats threw
@@ -66,11 +67,7 @@ object MediaQ {
     // marker walk, restart reset) shifts a pixel and breaks the hash.
     "q281_jpeg_decode" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 0 && length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, col("doc_id") % 3 === 0 && length(col("text")) > 0)
         .map { case (id, text) =>
           val bytes = text.getBytes("ISO-8859-1")
           val n = bytes.length
@@ -97,15 +94,7 @@ object MediaQ {
           require(iw == w && ih == h &&
             java.util.Arrays.equals(dec, ref),
             s"JpegCodec and ImageIO disagree on doc $id")
-          var sum = 0L
-          var chk = 0L
-          var i = 0
-          while (i < dec.length) {
-            val v = (dec(i) & 0xff).toLong
-            sum += v
-            chk += (i + 1) * v
-            i += 1
-          }
+          val (sum, chk) = pixelChecksum(dec)
           (id, rst.toLong, w.toLong, h.toLong, sum, chk)
         }
         .toDF("doc_id", "restart_interval", "width", "height",
@@ -129,11 +118,7 @@ object MediaQ {
     // interlace walk) shifts a pixel and breaks the hash.
     "q319_png_decode" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 1 && length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, col("doc_id") % 3 === 1 && length(col("text")) > 0)
         .map { case (id, text) =>
           val b = text.getBytes("ISO-8859-1")
           val w = b.length; val h = 8
@@ -162,15 +147,7 @@ object MediaQ {
           require(iw == w && ih == h &&
             java.util.Arrays.equals(img.pix, ref),
             s"PngCodec and ImageIO disagree on doc $id")
-          var sum = 0L
-          var chk = 0L
-          var i = 0
-          while (i < img.pix.length) {
-            val v = (img.pix(i) & 0xff).toLong
-            sum += v
-            chk += (i + 1) * v
-            i += 1
-          }
+          val (sum, chk) = pixelChecksum(img.pix)
           (id, w.toLong, 8L, m.toLong, sum, chk)
         }
         .toDF("doc_id", "width", "height", "n_idat", "pix_sum",
@@ -186,11 +163,7 @@ object MediaQ {
     // JPEG defect inside the RIFF walk breaks the hash.
     "q282_mjpg_frames" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 2 && length(col("text")) > 1)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, col("doc_id") % 3 === 2 && length(col("text")) > 1)
         .flatMap { case (id, text) =>
           val src = text.getBytes("ISO-8859-1")
           val len = src.length
@@ -205,15 +178,7 @@ object MediaQ {
           require(w == 16 && h == 8 && fps == 10 && dec.length == nf,
             s"mjpg roundtrip shape drift: ${w}x$h @$fps, ${dec.length}")
           dec.zipWithIndex.filter(_._2 % 2 == 0).map { case (fr, fi) =>
-            var sum = 0L
-            var chk = 0L
-            var p = 0
-            while (p < fr.length) {
-              val v = (fr(p) & 0xff).toLong
-              sum += v
-              chk += (p + 1) * v
-              p += 1
-            }
+            val (sum, chk) = pixelChecksum(fr)
             (id, nf.toLong, fi.toLong, sum, chk)
           }
         }
@@ -230,11 +195,7 @@ object MediaQ {
     // either table breaks the hash.
     "q283_g711_audio" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 1 && length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, col("doc_id") % 3 === 1 && length(col("text")) > 0)
         .map { case (id, text) =>
           val codes = text.getBytes("ISO-8859-1")
           val mu = id % 2 == 0
@@ -248,17 +209,7 @@ object MediaQ {
           require(rate == 8000 && ch == 1 && isMu == mu &&
             dec.length == codes.length,
             s"g711 roundtrip shape drift for doc $id")
-          var sum = 0L
-          var chk = 0L
-          var peak = 0L
-          var k = 0
-          while (k < dec.length) {
-            val v = dec(k).toLong
-            sum += v
-            chk += (k + 1) * v
-            if (math.abs(v) > peak) peak = math.abs(v)
-            k += 1
-          }
+          val (sum, chk, peak) = sampleChecksum(dec)
           (id, if (mu) "ulaw" else "alaw", dec.length.toLong, sum, chk,
             peak)
         }
@@ -282,11 +233,7 @@ object MediaQ {
     // per character. Per-row executor work.
     "q286_exif_normalize" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 0 && length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, col("doc_id") % 3 === 0 && length(col("text")) > 0)
         .map { case (id, text) =>
           val bytes = text.getBytes("ISO-8859-1")
           val n = bytes.length
@@ -319,15 +266,7 @@ object MediaQ {
           require(dw == w && dh == 8, s"decode drifted on doc $id")
           val (w2, h2, up) = graft.multimodal.ExifCodec
             .applyOrientation(dw, dh, dec, o)
-          var sum = 0L
-          var chk = 0L
-          var i = 0
-          while (i < up.length) {
-            val v = (up(i) & 0xff).toLong
-            sum += v
-            chk += (i + 1) * v
-            i += 1
-          }
+          val (sum, chk) = pixelChecksum(up)
           (id, if (big) "MM" else "II", o.toLong,
             exif.make.getOrElse(""), exif.model.getOrElse(""),
             exif.dateTime.getOrElse(""),
@@ -347,11 +286,7 @@ object MediaQ {
     // slip desyncs the walk and the row refuses rather than mis-counting.
     "q284_mp3_scan" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 1 && length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, col("doc_id") % 3 === 1 && length(col("text")) > 0)
         .map { case (id, text) =>
           val src = text.getBytes("ISO-8859-1")
           val specs = src.toSeq.map { b =>
@@ -389,11 +324,7 @@ object MediaQ {
     // pipeline can route on.
     "q294_aac_scan" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 1 && length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, col("doc_id") % 3 === 1 && length(col("text")) > 0)
         .map { case (id, text) =>
           val src = text.getBytes("ISO-8859-1")
           val specs = src.toSeq.map { b =>
@@ -430,11 +361,7 @@ object MediaQ {
     // what a sharding pipeline actually needs (split points).
     "q295_h264_scan" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 2 && length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, col("doc_id") % 3 === 2 && length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.multimodal.H264Codec
           val src = text.getBytes("ISO-8859-1")
@@ -469,11 +396,7 @@ object MediaQ {
     // pipeline needs — land in a 1-based position checksum.
     "q296_avi_h264_census" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 2 && length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, col("doc_id") % 3 === 2 && length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.multimodal.{AviCodec, H264Codec}
           val src = text.getBytes("ISO-8859-1")
@@ -517,11 +440,7 @@ object MediaQ {
     // from arithmetic alone.
     "q297_media_quarantine" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 1)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 1)
         .map { case (id, text) =>
           import graft.multimodal._
           val src = text.getBytes("ISO-8859-1")
@@ -598,11 +517,7 @@ object MediaQ {
     // deciding whether to decode; sample payloads are never touched.
     "q298_mp4_boxes" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.multimodal.Mp4Codec
           val src = text.getBytes("ISO-8859-1")
@@ -638,11 +553,7 @@ object MediaQ {
     // text alone.
     "q305_mp4_sample_census" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.multimodal.{AacCodec, Mp4Codec, H264Codec}
           val src = text.getBytes("ISO-8859-1")
@@ -709,11 +620,7 @@ object MediaQ {
     // truth before aggregating.
     "q307_pdf_image_census" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.ingest.PdfCodec
           val src = text.getBytes("ISO-8859-1")
@@ -769,11 +676,7 @@ object MediaQ {
     // the geometry back; the oracle replays it all from arithmetic.
     "q310_h264_geometry" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.multimodal.H264Codec
           val src = text.getBytes("ISO-8859-1")
@@ -819,11 +722,7 @@ object MediaQ {
     // geometry hash.
     "q311_mp4_video_geometry" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.multimodal.{Mp4Codec, H264Codec}
           val src = text.getBytes("ISO-8859-1")
@@ -885,11 +784,7 @@ object MediaQ {
     // overridden names in the hash, overridden sizes in both sums.
     "q312_tar_census" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .mapPartitions { it =>
           import graft.multimodal.TarCodec
           // per-TASK tables (rebuilt every task — no cross-run state):
@@ -960,11 +855,7 @@ object MediaQ {
     // id/char arithmetic.
     "q313_webm_census" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.multimodal.EbmlCodec
           val src = text.getBytes("ISO-8859-1")
@@ -1016,11 +907,7 @@ object MediaQ {
     // locator or the extra-field indirection breaks the hash.
     "q314_zip_census" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.multimodal.ZipCodec
           val src = text.getBytes("ISO-8859-1")
@@ -1063,11 +950,7 @@ object MediaQ {
     // are IDAT-opaque). Geometry and chunking replay from arithmetic.
     "q316_png_census" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.multimodal.PngCodec
           val src = text.getBytes("ISO-8859-1")
@@ -1099,11 +982,7 @@ object MediaQ {
     // crawl-ingest routing pass that precedes any text extraction.
     "q299_warc_census" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.multimodal.WarcCodec
           val src = text.getBytes("ISO-8859-1")
@@ -1142,11 +1021,7 @@ object MediaQ {
     // payloads) against the oracle's arithmetic reconstruction of it.
     "q287_id3_tags" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 1 && length(col("text")) >= 12)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, col("doc_id") % 3 === 1 && length(col("text")) >= 12)
         .map { case (id, text) =>
           val version = if (id % 2 == 0) 3 else 4
           val enc = (id % 12 / 3).toInt
@@ -1189,11 +1064,7 @@ object MediaQ {
     // exchange carries three rows.
     "q289_media_funnel" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 1)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 1)
         .map { case (id, text) =>
           val src = text.getBytes("ISO-8859-1")
           val len = src.length
@@ -1269,11 +1140,7 @@ object MediaQ {
     // dict misbind, or any JPEG defect breaks the hash.
     "q290_pdf_images" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           val bytes = text.getBytes("ISO-8859-1")
           val n = bytes.length
@@ -1299,15 +1166,7 @@ object MediaQ {
             s"pdf mining drifted on doc $id: ${lines.size} lines, " +
               s"${images.size} images, ${undecoded.size} undecoded")
           val img = images.head
-          var sum = 0L
-          var chk = 0L
-          var i = 0
-          while (i < img.gray.length) {
-            val v = (img.gray(i) & 0xff).toLong
-            sum += v
-            chk += (i + 1) * v
-            i += 1
-          }
+          val (sum, chk) = pixelChecksum(img.gray)
           (id, lines.size.toLong, img.width.toLong, img.height.toLong,
             sum, chk)
         }

@@ -1067,11 +1067,8 @@ object MetricsQ {
     // decode pass + one fp-keyed exchange.
     "q231_image_dhash" -> ((s, dir) => {
       import s.implicits._
-      val perDoc = graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 0 && length(col("text")) >= 33)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      val perDoc = docText(s, dir,
+        col("doc_id") % 3 === 0 && length(col("text")) >= 33)
         .map { case (id, text) =>
           val bytes = text.getBytes("ISO-8859-1")
           val fmt = if (id % 2 == 0) "png" else "bmp"
@@ -1107,11 +1104,8 @@ object MetricsQ {
     // One decode pass + one fp-keyed exchange.
     "q232_audio_fingerprint" -> ((s, dir) => {
       import s.implicits._
-      val perDoc = graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 1 && length(col("text")) >= 16)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      val perDoc = docText(s, dir,
+        col("doc_id") % 3 === 1 && length(col("text")) >= 16)
         .map { case (id, text) =>
           val src = text.getBytes("ISO-8859-1")
           val samples = new Array[Short](src.length)
@@ -1159,11 +1153,7 @@ object MetricsQ {
     // oracle replays the frame formula byte for byte.
     "q233_scene_cuts" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(col("doc_id") % 3 === 2 && length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, col("doc_id") % 3 === 2 && length(col("text")) > 0)
         .map { case (id, text) =>
           val src = text.getBytes("ISO-8859-1")
           val len = src.length

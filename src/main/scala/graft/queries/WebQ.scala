@@ -31,11 +31,7 @@ object WebQ {
     // cases hand-worked from the RFC. Per-row executor work.
     "q300_robots_admission" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.ingest.Robots
           val robots =
@@ -92,11 +88,7 @@ object WebQ {
     // Per-row executor work; the only shuffle is the final orderBy.
     "q306_crawl_spine" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.ingest.{HtmlCodec, Robots}
           import graft.multimodal.WarcCodec
@@ -310,11 +302,7 @@ object WebQ {
     // arithmetic.
     "q315_sitemap_seeds" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.ingest.{HtmlCodec, Robots}
           val src = text.getBytes("ISO-8859-1")
@@ -375,11 +363,7 @@ object WebQ {
     // halves stay one truth table.
     "q318_sitemap_index" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.ingest.{Robots, Sitemap}
           val src = text.getBytes("ISO-8859-1")
@@ -465,11 +449,7 @@ object WebQ {
     // `*` group.
     "q320_robots_sitemap_discovery" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.ingest.{Robots, Sitemap}
           val src = text.getBytes("ISO-8859-1")
@@ -558,11 +538,7 @@ object WebQ {
     // case-folds wrong breaks the hash.
     "q323_meta_robots_canonical" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .mapPartitions { rows =>
           import graft.ingest.{HtmlCodec, Robots}
           val paths = Array("/", "/public/page", "/private",
@@ -679,11 +655,7 @@ object WebQ {
     // dedup ledger (stored vs saved bytes) the archive achieves.
     "q322_warc_revisit" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.multimodal.WarcCodec
           val src = text.getBytes("ISO-8859-1")
@@ -763,11 +735,7 @@ object WebQ {
     // hash.
     "q321_recrawl_delta" -> ((s, dir) => {
       import s.implicits._
-      graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .filter(length(col("text")) > 0)
-          .select(col("doc_id"), col("text")))
-        .as[(Long, String)]
+      docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
           import graft.ingest.{Robots, Sitemap}
           val src = text.getBytes("ISO-8859-1")

@@ -1,8 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-shape assertions: the properties that matter at 100 TB — filter
   * and projection pushdown into the parquet scan, broadcast joins for
@@ -575,5 +579,78 @@ class PlanSpec extends SparkSpec {
       .queryExecution.optimizedPlan
     assert(plan.collect { case u: Union => u }.isEmpty, plan.toString)
     assert(plan.collectLeaves().size == 1, plan.toString)
+  }
+
+  // Which queries spread a one-split scan is a per-query choice (a plan
+  // shape rule would also spread q105 and q136, and q150's spread was
+  // reverted), so the set is pinned here: a round-robin exchange whose
+  // stage reads a file scan, in the query's plan or in a sub-plan it
+  // runs eagerly while it is built (q112's and q278's localCheckpoint).
+  private val spreadQueries = Set("q16", "q17", "q18", "q40", "q60", "q68",
+    "q73", "q74", "q75", "q101", "q112", "q118", "q156", "q175", "q176",
+    "q177", "q178", "q180", "q181", "q191", "q202", "q203", "q207", "q217",
+    "q220", "q230", "q231", "q232", "q233", "q278", "q281", "q282", "q283",
+    "q284", "q285", "q286", "q287", "q289", "q290", "q293", "q294", "q295",
+    "q296", "q297", "q298", "q299", "q300", "q303", "q304", "q305", "q306",
+    "q307", "q310", "q311", "q312", "q313", "q314", "q315", "q316", "q318",
+    "q319", "q320", "q321", "q322", "q323")
+
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case i: InMemoryTableScanExec => i +: nodes(i.relation.cachedPlan)
+    case o => o +: (o.children ++ o.subqueries).flatMap(nodes)
+  }
+
+  private def stageScans(p: SparkPlan): Boolean = p match {
+    case _: FileSourceScanExec => true
+    case _: Exchange | _: QueryStageExec => false
+    case a: AdaptiveSparkPlanExec => stageScans(a.executedPlan)
+    case o => o.children.exists(stageScans)
+  }
+
+  private def spreadsScan(p: SparkPlan): Boolean = nodes(p).exists {
+    case e: ShuffleExchangeExec =>
+      e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] &&
+        stageScans(e.child)
+    case _ => false
+  }
+
+  test("exactly the pinned queries spread a file scan at sf0.001") {
+    // a fresh session: no memoized sub-plan from another suite hides an
+    // eager spread
+    val s = spark.newSession()
+    val eager = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    s.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        eager.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    val flush = () => org.apache.spark.graftglue.ListenerGlue
+      .waitUntilListenerBusEmpty(s.sparkContext)
+    val spread = SparkEntry.queries.toSeq.sortBy(_._1).filter {
+      case (_, fn) =>
+        flush()
+        eager.clear()
+        val plan = fn(s, dir).queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.initialPlan
+          case p => p
+        }
+        flush()
+        spreadsScan(plan) || eager.toArray(Array.empty[SparkPlan])
+          .exists(spreadsScan)
+    }.map(_._1.takeWhile(_ != '_')).toSet
+    assert(spread -- spreadQueries == Set.empty, "newly spread")
+    assert(spreadQueries -- spread == Set.empty, "no longer spread")
+  }
+
+  test("a bare session gets the engine's optimizer rule on first read") {
+    import graft.functions.ShingleFilterSimplify
+    val s = spark.newSession()
+    assert(s.experimental.extraOptimizations.isEmpty)
+    Tables.t(s, dir, "documents")
+    assert(s.experimental.extraOptimizations == Seq(ShingleFilterSimplify))
+    Tables.t(s, dir, "orders") // registering again adds nothing
+    assert(s.experimental.extraOptimizations == Seq(ShingleFilterSimplify))
   }
 }

@@ -49,6 +49,23 @@ class ZlibSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("gzip") || ex.getMessage.contains("CRC"))
   }
 
+  test("a corrupt later member is named with its number and offset") {
+    val one = Zlib.gzip(utf8("aaaa"))
+    val two = Zlib.gzip(utf8("bbbb"))
+    two(two.length - 5) = (two(two.length - 5) ^ 0x01).toByte // CRC byte
+    val ex = intercept[IllegalArgumentException] {
+      Zlib.gunzip(one ++ two)
+    }
+    assert(ex.getMessage.contains(s"gzip member 2 at offset ${one.length}"),
+      ex.getMessage)
+    assert(ex.getMessage.contains("CRC"), ex.getMessage)
+    // a corrupt FIRST member keeps its plain message
+    val first = intercept[IllegalArgumentException] {
+      Zlib.gunzip(two ++ one)
+    }
+    assert(!first.getMessage.contains("member"), first.getMessage)
+  }
+
   test("preset-dictionary zlib streams refuse instead of hanging") {
     // build an RFC 1950 stream with FDICT set
     val d = new java.util.zip.Deflater(
