@@ -22,12 +22,17 @@ for p in glob.glob(f"{sf_dir}/*.parquet"):
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 fails = 0
-for qname in sorted(os.listdir(out_dir)):
+# every oracle key is checked: a query whose plan threw wrote no dir
+dirs = {d for d in os.listdir(out_dir)
+        if os.path.isdir(os.path.join(out_dir, d))}
+for qname in sorted(dirs | set(oracle)):
     qdir = os.path.join(out_dir, qname)
-    if not os.path.isdir(qdir):
-        continue
     if qname in skip:
         print(f"{qname:24s} SKIPPED (slow oracle at this SF)")
+        continue
+    if qname not in dirs:
+        print(f"{qname:24s} FAIL missing (no result dir)")
+        fails += 1
         continue
     got = duckdb.sql(f"SELECT * FROM '{qdir}/*.parquet'").df()
     if qname not in oracle:

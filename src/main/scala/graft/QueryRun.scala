@@ -50,12 +50,18 @@ object QueryRun {
   val runs: Int = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
 
   /** Dev convenience: SPARK_GRAFT_ONLY=q16_jaccard_pairs,q18_simhash
-    * restricts the run; unset runs the whole registry. */
+    * restricts the run; unset runs the whole registry. A name that is not
+    * registered fails the run: a typo must not select nothing and let
+    * Verify's oracle set come out empty. */
   val only: Option[Set[String]] =
     sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
 
-  def selected: Map[String, Query] = only.fold(SparkEntry.queries)(names =>
-    SparkEntry.queries.filter { case (n, _) => names(n) })
+  def selected: Map[String, Query] = only.fold(SparkEntry.queries) { names =>
+    val unknown = names -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, "SPARK_GRAFT_ONLY names no registered query: " +
+      unknown.toSeq.sorted.mkString(", "))
+    SparkEntry.queries.filter { case (n, _) => names(n) }
+  }
 
   def session(): SparkSession = {
     val spark = GraftSession.local(cpus)

@@ -1,34 +1,35 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.queries.{AdvancedQ, CorpusQ, CurateQ, EtlQ, MediaQ, MetricsQ, PipelineQ, QualityQ, RelationalQ, ScaleQ, SimQ, TextQ, TrendQ, WebQ}
+import graft.queries.{AdvancedQ, CorpusQ, CurateQ, EtlQ, MediaQ, MetricsQ, PipelineQ, Q, QualityQ, RelationalQ, ScaleQ, SimQ, TextQ, TrendQ, WebQ}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every implemented operator from SURVEY.md §2 (plus the corpus-scale
-  * dedup/similarity/text-analysis extensions) is registered here with a
-  * DuckDB oracle where the semantics are ANSI-SQL-expressible; hash-family
-  * specific ops (MinHash/SimHash/ANN) are registered without an oracle and
-  * get the driver's rows-only check.
+  * dedup/similarity/text-analysis extensions) is one `Q` record in its
+  * module's `all` list: name, plan and DuckDB oracle together. This
+  * object joins the 14 lists once and derives the two maps the driver
+  * reads; a name listed twice fails here, at construction. Only
+  * `q35_approx_distinct` (a HyperLogLog sketch) has no oracle and gets
+  * the driver's rows-only check.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference's dashboard query shape: token search + relevance rank. */
   def entry(spark: SparkSession): DataFrame =
-    TextQ.queries("q11_search_rank")(spark, "/root/testdata/sf0.001")
+    TextQ.searchRank.plan(spark, "/root/testdata/sf0.001")
+
+  private val registry: Map[String, Q] = Q.byName(
+    RelationalQ.all ++ TextQ.all ++ SimQ.all ++ EtlQ.all ++ AdvancedQ.all ++
+      ScaleQ.all ++ PipelineQ.all ++ QualityQ.all ++ CorpusQ.all ++
+      TrendQ.all ++ CurateQ.all ++ WebQ.all ++ MetricsQ.all ++ MediaQ.all)
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQ.queries ++ TextQ.queries ++ SimQ.queries ++ EtlQ.queries ++
-      AdvancedQ.queries ++ ScaleQ.queries ++ PipelineQ.queries ++
-      QualityQ.queries ++ CorpusQ.queries ++ TrendQ.queries ++
-      CurateQ.queries ++ WebQ.queries ++ MetricsQ.queries ++ MediaQ.queries
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, q) => n -> q.plan }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    RelationalQ.oracles ++ TextQ.oracles ++ SimQ.oracles ++ EtlQ.oracles ++
-      AdvancedQ.oracles ++ ScaleQ.oracles ++ PipelineQ.oracles ++
-      QualityQ.oracles ++ CorpusQ.oracles ++ TrendQ.oracles ++
-      CurateQ.oracles ++ WebQ.oracles ++ MetricsQ.oracles ++ MediaQ.oracles
+  /** For each key in queries with an oracle, equivalent ANSI SQL runnable
+    * by DuckDB on the same parquet tables. */
+  val oracleSql: Map[String, String] =
+    registry.flatMap { case (n, q) => q.oracle.map(n -> _) }
 }

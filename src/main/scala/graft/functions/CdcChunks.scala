@@ -38,8 +38,6 @@ import org.apache.spark.unsafe.types.UTF8String
 case class CdcChunksExpr(child: Expression, w: Int)
     extends UnaryExpression with EvalCallCodegen {
   require(w >= 2, "window must be at least 2 chars")
-  override protected def castEval(src: String): String =
-    s"(org.apache.spark.sql.catalyst.util.ArrayData) $src"
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   override def nullSafeEval(v: Any): Any = {

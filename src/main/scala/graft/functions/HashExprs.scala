@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftglue.ColumnGlue.{col => toCol, expr => toExpr}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.lit
@@ -21,14 +21,12 @@ import org.apache.spark.unsafe.types.UTF8String
 trait EvalCallCodegen extends UnaryExpression {
   /** public bridge so generated Java can reach the protected eval */
   def evalOne(v: Any): Any = nullSafeEval(v)
-  /** java expression wrapping `src` (the evalOne call) to the result type */
-  protected def castEval(src: String): String
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
       : ExprCode = {
     val ref = ctx.addReferenceObj("graftExpr", this,
       classOf[EvalCallCodegen].getName)
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = ${castEval(s"$ref.evalOne($c)")};")
+      s"${ev.value} = (${CodeGenerator.boxedType(dataType)}) $ref.evalOne($c);")
   }
 }
 
@@ -100,8 +98,6 @@ object HashExprs {
   * Same family as the declarative DedupOps.minhashSignature. */
 case class MinHashSigExpr(child: Expression, numHashes: Int)
     extends UnaryExpression with EvalCallCodegen {
-  override protected def castEval(src: String): String =
-    s"(org.apache.spark.sql.catalyst.util.ArrayData) $src"
   private val P = 4294967311L // smallest prime > 2^32
   private val as = Array.tabulate(numHashes)(i => 2L * i + 1)
   private val bs = Array.tabulate(numHashes)(i => 1000003L * (i + 1) % P)
@@ -134,8 +130,6 @@ case class MinHashSigExpr(child: Expression, numHashes: Int)
   * DedupOpsSpec cross-check relies on this). */
 case class SimHash64Expr(child: Expression)
     extends UnaryExpression with EvalCallCodegen {
-  override protected def castEval(src: String): String =
-    s"((java.lang.Long) $src).longValue()"
   override def dataType: DataType = LongType
   override def nullSafeEval(v: Any): Any = {
     val arr = v.asInstanceOf[ArrayData]
@@ -237,8 +231,6 @@ case class HyperplaneSigsExpr(child: Expression, dim: Int,
     planesPerBand: Int, bands: Int)
     extends UnaryExpression with EvalCallCodegen {
   require(dim >= 1 && planesPerBand >= 1 && planesPerBand <= 64 && bands >= 1)
-  override protected def castEval(src: String): String =
-    s"(org.apache.spark.sql.catalyst.util.ArrayData) $src"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   @transient private lazy val planes: Array[Double] = {
@@ -298,8 +290,6 @@ case class LatticeSigsExpr(child: Expression, dim: Int,
     planesPerBand: Int, bands: Int)
     extends UnaryExpression with EvalCallCodegen {
   require(dim >= 1 && planesPerBand >= 1 && planesPerBand <= 64 && bands >= 1)
-  override protected def castEval(src: String): String =
-    s"(org.apache.spark.sql.catalyst.util.ArrayData) $src"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   @transient private lazy val signs: Array[Long] = {
@@ -353,8 +343,6 @@ case class LatticeSigsExpr(child: Expression, dim: Int,
   * all emit nothing below k). */
 case class ShinglesExpr(child: Expression, k: Int, distinct: Boolean = true)
     extends UnaryExpression with EvalCallCodegen {
-  override protected def castEval(src: String): String =
-    s"(org.apache.spark.sql.catalyst.util.ArrayData) $src"
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
   override def nullSafeEval(v: Any): Any = {
@@ -392,8 +380,6 @@ object ShinglesExpr {
   * callers' contract; n(n−1)/2 output rows either way. */
 case class ArrayPairsExpr(child: Expression)
     extends UnaryExpression with EvalCallCodegen {
-  override protected def castEval(src: String): String =
-    s"(org.apache.spark.sql.catalyst.util.ArrayData) $src"
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("p1", LongType, nullable = false),
     StructField("p2", LongType, nullable = false))),
@@ -452,8 +438,6 @@ object ArrayPairsExpr {
 case class WinnowExpr(child: Expression, k: Int, w: Int)
     extends UnaryExpression with EvalCallCodegen {
   require(k >= 1 && w >= 1)
-  override protected def castEval(src: String): String =
-    s"(org.apache.spark.sql.catalyst.util.ArrayData) $src"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullSafeEval(v: Any): Any = {
     val arr = v.asInstanceOf[ArrayData]
@@ -514,8 +498,6 @@ object WinnowExpr {
 case class WinnowMd5Expr(child: Expression, k: Int, w: Int)
     extends UnaryExpression with EvalCallCodegen {
   require(k >= 1 && w >= 1)
-  override protected def castEval(src: String): String =
-    s"(org.apache.spark.sql.catalyst.util.ArrayData) $src"
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
   override def nullSafeEval(v: Any): Any = {
@@ -594,8 +576,6 @@ object WinnowMd5Expr {
 case class MinHashMd5SigExpr(child: Expression, bands: Int, rowsPerBand: Int)
     extends UnaryExpression with EvalCallCodegen {
   require(bands >= 1 && rowsPerBand >= 1 && bands * rowsPerBand <= 512)
-  override protected def castEval(src: String): String =
-    s"(org.apache.spark.sql.catalyst.util.ArrayData) $src"
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
@@ -684,8 +664,6 @@ object MinHashMd5SigExpr {
 case class SimHashMd5ChunksExpr(child: Expression, chunks: Int)
     extends UnaryExpression with EvalCallCodegen {
   require(chunks >= 1 && 64 % chunks == 0, s"chunks=$chunks must divide 64")
-  override protected def castEval(src: String): String =
-    s"(org.apache.spark.sql.catalyst.util.ArrayData) $src"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   override def nullSafeEval(v: Any): Any = {

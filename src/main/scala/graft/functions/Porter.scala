@@ -154,8 +154,6 @@ object Porter {
 
 case class StemTokensExpr(child: Expression)
     extends UnaryExpression with graft.functions.EvalCallCodegen {
-  override protected def castEval(src: String): String =
-    s"(org.apache.spark.sql.catalyst.util.ArrayData) $src"
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def nullSafeEval(v: Any): Any = {
     val arr = v.asInstanceOf[ArrayData]

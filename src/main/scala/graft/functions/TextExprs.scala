@@ -17,8 +17,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * overwhelmingly already NFC. */
 case class NfcNormalizeExpr(child: Expression)
     extends UnaryExpression with EvalCallCodegen {
-  override protected def castEval(src: String): String =
-    s"(org.apache.spark.unsafe.types.UTF8String) $src"
   override def dataType: DataType = StringType
   override def nullSafeEval(v: Any): Any = {
     val s = v.asInstanceOf[UTF8String].toString
@@ -46,8 +44,6 @@ object NfcNormalizeExpr {
   * null-propagating IN). Counts WITH multiplicity. */
 case class CountInSetExpr(child: Expression, set: Seq[String])
     extends UnaryExpression with EvalCallCodegen {
-  override protected def castEval(src: String): String =
-    s"((java.lang.Long) $src).longValue()"
   override def dataType: DataType =
     org.apache.spark.sql.types.LongType
   @transient private lazy val members: java.util.HashSet[UTF8String] = {

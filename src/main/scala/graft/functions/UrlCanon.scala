@@ -119,8 +119,6 @@ object UrlCanon {
 
 case class CanonUrlExpr(child: Expression)
     extends UnaryExpression with EvalCallCodegen {
-  override protected def castEval(src: String): String =
-    s"(org.apache.spark.unsafe.types.UTF8String) $src"
   override def dataType: DataType = StringType
   override def nullSafeEval(v: Any): Any =
     UTF8String.fromString(
@@ -131,8 +129,6 @@ case class CanonUrlExpr(child: Expression)
 
 case class UrlHostExpr(child: Expression)
     extends UnaryExpression with EvalCallCodegen {
-  override protected def castEval(src: String): String =
-    s"(org.apache.spark.unsafe.types.UTF8String) $src"
   override def dataType: DataType = StringType
   override def nullSafeEval(v: Any): Any =
     UTF8String.fromString(

@@ -94,34 +94,57 @@ object AviCodec {
     buf.array()
   }
 
-  /** Decode → (w, h, fps, top-down padding-stripped BGR frames). */
-  def decodeDib24(bytes: Array[Byte]): (Int, Int, Int, Seq[Array[Byte]]) = {
+  /** The one RIFF walk the decoders and the census share. Checks the
+    * RIFF 'AVI ' header, descends hdrl/strl/movi, reads the FIRST
+    * stream's strh rate and strf geometry (later strls, e.g. an audio
+    * track, are skipped) and skips unknown chunks by declared size.
+    * `strf(bits, comp)` checks the format; `chunk(id, size)` sees every
+    * other movi chunk with `buf` at its payload. A header cut mid-tag
+    * refuses as IllegalArgumentException, like every other truncation. */
+  private final class Riff(bytes: Array[Byte]) {
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    var w = -1; var h = -1; var fps = -1
+
     def tag(): String = {
       val b = new Array[Byte](4); buf.get(b); new String(b, "US-ASCII")
     }
-    require(bytes.length >= 12, s"not an AVI: ${bytes.length} bytes")
-    val riff = tag()
-    require(riff == "RIFF", s"not an AVI: leading tag '$riff'")
-    buf.getInt()
-    val form = tag()
-    require(form == "AVI ", s"not an AVI: form type '$form'")
-    var w = -1; var h = -1; var fps = -1
-    val frames = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
 
-    def walkStrl(end: Int): Unit = {
+    def walk(strf: (Short, Int) => Unit)(chunk: (String, Int) => Unit)
+        : Unit = {
+      require(bytes.length >= 12, s"not an AVI: ${bytes.length} bytes")
+      val riff = tag()
+      require(riff == "RIFF", s"not an AVI: leading tag '$riff'")
+      buf.getInt()
+      val form = tag()
+      require(form == "AVI ", s"not an AVI: form type '$form'")
+      try walkList(bytes.length, strf, chunk)
+      catch {
+        case _: java.nio.BufferUnderflowException =>
+          throw new IllegalArgumentException(
+            "truncated AVI: chunk header runs past the buffer")
+      }
+      require(w > 0 && h > 0, "no strf header")
+    }
+
+    /** (id, size, offset of the next chunk), with the size checked. */
+    private def header(): (String, Int, Int) = {
+      val id = tag(); val size = buf.getInt()
+      val next = buf.position() + size + (size & 1)
+      require(size >= 0 && next <= bytes.length,
+        s"truncated chunk '$id': declared $size")
+      (id, size, next)
+    }
+
+    private def walkStrl(end: Int, strf: (Short, Int) => Unit): Unit = {
       var rate = -1; var scale = -1
       while (buf.position() < end) {
-        val id = tag(); val size = buf.getInt()
-        val next = buf.position() + size + (size & 1)
-        require(size >= 0 && next <= bytes.length,
-          s"truncated chunk '$id': declared $size")
+        val (id, size, next) = header()
         id match {
           case "strh" =>
             require(size >= 28, s"strh too small ($size bytes)")
             val typ = tag()
             require(typ == "vids", s"first stream is '$typ', want 'vids'")
-            tag() // handler
+            tag() // handler fourcc; strf's biCompression is authoritative
             buf.getInt(); buf.getShort(); buf.getShort(); buf.getInt()
             scale = buf.getInt(); rate = buf.getInt()
           case "strf" =>
@@ -131,10 +154,7 @@ object AviCodec {
             w = buf.getInt(); h = buf.getInt()
             buf.getShort() // planes
             val bits = buf.getShort()
-            require(bits == 24, s"unsupported bit depth $bits (only 24)")
-            val comp = buf.getInt()
-            require(comp == 0, s"compressed AVI (biCompression=$comp) " +
-              "is outside the decode perimeter")
+            strf(bits, buf.getInt())
           case _ => ()
         }
         buf.position(next)
@@ -143,44 +163,51 @@ object AviCodec {
       fps = rate / scale
     }
 
-    def walkList(end: Int): Unit = while (buf.position() < end) {
-      val id = tag(); val size = buf.getInt()
-      val next = buf.position() + size + (size & 1)
-      require(size >= 0 && next <= bytes.length,
-        s"truncated chunk '$id': declared $size")
-      id match {
-        case "LIST" =>
-          tag() match {
-            case "hdrl" => walkList(next)
-            // only the FIRST stream must be the video stream; later
-            // strls (e.g. an audio track) are skipped, per the doc
-            case "strl" if w < 0 => walkStrl(next)
-            case "movi" => walkList(next)
-            case _ => buf.position(next)
-          }
-        case "00db" =>
-          require(w > 0 && h > 0, "frame before strf header")
-          val st = stride(w)
-          require(size == st * h, s"frame size $size, want ${st * h}")
-          val out = new Array[Byte](3 * w * h)
-          var y = h - 1
-          while (y >= 0) {
-            buf.get(out, y * 3 * w, 3 * w)
-            buf.position(buf.position() + (st - 3 * w))
-            y -= 1
-          }
-          frames += out
-        case "00dc" =>
-          throw new IllegalArgumentException(
-            "compressed frame chunk 00dc is outside the decode perimeter")
-        case _ => ()
+    private def walkList(end: Int, strf: (Short, Int) => Unit,
+        chunk: (String, Int) => Unit): Unit =
+      while (buf.position() < end) {
+        val (id, size, next) = header()
+        if (id == "LIST") tag() match {
+          case "hdrl" | "movi" => walkList(next, strf, chunk)
+          case "strl" if w < 0 => walkStrl(next, strf)
+          case _ => ()
+        } else chunk(id, size)
+        buf.position(next)
       }
-      buf.position(next)
-    }
+  }
 
-    walkList(bytes.length)
-    require(w > 0 && h > 0, "no strf header")
-    (w, h, fps, frames.toSeq)
+  private def fourccOf(comp: Int): String = new String(Array[Byte](
+    (comp & 0xff).toByte, ((comp >> 8) & 0xff).toByte,
+    ((comp >> 16) & 0xff).toByte, ((comp >> 24) & 0xff).toByte), "US-ASCII")
+
+  /** Decode → (w, h, fps, top-down padding-stripped BGR frames). */
+  def decodeDib24(bytes: Array[Byte]): (Int, Int, Int, Seq[Array[Byte]]) = {
+    val r = new Riff(bytes)
+    val frames = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+    r.walk { (bits, comp) =>
+      require(bits == 24, s"unsupported bit depth $bits (only 24)")
+      require(comp == 0, s"compressed AVI (biCompression=$comp) " +
+        "is outside the decode perimeter")
+    } {
+      case ("00db", size) =>
+        val (w, h, buf) = (r.w, r.h, r.buf)
+        require(w > 0 && h > 0, "frame before strf header")
+        val st = stride(w)
+        require(size == st * h, s"frame size $size, want ${st * h}")
+        val out = new Array[Byte](3 * w * h)
+        var y = h - 1
+        while (y >= 0) {
+          buf.get(out, y * 3 * w, 3 * w)
+          buf.position(buf.position() + (st - 3 * w))
+          y -= 1
+        }
+        frames += out
+      case ("00dc", _) =>
+        throw new IllegalArgumentException(
+          "compressed frame chunk 00dc is outside the decode perimeter")
+      case _ => ()
+    }
+    (r.w, r.h, r.fps, frames.toSeq)
   }
 
   // ------------------------------------------------------------- MJPG side
@@ -269,99 +296,28 @@ object AviCodec {
     * JpegCodec; any other fourcc (H.264/cvid/…) refuses loudly with the
     * fourcc spelled out, and a frame whose JPEG geometry disagrees with
     * the stream header refuses rather than emitting misshapen pixels. */
-  def decodeMjpg(bytes: Array[Byte]): (Int, Int, Int, Seq[Array[Byte]]) =
-    try decodeMjpg0(bytes)
-    catch {
-      case _: java.nio.BufferUnderflowException =>
-        throw new IllegalArgumentException(
-          "truncated AVI: chunk header runs past the buffer")
-    }
-
-  private def decodeMjpg0(bytes: Array[Byte])
-      : (Int, Int, Int, Seq[Array[Byte]]) = {
-    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    def tag(): String = {
-      val b = new Array[Byte](4); buf.get(b); new String(b, "US-ASCII")
-    }
-    require(bytes.length >= 12, s"not an AVI: ${bytes.length} bytes")
-    val riff = tag()
-    require(riff == "RIFF", s"not an AVI: leading tag '$riff'")
-    buf.getInt()
-    val form = tag()
-    require(form == "AVI ", s"not an AVI: form type '$form'")
-    var w = -1; var h = -1; var fps = -1
+  def decodeMjpg(bytes: Array[Byte]): (Int, Int, Int, Seq[Array[Byte]]) = {
+    val r = new Riff(bytes)
     val frames = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-
-    def walkStrl(end: Int): Unit = {
-      var rate = -1; var scale = -1
-      while (buf.position() < end) {
-        val id = tag(); val size = buf.getInt()
-        val next = buf.position() + size + (size & 1)
-        require(size >= 0 && next <= bytes.length,
-          s"truncated chunk '$id': declared $size")
-        id match {
-          case "strh" =>
-            require(size >= 28, s"strh too small ($size bytes)")
-            val typ = tag()
-            require(typ == "vids", s"first stream is '$typ', want 'vids'")
-            tag() // handler fourcc — strf's biCompression is authoritative
-            buf.getInt(); buf.getShort(); buf.getShort(); buf.getInt()
-            scale = buf.getInt(); rate = buf.getInt()
-          case "strf" =>
-            require(size >= 40,
-              s"strf too small ($size bytes, BITMAPINFOHEADER needs 40)")
-            buf.getInt()
-            w = buf.getInt(); h = buf.getInt()
-            buf.getShort(); buf.getShort()
-            val comp = buf.getInt()
-            require(comp == MjpgFourcc, {
-              val fourcc = new String(Array[Byte](
-                (comp & 0xff).toByte, ((comp >> 8) & 0xff).toByte,
-                ((comp >> 16) & 0xff).toByte, ((comp >> 24) & 0xff).toByte),
-                "US-ASCII")
-              s"compression '$fourcc' (0x${comp.toHexString}) is outside " +
-                "the decode perimeter (MJPG here, BI_RGB via decodeDib24)"
-            })
-          case _ => ()
-        }
-        buf.position(next)
-      }
-      require(rate > 0 && scale > 0, "no strh rate")
-      fps = rate / scale
+    r.walk { (_, comp) =>
+      require(comp == MjpgFourcc,
+        s"compression '${fourccOf(comp)}' (0x${comp.toHexString}) is " +
+          "outside the decode perimeter (MJPG here, BI_RGB via decodeDib24)")
+    } {
+      case ("00dc", size) =>
+        require(r.w > 0 && r.h > 0, "frame before strf header")
+        val payload = new Array[Byte](size)
+        r.buf.get(payload)
+        val (fw, fh, pix) = JpegCodec.decodeGray(payload)
+        require(fw == r.w && fh == r.h,
+          s"frame geometry ${fw}x$fh disagrees with stream ${r.w}x${r.h}")
+        frames += pix
+      case ("00db", _) =>
+        throw new IllegalArgumentException(
+          "uncompressed 00db chunk in an MJPG stream — use decodeDib24")
+      case _ => ()
     }
-
-    def walkList(end: Int): Unit = while (buf.position() < end) {
-      val id = tag(); val size = buf.getInt()
-      val next = buf.position() + size + (size & 1)
-      require(size >= 0 && next <= bytes.length,
-        s"truncated chunk '$id': declared $size")
-      id match {
-        case "LIST" =>
-          tag() match {
-            case "hdrl" => walkList(next)
-            case "strl" if w < 0 => walkStrl(next)
-            case "movi" => walkList(next)
-            case _ => buf.position(next)
-          }
-        case "00dc" =>
-          require(w > 0 && h > 0, "frame before strf header")
-          val payload = new Array[Byte](size)
-          buf.get(payload)
-          val (fw, fh, pix) = JpegCodec.decodeGray(payload)
-          require(fw == w && fh == h,
-            s"frame geometry ${fw}x$fh disagrees with stream ${w}x$h")
-          frames += pix
-        case "00db" =>
-          throw new IllegalArgumentException(
-            "uncompressed 00db chunk in an MJPG stream — use decodeDib24")
-        case _ => ()
-      }
-      buf.position(next)
-    }
-
-    walkList(bytes.length)
-    require(w > 0 && h > 0, "no strf header")
-    (w, h, fps, frames.toSeq)
+    (r.w, r.h, r.fps, frames.toSeq)
   }
 
   /** CONTAINER CENSUS — walk the RIFF/VfW structure and report the
@@ -374,85 +330,19 @@ object AviCodec {
     * the decoders (truncation, missing headers). */
   def census(bytes: Array[Byte])
       : (String, Int, Int, Int, Seq[Array[Byte]]) = {
-    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    def tag(): String = {
-      val b = new Array[Byte](4); buf.get(b); new String(b, "US-ASCII")
-    }
-    require(bytes.length >= 12, s"not an AVI: ${bytes.length} bytes")
-    val riff = tag()
-    require(riff == "RIFF", s"not an AVI: leading tag '$riff'")
-    buf.getInt()
-    val form = tag()
-    require(form == "AVI ", s"not an AVI: form type '$form'")
-    var w = -1; var h = -1; var fps = -1; var fourcc = ""
+    val r = new Riff(bytes)
+    var fourcc = ""
     val chunks = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-
-    def walkStrl(end: Int): Unit = {
-      var rate = -1; var scale = -1
-      while (buf.position() < end) {
-        val id = tag(); val size = buf.getInt()
-        val next = buf.position() + size + (size & 1)
-        require(size >= 0 && next <= bytes.length,
-          s"truncated chunk '$id': declared $size")
-        id match {
-          case "strh" =>
-            require(size >= 28, s"strh too small ($size bytes)")
-            val typ = tag()
-            require(typ == "vids", s"first stream is '$typ', want 'vids'")
-            tag() // handler fourcc; strf's biCompression is authoritative
-            buf.getInt(); buf.getShort(); buf.getShort(); buf.getInt()
-            scale = buf.getInt(); rate = buf.getInt()
-          case "strf" =>
-            require(size >= 40,
-              s"strf too small ($size bytes, BITMAPINFOHEADER needs 40)")
-            buf.getInt()
-            w = buf.getInt(); h = buf.getInt()
-            buf.getShort(); buf.getShort()
-            val comp = buf.getInt()
-            fourcc =
-              if (comp == 0) "DIB " // BI_RGB
-              else new String(Array[Byte](
-                (comp & 0xff).toByte, ((comp >> 8) & 0xff).toByte,
-                ((comp >> 16) & 0xff).toByte,
-                ((comp >> 24) & 0xff).toByte), "US-ASCII")
-          case _ => ()
-        }
-        buf.position(next)
-      }
-      require(rate > 0 && scale > 0, "no strh rate")
-      fps = rate / scale
+    r.walk { (_, comp) =>
+      fourcc = if (comp == 0) "DIB " else fourccOf(comp) // 0 = BI_RGB
+    } {
+      case ("00db" | "00dc", size) =>
+        require(r.w > 0 && r.h > 0, "frame before strf header")
+        val payload = new Array[Byte](size)
+        r.buf.get(payload)
+        chunks += payload
+      case _ => ()
     }
-
-    def walkList(end: Int): Unit = while (buf.position() < end) {
-      val id = tag(); val size = buf.getInt()
-      val next = buf.position() + size + (size & 1)
-      require(size >= 0 && next <= bytes.length,
-        s"truncated chunk '$id': declared $size")
-      id match {
-        case "LIST" =>
-          tag() match {
-            case "hdrl" => walkList(next)
-            case "strl" if w < 0 => walkStrl(next)
-            case "movi" => walkList(next)
-            case _ => buf.position(next)
-          }
-        case "00db" | "00dc" =>
-          require(w > 0 && h > 0, "frame before strf header")
-          val payload = new Array[Byte](size)
-          buf.get(payload)
-          chunks += payload
-        case _ => ()
-      }
-      buf.position(next)
-    }
-
-    try walkList(bytes.length)
-    catch {
-      case _: java.nio.BufferUnderflowException =>
-        throw new IllegalArgumentException(
-          "truncated AVI: chunk header runs past the buffer")
-    }
-    require(w > 0 && h > 0, "no strf header")
-    (fourcc, w, h, fps, chunks.toSeq)
+    (fourcc, r.w, r.h, r.fps, chunks.toSeq)
   }
 }

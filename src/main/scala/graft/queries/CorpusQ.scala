@@ -23,14 +23,14 @@ object CorpusQ {
   private val stopList = Seq("the", "and", "of", "to", "a", "in", "is",
     "that", "it", "for")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val all: Seq[Q] = Seq(
     // Rule-based quality signals in the Gopher/C4 style: word count,
     // mean word length, alphabetic-word fraction, stopword hits, and the
     // composite keep decision. One scan, one tokenization, every signal
     // an array expression over the same materialized token column — no
     // shuffle at all until the final presentation sort (which a real
     // pipeline drops: the keep flag is consumed as a filter).
-    "q96_gopher_quality" -> ((s, dir) => {
+    Q("q96_gopher_quality", (s, dir) => {
       val stops = array(stopList.map(lit): _*)
       t(s, dir, "documents")
         .withColumn("toks", toks)
@@ -49,7 +49,27 @@ object CorpusQ {
             col("mean_word_len").between(3.0, 4.6) &&
             col("stop_hits") >= 2)
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH t AS (
+        | SELECT doc_id, string_split(lower(text), ' ') AS toks
+        | FROM documents),
+        |f AS (
+        | SELECT doc_id,
+        |  CAST(len(toks) AS BIGINT) AS n_words,
+        |  round(CAST(list_sum(list_transform(toks, w -> length(w)))
+        |    AS DOUBLE) / len(toks), 4) AS mean_word_len,
+        |  round(CAST(len(list_filter(toks,
+        |    w -> regexp_matches(w, '[a-z]'))) AS DOUBLE) / len(toks), 4)
+        |    AS alpha_frac,
+        |  CAST(len(list_filter(toks, w -> list_contains(
+        |    ['the','and','of','to','a','in','is','that','it','for'], w)))
+        |    AS BIGINT) AS stop_hits
+        | FROM t)
+        |SELECT *,
+        | (n_words BETWEEN 30 AND 90
+        |  AND mean_word_len BETWEEN 3.0 AND 4.6
+        |  AND stop_hits >= 2) AS keep
+        |FROM f ORDER BY doc_id""".stripMargin),
 
     // Quality-gate × dedup interaction: the 2×2 contingency between
     // the q96 keep decision and near-dup participation (any exact
@@ -60,7 +80,7 @@ object CorpusQ {
     // complementary, not redundant. Counts and shares stay integral
     // (bp via DIV). Reuses the session-shared checkpointed edge set;
     // one scan for the signals, one label join, a 4-row rollup.
-    "q192_gate_dedup_interaction" -> ((s, dir) => {
+    Q("q192_gate_dedup_interaction", (s, dir) => {
       val stops = array(stopList.map(lit): _*)
       val labels = graft.ops.DedupOps
         .connectedComponents(ScaleQ.dedupEdges(s, dir))
@@ -82,7 +102,28 @@ object CorpusQ {
         .withColumn("share_bp", ldiv(col("n") * lit(10000L),
           sum(col("n")).over(Window.partitionBy())))
         .orderBy("keep", "is_dup")
-    }),
+    }, oracle = ScaleQ.dedupLabSql + """,
+        |tq AS (
+        | SELECT doc_id, string_split(lower(text), ' ') AS toks
+        | FROM documents),
+        |fq AS (
+        | SELECT doc_id,
+        |  (CAST(len(toks) AS BIGINT) BETWEEN 30 AND 90
+        |   AND round(CAST(list_sum(list_transform(toks,
+        |     w -> length(w))) AS DOUBLE) / len(toks), 4)
+        |     BETWEEN 3.0 AND 4.6
+        |   AND CAST(len(list_filter(toks, w -> list_contains(
+        |     ['the','and','of','to','a','in','is','that','it','for'],
+        |     w))) AS BIGINT) >= 2) AS keep
+        | FROM tq),
+        |j AS (
+        | SELECT fq.keep, lab.node IS NOT NULL AS is_dup
+        | FROM fq LEFT JOIN lab ON fq.doc_id = lab.node)
+        |SELECT keep, is_dup, CAST(count(*) AS BIGINT) AS n,
+        | CAST(count(*) * 10000 // (SELECT count(*) FROM j) AS BIGINT)
+        |   AS share_bp
+        |FROM j GROUP BY keep, is_dup
+        |ORDER BY keep, is_dup""".stripMargin),
 
     // The corpus data card: one row summarizing what every other gate
     // measures piecemeal — volume (docs/tokens/sources), quality keep
@@ -94,7 +135,7 @@ object CorpusQ {
     // the quadratic-oracle family has its own queries). All rates in
     // integer bp via DIV; the multi-distinct aggregate expands to one
     // Expand + partial-combined pass, still corpus-linear.
-    "q200_corpus_report" -> ((s, dir) => {
+    Q("q200_corpus_report", (s, dir) => {
       val stops = array(stopList.map(lit): _*)
       val d = t(s, dir, "documents")
         .withColumn("tk", toks)
@@ -122,6 +163,39 @@ object CorpusQ {
             col("n_docs")).as("exact_dup_bp"),
           ldiv(col("n_lang_ok") * lit(10000L), col("n_docs"))
             .as("langid_acc_bp"))
+    }, oracle = {
+      val langSelects = graft.ops.TextOps.langMarkers.map { case (l, ws) =>
+        s"${TextQ.langCountSql(ws)} AS s_$l"
+      }.mkString(",\n  ")
+      s"""WITH f AS (
+         | SELECT source, lang,
+         |  string_split(lower(text), ' ') AS tk,
+         |  md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'))
+         |    AS fp,
+         |  $langSelects
+         | FROM documents),
+         |g AS (
+         | SELECT source, fp,
+         |  CAST(len(tk) AS BIGINT) AS n_tok,
+         |  (CAST(len(tk) AS BIGINT) BETWEEN 30 AND 90
+         |   AND round(CAST(list_sum(list_transform(tk,
+         |     w -> length(w))) AS DOUBLE) / len(tk), 4)
+         |     BETWEEN 3.0 AND 4.6
+         |   AND CAST(len(list_filter(tk, w -> list_contains(
+         |     ['the','and','of','to','a','in','is','that','it','for'],
+         |     w))) AS BIGINT) >= 2) AS keep,
+         |  (${TextQ.langPredSql}) = lang AS lang_ok
+         | FROM f)
+         |SELECT CAST(count(*) AS BIGINT) AS n_docs,
+         | CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+         | CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
+         | CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) * 10000
+         |   // count(*) AS BIGINT) AS keep_bp,
+         | CAST((count(*) - count(DISTINCT fp)) * 10000
+         |   // count(*) AS BIGINT) AS exact_dup_bp,
+         | CAST(sum(CASE WHEN lang_ok THEN 1 ELSE 0 END) * 10000
+         |   // count(*) AS BIGINT) AS langid_acc_bp
+         |FROM g""".stripMargin
     }),
 
     // Benchmark decontamination (the GPT-3/FLAN n-gram overlap check):
@@ -134,7 +208,7 @@ object CorpusQ {
     // (no ensureParallel here: at scale the scan's splits already give
     // parallelism, and at bench SF the round-robin text shuffle measured
     // 2× worse than computing shingles in the scan stage)
-    "q97_decontaminate" -> ((s, dir) => {
+    Q("q97_decontaminate", (s, dir) => {
       val sh = t(s, dir, "documents")
         .select(col("doc_id"),
           explode(ShinglesExpr.shingles(toks, 8)).as("g"))
@@ -145,7 +219,19 @@ object CorpusQ {
         .groupBy("doc_id")
         .agg(countDistinct(col("g")).as("n_shared"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH s AS (
+        | SELECT doc_id, list_distinct(list_transform(
+        |   range(1, len(string_split(lower(text), ' ')) - 6),
+        |   i -> array_to_string(
+        |     string_split(lower(text), ' ')[i:i+7], ' '))) AS shs
+        | FROM documents),
+        |sh AS (SELECT doc_id, unnest(shs) AS g FROM s),
+        |bench AS (SELECT DISTINCT g FROM sh WHERE doc_id % 29 = 0)
+        |SELECT sh.doc_id, count(DISTINCT sh.g) AS n_shared
+        |FROM sh JOIN bench ON sh.g = bench.g
+        |WHERE sh.doc_id % 29 <> 0
+        |GROUP BY sh.doc_id ORDER BY sh.doc_id""".stripMargin),
 
     // Intra-document repetition signals (the Gopher repetition family):
     // duplicate-token fraction and most-frequent-token fraction, in exact
@@ -155,7 +241,7 @@ object CorpusQ {
     // token histogram is a partial-aggregated explode→count — at 100 TB
     // the per-(doc, word) combine happens map-side and only per-doc
     // partials shuffle.
-    "q98_repetition" -> ((s, dir) => {
+    Q("q98_repetition", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"), explode(toks).as("w"))
         .groupBy("doc_id", "w")
@@ -169,7 +255,16 @@ object CorpusQ {
             col("n_words")).as("dup_bp"),
           ldiv(col("top_c") * lit(10000L), col("n_words")).as("top_bp"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH c AS (
+        | SELECT doc_id, w, count(*) AS c FROM (
+        |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
+        |  FROM documents)
+        | GROUP BY doc_id, w)
+        |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_words,
+        | CAST((sum(c) - count(*)) * 10000 // sum(c) AS BIGINT) AS dup_bp,
+        | CAST(max(c) * 10000 // sum(c) AS BIGINT) AS top_bp
+        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // Hopping-window aggregation: 1-hour windows sliding every 15
     // minutes over the event stream (the batch twin of the streaming
@@ -178,7 +273,7 @@ object CorpusQ {
     // aggregation applies, nothing is ordered globally until the
     // presentation sort. Sum in DECIMAL so the value is order-independent
     // and oracle-exact.
-    "q99_sliding_window" -> ((s, dir) => {
+    Q("q99_sliding_window", (s, dir) => {
       t(s, dir, "events")
         .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"))
         .agg(count(lit(1)).as("n"),
@@ -186,7 +281,16 @@ object CorpusQ {
             4).as("sum_value"))
         .select(col("w.start").as("w_start"), col("n"), col("sum_value"))
         .orderBy("w_start")
-    }),
+    }, oracle =
+      """WITH e AS (
+        | SELECT make_timestamp(
+        |   ((epoch_us(ts) // 900000000) - k.k) * 900000000) AS w_start,
+        |  value
+        | FROM events, (SELECT unnest([0, 1, 2, 3]) AS k) k)
+        |SELECT w_start, count(*) AS n,
+        | round(CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE), 4)
+        |   AS sum_value
+        |FROM e GROUP BY w_start ORDER BY w_start""".stripMargin),
 
     // Fixed-iteration PageRank over the (undirected) supplier↔customer
     // trade graph derived from lineitem⋈orders. The loop is the classic
@@ -197,7 +301,7 @@ object CorpusQ {
     // are deterministic doubles; their per-node sum is accumulated in
     // DECIMAL(38,18) so the result is independent of partition order and
     // hash-matches a chained-CTE oracle (built-in double sums cannot).
-    "q100_pagerank" -> ((s, dir) => {
+    Q("q100_pagerank", (s, dir) => {
       val e0 = t(s, dir, "lineitem")
         .join(t(s, dir, "orders"),
           col("l_orderkey") === col("o_orderkey"))
@@ -266,13 +370,45 @@ object CorpusQ {
       ranks
         .select(col("node"), round(col("r") * n, 6).as("pr_scaled"))
         .orderBy("node")
-    }),
+    }, oracle =
+      """WITH e0 AS (
+        | SELECT DISTINCT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst
+        | FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+        |e AS (SELECT src, dst FROM e0
+        |      UNION ALL SELECT dst, src FROM e0),
+        |d AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
+        |nn AS (SELECT count(*) AS n FROM d),
+        |r0 AS (SELECT src AS node, CAST(1 AS DOUBLE) / (SELECT n FROM nn)
+        |       AS r FROM d),
+        |r1 AS (
+        | SELECT e.dst AS node,
+        |  CAST(0.15 AS DOUBLE) / (SELECT n FROM nn)
+        |   + CAST(0.85 AS DOUBLE) * CAST(sum(CAST(r0.r / d.deg
+        |       AS DECIMAL(38,18))) AS DOUBLE) AS r
+        | FROM e JOIN d USING (src) JOIN r0 ON r0.node = e.src
+        | GROUP BY e.dst),
+        |r2 AS (
+        | SELECT e.dst AS node,
+        |  CAST(0.15 AS DOUBLE) / (SELECT n FROM nn)
+        |   + CAST(0.85 AS DOUBLE) * CAST(sum(CAST(r1.r / d.deg
+        |       AS DECIMAL(38,18))) AS DOUBLE) AS r
+        | FROM e JOIN d USING (src) JOIN r1 ON r1.node = e.src
+        | GROUP BY e.dst),
+        |r3 AS (
+        | SELECT e.dst AS node,
+        |  CAST(0.15 AS DOUBLE) / (SELECT n FROM nn)
+        |   + CAST(0.85 AS DOUBLE) * CAST(sum(CAST(r2.r / d.deg
+        |       AS DECIMAL(38,18))) AS DOUBLE) AS r
+        | FROM e JOIN d USING (src) JOIN r2 ON r2.node = e.src
+        | GROUP BY e.dst)
+        |SELECT node, round(r * (SELECT n FROM nn), 6) AS pr_scaled
+        |FROM r3 ORDER BY node""".stripMargin),
 
     // Containment-similarity dedup (|A∩B|/|A| ≥ 0.8, both directions):
     // the asymmetric check that catches a short doc embedded in a longer
     // one, which plain Jaccard misses. Same inverted-index posting join
     // (Σ|posting|² bound) as q16 — never a cross join.
-    "q101_containment" -> ((s, dir) => {
+    Q("q101_containment", (s, dir) => {
       // parallelize before the shingle projection (the q156 lesson)
       graft.ops.DedupOps.containmentPairs(
         graft.ops.Partitioning.ensureParallel(
@@ -281,7 +417,22 @@ object CorpusQ {
             ShinglesExpr.shingles(toks, 3).as("sh")),
         "doc_id", "sh", 0.8)
         .orderBy("a_id", "b_id")
-    }),
+    }, oracle =
+      """WITH s AS (
+        | SELECT doc_id, string_split(lower(text), ' ') AS toks
+        | FROM documents),
+        |sh AS (
+        | SELECT doc_id, list_distinct(list_transform(
+        |   range(1, len(toks) - 1),
+        |   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shs
+        | FROM s),
+        |p AS (
+        | SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+        |  round(CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
+        |    / len(a.shs), 4) AS containment
+        | FROM sh a JOIN sh b ON a.doc_id <> b.doc_id)
+        |SELECT a_id, b_id, containment FROM p
+        |WHERE containment >= 0.8 ORDER BY a_id, b_id""".stripMargin),
 
     // The first step of BPE training: adjacent-symbol pair frequencies.
     // The corpus collapses to its VOCABULARY first (word → corpus count,
@@ -289,7 +440,7 @@ object CorpusQ {
     // millions of rows, not billions), then pairs explode over the tiny
     // vocab only, weighted by the carried counts. Top 30 with a
     // deterministic (count desc, pair asc) tiebreak.
-    "q102_bpe_merges" -> ((s, dir) => {
+    Q("q102_bpe_merges", (s, dir) => {
       val vocab = t(s, dir, "documents")
         .select(explode(toks).as("w"))
         .groupBy("w").agg(count(lit(1)).as("wc"))
@@ -301,14 +452,25 @@ object CorpusQ {
         .groupBy("pair").agg(sum(col("wc")).as("n"))
         .orderBy(desc("n"), asc("pair"))
         .limit(30)
-    }),
+    }, oracle =
+      """WITH v AS (
+        | SELECT w, count(*) AS wc FROM (
+        |  SELECT unnest(string_split(lower(text), ' ')) AS w
+        |  FROM documents)
+        | GROUP BY w HAVING length(w) >= 2),
+        |p AS (
+        | SELECT unnest(list_transform(range(1, length(w)),
+        |   i -> substr(w, CAST(i AS INTEGER), 2))) AS pair, wc
+        | FROM v)
+        |SELECT pair, CAST(sum(wc) AS BIGINT) AS n FROM p
+        |GROUP BY pair ORDER BY n DESC, pair LIMIT 30""".stripMargin),
 
     // Inverted-index build: per token — document frequency, total term
     // frequency, first posting, and an md5 fingerprint of the full
     // sorted posting list (the index payload, made hash-checkable). The
     // (token, doc) combine is map-side partial; only per-token partials
     // shuffle, and the posting list is assembled once per token.
-    "q103_inverted_index" -> ((s, dir) => {
+    Q("q103_inverted_index", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"), explode(toks).as("w"))
         .groupBy("w")
@@ -319,7 +481,17 @@ object CorpusQ {
             sort_array(collect_set(col("doc_id"))),
             d => d.cast("string")))).as("postings_md5"))
         .orderBy("w")
-    }),
+    }, oracle =
+      """SELECT w,
+        | count(DISTINCT doc_id) AS df,
+        | count(*) AS tf,
+        | min(doc_id) AS first_doc,
+        | md5(array_to_string(list_transform(
+        |   list_sort(list(DISTINCT doc_id)),
+        |   d -> CAST(d AS VARCHAR)), ',')) AS postings_md5
+        |FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
+        |      FROM documents)
+        |GROUP BY w ORDER BY w""".stripMargin),
 
     // Chi-square independence test of lang × source: per-language
     // contribution Σ (o·N − r·c)² / (N·r·c). Every term is a ratio of
@@ -327,7 +499,7 @@ object CorpusQ {
     // statistic is engine-exact — built-in double accumulation could
     // never hash-match. The marginals are tiny aggregates; broadcast
     // them and the contingency table never shuffles.
-    "q104_chi_square" -> ((s, dir) => {
+    Q("q104_chi_square", (s, dir) => {
       val d = t(s, dir, "documents")
       val o = d.groupBy("lang", "source").agg(count(lit(1)).as("o"))
       val r = d.groupBy("lang").agg(count(lit(1)).as("r"))
@@ -353,7 +525,26 @@ object CorpusQ {
           round(sum(col("term").cast(DecimalType(38, 12)))
             .cast("double"), 6).as("chi2_part"))
         .orderBy("lang")
-    }),
+    }, oracle =
+      """WITH o AS (
+        | SELECT lang, source, count(*) AS o FROM documents GROUP BY 1, 2),
+        |r AS (SELECT lang, count(*) AS r FROM documents GROUP BY 1),
+        |c AS (SELECT source, count(*) AS c FROM documents GROUP BY 1),
+        |nn AS (SELECT count(*) AS n FROM documents),
+        |t AS (
+        | SELECT o.lang, o.o,
+        |  CAST(CAST(CAST(o.o AS DECIMAL(19,0)) * nn.n
+        |       - CAST(r.r AS DECIMAL(19,0)) * c.c AS DECIMAL(19,0))
+        |     * CAST(CAST(o.o AS DECIMAL(19,0)) * nn.n
+        |       - CAST(r.r AS DECIMAL(19,0)) * c.c AS DECIMAL(19,0))
+        |     AS DOUBLE)
+        |   / CAST(CAST(nn.n AS DECIMAL(19,0)) * r.r * c.c AS DOUBLE)
+        |   AS term
+        | FROM o JOIN r USING (lang) JOIN c USING (source), nn)
+        |SELECT lang, CAST(sum(o) AS BIGINT) AS n_docs,
+        | round(CAST(sum(CAST(term AS DECIMAL(38,12))) AS DOUBLE), 6)
+        |   AS chi2_part
+        |FROM t GROUP BY lang ORDER BY lang""".stripMargin),
 
     // The multimodal pipeline, driver-checkable end-to-end: a media
     // table (binary content + kind) synthesized from document bytes runs
@@ -367,7 +558,7 @@ object CorpusQ {
     // behind the MediaDecoder seam (no such codecs in the JDK);
     // everything the cluster actually schedules — schema, batching,
     // flatMap fan-out, join-back — is exercised and exact.
-    "q105_multimodal_pipeline" -> ((s, dir) => {
+    Q("q105_multimodal_pipeline", (s, dir) => {
       import s.implicits._
       // ALL three kinds pass their real codec (ImageIO / WAV / AVI)
       // before the feature stages — byte-identical roundtrips, so the
@@ -399,7 +590,31 @@ object CorpusQ {
           coalesce(col("n_frames"), lit(0L)).as("n_frames"),
           col("frames_sum"))
         .orderBy("media_id")
-    }),
+    }, oracle =
+      // The documents are pure printable ASCII (asserted in CorpusQSpec),
+      // so UTF-8 byte k of content == ord(substr(text, k+1, 1)) and every
+      // checksum is exact integer arithmetic.
+      """WITH m AS (
+        | SELECT doc_id AS media_id,
+        |  CASE WHEN doc_id % 3 = 0 THEN 'image'
+        |       WHEN doc_id % 3 = 1 THEN 'audio'
+        |       ELSE 'video' END AS kind,
+        |  text, length(text) AS len
+        | FROM documents)
+        |SELECT media_id, kind, CAST(len AS BIGINT) AS n_bytes,
+        | CAST(list_sum(list_transform(range(0, 64),
+        |   i -> ord(substr(text, CAST(i * len // 64 AS INTEGER) + 1, 1))))
+        |   AS BIGINT) AS resize_sum,
+        | CAST(CASE WHEN kind = 'video' THEN 4 ELSE 0 END AS BIGINT)
+        |   AS n_frames,
+        | CAST(CASE WHEN kind = 'video' THEN
+        |  list_sum(list_transform(range(0, 4), f ->
+        |   list_sum(list_transform(
+        |     range(CAST(f * len // 4 AS INTEGER) + 1,
+        |           least(CAST(f * len // 4 AS INTEGER) + 32, len) + 1),
+        |     i -> ord(substr(text, CAST(i AS INTEGER), 1))))))
+        | END AS BIGINT) AS frames_sum
+        |FROM m ORDER BY media_id""".stripMargin),
 
     // Deterministic, engine-portable train/val/test split: the split key
     // is the first 16 bits of md5(doc_id) — stable across engines,
@@ -407,7 +622,7 @@ object CorpusQ {
     // lands in the same split everywhere, forever: the property a
     // training pipeline actually needs. ~80/10/10 by hex thresholds;
     // one scan, one tiny aggregate.
-    "q111_dataset_split" -> ((s, dir) => {
+    Q("q111_dataset_split", (s, dir) => {
       val h = substring(md5(col("doc_id").cast("string").cast("binary")),
         1, 4)
       t(s, dir, "documents")
@@ -418,7 +633,18 @@ object CorpusQ {
         .agg(count(lit(1)).as("n_docs"),
           sum(col("doc_id")).as("id_checksum"))
         .orderBy("split")
-    }),
+    }, oracle =
+      """WITH s AS (
+        | SELECT doc_id,
+        |  CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'cccc'
+        |        THEN 'train'
+        |       WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666'
+        |        THEN 'val'
+        |       ELSE 'test' END AS split
+        | FROM documents)
+        |SELECT split, count(*) AS n_docs,
+        | CAST(sum(doc_id) AS BIGINT) AS id_checksum
+        |FROM s GROUP BY split ORDER BY split""".stripMargin),
 
     // Temporal novelty: per corpus decile, the share of documents that
     // near-duplicate an EARLIER document (pair edges are a<b, so b is
@@ -426,7 +652,7 @@ object CorpusQ {
     // decay. Reuses the session-shared exact-Jaccard edge set (one
     // computation serves q56/q72/q86 and this); everything after the
     // edges is a repeat-flag join + one tiny aggregate.
-    "q112_temporal_novelty" -> ((s, dir) => {
+    Q("q112_temporal_novelty", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"))
       val mx = docs.agg(max(col("doc_id")).as("mx"))
       val repeats = ScaleQ.dedupEdges(s, dir)
@@ -444,7 +670,37 @@ object CorpusQ {
           round(sum(col("rep")).cast("double") / count(lit(1)), 4)
             .as("repeat_rate"))
         .orderBy("decile")
-    }),
+    }, oracle =
+      // quadratic shingle-pair oracle (same family as q16/q56): exact at
+      // the driver's sf0.01 gate; skip in local sf0.1 checks
+      """WITH s AS (
+        | SELECT doc_id, string_split(lower(text), ' ') AS toks
+        | FROM documents),
+        |sh AS (
+        | SELECT doc_id, list_distinct(list_transform(
+        |   range(1, len(toks) - 1),
+        |   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shs
+        | FROM s),
+        |p AS (
+        | SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+        |  len(list_intersect(a.shs, b.shs)) AS inter,
+        |  len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))
+        |    AS un
+        | FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
+        |rep AS (
+        | SELECT DISTINCT b_id AS doc_id FROM p
+        | WHERE round(CAST(inter AS DOUBLE) / un, 4) >= 0.5),
+        |d AS (
+        | SELECT doc_id,
+        |  least(doc_id * 10 // ((SELECT max(doc_id) + 1 FROM documents)),
+        |    9) AS decile,
+        |  CASE WHEN doc_id IN (SELECT doc_id FROM rep) THEN 1 ELSE 0 END
+        |    AS rep
+        | FROM documents)
+        |SELECT decile, count(*) AS n_docs,
+        | CAST(sum(rep) AS BIGINT) AS n_repeats,
+        | round(CAST(sum(rep) AS DOUBLE) / count(*), 4) AS repeat_rate
+        |FROM d GROUP BY decile ORDER BY decile""".stripMargin),
 
     // Domain balancing: cap every source at 50 docs, chosen in a
     // deterministic pseudo-random order (md5 of the id — no RNG, stable
@@ -452,7 +708,7 @@ object CorpusQ {
     // filtered BEFORE any list/aggregate materializes, then a tiny
     // per-source report. The window partitions by source: parallel
     // across sources, never global.
-    "q113_domain_cap" -> ((s, dir) => {
+    Q("q113_domain_cap", (s, dir) => {
       val w = Window.partitionBy(col("source"))
         .orderBy(md5(col("doc_id").cast("string").cast("binary")),
           col("doc_id"))
@@ -465,7 +721,18 @@ object CorpusQ {
           sum(when(col("kept") === 1L, col("doc_id"))
             .otherwise(lit(0L))).as("kept_checksum"))
         .orderBy("source")
-    }),
+    }, oracle =
+      """WITH r AS (
+        | SELECT source, doc_id,
+        |  row_number() OVER (PARTITION BY source
+        |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
+        | FROM documents)
+        |SELECT source, count(*) AS n_docs,
+        | CAST(sum(CASE WHEN rn <= 50 THEN 1 ELSE 0 END) AS BIGINT)
+        |   AS n_kept,
+        | CAST(sum(CASE WHEN rn <= 50 THEN doc_id ELSE 0 END) AS BIGINT)
+        |   AS kept_checksum
+        |FROM r GROUP BY source ORDER BY source""".stripMargin),
 
     // Incremental near-dup dedup: the crawl-time shape — a NEW batch
     // (last tenth of doc ids) checked against the EXISTING corpus, not
@@ -477,7 +744,7 @@ object CorpusQ {
     // (r9 broadcast sweep, lesson-2 rule). Exact Jaccard verifies
     // candidates as usual. Emits, per new doc, how many established
     // docs it duplicates and the best match.
-    "q118_incremental_dedup" -> ((s, dir) => {
+    Q("q118_incremental_dedup", (s, dir) => {
       val docs = graft.ops.Partitioning.ensureParallel(
         t(s, dir, "documents").select(col("doc_id"), col("text")))
       val mx = docs.agg((max(col("doc_id")) + 1).as("m"))
@@ -500,14 +767,36 @@ object CorpusQ {
         .groupBy(col("b_id").as("doc_id"))
         .agg(count(lit(1)).as("n_dups"), max(col("j")).as("best_j"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // quadratic shingle oracle (new×old restricted): exact at the
+      // driver's sf0.01 gate; include in the sf0.1 skip set
+      """WITH s AS (
+        | SELECT doc_id, string_split(lower(text), ' ') AS toks
+        | FROM documents),
+        |sh AS (
+        | SELECT doc_id, list_distinct(list_transform(
+        |   range(1, len(toks) - 1),
+        |   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shs
+        | FROM s),
+        |mx AS (SELECT max(doc_id) + 1 AS m FROM documents),
+        |p AS (
+        | SELECT b.doc_id AS b_id,
+        |  round(CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
+        |   / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))),
+        |   4) AS j
+        | FROM sh a, sh b, mx
+        | WHERE a.doc_id < (mx.m * 9) // 10
+        |   AND b.doc_id >= (mx.m * 9) // 10)
+        |SELECT b_id AS doc_id, count(*) AS n_dups, max(j) AS best_j
+        |FROM p WHERE j >= 0.5
+        |GROUP BY b_id ORDER BY doc_id""".stripMargin),
 
     // Character histogram over the corpus: byte/char frequency is the
     // first look at encoding health and tokenizer design (alphabet
     // size, whitespace share). Explode-to-char is heavy per row, so the
     // per-(char) combine is map-side partial and only ≤|alphabet|
     // partials shuffle.
-    "q126_char_histogram" -> ((s, dir) => {
+    Q("q126_char_histogram", (s, dir) => {
       val total = Window.partitionBy()
       t(s, dir, "documents")
         .select(explode(split(col("text"), "")).as("ch"))
@@ -520,14 +809,21 @@ object CorpusQ {
             .as("share"))
         .orderBy(desc("n"), asc("ch"))
         .limit(20)
-    }),
+    }, oracle =
+      """WITH c AS (
+        | SELECT ch, count(*) AS n FROM (
+        |  SELECT unnest(string_split(text, '')) AS ch FROM documents)
+        | WHERE length(ch) = 1 GROUP BY ch)
+        |SELECT ch, n,
+        | round(CAST(n AS DOUBLE) / (SELECT sum(n) FROM c), 6) AS share
+        |FROM c ORDER BY n DESC, ch LIMIT 20""".stripMargin),
 
     // Embedding-column profiling: the vector-data quality report run
     // before any similarity work — dimension consistency, zero-vector
     // count, and the L2-norm distribution (exact median/p95). Per-row
     // norms are sequential left-to-right folds (deterministic in both
     // engines); the percentiles are the only shuffle.
-    "q121_embedding_profile" -> ((s, dir) => {
+    Q("q121_embedding_profile", (s, dir) => {
       val norm = sqrt(aggregate(col("embedding"), lit(0.0d),
         (acc, v) => acc + v.cast("double") * v.cast("double")))
       t(s, dir, "embeddings")
@@ -538,14 +834,27 @@ object CorpusQ {
           sum(when(col("l2") === 0.0, 1L).otherwise(0L)).as("n_zero"),
           round(percentile(col("l2"), lit(0.5)), 4).as("norm_p50"),
           round(percentile(col("l2"), lit(0.95)), 4).as("norm_p95"))
-    }),
+    }, oracle =
+      """WITH v AS (
+        | SELECT len(embedding) AS dim,
+        |  sqrt(list_sum(list_transform(embedding,
+        |    v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))) AS l2
+        | FROM embeddings)
+        |SELECT count(*) AS n_vecs,
+        | CAST(count(DISTINCT dim) AS BIGINT) AS n_dims,
+        | CAST(min(dim) AS BIGINT) AS dim,
+        | CAST(sum(CASE WHEN l2 = 0.0 THEN 1 ELSE 0 END) AS BIGINT)
+        |   AS n_zero,
+        | round(quantile_cont(l2, 0.5), 4) AS norm_p50,
+        | round(quantile_cont(l2, 0.95), 4) AS norm_p95
+        |FROM v""".stripMargin),
 
     // The SQL surface end-to-end: a query written entirely in
     // spark.sql(...) against temp views, exercising the functions the
     // engine injects into the session registry (shingles, cosine_sim —
     // see GraftFunctions/GraftExtensions). What a SQL-only user of the
     // library sees; the same Catalyst expressions, so the same plans.
-    "q114_sql_surface" -> ((s, dir) => {
+    Q("q114_sql_surface", (s, dir) => {
       t(s, dir, "documents").createOrReplaceTempView("graft_docs")
       t(s, dir, "embeddings").createOrReplaceTempView("graft_emb")
       s.sql("""
@@ -557,7 +866,20 @@ object CorpusQ {
         JOIN graft_emb a ON a.vec_id = d.doc_id
         JOIN graft_emb b ON b.vec_id = d.doc_id + 1
         ORDER BY d.doc_id""")
-    }),
+    }, oracle =
+      """SELECT d.doc_id,
+        | CAST(len(list_distinct(list_transform(
+        |   range(1, len(string_split(lower(d.text), ' ')) - 1),
+        |   i -> string_split(lower(d.text), ' ')[i] || ' '
+        |     || string_split(lower(d.text), ' ')[i+1] || ' '
+        |     || string_split(lower(d.text), ' ')[i+2]))) AS BIGINT)
+        |   AS n_shingles,
+        | round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+        |   CAST(b.embedding AS DOUBLE[])), 6) AS next_cos
+        |FROM documents d
+        |JOIN embeddings a ON a.vec_id = d.doc_id
+        |JOIN embeddings b ON b.vec_id = d.doc_id + 1
+        |ORDER BY d.doc_id""".stripMargin),
 
     // Triangle census of the supplier co-purchase graph. Four at-scale
     // disciplines in one operator: (1) the bipartite projection's edge
@@ -579,7 +901,7 @@ object CorpusQ {
     // counting). Output is the one-row census: nodes, edges,
     // triangles, global closure in bp (3·tri·10⁴ DIV wedges — exact
     // integer, no double ratio).
-    "q157_triangle_census" -> ((s, dir) => {
+    Q("q157_triangle_census", (s, dir) => {
       // one EXPLICIT partkey repartition serves three operators: the
       // (sk,p) distinct runs in-place (HashPartitioning(p) satisfies
       // ClusteredDistribution(sk,p)), and the self-join needs no
@@ -638,88 +960,7 @@ object CorpusQ {
           when(col("wedges") > 0,
             ldiv(col("n_tri") * lit(30000L), col("wedges")))
             .as("closure_bp"))
-    }),
-
-    // Unicode accent folding (q82 normalizes to NFC — composed é stays
-    // é; this STRIPS diacritics é→e, the fold search indexes apply on
-    // top of NFC) — the text-normalization pass multilingual
-    // corpora run before tokenization. Accented text is SYNTHESIZED by
-    // vowel→accented-vowel translation (deterministic, 1:1 code
-    // points), then folded back with the engine's normalizer; the
-    // oracle folds with the SAME 5-char translate table (not DuckDB's
-    // strip_accents, which strips ALL diacritics — with it, a corpus
-    // that ever carried its own ü/ñ/è would silently diverge; r8
-    // ADVICE), so any drift in the fold table breaks both md5 columns
-    // while native accented corpus text passes through both sides
-    // identically. The fold is the
-    // builtin codegen `translate` (code-point table, no UDF) — a
-    // per-row projection that runs inside the scan at any corpus size.
-    // n_accents counts the injected code points (length is preserved
-    // 1:1, so it equals the vowel count).
-    "q264_accent_fold" -> ((s, dir) => {
-      val accented = translate(col("text"), "aeiou", "áéíóú")
-      val folded = translate(col("accented"),
-        "áéíóú", "aeiou")
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("text"), accented.as("accented"))
-        .select(col("doc_id"),
-          (length(col("text"))
-            - length(translate(col("text"), "aeiou", ""))).cast("long")
-            .as("n_accents"),
-          md5(col("accented").cast("binary")).as("accented_md5"),
-          md5(folded.cast("binary")).as("folded_md5"),
-          (folded === col("text")).as("fold_roundtrips"))
-        .orderBy("doc_id")
-    }),
-
-    // (source-pair vocabulary Jaccard is covered by
-    // q135_source_vocab_jaccard — kept single-registered to avoid a
-    // duplicate operator entry.)
-
-    // Collocation mining by lift — the PMI family with the log dropped
-    // so the statistic stays EXACT: lift(a,b) = P(ab)/(P(a)·P(b)) =
-    // c_ab·N_u² / (N_b·c_a·c_b), reported in ppm via one
-    // IntegralDivide over DECIMAL products (c_ab·N_u²·10⁶ wraps BIGINT
-    // far below bench SF). Bigram INSTANCES (not per-doc distinct)
-    // come from a codegen transform over the token array; unigram and
-    // bigram tables are vocab-sized with map-side combine; the scalar
-    // totals broadcast. Min-support 20 kills noise ties.
-    "q273_collocations" -> ((s, dir) => {
-      val dec38 = DecimalType(38, 0)
-      val base = t(s, dir, "documents")
-        .select(toks.as("tk"))
-        .filter(size(col("tk")) >= 2)
-        .localCheckpoint(false)
-      val bigrams = base.select(explode(expr(
-        "transform(sequence(1, size(tk) - 1), " +
-          "i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1)))"))
-        .as("bg"))
-      val cab = bigrams.groupBy("bg").agg(count(lit(1)).as("c_ab"))
-      val uni = base.select(explode(col("tk")).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("c"))
-      val nu = uni.agg(sum(col("c")).as("n_uni"))
-      val nb = cab.agg(sum(col("c_ab")).as("n_big"))
-      // both sides of the count joins are vocab-sized; no broadcast
-      // pin — a real corpus's vocabulary (tens of millions of types)
-      // outgrows a broadcast, and AQE still converts when small
-      cab.filter(col("c_ab") >= 20)
-        .withColumn("w_a", split(col("bg"), " ").getItem(0))
-        .withColumn("w_b", split(col("bg"), " ").getItem(1))
-        .join(uni.select(col("w").as("w_a"), col("c").as("c_a")), "w_a")
-        .join(uni.select(col("w").as("w_b"), col("c").as("c_b")), "w_b")
-        .crossJoin(broadcast(nu)).crossJoin(broadcast(nb))
-        .select(col("bg"), col("c_ab"), col("c_a"), col("c_b"),
-          ldiv(col("c_ab").cast(dec38) * col("n_uni") * col("n_uni")
-              * 1000000L,
-            col("n_big").cast(dec38) * col("c_a") * col("c_b"))
-            .as("lift_ppm"))
-        .orderBy(desc("lift_ppm"), asc("bg"))
-        .limit(20)
-    }),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q157_triangle_census" ->
+    }, oracle =
       """WITH sp AS (
         | SELECT DISTINCT l_suppkey AS sk, l_partkey AS p FROM lineitem),
         |pairs AS (
@@ -756,369 +997,39 @@ object CorpusQ {
         | CAST(CASE WHEN node.wedges > 0
         |   THEN tri.n_tri * 30000 // node.wedges END AS BIGINT)
         |   AS closure_bp
-        |FROM node, ecnt, tri""".stripMargin,
+        |FROM node, ecnt, tri""".stripMargin),
 
-    "q96_gopher_quality" ->
-      """WITH t AS (
-        | SELECT doc_id, string_split(lower(text), ' ') AS toks
-        | FROM documents),
-        |f AS (
-        | SELECT doc_id,
-        |  CAST(len(toks) AS BIGINT) AS n_words,
-        |  round(CAST(list_sum(list_transform(toks, w -> length(w)))
-        |    AS DOUBLE) / len(toks), 4) AS mean_word_len,
-        |  round(CAST(len(list_filter(toks,
-        |    w -> regexp_matches(w, '[a-z]'))) AS DOUBLE) / len(toks), 4)
-        |    AS alpha_frac,
-        |  CAST(len(list_filter(toks, w -> list_contains(
-        |    ['the','and','of','to','a','in','is','that','it','for'], w)))
-        |    AS BIGINT) AS stop_hits
-        | FROM t)
-        |SELECT *,
-        | (n_words BETWEEN 30 AND 90
-        |  AND mean_word_len BETWEEN 3.0 AND 4.6
-        |  AND stop_hits >= 2) AS keep
-        |FROM f ORDER BY doc_id""".stripMargin,
-
-    "q192_gate_dedup_interaction" -> (ScaleQ.dedupLabSql + """,
-        |tq AS (
-        | SELECT doc_id, string_split(lower(text), ' ') AS toks
-        | FROM documents),
-        |fq AS (
-        | SELECT doc_id,
-        |  (CAST(len(toks) AS BIGINT) BETWEEN 30 AND 90
-        |   AND round(CAST(list_sum(list_transform(toks,
-        |     w -> length(w))) AS DOUBLE) / len(toks), 4)
-        |     BETWEEN 3.0 AND 4.6
-        |   AND CAST(len(list_filter(toks, w -> list_contains(
-        |     ['the','and','of','to','a','in','is','that','it','for'],
-        |     w))) AS BIGINT) >= 2) AS keep
-        | FROM tq),
-        |j AS (
-        | SELECT fq.keep, lab.node IS NOT NULL AS is_dup
-        | FROM fq LEFT JOIN lab ON fq.doc_id = lab.node)
-        |SELECT keep, is_dup, CAST(count(*) AS BIGINT) AS n,
-        | CAST(count(*) * 10000 // (SELECT count(*) FROM j) AS BIGINT)
-        |   AS share_bp
-        |FROM j GROUP BY keep, is_dup
-        |ORDER BY keep, is_dup""".stripMargin),
-
-    "q200_corpus_report" -> {
-      val langSelects = graft.ops.TextOps.langMarkers.map { case (l, ws) =>
-        s"${TextQ.langCountSql(ws)} AS s_$l"
-      }.mkString(",\n  ")
-      s"""WITH f AS (
-         | SELECT source, lang,
-         |  string_split(lower(text), ' ') AS tk,
-         |  md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'))
-         |    AS fp,
-         |  $langSelects
-         | FROM documents),
-         |g AS (
-         | SELECT source, fp,
-         |  CAST(len(tk) AS BIGINT) AS n_tok,
-         |  (CAST(len(tk) AS BIGINT) BETWEEN 30 AND 90
-         |   AND round(CAST(list_sum(list_transform(tk,
-         |     w -> length(w))) AS DOUBLE) / len(tk), 4)
-         |     BETWEEN 3.0 AND 4.6
-         |   AND CAST(len(list_filter(tk, w -> list_contains(
-         |     ['the','and','of','to','a','in','is','that','it','for'],
-         |     w))) AS BIGINT) >= 2) AS keep,
-         |  (${TextQ.langPredSql}) = lang AS lang_ok
-         | FROM f)
-         |SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         | CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-         | CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-         | CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) * 10000
-         |   // count(*) AS BIGINT) AS keep_bp,
-         | CAST((count(*) - count(DISTINCT fp)) * 10000
-         |   // count(*) AS BIGINT) AS exact_dup_bp,
-         | CAST(sum(CASE WHEN lang_ok THEN 1 ELSE 0 END) * 10000
-         |   // count(*) AS BIGINT) AS langid_acc_bp
-         |FROM g""".stripMargin
-    },
-
-    "q97_decontaminate" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   range(1, len(string_split(lower(text), ' ')) - 6),
-        |   i -> array_to_string(
-        |     string_split(lower(text), ' ')[i:i+7], ' '))) AS shs
-        | FROM documents),
-        |sh AS (SELECT doc_id, unnest(shs) AS g FROM s),
-        |bench AS (SELECT DISTINCT g FROM sh WHERE doc_id % 29 = 0)
-        |SELECT sh.doc_id, count(DISTINCT sh.g) AS n_shared
-        |FROM sh JOIN bench ON sh.g = bench.g
-        |WHERE sh.doc_id % 29 <> 0
-        |GROUP BY sh.doc_id ORDER BY sh.doc_id""".stripMargin,
-
-    "q98_repetition" ->
-      """WITH c AS (
-        | SELECT doc_id, w, count(*) AS c FROM (
-        |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
-        |  FROM documents)
-        | GROUP BY doc_id, w)
-        |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_words,
-        | CAST((sum(c) - count(*)) * 10000 // sum(c) AS BIGINT) AS dup_bp,
-        | CAST(max(c) * 10000 // sum(c) AS BIGINT) AS top_bp
-        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q99_sliding_window" ->
-      """WITH e AS (
-        | SELECT make_timestamp(
-        |   ((epoch_us(ts) // 900000000) - k.k) * 900000000) AS w_start,
-        |  value
-        | FROM events, (SELECT unnest([0, 1, 2, 3]) AS k) k)
-        |SELECT w_start, count(*) AS n,
-        | round(CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE), 4)
-        |   AS sum_value
-        |FROM e GROUP BY w_start ORDER BY w_start""".stripMargin,
-
-    "q100_pagerank" ->
-      """WITH e0 AS (
-        | SELECT DISTINCT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst
-        | FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |e AS (SELECT src, dst FROM e0
-        |      UNION ALL SELECT dst, src FROM e0),
-        |d AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
-        |nn AS (SELECT count(*) AS n FROM d),
-        |r0 AS (SELECT src AS node, CAST(1 AS DOUBLE) / (SELECT n FROM nn)
-        |       AS r FROM d),
-        |r1 AS (
-        | SELECT e.dst AS node,
-        |  CAST(0.15 AS DOUBLE) / (SELECT n FROM nn)
-        |   + CAST(0.85 AS DOUBLE) * CAST(sum(CAST(r0.r / d.deg
-        |       AS DECIMAL(38,18))) AS DOUBLE) AS r
-        | FROM e JOIN d USING (src) JOIN r0 ON r0.node = e.src
-        | GROUP BY e.dst),
-        |r2 AS (
-        | SELECT e.dst AS node,
-        |  CAST(0.15 AS DOUBLE) / (SELECT n FROM nn)
-        |   + CAST(0.85 AS DOUBLE) * CAST(sum(CAST(r1.r / d.deg
-        |       AS DECIMAL(38,18))) AS DOUBLE) AS r
-        | FROM e JOIN d USING (src) JOIN r1 ON r1.node = e.src
-        | GROUP BY e.dst),
-        |r3 AS (
-        | SELECT e.dst AS node,
-        |  CAST(0.15 AS DOUBLE) / (SELECT n FROM nn)
-        |   + CAST(0.85 AS DOUBLE) * CAST(sum(CAST(r2.r / d.deg
-        |       AS DECIMAL(38,18))) AS DOUBLE) AS r
-        | FROM e JOIN d USING (src) JOIN r2 ON r2.node = e.src
-        | GROUP BY e.dst)
-        |SELECT node, round(r * (SELECT n FROM nn), 6) AS pr_scaled
-        |FROM r3 ORDER BY node""".stripMargin,
-
-    "q101_containment" ->
-      """WITH s AS (
-        | SELECT doc_id, string_split(lower(text), ' ') AS toks
-        | FROM documents),
-        |sh AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   range(1, len(toks) - 1),
-        |   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shs
-        | FROM s),
-        |p AS (
-        | SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  round(CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
-        |    / len(a.shs), 4) AS containment
-        | FROM sh a JOIN sh b ON a.doc_id <> b.doc_id)
-        |SELECT a_id, b_id, containment FROM p
-        |WHERE containment >= 0.8 ORDER BY a_id, b_id""".stripMargin,
-
-    "q102_bpe_merges" ->
-      """WITH v AS (
-        | SELECT w, count(*) AS wc FROM (
-        |  SELECT unnest(string_split(lower(text), ' ')) AS w
-        |  FROM documents)
-        | GROUP BY w HAVING length(w) >= 2),
-        |p AS (
-        | SELECT unnest(list_transform(range(1, length(w)),
-        |   i -> substr(w, CAST(i AS INTEGER), 2))) AS pair, wc
-        | FROM v)
-        |SELECT pair, CAST(sum(wc) AS BIGINT) AS n FROM p
-        |GROUP BY pair ORDER BY n DESC, pair LIMIT 30""".stripMargin,
-
-    "q103_inverted_index" ->
-      """SELECT w,
-        | count(DISTINCT doc_id) AS df,
-        | count(*) AS tf,
-        | min(doc_id) AS first_doc,
-        | md5(array_to_string(list_transform(
-        |   list_sort(list(DISTINCT doc_id)),
-        |   d -> CAST(d AS VARCHAR)), ',')) AS postings_md5
-        |FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
-        |      FROM documents)
-        |GROUP BY w ORDER BY w""".stripMargin,
-
-    "q104_chi_square" ->
-      """WITH o AS (
-        | SELECT lang, source, count(*) AS o FROM documents GROUP BY 1, 2),
-        |r AS (SELECT lang, count(*) AS r FROM documents GROUP BY 1),
-        |c AS (SELECT source, count(*) AS c FROM documents GROUP BY 1),
-        |nn AS (SELECT count(*) AS n FROM documents),
-        |t AS (
-        | SELECT o.lang, o.o,
-        |  CAST(CAST(CAST(o.o AS DECIMAL(19,0)) * nn.n
-        |       - CAST(r.r AS DECIMAL(19,0)) * c.c AS DECIMAL(19,0))
-        |     * CAST(CAST(o.o AS DECIMAL(19,0)) * nn.n
-        |       - CAST(r.r AS DECIMAL(19,0)) * c.c AS DECIMAL(19,0))
-        |     AS DOUBLE)
-        |   / CAST(CAST(nn.n AS DECIMAL(19,0)) * r.r * c.c AS DOUBLE)
-        |   AS term
-        | FROM o JOIN r USING (lang) JOIN c USING (source), nn)
-        |SELECT lang, CAST(sum(o) AS BIGINT) AS n_docs,
-        | round(CAST(sum(CAST(term AS DECIMAL(38,12))) AS DOUBLE), 6)
-        |   AS chi2_part
-        |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // The documents are pure printable ASCII (asserted in CorpusQSpec),
-    // so UTF-8 byte k of content == ord(substr(text, k+1, 1)) and every
-    // checksum is exact integer arithmetic.
-    "q105_multimodal_pipeline" ->
-      """WITH m AS (
-        | SELECT doc_id AS media_id,
-        |  CASE WHEN doc_id % 3 = 0 THEN 'image'
-        |       WHEN doc_id % 3 = 1 THEN 'audio'
-        |       ELSE 'video' END AS kind,
-        |  text, length(text) AS len
-        | FROM documents)
-        |SELECT media_id, kind, CAST(len AS BIGINT) AS n_bytes,
-        | CAST(list_sum(list_transform(range(0, 64),
-        |   i -> ord(substr(text, CAST(i * len // 64 AS INTEGER) + 1, 1))))
-        |   AS BIGINT) AS resize_sum,
-        | CAST(CASE WHEN kind = 'video' THEN 4 ELSE 0 END AS BIGINT)
-        |   AS n_frames,
-        | CAST(CASE WHEN kind = 'video' THEN
-        |  list_sum(list_transform(range(0, 4), f ->
-        |   list_sum(list_transform(
-        |     range(CAST(f * len // 4 AS INTEGER) + 1,
-        |           least(CAST(f * len // 4 AS INTEGER) + 32, len) + 1),
-        |     i -> ord(substr(text, CAST(i AS INTEGER), 1))))))
-        | END AS BIGINT) AS frames_sum
-        |FROM m ORDER BY media_id""".stripMargin,
-
-    "q111_dataset_split" ->
-      """WITH s AS (
-        | SELECT doc_id,
-        |  CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'cccc'
-        |        THEN 'train'
-        |       WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666'
-        |        THEN 'val'
-        |       ELSE 'test' END AS split
-        | FROM documents)
-        |SELECT split, count(*) AS n_docs,
-        | CAST(sum(doc_id) AS BIGINT) AS id_checksum
-        |FROM s GROUP BY split ORDER BY split""".stripMargin,
-
-    // quadratic shingle-pair oracle (same family as q16/q56): exact at
-    // the driver's sf0.01 gate; skip in local sf0.1 checks
-    "q112_temporal_novelty" ->
-      """WITH s AS (
-        | SELECT doc_id, string_split(lower(text), ' ') AS toks
-        | FROM documents),
-        |sh AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   range(1, len(toks) - 1),
-        |   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shs
-        | FROM s),
-        |p AS (
-        | SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  len(list_intersect(a.shs, b.shs)) AS inter,
-        |  len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))
-        |    AS un
-        | FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
-        |rep AS (
-        | SELECT DISTINCT b_id AS doc_id FROM p
-        | WHERE round(CAST(inter AS DOUBLE) / un, 4) >= 0.5),
-        |d AS (
-        | SELECT doc_id,
-        |  least(doc_id * 10 // ((SELECT max(doc_id) + 1 FROM documents)),
-        |    9) AS decile,
-        |  CASE WHEN doc_id IN (SELECT doc_id FROM rep) THEN 1 ELSE 0 END
-        |    AS rep
-        | FROM documents)
-        |SELECT decile, count(*) AS n_docs,
-        | CAST(sum(rep) AS BIGINT) AS n_repeats,
-        | round(CAST(sum(rep) AS DOUBLE) / count(*), 4) AS repeat_rate
-        |FROM d GROUP BY decile ORDER BY decile""".stripMargin,
-
-    "q113_domain_cap" ->
-      """WITH r AS (
-        | SELECT source, doc_id,
-        |  row_number() OVER (PARTITION BY source
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-        | FROM documents)
-        |SELECT source, count(*) AS n_docs,
-        | CAST(sum(CASE WHEN rn <= 50 THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS n_kept,
-        | CAST(sum(CASE WHEN rn <= 50 THEN doc_id ELSE 0 END) AS BIGINT)
-        |   AS kept_checksum
-        |FROM r GROUP BY source ORDER BY source""".stripMargin,
-
-    // quadratic shingle oracle (new×old restricted): exact at the
-    // driver's sf0.01 gate; include in the sf0.1 skip set
-    "q118_incremental_dedup" ->
-      """WITH s AS (
-        | SELECT doc_id, string_split(lower(text), ' ') AS toks
-        | FROM documents),
-        |sh AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   range(1, len(toks) - 1),
-        |   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shs
-        | FROM s),
-        |mx AS (SELECT max(doc_id) + 1 AS m FROM documents),
-        |p AS (
-        | SELECT b.doc_id AS b_id,
-        |  round(CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
-        |   / (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))),
-        |   4) AS j
-        | FROM sh a, sh b, mx
-        | WHERE a.doc_id < (mx.m * 9) // 10
-        |   AND b.doc_id >= (mx.m * 9) // 10)
-        |SELECT b_id AS doc_id, count(*) AS n_dups, max(j) AS best_j
-        |FROM p WHERE j >= 0.5
-        |GROUP BY b_id ORDER BY doc_id""".stripMargin,
-
-    "q126_char_histogram" ->
-      """WITH c AS (
-        | SELECT ch, count(*) AS n FROM (
-        |  SELECT unnest(string_split(text, '')) AS ch FROM documents)
-        | WHERE length(ch) = 1 GROUP BY ch)
-        |SELECT ch, n,
-        | round(CAST(n AS DOUBLE) / (SELECT sum(n) FROM c), 6) AS share
-        |FROM c ORDER BY n DESC, ch LIMIT 20""".stripMargin,
-
-    "q121_embedding_profile" ->
-      """WITH v AS (
-        | SELECT len(embedding) AS dim,
-        |  sqrt(list_sum(list_transform(embedding,
-        |    v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))) AS l2
-        | FROM embeddings)
-        |SELECT count(*) AS n_vecs,
-        | CAST(count(DISTINCT dim) AS BIGINT) AS n_dims,
-        | CAST(min(dim) AS BIGINT) AS dim,
-        | CAST(sum(CASE WHEN l2 = 0.0 THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS n_zero,
-        | round(quantile_cont(l2, 0.5), 4) AS norm_p50,
-        | round(quantile_cont(l2, 0.95), 4) AS norm_p95
-        |FROM v""".stripMargin,
-
-    "q114_sql_surface" ->
-      """SELECT d.doc_id,
-        | CAST(len(list_distinct(list_transform(
-        |   range(1, len(string_split(lower(d.text), ' ')) - 1),
-        |   i -> string_split(lower(d.text), ' ')[i] || ' '
-        |     || string_split(lower(d.text), ' ')[i+1] || ' '
-        |     || string_split(lower(d.text), ' ')[i+2]))) AS BIGINT)
-        |   AS n_shingles,
-        | round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |   CAST(b.embedding AS DOUBLE[])), 6) AS next_cos
-        |FROM documents d
-        |JOIN embeddings a ON a.vec_id = d.doc_id
-        |JOIN embeddings b ON b.vec_id = d.doc_id + 1
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q264_accent_fold" ->
+    // Unicode accent folding (q82 normalizes to NFC — composed é stays
+    // é; this STRIPS diacritics é→e, the fold search indexes apply on
+    // top of NFC) — the text-normalization pass multilingual
+    // corpora run before tokenization. Accented text is SYNTHESIZED by
+    // vowel→accented-vowel translation (deterministic, 1:1 code
+    // points), then folded back with the engine's normalizer; the
+    // oracle folds with the SAME 5-char translate table (not DuckDB's
+    // strip_accents, which strips ALL diacritics — with it, a corpus
+    // that ever carried its own ü/ñ/è would silently diverge; r8
+    // ADVICE), so any drift in the fold table breaks both md5 columns
+    // while native accented corpus text passes through both sides
+    // identically. The fold is the
+    // builtin codegen `translate` (code-point table, no UDF) — a
+    // per-row projection that runs inside the scan at any corpus size.
+    // n_accents counts the injected code points (length is preserved
+    // 1:1, so it equals the vowel count).
+    Q("q264_accent_fold", (s, dir) => {
+      val accented = translate(col("text"), "aeiou", "áéíóú")
+      val folded = translate(col("accented"),
+        "áéíóú", "aeiou")
+      t(s, dir, "documents")
+        .select(col("doc_id"), col("text"), accented.as("accented"))
+        .select(col("doc_id"),
+          (length(col("text"))
+            - length(translate(col("text"), "aeiou", ""))).cast("long")
+            .as("n_accents"),
+          md5(col("accented").cast("binary")).as("accented_md5"),
+          md5(folded.cast("binary")).as("folded_md5"),
+          (folded === col("text")).as("fold_roundtrips"))
+        .orderBy("doc_id")
+    }, oracle =
       """WITH a AS (
         | SELECT doc_id, text,
         |  translate(text, 'aeiou', 'áéíóú') AS accented
@@ -1129,10 +1040,52 @@ object CorpusQ {
         | md5(accented) AS accented_md5,
         | md5(translate(accented, 'áéíóú', 'aeiou')) AS folded_md5,
         | translate(accented, 'áéíóú', 'aeiou') = text AS fold_roundtrips
-        |FROM a ORDER BY doc_id""".stripMargin,
+        |FROM a ORDER BY doc_id""".stripMargin),
 
+    // (source-pair vocabulary Jaccard is covered by
+    // q135_source_vocab_jaccard — kept single-registered to avoid a
+    // duplicate operator entry.)
 
-    "q273_collocations" ->
+    // Collocation mining by lift — the PMI family with the log dropped
+    // so the statistic stays EXACT: lift(a,b) = P(ab)/(P(a)·P(b)) =
+    // c_ab·N_u² / (N_b·c_a·c_b), reported in ppm via one
+    // IntegralDivide over DECIMAL products (c_ab·N_u²·10⁶ wraps BIGINT
+    // far below bench SF). Bigram INSTANCES (not per-doc distinct)
+    // come from a codegen transform over the token array; unigram and
+    // bigram tables are vocab-sized with map-side combine; the scalar
+    // totals broadcast. Min-support 20 kills noise ties.
+    Q("q273_collocations", (s, dir) => {
+      val dec38 = DecimalType(38, 0)
+      val base = t(s, dir, "documents")
+        .select(toks.as("tk"))
+        .filter(size(col("tk")) >= 2)
+        .localCheckpoint(false)
+      val bigrams = base.select(explode(expr(
+        "transform(sequence(1, size(tk) - 1), " +
+          "i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1)))"))
+        .as("bg"))
+      val cab = bigrams.groupBy("bg").agg(count(lit(1)).as("c_ab"))
+      val uni = base.select(explode(col("tk")).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("c"))
+      val nu = uni.agg(sum(col("c")).as("n_uni"))
+      val nb = cab.agg(sum(col("c_ab")).as("n_big"))
+      // both sides of the count joins are vocab-sized; no broadcast
+      // pin — a real corpus's vocabulary (tens of millions of types)
+      // outgrows a broadcast, and AQE still converts when small
+      cab.filter(col("c_ab") >= 20)
+        .withColumn("w_a", split(col("bg"), " ").getItem(0))
+        .withColumn("w_b", split(col("bg"), " ").getItem(1))
+        .join(uni.select(col("w").as("w_a"), col("c").as("c_a")), "w_a")
+        .join(uni.select(col("w").as("w_b"), col("c").as("c_b")), "w_b")
+        .crossJoin(broadcast(nu)).crossJoin(broadcast(nb))
+        .select(col("bg"), col("c_ab"), col("c_a"), col("c_b"),
+          ldiv(col("c_ab").cast(dec38) * col("n_uni") * col("n_uni")
+              * 1000000L,
+            col("n_big").cast(dec38) * col("c_a") * col("c_b"))
+            .as("lift_ppm"))
+        .orderBy(desc("lift_ppm"), asc("bg"))
+        .limit(20)
+    }, oracle =
       """WITH tk AS (
         | SELECT string_split(lower(text), ' ') AS tk FROM documents
         | WHERE len(string_split(lower(text), ' ')) >= 2),
@@ -1154,6 +1107,6 @@ object CorpusQ {
         | JOIN uni a ON a.w = string_split(cab.bg, ' ')[1]
         | JOIN uni b ON b.w = string_split(cab.bg, ' ')[2], nu, nb
         |WHERE cab.c_ab >= 20
-        |ORDER BY lift_ppm DESC, bg LIMIT 20""".stripMargin,
+        |ORDER BY lift_ppm DESC, bg LIMIT 20""".stripMargin),
   )
 }

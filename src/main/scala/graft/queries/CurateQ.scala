@@ -17,14 +17,14 @@ import graft.multimodal.BinaryOps.{pixelChecksum, sampleChecksum}
   */
 object CurateQ {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val all: Seq[Q] = Seq(
     // Duplicate-bigram fraction (the Gopher repetition family, n=2):
     // 1 − distinct/total bigrams, in exact basis points. NO explode and
     // no shuffle — total bigrams is size(toks)−1 and distinct bigrams is
     // the codegen'd ShinglesExpr's array length, so the whole signal is
     // one per-row projection over the scan (the cheapest possible shape
     // at 100 TB: embarrassingly parallel, nothing moves).
-    "q131_dup_bigram" -> ((s, dir) => {
+    Q("q131_dup_bigram", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"), toks(col("text")).as("tk"))
         .select(col("doc_id"),
@@ -36,7 +36,20 @@ object CurateQ {
           ldiv((col("n_bigrams") - col("n_distinct")) * lit(10000L),
             col("n_bigrams")).as("dup_bp"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH t AS (
+        | SELECT doc_id, string_split(lower(text), ' ') AS toks
+        | FROM documents),
+        |b AS (
+        | SELECT doc_id,
+        |  CAST(len(toks) - 1 AS BIGINT) AS n_bigrams,
+        |  CAST(len(list_distinct(list_transform(range(1, len(toks)),
+        |    i -> toks[i] || ' ' || toks[i+1]))) AS BIGINT) AS n_distinct
+        | FROM t WHERE len(toks) >= 2)
+        |SELECT doc_id, n_bigrams,
+        | CAST((n_bigrams - n_distinct) * 10000 // n_bigrams AS BIGINT)
+        |   AS dup_bp
+        |FROM b ORDER BY doc_id""".stripMargin),
 
     // Hapax-legomenon share per source: the fraction of a source's
     // vocabulary that occurs exactly once — the classic lexical-richness
@@ -44,7 +57,7 @@ object CurateQ {
     // directions). The corpus collapses to (source, word) partials
     // map-side; only vocab-sized rows shuffle, then a per-source rollup
     // of a handful of rows.
-    "q132_hapax_share" -> ((s, dir) => {
+    Q("q132_hapax_share", (s, dir) => {
       t(s, dir, "documents")
         .select(col("source"), explode(toks(col("text"))).as("w"))
         .groupBy("source", "w").agg(count(lit(1)).as("c"))
@@ -54,26 +67,43 @@ object CurateQ {
         .select(col("source"), col("vocab"), col("hapax"),
           ldiv(col("hapax") * lit(10000L), col("vocab")).as("hapax_bp"))
         .orderBy("source")
-    }),
+    }, oracle =
+      """WITH c AS (
+        | SELECT source, w, count(*) AS c FROM (
+        |  SELECT source, unnest(string_split(lower(text), ' ')) AS w
+        |  FROM documents)
+        | GROUP BY source, w)
+        |SELECT source, CAST(count(*) AS BIGINT) AS vocab,
+        | CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
+        | CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) * 10000 // count(*)
+        |   AS BIGINT) AS hapax_bp
+        |FROM c GROUP BY source ORDER BY source""".stripMargin),
 
     // Near-dup cluster size histogram: the dedup run's report card (how
     // much mass sits in 2-doc mirrors vs 50-doc boilerplate farms
     // decides the dedup strategy). Reuses the session-shared exact-
     // Jaccard edge set (one computation serves q56/q72/q86/q112 and
     // this); after the labels, two vocabulary-sized aggregates.
-    "q133_cluster_size_hist" -> ((s, dir) => {
+    Q("q133_cluster_size_hist", (s, dir) => {
       graft.ops.DedupOps.connectedComponents(ScaleQ.dedupEdges(s, dir))
         .groupBy("cluster").agg(count(lit(1)).as("sz"))
         .groupBy("sz").agg(count(lit(1)).as("n_clusters"))
         .orderBy("sz")
-    }),
+    }, oracle =
+      // quadratic shingle-pair oracle (same family as q16/q56): exact at
+      // the driver's sf0.01 gate; skip in local sf0.1 checks
+      ScaleQ.dedupLabSql + "\n" +
+      """SELECT sz, CAST(count(*) AS BIGINT) AS n_clusters
+        |FROM (SELECT cluster, CAST(count(*) AS BIGINT) AS sz
+        |      FROM lab GROUP BY cluster)
+        |GROUP BY sz ORDER BY sz""".stripMargin),
 
     // Per-user median inter-event gap (exact lower-median in integer
     // MICROseconds — no percentile interpolation, no doubles): the
     // engagement-cadence signal behind session-timeout tuning. Both
     // windows partition by user_id, so the plan pays ONE hash exchange
     // and parallelizes across users; no global ordering anywhere.
-    "q134_gap_median" -> ((s, dir) => {
+    Q("q134_gap_median", (s, dir) => {
       val wLag = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val gaps = t(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"))
@@ -92,7 +122,20 @@ object CurateQ {
         .select(col("user_id"), col("n").as("n_gaps"),
           col("gap_us").as("median_gap_us"))
         .orderBy("user_id")
-    }),
+    }, oracle =
+      """WITH g AS (
+        | SELECT user_id,
+        |  epoch_us(ts) - lag(epoch_us(ts)) OVER (
+        |    PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
+        | FROM events),
+        |r AS (
+        | SELECT user_id, gap_us,
+        |  row_number() OVER (PARTITION BY user_id ORDER BY gap_us) AS rn,
+        |  count(*) OVER (PARTITION BY user_id) AS n
+        | FROM g WHERE gap_us IS NOT NULL)
+        |SELECT user_id, CAST(n AS BIGINT) AS n_gaps,
+        | CAST(gap_us AS BIGINT) AS median_gap_us
+        |FROM r WHERE rn = (n + 1) // 2 ORDER BY user_id""".stripMargin),
 
     // Audio windowed-energy profile through the REAL multimodal
     // plumbing: the documents' bytes stand in for PCM, BinaryOps
@@ -101,7 +144,7 @@ object CurateQ {
     // arithmetic — so the whole pipeline (binary column → typed Dataset
     // → flatMap → sort) is driver-hash-checkable, like q105's
     // resize/frame path.
-    "q136_audio_energy" -> ((s, dir) => {
+    Q("q136_audio_energy", (s, dir) => {
       val media = t(s, dir, "documents").select(
         col("doc_id").as("media_id"),
         when(col("doc_id") % 3 === 0, "image")
@@ -111,7 +154,23 @@ object CurateQ {
       graft.multimodal.BinaryOps.windowEnergy(media, nWindows = 8)
         .toDF()
         .orderBy("media_id", "window_idx")
-    }),
+    }, oracle =
+      // documents are pure printable ASCII (asserted in CorpusQSpec), so
+      // byte k == ord(substr(text, k+1, 1)) and the energy sums are exact
+      """WITH m AS (
+        | SELECT doc_id AS media_id, text, length(text) AS len
+        | FROM documents WHERE doc_id % 3 = 1 AND length(text) > 0),
+        |w AS (SELECT unnest(range(0, 8)) AS widx)
+        |SELECT m.media_id, CAST(w.widx AS INTEGER) AS window_idx,
+        | CAST((w.widx + 1) * m.len // 8 - w.widx * m.len // 8 AS INTEGER)
+        |   AS n_samples,
+        | CAST(coalesce(list_sum(list_transform(
+        |   range(CAST(w.widx * m.len // 8 AS INTEGER) + 1,
+        |         CAST((w.widx + 1) * m.len // 8 AS INTEGER) + 1),
+        |   i -> ord(substr(m.text, CAST(i AS INTEGER), 1))
+        |      * ord(substr(m.text, CAST(i AS INTEGER), 1)))), 0)
+        |   AS BIGINT) AS energy
+        |FROM m, w ORDER BY media_id, window_idx""".stripMargin),
 
     // ViT-style patch extraction through the same multimodal plumbing
     // as q136/q105: image-kind blobs flatMap into fixed 32-byte patches
@@ -121,7 +180,7 @@ object CurateQ {
     // transposed patch layout produces the right sums but the wrong
     // hash. At 100 TB this is the embedding-stage feed shape: per-row
     // fan-out bounded by blob size, no shuffle until the consumer.
-    "q191_image_patchify" -> ((s, dir) => {
+    Q("q191_image_patchify", (s, dir) => {
       // image rows pass a REAL ImageIO roundtrip first (PNG/BMP,
       // 1×len gray so pixels == source bytes): the patch grid below is
       // computed over DECODED pixels, and a codec defect breaks the
@@ -137,7 +196,30 @@ object CurateQ {
       graft.multimodal.BinaryOps.patchify(media, patchBytes = 32)
         .toDF()
         .orderBy("media_id", "patch_idx")
-    }),
+    }, oracle =
+      // same ASCII premise as q136: byte k == ord(substr(text, k+1, 1))
+      """WITH m AS (
+        | SELECT doc_id AS media_id, text, length(text) AS len
+        | FROM documents WHERE doc_id % 3 = 0 AND length(text) > 0),
+        |p AS (
+        | SELECT media_id, text, len,
+        |  unnest(range(0, (len + 31) // 32)) AS pidx
+        | FROM m)
+        |SELECT media_id, CAST(pidx AS INTEGER) AS patch_idx,
+        | CAST(least(pidx * 32 + 32, len) - pidx * 32 AS INTEGER)
+        |   AS n_bytes,
+        | CAST(coalesce(list_sum(list_transform(
+        |   range(CAST(pidx * 32 AS INTEGER) + 1,
+        |         CAST(least(pidx * 32 + 32, len) AS INTEGER) + 1),
+        |   i -> ord(substr(text, CAST(i AS INTEGER), 1)))), 0)
+        |   AS BIGINT) AS byte_sum,
+        | CAST(coalesce(list_sum(list_transform(
+        |   range(CAST(pidx * 32 AS INTEGER) + 1,
+        |         CAST(least(pidx * 32 + 32, len) AS INTEGER) + 1),
+        |   i -> (i - pidx * 32)
+        |      * ord(substr(text, CAST(i AS INTEGER), 1)))), 0)
+        |   AS BIGINT) AS pos_checksum
+        |FROM p ORDER BY media_id, patch_idx""".stripMargin),
 
     // The image DECODER itself under the driver hash: each image-kind
     // doc is encoded executor-side as a real PNG (even ids) or BMP
@@ -149,7 +231,7 @@ object CurateQ {
     // stride errors in the decoder all surface as hash mismatches.
     // fmt rides along so a codec misroute can't hide. Per-row executor
     // work, no shuffle — the 100 TB envelope of the other codecs.
-    "q203_image_decode" -> ((s, dir) => {
+    Q("q203_image_decode", (s, dir) => {
       import s.implicits._
       docText(s, dir, col("doc_id") % 3 === 0 && length(col("text")) > 0)
         .map { case (id, text) =>
@@ -164,7 +246,22 @@ object CurateQ {
         }
         .toDF("doc_id", "fmt", "width", "height", "pix_sum", "pos_checksum")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // same ASCII premise as q136/q191: pixel k == ord(substr(text,k+1,1))
+      // — the roundtrip is lossless (PNG/gray-palette BMP), so the oracle
+      // never sees a codec byte
+      """SELECT doc_id,
+        | CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'bmp' END AS fmt,
+        | CAST(length(text) AS BIGINT) AS width,
+        | CAST(1 AS BIGINT) AS height,
+        | CAST(list_sum(list_transform(range(1, length(text) + 1),
+        |   i -> ord(substr(text, CAST(i AS INTEGER), 1)))) AS BIGINT)
+        |   AS pix_sum,
+        | CAST(list_sum(list_transform(range(1, length(text) + 1),
+        |   i -> i * ord(substr(text, CAST(i AS INTEGER), 1)))) AS BIGINT)
+        |   AS pos_checksum
+        |FROM documents WHERE doc_id % 3 = 0 AND length(text) > 0
+        |ORDER BY doc_id""".stripMargin),
 
     // The audio DECODER under the driver hash — q203's pattern for the
     // audio half of the seam: each audio-kind doc becomes real PCM16
@@ -174,7 +271,7 @@ object CurateQ {
     // reconstructs every sample from the text, so an endianness flip,
     // a header misparse or an off-by-one in the data chunk shifts a
     // sample and breaks the hash. Per-row executor work, no shuffle.
-    "q217_wav_decode" -> ((s, dir) => {
+    Q("q217_wav_decode", (s, dir) => {
       import s.implicits._
       docText(s, dir, col("doc_id") % 3 === 1 && length(col("text")) > 0)
         .map { case (id, text) =>
@@ -195,7 +292,23 @@ object CurateQ {
         .toDF("doc_id", "sample_rate", "n_samples", "amp_sum",
           "pos_checksum", "peak_abs")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // sample k == ord(char k)·257 − 32768: the roundtrip is lossless
+      // PCM16, so the oracle reconstructs every sample from the text
+      """SELECT doc_id,
+        | CAST(8000 AS BIGINT) AS sample_rate,
+        | CAST(length(text) AS BIGINT) AS n_samples,
+        | CAST(list_sum(list_transform(range(1, length(text) + 1),
+        |   i -> ord(substr(text, CAST(i AS INTEGER), 1)) * 257 - 32768))
+        |   AS BIGINT) AS amp_sum,
+        | CAST(list_sum(list_transform(range(1, length(text) + 1),
+        |   i -> i * (ord(substr(text, CAST(i AS INTEGER), 1)) * 257
+        |     - 32768))) AS BIGINT) AS pos_checksum,
+        | CAST(list_max(list_transform(range(1, length(text) + 1),
+        |   i -> abs(ord(substr(text, CAST(i AS INTEGER), 1)) * 257
+        |     - 32768))) AS BIGINT) AS peak_abs
+        |FROM documents WHERE doc_id % 3 = 1 AND length(text) > 0
+        |ORDER BY doc_id""".stripMargin),
 
     // The video DECODER under the driver hash — completes the media
     // trio (q203 image, q217 audio): each video-kind doc becomes a
@@ -206,7 +319,7 @@ object CurateQ {
     // stride and rows are stored bottom-up, so a flip or stride error
     // in the decoder shifts bytes and breaks the hash. Per-row
     // executor work, no shuffle.
-    "q220_avi_frames" -> ((s, dir) => {
+    Q("q220_avi_frames", (s, dir) => {
       import s.implicits._
       docText(s, dir, col("doc_id") % 3 === 2 && length(col("text")) > 0)
         .flatMap { case (id, text) =>
@@ -227,13 +340,37 @@ object CurateQ {
         }
         .toDF("doc_id", "n_frames", "frame_idx", "pix_sum", "pos_checksum")
         .orderBy("doc_id", "frame_idx")
-    }),
+    }, oracle =
+      // frame f, BGR position p: byte == ord(char ((f·45+p) mod len)) —
+      // the DIB roundtrip is lossless, so the oracle never sees a
+      // container byte; only even frames (the sample) are reported
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len,
+        |  3 + doc_id % 3 AS nf
+        | FROM documents WHERE doc_id % 3 = 2 AND length(text) > 0),
+        |fr AS (
+        | SELECT doc_id, text, len, nf, unnest(range(0, nf)) AS f
+        | FROM d),
+        |px AS (
+        | SELECT doc_id, nf, f, text, len, unnest(range(0, 45)) AS p
+        | FROM fr WHERE f % 2 = 0),
+        |v AS (
+        | SELECT doc_id, nf, f, p,
+        |  ord(substr(text,
+        |   CAST((f * 45 + p) % len + 1 AS INTEGER), 1)) AS v
+        | FROM px)
+        |SELECT doc_id, CAST(min(nf) AS BIGINT) AS n_frames,
+        | CAST(f AS BIGINT) AS frame_idx,
+        | CAST(sum(v) AS BIGINT) AS pix_sum,
+        | CAST(sum((p + 1) * v) AS BIGINT) AS pos_checksum
+        |FROM v GROUP BY doc_id, f
+        |ORDER BY doc_id, frame_idx""".stripMargin),
 
     // Language-ID confusion matrix: the heuristic's predictions against
     // the table's labeled lang column — the evaluation every langid
     // gate needs before it filters a corpus. One scan (the 25 marker
     // counts are codegen'd CountInSetExpr loops), one tiny aggregate.
-    "q137_langid_confusion" -> ((s, dir) => {
+    Q("q137_langid_confusion", (s, dir) => {
       val tk = graft.ops.TextOps.tokens(col("text"))
       t(s, dir, "documents")
         .select(col("lang"),
@@ -241,6 +378,16 @@ object CurateQ {
             graft.ops.TextOps.langScores(tk)).as("pred_lang"))
         .groupBy("lang", "pred_lang").agg(count(lit(1)).as("n"))
         .orderBy("lang", "pred_lang")
+    }, oracle = {
+      val langSelects = graft.ops.TextOps.langMarkers.map { case (l, ws) =>
+        s"${TextQ.langCountSql(ws)} AS s_$l"
+      }.mkString(",\n  ")
+      s"""WITH feat AS (
+         | SELECT lang, $langSelects FROM documents),
+         |lp AS (SELECT lang, ${TextQ.langPredSql} AS pred_lang FROM feat)
+         |SELECT lang, pred_lang, count(*) AS n
+         |FROM lp GROUP BY lang, pred_lang
+         |ORDER BY lang, pred_lang""".stripMargin
     }),
 
     // Tokenizer vocabulary coverage: out-of-vocabulary token rate per
@@ -255,7 +402,7 @@ object CurateQ {
     // map-side-combined (source, word) rollup, then a left join
     // against the broadcast vocab and a source-sized aggregate. Rates
     // in integer bp via DIV.
-    "q197_vocab_oov" -> ((s, dir) => {
+    Q("q197_vocab_oov", (s, dir) => {
       val tokc = t(s, dir, "documents")
         .select(col("source"), explode(toks(col("text"))).as("w"))
         .groupBy("source", "w").agg(count(lit(1)).as("c"))
@@ -273,7 +420,23 @@ object CurateQ {
           col("oov_types"),
           ldiv(col("n_oov") * lit(10000L), col("n_tokens")).as("oov_bp"))
         .orderBy("source")
-    }),
+    }, oracle =
+      """WITH tc AS (
+        | SELECT source, w, CAST(count(*) AS BIGINT) AS c FROM (
+        |  SELECT source, unnest(string_split(lower(text), ' ')) AS w
+        |  FROM documents) GROUP BY source, w),
+        |v AS (
+        | SELECT w FROM (SELECT w, sum(c) AS n FROM tc GROUP BY w)
+        | ORDER BY n DESC, w LIMIT 20)
+        |SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens,
+        | CAST(sum(CASE WHEN v.w IS NULL THEN c ELSE 0 END) AS BIGINT)
+        |   AS n_oov,
+        | CAST(count(CASE WHEN v.w IS NULL THEN 1 END) AS BIGINT)
+        |   AS oov_types,
+        | CAST(sum(CASE WHEN v.w IS NULL THEN c ELSE 0 END) * 10000
+        |   // sum(c) AS BIGINT) AS oov_bp
+        |FROM tc LEFT JOIN v ON tc.w = v.w
+        |GROUP BY source ORDER BY source""".stripMargin),
 
     // Cohen's kappa for the langid heuristic vs the labeled lang — the
     // chance-corrected agreement score every classifier-gate evaluation
@@ -285,7 +448,7 @@ object CurateQ {
     // corpora) are what kappa is computed over. Shape: one scan for
     // predictions, a label-pair-sized contingency, marginal products
     // broadcast — nothing corpus-sized shuffles twice.
-    "q195_langid_kappa" -> ((s, dir) => {
+    Q("q195_langid_kappa", (s, dir) => {
       val tk = graft.ops.TextOps.tokens(col("text"))
       val pred = t(s, dir, "documents")
         .select(col("lang"),
@@ -308,6 +471,30 @@ object CurateQ {
           when(col("n") * col("n") =!= col("pe_n2"),
             ldiv((col("agree") * col("n") - col("pe_n2")) * lit(10000L),
               col("n") * col("n") - col("pe_n2"))).as("kappa_bp"))
+    }, oracle = {
+      val langSelects = graft.ops.TextOps.langMarkers.map { case (l, ws) =>
+        s"${TextQ.langCountSql(ws)} AS s_$l"
+      }.mkString(",\n  ")
+      s"""WITH feat AS (
+         | SELECT lang, $langSelects FROM documents),
+         |lp AS (SELECT lang, ${TextQ.langPredSql} AS pred_lang FROM feat),
+         |cells AS (
+         | SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS c
+         | FROM lp GROUP BY lang, pred_lang),
+         |t AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM cells),
+         |ag AS (SELECT CAST(coalesce(sum(c), 0) AS BIGINT) AS agree
+         | FROM cells WHERE lang = pred_lang),
+         |rm AS (SELECT lang, CAST(sum(c) AS BIGINT) AS rc
+         | FROM cells GROUP BY lang),
+         |cm AS (SELECT pred_lang, CAST(sum(c) AS BIGINT) AS cc
+         | FROM cells GROUP BY pred_lang),
+         |pe AS (SELECT CAST(coalesce(sum(rc * cc), 0) AS BIGINT) AS pe_n2
+         | FROM rm JOIN cm ON rm.lang = cm.pred_lang)
+         |SELECT n, agree,
+         | CASE WHEN n * n <> pe_n2
+         |   THEN (agree * n - pe_n2) * 10000 // (n * n - pe_n2) END
+         |  AS kappa_bp
+         |FROM t, ag, pe""".stripMargin
     }),
 
     // Word co-occurrence confidence over the top-20 document-frequency
@@ -317,7 +504,7 @@ object CurateQ {
     // vocabulary (≤ k²/2 output rows regardless of corpus size), and
     // the per-doc fan-out of the self-join is ≤ k — the bounded shape
     // that makes within-doc co-occurrence tractable at 100 TB.
-    "q138_cooccur_conf" -> ((s, dir) => {
+    Q("q138_cooccur_conf", (s, dir) => {
       val dw = t(s, dir, "documents")
         .select(col("doc_id"),
           explode(array_distinct(toks(col("text")))).as("w"))
@@ -337,7 +524,24 @@ object CurateQ {
           col("df_a"), col("df_b"),
           ldiv(col("both_df") * lit(10000L), col("df_a")).as("conf_bp"))
         .orderBy("w_a", "w_b")
-    }),
+    }, oracle =
+      """WITH dw AS (
+        | SELECT DISTINCT doc_id, w FROM (
+        |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
+        |  FROM documents)),
+        |top AS (
+        | SELECT w, CAST(count(*) AS BIGINT) AS df FROM dw GROUP BY w
+        | ORDER BY df DESC, w LIMIT 20),
+        |f AS (SELECT dw.doc_id, dw.w, top.df FROM dw JOIN top USING (w)),
+        |p AS (
+        | SELECT a.w AS w_a, b.w AS w_b,
+        |  CAST(count(*) AS BIGINT) AS both_df,
+        |  max(a.df) AS df_a, max(b.df) AS df_b
+        | FROM f a JOIN f b ON a.doc_id = b.doc_id AND a.w < b.w
+        | GROUP BY 1, 2)
+        |SELECT w_a, w_b, both_df, df_a, df_b,
+        | CAST(both_df * 10000 // df_a AS BIGINT) AS conf_bp
+        |FROM p ORDER BY w_a, w_b""".stripMargin),
 
     // Index-backed search (the T4 GIN-analogue as a query plan): q11
     // answered through POSTINGS instead of a full-token scan — the
@@ -349,7 +553,7 @@ object CurateQ {
     // term, so a 2-term query reads 2 partitions, not the corpus; this
     // registered form computes them inline against the same tables the
     // oracle sees.
-    "q139_index_search" -> ((s, dir) => {
+    Q("q139_index_search", (s, dir) => {
       val terms = Seq("spark", "join")
       t(s, dir, "documents")
         .select(col("doc_id"), col("source"),
@@ -364,7 +568,10 @@ object CurateQ {
         .select(col("doc_id"), col("source"), col("score"))
         .orderBy(desc("score"), asc("doc_id"))
         .limit(25)
-    }),
+    }, oracle =
+      // the scan plan's oracle, verbatim: posting intersection and full
+      // scan must produce the identical ranked page
+      TextQ.searchRankSql),
 
     // Positional proximity ranking — the cover primitive inside Postgres
     // ts_rank_cd that the declared-simplified tf score (q11/q77) lacks:
@@ -373,7 +580,7 @@ object CurateQ {
     // come from one posexplode; the per-doc pair space is bounded by the
     // terms' occurrence counts (posting-list sized, never the document).
     // Integer-exact end-to-end.
-    "q144_proximity_rank" -> ((s, dir) => {
+    Q("q144_proximity_rank", (s, dir) => {
       val pos = t(s, dir, "documents")
         .select(col("doc_id"),
           posexplode(toks(col("text"))).as(Seq("pos", "w")))
@@ -389,14 +596,30 @@ object CurateQ {
         .agg((min(abs(col("pa") - col("pb"))) + 1).as("min_cover"))
         .orderBy(asc("min_cover"), asc("doc_id"))
         .limit(25)
-    }),
+    }, oracle =
+      """WITH t AS (
+        | SELECT doc_id, string_split(lower(text), ' ') AS toks
+        | FROM documents),
+        |p AS (
+        | SELECT doc_id, u['pos'] AS pos, u['w'] AS w FROM (
+        |  SELECT doc_id, unnest(list_transform(range(1, len(toks) + 1),
+        |    i -> struct_pack(pos := i - 1,
+        |                     w := toks[CAST(i AS INTEGER)]))) AS u
+        |  FROM t)),
+        |a AS (SELECT doc_id, pos FROM p WHERE w = 'spark'),
+        |b AS (SELECT doc_id, pos FROM p WHERE w = 'join')
+        |SELECT a.doc_id,
+        | CAST(min(abs(a.pos - b.pos)) + 1 AS BIGINT) AS min_cover
+        |FROM a JOIN b USING (doc_id)
+        |GROUP BY a.doc_id
+        |ORDER BY min_cover, doc_id LIMIT 25""".stripMargin),
 
     // Dedup survivorship by source: after canonical near-dup dedup
     // (cluster → min-id representative, q86's materialization), which
     // sources lose the most documents — the report that tells a corpus
     // run where its duplication actually comes from. Reuses the
     // session-shared edge set; one label join + a per-source rollup.
-    "q145_dedup_survivorship" -> ((s, dir) => {
+    Q("q145_dedup_survivorship", (s, dir) => {
       val labels = graft.ops.DedupOps
         .connectedComponents(ScaleQ.dedupEdges(s, dir))
         .withColumnRenamed("node", "doc_id")
@@ -410,7 +633,19 @@ object CurateQ {
           ldiv(sum(col("kept")) * lit(10000L), count(lit(1)))
             .as("kept_bp"))
         .orderBy("source")
-    }),
+    }, oracle =
+      // quadratic shingle-pair oracle (q16 family): exact at the driver's
+      // sf0.01 gate; skip in local sf0.1 checks
+      ScaleQ.dedupLabSql + "\n" +
+      """SELECT d.source, count(*) AS n_docs,
+        | CAST(sum(CASE WHEN lab.cluster IS NULL
+        |          OR lab.cluster = d.doc_id THEN 1 ELSE 0 END)
+        |   AS BIGINT) AS n_kept,
+        | CAST(sum(CASE WHEN lab.cluster IS NULL
+        |          OR lab.cluster = d.doc_id THEN 1 ELSE 0 END)
+        |   * 10000 // count(*) AS BIGINT) AS kept_bp
+        |FROM documents d LEFT JOIN lab ON d.doc_id = lab.node
+        |GROUP BY d.source ORDER BY d.source""".stripMargin),
 
     // One-pass exact multi-quantile (p25/p50/p95 of per-user gaps): the
     // lower-quantile k-th order statistics selected by rank in a SINGLE
@@ -418,7 +653,7 @@ object CurateQ {
     // interpolation (doubles), no three scans. k_p = ceil(p·n) in exact
     // integral arithmetic. The rank window and the groupBy share one
     // user_id exchange.
-    "q140_gap_quantiles" -> ((s, dir) => {
+    Q("q140_gap_quantiles", (s, dir) => {
       val wLag = Window.partitionBy("user_id").orderBy(col("ts"),
         col("event_id"))
       val gaps = t(s, dir, "events")
@@ -441,7 +676,25 @@ object CurateQ {
           max(when(col("rn") === ldiv(col("n") * 19 + 19, lit(20L)),
             col("gap_us"))).as("p95_us"))
         .orderBy("user_id")
-    }),
+    }, oracle =
+      """WITH g AS (
+        | SELECT user_id,
+        |  epoch_us(ts) - lag(epoch_us(ts)) OVER (
+        |    PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
+        | FROM events),
+        |r AS (
+        | SELECT user_id, gap_us,
+        |  row_number() OVER (PARTITION BY user_id ORDER BY gap_us) AS rn,
+        |  count(*) OVER (PARTITION BY user_id) AS n
+        | FROM g WHERE gap_us IS NOT NULL)
+        |SELECT user_id, CAST(max(n) AS BIGINT) AS n_gaps,
+        | CAST(max(CASE WHEN rn = (n + 3) // 4 THEN gap_us END)
+        |   AS BIGINT) AS p25_us,
+        | CAST(max(CASE WHEN rn = (n + 1) // 2 THEN gap_us END)
+        |   AS BIGINT) AS p50_us,
+        | CAST(max(CASE WHEN rn = (n * 19 + 19) // 20 THEN gap_us END)
+        |   AS BIGINT) AS p95_us
+        |FROM r GROUP BY user_id ORDER BY user_id""".stripMargin),
 
     // Last-touch attribution: each purchase attributes to the user's
     // most recent PRECEDING click within a 7-day window — the windowed
@@ -449,7 +702,7 @@ object CurateQ {
     // (last(click, ignoreNulls) over unbounded-preceding..-1) does the
     // whole as-of: no self-join, no range join, and the window's
     // user_id partitioning parallelizes across users at any scale.
-    "q141_attribution" -> ((s, dir) => {
+    Q("q141_attribution", (s, dir) => {
       val w = Window.partitionBy("user_id")
         .orderBy(col("ts"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -470,7 +723,23 @@ object CurateQ {
           when(inWindow, unix_micros(col("ts")) - col("click_us"))
             .as("gap_us"))
         .orderBy("purchase_id")
-    }),
+    }, oracle =
+      """WITH w AS (
+        | SELECT event_id, user_id, event_type, epoch_us(ts) AS us,
+        |  last_value(CASE WHEN event_type = 'click' THEN event_id END
+        |    IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS click_id,
+        |  last_value(CASE WHEN event_type = 'click' THEN epoch_us(ts) END
+        |    IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS click_us
+        | FROM events)
+        |SELECT event_id AS purchase_id, user_id,
+        | CASE WHEN click_us IS NOT NULL AND us - click_us <= 604800000000
+        |      THEN click_id END AS click_id,
+        | CASE WHEN click_us IS NOT NULL AND us - click_us <= 604800000000
+        |      THEN us - click_us END AS gap_us
+        |FROM w WHERE event_type = 'purchase'
+        |ORDER BY purchase_id""".stripMargin),
 
     // BPE ENCODING at corpus scale (the step after q102's merge mining):
     // apply a learned merge list to every word and measure the
@@ -482,7 +751,7 @@ object CurateQ {
     // string (leftmost non-overlapping in both engines — the same
     // apply-to-all-occurrences pass a reference BPE encoder makes per
     // merge), so the encoder is oracle-exact with zero UDFs.
-    "q143_bpe_encode" -> ((s, dir) => {
+    Q("q143_bpe_encode", (s, dir) => {
       val dw = t(s, dir, "documents")
         .select(col("doc_id"), explode(toks(col("text"))).as("w"))
         .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
@@ -511,14 +780,39 @@ object CurateQ {
           ldiv(col("n_bpe") * lit(10000L), col("n_chars"))
             .as("compression_bp"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH dw AS (
+        | SELECT doc_id, w, count(*) AS c FROM (
+        |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
+        |  FROM documents)
+        | GROUP BY doc_id, w),
+        |v AS (SELECT DISTINCT w FROM dw),
+        |e AS (
+        | SELECT w, CAST(length(w) AS BIGINT) AS n_chars,
+        |  CAST(len(string_split(trim(
+        |    replace(replace(replace(replace(replace(replace(
+        |      ' ' || array_to_string(list_transform(
+        |        range(1, length(w) + 1),
+        |        i -> substr(w, CAST(i AS INTEGER), 1)), ' ') || ' ',
+        |      ' t h ', ' th '), ' h e ', ' he '), ' i n ', ' in '),
+        |      ' e r ', ' er '), ' a n ', ' an '), ' th e ', ' the ')),
+        |    ' ')) AS BIGINT) AS n_sub
+        | FROM v)
+        |SELECT dw.doc_id, CAST(sum(dw.c * e.n_chars) AS BIGINT) AS n_chars,
+        | CAST(sum(dw.c * e.n_sub) AS BIGINT) AS n_bpe,
+        | CAST(sum(dw.c * e.n_sub) * 10000 // sum(dw.c * e.n_chars)
+        |   AS BIGINT) AS compression_bp
+        |FROM dw JOIN e USING (w)
+        |GROUP BY dw.doc_id
+        |HAVING sum(dw.c * e.n_chars) >= 1
+        |ORDER BY dw.doc_id""".stripMargin),
 
     // Customer order-count distribution (the TPC-H Q13 shape): aggregate
     // OF an aggregate — per-customer order counts including zero-order
     // customers (left outer join), then the distribution of those
     // counts. Both levels partial-aggregate; the second level's input is
     // customer-sized, its output ≤ max(orders per customer) rows.
-    "q142_custdist" -> ((s, dir) => {
+    Q("q142_custdist", (s, dir) => {
       val perCust = t(s, dir, "customer")
         .join(t(s, dir, "orders"),
           col("c_custkey") === col("o_custkey"), "left")
@@ -528,7 +822,14 @@ object CurateQ {
         .groupBy("c_count")
         .agg(count(lit(1)).as("custdist"))
         .orderBy(desc("custdist"), desc("c_count"))
-    }),
+    }, oracle =
+      """WITH pc AS (
+        | SELECT c.c_custkey, count(o.o_orderkey) AS c_count
+        | FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
+        | GROUP BY c.c_custkey)
+        |SELECT c_count, count(*) AS custdist
+        |FROM pc GROUP BY c_count
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin),
 
     // Pairwise source-vocabulary Jaccard (basis points): how much two
     // crawl sources overlap lexically — the upstream signal for corpus
@@ -536,7 +837,7 @@ object CurateQ {
     // pair counts come from a word-keyed posting self-join (fan-out
     // bounded by #sources per word, never a cross join), and the
     // source-sized size table broadcasts.
-    "q135_source_vocab_jaccard" -> ((s, dir) => {
+    Q("q135_source_vocab_jaccard", (s, dir) => {
       val vocab = t(s, dir, "documents")
         .select(col("source"), explode(toks(col("text"))).as("w"))
         .distinct()
@@ -555,7 +856,25 @@ object CurateQ {
           ldiv(col("inter") * lit(10000L),
             col("sz_a") + col("sz_b") - col("inter")).as("jaccard_bp"))
         .orderBy("src_a", "src_b")
-    }),
+    }, oracle =
+      """WITH v AS (
+        | SELECT DISTINCT source, w FROM (
+        |  SELECT source, unnest(string_split(lower(text), ' ')) AS w
+        |  FROM documents)),
+        |s AS (
+        | SELECT source, CAST(count(*) AS BIGINT) AS sz
+        | FROM v GROUP BY source),
+        |i AS (
+        | SELECT a.source AS src_a, b.source AS src_b,
+        |  CAST(count(*) AS BIGINT) AS inter
+        | FROM v a JOIN v b ON a.w = b.w AND a.source < b.source
+        | GROUP BY 1, 2)
+        |SELECT src_a, src_b, inter,
+        | CAST(inter * 10000 // (sa.sz + sb.sz - inter) AS BIGINT)
+        |   AS jaccard_bp
+        |FROM i JOIN s sa ON sa.source = i.src_a
+        |JOIN s sb ON sb.source = i.src_b
+        |ORDER BY src_a, src_b""".stripMargin),
 
     // Cross-document duplicated-span fraction (the exact-substring-dedup
     // signal of Lee et al. 2022 at 8-gram granularity): for each doc, the
@@ -567,7 +886,7 @@ object CurateQ {
     // both the doc-frequency aggregate and the join back — the inverted-
     // index shape of q103, never a doc×doc comparison. Fractions in exact
     // basis points via integral DIV.
-    "q150_dup_span" -> ((s, dir) => {
+    Q("q150_dup_span", (s, dir) => {
       val spans = t(s, dir, "documents")
         .select(col("doc_id"), toks(col("text")).as("tk"))
         .filter(size(col("tk")) >= 8)
@@ -587,7 +906,28 @@ object CurateQ {
             .as("dup_bp"))
         .orderBy(desc("dup_bp"), asc("doc_id"))
         .limit(50)
-    }),
+    }, oracle =
+      """WITH t AS (
+        | SELECT doc_id, string_split(lower(text), ' ') AS toks
+        | FROM documents),
+        |g AS (
+        | SELECT doc_id, array_to_string(toks[i:i+7], ' ') AS ng
+        | FROM t, UNNEST(range(1, len(toks) - 6)) AS u(i)
+        | WHERE len(toks) >= 8),
+        |pd AS (
+        | SELECT doc_id, ng, count(*) AS c FROM g GROUP BY doc_id, ng),
+        |df AS (
+        | SELECT ng, count(*) AS nd FROM pd GROUP BY ng)
+        |SELECT pd.doc_id,
+        | CAST(sum(pd.c) AS BIGINT) AS n_spans,
+        | CAST(sum(CASE WHEN df.nd >= 2 THEN pd.c ELSE 0 END) AS BIGINT)
+        |   AS dup_spans,
+        | CAST(sum(CASE WHEN df.nd >= 2 THEN pd.c ELSE 0 END) * 10000
+        |   // sum(pd.c) AS BIGINT) AS dup_bp
+        |FROM pd JOIN df ON pd.ng = df.ng
+        |GROUP BY pd.doc_id
+        |ORDER BY dup_bp DESC, doc_id ASC
+        |LIMIT 50""".stripMargin),
 
     // Lexical diversity as the Gini–Simpson index 1 − Σp², in exact basis
     // points: (n² − Σc²)·10⁴ DIV n². Entropy would need log() — a libm
@@ -596,7 +936,7 @@ object CurateQ {
     // engine. Shape: the (doc, word) count is map-side combinable and
     // the per-doc reduce is vocab-sized; nothing quadratic, one exchange
     // family.
-    "q154_lexical_diversity" -> ((s, dir) => {
+    Q("q154_lexical_diversity", (s, dir) => {
       val c = t(s, dir, "documents")
         .select(col("doc_id"), explode(toks(col("text"))).as("w"))
         .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
@@ -608,7 +948,19 @@ object CurateQ {
           ldiv((col("n") * col("n") - col("s2")) * lit(10000L),
             col("n") * col("n")).as("simpson_bp"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH t AS (
+        | SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
+        | FROM documents),
+        |c AS (SELECT doc_id, w, count(*) AS c FROM t GROUP BY 1, 2),
+        |d AS (
+        | SELECT doc_id, CAST(sum(c) AS BIGINT) AS n,
+        |  CAST(count(*) AS BIGINT) AS vocab,
+        |  CAST(sum(c * c) AS BIGINT) AS s2
+        | FROM c GROUP BY 1)
+        |SELECT doc_id, n, vocab,
+        | CAST((n * n - s2) * 10000 // (n * n) AS BIGINT) AS simpson_bp
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // Deterministic class balancing: undersample every label to the
     // minority-class count, choosing survivors by md5-hash order — a
@@ -616,7 +968,7 @@ object CurateQ {
     // bit-for-bit (the q54/q62 sampling discipline applied to label
     // skew). The min-count scalar broadcasts; the only real exchange is
     // the per-label rank window.
-    "q155_balance_classes" -> ((s, dir) => {
+    Q("q155_balance_classes", (s, dir) => {
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label").cast("long").as("label"))
       val minCnt = e.groupBy("label").agg(count(lit(1)).as("c"))
@@ -628,7 +980,17 @@ object CurateQ {
         .filter(col("rn") <= col("min_c"))
         .select(col("vec_id"), col("label"))
         .orderBy("label", "vec_id")
-    }),
+    }, oracle =
+      """WITH m AS (
+        | SELECT min(c) AS min_c FROM (
+        |  SELECT label, count(*) AS c FROM embeddings GROUP BY 1)),
+        |r AS (
+        | SELECT vec_id, CAST(label AS BIGINT) AS label,
+        |  row_number() OVER (PARTITION BY label
+        |    ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
+        | FROM embeddings)
+        |SELECT vec_id, label FROM r, m WHERE rn <= min_c
+        |ORDER BY label, vec_id""".stripMargin),
 
     // Train→eval split leakage: pairs of documents in DIFFERENT q111
     // splits that share an 8-token span — q97's benchmark-decontamination
@@ -638,7 +1000,7 @@ object CurateQ {
     // join at corpus scale (the same reason q97 prunes common grams);
     // the report is the surviving (train, eval) pairs with shared-span
     // counts.
-    "q156_split_leakage" -> ((s, dir) => {
+    Q("q156_split_leakage", (s, dir) => {
       val h = substring(md5(col("doc_id").cast("string").cast("binary")),
         1, 4)
       // ensureParallel: the 8-gram shingle assembly below is the
@@ -679,7 +1041,29 @@ object CurateQ {
           col("p.eval_split").as("eval_split"))
         .agg(count(lit(1)).as("n_shared"))
         .orderBy("train_id", "eval_id")
-    }),
+    }, oracle =
+      """WITH s AS (
+        | SELECT doc_id, text,
+        |  CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'cccc'
+        |        THEN 'train'
+        |       WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666'
+        |        THEN 'val'
+        |       ELSE 'test' END AS split
+        | FROM documents),
+        |t AS (
+        | SELECT doc_id, split, string_split(lower(text), ' ') AS toks
+        | FROM s WHERE len(string_split(lower(text), ' ')) >= 8),
+        |g AS (
+        | SELECT DISTINCT doc_id, split,
+        |  array_to_string(toks[i:i+7], ' ') AS ng
+        | FROM t, UNNEST(range(1, len(toks) - 6)) AS u(i)),
+        |d AS (SELECT ng FROM g GROUP BY ng HAVING count(*) <= 16),
+        |gg AS (SELECT g.* FROM g JOIN d USING (ng))
+        |SELECT a.doc_id AS train_id, b.doc_id AS eval_id,
+        | b.split AS eval_split, CAST(count(*) AS BIGINT) AS n_shared
+        |FROM gg a JOIN gg b ON a.ng = b.ng
+        |WHERE a.split = 'train' AND b.split <> 'train'
+        |GROUP BY 1, 2, 3 ORDER BY train_id, eval_id""".stripMargin),
 
     // Domain-mixture reweighting (DoReMi-style static target weights
     // applied deterministically): given per-source target shares in
@@ -691,7 +1075,7 @@ object CurateQ {
     // the N scalar — all broadcast); the only data-sized exchange is
     // the per-source rank, and quota selection could swap to the q159
     // histogram threshold if a single source ever outgrew a partition.
-    "q171_mixture_reweight" -> ((s, dir) => {
+    Q("q171_mixture_reweight", (s, dir) => {
       import s.implicits._
       val w = broadcast(mixtureBp.toDF("source", "target_bp"))
       val d = t(s, dir, "documents").select(col("doc_id"), col("source"))
@@ -720,6 +1104,27 @@ object CurateQ {
           count(lit(1)).as("kept"),
           sum(col("doc_id")).as("id_checksum"))
         .orderBy("source")
+    }, oracle = {
+      val values = mixtureBp
+        .map { case (s, bp) => s"('$s', CAST($bp AS BIGINT))" }
+        .mkString(", ")
+      s"""WITH w(source, target_bp) AS (VALUES $values),
+         |c AS (SELECT source, count(*) AS n_in FROM documents GROUP BY source),
+         |cw AS (SELECT c.source, n_in, target_bp FROM c JOIN w USING (source)),
+         |n AS (SELECT min(n_in * 10000 // target_bp) AS n_out FROM cw),
+         |q AS (SELECT source, n_in, target_bp,
+         |        target_bp * n_out // 10000 AS quota FROM cw, n),
+         |r AS (SELECT source, doc_id, row_number() OVER (
+         |        PARTITION BY source
+         |        ORDER BY md5(source || ':' || CAST(doc_id AS VARCHAR))) AS rk
+         |      FROM documents)
+         |SELECT q.source, CAST(n_in AS BIGINT) AS n_in,
+         | CAST(target_bp AS BIGINT) AS target_bp,
+         | CAST(quota AS BIGINT) AS quota,
+         | CAST(count(*) AS BIGINT) AS kept,
+         | CAST(sum(doc_id) AS BIGINT) AS id_checksum
+         |FROM r JOIN q ON r.source = q.source AND r.rk <= q.quota
+         |GROUP BY 1, 2, 3, 4 ORDER BY 1""".stripMargin
     }),
 
     // Epoch-aware deterministic shuffle: each training epoch re-permutes
@@ -730,7 +1135,7 @@ object CurateQ {
     // a within-shard position (the local shuffle buffer) — so the rank
     // window partitions on (epoch, shard) and NO global ordering is
     // ever materialized; shards scale out with the cluster.
-    "q172_epoch_shuffle" -> ((s, dir) => {
+    Q("q172_epoch_shuffle", (s, dir) => {
       val d = t(s, dir, "documents").select(col("doc_id"))
         .withColumn("epoch", explode(sequence(lit(0L), lit(2L))))
         .withColumn("hk", md5(concat(col("epoch").cast("string"),
@@ -741,7 +1146,16 @@ object CurateQ {
           .cast("long"))
         .select(col("epoch"), col("shard"), col("pos"), col("doc_id"))
         .orderBy("epoch", "shard", "pos")
-    }),
+    }, oracle =
+      """WITH e AS (SELECT unnest([0, 1, 2]) AS epoch),
+        |h AS (SELECT CAST(e.epoch AS BIGINT) AS epoch, doc_id,
+        |  md5(CAST(e.epoch AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)) AS hk
+        | FROM documents, e)
+        |SELECT epoch, substr(hk, 1, 1) AS shard,
+        | CAST(row_number() OVER (PARTITION BY epoch, substr(hk, 1, 1)
+        |   ORDER BY hk) AS BIGINT) AS pos,
+        | doc_id
+        |FROM h ORDER BY epoch, shard, pos""".stripMargin),
 
     // CCNet-style paragraph dedup — the corpus REWRITE, not just the
     // measurement (q150 measures overlapping-span mass; this drops
@@ -752,7 +1166,7 @@ object CurateQ {
     // paragraph hashes shuffle (collapsed corpus-sized key space, the
     // same posting-join bound as q150); the rewrite is a per-doc
     // collect_list re-assembly, never a global sort.
-    "q173_paragraph_dedup" -> ((s, dir) => {
+    Q("q173_paragraph_dedup", (s, dir) => {
       val segs = t(s, dir, "documents")
         .select(col("doc_id"), toks(col("text")).as("tk"))
         .select(col("doc_id"), explode(transform(
@@ -775,14 +1189,36 @@ object CurateQ {
             when(col("keep"), struct(col("seg"), col("p"))))).getField("p"))
             .cast("binary")).as("clean_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH s AS (SELECT doc_id, string_split(lower(text), ' ') AS tk
+        |           FROM documents),
+        |seg AS (
+        | SELECT doc_id,
+        |  unnest(list_transform(range(1, (len(tk) - 1) // 16 + 2),
+        |    i -> struct_pack(seg := i,
+        |      p := array_to_string(tk[(i-1)*16+1 : i*16], ' '))),
+        |    recursive := true)
+        | FROM s),
+        |own AS (
+        | SELECT p, doc_id AS o_id, seg AS o_seg,
+        |  row_number() OVER (PARTITION BY p ORDER BY doc_id, seg) AS rn
+        | FROM seg),
+        |j AS (
+        | SELECT seg.doc_id, seg.seg, seg.p,
+        |  (seg.doc_id = own.o_id AND seg.seg = own.o_seg) AS keep
+        | FROM seg JOIN own ON seg.p = own.p AND own.rn = 1)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_paras,
+        | CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+        | md5(coalesce(string_agg(CASE WHEN keep THEN p END, ' '
+        |   ORDER BY seg), '')) AS clean_md5
+        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // Sequence-length bucketing: the batch-packing report — docs binned
     // to the next power-of-two token budget, per-bucket padding waste in
     // exact basis points. Pure per-row bucket assignment + a
     // bucket-count-sized aggregate; the CASE ladder keeps the bucket
     // boundary integral in both engines (no libm log2).
-    "q174_length_buckets" -> ((s, dir) => {
+    Q("q174_length_buckets", (s, dir) => {
       val n = size(toks(col("text"))).cast("long")
       val bucket = when(n <= 16, 16L).when(n <= 32, 32L)
         .when(n <= 64, 64L).when(n <= 128, 128L).when(n <= 256, 256L)
@@ -797,7 +1233,20 @@ object CurateQ {
           ldiv(col("sum_pad") * lit(10000L),
             col("bucket") * col("n_docs")).as("waste_bp"))
         .orderBy("bucket")
-    }),
+    }, oracle =
+      """WITH b AS (
+        | SELECT doc_id, len(string_split(lower(text), ' ')) AS n,
+        |  CASE WHEN n <= 16 THEN 16 WHEN n <= 32 THEN 32
+        |       WHEN n <= 64 THEN 64 WHEN n <= 128 THEN 128
+        |       WHEN n <= 256 THEN 256 WHEN n <= 512 THEN 512
+        |       ELSE 1024 END AS bucket
+        | FROM documents)
+        |SELECT CAST(bucket AS BIGINT) AS bucket,
+        | CAST(count(*) AS BIGINT) AS n_docs,
+        | CAST(sum(n) AS BIGINT) AS sum_tok,
+        | CAST(sum(bucket - n) AS BIGINT) * 10000
+        |   // (CAST(bucket AS BIGINT) * count(*)) AS waste_bp
+        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin),
 
     // CCNet/KenLM-style fluency gate, self-trained: a bigram LM whose
     // stats come from the corpus itself scores every document by its
@@ -818,7 +1267,7 @@ object CurateQ {
     // a no-op).
     // Counts cap at ~1e12 bigram occurrences before the ·10⁶ quantizer
     // would overflow BIGINT — beyond that, widen SCALE down, not up.
-    "q178_lm_fluency" -> ((s, dir) => {
+    Q("q178_lm_fluency", (s, dir) => {
       // bigrams via the codegen'd ShinglesExpr — the HOF
       // transform/slice/concat_ws chain evaluates interpreted per
       // element (HigherOrderFunction is outside whole-stage codegen)
@@ -841,7 +1290,29 @@ object CurateQ {
         .select(col("doc_id"), col("n_bigrams"),
           ldiv(col("sc"), col("n_bigrams")).as("fluency_ppm"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // HUGEINT discipline: sum() goes HUGEINT, `//` stays integral on
+      // integer types (NEVER on DECIMAL — that's double division), final
+      // CAST to BIGINT matches Spark's long.
+      """WITH t AS (
+        | SELECT doc_id, string_split(lower(text), ' ') AS toks
+        | FROM documents),
+        |bg AS (
+        | SELECT doc_id, unnest(list_transform(range(1, len(toks)),
+        |   i -> toks[i] || ' ' || toks[i+1])) AS b
+        | FROM t WHERE len(toks) >= 2),
+        |bc AS (SELECT b, CAST(count(*) AS BIGINT) AS cb FROM bg GROUP BY b),
+        |cc AS (SELECT split_part(b, ' ', 1) AS w,
+        |        CAST(count(*) AS BIGINT) AS cw FROM bg GROUP BY 1),
+        |d AS (
+        | SELECT g.doc_id, count(*) AS nb,
+        |  sum(cb * 1000000 // cw) AS sc
+        | FROM bg g JOIN bc ON g.b = bc.b
+        |  JOIN cc ON split_part(g.b, ' ', 1) = cc.w
+        | GROUP BY 1)
+        |SELECT doc_id, CAST(nb AS BIGINT) AS n_bigrams,
+        | CAST(sc // nb AS BIGINT) AS fluency_ppm
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // DSIR-style importance weighting (hashed n-gram importance
     // resampling): score every raw document by how target-like its
@@ -856,7 +1327,7 @@ object CurateQ {
     // broadcast to the token stream; per-doc mean is one map-side-
     // combinable doc-keyed aggregate. No shuffle grows with the corpus
     // except the token→doc partial-agg pass itself.
-    "q179_dsir_weights" -> ((s, dir) => {
+    Q("q179_dsir_weights", (s, dir) => {
       val w = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
           explode(toks(col("text"))).as("tok"))
@@ -875,7 +1346,23 @@ object CurateQ {
         .select(col("doc_id"), col("n_tokens"),
           ldiv(col("sr"), col("n_tokens")).as("dsir_ppm"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH w AS (
+        | SELECT doc_id, lang, substr(md5(tok), 1, 3) AS bk FROM (
+        |  SELECT doc_id, lang, unnest(string_split(lower(text), ' ')) AS tok
+        |  FROM documents)),
+        |rc AS (SELECT bk, CAST(count(*) AS BIGINT) AS rcnt FROM w GROUP BY bk),
+        |tc AS (SELECT bk, CAST(count(*) AS BIGINT) AS tcnt
+        |       FROM w WHERE lang = 'en' GROUP BY bk),
+        |ratio AS (
+        | SELECT rc.bk, coalesce(tcnt, 0) * 1000000 // rcnt AS ratio
+        | FROM rc LEFT JOIN tc ON rc.bk = tc.bk),
+        |d AS (
+        | SELECT w.doc_id, count(*) AS nt, sum(ratio) AS sr
+        | FROM w JOIN ratio ON w.bk = ratio.bk GROUP BY 1)
+        |SELECT doc_id, CAST(nt AS BIGINT) AS n_tokens,
+        | CAST(sr // nt AS BIGINT) AS dsir_ppm
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // Deterministic MLM token masking (the 15% BERT-style objective) as
     // a PURE PROJECTION: the mask decision is a stateless 31-bit
@@ -889,7 +1376,7 @@ object CurateQ {
     // identical mask without coordination or stored RNG state, and the
     // whole thing stays inside whole-stage codegen (no UDF, no shuffle
     // beyond the doc-keyed rollup the output needs anyway).
-    "q184_mlm_mask" -> ((s, dir) => {
+    Q("q184_mlm_mask", (s, dir) => {
       val m = lit(2147483647L)
       val h1 = (col("doc_id") * 48271L + col("pos") * 16807L
         + 12345L) % m
@@ -906,7 +1393,28 @@ object CurateQ {
           sum(when(col("masked"), length(col("tk"))).otherwise(0L))
             .cast("long").as("mask_chars"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // i is 1-based (DuckDB-local); the mixer uses i-1 to match the
+      // engine's 0-based positions, mask_pos_sum reports 1-based = i.
+      """WITH d AS (
+        | SELECT doc_id, string_split(lower(text), ' ') AS tks
+        | FROM documents),
+        |e AS (
+        | SELECT doc_id, unnest(range(1, len(tks) + 1)) AS i, tks
+        | FROM d),
+        |mk AS (
+        | SELECT doc_id, i, len(tks[i]) AS tklen,
+        |  ((doc_id * 48271 + (i - 1) * 16807 + 12345) % 2147483647)
+        |    * 48271 % 2147483647 % 20 < 3 AS masked
+        | FROM e)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+        | CAST(sum(CASE WHEN masked THEN 1 ELSE 0 END) AS BIGINT)
+        |   AS n_masked,
+        | CAST(sum(CASE WHEN masked THEN i ELSE 0 END) AS BIGINT)
+        |   AS mask_pos_sum,
+        | CAST(sum(CASE WHEN masked THEN tklen ELSE 0 END) AS BIGINT)
+        |   AS mask_chars
+        |FROM mk GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // Randomized-response private counting (Warner 1965, the local-DP
     // primitive telemetry pipelines use): each record reports its
@@ -918,7 +1426,7 @@ object CurateQ {
     // integral); the true count rides along as the calibration audit
     // this synthetic setting affords. One scan, source-sized rollup,
     // all inside whole-stage codegen.
-    "q222_private_counts" -> ((s, dir) => {
+    Q("q222_private_counts", (s, dir) => {
       val m = lit(2147483647L)
       val h1 = (col("doc_id") * 48271L + 12345L) % m
       val h2 = (h1 * 48271L) % m
@@ -936,7 +1444,23 @@ object CurateQ {
           (lit(4L) * col("noisy_en") - col("n_docs")
             - lit(2L) * col("true_en")).as("err_times2"))
         .orderBy("source")
-    }),
+    }, oracle =
+      // same mixer replay as q184; XOR via <> on booleans
+      """WITH r AS (
+        | SELECT source, lang = 'en' AS t,
+        |  (lang = 'en') <>
+        |   ((doc_id * 48271 + 12345) % 2147483647
+        |     * 48271 % 2147483647 % 4 = 0) AS rep
+        | FROM documents),
+        |g AS (
+        | SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(sum(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS true_en,
+        |  CAST(sum(CASE WHEN rep THEN 1 ELSE 0 END) AS BIGINT) AS noisy_en
+        | FROM r GROUP BY source)
+        |SELECT source, n_docs, true_en, noisy_en,
+        | 4 * noisy_en - n_docs AS est_times2,
+        | 4 * noisy_en - n_docs - 2 * true_en AS err_times2
+        |FROM g ORDER BY source""".stripMargin),
 
     // Safety-blocklist gate: per-source hit audit for a broadcast term
     // list — the first filter every training-corpus run applies. The
@@ -944,7 +1468,7 @@ object CurateQ {
     // tokenizer (NO explode, no join: the list lives in the instruction
     // stream), so the whole gate is one scan folding into a source-
     // sized rollup. Flag rate in exact basis points.
-    "q260_blocklist_hits" -> ((s, dir) => {
+    Q("q260_blocklist_hits", (s, dir) => {
       import graft.functions.CountInSetExpr.countInSet
       t(s, dir, "documents")
         .select(col("source"),
@@ -959,7 +1483,19 @@ object CurateQ {
           ldiv(col("n_flagged") * lit(10000L), col("n_docs"))
             .as("flagged_bp"))
         .orderBy("source")
-    }),
+    }, oracle =
+      """WITH h AS (
+        | SELECT source,
+        |  CAST(len(list_filter(string_split(lower(text), ' '),
+        |    x -> x IN ('slow', 'hash', 'scan', 'merge'))) AS BIGINT) AS hits
+        | FROM documents)
+        |SELECT source, count(*) AS n_docs,
+        | CAST(sum(CASE WHEN hits > 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |   AS n_flagged,
+        | CAST(sum(hits) AS BIGINT) AS total_hits,
+        | CAST(CAST(sum(CASE WHEN hits > 0 THEN 1 ELSE 0 END) AS HUGEINT)
+        |   * 10000 // count(*) AS BIGINT) AS flagged_bp
+        |FROM h GROUP BY source ORDER BY source""".stripMargin),
 
     // Chat-transcript schema gate — the SFT-data validator: each doc
     // carries a synthesized two-turn JSON chat with id-injected
@@ -969,7 +1505,7 @@ object CurateQ {
     // oracle knows the truth from the id arithmetic — the codec-gate
     // discipline applied to conversation structure. Violation
     // precedence mirrors injection precedence. One scan, 4-row rollup.
-    "q261_chat_schema_gate" -> ((s, dir) => {
+    Q("q261_chat_schema_gate", (s, dir) => {
       import org.apache.spark.sql.types._
       val msgSchema = ArrayType(StructType(Seq(
         StructField("role", StringType),
@@ -1000,7 +1536,14 @@ object CurateQ {
         .agg(count(lit(1)).as("n_docs"),
           sum(col("doc_id")).as("id_checksum"))
         .orderBy("violation")
-    }),
+    }, oracle =
+      // truth from the id arithmetic; the engine must rediscover it by
+      // parsing the JSON it was handed
+      """SELECT CASE doc_id % 4 WHEN 2 THEN 'missing_role'
+        |  WHEN 3 THEN 'empty_content' WHEN 1 THEN 'bad_alternation'
+        |  ELSE 'ok' END AS violation,
+        | count(*) AS n_docs, CAST(sum(doc_id) AS BIGINT) AS id_checksum
+        |FROM documents GROUP BY 1 ORDER BY violation""".stripMargin),
 
     // Krippendorff's alpha (ordinal/interval metric, two coders) — the
     // agreement statistic annotation pipelines report when kappa's
@@ -1012,7 +1555,7 @@ object CurateQ {
     // α_bp = 10000 − (2Σ(a1−a2)²·(N−1)·10000) DIV (Σ n_c·n_k·(c−k)²).
     // Shape: one scan → 5-value histogram; the δ² cross is a broadcast
     // over ≤25 cells. Nothing corpus-sized shuffles.
-    "q262_krippendorff_alpha" -> ((s, dir) => {
+    Q("q262_krippendorff_alpha", (s, dir) => {
       def nib(salt: String, pos: Int) =
         expr(s"instr('0123456789abcdef', substring(" +
           s"md5(concat('$salt', cast(doc_id as string))), $pos, 1)) - 1")
@@ -1039,625 +1582,7 @@ object CurateQ {
           (lit(10000L) - ldiv(
             col("do_num") * (lit(2L) * col("n_units") - 1L) * 10000L,
             col("de_num"))).as("alpha_bp"))
-    }),
-  )
-
-  /** q171's target mixture (basis points, sums to 10000) — one source of
-    * truth for the query and its oracle. */
-  private val mixtureBp: Seq[(String, Long)] = (0 to 19).map(i =>
-    ("src" + i, if (i < 5) 1000L else if (i < 10) 500L else 250L))
-
-  val oracles: Map[String, String] = Map(
-    // HUGEINT discipline: sum() goes HUGEINT, `//` stays integral on
-    // integer types (NEVER on DECIMAL — that's double division), final
-    // CAST to BIGINT matches Spark's long.
-    "q178_lm_fluency" ->
-      """WITH t AS (
-        | SELECT doc_id, string_split(lower(text), ' ') AS toks
-        | FROM documents),
-        |bg AS (
-        | SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-        |   i -> toks[i] || ' ' || toks[i+1])) AS b
-        | FROM t WHERE len(toks) >= 2),
-        |bc AS (SELECT b, CAST(count(*) AS BIGINT) AS cb FROM bg GROUP BY b),
-        |cc AS (SELECT split_part(b, ' ', 1) AS w,
-        |        CAST(count(*) AS BIGINT) AS cw FROM bg GROUP BY 1),
-        |d AS (
-        | SELECT g.doc_id, count(*) AS nb,
-        |  sum(cb * 1000000 // cw) AS sc
-        | FROM bg g JOIN bc ON g.b = bc.b
-        |  JOIN cc ON split_part(g.b, ' ', 1) = cc.w
-        | GROUP BY 1)
-        |SELECT doc_id, CAST(nb AS BIGINT) AS n_bigrams,
-        | CAST(sc // nb AS BIGINT) AS fluency_ppm
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    "q179_dsir_weights" ->
-      """WITH w AS (
-        | SELECT doc_id, lang, substr(md5(tok), 1, 3) AS bk FROM (
-        |  SELECT doc_id, lang, unnest(string_split(lower(text), ' ')) AS tok
-        |  FROM documents)),
-        |rc AS (SELECT bk, CAST(count(*) AS BIGINT) AS rcnt FROM w GROUP BY bk),
-        |tc AS (SELECT bk, CAST(count(*) AS BIGINT) AS tcnt
-        |       FROM w WHERE lang = 'en' GROUP BY bk),
-        |ratio AS (
-        | SELECT rc.bk, coalesce(tcnt, 0) * 1000000 // rcnt AS ratio
-        | FROM rc LEFT JOIN tc ON rc.bk = tc.bk),
-        |d AS (
-        | SELECT w.doc_id, count(*) AS nt, sum(ratio) AS sr
-        | FROM w JOIN ratio ON w.bk = ratio.bk GROUP BY 1)
-        |SELECT doc_id, CAST(nt AS BIGINT) AS n_tokens,
-        | CAST(sr // nt AS BIGINT) AS dsir_ppm
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    "q171_mixture_reweight" -> {
-      val values = mixtureBp
-        .map { case (s, bp) => s"('$s', CAST($bp AS BIGINT))" }
-        .mkString(", ")
-      s"""WITH w(source, target_bp) AS (VALUES $values),
-         |c AS (SELECT source, count(*) AS n_in FROM documents GROUP BY source),
-         |cw AS (SELECT c.source, n_in, target_bp FROM c JOIN w USING (source)),
-         |n AS (SELECT min(n_in * 10000 // target_bp) AS n_out FROM cw),
-         |q AS (SELECT source, n_in, target_bp,
-         |        target_bp * n_out // 10000 AS quota FROM cw, n),
-         |r AS (SELECT source, doc_id, row_number() OVER (
-         |        PARTITION BY source
-         |        ORDER BY md5(source || ':' || CAST(doc_id AS VARCHAR))) AS rk
-         |      FROM documents)
-         |SELECT q.source, CAST(n_in AS BIGINT) AS n_in,
-         | CAST(target_bp AS BIGINT) AS target_bp,
-         | CAST(quota AS BIGINT) AS quota,
-         | CAST(count(*) AS BIGINT) AS kept,
-         | CAST(sum(doc_id) AS BIGINT) AS id_checksum
-         |FROM r JOIN q ON r.source = q.source AND r.rk <= q.quota
-         |GROUP BY 1, 2, 3, 4 ORDER BY 1""".stripMargin
-    },
-
-    "q173_paragraph_dedup" ->
-      """WITH s AS (SELECT doc_id, string_split(lower(text), ' ') AS tk
-        |           FROM documents),
-        |seg AS (
-        | SELECT doc_id,
-        |  unnest(list_transform(range(1, (len(tk) - 1) // 16 + 2),
-        |    i -> struct_pack(seg := i,
-        |      p := array_to_string(tk[(i-1)*16+1 : i*16], ' '))),
-        |    recursive := true)
-        | FROM s),
-        |own AS (
-        | SELECT p, doc_id AS o_id, seg AS o_seg,
-        |  row_number() OVER (PARTITION BY p ORDER BY doc_id, seg) AS rn
-        | FROM seg),
-        |j AS (
-        | SELECT seg.doc_id, seg.seg, seg.p,
-        |  (seg.doc_id = own.o_id AND seg.seg = own.o_seg) AS keep
-        | FROM seg JOIN own ON seg.p = own.p AND own.rn = 1)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_paras,
-        | CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        | md5(coalesce(string_agg(CASE WHEN keep THEN p END, ' '
-        |   ORDER BY seg), '')) AS clean_md5
-        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q174_length_buckets" ->
-      """WITH b AS (
-        | SELECT doc_id, len(string_split(lower(text), ' ')) AS n,
-        |  CASE WHEN n <= 16 THEN 16 WHEN n <= 32 THEN 32
-        |       WHEN n <= 64 THEN 64 WHEN n <= 128 THEN 128
-        |       WHEN n <= 256 THEN 256 WHEN n <= 512 THEN 512
-        |       ELSE 1024 END AS bucket
-        | FROM documents)
-        |SELECT CAST(bucket AS BIGINT) AS bucket,
-        | CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(n) AS BIGINT) AS sum_tok,
-        | CAST(sum(bucket - n) AS BIGINT) * 10000
-        |   // (CAST(bucket AS BIGINT) * count(*)) AS waste_bp
-        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    "q172_epoch_shuffle" ->
-      """WITH e AS (SELECT unnest([0, 1, 2]) AS epoch),
-        |h AS (SELECT CAST(e.epoch AS BIGINT) AS epoch, doc_id,
-        |  md5(CAST(e.epoch AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)) AS hk
-        | FROM documents, e)
-        |SELECT epoch, substr(hk, 1, 1) AS shard,
-        | CAST(row_number() OVER (PARTITION BY epoch, substr(hk, 1, 1)
-        |   ORDER BY hk) AS BIGINT) AS pos,
-        | doc_id
-        |FROM h ORDER BY epoch, shard, pos""".stripMargin,
-    "q150_dup_span" ->
-      """WITH t AS (
-        | SELECT doc_id, string_split(lower(text), ' ') AS toks
-        | FROM documents),
-        |g AS (
-        | SELECT doc_id, array_to_string(toks[i:i+7], ' ') AS ng
-        | FROM t, UNNEST(range(1, len(toks) - 6)) AS u(i)
-        | WHERE len(toks) >= 8),
-        |pd AS (
-        | SELECT doc_id, ng, count(*) AS c FROM g GROUP BY doc_id, ng),
-        |df AS (
-        | SELECT ng, count(*) AS nd FROM pd GROUP BY ng)
-        |SELECT pd.doc_id,
-        | CAST(sum(pd.c) AS BIGINT) AS n_spans,
-        | CAST(sum(CASE WHEN df.nd >= 2 THEN pd.c ELSE 0 END) AS BIGINT)
-        |   AS dup_spans,
-        | CAST(sum(CASE WHEN df.nd >= 2 THEN pd.c ELSE 0 END) * 10000
-        |   // sum(pd.c) AS BIGINT) AS dup_bp
-        |FROM pd JOIN df ON pd.ng = df.ng
-        |GROUP BY pd.doc_id
-        |ORDER BY dup_bp DESC, doc_id ASC
-        |LIMIT 50""".stripMargin,
-
-    "q154_lexical_diversity" ->
-      """WITH t AS (
-        | SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
-        | FROM documents),
-        |c AS (SELECT doc_id, w, count(*) AS c FROM t GROUP BY 1, 2),
-        |d AS (
-        | SELECT doc_id, CAST(sum(c) AS BIGINT) AS n,
-        |  CAST(count(*) AS BIGINT) AS vocab,
-        |  CAST(sum(c * c) AS BIGINT) AS s2
-        | FROM c GROUP BY 1)
-        |SELECT doc_id, n, vocab,
-        | CAST((n * n - s2) * 10000 // (n * n) AS BIGINT) AS simpson_bp
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    "q155_balance_classes" ->
-      """WITH m AS (
-        | SELECT min(c) AS min_c FROM (
-        |  SELECT label, count(*) AS c FROM embeddings GROUP BY 1)),
-        |r AS (
-        | SELECT vec_id, CAST(label AS BIGINT) AS label,
-        |  row_number() OVER (PARTITION BY label
-        |    ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-        | FROM embeddings)
-        |SELECT vec_id, label FROM r, m WHERE rn <= min_c
-        |ORDER BY label, vec_id""".stripMargin,
-
-    "q156_split_leakage" ->
-      """WITH s AS (
-        | SELECT doc_id, text,
-        |  CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'cccc'
-        |        THEN 'train'
-        |       WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666'
-        |        THEN 'val'
-        |       ELSE 'test' END AS split
-        | FROM documents),
-        |t AS (
-        | SELECT doc_id, split, string_split(lower(text), ' ') AS toks
-        | FROM s WHERE len(string_split(lower(text), ' ')) >= 8),
-        |g AS (
-        | SELECT DISTINCT doc_id, split,
-        |  array_to_string(toks[i:i+7], ' ') AS ng
-        | FROM t, UNNEST(range(1, len(toks) - 6)) AS u(i)),
-        |d AS (SELECT ng FROM g GROUP BY ng HAVING count(*) <= 16),
-        |gg AS (SELECT g.* FROM g JOIN d USING (ng))
-        |SELECT a.doc_id AS train_id, b.doc_id AS eval_id,
-        | b.split AS eval_split, CAST(count(*) AS BIGINT) AS n_shared
-        |FROM gg a JOIN gg b ON a.ng = b.ng
-        |WHERE a.split = 'train' AND b.split <> 'train'
-        |GROUP BY 1, 2, 3 ORDER BY train_id, eval_id""".stripMargin,
-
-    "q131_dup_bigram" ->
-      """WITH t AS (
-        | SELECT doc_id, string_split(lower(text), ' ') AS toks
-        | FROM documents),
-        |b AS (
-        | SELECT doc_id,
-        |  CAST(len(toks) - 1 AS BIGINT) AS n_bigrams,
-        |  CAST(len(list_distinct(list_transform(range(1, len(toks)),
-        |    i -> toks[i] || ' ' || toks[i+1]))) AS BIGINT) AS n_distinct
-        | FROM t WHERE len(toks) >= 2)
-        |SELECT doc_id, n_bigrams,
-        | CAST((n_bigrams - n_distinct) * 10000 // n_bigrams AS BIGINT)
-        |   AS dup_bp
-        |FROM b ORDER BY doc_id""".stripMargin,
-
-    "q132_hapax_share" ->
-      """WITH c AS (
-        | SELECT source, w, count(*) AS c FROM (
-        |  SELECT source, unnest(string_split(lower(text), ' ')) AS w
-        |  FROM documents)
-        | GROUP BY source, w)
-        |SELECT source, CAST(count(*) AS BIGINT) AS vocab,
-        | CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
-        | CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) * 10000 // count(*)
-        |   AS BIGINT) AS hapax_bp
-        |FROM c GROUP BY source ORDER BY source""".stripMargin,
-
-    // quadratic shingle-pair oracle (same family as q16/q56): exact at
-    // the driver's sf0.01 gate; skip in local sf0.1 checks
-    "q133_cluster_size_hist" -> (ScaleQ.dedupLabSql + "\n" +
-      """SELECT sz, CAST(count(*) AS BIGINT) AS n_clusters
-        |FROM (SELECT cluster, CAST(count(*) AS BIGINT) AS sz
-        |      FROM lab GROUP BY cluster)
-        |GROUP BY sz ORDER BY sz""".stripMargin),
-
-    "q134_gap_median" ->
-      """WITH g AS (
-        | SELECT user_id,
-        |  epoch_us(ts) - lag(epoch_us(ts)) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-        | FROM events),
-        |r AS (
-        | SELECT user_id, gap_us,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY gap_us) AS rn,
-        |  count(*) OVER (PARTITION BY user_id) AS n
-        | FROM g WHERE gap_us IS NOT NULL)
-        |SELECT user_id, CAST(n AS BIGINT) AS n_gaps,
-        | CAST(gap_us AS BIGINT) AS median_gap_us
-        |FROM r WHERE rn = (n + 1) // 2 ORDER BY user_id""".stripMargin,
-
-    // documents are pure printable ASCII (asserted in CorpusQSpec), so
-    // byte k == ord(substr(text, k+1, 1)) and the energy sums are exact
-    "q136_audio_energy" ->
-      """WITH m AS (
-        | SELECT doc_id AS media_id, text, length(text) AS len
-        | FROM documents WHERE doc_id % 3 = 1 AND length(text) > 0),
-        |w AS (SELECT unnest(range(0, 8)) AS widx)
-        |SELECT m.media_id, CAST(w.widx AS INTEGER) AS window_idx,
-        | CAST((w.widx + 1) * m.len // 8 - w.widx * m.len // 8 AS INTEGER)
-        |   AS n_samples,
-        | CAST(coalesce(list_sum(list_transform(
-        |   range(CAST(w.widx * m.len // 8 AS INTEGER) + 1,
-        |         CAST((w.widx + 1) * m.len // 8 AS INTEGER) + 1),
-        |   i -> ord(substr(m.text, CAST(i AS INTEGER), 1))
-        |      * ord(substr(m.text, CAST(i AS INTEGER), 1)))), 0)
-        |   AS BIGINT) AS energy
-        |FROM m, w ORDER BY media_id, window_idx""".stripMargin,
-
-    // same ASCII premise as q136/q191: pixel k == ord(substr(text,k+1,1))
-    // — the roundtrip is lossless (PNG/gray-palette BMP), so the oracle
-    // never sees a codec byte
-    "q203_image_decode" ->
-      """SELECT doc_id,
-        | CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'bmp' END AS fmt,
-        | CAST(length(text) AS BIGINT) AS width,
-        | CAST(1 AS BIGINT) AS height,
-        | CAST(list_sum(list_transform(range(1, length(text) + 1),
-        |   i -> ord(substr(text, CAST(i AS INTEGER), 1)))) AS BIGINT)
-        |   AS pix_sum,
-        | CAST(list_sum(list_transform(range(1, length(text) + 1),
-        |   i -> i * ord(substr(text, CAST(i AS INTEGER), 1)))) AS BIGINT)
-        |   AS pos_checksum
-        |FROM documents WHERE doc_id % 3 = 0 AND length(text) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    // sample k == ord(char k)·257 − 32768: the roundtrip is lossless
-    // PCM16, so the oracle reconstructs every sample from the text
-    "q217_wav_decode" ->
-      """SELECT doc_id,
-        | CAST(8000 AS BIGINT) AS sample_rate,
-        | CAST(length(text) AS BIGINT) AS n_samples,
-        | CAST(list_sum(list_transform(range(1, length(text) + 1),
-        |   i -> ord(substr(text, CAST(i AS INTEGER), 1)) * 257 - 32768))
-        |   AS BIGINT) AS amp_sum,
-        | CAST(list_sum(list_transform(range(1, length(text) + 1),
-        |   i -> i * (ord(substr(text, CAST(i AS INTEGER), 1)) * 257
-        |     - 32768))) AS BIGINT) AS pos_checksum,
-        | CAST(list_max(list_transform(range(1, length(text) + 1),
-        |   i -> abs(ord(substr(text, CAST(i AS INTEGER), 1)) * 257
-        |     - 32768))) AS BIGINT) AS peak_abs
-        |FROM documents WHERE doc_id % 3 = 1 AND length(text) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    // frame f, BGR position p: byte == ord(char ((f·45+p) mod len)) —
-    // the DIB roundtrip is lossless, so the oracle never sees a
-    // container byte; only even frames (the sample) are reported
-    "q220_avi_frames" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len,
-        |  3 + doc_id % 3 AS nf
-        | FROM documents WHERE doc_id % 3 = 2 AND length(text) > 0),
-        |fr AS (
-        | SELECT doc_id, text, len, nf, unnest(range(0, nf)) AS f
-        | FROM d),
-        |px AS (
-        | SELECT doc_id, nf, f, text, len, unnest(range(0, 45)) AS p
-        | FROM fr WHERE f % 2 = 0),
-        |v AS (
-        | SELECT doc_id, nf, f, p,
-        |  ord(substr(text,
-        |   CAST((f * 45 + p) % len + 1 AS INTEGER), 1)) AS v
-        | FROM px)
-        |SELECT doc_id, CAST(min(nf) AS BIGINT) AS n_frames,
-        | CAST(f AS BIGINT) AS frame_idx,
-        | CAST(sum(v) AS BIGINT) AS pix_sum,
-        | CAST(sum((p + 1) * v) AS BIGINT) AS pos_checksum
-        |FROM v GROUP BY doc_id, f
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // same ASCII premise as q136: byte k == ord(substr(text, k+1, 1))
-    "q191_image_patchify" ->
-      """WITH m AS (
-        | SELECT doc_id AS media_id, text, length(text) AS len
-        | FROM documents WHERE doc_id % 3 = 0 AND length(text) > 0),
-        |p AS (
-        | SELECT media_id, text, len,
-        |  unnest(range(0, (len + 31) // 32)) AS pidx
-        | FROM m)
-        |SELECT media_id, CAST(pidx AS INTEGER) AS patch_idx,
-        | CAST(least(pidx * 32 + 32, len) - pidx * 32 AS INTEGER)
-        |   AS n_bytes,
-        | CAST(coalesce(list_sum(list_transform(
-        |   range(CAST(pidx * 32 AS INTEGER) + 1,
-        |         CAST(least(pidx * 32 + 32, len) AS INTEGER) + 1),
-        |   i -> ord(substr(text, CAST(i AS INTEGER), 1)))), 0)
-        |   AS BIGINT) AS byte_sum,
-        | CAST(coalesce(list_sum(list_transform(
-        |   range(CAST(pidx * 32 AS INTEGER) + 1,
-        |         CAST(least(pidx * 32 + 32, len) AS INTEGER) + 1),
-        |   i -> (i - pidx * 32)
-        |      * ord(substr(text, CAST(i AS INTEGER), 1)))), 0)
-        |   AS BIGINT) AS pos_checksum
-        |FROM p ORDER BY media_id, patch_idx""".stripMargin,
-
-    "q197_vocab_oov" ->
-      """WITH tc AS (
-        | SELECT source, w, CAST(count(*) AS BIGINT) AS c FROM (
-        |  SELECT source, unnest(string_split(lower(text), ' ')) AS w
-        |  FROM documents) GROUP BY source, w),
-        |v AS (
-        | SELECT w FROM (SELECT w, sum(c) AS n FROM tc GROUP BY w)
-        | ORDER BY n DESC, w LIMIT 20)
-        |SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens,
-        | CAST(sum(CASE WHEN v.w IS NULL THEN c ELSE 0 END) AS BIGINT)
-        |   AS n_oov,
-        | CAST(count(CASE WHEN v.w IS NULL THEN 1 END) AS BIGINT)
-        |   AS oov_types,
-        | CAST(sum(CASE WHEN v.w IS NULL THEN c ELSE 0 END) * 10000
-        |   // sum(c) AS BIGINT) AS oov_bp
-        |FROM tc LEFT JOIN v ON tc.w = v.w
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    "q195_langid_kappa" -> {
-      val langSelects = graft.ops.TextOps.langMarkers.map { case (l, ws) =>
-        s"${TextQ.langCountSql(ws)} AS s_$l"
-      }.mkString(",\n  ")
-      s"""WITH feat AS (
-         | SELECT lang, $langSelects FROM documents),
-         |lp AS (SELECT lang, ${TextQ.langPredSql} AS pred_lang FROM feat),
-         |cells AS (
-         | SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS c
-         | FROM lp GROUP BY lang, pred_lang),
-         |t AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM cells),
-         |ag AS (SELECT CAST(coalesce(sum(c), 0) AS BIGINT) AS agree
-         | FROM cells WHERE lang = pred_lang),
-         |rm AS (SELECT lang, CAST(sum(c) AS BIGINT) AS rc
-         | FROM cells GROUP BY lang),
-         |cm AS (SELECT pred_lang, CAST(sum(c) AS BIGINT) AS cc
-         | FROM cells GROUP BY pred_lang),
-         |pe AS (SELECT CAST(coalesce(sum(rc * cc), 0) AS BIGINT) AS pe_n2
-         | FROM rm JOIN cm ON rm.lang = cm.pred_lang)
-         |SELECT n, agree,
-         | CASE WHEN n * n <> pe_n2
-         |   THEN (agree * n - pe_n2) * 10000 // (n * n - pe_n2) END
-         |  AS kappa_bp
-         |FROM t, ag, pe""".stripMargin
-    },
-
-    "q137_langid_confusion" -> {
-      val langSelects = graft.ops.TextOps.langMarkers.map { case (l, ws) =>
-        s"${TextQ.langCountSql(ws)} AS s_$l"
-      }.mkString(",\n  ")
-      s"""WITH feat AS (
-         | SELECT lang, $langSelects FROM documents),
-         |lp AS (SELECT lang, ${TextQ.langPredSql} AS pred_lang FROM feat)
-         |SELECT lang, pred_lang, count(*) AS n
-         |FROM lp GROUP BY lang, pred_lang
-         |ORDER BY lang, pred_lang""".stripMargin
-    },
-
-    "q138_cooccur_conf" ->
-      """WITH dw AS (
-        | SELECT DISTINCT doc_id, w FROM (
-        |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
-        |  FROM documents)),
-        |top AS (
-        | SELECT w, CAST(count(*) AS BIGINT) AS df FROM dw GROUP BY w
-        | ORDER BY df DESC, w LIMIT 20),
-        |f AS (SELECT dw.doc_id, dw.w, top.df FROM dw JOIN top USING (w)),
-        |p AS (
-        | SELECT a.w AS w_a, b.w AS w_b,
-        |  CAST(count(*) AS BIGINT) AS both_df,
-        |  max(a.df) AS df_a, max(b.df) AS df_b
-        | FROM f a JOIN f b ON a.doc_id = b.doc_id AND a.w < b.w
-        | GROUP BY 1, 2)
-        |SELECT w_a, w_b, both_df, df_a, df_b,
-        | CAST(both_df * 10000 // df_a AS BIGINT) AS conf_bp
-        |FROM p ORDER BY w_a, w_b""".stripMargin,
-
-    // the scan plan's oracle, verbatim: posting intersection and full
-    // scan must produce the identical ranked page
-    "q139_index_search" -> TextQ.oracles("q11_search_rank"),
-
-    // quadratic shingle-pair oracle (q16 family): exact at the driver's
-    // sf0.01 gate; skip in local sf0.1 checks
-    "q145_dedup_survivorship" -> (ScaleQ.dedupLabSql + "\n" +
-      """SELECT d.source, count(*) AS n_docs,
-        | CAST(sum(CASE WHEN lab.cluster IS NULL
-        |          OR lab.cluster = d.doc_id THEN 1 ELSE 0 END)
-        |   AS BIGINT) AS n_kept,
-        | CAST(sum(CASE WHEN lab.cluster IS NULL
-        |          OR lab.cluster = d.doc_id THEN 1 ELSE 0 END)
-        |   * 10000 // count(*) AS BIGINT) AS kept_bp
-        |FROM documents d LEFT JOIN lab ON d.doc_id = lab.node
-        |GROUP BY d.source ORDER BY d.source""".stripMargin),
-
-    "q144_proximity_rank" ->
-      """WITH t AS (
-        | SELECT doc_id, string_split(lower(text), ' ') AS toks
-        | FROM documents),
-        |p AS (
-        | SELECT doc_id, u['pos'] AS pos, u['w'] AS w FROM (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(toks) + 1),
-        |    i -> struct_pack(pos := i - 1,
-        |                     w := toks[CAST(i AS INTEGER)]))) AS u
-        |  FROM t)),
-        |a AS (SELECT doc_id, pos FROM p WHERE w = 'spark'),
-        |b AS (SELECT doc_id, pos FROM p WHERE w = 'join')
-        |SELECT a.doc_id,
-        | CAST(min(abs(a.pos - b.pos)) + 1 AS BIGINT) AS min_cover
-        |FROM a JOIN b USING (doc_id)
-        |GROUP BY a.doc_id
-        |ORDER BY min_cover, doc_id LIMIT 25""".stripMargin,
-
-    "q140_gap_quantiles" ->
-      """WITH g AS (
-        | SELECT user_id,
-        |  epoch_us(ts) - lag(epoch_us(ts)) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-        | FROM events),
-        |r AS (
-        | SELECT user_id, gap_us,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY gap_us) AS rn,
-        |  count(*) OVER (PARTITION BY user_id) AS n
-        | FROM g WHERE gap_us IS NOT NULL)
-        |SELECT user_id, CAST(max(n) AS BIGINT) AS n_gaps,
-        | CAST(max(CASE WHEN rn = (n + 3) // 4 THEN gap_us END)
-        |   AS BIGINT) AS p25_us,
-        | CAST(max(CASE WHEN rn = (n + 1) // 2 THEN gap_us END)
-        |   AS BIGINT) AS p50_us,
-        | CAST(max(CASE WHEN rn = (n * 19 + 19) // 20 THEN gap_us END)
-        |   AS BIGINT) AS p95_us
-        |FROM r GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q141_attribution" ->
-      """WITH w AS (
-        | SELECT event_id, user_id, event_type, epoch_us(ts) AS us,
-        |  last_value(CASE WHEN event_type = 'click' THEN event_id END
-        |    IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS click_id,
-        |  last_value(CASE WHEN event_type = 'click' THEN epoch_us(ts) END
-        |    IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS click_us
-        | FROM events)
-        |SELECT event_id AS purchase_id, user_id,
-        | CASE WHEN click_us IS NOT NULL AND us - click_us <= 604800000000
-        |      THEN click_id END AS click_id,
-        | CASE WHEN click_us IS NOT NULL AND us - click_us <= 604800000000
-        |      THEN us - click_us END AS gap_us
-        |FROM w WHERE event_type = 'purchase'
-        |ORDER BY purchase_id""".stripMargin,
-
-    "q143_bpe_encode" ->
-      """WITH dw AS (
-        | SELECT doc_id, w, count(*) AS c FROM (
-        |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
-        |  FROM documents)
-        | GROUP BY doc_id, w),
-        |v AS (SELECT DISTINCT w FROM dw),
-        |e AS (
-        | SELECT w, CAST(length(w) AS BIGINT) AS n_chars,
-        |  CAST(len(string_split(trim(
-        |    replace(replace(replace(replace(replace(replace(
-        |      ' ' || array_to_string(list_transform(
-        |        range(1, length(w) + 1),
-        |        i -> substr(w, CAST(i AS INTEGER), 1)), ' ') || ' ',
-        |      ' t h ', ' th '), ' h e ', ' he '), ' i n ', ' in '),
-        |      ' e r ', ' er '), ' a n ', ' an '), ' th e ', ' the ')),
-        |    ' ')) AS BIGINT) AS n_sub
-        | FROM v)
-        |SELECT dw.doc_id, CAST(sum(dw.c * e.n_chars) AS BIGINT) AS n_chars,
-        | CAST(sum(dw.c * e.n_sub) AS BIGINT) AS n_bpe,
-        | CAST(sum(dw.c * e.n_sub) * 10000 // sum(dw.c * e.n_chars)
-        |   AS BIGINT) AS compression_bp
-        |FROM dw JOIN e USING (w)
-        |GROUP BY dw.doc_id
-        |HAVING sum(dw.c * e.n_chars) >= 1
-        |ORDER BY dw.doc_id""".stripMargin,
-
-    "q142_custdist" ->
-      """WITH pc AS (
-        | SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-        | FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-        | GROUP BY c.c_custkey)
-        |SELECT c_count, count(*) AS custdist
-        |FROM pc GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q135_source_vocab_jaccard" ->
-      """WITH v AS (
-        | SELECT DISTINCT source, w FROM (
-        |  SELECT source, unnest(string_split(lower(text), ' ')) AS w
-        |  FROM documents)),
-        |s AS (
-        | SELECT source, CAST(count(*) AS BIGINT) AS sz
-        | FROM v GROUP BY source),
-        |i AS (
-        | SELECT a.source AS src_a, b.source AS src_b,
-        |  CAST(count(*) AS BIGINT) AS inter
-        | FROM v a JOIN v b ON a.w = b.w AND a.source < b.source
-        | GROUP BY 1, 2)
-        |SELECT src_a, src_b, inter,
-        | CAST(inter * 10000 // (sa.sz + sb.sz - inter) AS BIGINT)
-        |   AS jaccard_bp
-        |FROM i JOIN s sa ON sa.source = i.src_a
-        |JOIN s sb ON sb.source = i.src_b
-        |ORDER BY src_a, src_b""".stripMargin,
-
-    // i is 1-based (DuckDB-local); the mixer uses i-1 to match the
-    // engine's 0-based positions, mask_pos_sum reports 1-based = i.
-    "q184_mlm_mask" ->
-      """WITH d AS (
-        | SELECT doc_id, string_split(lower(text), ' ') AS tks
-        | FROM documents),
-        |e AS (
-        | SELECT doc_id, unnest(range(1, len(tks) + 1)) AS i, tks
-        | FROM d),
-        |mk AS (
-        | SELECT doc_id, i, len(tks[i]) AS tklen,
-        |  ((doc_id * 48271 + (i - 1) * 16807 + 12345) % 2147483647)
-        |    * 48271 % 2147483647 % 20 < 3 AS masked
-        | FROM e)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        | CAST(sum(CASE WHEN masked THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS n_masked,
-        | CAST(sum(CASE WHEN masked THEN i ELSE 0 END) AS BIGINT)
-        |   AS mask_pos_sum,
-        | CAST(sum(CASE WHEN masked THEN tklen ELSE 0 END) AS BIGINT)
-        |   AS mask_chars
-        |FROM mk GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // same mixer replay as q184; XOR via <> on booleans
-    "q222_private_counts" ->
-      """WITH r AS (
-        | SELECT source, lang = 'en' AS t,
-        |  (lang = 'en') <>
-        |   ((doc_id * 48271 + 12345) % 2147483647
-        |     * 48271 % 2147483647 % 4 = 0) AS rep
-        | FROM documents),
-        |g AS (
-        | SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS true_en,
-        |  CAST(sum(CASE WHEN rep THEN 1 ELSE 0 END) AS BIGINT) AS noisy_en
-        | FROM r GROUP BY source)
-        |SELECT source, n_docs, true_en, noisy_en,
-        | 4 * noisy_en - n_docs AS est_times2,
-        | 4 * noisy_en - n_docs - 2 * true_en AS err_times2
-        |FROM g ORDER BY source""".stripMargin,
-
-    "q260_blocklist_hits" ->
-      """WITH h AS (
-        | SELECT source,
-        |  CAST(len(list_filter(string_split(lower(text), ' '),
-        |    x -> x IN ('slow', 'hash', 'scan', 'merge'))) AS BIGINT) AS hits
-        | FROM documents)
-        |SELECT source, count(*) AS n_docs,
-        | CAST(sum(CASE WHEN hits > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS n_flagged,
-        | CAST(sum(hits) AS BIGINT) AS total_hits,
-        | CAST(CAST(sum(CASE WHEN hits > 0 THEN 1 ELSE 0 END) AS HUGEINT)
-        |   * 10000 // count(*) AS BIGINT) AS flagged_bp
-        |FROM h GROUP BY source ORDER BY source""".stripMargin,
-
-    // truth from the id arithmetic; the engine must rediscover it by
-    // parsing the JSON it was handed
-    "q261_chat_schema_gate" ->
-      """SELECT CASE doc_id % 4 WHEN 2 THEN 'missing_role'
-        |  WHEN 3 THEN 'empty_content' WHEN 1 THEN 'bad_alternation'
-        |  ELSE 'ok' END AS violation,
-        | count(*) AS n_docs, CAST(sum(doc_id) AS BIGINT) AS id_checksum
-        |FROM documents GROUP BY 1 ORDER BY violation""".stripMargin,
-
-    "q262_krippendorff_alpha" ->
+    }, oracle =
       """WITH d AS (
         | SELECT doc_id,
         |  (instr('0123456789abcdef', substr(
@@ -1684,6 +1609,11 @@ object CurateQ {
         |SELECT o.n_units, o.do_num, e.de_num,
         | 10000 - CAST(CAST(o.do_num AS HUGEINT)
         |   * (2 * o.n_units - 1) * 10000 // e.de_num AS BIGINT) AS alpha_bp
-        |FROM o, e""".stripMargin,
+        |FROM o, e""".stripMargin),
   )
+
+  /** q171's target mixture (basis points, sums to 10000) — one source of
+    * truth for the query and its oracle. */
+  private val mixtureBp: Seq[(String, Long)] = (0 to 19).map(i =>
+    ("src" + i, if (i < 5) 1000L else if (i < 10) 500L else 250L))
 }

@@ -10,10 +10,10 @@ import graft.Tables._
   * streaming windowed agg, SURVEY.md R1). */
 object EtlQ {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val all: Seq[Q] = Seq(
     // Semi-structured extraction: pull props.k out of the JSON string and
     // aggregate — from_json/get_json_object stays codegen'd in the scan.
-    "q22_json_agg" -> ((s, dir) => {
+    Q("q22_json_agg", (s, dir) => {
       t(s, dir, "events")
         .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
         .groupBy("event_type")
@@ -21,16 +21,23 @@ object EtlQ {
           count(lit(1)).as("n"),
           max(col("k")).cast("long").as("max_k"))
         .orderBy("event_type")
-    }),
+    }, oracle =
+      """SELECT event_type,
+        | CAST(sum(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS BIGINT) AS sum_k,
+        | count(*) AS n,
+        | CAST(max(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS BIGINT) AS max_k
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
 
     // Display formatting (app.py:23-32): timestamp → "Jan 01, 2024 at 12:09 AM".
-    "q23_date_display" -> ((s, dir) => {
+    Q("q23_date_display", (s, dir) => {
       t(s, dir, "events")
         .select(col("event_id"),
           date_format(col("ts"), "MMM dd, yyyy 'at' hh:mm a").as("display"))
         .orderBy("event_id")
         .limit(100)
-    }),
+    }, oracle =
+      """SELECT event_id, strftime(ts, '%b %d, %Y at %I:%M %p') AS display
+        |FROM events ORDER BY event_id LIMIT 100""".stripMargin),
 
     // In-engine .docx binary decode, driven end-to-end under the driver
     // gate: each document is packed into a REAL OOXML zip (a field table
@@ -41,7 +48,7 @@ object EtlQ {
     // directly — any zip, escaping, DOM-order, or synonym-mapping defect
     // breaks the hash. Decode is per-row in the executors; at 100 TB the
     // binary column never moves to the driver.
-    "q175_docx_roundtrip" -> ((s, dir) => {
+    Q("q175_docx_roundtrip", (s, dir) => {
       import s.implicits._
       val decoded = docText(s, dir)
         .map { case (id, text) =>
@@ -65,7 +72,16 @@ object EtlQ {
           col("rec_venue"), col("rec_date"),
           md5(col("para").cast("binary")).as("para_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // The roundtrip is lossless by construction, so every output is
+      // directly reconstructable — the oracle never sees a zip byte, which
+      // is the point: any encode/decode defect surfaces as a hash mismatch.
+      """SELECT doc_id, CAST(1 AS BIGINT) AS n_records,
+        | 'Event ' || CAST(doc_id AS VARCHAR) AS rec_name,
+        | 'Hall & <' || CAST(doc_id AS VARCHAR) || '>' AS rec_venue,
+        | '2020-01-01' AS rec_date,
+        | md5(text || ' <&"njk>') AS para_md5
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // In-engine PDF text decode under the driver gate, same discipline
     // as q175: each doc becomes a real one-page PDF (labeled lines +
@@ -74,7 +90,7 @@ object EtlQ {
     // filter paths gate-checked — then decoded and fed to the pdf_spider
     // line state machine. The oracle reconstructs everything from the
     // source text; it never sees a PDF byte.
-    "q176_pdf_roundtrip" -> ((s, dir) => {
+    Q("q176_pdf_roundtrip", (s, dir) => {
       import s.implicits._
       docText(s, dir)
         .map { case (id, text) =>
@@ -97,7 +113,16 @@ object EtlQ {
           md5(col("description").cast("binary")).as("desc_md5"),
           md5(col("joined").cast("binary")).as("lines_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id, CAST(3 AS BIGINT) AS n_lines,
+        | CAST(1 AS BIGINT) AS n_records,
+        | 'Event ' || CAST(doc_id AS VARCHAR) AS rec_name,
+        | 'Hall (njk) \ ' || CAST(doc_id AS VARCHAR) AS rec_venue,
+        | md5(substr(text, 1, 500)) AS desc_md5,
+        | md5('Name: Event ' || CAST(doc_id AS VARCHAR) || chr(10) ||
+        |   'Venue: Hall (njk) \ ' || CAST(doc_id AS VARCHAR) || chr(10) ||
+        |   text) AS lines_md5
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // ENCRYPTED PDF decode under the driver gate — the r11 "missing #2"
     // perimeter made real (the reference opens these silently via
@@ -113,7 +138,7 @@ object EtlQ {
     // object-key salt produces garbage that breaks the md5-of-lines
     // hash. The oracle reconstructs the lines from the source text —
     // it never sees a cipher byte. Per-row executor work.
-    "q285_pdf_encrypted" -> ((s, dir) => {
+    Q("q285_pdf_encrypted", (s, dir) => {
       import s.implicits._
       docText(s, dir)
         .map { case (id, text) =>
@@ -132,7 +157,14 @@ object EtlQ {
         .select(col("doc_id"), col("mode"), col("n_lines"),
           md5(col("joined").cast("binary")).as("lines_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id,
+        | CASE doc_id % 4 WHEN 0 THEN 'rc4-40' WHEN 1 THEN 'rc4-128'
+        |   WHEN 2 THEN 'aes-128' ELSE 'aes-256' END AS mode,
+        | CAST(2 AS BIGINT) AS n_lines,
+        | md5('Name: Event ' || CAST(doc_id AS VARCHAR) || chr(10) || text)
+        |   AS lines_md5
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // In-engine .xlsx binary decode under the driver gate, closing S8
     // the way q175 closed S9: each doc becomes a real OOXML workbook —
@@ -144,7 +176,7 @@ object EtlQ {
     // exact oracle actually checks. A numeric Price cell exercises the
     // raw-<v> path (no float roundtrip). Decode is per-row executor
     // work; the workbook bytes never visit the driver.
-    "q177_xlsx_roundtrip" -> ((s, dir) => {
+    Q("q177_xlsx_roundtrip", (s, dir) => {
       import s.implicits._
       docText(s, dir)
         .map { case (id, text) =>
@@ -172,7 +204,17 @@ object EtlQ {
           col("rec_name"), col("rec_venue"), col("price_cell"),
           md5(col("info").cast("binary")).as("info_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // Workbook structure and every extracted field are reconstructable
+      // from doc_id + text alone; the oracle never sees a zip byte.
+      """SELECT doc_id,
+        | CAST(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 2 END AS BIGINT) AS n_sheets,
+        | CAST(1 AS BIGINT) AS n_records,
+        | 'Event ' || CAST(doc_id AS VARCHAR) AS rec_name,
+        | 'Hall & <' || CAST(doc_id AS VARCHAR) || '>' AS rec_venue,
+        | CAST(doc_id % 100 AS VARCHAR) || '.25' AS price_cell,
+        | md5(text || ' <&"x>') AS info_md5
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // In-engine config-driven HTML extraction (U5) under the driver
     // gate: each doc renders to a real page — even ids the container-
@@ -184,7 +226,7 @@ object EtlQ {
     // oracle reconstructs every field from doc_id + text; entity
     // round-tripping (&amp; in names, hrefs, and the escaped body)
     // is what the hash actually checks.
-    "q180_html_extract" -> ((s, dir) => {
+    Q("q180_html_extract", (s, dir) => {
       import s.implicits._
       import graft.ingest.HtmlCodec
       docText(s, dir)
@@ -234,7 +276,15 @@ object EtlQ {
         .select(col("doc_id"), col("n_items"), col("name"), col("url"),
           md5(col("description").cast("binary")).as("desc_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id,
+        | CAST(CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 1 END AS BIGINT) AS n_items,
+        | 'Event ' || CAST(doc_id AS VARCHAR) || ' & Friends' AS name,
+        | CASE WHEN doc_id % 2 = 0
+        |      THEN '/venues/' || CAST(doc_id AS VARCHAR) || '?ref=x&b=2'
+        |      ELSE '/e/' || CAST(doc_id AS VARCHAR) END AS url,
+        | md5(text) AS desc_md5
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // The XPath slice of U5 under the driver gate: the two reference
     // site shapes HtmlCodec previously threw on. Even ids render the
@@ -248,7 +298,7 @@ object EtlQ {
     // the description taken by .//br[1]/following-sibling::text(),
     // which DOES hit the getall-strip-join path. The oracle
     // reconstructs every field from doc_id + text.
-    "q202_xpath_extract" -> ((s, dir) => {
+    Q("q202_xpath_extract", (s, dir) => {
       import s.implicits._
       import graft.ingest.HtmlCodec
       docText(s, dir)
@@ -305,7 +355,22 @@ object EtlQ {
         .select(col("doc_id"), col("n_items"), col("name"), col("url"),
           col("extra"), md5(col("description").cast("binary")).as("desc_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id,
+        | CAST(CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 1 END AS BIGINT) AS n_items,
+        | CASE WHEN doc_id % 2 = 0
+        |      THEN 'Event ' || CAST(doc_id AS VARCHAR) || ' & Co'
+        |      ELSE 'Hotel ' || CAST(doc_id AS VARCHAR) END AS name,
+        | CASE WHEN doc_id % 2 = 0
+        |      THEN '/pp/' || CAST(doc_id AS VARCHAR) || '?a=1&b=2'
+        |      ELSE 'https://h/' || CAST(doc_id AS VARCHAR) END AS url,
+        | CASE WHEN doc_id % 2 = 0
+        |      THEN 'DATE-' || CAST(doc_id AS VARCHAR)
+        |      ELSE 'Addr ' || CAST(doc_id AS VARCHAR) END AS extra,
+        | CASE WHEN doc_id % 2 = 0
+        |      THEN md5('First: ' || text)
+        |      ELSE md5(text || ' tail-' || CAST(doc_id AS VARCHAR)) END AS desc_md5
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // Every PDF stream filter AND length encoding under one driver
     // hash: the same record rides through flate / raw / ASCIIHex /
@@ -318,7 +383,7 @@ object EtlQ {
     // this is the filter-perimeter gate). The mode name rides in the
     // output, so a misrouted or silently-wrong codec can't hide
     // behind a lucky decode. Per-row executor work, no shuffle.
-    "q207_pdf_filters" -> ((s, dir) => {
+    Q("q207_pdf_filters", (s, dir) => {
       import s.implicits._
       docText(s, dir)
         .map { case (id, text) =>
@@ -354,7 +419,19 @@ object EtlQ {
         .select(col("doc_id"), col("filter"), col("n_lines"),
           md5(col("joined").cast("binary")).as("lines_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id,
+        | CASE doc_id % 12 WHEN 0 THEN 'flate' WHEN 1 THEN 'raw'
+        |      WHEN 2 THEN 'ahx' WHEN 3 THEN 'rle' WHEN 4 THEN 'lzw'
+        |      WHEN 5 THEN 'a85' WHEN 6 THEN 'a85+flate'
+        |      WHEN 7 THEN 'flate+predpng' WHEN 8 THEN 'flate+pred2'
+        |      WHEN 9 THEN 'indirect' WHEN 10 THEN 'indirect-raw'
+        |      ELSE 'objstm'
+        | END AS filter,
+        | CAST(2 AS BIGINT) AS n_lines,
+        | md5('Name: Event ' || CAST(doc_id AS VARCHAR) || chr(10) ||
+        |   text) AS lines_md5
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // The whole binary-ingest perimeter behind ONE content-dispatched
     // front door: each doc is packed as docx, pdf, xlsx, or CSV by
@@ -364,7 +441,7 @@ object EtlQ {
     // hide behind a lucky parse. CSV exercises RFC-4180 quoting
     // (embedded comma + ""-escaped quote) and CRLF; pdf flows through
     // the line state machine (500-char description cap, the F7 rule).
-    "q181_format_dispatch" -> ((s, dir) => {
+    Q("q181_format_dispatch", (s, dir) => {
       import s.implicits._
       import graft.ingest.{DocParse, DocxCodec, PdfCodec, XlsxCodec}
       docText(s, dir)
@@ -398,7 +475,18 @@ object EtlQ {
           col("venue"), col("event_date"),
           md5(col("description").cast("binary")).as("desc_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id,
+        | CASE doc_id % 4 WHEN 0 THEN 'docx' WHEN 1 THEN 'pdf'
+        |      WHEN 2 THEN 'xlsx' ELSE 'csv' END AS fmt,
+        | CAST(1 AS BIGINT) AS n_records,
+        | 'Event ' || CAST(doc_id AS VARCHAR) AS name,
+        | 'Hall ' || CAST(doc_id AS VARCHAR) AS venue,
+        | '2020-01-01' AS event_date,
+        | CASE WHEN doc_id % 4 = 1 THEN md5(substr(text, 1, 500))
+        |      WHEN doc_id % 4 = 3 THEN md5(text || ', "q"')
+        |      ELSE md5(text) END AS desc_md5
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // POISON-PILL TOLERANCE for binary ingest (r12 verdict #3): the
     // q181 dispatch with corruption PLANTED by arithmetic the oracle
@@ -412,7 +500,7 @@ object EtlQ {
     // honestly: the job finishes AND reports what it skipped. A clean
     // doc landing in quarantine fails loudly (the require), so the
     // tolerance can't mask a codec regression.
-    "q293_binary_quarantine" -> ((s, dir) => {
+    Q("q293_binary_quarantine", (s, dir) => {
       import s.implicits._
       import graft.ingest.{DocParse, DocxCodec, PdfCodec, XlsxCodec}
       docText(s, dir)
@@ -448,7 +536,17 @@ object EtlQ {
         }
         .toDF("doc_id", "status", "n_records", "name")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // quarantine truth from id arithmetic: exactly the doc_id % 7 == 3
+      // rows are unreadable; everything else parses one record
+      """SELECT doc_id,
+        | CASE WHEN doc_id % 7 = 3 THEN 'quarantined' ELSE 'ok' END
+        |   AS status,
+        | CAST(CASE WHEN doc_id % 7 = 3 THEN 0 ELSE 1 END AS BIGINT)
+        |   AS n_records,
+        | CASE WHEN doc_id % 7 = 3 THEN ''
+        |      ELSE 'Event ' || CAST(doc_id AS VARCHAR) END AS name
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // INCREMENTALLY UPDATED PDFs (PDF 32000-1 §7.5.6) — what every
     // Acrobat save-in-place/signature produces: the new object
@@ -461,7 +559,7 @@ object EtlQ {
     // xref-chain liveness, 3 lines), with the live text under the
     // driver hash. A liveness slip in either direction breaks the
     // 5-vs-3 split or the md5.
-    "q303_pdf_incremental" -> ((s, dir) => {
+    Q("q303_pdf_incremental", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -479,7 +577,16 @@ object EtlQ {
         .select(col("doc_id"), col("n_lines_all"), col("n_lines_live"),
           md5(col("live_text").cast("binary")).as("live_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // the base contributes 2 lines, the update 3; only the update's
+      // text is live under the xref chain
+      """SELECT doc_id,
+        | CAST(5 AS BIGINT) AS n_lines_all,
+        | CAST(3 AS BIGINT) AS n_lines_live,
+        | md5('Name: Updated ' || CAST(doc_id AS VARCHAR) || chr(10) ||
+        |   text || chr(10) || 'Status: amended') AS live_md5
+        |FROM documents WHERE length(text) > 0
+        |ORDER BY doc_id""".stripMargin),
 
     // CROSS-REFERENCE STREAMS (PDF 32000-1 §7.5.8) in the liveness
     // walk — the post-2005 majority layout q303 couldn't see (r13
@@ -494,7 +601,7 @@ object EtlQ {
     // 5-all/3-live contract as q303; a parse slip in W/Index/typing
     // or a /Prev break across the shape boundary shifts the counts or
     // the live md5.
-    "q304_pdf_xref_stream" -> ((s, dir) => {
+    Q("q304_pdf_xref_stream", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -527,17 +634,31 @@ object EtlQ {
           col("n_lines_live"),
           md5(col("live_text").cast("binary")).as("live_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // same 5/3 contract as q303; chain shape is pure id arithmetic
+      """SELECT doc_id,
+        | CASE doc_id % 3 WHEN 0 THEN 'stream+stream'
+        |      WHEN 1 THEN 'classic+stream'
+        |      ELSE 'stream+classic' END AS chain,
+        | CAST(5 AS BIGINT) AS n_lines_all,
+        | CAST(3 AS BIGINT) AS n_lines_live,
+        | md5('Name: Updated ' || CAST(doc_id AS VARCHAR) || chr(10) ||
+        |   text || chr(10) || 'Status: amended') AS live_md5
+        |FROM documents WHERE length(text) > 0
+        |ORDER BY doc_id""".stripMargin),
 
     // Hourly rollup per event type — batch twin of the Structured Streaming
     // windowed aggregation (graft.streaming); decimal sum for exactness.
-    "q24_hourly_rollup" -> ((s, dir) => {
+    Q("q24_hourly_rollup", (s, dir) => {
       t(s, dir, "events")
         .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value"), 2).as("sum_value"))
         .orderBy("hour", "event_type")
         .limit(500)
-    }),
+    }, oracle =
+      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
+        | CAST(sum(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS sum_value
+        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type LIMIT 500""".stripMargin),
 
     // Record linkage: blocking + edit-distance verification (the
     // Fellegi–Sunter pipeline shape every entity-resolution ETL runs).
@@ -556,7 +677,7 @@ object EtlQ {
     // corruption-class accuracy report a linkage run logs. Names are
     // fixed-width 18 chars ("Customer#%09d"), so the corruption
     // positions are engine-identical literals.
-    "q221_record_linkage" -> ((s, dir) => {
+    Q("q221_record_linkage", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val c = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
@@ -591,160 +712,7 @@ object EtlQ {
           ldiv(col("n_correct") * lit(10000L), col("n_records"))
             .as("accuracy_bp"))
         .orderBy("cls")
-    }),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q22_json_agg" ->
-      """SELECT event_type,
-        | CAST(sum(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS BIGINT) AS sum_k,
-        | count(*) AS n,
-        | CAST(max(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS BIGINT) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q23_date_display" ->
-      """SELECT event_id, strftime(ts, '%b %d, %Y at %I:%M %p') AS display
-        |FROM events ORDER BY event_id LIMIT 100""".stripMargin,
-
-    "q24_hourly_rollup" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-        | CAST(sum(CAST(value AS DECIMAL(30,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type LIMIT 500""".stripMargin,
-
-    // The roundtrip is lossless by construction, so every output is
-    // directly reconstructable — the oracle never sees a zip byte, which
-    // is the point: any encode/decode defect surfaces as a hash mismatch.
-    "q175_docx_roundtrip" ->
-      """SELECT doc_id, CAST(1 AS BIGINT) AS n_records,
-        | 'Event ' || CAST(doc_id AS VARCHAR) AS rec_name,
-        | 'Hall & <' || CAST(doc_id AS VARCHAR) || '>' AS rec_venue,
-        | '2020-01-01' AS rec_date,
-        | md5(text || ' <&"njk>') AS para_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // Workbook structure and every extracted field are reconstructable
-    // from doc_id + text alone; the oracle never sees a zip byte.
-    "q177_xlsx_roundtrip" ->
-      """SELECT doc_id,
-        | CAST(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 2 END AS BIGINT) AS n_sheets,
-        | CAST(1 AS BIGINT) AS n_records,
-        | 'Event ' || CAST(doc_id AS VARCHAR) AS rec_name,
-        | 'Hall & <' || CAST(doc_id AS VARCHAR) || '>' AS rec_venue,
-        | CAST(doc_id % 100 AS VARCHAR) || '.25' AS price_cell,
-        | md5(text || ' <&"x>') AS info_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q181_format_dispatch" ->
-      """SELECT doc_id,
-        | CASE doc_id % 4 WHEN 0 THEN 'docx' WHEN 1 THEN 'pdf'
-        |      WHEN 2 THEN 'xlsx' ELSE 'csv' END AS fmt,
-        | CAST(1 AS BIGINT) AS n_records,
-        | 'Event ' || CAST(doc_id AS VARCHAR) AS name,
-        | 'Hall ' || CAST(doc_id AS VARCHAR) AS venue,
-        | '2020-01-01' AS event_date,
-        | CASE WHEN doc_id % 4 = 1 THEN md5(substr(text, 1, 500))
-        |      WHEN doc_id % 4 = 3 THEN md5(text || ', "q"')
-        |      ELSE md5(text) END AS desc_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // the base contributes 2 lines, the update 3; only the update's
-    // text is live under the xref chain
-    "q303_pdf_incremental" ->
-      """SELECT doc_id,
-        | CAST(5 AS BIGINT) AS n_lines_all,
-        | CAST(3 AS BIGINT) AS n_lines_live,
-        | md5('Name: Updated ' || CAST(doc_id AS VARCHAR) || chr(10) ||
-        |   text || chr(10) || 'Status: amended') AS live_md5
-        |FROM documents WHERE length(text) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    // same 5/3 contract as q303; chain shape is pure id arithmetic
-    "q304_pdf_xref_stream" ->
-      """SELECT doc_id,
-        | CASE doc_id % 3 WHEN 0 THEN 'stream+stream'
-        |      WHEN 1 THEN 'classic+stream'
-        |      ELSE 'stream+classic' END AS chain,
-        | CAST(5 AS BIGINT) AS n_lines_all,
-        | CAST(3 AS BIGINT) AS n_lines_live,
-        | md5('Name: Updated ' || CAST(doc_id AS VARCHAR) || chr(10) ||
-        |   text || chr(10) || 'Status: amended') AS live_md5
-        |FROM documents WHERE length(text) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    // quarantine truth from id arithmetic: exactly the doc_id % 7 == 3
-    // rows are unreadable; everything else parses one record
-    "q293_binary_quarantine" ->
-      """SELECT doc_id,
-        | CASE WHEN doc_id % 7 = 3 THEN 'quarantined' ELSE 'ok' END
-        |   AS status,
-        | CAST(CASE WHEN doc_id % 7 = 3 THEN 0 ELSE 1 END AS BIGINT)
-        |   AS n_records,
-        | CASE WHEN doc_id % 7 = 3 THEN ''
-        |      ELSE 'Event ' || CAST(doc_id AS VARCHAR) END AS name
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q180_html_extract" ->
-      """SELECT doc_id,
-        | CAST(CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 1 END AS BIGINT) AS n_items,
-        | 'Event ' || CAST(doc_id AS VARCHAR) || ' & Friends' AS name,
-        | CASE WHEN doc_id % 2 = 0
-        |      THEN '/venues/' || CAST(doc_id AS VARCHAR) || '?ref=x&b=2'
-        |      ELSE '/e/' || CAST(doc_id AS VARCHAR) END AS url,
-        | md5(text) AS desc_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q207_pdf_filters" ->
-      """SELECT doc_id,
-        | CASE doc_id % 12 WHEN 0 THEN 'flate' WHEN 1 THEN 'raw'
-        |      WHEN 2 THEN 'ahx' WHEN 3 THEN 'rle' WHEN 4 THEN 'lzw'
-        |      WHEN 5 THEN 'a85' WHEN 6 THEN 'a85+flate'
-        |      WHEN 7 THEN 'flate+predpng' WHEN 8 THEN 'flate+pred2'
-        |      WHEN 9 THEN 'indirect' WHEN 10 THEN 'indirect-raw'
-        |      ELSE 'objstm'
-        | END AS filter,
-        | CAST(2 AS BIGINT) AS n_lines,
-        | md5('Name: Event ' || CAST(doc_id AS VARCHAR) || chr(10) ||
-        |   text) AS lines_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q202_xpath_extract" ->
-      """SELECT doc_id,
-        | CAST(CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 1 END AS BIGINT) AS n_items,
-        | CASE WHEN doc_id % 2 = 0
-        |      THEN 'Event ' || CAST(doc_id AS VARCHAR) || ' & Co'
-        |      ELSE 'Hotel ' || CAST(doc_id AS VARCHAR) END AS name,
-        | CASE WHEN doc_id % 2 = 0
-        |      THEN '/pp/' || CAST(doc_id AS VARCHAR) || '?a=1&b=2'
-        |      ELSE 'https://h/' || CAST(doc_id AS VARCHAR) END AS url,
-        | CASE WHEN doc_id % 2 = 0
-        |      THEN 'DATE-' || CAST(doc_id AS VARCHAR)
-        |      ELSE 'Addr ' || CAST(doc_id AS VARCHAR) END AS extra,
-        | CASE WHEN doc_id % 2 = 0
-        |      THEN md5('First: ' || text)
-        |      ELSE md5(text || ' tail-' || CAST(doc_id AS VARCHAR)) END AS desc_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q176_pdf_roundtrip" ->
-      """SELECT doc_id, CAST(3 AS BIGINT) AS n_lines,
-        | CAST(1 AS BIGINT) AS n_records,
-        | 'Event ' || CAST(doc_id AS VARCHAR) AS rec_name,
-        | 'Hall (njk) \ ' || CAST(doc_id AS VARCHAR) AS rec_venue,
-        | md5(substr(text, 1, 500)) AS desc_md5,
-        | md5('Name: Event ' || CAST(doc_id AS VARCHAR) || chr(10) ||
-        |   'Venue: Hall (njk) \ ' || CAST(doc_id AS VARCHAR) || chr(10) ||
-        |   text) AS lines_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q285_pdf_encrypted" ->
-      """SELECT doc_id,
-        | CASE doc_id % 4 WHEN 0 THEN 'rc4-40' WHEN 1 THEN 'rc4-128'
-        |   WHEN 2 THEN 'aes-128' ELSE 'aes-256' END AS mode,
-        | CAST(2 AS BIGINT) AS n_lines,
-        | md5('Name: Event ' || CAST(doc_id AS VARCHAR) || chr(10) || text)
-        |   AS lines_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q221_record_linkage" ->
+    }, oracle =
       """WITH dirty AS (
         | SELECT c_custkey AS d_id, c_nationkey AS d_nat,
         |  c_custkey % 4 AS cls,
@@ -777,6 +745,6 @@ object EtlQ {
         |   AS accuracy_bp
         |FROM best b JOIN tot t ON t.cls = b.cls
         |GROUP BY b.cls, t.n_records
-        |ORDER BY b.cls""".stripMargin,
+        |ORDER BY b.cls""".stripMargin),
   )
 }

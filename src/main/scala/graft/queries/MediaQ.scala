@@ -54,7 +54,7 @@ import graft.multimodal.BinaryOps.{pixelChecksum, sampleChecksum}
   * envelope (scan-fused, CPU-linear; ×10/×100 probes in SCALING.md). */
 object MediaQ {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val all: Seq[Q] = Seq(
 
     // The JPEG codec under the driver hash. Image-kind docs (id%3==0)
     // become one REAL baseline JPEG each — byte k of the text renders as
@@ -65,7 +65,7 @@ object MediaQ {
     // every sample before stats are emitted — a dual-decoder certificate
     // in the hot row. A defect anywhere (entropy coding, DCT, zigzag,
     // marker walk, restart reset) shifts a pixel and breaks the hash.
-    "q281_jpeg_decode" -> ((s, dir) => {
+    Q("q281_jpeg_decode", (s, dir) => {
       import s.implicits._
       docText(s, dir, col("doc_id") % 3 === 0 && length(col("text")) > 0)
         .map { case (id, text) =>
@@ -100,7 +100,23 @@ object MediaQ {
         .toDF("doc_id", "restart_interval", "width", "height",
           "pix_sum", "pos_checksum")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // pixel math for one constant 8×8 block j of value v in an 8-row
+      // image of width 8·len: Σ pix = 64v; Σ (i+1)·pix over the block =
+      // v · (1792·len + 512·j + 288)  [ Σ_y Σ_x (y·8len + 8j + x + 1) ]
+      """SELECT doc_id,
+        | CAST((doc_id % 4) * 2 AS BIGINT) AS restart_interval,
+        | CAST(8 * length(text) AS BIGINT) AS width,
+        | CAST(8 AS BIGINT) AS height,
+        | CAST(64 * list_sum(list_transform(range(1, length(text) + 1),
+        |   i -> ord(substr(text, CAST(i AS INTEGER), 1)))) AS BIGINT)
+        |   AS pix_sum,
+        | CAST(list_sum(list_transform(range(1, length(text) + 1),
+        |   i -> ord(substr(text, CAST(i AS INTEGER), 1))
+        |      * (1792 * length(text) + 512 * (i - 1) + 288))) AS BIGINT)
+        |   AS pos_checksum
+        |FROM documents WHERE doc_id % 3 = 0 AND length(text) > 0
+        |ORDER BY doc_id""".stripMargin),
 
     // The PNG RASTER under the driver hash (r14 verdict #5 — the
     // IDAT-opaque perimeter retired): image docs become one real PNG
@@ -116,7 +132,7 @@ object MediaQ {
     // for the second image format. A defect anywhere (a filter
     // inverse, stride math, chunk reassembly, the zlib walk, the
     // interlace walk) shifts a pixel and breaks the hash.
-    "q319_png_decode" -> ((s, dir) => {
+    Q("q319_png_decode", (s, dir) => {
       import s.implicits._
       docText(s, dir, col("doc_id") % 3 === 1 && length(col("text")) > 0)
         .map { case (id, text) =>
@@ -153,7 +169,25 @@ object MediaQ {
         .toDF("doc_id", "width", "height", "n_idat", "pix_sum",
           "pos_checksum")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // pixel truth replayed directly: v(i,y) = (b_i + 3(i-1) + 7y) mod
+      // 256 over an 8-row image of width len; position of (i,y) is
+      // y·len + i (1-based)
+      """SELECT doc_id,
+        | CAST(length(text) AS BIGINT) AS width,
+        | CAST(8 AS BIGINT) AS height,
+        | CAST(1 + doc_id % 3 AS BIGINT) AS n_idat,
+        | CAST(list_sum(list_transform(range(1, length(text) + 1), i ->
+        |   list_sum(list_transform(range(0, 8), y ->
+        |     (ord(substr(text, CAST(i AS INTEGER), 1)) + 3 * (i - 1)
+        |       + 7 * y) % 256)))) AS BIGINT) AS pix_sum,
+        | CAST(list_sum(list_transform(range(1, length(text) + 1), i ->
+        |   list_sum(list_transform(range(0, 8), y ->
+        |     (y * length(text) + i) *
+        |     ((ord(substr(text, CAST(i AS INTEGER), 1)) + 3 * (i - 1)
+        |       + 7 * y) % 256))))) AS BIGINT) AS pos_checksum
+        |FROM documents WHERE doc_id % 3 = 1 AND length(text) > 0
+        |ORDER BY doc_id""".stripMargin),
 
     // Motion JPEG under the driver hash — q220's shape with a genuinely
     // COMPRESSED payload: video-kind docs become nf 16×8 gray frames of
@@ -161,7 +195,7 @@ object MediaQ {
     // MJPG AVI through encodeMjpg/decodeMjpg, and every even frame
     // reports exact checksums. A stride slip, frame misorder, or any
     // JPEG defect inside the RIFF walk breaks the hash.
-    "q282_mjpg_frames" -> ((s, dir) => {
+    Q("q282_mjpg_frames", (s, dir) => {
       import s.implicits._
       docText(s, dir, col("doc_id") % 3 === 2 && length(col("text")) > 1)
         .flatMap { case (id, text) =>
@@ -184,7 +218,28 @@ object MediaQ {
         }
         .toDF("doc_id", "n_frames", "frame_idx", "pix_sum", "pos_checksum")
         .orderBy("doc_id", "frame_idx")
-    }),
+    }, oracle =
+      // frame f: blocks v0 = char((2f) mod len), v1 = char((2f+1) mod len);
+      // pix_sum = 64(v0+v1); pos_checksum = 3872·v0 + 4384·v1
+      // [ Σ over a 16-wide block b: Σ_y Σ_x (16y + 8b + x + 1) = 3584 +
+      //   512b + 288 ]; only even frames are reported
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len,
+        |  3 + doc_id % 3 AS nf
+        | FROM documents WHERE doc_id % 3 = 2 AND length(text) > 1),
+        |fr AS (
+        | SELECT doc_id, text, len, nf, unnest(range(0, nf)) AS f
+        | FROM d),
+        |v AS (
+        | SELECT doc_id, nf, f,
+        |  ord(substr(text, CAST((2 * f) % len + 1 AS INTEGER), 1)) AS v0,
+        |  ord(substr(text, CAST((2 * f + 1) % len + 1 AS INTEGER), 1)) AS v1
+        | FROM fr WHERE f % 2 = 0)
+        |SELECT doc_id, CAST(nf AS BIGINT) AS n_frames,
+        | CAST(f AS BIGINT) AS frame_idx,
+        | CAST(64 * (v0 + v1) AS BIGINT) AS pix_sum,
+        | CAST(3872 * v0 + 4384 * v1 AS BIGINT) AS pos_checksum
+        |FROM v ORDER BY doc_id, frame_idx""".stripMargin),
 
     // G.711 under the driver hash — q217's shape through a COMPRESSED
     // (companded) codec: audio-kind docs carry their bytes as G.711
@@ -193,7 +248,7 @@ object MediaQ {
     // amplitude stats. The oracle recomputes every sample from the
     // published bit-field formulas; a segment/mantissa/sign slip in
     // either table breaks the hash.
-    "q283_g711_audio" -> ((s, dir) => {
+    Q("q283_g711_audio", (s, dir) => {
       import s.implicits._
       docText(s, dir, col("doc_id") % 3 === 1 && length(col("text")) > 0)
         .map { case (id, text) =>
@@ -216,7 +271,62 @@ object MediaQ {
         .toDF("doc_id", "law", "n_samples", "amp_sum", "pos_checksum",
           "peak_abs")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // µ-law decode of code b: u = 255-b; t = ((u%16)*8+132)*2^((u//16)%8)
+      //   - 132; value = -t if u >= 128 else t   (ITU G.711 / Sun g711.c)
+      // A-law decode of code b: a = xor(b,85); base = (a%16)*16; seg =
+      //   (a//16)%8; t = base+8 if seg=0 else (base+264)<<(seg-1);
+      //   value = t if a >= 128 else -t
+      """WITH s AS (
+        | SELECT doc_id, text, length(text) AS len,
+        |  doc_id % 2 = 0 AS mu
+        | FROM documents WHERE doc_id % 3 = 1 AND length(text) > 0),
+        |v AS (
+        | SELECT doc_id, mu, len,
+        |  list_transform(range(1, len + 1), i ->
+        |   CASE WHEN mu THEN
+        |    CASE WHEN (255 - ord(substr(text, CAST(i AS INTEGER), 1)))
+        |              >= 128
+        |     THEN -((((255 - ord(substr(text, CAST(i AS INTEGER), 1)))
+        |         % 16) * 8 + 132)
+        |        * (1 << (((255 - ord(substr(text, CAST(i AS INTEGER), 1)))
+        |            // 16) % 8)) - 132)
+        |     ELSE ((((255 - ord(substr(text, CAST(i AS INTEGER), 1)))
+        |         % 16) * 8 + 132)
+        |        * (1 << (((255 - ord(substr(text, CAST(i AS INTEGER), 1)))
+        |            // 16) % 8)) - 132)
+        |    END
+        |   ELSE
+        |    CASE WHEN xor(ord(substr(text, CAST(i AS INTEGER), 1)), 85)
+        |              >= 128
+        |     THEN (CASE WHEN ((xor(ord(substr(text, CAST(i AS INTEGER), 1)),
+        |            85) // 16) % 8) = 0
+        |       THEN (xor(ord(substr(text, CAST(i AS INTEGER), 1)), 85) % 16)
+        |            * 16 + 8
+        |       ELSE ((xor(ord(substr(text, CAST(i AS INTEGER), 1)), 85) % 16)
+        |            * 16 + 264)
+        |          * (1 << (((xor(ord(substr(text, CAST(i AS INTEGER), 1)),
+        |              85) // 16) % 8) - 1)) END)
+        |     ELSE -(CASE WHEN ((xor(ord(substr(text, CAST(i AS INTEGER), 1)),
+        |            85) // 16) % 8) = 0
+        |       THEN (xor(ord(substr(text, CAST(i AS INTEGER), 1)), 85) % 16)
+        |            * 16 + 8
+        |       ELSE ((xor(ord(substr(text, CAST(i AS INTEGER), 1)), 85) % 16)
+        |            * 16 + 264)
+        |          * (1 << (((xor(ord(substr(text, CAST(i AS INTEGER), 1)),
+        |              85) // 16) % 8) - 1)) END)
+        |    END
+        |   END) AS vals
+        | FROM s)
+        |SELECT doc_id,
+        | CASE WHEN mu THEN 'ulaw' ELSE 'alaw' END AS law,
+        | CAST(len AS BIGINT) AS n_samples,
+        | CAST(list_sum(vals) AS BIGINT) AS amp_sum,
+        | CAST(list_sum(list_transform(range(1, len + 1),
+        |   i -> i * vals[CAST(i AS INTEGER)])) AS BIGINT) AS pos_checksum,
+        | CAST(list_max(list_transform(vals, x -> abs(x))) AS BIGINT)
+        |   AS peak_abs
+        |FROM v ORDER BY doc_id""".stripMargin),
 
     // EXIF + orientation normalization under the driver hash — the
     // photo-corpus metadata pass: each image-kind doc becomes a REAL
@@ -231,7 +341,7 @@ object MediaQ {
     // the hash. The closed-form checksum per orientation is pinned
     // against brute force in ExifCodecSpec; the oracle recomputes it
     // per character. Per-row executor work.
-    "q286_exif_normalize" -> ((s, dir) => {
+    Q("q286_exif_normalize", (s, dir) => {
       import s.implicits._
       docText(s, dir, col("doc_id") % 3 === 0 && length(col("text")) > 0)
         .map { case (id, text) =>
@@ -275,7 +385,40 @@ object MediaQ {
         .toDF("doc_id", "byte_order", "orientation", "make", "model",
           "taken_at", "out_w", "out_h", "pix_sum", "pos_checksum")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // orientation o by (doc_id%12)/3 over {1,3,6,8}; transformed-image
+      // position weights per block j (0-based; i = j+1 is the 1-based SQL
+      // index, L = len):  o=1: 1792L+512j+288   o=3: 1792L+512(L-1-j)+288
+      //                   o=6: 4096j+2080       o=8: 4096(L-1-j)+2080
+      // (derivations pinned against brute force in ExifCodecSpec)
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len,
+        |  CASE (doc_id % 12) // 3 WHEN 0 THEN 1 WHEN 1 THEN 3
+        |    WHEN 2 THEN 6 ELSE 8 END AS o
+        | FROM documents WHERE doc_id % 3 = 0 AND length(text) > 0)
+        |SELECT doc_id,
+        | CASE WHEN doc_id % 2 = 1 THEN 'MM' ELSE 'II' END AS byte_order,
+        | CAST(o AS BIGINT) AS orientation,
+        | 'GraftCam ' || CAST(doc_id % 5 AS VARCHAR) AS make,
+        | 'M' || CAST(doc_id % 7 AS VARCHAR) AS model,
+        | '2026:08:16 00:00:' || lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0')
+        |   AS taken_at,
+        | CAST(CASE WHEN o IN (6, 8) THEN 8 ELSE 8 * len END AS BIGINT)
+        |   AS out_w,
+        | CAST(CASE WHEN o IN (6, 8) THEN 8 * len ELSE 8 END AS BIGINT)
+        |   AS out_h,
+        | CAST(64 * list_sum(list_transform(range(1, len + 1),
+        |   i -> ord(substr(text, CAST(i AS INTEGER), 1)))) AS BIGINT)
+        |   AS pix_sum,
+        | CAST(list_sum(list_transform(range(1, len + 1),
+        |   i -> ord(substr(text, CAST(i AS INTEGER), 1)) *
+        |    CASE o
+        |     WHEN 1 THEN 1792 * len + 512 * (i - 1) + 288
+        |     WHEN 3 THEN 1792 * len + 512 * (len - i) + 288
+        |     WHEN 6 THEN 4096 * (i - 1) + 2080
+        |     ELSE 4096 * (len - i) + 2080
+        |    END)) AS BIGINT) AS pos_checksum
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // The MP3 frame census under the driver hash: each audio-kind doc
     // synthesizes a REAL MPEG-1 Layer III stream (one frame per text
@@ -284,7 +427,7 @@ object MediaQ {
     // skip), then scan() walks it back. Totals are pure published-table
     // arithmetic — the oracle rebuilds them per character; a frame-length
     // slip desyncs the walk and the row refuses rather than mis-counting.
-    "q284_mp3_scan" -> ((s, dir) => {
+    Q("q284_mp3_scan", (s, dir) => {
       import s.implicits._
       docText(s, dir, col("doc_id") % 3 === 1 && length(col("text")) > 0)
         .map { case (id, text) =>
@@ -311,7 +454,35 @@ object MediaQ {
         .toDF("doc_id", "n_frames", "first_offset", "total_bytes",
           "bitrate_checksum", "pad_count", "duration_ms")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // frame k (char b): bitrate = BR[b % 14 + 1], padded = (b//16) % 2,
+      // frame_bytes = 144000·bitrate // 44100 + padded; ID3v2 prefix is
+      // 10 + 13·(doc_id % 5) bytes when doc_id % 5 != 0
+      """WITH br AS (SELECT [0,32,40,48,56,64,80,96,112,128,160,192,224,
+        |  256,320] AS t),
+        |d AS (
+        | SELECT doc_id, text, length(text) AS len,
+        |  CASE WHEN doc_id % 5 = 0 THEN 0
+        |       ELSE 10 + 13 * (doc_id % 5) END AS id3
+        | FROM documents WHERE doc_id % 3 = 1 AND length(text) > 0),
+        |v AS (
+        | SELECT doc_id, len, id3,
+        |  list_transform(range(1, len + 1), i ->
+        |   t[ord(substr(text, CAST(i AS INTEGER), 1)) % 14 + 2]) AS kbps,
+        |  list_transform(range(1, len + 1), i ->
+        |   (ord(substr(text, CAST(i AS INTEGER), 1)) // 16) % 2) AS pad
+        | FROM d, br)
+        |SELECT doc_id,
+        | CAST(len AS BIGINT) AS n_frames,
+        | CAST(id3 AS BIGINT) AS first_offset,
+        | CAST(list_sum(list_transform(range(1, len + 1), i ->
+        |   144000 * kbps[CAST(i AS INTEGER)] // 44100
+        |     + pad[CAST(i AS INTEGER)])) AS BIGINT) AS total_bytes,
+        | CAST(list_sum(list_transform(range(1, len + 1), i ->
+        |   i * kbps[CAST(i AS INTEGER)])) AS BIGINT) AS bitrate_checksum,
+        | CAST(list_sum(pad) AS BIGINT) AS pad_count,
+        | CAST(len * 1152 * 1000 // 44100 AS BIGINT) AS duration_ms
+        |FROM v ORDER BY doc_id""".stripMargin),
 
     // AAC ADTS frame census (r12 verdict #6) — the q284 walk for the
     // other dominant audio container: one ADTS frame per text byte
@@ -322,7 +493,7 @@ object MediaQ {
     // per character. A census, never a decode — the format stops
     // being a loud unknown and becomes typed metadata a corpus
     // pipeline can route on.
-    "q294_aac_scan" -> ((s, dir) => {
+    Q("q294_aac_scan", (s, dir) => {
       import s.implicits._
       docText(s, dir, col("doc_id") % 3 === 1 && length(col("text")) > 0)
         .map { case (id, text) =>
@@ -350,7 +521,32 @@ object MediaQ {
         .toDF("doc_id", "n_frames", "first_offset", "total_bytes",
           "profile_checksum", "channel_checksum", "duration_ms")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // frame k (char b): profile = b%4, channels = b%7+1, frame bytes =
+      // 8 + b%32; ID3v2 prefix = 10 + 11·(doc_id%4) when doc_id%4 != 0;
+      // sample rate = 14496-3 table at (doc_id%5)+2 (0-based)
+      """WITH sr AS (SELECT [96000,88200,64000,48000,44100,32000,24000,
+        |  22050,16000,12000,11025,8000,7350] AS t),
+        |d AS (
+        | SELECT doc_id, text, length(text) AS len,
+        |  CASE WHEN doc_id % 4 = 0 THEN 0
+        |       ELSE 10 + 11 * (doc_id % 4) END AS id3
+        | FROM documents WHERE doc_id % 3 = 1 AND length(text) > 0)
+        |SELECT doc_id,
+        | CAST(len AS BIGINT) AS n_frames,
+        | CAST(id3 AS BIGINT) AS first_offset,
+        | CAST(list_sum(list_transform(range(1, len + 1), i ->
+        |   8 + ord(substr(text, CAST(i AS INTEGER), 1)) % 32))
+        |  AS BIGINT) AS total_bytes,
+        | CAST(list_sum(list_transform(range(1, len + 1), i ->
+        |   i * (ord(substr(text, CAST(i AS INTEGER), 1)) % 4)))
+        |  AS BIGINT) AS profile_checksum,
+        | CAST(list_sum(list_transform(range(1, len + 1), i ->
+        |   i * (ord(substr(text, CAST(i AS INTEGER), 1)) % 7 + 1)))
+        |  AS BIGINT) AS channel_checksum,
+        | CAST(len * 1024 * 1000 //
+        |   t[CAST(doc_id % 5 + 3 AS INTEGER)] AS BIGINT) AS duration_ms
+        |FROM d, sr ORDER BY doc_id""".stripMargin),
 
     // H.264 Annex B NAL census (r12 verdict #6) — the stream-structure
     // walk for raw video: SPS + PPS + one slice NAL per text byte
@@ -359,7 +555,7 @@ object MediaQ {
     // reads the one-byte NAL headers back; the oracle rebuilds every
     // census number from character arithmetic. Keyframe positions are
     // what a sharding pipeline actually needs (split points).
-    "q295_h264_scan" -> ((s, dir) => {
+    Q("q295_h264_scan", (s, dir) => {
       import s.implicits._
       docText(s, dir, col("doc_id") % 3 === 2 && length(col("text")) > 0)
         .map { case (id, text) =>
@@ -384,7 +580,33 @@ object MediaQ {
         .toDF("doc_id", "n_nals", "n_idr", "n_slices", "total_bytes",
           "type_checksum", "ref_checksum")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // NAL k (char b): type = 5 if b%5=0 else 1, bytes = 1 + b%24 + 1;
+      // prefix SPS (7 bytes, type 7) + PPS (4 bytes, type 8); checksum
+      // weights are 1-based NAL positions (SPS=1, PPS=2, slices 3...)
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE doc_id % 3 = 2 AND length(text) > 0),
+        |v AS (
+        | SELECT doc_id, len,
+        |  list_transform(range(1, len + 1), i ->
+        |   CASE WHEN ord(substr(text, CAST(i AS INTEGER), 1)) % 5 = 0
+        |    THEN 5 ELSE 1 END) AS typ,
+        |  list_transform(range(1, len + 1), i ->
+        |   ord(substr(text, CAST(i AS INTEGER), 1)) % 24 + 2) AS nb
+        | FROM d)
+        |SELECT doc_id,
+        | CAST(len + 2 AS BIGINT) AS n_nals,
+        | CAST(len(list_filter(typ, t -> t = 5)) AS BIGINT) AS n_idr,
+        | CAST(len(list_filter(typ, t -> t = 1)) AS BIGINT) AS n_slices,
+        | CAST(7 + 4 + list_sum(nb) AS BIGINT) AS total_bytes,
+        | CAST(7 + 16 + list_sum(list_transform(range(1, len + 1), i ->
+        |   (i + 2) * typ[CAST(i AS INTEGER)])) AS BIGINT)
+        |   AS type_checksum,
+        | CAST(6 + list_sum(list_transform(typ, t ->
+        |   CASE WHEN t = 5 THEN 3 ELSE 2 END)) AS BIGINT)
+        |   AS ref_checksum
+        |FROM v ORDER BY doc_id""".stripMargin),
 
     // AVI CONTAINER → NAL CENSUS routing — the composition that turns
     // AviCodec's old H.264 refusal (AviCodec.scala fourcc perimeter)
@@ -394,7 +616,7 @@ object MediaQ {
     // slice (the VfW access-unit convention), later chunks one slice
     // each; keyframe (IDR) positions — the split points a sharding
     // pipeline needs — land in a 1-based position checksum.
-    "q296_avi_h264_census" -> ((s, dir) => {
+    Q("q296_avi_h264_census", (s, dir) => {
       import s.implicits._
       docText(s, dir, col("doc_id") % 3 === 2 && length(col("text")) > 0)
         .map { case (id, text) =>
@@ -427,7 +649,26 @@ object MediaQ {
         .toDF("doc_id", "fourcc", "n_chunks", "n_nals", "n_idr",
           "keyframe_checksum", "nal_bytes")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // chunk k (char b): slice NAL = 2 + b%24 bytes (header + payload),
+      // IDR when b%5=0; chunk 1 additionally carries SPS (7) + PPS (4);
+      // keyframe checksum sums 1-based IDR chunk positions
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE doc_id % 3 = 2 AND length(text) > 0)
+        |SELECT doc_id, 'H264' AS fourcc,
+        | CAST(len AS BIGINT) AS n_chunks,
+        | CAST(len + 2 AS BIGINT) AS n_nals,
+        | CAST(len(list_filter(range(1, len + 1), i ->
+        |   ord(substr(text, CAST(i AS INTEGER), 1)) % 5 = 0))
+        |  AS BIGINT) AS n_idr,
+        | CAST(list_sum(list_transform(range(1, len + 1), i ->
+        |   CASE WHEN ord(substr(text, CAST(i AS INTEGER), 1)) % 5 = 0
+        |    THEN i ELSE 0 END)) AS BIGINT) AS keyframe_checksum,
+        | CAST(11 + list_sum(list_transform(range(1, len + 1), i ->
+        |   ord(substr(text, CAST(i AS INTEGER), 1)) % 24 + 2))
+        |  AS BIGINT) AS nal_bytes
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // POISON-PILL TOLERANCE for the codec family (r12 verdict #3,
     // media half — SafeDecode.attempt is parseAnySafe's sibling): the
@@ -438,7 +679,7 @@ object MediaQ {
     // loudly, so the tolerance can't mask a codec regression; the
     // oracle knows the quarantine set and every surviving unit count
     // from arithmetic alone.
-    "q297_media_quarantine" -> ((s, dir) => {
+    Q("q297_media_quarantine", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 1)
         .map { case (id, text) =>
@@ -505,7 +746,20 @@ object MediaQ {
         }
         .toDF("doc_id", "kind", "status", "units")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // quarantine truth from id arithmetic (the q293 device, media
+      // edition): exactly the doc_id % 7 == 3 blobs are truncated;
+      // surviving unit counts are the q289 per-kind arithmetic
+      """SELECT doc_id,
+        | CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
+        |      ELSE 'video' END AS kind,
+        | CASE WHEN doc_id % 7 = 3 THEN 'quarantined' ELSE 'ok' END
+        |   AS status,
+        | CAST(CASE WHEN doc_id % 7 = 3 THEN 0
+        |      WHEN doc_id % 3 = 2 THEN 3 + doc_id % 3
+        |      ELSE length(text) END AS BIGINT) AS units
+        |FROM documents WHERE length(text) > 1
+        |ORDER BY doc_id""".stripMargin),
 
     // MP4 / ISO-BMFF BOX CENSUS — the other dominant media container
     // next to RIFF/AVI (q296): every doc becomes a minimal valid
@@ -515,7 +769,7 @@ object MediaQ {
     // handler, codec fourcc, sample count, normalized duration, mdat
     // size. The routing metadata an ingest pipeline reads BEFORE
     // deciding whether to decode; sample payloads are never touched.
-    "q298_mp4_boxes" -> ((s, dir) => {
+    Q("q298_mp4_boxes", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -533,7 +787,24 @@ object MediaQ {
         .toDF("doc_id", "brand", "handler", "codec", "n_boxes",
           "n_samples", "duration_ms", "mdat_bytes")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // box tree is structurally constant (17 boxes — r14 adds the
+      // mandatory stsc); mdat = 8-byte header + one sample per char of
+      // b%64+1 bytes; duration_ms = len·delta at timescale 1000
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0)
+        |SELECT doc_id, 'isom' AS brand,
+        | CASE WHEN doc_id % 2 = 0 THEN 'vide' ELSE 'soun' END AS handler,
+        | CASE WHEN doc_id % 2 = 0 THEN 'avc1' ELSE 'mp4a' END AS codec,
+        | CAST(17 AS BIGINT) AS n_boxes,
+        | CAST(len AS BIGINT) AS n_samples,
+        | CAST(len * CASE WHEN doc_id % 2 = 0 THEN 40 ELSE 23 END
+        |  AS BIGINT) AS duration_ms,
+        | CAST(8 + list_sum(list_transform(range(1, len + 1), i ->
+        |   ord(substr(text, CAST(i AS INTEGER), 1)) % 64 + 1))
+        |  AS BIGINT) AS mdat_bytes
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // MP4 SAMPLE ROUTING (r13 verdict #3) — from "there are N
     // samples" (q298's box census) to "sample k is THESE bytes,
@@ -551,7 +822,7 @@ object MediaQ {
     // someone else's bytes and the codec census refuses or the
     // checksum drifts; the oracle recomputes every count from the
     // text alone.
-    "q305_mp4_sample_census" -> ((s, dir) => {
+    Q("q305_mp4_sample_census", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -604,7 +875,36 @@ object MediaQ {
         .toDF("doc_id", "codec", "n_samples", "n_chunks", "n_units",
           "n_key", "unit_bytes")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // every count replays from text arithmetic: video docs carry
+      // len+2 NALs (SPS 7 B + PPS 4 B ride sample 0) of b%24+2 bytes
+      // each, IDR on b%5==0; audio docs one ADTS frame per char of
+      // b%32+8 bytes, profile b%4 (key = AAC-LC = 1); chunks hold
+      // id%4+1 samples
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len,
+        |  doc_id % 4 + 1 AS csize
+        | FROM documents WHERE length(text) > 0)
+        |SELECT doc_id,
+        | CASE WHEN doc_id % 2 = 0 THEN 'avc1' ELSE 'mp4a' END AS codec,
+        | CAST(len AS BIGINT) AS n_samples,
+        | CAST((len + csize - 1) // csize AS BIGINT) AS n_chunks,
+        | CAST(CASE WHEN doc_id % 2 = 0 THEN len + 2 ELSE len END
+        |  AS BIGINT) AS n_units,
+        | CAST(list_sum(list_transform(range(1, len + 1), i ->
+        |   CASE WHEN doc_id % 2 = 0 THEN
+        |     CASE WHEN ord(substr(text, CAST(i AS INTEGER), 1)) % 5 = 0
+        |       THEN 1 ELSE 0 END
+        |   ELSE
+        |     CASE WHEN ord(substr(text, CAST(i AS INTEGER), 1)) % 4 = 1
+        |       THEN 1 ELSE 0 END END)) AS BIGINT) AS n_key,
+        | CAST(CASE WHEN doc_id % 2 = 0 THEN 11 ELSE 0 END +
+        |  list_sum(list_transform(range(1, len + 1), i ->
+        |   CASE WHEN doc_id % 2 = 0
+        |    THEN ord(substr(text, CAST(i AS INTEGER), 1)) % 24 + 2
+        |    ELSE ord(substr(text, CAST(i AS INTEGER), 1)) % 32 + 8
+        |   END)) AS BIGINT) AS unit_bytes
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // PDF IMAGE-CODEC CENSUS (r13 verdict #5) — the codecs the image
     // miner (q290) leaves undecoded (JPX, JBIG2, CCITT) were an
@@ -618,7 +918,7 @@ object MediaQ {
     // char arithmetic; the text route must decode around the zoo
     // untouched, and every census row is checked against its planted
     // truth before aggregating.
-    "q307_pdf_image_census" -> ((s, dir) => {
+    Q("q307_pdf_image_census", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -662,7 +962,35 @@ object MediaQ {
         .toDF("doc_id", "n_images", "n_jpx", "n_jbig2", "n_ccitt_g4",
           "n_flate", "dims_checksum", "payload_bytes", "bpc_sum")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // char b plants codec b%4 (jpx/jbig2/ccitt-g4/flate), geometry
+      // (b%32+1)×(b%16+1), payload b%64+9, bpc 0/1/1/8 by codec
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0),
+        |pg AS (
+        | SELECT doc_id, len, text, unnest(range(1, len + 1)) AS i
+        | FROM d),
+        |a AS (
+        | SELECT doc_id, len, i,
+        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
+        | FROM pg)
+        |SELECT doc_id,
+        | CAST(max(len) AS BIGINT) AS n_images,
+        | CAST(sum(CASE WHEN b % 4 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |  AS n_jpx,
+        | CAST(sum(CASE WHEN b % 4 = 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |  AS n_jbig2,
+        | CAST(sum(CASE WHEN b % 4 = 2 THEN 1 ELSE 0 END) AS BIGINT)
+        |  AS n_ccitt_g4,
+        | CAST(sum(CASE WHEN b % 4 = 3 THEN 1 ELSE 0 END) AS BIGINT)
+        |  AS n_flate,
+        | CAST(sum(i * ((b % 32 + 1) * 100 + b % 16 + 1)) AS BIGINT)
+        |  AS dims_checksum,
+        | CAST(sum(b % 64 + 9) AS BIGINT) AS payload_bytes,
+        | CAST(sum(CASE b % 4 WHEN 1 THEN 1 WHEN 2 THEN 1
+        |   WHEN 3 THEN 8 ELSE 0 END) AS BIGINT) AS bpc_sum
+        |FROM a GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // H.264 STREAM GEOMETRY from the SPS (the useful 90% of "decode
     // the video": width/height/profile/level route a corpus without
@@ -674,7 +1002,7 @@ object MediaQ {
     // one slice NAL per text char. The engine walks the Annex B
     // stream, finds the type-7 NAL, strips emulation, and bit-reads
     // the geometry back; the oracle replays it all from arithmetic.
-    "q310_h264_geometry" -> ((s, dir) => {
+    Q("q310_h264_geometry", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -708,7 +1036,27 @@ object MediaQ {
         .toDF("doc_id", "profile", "level", "width", "height",
           "n_nals", "slice_bytes")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // geometry replays from id arithmetic: (id%8+1)·16 × (id%6+1)·16
+      // minus 2 per cropped edge on id%4==0; slice bytes from chars
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0)
+        |SELECT doc_id,
+        | CAST(CASE doc_id % 3 WHEN 0 THEN 66 WHEN 1 THEN 77
+        |   ELSE 88 END AS BIGINT) AS profile,
+        | CAST(10 + (doc_id % 5) * 10 AS BIGINT) AS level,
+        | CAST((doc_id % 8 + 1) * 16 -
+        |   CASE WHEN doc_id % 4 = 0 THEN 2 ELSE 0 END AS BIGINT)
+        |  AS width,
+        | CAST((doc_id % 6 + 1) * 16 -
+        |   CASE WHEN doc_id % 4 = 0 THEN 2 ELSE 0 END AS BIGINT)
+        |  AS height,
+        | CAST(len + 1 AS BIGINT) AS n_nals,
+        | CAST(list_sum(list_transform(range(1, len + 1), i ->
+        |   ord(substr(text, CAST(i AS INTEGER), 1)) % 24 + 2))
+        |  AS BIGINT) AS slice_bytes
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // MP4 VIDEO, FULLY ROUTED (q305 × q310 composed the way a real
     // MP4 demands): the avc1 sample entry is a conformant
@@ -720,7 +1068,7 @@ object MediaQ {
     // mdat sample with THAT length size. Nothing is assumed: a wrong
     // lengthSize desyncs scanAvcc loudly, a wrong SPS breaks the
     // geometry hash.
-    "q311_mp4_video_geometry" -> ((s, dir) => {
+    Q("q311_mp4_video_geometry", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -765,7 +1113,30 @@ object MediaQ {
         .toDF("doc_id", "profile", "level", "width", "height",
           "n_nals", "n_idr", "nal_bytes")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // q310's geometry arithmetic + q296's NAL arithmetic, no SPS/PPS
+      // riding the samples (they live in avcC)
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0)
+        |SELECT doc_id,
+        | CAST(CASE doc_id % 3 WHEN 0 THEN 66 WHEN 1 THEN 77
+        |   ELSE 88 END AS BIGINT) AS profile,
+        | CAST(10 + (doc_id % 5) * 10 AS BIGINT) AS level,
+        | CAST((doc_id % 8 + 1) * 16 -
+        |   CASE WHEN doc_id % 4 = 0 THEN 2 ELSE 0 END AS BIGINT)
+        |  AS width,
+        | CAST((doc_id % 6 + 1) * 16 -
+        |   CASE WHEN doc_id % 4 = 0 THEN 2 ELSE 0 END AS BIGINT)
+        |  AS height,
+        | CAST(len AS BIGINT) AS n_nals,
+        | CAST(list_sum(list_transform(range(1, len + 1), i ->
+        |   CASE WHEN ord(substr(text, CAST(i AS INTEGER), 1)) % 5 = 0
+        |    THEN 1 ELSE 0 END)) AS BIGINT) AS n_idr,
+        | CAST(list_sum(list_transform(range(1, len + 1), i ->
+        |   ord(substr(text, CAST(i AS INTEGER), 1)) % 24 + 2))
+        |  AS BIGINT) AS nal_bytes
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // TAR SHARD CENSUS — the OTHER container training corpora ship
     // (WebDataset-style .tar of samples, .tar.gz crawl shards):
@@ -782,7 +1153,7 @@ object MediaQ {
     // ZEROED (the >8 GiB shape) — and the census must report the
     // LOGICAL member list: extension headers applied and hidden,
     // overridden names in the hash, overridden sizes in both sums.
-    "q312_tar_census" -> ((s, dir) => {
+    Q("q312_tar_census", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .mapPartitions { it =>
@@ -838,7 +1209,45 @@ object MediaQ {
           col("n_dirs"), col("data_bytes"), col("size_checksum"),
           md5(col("names").cast("binary")).as("names_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // char b: dir (size 0) on b%16==0, else file of b%200+1 bytes;
+      // member k's LOGICAL name by class (PAX/GNU overrides applied):
+      // 1 → shard/xxx…/p{k}.bin, 2 → shard/yyy…/g{k}.bin,
+      // 3 → shard/s{k}.bin, else shard/m{k}.bin / shard/d{k}/
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0),
+        |pg AS (
+        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
+        | FROM d),
+        |a AS (
+        | SELECT doc_id, len, i,
+        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
+        | FROM pg),
+        |n AS (
+        | SELECT doc_id, len, i, b,
+        |  CASE b % 16
+        |   WHEN 0 THEN 'shard/d' || CAST(i - 1 AS VARCHAR) || '/'
+        |   WHEN 1 THEN 'shard/' || repeat('x', 95) || '/p' ||
+        |     CAST(i - 1 AS VARCHAR) || '.bin'
+        |   WHEN 2 THEN 'shard/' || repeat('y', 95) || '/g' ||
+        |     CAST(i - 1 AS VARCHAR) || '.bin'
+        |   WHEN 3 THEN 'shard/s' || CAST(i - 1 AS VARCHAR) || '.bin'
+        |   ELSE 'shard/m' || CAST(i - 1 AS VARCHAR) || '.bin'
+        |  END AS name
+        | FROM a)
+        |SELECT doc_id,
+        | CAST(max(len) AS BIGINT) AS n_members,
+        | CAST(sum(CASE WHEN b % 16 != 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |  AS n_files,
+        | CAST(sum(CASE WHEN b % 16 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |  AS n_dirs,
+        | CAST(sum(CASE WHEN b % 16 = 0 THEN 0 ELSE b % 200 + 1 END)
+        |  AS BIGINT) AS data_bytes,
+        | CAST(sum(CASE WHEN b % 16 = 0 THEN 0
+        |   ELSE i * (b % 200 + 1) END) AS BIGINT) AS size_checksum,
+        | md5(string_agg(name || ';', '' ORDER BY i)) AS names_md5
+        |FROM n GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // WEBM / EBML CENSUS — the dominant open web video container
     // (every <video> webm; RFC 8794 element framing + the IANA
@@ -853,7 +1262,7 @@ object MediaQ {
     // excluded) only match the oracle if the lace parser walks every
     // size table exactly. Codec mix and every count replay from
     // id/char arithmetic.
-    "q313_webm_census" -> ((s, dir) => {
+    Q("q313_webm_census", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -888,7 +1297,44 @@ object MediaQ {
           "audio_codec", "n_clusters", "n_blocks", "n_frames",
           "frame_bytes")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // clusters hold 8 chars each; per char b the lacing mode is b%4
+      // (0 none: 1 frame of b%64+1; 1 Xiph / 3 EBML: b%3+2 frames of
+      // (b+j)%48+1 resp. (b+7j)%48+1; 2 fixed: b%3+2 equal frames of
+      // b%48+1) — frame bytes EXCLUDE the lace size tables
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0),
+        |pg AS (
+        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
+        | FROM d),
+        |a AS (
+        | SELECT doc_id, len, i,
+        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
+        | FROM pg),
+        |f AS (
+        | SELECT doc_id, len, i, b,
+        |  CASE WHEN b % 4 = 0 THEN 1 ELSE b % 3 + 2 END AS nf,
+        |  CASE b % 4
+        |   WHEN 0 THEN b % 64 + 1
+        |   WHEN 1 THEN list_sum(list_transform(range(0, b % 3 + 2),
+        |     j -> (b + j) % 48 + 1))
+        |   WHEN 2 THEN (b % 3 + 2) * (b % 48 + 1)
+        |   ELSE list_sum(list_transform(range(0, b % 3 + 2),
+        |     j -> (b + 7 * j) % 48 + 1))
+        |  END AS fb
+        | FROM a)
+        |SELECT doc_id, 'webm' AS doc_type,
+        | CAST(2 AS BIGINT) AS n_tracks,
+        | CASE WHEN doc_id % 2 = 0 THEN 'V_VP9' ELSE 'V_AV1' END
+        |  AS video_codec,
+        | CASE WHEN doc_id % 3 != 0 THEN 'A_OPUS' ELSE 'A_VORBIS' END
+        |  AS audio_codec,
+        | CAST((max(len) + 7) // 8 AS BIGINT) AS n_clusters,
+        | CAST(max(len) AS BIGINT) AS n_blocks,
+        | CAST(sum(nf) AS BIGINT) AS n_frames,
+        | CAST(sum(fb) AS BIGINT) AS frame_bytes
+        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // ZIP PARSER-DIFFERENTIAL CENSUS — the central directory is the
     // authoritative member list (APPNOTE / ISO 21320-1), but
@@ -905,7 +1351,7 @@ object MediaQ {
     // entry's central sizes routed through the 0x0001 extra field —
     // with the same logical truth, so a reader that misses the
     // locator or the extra-field indirection breaks the hash.
-    "q314_zip_census" -> ((s, dir) => {
+    Q("q314_zip_census", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -938,7 +1384,29 @@ object MediaQ {
           col("n_mismatch"),
           md5(col("names").cast("binary")).as("names_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // member k holds b%128+1 bytes; exactly the id%7==3 docs carry
+      // one local-header differential
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0),
+        |pg AS (
+        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
+        | FROM d),
+        |a AS (
+        | SELECT doc_id, len, i,
+        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
+        | FROM pg)
+        |SELECT doc_id,
+        | CAST(max(len) AS BIGINT) AS n_members,
+        | CAST(sum(b % 128 + 1) AS BIGINT) AS data_bytes,
+        | CAST(CASE WHEN doc_id % 7 = 3 THEN 1 ELSE 0 END AS BIGINT)
+        |  AS n_mismatch,
+        | md5(string_agg(
+        |   CASE WHEN i = 1 THEN 'm0.bin'
+        |        ELSE ';m' || CAST(i - 1 AS VARCHAR) || '.bin' END,
+        |   '' ORDER BY i)) AS names_md5
+        |FROM a GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // PNG STRUCTURE CENSUS — the one common image format with
     // per-chunk integrity (CRC-32 over type+data, ISO 15948): the
@@ -948,7 +1416,7 @@ object MediaQ {
     // terminator — pixel data never inflated (the decode perimeter
     // stays where r12 drew it: JPEG decodes in-engine, PNG rasters
     // are IDAT-opaque). Geometry and chunking replay from arithmetic.
-    "q316_png_census" -> ((s, dir) => {
+    Q("q316_png_census", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -969,7 +1437,24 @@ object MediaQ {
         .toDF("doc_id", "width", "height", "bit_depth", "color_type",
           "n_chunks", "n_idat", "idat_bytes")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // geometry from id, one IDAT of b%64+1 bytes per char, IHDR+IEND
+      // bracket the chunk count
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0)
+        |SELECT doc_id,
+        | CAST(doc_id % 512 + 16 AS BIGINT) AS width,
+        | CAST(doc_id % 256 + 16 AS BIGINT) AS height,
+        | CAST(8 AS BIGINT) AS bit_depth,
+        | CAST(CASE doc_id % 3 WHEN 0 THEN 0 WHEN 1 THEN 2
+        |   ELSE 6 END AS BIGINT) AS color_type,
+        | CAST(len + 2 AS BIGINT) AS n_chunks,
+        | CAST(len AS BIGINT) AS n_idat,
+        | CAST(list_sum(list_transform(range(1, len + 1), i ->
+        |   ord(substr(text, CAST(i AS INTEGER), 1)) % 64 + 1))
+        |  AS BIGINT) AS idat_bytes
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // WARC RECORD CENSUS — the container web-scale text corpora
     // actually arrive in (Common Crawl ships .warc.gz): every doc
@@ -980,7 +1465,7 @@ object MediaQ {
     // nondeterminism is irrelevant). The walk is Content-Length-
     // driven with the mandated CRLF-pair separators checked — the
     // crawl-ingest routing pass that precedes any text extraction.
-    "q299_warc_census" -> ((s, dir) => {
+    Q("q299_warc_census", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -1008,7 +1493,30 @@ object MediaQ {
         .toDF("doc_id", "n_records", "n_responses", "n_404",
           "content_bytes", "status_checksum")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // record k (char b): payload = status line (17 B for 200, 24 for
+      // 404) + "Content-Length: N\r\n\r\n" (20 + digits) + body
+      // (b%128+1); warcinfo payload fixed 17 B
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0),
+        |v AS (
+        | SELECT doc_id, len,
+        |  list_transform(range(1, len + 1), i ->
+        |   ord(substr(text, CAST(i AS INTEGER), 1))) AS o
+        | FROM d)
+        |SELECT doc_id,
+        | CAST(len + 1 AS BIGINT) AS n_records,
+        | CAST(len AS BIGINT) AS n_responses,
+        | CAST(len(list_filter(o, b -> b % 10 = 0)) AS BIGINT) AS n_404,
+        | CAST(17 + list_sum(list_transform(o, b ->
+        |   CASE WHEN b % 10 = 0 THEN 24 ELSE 17 END + 20 +
+        |   length(CAST(b % 128 + 1 AS VARCHAR)) + b % 128 + 1))
+        |  AS BIGINT) AS content_bytes,
+        | CAST(list_sum(list_transform(o, b ->
+        |   CASE WHEN b % 10 = 0 THEN 404 ELSE 200 END))
+        |  AS BIGINT) AS status_checksum
+        |FROM v ORDER BY doc_id""".stripMargin),
 
     // ID3v2 TAG CONTENT under the driver hash — the labels an audio
     // corpus carries (title/artist/album), not just the skip q284 does:
@@ -1019,7 +1527,7 @@ object MediaQ {
     // tag boundary — so the emitted first_offset pins the writer's
     // byte-level layout (syncsafe vs plain sizes, BOM bytes, NUL-free
     // payloads) against the oracle's arithmetic reconstruction of it.
-    "q287_id3_tags" -> ((s, dir) => {
+    Q("q287_id3_tags", (s, dir) => {
       import s.implicits._
       docText(s, dir, col("doc_id") % 3 === 1 && length(col("text")) >= 12)
         .map { case (id, text) =>
@@ -1052,7 +1560,41 @@ object MediaQ {
         .toDF("doc_id", "id3_version", "encoding", "title", "artist",
           "album", "first_offset", "frame_bytes")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // first_offset = the full tag size: 10 (header) + per text frame
+      // (10 hdr + 1 encoding byte + payload), payload bytes by encoding:
+      // latin-1/UTF-8 = chars (ASCII input), UTF-16+BOM = 2 + 2·chars,
+      // UTF-16BE = 2·chars. frame_bytes = the published Layer III length
+      // table over the first two characters.
+      """WITH br AS (SELECT [0,32,40,48,56,64,80,96,112,128,160,192,224,
+        |  256,320] AS t),
+        |d AS (
+        | SELECT doc_id, text,
+        |  (doc_id % 12) // 3 AS enc,
+        |  CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 4 END AS ver,
+        |  'Track ' || CAST(doc_id AS VARCHAR) AS title,
+        |  regexp_replace(substr(text, 1, 12), '[^\x00-\x7F]', '?', 'g')
+        |    AS artist,
+        |  'Album ' || CAST(doc_id % 9 AS VARCHAR) AS album
+        | FROM documents WHERE doc_id % 3 = 1 AND length(text) >= 12),
+        |sz AS (
+        | SELECT *,
+        |  CASE enc WHEN 1 THEN 2 + 2 * length(title)
+        |    WHEN 2 THEN 2 * length(title) ELSE length(title) END AS pt,
+        |  CASE enc WHEN 1 THEN 2 + 2 * 12
+        |    WHEN 2 THEN 2 * 12 ELSE 12 END AS pa,
+        |  CASE enc WHEN 1 THEN 2 + 2 * length(album)
+        |    WHEN 2 THEN 2 * length(album) ELSE length(album) END AS pl
+        | FROM d)
+        |SELECT doc_id,
+        | CAST(ver AS BIGINT) AS id3_version,
+        | CAST(enc AS BIGINT) AS encoding,
+        | title, artist, album,
+        | CAST(10 + 3 * 11 + pt + pa + pl AS BIGINT) AS first_offset,
+        | CAST(144000 * t[ord(substr(text, 1, 1)) % 14 + 2] // 44100
+        |    + 144000 * t[ord(substr(text, 2, 1)) % 14 + 2] // 44100
+        |    + 1 AS BIGINT) AS frame_bytes
+        |FROM sz, br ORDER BY doc_id""".stripMargin),
 
     // The compressed-media funnel — the q105 routing pattern with the
     // REAL compressed codecs end-to-end: every doc takes its kind's
@@ -1062,7 +1604,7 @@ object MediaQ {
     // shape a real curation pass has at 100 TB: per-row executor decode
     // fused into the scan, then a kind-keyed partial aggregate whose
     // exchange carries three rows.
-    "q289_media_funnel" -> ((s, dir) => {
+    Q("q289_media_funnel", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 1)
         .map { case (id, text) =>
@@ -1126,229 +1668,10 @@ object MediaQ {
           sum(col("units")).as("units"),
           sum(col("checksum")).as("checksum_total"))
         .orderBy("kind")
-    }),
-
-    // PDF image MINING under the driver hash. This goes BEYOND the
-    // reference's PDF ingest (pdf_spider.py:42-50 only calls
-    // page.get_text() — text, never images); a multimodal corpus
-    // pipeline needs the image walk too: every doc becomes a
-    // born-digital PDF carrying BOTH a Flate text stream and a REAL
-    // embedded baseline JPEG (the block-constant strip), and the row
-    // reports the text line count AND the extracted image's exact
-    // pixel stats — one fixture exercising the skip-for-text and
-    // collect-for-images walks against each other. A /Length slip, a
-    // dict misbind, or any JPEG defect breaks the hash.
-    "q290_pdf_images" -> ((s, dir) => {
-      import s.implicits._
-      docText(s, dir, length(col("text")) > 0)
-        .map { case (id, text) =>
-          val bytes = text.getBytes("ISO-8859-1")
-          val n = bytes.length
-          val w = 8 * n
-          val pix = new Array[Byte](w * 8)
-          var j = 0
-          while (j < n) {
-            var y = 0
-            while (y < 8) {
-              java.util.Arrays.fill(pix, y * w + 8 * j, y * w + 8 * j + 8,
-                bytes(j))
-              y += 1
-            }
-            j += 1
-          }
-          val pdf = graft.ingest.PdfCodec.encodeWithRealJpeg(
-            Seq(s"Name: Event $id", text), w, 8, pix)
-          val lines = graft.ingest.PdfCodec.decode(pdf)
-          val (images, undecoded) =
-            graft.ingest.PdfCodec.extractImages(pdf)
-          require(lines.size == 2 && images.size == 1 &&
-            undecoded.isEmpty,
-            s"pdf mining drifted on doc $id: ${lines.size} lines, " +
-              s"${images.size} images, ${undecoded.size} undecoded")
-          val img = images.head
-          val (sum, chk) = pixelChecksum(img.gray)
-          (id, lines.size.toLong, img.width.toLong, img.height.toLong,
-            sum, chk)
-        }
-        .toDF("doc_id", "n_lines", "img_w", "img_h", "pix_sum",
-          "pos_checksum")
-        .orderBy("doc_id")
-    }))
-
-  val oracles: Map[String, String] = Map(
-    // the q281 closed forms over an embedded-and-mined image
-    "q290_pdf_images" ->
-      """SELECT doc_id,
-        | CAST(2 AS BIGINT) AS n_lines,
-        | CAST(8 * length(text) AS BIGINT) AS img_w,
-        | CAST(8 AS BIGINT) AS img_h,
-        | CAST(64 * list_sum(list_transform(range(1, length(text) + 1),
-        |   i -> ord(substr(text, CAST(i AS INTEGER), 1)))) AS BIGINT)
-        |   AS pix_sum,
-        | CAST(list_sum(list_transform(range(1, length(text) + 1),
-        |   i -> ord(substr(text, CAST(i AS INTEGER), 1))
-        |      * (1792 * length(text) + 512 * (i - 1) + 288))) AS BIGINT)
-        |   AS pos_checksum
-        |FROM documents WHERE length(text) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    // pixel math for one constant 8×8 block j of value v in an 8-row
-    // image of width 8·len: Σ pix = 64v; Σ (i+1)·pix over the block =
-    // v · (1792·len + 512·j + 288)  [ Σ_y Σ_x (y·8len + 8j + x + 1) ]
-    "q281_jpeg_decode" ->
-      """SELECT doc_id,
-        | CAST((doc_id % 4) * 2 AS BIGINT) AS restart_interval,
-        | CAST(8 * length(text) AS BIGINT) AS width,
-        | CAST(8 AS BIGINT) AS height,
-        | CAST(64 * list_sum(list_transform(range(1, length(text) + 1),
-        |   i -> ord(substr(text, CAST(i AS INTEGER), 1)))) AS BIGINT)
-        |   AS pix_sum,
-        | CAST(list_sum(list_transform(range(1, length(text) + 1),
-        |   i -> ord(substr(text, CAST(i AS INTEGER), 1))
-        |      * (1792 * length(text) + 512 * (i - 1) + 288))) AS BIGINT)
-        |   AS pos_checksum
-        |FROM documents WHERE doc_id % 3 = 0 AND length(text) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    // pixel truth replayed directly: v(i,y) = (b_i + 3(i-1) + 7y) mod
-    // 256 over an 8-row image of width len; position of (i,y) is
-    // y·len + i (1-based)
-    "q319_png_decode" ->
-      """SELECT doc_id,
-        | CAST(length(text) AS BIGINT) AS width,
-        | CAST(8 AS BIGINT) AS height,
-        | CAST(1 + doc_id % 3 AS BIGINT) AS n_idat,
-        | CAST(list_sum(list_transform(range(1, length(text) + 1), i ->
-        |   list_sum(list_transform(range(0, 8), y ->
-        |     (ord(substr(text, CAST(i AS INTEGER), 1)) + 3 * (i - 1)
-        |       + 7 * y) % 256)))) AS BIGINT) AS pix_sum,
-        | CAST(list_sum(list_transform(range(1, length(text) + 1), i ->
-        |   list_sum(list_transform(range(0, 8), y ->
-        |     (y * length(text) + i) *
-        |     ((ord(substr(text, CAST(i AS INTEGER), 1)) + 3 * (i - 1)
-        |       + 7 * y) % 256))))) AS BIGINT) AS pos_checksum
-        |FROM documents WHERE doc_id % 3 = 1 AND length(text) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    // frame f: blocks v0 = char((2f) mod len), v1 = char((2f+1) mod len);
-    // pix_sum = 64(v0+v1); pos_checksum = 3872·v0 + 4384·v1
-    // [ Σ over a 16-wide block b: Σ_y Σ_x (16y + 8b + x + 1) = 3584 +
-    //   512b + 288 ]; only even frames are reported
-    "q282_mjpg_frames" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len,
-        |  3 + doc_id % 3 AS nf
-        | FROM documents WHERE doc_id % 3 = 2 AND length(text) > 1),
-        |fr AS (
-        | SELECT doc_id, text, len, nf, unnest(range(0, nf)) AS f
-        | FROM d),
-        |v AS (
-        | SELECT doc_id, nf, f,
-        |  ord(substr(text, CAST((2 * f) % len + 1 AS INTEGER), 1)) AS v0,
-        |  ord(substr(text, CAST((2 * f + 1) % len + 1 AS INTEGER), 1)) AS v1
-        | FROM fr WHERE f % 2 = 0)
-        |SELECT doc_id, CAST(nf AS BIGINT) AS n_frames,
-        | CAST(f AS BIGINT) AS frame_idx,
-        | CAST(64 * (v0 + v1) AS BIGINT) AS pix_sum,
-        | CAST(3872 * v0 + 4384 * v1 AS BIGINT) AS pos_checksum
-        |FROM v ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // µ-law decode of code b: u = 255-b; t = ((u%16)*8+132)*2^((u//16)%8)
-    //   - 132; value = -t if u >= 128 else t   (ITU G.711 / Sun g711.c)
-    // A-law decode of code b: a = xor(b,85); base = (a%16)*16; seg =
-    //   (a//16)%8; t = base+8 if seg=0 else (base+264)<<(seg-1);
-    //   value = t if a >= 128 else -t
-    "q283_g711_audio" ->
-      """WITH s AS (
-        | SELECT doc_id, text, length(text) AS len,
-        |  doc_id % 2 = 0 AS mu
-        | FROM documents WHERE doc_id % 3 = 1 AND length(text) > 0),
-        |v AS (
-        | SELECT doc_id, mu, len,
-        |  list_transform(range(1, len + 1), i ->
-        |   CASE WHEN mu THEN
-        |    CASE WHEN (255 - ord(substr(text, CAST(i AS INTEGER), 1)))
-        |              >= 128
-        |     THEN -((((255 - ord(substr(text, CAST(i AS INTEGER), 1)))
-        |         % 16) * 8 + 132)
-        |        * (1 << (((255 - ord(substr(text, CAST(i AS INTEGER), 1)))
-        |            // 16) % 8)) - 132)
-        |     ELSE ((((255 - ord(substr(text, CAST(i AS INTEGER), 1)))
-        |         % 16) * 8 + 132)
-        |        * (1 << (((255 - ord(substr(text, CAST(i AS INTEGER), 1)))
-        |            // 16) % 8)) - 132)
-        |    END
-        |   ELSE
-        |    CASE WHEN xor(ord(substr(text, CAST(i AS INTEGER), 1)), 85)
-        |              >= 128
-        |     THEN (CASE WHEN ((xor(ord(substr(text, CAST(i AS INTEGER), 1)),
-        |            85) // 16) % 8) = 0
-        |       THEN (xor(ord(substr(text, CAST(i AS INTEGER), 1)), 85) % 16)
-        |            * 16 + 8
-        |       ELSE ((xor(ord(substr(text, CAST(i AS INTEGER), 1)), 85) % 16)
-        |            * 16 + 264)
-        |          * (1 << (((xor(ord(substr(text, CAST(i AS INTEGER), 1)),
-        |              85) // 16) % 8) - 1)) END)
-        |     ELSE -(CASE WHEN ((xor(ord(substr(text, CAST(i AS INTEGER), 1)),
-        |            85) // 16) % 8) = 0
-        |       THEN (xor(ord(substr(text, CAST(i AS INTEGER), 1)), 85) % 16)
-        |            * 16 + 8
-        |       ELSE ((xor(ord(substr(text, CAST(i AS INTEGER), 1)), 85) % 16)
-        |            * 16 + 264)
-        |          * (1 << (((xor(ord(substr(text, CAST(i AS INTEGER), 1)),
-        |              85) // 16) % 8) - 1)) END)
-        |    END
-        |   END) AS vals
-        | FROM s)
-        |SELECT doc_id,
-        | CASE WHEN mu THEN 'ulaw' ELSE 'alaw' END AS law,
-        | CAST(len AS BIGINT) AS n_samples,
-        | CAST(list_sum(vals) AS BIGINT) AS amp_sum,
-        | CAST(list_sum(list_transform(range(1, len + 1),
-        |   i -> i * vals[CAST(i AS INTEGER)])) AS BIGINT) AS pos_checksum,
-        | CAST(list_max(list_transform(vals, x -> abs(x))) AS BIGINT)
-        |   AS peak_abs
-        |FROM v ORDER BY doc_id""".stripMargin,
-
-    // orientation o by (doc_id%12)/3 over {1,3,6,8}; transformed-image
-    // position weights per block j (0-based; i = j+1 is the 1-based SQL
-    // index, L = len):  o=1: 1792L+512j+288   o=3: 1792L+512(L-1-j)+288
-    //                   o=6: 4096j+2080       o=8: 4096(L-1-j)+2080
-    // (derivations pinned against brute force in ExifCodecSpec)
-    "q286_exif_normalize" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len,
-        |  CASE (doc_id % 12) // 3 WHEN 0 THEN 1 WHEN 1 THEN 3
-        |    WHEN 2 THEN 6 ELSE 8 END AS o
-        | FROM documents WHERE doc_id % 3 = 0 AND length(text) > 0)
-        |SELECT doc_id,
-        | CASE WHEN doc_id % 2 = 1 THEN 'MM' ELSE 'II' END AS byte_order,
-        | CAST(o AS BIGINT) AS orientation,
-        | 'GraftCam ' || CAST(doc_id % 5 AS VARCHAR) AS make,
-        | 'M' || CAST(doc_id % 7 AS VARCHAR) AS model,
-        | '2026:08:16 00:00:' || lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0')
-        |   AS taken_at,
-        | CAST(CASE WHEN o IN (6, 8) THEN 8 ELSE 8 * len END AS BIGINT)
-        |   AS out_w,
-        | CAST(CASE WHEN o IN (6, 8) THEN 8 * len ELSE 8 END AS BIGINT)
-        |   AS out_h,
-        | CAST(64 * list_sum(list_transform(range(1, len + 1),
-        |   i -> ord(substr(text, CAST(i AS INTEGER), 1)))) AS BIGINT)
-        |   AS pix_sum,
-        | CAST(list_sum(list_transform(range(1, len + 1),
-        |   i -> ord(substr(text, CAST(i AS INTEGER), 1)) *
-        |    CASE o
-        |     WHEN 1 THEN 1792 * len + 512 * (i - 1) + 288
-        |     WHEN 3 THEN 1792 * len + 512 * (len - i) + 288
-        |     WHEN 6 THEN 4096 * (i - 1) + 2080
-        |     ELSE 4096 * (len - i) + 2080
-        |    END)) AS BIGINT) AS pos_checksum
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    // three arithmetic arms, one rollup: image = 64·Σord per block
-    // (JPEG exact subspace), audio = Σ G.711 decode values (the q283
-    // bit-field formulas), video = Σ over all nf frames of 64(v0+v1)
-    "q289_media_funnel" ->
+    }, oracle =
+      // three arithmetic arms, one rollup: image = 64·Σord per block
+      // (JPEG exact subspace), audio = Σ G.711 decode values (the q283
+      // bit-field formulas), video = Σ over all nf frames of 64(v0+v1)
       """WITH base AS (
         | SELECT doc_id, text, length(text) AS len, doc_id % 3 AS k
         | FROM documents WHERE length(text) > 1),
@@ -1408,436 +1731,66 @@ object MediaQ {
         |SELECT kind, CAST(count(*) AS BIGINT) AS docs,
         | CAST(sum(units) AS BIGINT) AS units,
         | CAST(sum(checksum) AS BIGINT) AS checksum_total
-        |FROM u GROUP BY kind ORDER BY kind""".stripMargin,
+        |FROM u GROUP BY kind ORDER BY kind""".stripMargin),
 
-    // first_offset = the full tag size: 10 (header) + per text frame
-    // (10 hdr + 1 encoding byte + payload), payload bytes by encoding:
-    // latin-1/UTF-8 = chars (ASCII input), UTF-16+BOM = 2 + 2·chars,
-    // UTF-16BE = 2·chars. frame_bytes = the published Layer III length
-    // table over the first two characters.
-    "q287_id3_tags" ->
-      """WITH br AS (SELECT [0,32,40,48,56,64,80,96,112,128,160,192,224,
-        |  256,320] AS t),
-        |d AS (
-        | SELECT doc_id, text,
-        |  (doc_id % 12) // 3 AS enc,
-        |  CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 4 END AS ver,
-        |  'Track ' || CAST(doc_id AS VARCHAR) AS title,
-        |  regexp_replace(substr(text, 1, 12), '[^\x00-\x7F]', '?', 'g')
-        |    AS artist,
-        |  'Album ' || CAST(doc_id % 9 AS VARCHAR) AS album
-        | FROM documents WHERE doc_id % 3 = 1 AND length(text) >= 12),
-        |sz AS (
-        | SELECT *,
-        |  CASE enc WHEN 1 THEN 2 + 2 * length(title)
-        |    WHEN 2 THEN 2 * length(title) ELSE length(title) END AS pt,
-        |  CASE enc WHEN 1 THEN 2 + 2 * 12
-        |    WHEN 2 THEN 2 * 12 ELSE 12 END AS pa,
-        |  CASE enc WHEN 1 THEN 2 + 2 * length(album)
-        |    WHEN 2 THEN 2 * length(album) ELSE length(album) END AS pl
-        | FROM d)
-        |SELECT doc_id,
-        | CAST(ver AS BIGINT) AS id3_version,
-        | CAST(enc AS BIGINT) AS encoding,
-        | title, artist, album,
-        | CAST(10 + 3 * 11 + pt + pa + pl AS BIGINT) AS first_offset,
-        | CAST(144000 * t[ord(substr(text, 1, 1)) % 14 + 2] // 44100
-        |    + 144000 * t[ord(substr(text, 2, 1)) % 14 + 2] // 44100
-        |    + 1 AS BIGINT) AS frame_bytes
-        |FROM sz, br ORDER BY doc_id""".stripMargin,
-
-    // chunk k (char b): slice NAL = 2 + b%24 bytes (header + payload),
-    // IDR when b%5=0; chunk 1 additionally carries SPS (7) + PPS (4);
-    // keyframe checksum sums 1-based IDR chunk positions
-    "q296_avi_h264_census" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE doc_id % 3 = 2 AND length(text) > 0)
-        |SELECT doc_id, 'H264' AS fourcc,
-        | CAST(len AS BIGINT) AS n_chunks,
-        | CAST(len + 2 AS BIGINT) AS n_nals,
-        | CAST(len(list_filter(range(1, len + 1), i ->
-        |   ord(substr(text, CAST(i AS INTEGER), 1)) % 5 = 0))
-        |  AS BIGINT) AS n_idr,
-        | CAST(list_sum(list_transform(range(1, len + 1), i ->
-        |   CASE WHEN ord(substr(text, CAST(i AS INTEGER), 1)) % 5 = 0
-        |    THEN i ELSE 0 END)) AS BIGINT) AS keyframe_checksum,
-        | CAST(11 + list_sum(list_transform(range(1, len + 1), i ->
-        |   ord(substr(text, CAST(i AS INTEGER), 1)) % 24 + 2))
-        |  AS BIGINT) AS nal_bytes
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    // box tree is structurally constant (17 boxes — r14 adds the
-    // mandatory stsc); mdat = 8-byte header + one sample per char of
-    // b%64+1 bytes; duration_ms = len·delta at timescale 1000
-    "q298_mp4_boxes" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0)
-        |SELECT doc_id, 'isom' AS brand,
-        | CASE WHEN doc_id % 2 = 0 THEN 'vide' ELSE 'soun' END AS handler,
-        | CASE WHEN doc_id % 2 = 0 THEN 'avc1' ELSE 'mp4a' END AS codec,
-        | CAST(17 AS BIGINT) AS n_boxes,
-        | CAST(len AS BIGINT) AS n_samples,
-        | CAST(len * CASE WHEN doc_id % 2 = 0 THEN 40 ELSE 23 END
-        |  AS BIGINT) AS duration_ms,
-        | CAST(8 + list_sum(list_transform(range(1, len + 1), i ->
-        |   ord(substr(text, CAST(i AS INTEGER), 1)) % 64 + 1))
-        |  AS BIGINT) AS mdat_bytes
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    // geometry from id, one IDAT of b%64+1 bytes per char, IHDR+IEND
-    // bracket the chunk count
-    "q316_png_census" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0)
-        |SELECT doc_id,
-        | CAST(doc_id % 512 + 16 AS BIGINT) AS width,
-        | CAST(doc_id % 256 + 16 AS BIGINT) AS height,
-        | CAST(8 AS BIGINT) AS bit_depth,
-        | CAST(CASE doc_id % 3 WHEN 0 THEN 0 WHEN 1 THEN 2
-        |   ELSE 6 END AS BIGINT) AS color_type,
-        | CAST(len + 2 AS BIGINT) AS n_chunks,
-        | CAST(len AS BIGINT) AS n_idat,
-        | CAST(list_sum(list_transform(range(1, len + 1), i ->
-        |   ord(substr(text, CAST(i AS INTEGER), 1)) % 64 + 1))
-        |  AS BIGINT) AS idat_bytes
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    // member k holds b%128+1 bytes; exactly the id%7==3 docs carry
-    // one local-header differential
-    "q314_zip_census" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0),
-        |pg AS (
-        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
-        | FROM d),
-        |a AS (
-        | SELECT doc_id, len, i,
-        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
-        | FROM pg)
-        |SELECT doc_id,
-        | CAST(max(len) AS BIGINT) AS n_members,
-        | CAST(sum(b % 128 + 1) AS BIGINT) AS data_bytes,
-        | CAST(CASE WHEN doc_id % 7 = 3 THEN 1 ELSE 0 END AS BIGINT)
-        |  AS n_mismatch,
-        | md5(string_agg(
-        |   CASE WHEN i = 1 THEN 'm0.bin'
-        |        ELSE ';m' || CAST(i - 1 AS VARCHAR) || '.bin' END,
-        |   '' ORDER BY i)) AS names_md5
-        |FROM a GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // clusters hold 8 chars each; per char b the lacing mode is b%4
-    // (0 none: 1 frame of b%64+1; 1 Xiph / 3 EBML: b%3+2 frames of
-    // (b+j)%48+1 resp. (b+7j)%48+1; 2 fixed: b%3+2 equal frames of
-    // b%48+1) — frame bytes EXCLUDE the lace size tables
-    "q313_webm_census" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0),
-        |pg AS (
-        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
-        | FROM d),
-        |a AS (
-        | SELECT doc_id, len, i,
-        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
-        | FROM pg),
-        |f AS (
-        | SELECT doc_id, len, i, b,
-        |  CASE WHEN b % 4 = 0 THEN 1 ELSE b % 3 + 2 END AS nf,
-        |  CASE b % 4
-        |   WHEN 0 THEN b % 64 + 1
-        |   WHEN 1 THEN list_sum(list_transform(range(0, b % 3 + 2),
-        |     j -> (b + j) % 48 + 1))
-        |   WHEN 2 THEN (b % 3 + 2) * (b % 48 + 1)
-        |   ELSE list_sum(list_transform(range(0, b % 3 + 2),
-        |     j -> (b + 7 * j) % 48 + 1))
-        |  END AS fb
-        | FROM a)
-        |SELECT doc_id, 'webm' AS doc_type,
-        | CAST(2 AS BIGINT) AS n_tracks,
-        | CASE WHEN doc_id % 2 = 0 THEN 'V_VP9' ELSE 'V_AV1' END
-        |  AS video_codec,
-        | CASE WHEN doc_id % 3 != 0 THEN 'A_OPUS' ELSE 'A_VORBIS' END
-        |  AS audio_codec,
-        | CAST((max(len) + 7) // 8 AS BIGINT) AS n_clusters,
-        | CAST(max(len) AS BIGINT) AS n_blocks,
-        | CAST(sum(nf) AS BIGINT) AS n_frames,
-        | CAST(sum(fb) AS BIGINT) AS frame_bytes
-        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // char b: dir (size 0) on b%16==0, else file of b%200+1 bytes;
-    // member k's LOGICAL name by class (PAX/GNU overrides applied):
-    // 1 → shard/xxx…/p{k}.bin, 2 → shard/yyy…/g{k}.bin,
-    // 3 → shard/s{k}.bin, else shard/m{k}.bin / shard/d{k}/
-    "q312_tar_census" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0),
-        |pg AS (
-        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
-        | FROM d),
-        |a AS (
-        | SELECT doc_id, len, i,
-        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
-        | FROM pg),
-        |n AS (
-        | SELECT doc_id, len, i, b,
-        |  CASE b % 16
-        |   WHEN 0 THEN 'shard/d' || CAST(i - 1 AS VARCHAR) || '/'
-        |   WHEN 1 THEN 'shard/' || repeat('x', 95) || '/p' ||
-        |     CAST(i - 1 AS VARCHAR) || '.bin'
-        |   WHEN 2 THEN 'shard/' || repeat('y', 95) || '/g' ||
-        |     CAST(i - 1 AS VARCHAR) || '.bin'
-        |   WHEN 3 THEN 'shard/s' || CAST(i - 1 AS VARCHAR) || '.bin'
-        |   ELSE 'shard/m' || CAST(i - 1 AS VARCHAR) || '.bin'
-        |  END AS name
-        | FROM a)
-        |SELECT doc_id,
-        | CAST(max(len) AS BIGINT) AS n_members,
-        | CAST(sum(CASE WHEN b % 16 != 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |  AS n_files,
-        | CAST(sum(CASE WHEN b % 16 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |  AS n_dirs,
-        | CAST(sum(CASE WHEN b % 16 = 0 THEN 0 ELSE b % 200 + 1 END)
-        |  AS BIGINT) AS data_bytes,
-        | CAST(sum(CASE WHEN b % 16 = 0 THEN 0
-        |   ELSE i * (b % 200 + 1) END) AS BIGINT) AS size_checksum,
-        | md5(string_agg(name || ';', '' ORDER BY i)) AS names_md5
-        |FROM n GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // q310's geometry arithmetic + q296's NAL arithmetic, no SPS/PPS
-    // riding the samples (they live in avcC)
-    "q311_mp4_video_geometry" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0)
-        |SELECT doc_id,
-        | CAST(CASE doc_id % 3 WHEN 0 THEN 66 WHEN 1 THEN 77
-        |   ELSE 88 END AS BIGINT) AS profile,
-        | CAST(10 + (doc_id % 5) * 10 AS BIGINT) AS level,
-        | CAST((doc_id % 8 + 1) * 16 -
-        |   CASE WHEN doc_id % 4 = 0 THEN 2 ELSE 0 END AS BIGINT)
-        |  AS width,
-        | CAST((doc_id % 6 + 1) * 16 -
-        |   CASE WHEN doc_id % 4 = 0 THEN 2 ELSE 0 END AS BIGINT)
-        |  AS height,
-        | CAST(len AS BIGINT) AS n_nals,
-        | CAST(list_sum(list_transform(range(1, len + 1), i ->
-        |   CASE WHEN ord(substr(text, CAST(i AS INTEGER), 1)) % 5 = 0
-        |    THEN 1 ELSE 0 END)) AS BIGINT) AS n_idr,
-        | CAST(list_sum(list_transform(range(1, len + 1), i ->
-        |   ord(substr(text, CAST(i AS INTEGER), 1)) % 24 + 2))
-        |  AS BIGINT) AS nal_bytes
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    // geometry replays from id arithmetic: (id%8+1)·16 × (id%6+1)·16
-    // minus 2 per cropped edge on id%4==0; slice bytes from chars
-    "q310_h264_geometry" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0)
-        |SELECT doc_id,
-        | CAST(CASE doc_id % 3 WHEN 0 THEN 66 WHEN 1 THEN 77
-        |   ELSE 88 END AS BIGINT) AS profile,
-        | CAST(10 + (doc_id % 5) * 10 AS BIGINT) AS level,
-        | CAST((doc_id % 8 + 1) * 16 -
-        |   CASE WHEN doc_id % 4 = 0 THEN 2 ELSE 0 END AS BIGINT)
-        |  AS width,
-        | CAST((doc_id % 6 + 1) * 16 -
-        |   CASE WHEN doc_id % 4 = 0 THEN 2 ELSE 0 END AS BIGINT)
-        |  AS height,
-        | CAST(len + 1 AS BIGINT) AS n_nals,
-        | CAST(list_sum(list_transform(range(1, len + 1), i ->
-        |   ord(substr(text, CAST(i AS INTEGER), 1)) % 24 + 2))
-        |  AS BIGINT) AS slice_bytes
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    // char b plants codec b%4 (jpx/jbig2/ccitt-g4/flate), geometry
-    // (b%32+1)×(b%16+1), payload b%64+9, bpc 0/1/1/8 by codec
-    "q307_pdf_image_census" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0),
-        |pg AS (
-        | SELECT doc_id, len, text, unnest(range(1, len + 1)) AS i
-        | FROM d),
-        |a AS (
-        | SELECT doc_id, len, i,
-        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
-        | FROM pg)
-        |SELECT doc_id,
-        | CAST(max(len) AS BIGINT) AS n_images,
-        | CAST(sum(CASE WHEN b % 4 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |  AS n_jpx,
-        | CAST(sum(CASE WHEN b % 4 = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |  AS n_jbig2,
-        | CAST(sum(CASE WHEN b % 4 = 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |  AS n_ccitt_g4,
-        | CAST(sum(CASE WHEN b % 4 = 3 THEN 1 ELSE 0 END) AS BIGINT)
-        |  AS n_flate,
-        | CAST(sum(i * ((b % 32 + 1) * 100 + b % 16 + 1)) AS BIGINT)
-        |  AS dims_checksum,
-        | CAST(sum(b % 64 + 9) AS BIGINT) AS payload_bytes,
-        | CAST(sum(CASE b % 4 WHEN 1 THEN 1 WHEN 2 THEN 1
-        |   WHEN 3 THEN 8 ELSE 0 END) AS BIGINT) AS bpc_sum
-        |FROM a GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // every count replays from text arithmetic: video docs carry
-    // len+2 NALs (SPS 7 B + PPS 4 B ride sample 0) of b%24+2 bytes
-    // each, IDR on b%5==0; audio docs one ADTS frame per char of
-    // b%32+8 bytes, profile b%4 (key = AAC-LC = 1); chunks hold
-    // id%4+1 samples
-    "q305_mp4_sample_census" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len,
-        |  doc_id % 4 + 1 AS csize
-        | FROM documents WHERE length(text) > 0)
-        |SELECT doc_id,
-        | CASE WHEN doc_id % 2 = 0 THEN 'avc1' ELSE 'mp4a' END AS codec,
-        | CAST(len AS BIGINT) AS n_samples,
-        | CAST((len + csize - 1) // csize AS BIGINT) AS n_chunks,
-        | CAST(CASE WHEN doc_id % 2 = 0 THEN len + 2 ELSE len END
-        |  AS BIGINT) AS n_units,
-        | CAST(list_sum(list_transform(range(1, len + 1), i ->
-        |   CASE WHEN doc_id % 2 = 0 THEN
-        |     CASE WHEN ord(substr(text, CAST(i AS INTEGER), 1)) % 5 = 0
-        |       THEN 1 ELSE 0 END
-        |   ELSE
-        |     CASE WHEN ord(substr(text, CAST(i AS INTEGER), 1)) % 4 = 1
-        |       THEN 1 ELSE 0 END END)) AS BIGINT) AS n_key,
-        | CAST(CASE WHEN doc_id % 2 = 0 THEN 11 ELSE 0 END +
-        |  list_sum(list_transform(range(1, len + 1), i ->
-        |   CASE WHEN doc_id % 2 = 0
-        |    THEN ord(substr(text, CAST(i AS INTEGER), 1)) % 24 + 2
-        |    ELSE ord(substr(text, CAST(i AS INTEGER), 1)) % 32 + 8
-        |   END)) AS BIGINT) AS unit_bytes
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    // record k (char b): payload = status line (17 B for 200, 24 for
-    // 404) + "Content-Length: N\r\n\r\n" (20 + digits) + body
-    // (b%128+1); warcinfo payload fixed 17 B
-    "q299_warc_census" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0),
-        |v AS (
-        | SELECT doc_id, len,
-        |  list_transform(range(1, len + 1), i ->
-        |   ord(substr(text, CAST(i AS INTEGER), 1))) AS o
-        | FROM d)
-        |SELECT doc_id,
-        | CAST(len + 1 AS BIGINT) AS n_records,
-        | CAST(len AS BIGINT) AS n_responses,
-        | CAST(len(list_filter(o, b -> b % 10 = 0)) AS BIGINT) AS n_404,
-        | CAST(17 + list_sum(list_transform(o, b ->
-        |   CASE WHEN b % 10 = 0 THEN 24 ELSE 17 END + 20 +
-        |   length(CAST(b % 128 + 1 AS VARCHAR)) + b % 128 + 1))
-        |  AS BIGINT) AS content_bytes,
-        | CAST(list_sum(list_transform(o, b ->
-        |   CASE WHEN b % 10 = 0 THEN 404 ELSE 200 END))
-        |  AS BIGINT) AS status_checksum
-        |FROM v ORDER BY doc_id""".stripMargin,
-
-    // quarantine truth from id arithmetic (the q293 device, media
-    // edition): exactly the doc_id % 7 == 3 blobs are truncated;
-    // surviving unit counts are the q289 per-kind arithmetic
-    "q297_media_quarantine" ->
+    // PDF image MINING under the driver hash. This goes BEYOND the
+    // reference's PDF ingest (pdf_spider.py:42-50 only calls
+    // page.get_text() — text, never images); a multimodal corpus
+    // pipeline needs the image walk too: every doc becomes a
+    // born-digital PDF carrying BOTH a Flate text stream and a REAL
+    // embedded baseline JPEG (the block-constant strip), and the row
+    // reports the text line count AND the extracted image's exact
+    // pixel stats — one fixture exercising the skip-for-text and
+    // collect-for-images walks against each other. A /Length slip, a
+    // dict misbind, or any JPEG defect breaks the hash.
+    Q("q290_pdf_images", (s, dir) => {
+      import s.implicits._
+      docText(s, dir, length(col("text")) > 0)
+        .map { case (id, text) =>
+          val bytes = text.getBytes("ISO-8859-1")
+          val n = bytes.length
+          val w = 8 * n
+          val pix = new Array[Byte](w * 8)
+          var j = 0
+          while (j < n) {
+            var y = 0
+            while (y < 8) {
+              java.util.Arrays.fill(pix, y * w + 8 * j, y * w + 8 * j + 8,
+                bytes(j))
+              y += 1
+            }
+            j += 1
+          }
+          val pdf = graft.ingest.PdfCodec.encodeWithRealJpeg(
+            Seq(s"Name: Event $id", text), w, 8, pix)
+          val lines = graft.ingest.PdfCodec.decode(pdf)
+          val (images, undecoded) =
+            graft.ingest.PdfCodec.extractImages(pdf)
+          require(lines.size == 2 && images.size == 1 &&
+            undecoded.isEmpty,
+            s"pdf mining drifted on doc $id: ${lines.size} lines, " +
+              s"${images.size} images, ${undecoded.size} undecoded")
+          val img = images.head
+          val (sum, chk) = pixelChecksum(img.gray)
+          (id, lines.size.toLong, img.width.toLong, img.height.toLong,
+            sum, chk)
+        }
+        .toDF("doc_id", "n_lines", "img_w", "img_h", "pix_sum",
+          "pos_checksum")
+        .orderBy("doc_id")
+    }, oracle =
+      // the q281 closed forms over an embedded-and-mined image
       """SELECT doc_id,
-        | CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-        |      ELSE 'video' END AS kind,
-        | CASE WHEN doc_id % 7 = 3 THEN 'quarantined' ELSE 'ok' END
-        |   AS status,
-        | CAST(CASE WHEN doc_id % 7 = 3 THEN 0
-        |      WHEN doc_id % 3 = 2 THEN 3 + doc_id % 3
-        |      ELSE length(text) END AS BIGINT) AS units
-        |FROM documents WHERE length(text) > 1
-        |ORDER BY doc_id""".stripMargin,
-
-    // frame k (char b): profile = b%4, channels = b%7+1, frame bytes =
-    // 8 + b%32; ID3v2 prefix = 10 + 11·(doc_id%4) when doc_id%4 != 0;
-    // sample rate = 14496-3 table at (doc_id%5)+2 (0-based)
-    "q294_aac_scan" ->
-      """WITH sr AS (SELECT [96000,88200,64000,48000,44100,32000,24000,
-        |  22050,16000,12000,11025,8000,7350] AS t),
-        |d AS (
-        | SELECT doc_id, text, length(text) AS len,
-        |  CASE WHEN doc_id % 4 = 0 THEN 0
-        |       ELSE 10 + 11 * (doc_id % 4) END AS id3
-        | FROM documents WHERE doc_id % 3 = 1 AND length(text) > 0)
-        |SELECT doc_id,
-        | CAST(len AS BIGINT) AS n_frames,
-        | CAST(id3 AS BIGINT) AS first_offset,
-        | CAST(list_sum(list_transform(range(1, len + 1), i ->
-        |   8 + ord(substr(text, CAST(i AS INTEGER), 1)) % 32))
-        |  AS BIGINT) AS total_bytes,
-        | CAST(list_sum(list_transform(range(1, len + 1), i ->
-        |   i * (ord(substr(text, CAST(i AS INTEGER), 1)) % 4)))
-        |  AS BIGINT) AS profile_checksum,
-        | CAST(list_sum(list_transform(range(1, len + 1), i ->
-        |   i * (ord(substr(text, CAST(i AS INTEGER), 1)) % 7 + 1)))
-        |  AS BIGINT) AS channel_checksum,
-        | CAST(len * 1024 * 1000 //
-        |   t[CAST(doc_id % 5 + 3 AS INTEGER)] AS BIGINT) AS duration_ms
-        |FROM d, sr ORDER BY doc_id""".stripMargin,
-
-    // NAL k (char b): type = 5 if b%5=0 else 1, bytes = 1 + b%24 + 1;
-    // prefix SPS (7 bytes, type 7) + PPS (4 bytes, type 8); checksum
-    // weights are 1-based NAL positions (SPS=1, PPS=2, slices 3...)
-    "q295_h264_scan" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE doc_id % 3 = 2 AND length(text) > 0),
-        |v AS (
-        | SELECT doc_id, len,
-        |  list_transform(range(1, len + 1), i ->
-        |   CASE WHEN ord(substr(text, CAST(i AS INTEGER), 1)) % 5 = 0
-        |    THEN 5 ELSE 1 END) AS typ,
-        |  list_transform(range(1, len + 1), i ->
-        |   ord(substr(text, CAST(i AS INTEGER), 1)) % 24 + 2) AS nb
-        | FROM d)
-        |SELECT doc_id,
-        | CAST(len + 2 AS BIGINT) AS n_nals,
-        | CAST(len(list_filter(typ, t -> t = 5)) AS BIGINT) AS n_idr,
-        | CAST(len(list_filter(typ, t -> t = 1)) AS BIGINT) AS n_slices,
-        | CAST(7 + 4 + list_sum(nb) AS BIGINT) AS total_bytes,
-        | CAST(7 + 16 + list_sum(list_transform(range(1, len + 1), i ->
-        |   (i + 2) * typ[CAST(i AS INTEGER)])) AS BIGINT)
-        |   AS type_checksum,
-        | CAST(6 + list_sum(list_transform(typ, t ->
-        |   CASE WHEN t = 5 THEN 3 ELSE 2 END)) AS BIGINT)
-        |   AS ref_checksum
-        |FROM v ORDER BY doc_id""".stripMargin,
-
-    // frame k (char b): bitrate = BR[b % 14 + 1], padded = (b//16) % 2,
-    // frame_bytes = 144000·bitrate // 44100 + padded; ID3v2 prefix is
-    // 10 + 13·(doc_id % 5) bytes when doc_id % 5 != 0
-    "q284_mp3_scan" ->
-      """WITH br AS (SELECT [0,32,40,48,56,64,80,96,112,128,160,192,224,
-        |  256,320] AS t),
-        |d AS (
-        | SELECT doc_id, text, length(text) AS len,
-        |  CASE WHEN doc_id % 5 = 0 THEN 0
-        |       ELSE 10 + 13 * (doc_id % 5) END AS id3
-        | FROM documents WHERE doc_id % 3 = 1 AND length(text) > 0),
-        |v AS (
-        | SELECT doc_id, len, id3,
-        |  list_transform(range(1, len + 1), i ->
-        |   t[ord(substr(text, CAST(i AS INTEGER), 1)) % 14 + 2]) AS kbps,
-        |  list_transform(range(1, len + 1), i ->
-        |   (ord(substr(text, CAST(i AS INTEGER), 1)) // 16) % 2) AS pad
-        | FROM d, br)
-        |SELECT doc_id,
-        | CAST(len AS BIGINT) AS n_frames,
-        | CAST(id3 AS BIGINT) AS first_offset,
-        | CAST(list_sum(list_transform(range(1, len + 1), i ->
-        |   144000 * kbps[CAST(i AS INTEGER)] // 44100
-        |     + pad[CAST(i AS INTEGER)])) AS BIGINT) AS total_bytes,
-        | CAST(list_sum(list_transform(range(1, len + 1), i ->
-        |   i * kbps[CAST(i AS INTEGER)])) AS BIGINT) AS bitrate_checksum,
-        | CAST(list_sum(pad) AS BIGINT) AS pad_count,
-        | CAST(len * 1152 * 1000 // 44100 AS BIGINT) AS duration_ms
-        |FROM v ORDER BY doc_id""".stripMargin)
+        | CAST(2 AS BIGINT) AS n_lines,
+        | CAST(8 * length(text) AS BIGINT) AS img_w,
+        | CAST(8 AS BIGINT) AS img_h,
+        | CAST(64 * list_sum(list_transform(range(1, length(text) + 1),
+        |   i -> ord(substr(text, CAST(i AS INTEGER), 1)))) AS BIGINT)
+        |   AS pix_sum,
+        | CAST(list_sum(list_transform(range(1, length(text) + 1),
+        |   i -> ord(substr(text, CAST(i AS INTEGER), 1))
+        |      * (1792 * length(text) + 512 * (i - 1) + 288))) AS BIGINT)
+        |   AS pos_checksum
+        |FROM documents WHERE length(text) > 0
+        |ORDER BY doc_id""".stripMargin))
 }

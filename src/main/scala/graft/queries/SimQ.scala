@@ -38,17 +38,29 @@ object SimQ {
     corpusCount.getOrElseUpdate(dir,
       t(s, dir, "embeddings").select(col("vec_id")).count())
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val all: Seq[Q] = Seq(
     // Brute-force cosine top-25 against vec_id=1's embedding: the exact
     // baseline (single scan + TakeOrderedAndProject, no shuffle).
-    "q19_cosine_topk" -> ((s, dir) => {
+    Q("q19_cosine_topk", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") === 1).select(col("embedding"))
       SimilarityOps.cosineTopK(
           e.select("vec_id", "label", "embedding"), "embedding",
           q, "embedding", 25)
         .select("vec_id", "label", "cos_sim")
-    }),
+    }, oracle =
+      // Parallel unnest zips the two lists; all arithmetic in double; the
+      // 6dp round absorbs sub-ulp summation-order differences.
+      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 1),
+        |ex AS (
+        | SELECT e.vec_id, e.label,
+        |  CAST(unnest(e.embedding) AS DOUBLE) AS x,
+        |  CAST(unnest(q.qv) AS DOUBLE) AS y
+        | FROM embeddings e, q)
+        |SELECT vec_id, any_value(label) AS label,
+        | round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos_sim
+        |FROM ex GROUP BY vec_id
+        |ORDER BY cos_sim DESC, vec_id ASC LIMIT 25""".stripMargin),
 
     // LSH-bucketed ANN — the scale path: bucket by hyperplane
     // signature, probe query bucket ± 1 bit. ORACLE-EXACT as of r10
@@ -57,20 +69,103 @@ object SimQ {
     // same probe/plan shape as the float annTopK (which keeps its own
     // spec coverage in GeoSimSpec), but every number replays in
     // DuckDB, shrinking the rows-only set 7 → 5.
-    "q25_ann_topk" -> ((s, dir) =>
+    Q("q25_ann_topk", (s, dir) =>
       SimilarityOps.latticeAnnTopK(
         t(s, dir, "embeddings").select("vec_id", "embedding"),
-        "vec_id", "embedding", 64, queryId = 1, k = 25)),
+        "vec_id", "embedding", 64, queryId = 1, k = 25), oracle =
+      // md5-replayable lattice ANN (r10): identical integer algorithm —
+      // floor(x·1000) lattice, plane sign = parity of md5's first hex
+      // digit, signed ⌊num²·1e8/(na·nb)⌋ score (positive operands, so
+      // HUGEINT // ≡ Spark's IntegralDivide), ties to smaller vec_id
+      """WITH q AS (
+        | SELECT vec_id, list_transform(embedding,
+        |   v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS qv
+        | FROM embeddings),
+        |pl AS (
+        | SELECT p, d, CASE WHEN (instr('0123456789abcdef',
+        |    substr(md5('plane:' || CAST(p AS VARCHAR) || ':'
+        |      || CAST(d AS VARCHAR)), 1, 1)) - 1) % 2 = 1
+        |   THEN 1 ELSE -1 END AS sgn
+        | FROM range(0, 8) t1(p), range(0, 64) t2(d)),
+        |dp AS (
+        | SELECT q.vec_id, pl.p, sum(pl.sgn * q.qv[pl.d + 1]) AS dotp
+        | FROM q, pl GROUP BY q.vec_id, pl.p),
+        |sg AS (
+        | SELECT vec_id, CAST(sum(CASE WHEN dotp >= 0
+        |   THEN (CAST(1 AS BIGINT) << p) ELSE 0 END) AS BIGINT) AS sig
+        | FROM dp GROUP BY vec_id),
+        |qs AS (SELECT sig FROM sg WHERE vec_id = 1),
+        |qv1 AS (SELECT qv FROM q WHERE vec_id = 1),
+        |probes AS (
+        | SELECT DISTINCT CASE WHEN f < 0 THEN qs.sig
+        |   ELSE xor(qs.sig, CAST(1 AS BIGINT) << f) END AS probe
+        | FROM qs, range(-1, 8) t(f)),
+        |cand AS (SELECT sg.vec_id FROM sg JOIN probes ON sg.sig = probes.probe),
+        |sc AS (
+        | SELECT c.vec_id,
+        |  list_sum(list_transform(range(1, 65), i -> q.qv[i] * q1.qv[i])) AS num,
+        |  list_sum(list_transform(range(1, 65), i -> q.qv[i] * q.qv[i])) AS na,
+        |  list_sum(list_transform(range(1, 65), i -> q1.qv[i] * q1.qv[i])) AS nb
+        | FROM cand c JOIN q ON q.vec_id = c.vec_id, qv1 q1)
+        |SELECT vec_id,
+        | CAST((CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 ELSE 0 END)
+        |   * ((CAST(num AS HUGEINT) * num * 100000000)
+        |      // (CAST(na AS HUGEINT) * nb)) AS BIGINT) AS lat_cos_e8
+        |FROM sc
+        |ORDER BY lat_cos_e8 DESC, vec_id LIMIT 25""".stripMargin),
 
     // IVF-bucketed ANN: md5-seeded centroids (16 smallest
     // md5("seed:"||id)), integer-lattice cell ranking, probe the 2
     // nearest cells. ORACLE-EXACT as of r10 — same IVF shape as the
     // float ivfTopK/strideCentroids (GeoSimSpec keeps those gated).
-    "q44_ivf_ann" -> ((s, dir) =>
+    Q("q44_ivf_ann", (s, dir) =>
       SimilarityOps.latticeIvfTopK(
         t(s, dir, "embeddings").select("vec_id", "embedding"),
         "vec_id", "embedding", queryId = 1, k = 25,
-        nCells = 16, nprobe = 2)),
+        nCells = 16, nprobe = 2), oracle =
+      // md5-seeded lattice IVF (r10): seeds = 16 smallest md5("seed:"||id),
+      // cells rank by the same signed integer score, ties to smaller cid
+      """WITH q AS (
+        | SELECT vec_id, list_transform(embedding,
+        |   v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS qv
+        | FROM embeddings),
+        |cents AS (
+        | SELECT vec_id AS cid, qv AS cv FROM q
+        | ORDER BY md5('seed:' || CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
+        |sc AS (
+        | SELECT q.vec_id, c.cid,
+        |  list_sum(list_transform(range(1, 65), i -> q.qv[i] * c.cv[i])) AS num,
+        |  list_sum(list_transform(range(1, 65), i -> q.qv[i] * q.qv[i])) AS na,
+        |  list_sum(list_transform(range(1, 65), i -> c.cv[i] * c.cv[i])) AS nc
+        | FROM q, cents c),
+        |scored AS (
+        | SELECT vec_id, cid,
+        |  (CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 ELSE 0 END)
+        |   * ((CAST(num AS HUGEINT) * num * 100000000)
+        |      // (CAST(na AS HUGEINT) * nc)) AS s
+        | FROM sc),
+        |assigned AS (
+        | SELECT vec_id, cid AS cell FROM (
+        |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
+        |    ORDER BY s DESC, cid) AS rn FROM scored) WHERE rn = 1),
+        |qprobe AS (
+        | SELECT cid AS probe FROM (
+        |  SELECT cid, row_number() OVER (ORDER BY s DESC, cid) AS rn
+        |  FROM scored WHERE vec_id = 1) WHERE rn <= 2),
+        |cand AS (
+        | SELECT a.vec_id FROM assigned a JOIN qprobe p ON a.cell = p.probe),
+        |qv1 AS (SELECT qv FROM q WHERE vec_id = 1),
+        |fin AS (
+        | SELECT c.vec_id,
+        |  list_sum(list_transform(range(1, 65), i -> q.qv[i] * q1.qv[i])) AS num,
+        |  list_sum(list_transform(range(1, 65), i -> q.qv[i] * q.qv[i])) AS na,
+        |  list_sum(list_transform(range(1, 65), i -> q1.qv[i] * q1.qv[i])) AS nb
+        | FROM cand c JOIN q ON q.vec_id = c.vec_id, qv1 q1)
+        |SELECT vec_id,
+        | CAST((CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 ELSE 0 END)
+        |   * ((CAST(num AS HUGEINT) * num * 100000000)
+        |      // (CAST(na AS HUGEINT) * nb)) AS BIGINT) AS lat_cos_e8
+        |FROM fin ORDER BY lat_cos_e8 DESC, vec_id LIMIT 25""".stripMargin),
 
     // Embedding-cosine near-dup front door: size-DISPATCHED — exact
     // pairwise while n²·dim compute stays seconds-scale (≤10k rows;
@@ -79,10 +174,17 @@ object SimQ {
     // (q74 registers that path standalone; AnnContainmentSpec relates
     // the two). No unconditional O(n²) plan is reachable from here —
     // and since r6, no quadratic-compute plan past the cap either.
-    "q40_embedding_dups" -> ((s, dir) =>
+    Q("q40_embedding_dups", (s, dir) =>
       SimilarityOps.nearDupPairs(t(s, dir, "embeddings"),
           "vec_id", "embedding", 64, 0.4)
-        .orderBy("a_id", "b_id")),
+        .orderBy("a_id", "b_id"), oracle =
+      """SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+        | round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+        |   CAST(b.embedding AS DOUBLE[])), 6) AS cos_sim
+        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+        |WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+        |   CAST(b.embedding AS DOUBLE[])), 6) >= 0.4
+        |ORDER BY a_id, b_id""".stripMargin),
 
     // Sub-quadratic near-dup self-join: LSH-bucketed top-k neighbors per
     // vector. This is the registered scale path for embedding near-dup
@@ -105,14 +207,72 @@ object SimQ {
     // exponent 1.24). The count is one pruned single-column job,
     // memoized per dir (embeddingCount) so repeated plan construction
     // stays action-free.
-    "q74_ann_self_join" -> ((s, dir) => {
+    Q("q74_ann_self_join", (s, dir) => {
       val e = t(s, dir, "embeddings")
       val n = embeddingCount(s, dir)
       SimilarityOps.latticeAnnSelfJoin(e, "vec_id", "embedding", 64, k = 5,
           planesPerBand = SimilarityOps.autoPlanes(n, 6), bands = 32)
         .filter(col("lat_cos_e8") >= 16000000L)
         .orderBy("a_id", "b_id")
-    }),
+    }, oracle =
+      // md5-replayable banded ANN self-join (r11): 32 bands ×
+      // autoPlanes(count) planes — the plane count re-derived in INTEGER
+      // arithmetic exactly as SimilarityOps.autoPlanes (smallest p with
+      // 128·2^p ≥ n, clamped to [6,12]); pair candidates on any shared
+      // (band, signature), dedup before scoring, k=5 best per vector by
+      // the signed lattice score, cos ≥ 0.4 gate as score ≥ 0.16e8
+      """WITH pp AS (
+        | SELECT GREATEST(6, LEAST(12, (
+        |  SELECT min(p) FROM range(0, 40) t(p)
+        |  WHERE (CAST(1 AS BIGINT) << p) * 128 >=
+        |    (SELECT count(*) FROM embeddings)))) AS planes),
+        |q AS (
+        | -- len gate mirrors LatticeSigsExpr's wrong-length-→-null drop:
+        | -- without it, list_sum over NULL-padded products still buckets
+        | -- a short vector here while the JVM side drops the row
+        | SELECT vec_id, list_transform(embedding,
+        |   v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS qv
+        | FROM embeddings WHERE len(embedding) = 64),
+        |pl AS (
+        | -- global plane index hoisted OUT of the lambda (DuckDB forbids
+        | -- subqueries inside lambda bodies)
+        | SELECT b, j, list_transform(range(0, 64), d -> CASE WHEN
+        |    (instr('0123456789abcdef', substr(md5('plane:'
+        |      || CAST(gp AS VARCHAR)
+        |      || ':' || CAST(d AS VARCHAR)), 1, 1)) - 1) % 2 = 1
+        |   THEN 1 ELSE -1 END) AS sgns
+        | FROM (
+        |  SELECT b, j, b * (SELECT planes FROM pp) + j AS gp
+        |  FROM range(0, 32) t1(b), range(0, 12) t2(j)
+        |  WHERE j < (SELECT planes FROM pp))),
+        |sg AS (
+        | SELECT vec_id, b, CAST(sum(CASE WHEN
+        |   list_sum(list_transform(range(1, 65),
+        |     i -> pl.sgns[i] * q.qv[i])) >= 0
+        |   THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) AS sig
+        | FROM q, pl GROUP BY vec_id, b),
+        |cand AS (
+        | SELECT DISTINCT x.vec_id AS a_id, y.vec_id AS b_id
+        | FROM sg x JOIN sg y ON x.b = y.b AND x.sig = y.sig
+        | WHERE x.vec_id <> y.vec_id),
+        |sc AS (
+        | SELECT c.a_id, c.b_id,
+        |  list_sum(list_transform(range(1, 65), i -> qa.qv[i] * qb.qv[i])) AS num,
+        |  list_sum(list_transform(range(1, 65), i -> qa.qv[i] * qa.qv[i])) AS na,
+        |  list_sum(list_transform(range(1, 65), i -> qb.qv[i] * qb.qv[i])) AS nb
+        | FROM cand c JOIN q qa ON qa.vec_id = c.a_id
+        |  JOIN q qb ON qb.vec_id = c.b_id),
+        |scored AS (
+        | SELECT a_id, b_id,
+        |  CAST((CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 ELSE 0 END)
+        |   * ((CAST(num AS HUGEINT) * num * 100000000)
+        |      // (CAST(na AS HUGEINT) * nb)) AS BIGINT) AS lat_cos_e8
+        | FROM sc)
+        |SELECT a_id, b_id, lat_cos_e8 FROM (
+        | SELECT *, row_number() OVER (PARTITION BY a_id
+        |   ORDER BY lat_cos_e8 DESC, b_id) AS rn FROM scored)
+        |WHERE rn <= 5 AND lat_cos_e8 >= 16000000
+        |ORDER BY a_id, b_id""".stripMargin),
 
     // Exact kNN classification: each query vector takes the majority
     // label of its 5 nearest neighbors (cosine; self excluded), ties on
@@ -130,7 +290,7 @@ object SimQ {
     // oracle knows the truth from the id arithmetic — the codec-gate
     // discipline applied to vector quality. Classification precedence
     // mirrors injection precedence. One scan, 4-row rollup.
-    "q208_embedding_hygiene" -> ((s, dir) => {
+    Q("q208_embedding_hygiene", (s, dir) => {
       val injected = t(s, dir, "embeddings").select(col("vec_id"),
         when(col("vec_id") % 97 === 0,
             transform(col("embedding"),
@@ -153,7 +313,15 @@ object SimQ {
         .agg(count(lit(1)).as("n"),
           sum(col("vec_id")).cast("long").as("id_checksum"))
         .orderBy("cls")
-    }),
+    }, oracle =
+      // injection truth from id arithmetic — the gate must rediscover it
+      // from the floats; precedence identical on both sides
+      """SELECT CASE WHEN vec_id % 97 = 0 THEN 'nan'
+        |  WHEN vec_id % 89 = 0 THEN 'zero'
+        |  WHEN vec_id % 83 = 0 THEN 'norm_outlier'
+        |  ELSE 'ok' END AS cls,
+        | count(*) AS n, CAST(sum(vec_id) AS BIGINT) AS id_checksum
+        |FROM embeddings GROUP BY 1 ORDER BY cls""".stripMargin),
 
     // Hard-negative mining for contrastive training: for each probe
     // vector (every 100th id), the 3 highest-cosine vectors with a
@@ -163,7 +331,7 @@ object SimQ {
     // the top-3 is a window partitioned BY PROBE — parallel across
     // probes, never a global sort. Deterministic (round-6 cosine,
     // vec_id tie-break) → exact oracle.
-    "q210_hard_negatives" -> ((s, dir) => {
+    Q("q210_hard_negatives", (s, dir) => {
       val e = t(s, dir, "embeddings")
       // bounded eval sample (the q302 lesson, applied retroactively):
       // a fixed COUNT of probes, not a fixed fraction — n/100 probes
@@ -182,9 +350,24 @@ object SimQ {
         .select(col("q_id"), col("vec_id").as("neg_id"),
           col("rank").cast("long").as("rank"), col("cos_sim"))
         .orderBy("q_id", "rank")
-    }),
+    }, oracle =
+      """WITH p AS (
+        | SELECT vec_id AS q_id, label AS q_label, embedding AS qv
+        | FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 1600),
+        |s AS (
+        | SELECT p.q_id, e.vec_id AS neg_id,
+        |  round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+        |    CAST(p.qv AS DOUBLE[])), 6) AS cos_sim
+        | FROM embeddings e JOIN p ON e.label <> p.q_label),
+        |r AS (
+        | SELECT q_id, neg_id, cos_sim,
+        |  row_number() OVER (PARTITION BY q_id
+        |    ORDER BY cos_sim DESC, neg_id) AS rank
+        | FROM s)
+        |SELECT q_id, neg_id, CAST(rank AS BIGINT) AS rank, cos_sim
+        |FROM r WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin),
 
-    "q90_knn_classify" -> ((s, dir) => {
+    Q("q90_knn_classify", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val e = t(s, dir, "embeddings").select("vec_id", "label", "embedding")
       val q = e.filter(pmod(col("vec_id"), lit(50)) === 7)
@@ -205,7 +388,27 @@ object SimQ {
         .filter(col("vr") === 1)
         .select(col("q_id"), col("label").as("pred_label"), col("votes"))
         .orderBy("q_id")
-    }),
+    }, oracle =
+      """WITH q AS (
+        | SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
+        | WHERE vec_id % 50 = 7),
+        |sc AS (
+        | SELECT q.q_id, e.vec_id, e.label,
+        |  round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+        |    CAST(q.q_emb AS DOUBLE[])), 6) AS cos
+        | FROM embeddings e, q WHERE e.vec_id <> q.q_id),
+        |kn AS (
+        | SELECT * FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY q_id
+        |    ORDER BY cos DESC, vec_id) AS rn FROM sc)
+        | WHERE rn <= 5),
+        |v AS (
+        | SELECT q_id, label, count(*) AS votes, max(cos) AS best
+        | FROM kn GROUP BY q_id, label)
+        |SELECT q_id, label AS pred_label, votes
+        |FROM (SELECT *, row_number() OVER (PARTITION BY q_id
+        |  ORDER BY votes DESC, best DESC, label) AS vr FROM v)
+        |WHERE vr = 1 ORDER BY q_id""".stripMargin),
 
     // Cluster cohesion: per-label centroid (positional mean of the
     // embedding array — posexplode → one (label, pos) aggregate), then
@@ -214,7 +417,7 @@ object SimQ {
     // tiny); member scoring is one pass. All sums in DECIMAL and the
     // centroid/cosine values rounded at fixed points, so the pipeline is
     // exact across engines despite three levels of float aggregation.
-    "q92_label_cohesion" -> ((s, dir) => {
+    Q("q92_label_cohesion", (s, dir) => {
       import org.apache.spark.sql.types.DecimalType
       val comp = t(s, dir, "embeddings")
         .select(col("label"), col("vec_id"),
@@ -237,7 +440,29 @@ object SimQ {
           round(sum(col("cos").cast(DecimalType(30, 6))).cast("double") /
             count(lit(1)), 6).as("mean_cohesion"))
         .orderBy("label")
-    }),
+    }, oracle =
+      // positions are engine-local (0- vs 1-based never escapes the
+      // engine): they only align member components with centroid
+      // components inside each formulation
+      """WITH pos AS (SELECT unnest(range(1, 65)) AS i),
+        |comp AS (
+        | SELECT label, vec_id, i, CAST(embedding[i] AS DOUBLE) AS x
+        | FROM embeddings, pos),
+        |cent AS (
+        | SELECT label, i,
+        |  round(CAST(sum(CAST(x AS DECIMAL(38,8))) AS DOUBLE)
+        |    / count(*), 6) AS c
+        | FROM comp GROUP BY label, i),
+        |mc AS (
+        | SELECT label, vec_id,
+        |  CAST(sum(CAST(x * c AS DECIMAL(38,12))) AS DOUBLE) AS d,
+        |  CAST(sum(CAST(x * x AS DECIMAL(38,12))) AS DOUBLE) AS nx,
+        |  CAST(sum(CAST(c * c AS DECIMAL(38,12))) AS DOUBLE) AS nc
+        | FROM comp JOIN cent USING (label, i) GROUP BY label, vec_id)
+        |SELECT label, count(*) AS n_vecs,
+        | round(CAST(sum(CAST(round(d / (sqrt(nx) * sqrt(nc)), 6)
+        |     AS DECIMAL(30,6))) AS DOUBLE) / count(*), 6) AS mean_cohesion
+        |FROM mc GROUP BY label ORDER BY label""".stripMargin),
 
     // Distributed Lloyd k-means over the embedding corpus (k=4, two
     // update rounds + final assignment) — the clustering step of
@@ -258,7 +483,7 @@ object SimQ {
     // a single corpus pass, the same plan a 1000-executor run wants.
     // The centroid checksum rides along the final assignment instead of
     // re-evaluating the update subplan a second time.
-    "q182_kmeans_embed" -> ((s, dir) => {
+    Q("q182_kmeans_embed", (s, dir) => {
       val k = 4
       val quant = transform(col("embedding"),
         v => floor(v.cast("double") * 1000).cast("long"))
@@ -296,7 +521,46 @@ object SimQ {
           sum(col("dist")).as("inertia"),
           min(col("centsum")).as("cent_checksum"))
         .orderBy("cid")
-    }),
+    }, oracle =
+      """WITH b AS (
+        | SELECT vec_id, list_transform(embedding,
+        |   v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS q
+        | FROM embeddings),
+        |c0 AS (SELECT vec_id AS cid, q AS cent FROM b WHERE vec_id < 4),
+        |a1 AS (SELECT vec_id, q, cid FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY vec_id
+        |    ORDER BY dist, cid) AS rn FROM (
+        |   SELECT b.vec_id, b.q, c.cid,
+        |    list_sum(list_transform(range(1, 65),
+        |     i -> (b.q[i] - c.cent[i]) * (b.q[i] - c.cent[i]))) AS dist
+        |   FROM b, c0 c)) WHERE rn = 1),
+        |c1 AS (SELECT cid, list(cv ORDER BY pos) AS cent FROM (
+        |  SELECT cid, i AS pos,
+        |   CAST(sum(q[i]) // count(*) AS BIGINT) AS cv
+        |  FROM a1, range(1, 65) t(i) GROUP BY cid, i) GROUP BY cid),
+        |a2 AS (SELECT vec_id, q, cid FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY vec_id
+        |    ORDER BY dist, cid) AS rn FROM (
+        |   SELECT b.vec_id, b.q, c.cid,
+        |    list_sum(list_transform(range(1, 65),
+        |     i -> (b.q[i] - c.cent[i]) * (b.q[i] - c.cent[i]))) AS dist
+        |   FROM b, c1 c)) WHERE rn = 1),
+        |c2 AS (SELECT cid, list(cv ORDER BY pos) AS cent FROM (
+        |  SELECT cid, i AS pos,
+        |   CAST(sum(q[i]) // count(*) AS BIGINT) AS cv
+        |  FROM a2, range(1, 65) t(i) GROUP BY cid, i) GROUP BY cid),
+        |a3 AS (SELECT vec_id, cid, dist, centsum FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY vec_id
+        |    ORDER BY dist, cid) AS rn FROM (
+        |   SELECT b.vec_id, c.cid,
+        |    list_sum(list_transform(range(1, 65),
+        |     i -> (b.q[i] - c.cent[i]) * (b.q[i] - c.cent[i]))) AS dist,
+        |    CAST(list_sum(c.cent) AS BIGINT) AS centsum
+        |   FROM b, c2 c)) WHERE rn = 1)
+        |SELECT cid, CAST(count(*) AS BIGINT) AS n_members,
+        | CAST(sum(dist) AS BIGINT) AS inertia,
+        | min(centsum) AS cent_checksum
+        |FROM a3 GROUP BY cid ORDER BY cid""".stripMargin),
 
     // SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     // at web-scale through semantic deduplication" — the published
@@ -313,10 +577,20 @@ object SimQ {
     // ×100), so the pinned-k semantics are only ever demonstrated on
     // the first 500 vec_ids (= the whole sf0.01 registry corpus, a
     // no-op at the gate SF; the production corpus-sized form is q291).
-    "q211_semantic_dedup" -> ((s, dir) =>
+    Q("q211_semantic_dedup", (s, dir) =>
       SimilarityOps.semanticDedup(
         t(s, dir, "embeddings").filter(col("vec_id") < 500),
-        "vec_id", "embedding", k = 4)),
+        "vec_id", "embedding", k = 4), oracle =
+      // Unrolled Lloyd rounds; all arithmetic integral so the clustering
+      // is bit-identical to the engine (1-based positions are DuckDB-local
+      // — they only align members with centroids inside this SQL).
+      // q182's kmeans CTE prefix + intra-cluster integer near-dup pairs
+      // + the q56-style recursive-CTE components, sequentially
+      // bounded input (fixed COUNT, not fraction — the registration
+      // note): the engine filters vec_id < 500 before clustering
+      semanticDedupOracle(
+      "c0 AS (SELECT vec_id AS cid, q AS cent FROM b WHERE vec_id < 4)",
+      where = " WHERE vec_id < 500")),
 
     // The PRODUCTION SemDeDup entry (r12 verdict #1): k ∝ n via
     // semanticDedupAuto — k = ⌈n / 1024⌉, so expected cluster size
@@ -328,10 +602,19 @@ object SimQ {
     // with the corpus. The oracle computes the same k in its own CTE
     // (seeds = the k smallest vec_ids), so the row values — cluster
     // report per cid — stay hash-exact whatever n is.
-    "q291_semantic_dedup_auto" -> ((s, dir) =>
+    Q("q291_semantic_dedup_auto", (s, dir) =>
       SimilarityOps.semanticDedupAuto(
         t(s, dir, "embeddings"), "vec_id", "embedding",
-        targetClusterSize = 1024)),
+        targetClusterSize = 1024), oracle =
+      // q291: the same replay with k computed from the corpus count in
+      // its own CTE — seeds are the k = (n + 1023) // 1024 smallest
+      // vec_ids (row_number, so it is id-domain-agnostic like the
+      // engine's TakeOrdered seed rule)
+      semanticDedupOracle(
+      """kk AS (SELECT (count(*) + 1023) // 1024 AS k FROM embeddings),
+        |c0 AS (SELECT vec_id AS cid, q AS cent FROM (
+        |  SELECT vec_id, q, row_number() OVER (ORDER BY vec_id) AS rn
+        |  FROM b) WHERE rn <= (SELECT k FROM kk))""".stripMargin)),
 
     // Product-quantization codebook training + encoding (the PQ half
     // of IVF-PQ, the standard billion-vector ANN memory layout): 64
@@ -349,7 +632,7 @@ object SimQ {
     // broadcast. Output: per (subspace, code) cell occupancy, total
     // quantization error, and codebook checksum — the codebook quality
     // report that decides nprobe/code-width at deploy time.
-    "q185_product_quant" -> ((s, dir) => {
+    Q("q185_product_quant", (s, dir) => {
       val (_, cb1, assigned) = pqTrained(s, dir)
       val checksum = cb1.groupBy("sub", "code")
         .agg(sum(col("cv")).as("cb_checksum"))
@@ -358,7 +641,42 @@ object SimQ {
         .agg(count(lit(1)).as("n_vecs"), sum(col("dist")).as("total_err"))
         .join(broadcast(checksum), Seq("sub", "code"))
         .orderBy("sub", "code")
-    }),
+    }, oracle =
+      // Subspace/component indices are DuckDB-local 1-based; sub/j are
+      // 0-based on both sides by construction ((i-1) here, pos there).
+      """WITH b AS (
+        | SELECT vec_id, (i - 1) // 8 AS sub, (i - 1) % 8 AS j,
+        |  CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT)
+        |    AS v
+        | FROM embeddings
+        | CROSS JOIN (SELECT unnest(range(1, 65)) AS i) t),
+        |c0 AS (SELECT sub, vec_id AS code, j, v AS cv
+        |  FROM b WHERE vec_id < 4),
+        |a1 AS (SELECT vec_id, sub, code FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
+        |    ORDER BY dist, code) AS rn FROM (
+        |   SELECT b.vec_id, b.sub, c.code,
+        |    sum((b.v - c.cv) * (b.v - c.cv)) AS dist
+        |   FROM b JOIN c0 c ON c.sub = b.sub AND c.j = b.j
+        |   GROUP BY b.vec_id, b.sub, c.code)) WHERE rn = 1),
+        |c1 AS (SELECT b.sub, a.code, b.j,
+        |  CAST(sum(b.v) // count(*) AS BIGINT) AS cv
+        | FROM b JOIN a1 a ON a.vec_id = b.vec_id AND a.sub = b.sub
+        | GROUP BY b.sub, a.code, b.j),
+        |cs AS (SELECT sub, code, CAST(sum(cv) AS BIGINT) AS cb_checksum
+        | FROM c1 GROUP BY sub, code),
+        |a2 AS (SELECT vec_id, sub, code, dist FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
+        |    ORDER BY dist, code) AS rn FROM (
+        |   SELECT b.vec_id, b.sub, c.code,
+        |    sum((b.v - c.cv) * (b.v - c.cv)) AS dist
+        |   FROM b JOIN c1 c ON c.sub = b.sub AND c.j = b.j
+        |   GROUP BY b.vec_id, b.sub, c.code)) WHERE rn = 1)
+        |SELECT a2.sub, a2.code, CAST(count(*) AS BIGINT) AS n_vecs,
+        | CAST(sum(a2.dist) AS BIGINT) AS total_err,
+        | min(cs.cb_checksum) AS cb_checksum
+        |FROM a2 JOIN cs ON cs.sub = a2.sub AND cs.code = a2.code
+        |GROUP BY a2.sub, a2.code ORDER BY a2.sub, a2.code""".stripMargin),
 
     // PQ asymmetric-distance search (Jégou, Douze & Schmid, TPAMI
     // 2011, §IV) — the READ path of the q185 codebook and the reason
@@ -371,7 +689,7 @@ object SimQ {
     // raw embeddings. Same integer lattice as training, so the top-10
     // is bit-identical cross-engine; at 100 TB the codes relation IS
     // the index and this plan is one broadcast-join scan + top-k. */
-    "q216_pq_adc_search" -> ((s, dir) => {
+    Q("q216_pq_adc_search", (s, dir) => {
       val (base, cb1, assigned) = pqTrained(s, dir)
       val qv = base.filter(col("vec_id") === 7)
         .select(col("sub"), col("j"), col("v").as("qv"))
@@ -385,7 +703,46 @@ object SimQ {
         .agg(sum(col("lut")).as("adc_dist"))
         .orderBy(asc("adc_dist"), asc("vec_id"))
         .limit(10)
-    }),
+    }, oracle =
+      // q185's training chain verbatim through the final assignment a2,
+      // then the ADC read path: 32-row query lookup table + 8 lookups
+      // per vector — integers end to end, so the top-10 is exact.
+      """WITH b AS (
+        | SELECT vec_id, (i - 1) // 8 AS sub, (i - 1) % 8 AS j,
+        |  CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT)
+        |    AS v
+        | FROM embeddings
+        | CROSS JOIN (SELECT unnest(range(1, 65)) AS i) t),
+        |c0 AS (SELECT sub, vec_id AS code, j, v AS cv
+        |  FROM b WHERE vec_id < 4),
+        |a1 AS (SELECT vec_id, sub, code FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
+        |    ORDER BY dist, code) AS rn FROM (
+        |   SELECT b.vec_id, b.sub, c.code,
+        |    sum((b.v - c.cv) * (b.v - c.cv)) AS dist
+        |   FROM b JOIN c0 c ON c.sub = b.sub AND c.j = b.j
+        |   GROUP BY b.vec_id, b.sub, c.code)) WHERE rn = 1),
+        |c1 AS (SELECT b.sub, a.code, b.j,
+        |  CAST(sum(b.v) // count(*) AS BIGINT) AS cv
+        | FROM b JOIN a1 a ON a.vec_id = b.vec_id AND a.sub = b.sub
+        | GROUP BY b.sub, a.code, b.j),
+        |a2 AS (SELECT vec_id, sub, code FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
+        |    ORDER BY dist, code) AS rn FROM (
+        |   SELECT b.vec_id, b.sub, c.code,
+        |    sum((b.v - c.cv) * (b.v - c.cv)) AS dist
+        |   FROM b JOIN c1 c ON c.sub = b.sub AND c.j = b.j
+        |   GROUP BY b.vec_id, b.sub, c.code)) WHERE rn = 1),
+        |qv AS (SELECT sub, j, v AS qv FROM b WHERE vec_id = 7),
+        |lut AS (
+        | SELECT c1.sub, c1.code,
+        |  sum((qv.qv - c1.cv) * (qv.qv - c1.cv)) AS lut
+        | FROM c1 JOIN qv ON qv.sub = c1.sub AND qv.j = c1.j
+        | GROUP BY c1.sub, c1.code)
+        |SELECT a2.vec_id, CAST(sum(l.lut) AS BIGINT) AS adc_dist
+        |FROM a2 JOIN lut l ON l.sub = a2.sub AND l.code = a2.code
+        |GROUP BY a2.vec_id ORDER BY adc_dist, a2.vec_id
+        |LIMIT 10""".stripMargin),
 
     // IVF-PQ COMPOSED search (Jégou, Douze & Schmid, TPAMI 2011,
     // §V — "IVFADC") — the standard billion-vector ANN layout
@@ -404,7 +761,7 @@ object SimQ {
     // ARE the index and this is one broadcast-join scan + top-k,
     // with the inverted-file pruning cutting the scanned fraction to
     // nprobe/cells.
-    "q301_ivfpq_search" -> ((s, dir) => {
+    Q("q301_ivfpq_search", (s, dir) => {
       val (q, cents1, cb1, codes, cellOf) = ivfPqTrained(s, dir)
       // query: nprobe=2 nearest cells, per-cell residual LUT
       val qv = q.filter(col("vec_id") === 7).select(col("q").as("qq"))
@@ -427,7 +784,81 @@ object SimQ {
         .agg(sum(col("lut")).as("adc_dist"))
         .orderBy(asc("adc_dist"), asc("vec_id"))
         .limit(10)
-    }),
+    }, oracle =
+      // IVFADC replay: the q182 coarse-kmeans CTE prefix (one update
+      // round), residuals vs the final assignment's centroid, the q216
+      // PQ CTEs retrained on those residuals, nprobe=2 cell probe with
+      // a per-cell LUT, codes-only ADC scan
+      """WITH b AS (
+        | SELECT vec_id, list_transform(embedding,
+        |   v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS q
+        | FROM embeddings),
+        |c0 AS (SELECT vec_id AS cid, q AS cent FROM b WHERE vec_id < 4),
+        |a1 AS (SELECT vec_id, q, cid FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY vec_id
+        |    ORDER BY dist, cid) AS rn FROM (
+        |   SELECT b.vec_id, b.q, c.cid,
+        |    list_sum(list_transform(range(1, 65),
+        |     i -> (b.q[i] - c.cent[i]) * (b.q[i] - c.cent[i]))) AS dist
+        |   FROM b, c0 c)) WHERE rn = 1),
+        |c1 AS (SELECT cid, list(cv ORDER BY pos) AS cent FROM (
+        |  SELECT cid, i AS pos,
+        |   CAST(sum(q[i]) // count(*) AS BIGINT) AS cv
+        |  FROM a1, range(1, 65) t(i) GROUP BY cid, i) GROUP BY cid),
+        |a2 AS (SELECT vec_id, q, cid FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY vec_id
+        |    ORDER BY dist, cid) AS rn FROM (
+        |   SELECT b.vec_id, b.q, c.cid,
+        |    list_sum(list_transform(range(1, 65),
+        |     i -> (b.q[i] - c.cent[i]) * (b.q[i] - c.cent[i]))) AS dist
+        |   FROM b, c1 c)) WHERE rn = 1),
+        |rb AS (
+        | SELECT a2.vec_id, a2.cid, (i - 1) // 8 AS sub, (i - 1) % 8 AS j,
+        |  a2.q[i] - c1.cent[i] AS v
+        | FROM a2 JOIN c1 ON c1.cid = a2.cid, range(1, 65) t(i)),
+        |pc0 AS (SELECT sub, vec_id AS code, j, v AS cv
+        |  FROM rb WHERE vec_id < 4),
+        |p1 AS (SELECT vec_id, sub, code FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
+        |    ORDER BY dist, code) AS rn FROM (
+        |   SELECT rb.vec_id, rb.sub, c.code,
+        |    sum((rb.v - c.cv) * (rb.v - c.cv)) AS dist
+        |   FROM rb JOIN pc0 c ON c.sub = rb.sub AND c.j = rb.j
+        |   GROUP BY rb.vec_id, rb.sub, c.code)) WHERE rn = 1),
+        |pcb AS (SELECT rb.sub, p.code, rb.j,
+        |  CAST(sum(rb.v) // count(*) AS BIGINT) AS cv
+        | FROM rb JOIN p1 p ON p.vec_id = rb.vec_id AND p.sub = rb.sub
+        | GROUP BY rb.sub, p.code, rb.j),
+        |p2 AS (SELECT vec_id, sub, code FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
+        |    ORDER BY dist, code) AS rn FROM (
+        |   SELECT rb.vec_id, rb.sub, c.code,
+        |    sum((rb.v - c.cv) * (rb.v - c.cv)) AS dist
+        |   FROM rb JOIN pcb c ON c.sub = rb.sub AND c.j = rb.j
+        |   GROUP BY rb.vec_id, rb.sub, c.code)) WHERE rn = 1),
+        |qq AS (SELECT q FROM b WHERE vec_id = 7),
+        |probe AS (SELECT cid, cent FROM (
+        |  SELECT c1.cid, c1.cent,
+        |   list_sum(list_transform(range(1, 65),
+        |    i -> (qq.q[i] - c1.cent[i]) * (qq.q[i] - c1.cent[i])))
+        |    AS cdist
+        |  FROM c1, qq ORDER BY cdist, cid LIMIT 2)),
+        |qr AS (
+        | SELECT probe.cid, (i - 1) // 8 AS sub, (i - 1) % 8 AS j,
+        |  qq.q[i] - probe.cent[i] AS qv
+        | FROM probe, qq, range(1, 65) t(i)),
+        |lut AS (
+        | SELECT qr.cid, pcb.sub, pcb.code,
+        |  sum((qr.qv - pcb.cv) * (qr.qv - pcb.cv)) AS lut
+        | FROM qr JOIN pcb ON pcb.sub = qr.sub AND pcb.j = qr.j
+        | GROUP BY qr.cid, pcb.sub, pcb.code)
+        |SELECT p2.vec_id, CAST(a2.cid AS BIGINT) AS cid,
+        | CAST(sum(l.lut) AS BIGINT) AS adc_dist
+        |FROM p2 JOIN a2 ON a2.vec_id = p2.vec_id
+        |JOIN lut l ON l.cid = a2.cid AND l.sub = p2.sub
+        |  AND l.code = p2.code
+        |GROUP BY p2.vec_id, a2.cid
+        |ORDER BY adc_dist, p2.vec_id LIMIT 10""".stripMargin),
 
     // IVFADC RECALL AUDIT — the q238/q278 device for the composed
     // index: recall@10 of q301's IVF-PQ ranking against the exact
@@ -444,7 +875,7 @@ object SimQ {
     // width) are different fixes. Both rankings deterministic
     // integers with (dist, id) tie-breaks, so the audit itself is
     // hash-checkable.
-    "q302_ivfpq_recall" -> ((s, dir) => {
+    Q("q302_ivfpq_recall", (s, dir) => {
       val (q, cents1, cb1, codes, cellOf) = ivfPqTrained(s, dir)
       val probes = q
         .filter(col("vec_id") % 100 === 7 && col("vec_id") < 1600)
@@ -496,7 +927,104 @@ object SimQ {
           sum(when(col("c_vid").isNotNull, 1L).otherwise(0L))
             .as("exact_in_probed"))
         .orderBy("q_id")
-    }),
+    }, oracle =
+      // the q301 replay with a probe SET (vec_id % 100 = 7): exact
+      // top-10 vs per-probe IVFADC top-10, hits + pruning decomposition
+      """WITH b AS (
+        | SELECT vec_id, list_transform(embedding,
+        |   v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS q
+        | FROM embeddings),
+        |c0 AS (SELECT vec_id AS cid, q AS cent FROM b WHERE vec_id < 4),
+        |a1 AS (SELECT vec_id, q, cid FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY vec_id
+        |    ORDER BY dist, cid) AS rn FROM (
+        |   SELECT b.vec_id, b.q, c.cid,
+        |    list_sum(list_transform(range(1, 65),
+        |     i -> (b.q[i] - c.cent[i]) * (b.q[i] - c.cent[i]))) AS dist
+        |   FROM b, c0 c)) WHERE rn = 1),
+        |c1 AS (SELECT cid, list(cv ORDER BY pos) AS cent FROM (
+        |  SELECT cid, i AS pos,
+        |   CAST(sum(q[i]) // count(*) AS BIGINT) AS cv
+        |  FROM a1, range(1, 65) t(i) GROUP BY cid, i) GROUP BY cid),
+        |a2 AS (SELECT vec_id, q, cid FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY vec_id
+        |    ORDER BY dist, cid) AS rn FROM (
+        |   SELECT b.vec_id, b.q, c.cid,
+        |    list_sum(list_transform(range(1, 65),
+        |     i -> (b.q[i] - c.cent[i]) * (b.q[i] - c.cent[i]))) AS dist
+        |   FROM b, c1 c)) WHERE rn = 1),
+        |rb AS (
+        | SELECT a2.vec_id, a2.cid, (i - 1) // 8 AS sub, (i - 1) % 8 AS j,
+        |  a2.q[i] - c1.cent[i] AS v
+        | FROM a2 JOIN c1 ON c1.cid = a2.cid, range(1, 65) t(i)),
+        |pc0 AS (SELECT sub, vec_id AS code, j, v AS cv
+        |  FROM rb WHERE vec_id < 4),
+        |p1 AS (SELECT vec_id, sub, code FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
+        |    ORDER BY dist, code) AS rn FROM (
+        |   SELECT rb.vec_id, rb.sub, c.code,
+        |    sum((rb.v - c.cv) * (rb.v - c.cv)) AS dist
+        |   FROM rb JOIN pc0 c ON c.sub = rb.sub AND c.j = rb.j
+        |   GROUP BY rb.vec_id, rb.sub, c.code)) WHERE rn = 1),
+        |pcb AS (SELECT rb.sub, p.code, rb.j,
+        |  CAST(sum(rb.v) // count(*) AS BIGINT) AS cv
+        | FROM rb JOIN p1 p ON p.vec_id = rb.vec_id AND p.sub = rb.sub
+        | GROUP BY rb.sub, p.code, rb.j),
+        |p2 AS (SELECT vec_id, sub, code FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
+        |    ORDER BY dist, code) AS rn FROM (
+        |   SELECT rb.vec_id, rb.sub, c.code,
+        |    sum((rb.v - c.cv) * (rb.v - c.cv)) AS dist
+        |   FROM rb JOIN pcb c ON c.sub = rb.sub AND c.j = rb.j
+        |   GROUP BY rb.vec_id, rb.sub, c.code)) WHERE rn = 1),
+        |pr AS (SELECT vec_id AS q_id, q AS pq FROM b
+        |  WHERE vec_id % 100 = 7 AND vec_id < 1600),
+        |ex AS (SELECT q_id, vec_id FROM (
+        |  SELECT pr.q_id, b.vec_id, row_number() OVER (
+        |    PARTITION BY pr.q_id ORDER BY
+        |    list_sum(list_transform(range(1, 65),
+        |     i -> (b.q[i] - pr.pq[i]) * (b.q[i] - pr.pq[i]))),
+        |    b.vec_id) AS rn
+        |  FROM b, pr WHERE b.vec_id <> pr.q_id) WHERE rn <= 10),
+        |pcell AS (SELECT q_id, cid, cent FROM (
+        |  SELECT pr.q_id, c1.cid, c1.cent, row_number() OVER (
+        |    PARTITION BY pr.q_id ORDER BY
+        |    list_sum(list_transform(range(1, 65),
+        |     i -> (pr.pq[i] - c1.cent[i]) * (pr.pq[i] - c1.cent[i]))),
+        |    c1.cid) AS rn
+        |  FROM c1, pr) WHERE rn <= 2),
+        |qr AS (
+        | SELECT pcell.q_id, pcell.cid, (i - 1) // 8 AS sub,
+        |  (i - 1) % 8 AS j, pr.pq[i] - pcell.cent[i] AS qv
+        | FROM pcell JOIN pr ON pr.q_id = pcell.q_id, range(1, 65) t(i)),
+        |lut AS (
+        | SELECT qr.q_id, qr.cid, pcb.sub, pcb.code,
+        |  sum((qr.qv - pcb.cv) * (qr.qv - pcb.cv)) AS lut
+        | FROM qr JOIN pcb ON pcb.sub = qr.sub AND pcb.j = qr.j
+        | GROUP BY qr.q_id, qr.cid, pcb.sub, pcb.code),
+        |adcd AS (
+        | SELECT l.q_id, p2.vec_id, sum(l.lut) AS d
+        | FROM p2 JOIN a2 ON a2.vec_id = p2.vec_id
+        | JOIN lut l ON l.cid = a2.cid AND l.sub = p2.sub
+        |   AND l.code = p2.code
+        | WHERE p2.vec_id <> l.q_id
+        | GROUP BY l.q_id, p2.vec_id),
+        |adc AS (SELECT q_id, vec_id FROM (
+        |  SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
+        |    ORDER BY d, vec_id) AS rn FROM adcd) WHERE rn <= 10),
+        |cells AS (
+        | SELECT DISTINCT pcell.q_id, a2.vec_id
+        | FROM pcell JOIN a2 ON a2.cid = pcell.cid)
+        |SELECT ex.q_id,
+        | CAST(sum(CASE WHEN adc.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+        |  AS BIGINT) AS hits_at_10,
+        | CAST(sum(CASE WHEN cells.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+        |  AS BIGINT) AS exact_in_probed
+        |FROM ex
+        |LEFT JOIN adc ON adc.q_id = ex.q_id AND adc.vec_id = ex.vec_id
+        |LEFT JOIN cells ON cells.q_id = ex.q_id
+        |  AND cells.vec_id = ex.vec_id
+        |GROUP BY ex.q_id ORDER BY ex.q_id""".stripMargin),
 
     // Binary-embedding Hamming search — the OTHER standard embedding
     // compression next to PQ (q216): each vector collapses to its 64
@@ -509,7 +1037,7 @@ object SimQ {
     // At 100 TB the signature relation is 16 bytes/vector (a 256×
     // compression) and this plan is one codegen'd scan + top-k; the
     // signature build is a projection that fuses into the parquet scan.
-    "q218_hamming_search" -> ((s, dir) => {
+    Q("q218_hamming_search", (s, dir) => {
       def word(lo: Int, hi: Int): Column =
         (lo to hi).map(k =>
           when(element_at(col("embedding"), k + 1).cast("double") >= 0,
@@ -527,7 +1055,26 @@ object SimQ {
             .cast("long").as("hamming"))
         .orderBy(asc("hamming"), asc("vec_id"))
         .limit(10)
-    }),
+    }, oracle =
+      // sign bits packed into two 32-bit words (no 2^63 overflow);
+      // xor + bit_count are exact integer builtins on both engines
+      """WITH s AS (
+        | SELECT vec_id,
+        |  CAST(list_sum(list_transform(range(1, 33),
+        |   k -> CASE WHEN CAST(embedding[k] AS DOUBLE) >= 0
+        |    THEN 1::BIGINT << CAST(k - 1 AS INTEGER) ELSE 0 END))
+        |   AS BIGINT) AS lo,
+        |  CAST(list_sum(list_transform(range(33, 65),
+        |   k -> CASE WHEN CAST(embedding[k] AS DOUBLE) >= 0
+        |    THEN 1::BIGINT << CAST(k - 33 AS INTEGER) ELSE 0 END))
+        |   AS BIGINT) AS hi
+        | FROM embeddings),
+        |p AS (SELECT lo AS qlo, hi AS qhi FROM s WHERE vec_id = 7)
+        |SELECT s.vec_id,
+        | CAST(bit_count(xor(s.lo, p.qlo))
+        |   + bit_count(xor(s.hi, p.qhi)) AS BIGINT) AS hamming
+        |FROM s, p WHERE s.vec_id <> 7
+        |ORDER BY hamming, s.vec_id LIMIT 10""".stripMargin),
 
     // Maximal-marginal-relevance selection (Carbonell–Goldstein MMR):
     // greedy diverse top-4 against vec_id 1's query — the eval-set /
@@ -545,7 +1092,7 @@ object SimQ {
     // corpus never does). Scale: per round one codegen pass over the
     // checkpointed quantized base + a k-deep merge — O(k·corpus), the
     // same cost profile as k rounds of q19.
-    "q189_mmr_select" -> ((s, dir) => {
+    Q("q189_mmr_select", (s, dir) => {
       import s.implicits._
       def simNeg(q: Column, c: Seq[Long]): Column = {
         // −‖q−c‖² via dot identities: the literal's self-dot folds at
@@ -583,7 +1130,66 @@ object SimQ {
       sel.zipWithIndex
         .map { case ((id, _, rel, sc), i) => (i + 1L, id, rel, sc) }
         .toDF("sel_rank", "vec_id", "rel", "score")
-    }),
+    }, oracle =
+      // The greedy MMR rounds unrolled; integer scores make each argmax
+      // well-defined (ties by vec_id), so four sequential LIMIT 1 picks
+      // reproduce the engine's selection exactly.
+      """WITH b AS (
+        | SELECT vec_id, list_transform(embedding,
+        |   v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS q
+        | FROM embeddings),
+        |qv AS (SELECT q FROM b WHERE vec_id = 1),
+        |cand AS (
+        | SELECT b.vec_id, b.q, -list_sum(list_transform(range(1, 65),
+        |   i -> (b.q[i] - qv.q[i]) * (b.q[i] - qv.q[i]))) AS rel
+        | FROM b, qv WHERE b.vec_id <> 1),
+        |s1 AS (SELECT vec_id, q, rel, 7 * rel AS score FROM cand
+        |  ORDER BY score DESC, vec_id LIMIT 1),
+        |p2 AS (SELECT c.vec_id, c.q, c.rel,
+        |  -list_sum(list_transform(range(1, 65),
+        |    i -> (c.q[i] - s.q[i]) * (c.q[i] - s.q[i]))) AS sim
+        | FROM cand c, s1 s
+        | WHERE c.vec_id NOT IN (SELECT vec_id FROM s1)),
+        |s2 AS (SELECT vec_id, q, rel, score FROM (
+        |  SELECT vec_id, any_value(q) AS q, any_value(rel) AS rel,
+        |   7 * any_value(rel) - 3 * max(sim) AS score
+        |  FROM p2 GROUP BY vec_id)
+        | ORDER BY score DESC, vec_id LIMIT 1),
+        |sel2 AS (SELECT vec_id, q FROM s1
+        |  UNION ALL SELECT vec_id, q FROM s2),
+        |p3 AS (SELECT c.vec_id, c.q, c.rel,
+        |  -list_sum(list_transform(range(1, 65),
+        |    i -> (c.q[i] - s.q[i]) * (c.q[i] - s.q[i]))) AS sim
+        | FROM cand c, sel2 s
+        | WHERE c.vec_id NOT IN (SELECT vec_id FROM sel2)),
+        |s3 AS (SELECT vec_id, q, rel, score FROM (
+        |  SELECT vec_id, any_value(q) AS q, any_value(rel) AS rel,
+        |   7 * any_value(rel) - 3 * max(sim) AS score
+        |  FROM p3 GROUP BY vec_id)
+        | ORDER BY score DESC, vec_id LIMIT 1),
+        |sel3 AS (SELECT vec_id, q FROM sel2
+        |  UNION ALL SELECT vec_id, q FROM s3),
+        |p4 AS (SELECT c.vec_id, c.q, c.rel,
+        |  -list_sum(list_transform(range(1, 65),
+        |    i -> (c.q[i] - s.q[i]) * (c.q[i] - s.q[i]))) AS sim
+        | FROM cand c, sel3 s
+        | WHERE c.vec_id NOT IN (SELECT vec_id FROM sel3)),
+        |s4 AS (SELECT vec_id, q, rel, score FROM (
+        |  SELECT vec_id, any_value(q) AS q, any_value(rel) AS rel,
+        |   7 * any_value(rel) - 3 * max(sim) AS score
+        |  FROM p4 GROUP BY vec_id)
+        | ORDER BY score DESC, vec_id LIMIT 1)
+        |SELECT * FROM (
+        | SELECT CAST(1 AS BIGINT) AS sel_rank, vec_id,
+        |  CAST(rel AS BIGINT) AS rel, CAST(score AS BIGINT) AS score
+        | FROM s1
+        | UNION ALL SELECT CAST(2 AS BIGINT), vec_id,
+        |  CAST(rel AS BIGINT), CAST(score AS BIGINT) FROM s2
+        | UNION ALL SELECT CAST(3 AS BIGINT), vec_id,
+        |  CAST(rel AS BIGINT), CAST(score AS BIGINT) FROM s3
+        | UNION ALL SELECT CAST(4 AS BIGINT), vec_id,
+        |  CAST(rel AS BIGINT), CAST(score AS BIGINT) FROM s4)
+        |ORDER BY sel_rank""".stripMargin),
 
     // Embedding-space drift: per-label centroid displacement between
     // two deterministic corpus halves (vec_id parity — id-gap-robust) —
@@ -596,7 +1202,7 @@ object SimQ {
     // a (label, half, dim)-keyed truncated mean (DIV, toward zero) — label·2·64 rows at any
     // corpus size — then the halves join label-dim-wise. Nothing
     // corpus-sized shuffles twice.
-    "q201_embedding_drift" -> ((s, dir) => {
+    Q("q201_embedding_drift", (s, dir) => {
       val comp = t(s, dir, "embeddings")
         .select(col("label"), (col("vec_id") % 2).as("half"),
           posexplode(transform(col("embedding"),
@@ -618,11 +1224,29 @@ object SimQ {
           sum((col("ca") - col("cb")) * (col("ca") - col("cb")))
             .as("drift_sq"))
         .orderBy("label")
-    }),
+    }, oracle =
+      """WITH comp AS (
+        | SELECT label, vec_id % 2 AS half, i AS pos,
+        |  CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT)
+        |    AS v
+        | FROM embeddings
+        | CROSS JOIN (SELECT unnest(range(1, 65)) AS i) t),
+        |cent AS (
+        | SELECT label, half, pos,
+        |  CAST(sum(v) // count(*) AS BIGINT) AS cv,
+        |  CAST(count(*) AS BIGINT) AS nc
+        | FROM comp GROUP BY label, half, pos)
+        |SELECT a.label, CAST(min(a.nc) AS BIGINT) AS n_even,
+        | CAST(min(b.nc) AS BIGINT) AS n_odd,
+        | CAST(sum((a.cv - b.cv) * (a.cv - b.cv)) AS BIGINT) AS drift_sq
+        |FROM cent a JOIN cent b
+        |  ON a.label = b.label AND a.pos = b.pos
+        |  AND a.half = 0 AND b.half = 1
+        |GROUP BY a.label ORDER BY a.label""".stripMargin),
 
     // Label centroid distance: per-label mean vector then each label's
     // cosine to the global mean — exercises array aggregation at scale.
-    "q26_label_stats" -> ((s, dir) => {
+    Q("q26_label_stats", (s, dir) => {
       t(s, dir, "embeddings")
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
         .groupBy("label")
@@ -630,7 +1254,12 @@ object SimQ {
           round(sum(col("x").cast("double")), 4).as("sum_components"),
           round(avg(col("x").cast("double")), 6).as("avg_component"))
         .orderBy("label")
-    }),
+    }, oracle =
+      """SELECT label, CAST(count(*) AS BIGINT) AS n_components,
+        | round(sum(CAST(x AS DOUBLE)), 4) AS sum_components,
+        | round(avg(CAST(x AS DOUBLE)), 6) AS avg_component
+        |FROM (SELECT label, unnest(embedding) AS x FROM embeddings)
+        |GROUP BY label ORDER BY label""".stripMargin),
 
     // Int8 scalar-quantization error audit — the pre-flight check for
     // shipping an embedding index at 1/4 the bytes. Both the reference
@@ -641,7 +1270,7 @@ object SimQ {
     // float epsilon anywhere. Shape: per-row explode folding straight
     // into a label-sized rollup with map-side combine; nothing
     // corpus-sized crosses a shuffle.
-    "q258_int8_quant_error" -> ((s, dir) => {
+    Q("q258_int8_quant_error", (s, dir) => {
       val x = col("x").cast("double")
       val l = floor(x * 1000000).cast("long")
       val q = floor(x * 127).cast("long")
@@ -655,7 +1284,18 @@ object SimQ {
           max(col("err")).as("max_err"))
         .withColumn("mean_err", ldiv(col("sum_err"), col("n_components")))
         .orderBy("label")
-    }),
+    }, oracle =
+      """WITH c AS (
+        | SELECT CAST(label AS BIGINT) AS label,
+        |  abs(127 * CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
+        |    - 1000000 * CAST(floor(CAST(x AS DOUBLE) * 127) AS BIGINT))
+        |    AS err
+        | FROM (SELECT label, unnest(embedding) AS x FROM embeddings))
+        |SELECT label, count(*) AS n_components,
+        | CAST(sum(err) AS BIGINT) AS sum_err,
+        | CAST(max(err) AS BIGINT) AS max_err,
+        | CAST(CAST(sum(err) AS HUGEINT) // count(*) AS BIGINT) AS mean_err
+        |FROM c GROUP BY label ORDER BY label""".stripMargin),
 
     // Matryoshka-style dimension-truncation audit: how much of each
     // label's embedding ENERGY (Σ component², on the exact
@@ -663,7 +1303,7 @@ object SimQ {
     // go/no-go readout for serving truncated vectors. All-integer
     // arithmetic → exact bp via IntegralDivide. Same explode→rollup
     // shape as q258; the dim predicate folds into the partial agg.
-    "q259_matryoshka_energy" -> ((s, dir) => {
+    Q("q259_matryoshka_energy", (s, dir) => {
       val q = floor(col("x").cast("double") * 1000).cast("long")
       t(s, dir, "embeddings")
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
@@ -675,7 +1315,20 @@ object SimQ {
         .select(col("label"), col("e16"), col("e64"),
           ldiv(col("e16") * 10000, col("e64")).as("retained_bp"))
         .orderBy("label")
-    }),
+    }, oracle =
+      """WITH c AS (
+        | SELECT CAST(label AS BIGINT) AS label, i,
+        |  CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS q
+        | FROM embeddings, range(1, 65) t(i)),
+        |g AS (
+        | SELECT label,
+        |  CAST(sum(CASE WHEN i <= 16 THEN q * q ELSE 0 END) AS BIGINT)
+        |    AS e16,
+        |  CAST(sum(q * q) AS BIGINT) AS e64
+        | FROM c GROUP BY label)
+        |SELECT label, e16, e64,
+        | CAST(CAST(e16 AS HUGEINT) * 10000 // e64 AS BIGINT) AS retained_bp
+        |FROM g ORDER BY label""".stripMargin),
   )
 
   /** Shared PQ lattice + one-Lloyd-round training (q185's codebook,
@@ -866,700 +1519,4 @@ object SimQ {
         |LEFT JOIN ec ON a3.cid = ec.cid
         |GROUP BY a3.cid ORDER BY a3.cid""".stripMargin
   }
-
-  val oracles: Map[String, String] = Map(
-    // injection truth from id arithmetic — the gate must rediscover it
-    // from the floats; precedence identical on both sides
-    "q208_embedding_hygiene" ->
-      """SELECT CASE WHEN vec_id % 97 = 0 THEN 'nan'
-        |  WHEN vec_id % 89 = 0 THEN 'zero'
-        |  WHEN vec_id % 83 = 0 THEN 'norm_outlier'
-        |  ELSE 'ok' END AS cls,
-        | count(*) AS n, CAST(sum(vec_id) AS BIGINT) AS id_checksum
-        |FROM embeddings GROUP BY 1 ORDER BY cls""".stripMargin,
-
-    "q210_hard_negatives" ->
-      """WITH p AS (
-        | SELECT vec_id AS q_id, label AS q_label, embedding AS qv
-        | FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 1600),
-        |s AS (
-        | SELECT p.q_id, e.vec_id AS neg_id,
-        |  round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |    CAST(p.qv AS DOUBLE[])), 6) AS cos_sim
-        | FROM embeddings e JOIN p ON e.label <> p.q_label),
-        |r AS (
-        | SELECT q_id, neg_id, cos_sim,
-        |  row_number() OVER (PARTITION BY q_id
-        |    ORDER BY cos_sim DESC, neg_id) AS rank
-        | FROM s)
-        |SELECT q_id, neg_id, CAST(rank AS BIGINT) AS rank, cos_sim
-        |FROM r WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin,
-
-    // positions are engine-local (0- vs 1-based never escapes the
-    // engine): they only align member components with centroid
-    // components inside each formulation
-    "q92_label_cohesion" ->
-      """WITH pos AS (SELECT unnest(range(1, 65)) AS i),
-        |comp AS (
-        | SELECT label, vec_id, i, CAST(embedding[i] AS DOUBLE) AS x
-        | FROM embeddings, pos),
-        |cent AS (
-        | SELECT label, i,
-        |  round(CAST(sum(CAST(x AS DECIMAL(38,8))) AS DOUBLE)
-        |    / count(*), 6) AS c
-        | FROM comp GROUP BY label, i),
-        |mc AS (
-        | SELECT label, vec_id,
-        |  CAST(sum(CAST(x * c AS DECIMAL(38,12))) AS DOUBLE) AS d,
-        |  CAST(sum(CAST(x * x AS DECIMAL(38,12))) AS DOUBLE) AS nx,
-        |  CAST(sum(CAST(c * c AS DECIMAL(38,12))) AS DOUBLE) AS nc
-        | FROM comp JOIN cent USING (label, i) GROUP BY label, vec_id)
-        |SELECT label, count(*) AS n_vecs,
-        | round(CAST(sum(CAST(round(d / (sqrt(nx) * sqrt(nc)), 6)
-        |     AS DECIMAL(30,6))) AS DOUBLE) / count(*), 6) AS mean_cohesion
-        |FROM mc GROUP BY label ORDER BY label""".stripMargin,
-
-    "q90_knn_classify" ->
-      """WITH q AS (
-        | SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
-        | WHERE vec_id % 50 = 7),
-        |sc AS (
-        | SELECT q.q_id, e.vec_id, e.label,
-        |  round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |    CAST(q.q_emb AS DOUBLE[])), 6) AS cos
-        | FROM embeddings e, q WHERE e.vec_id <> q.q_id),
-        |kn AS (
-        | SELECT * FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY q_id
-        |    ORDER BY cos DESC, vec_id) AS rn FROM sc)
-        | WHERE rn <= 5),
-        |v AS (
-        | SELECT q_id, label, count(*) AS votes, max(cos) AS best
-        | FROM kn GROUP BY q_id, label)
-        |SELECT q_id, label AS pred_label, votes
-        |FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-        |  ORDER BY votes DESC, best DESC, label) AS vr FROM v)
-        |WHERE vr = 1 ORDER BY q_id""".stripMargin,
-    // Parallel unnest zips the two lists; all arithmetic in double; the
-    // 6dp round absorbs sub-ulp summation-order differences.
-    "q19_cosine_topk" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 1),
-        |ex AS (
-        | SELECT e.vec_id, e.label,
-        |  CAST(unnest(e.embedding) AS DOUBLE) AS x,
-        |  CAST(unnest(q.qv) AS DOUBLE) AS y
-        | FROM embeddings e, q)
-        |SELECT vec_id, any_value(label) AS label,
-        | round(sum(x*y) / (sqrt(sum(x*x)) * sqrt(sum(y*y))), 6) AS cos_sim
-        |FROM ex GROUP BY vec_id
-        |ORDER BY cos_sim DESC, vec_id ASC LIMIT 25""".stripMargin,
-
-    // md5-replayable lattice ANN (r10): identical integer algorithm —
-    // floor(x·1000) lattice, plane sign = parity of md5's first hex
-    // digit, signed ⌊num²·1e8/(na·nb)⌋ score (positive operands, so
-    // HUGEINT // ≡ Spark's IntegralDivide), ties to smaller vec_id
-    "q25_ann_topk" ->
-      """WITH q AS (
-        | SELECT vec_id, list_transform(embedding,
-        |   v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS qv
-        | FROM embeddings),
-        |pl AS (
-        | SELECT p, d, CASE WHEN (instr('0123456789abcdef',
-        |    substr(md5('plane:' || CAST(p AS VARCHAR) || ':'
-        |      || CAST(d AS VARCHAR)), 1, 1)) - 1) % 2 = 1
-        |   THEN 1 ELSE -1 END AS sgn
-        | FROM range(0, 8) t1(p), range(0, 64) t2(d)),
-        |dp AS (
-        | SELECT q.vec_id, pl.p, sum(pl.sgn * q.qv[pl.d + 1]) AS dotp
-        | FROM q, pl GROUP BY q.vec_id, pl.p),
-        |sg AS (
-        | SELECT vec_id, CAST(sum(CASE WHEN dotp >= 0
-        |   THEN (CAST(1 AS BIGINT) << p) ELSE 0 END) AS BIGINT) AS sig
-        | FROM dp GROUP BY vec_id),
-        |qs AS (SELECT sig FROM sg WHERE vec_id = 1),
-        |qv1 AS (SELECT qv FROM q WHERE vec_id = 1),
-        |probes AS (
-        | SELECT DISTINCT CASE WHEN f < 0 THEN qs.sig
-        |   ELSE xor(qs.sig, CAST(1 AS BIGINT) << f) END AS probe
-        | FROM qs, range(-1, 8) t(f)),
-        |cand AS (SELECT sg.vec_id FROM sg JOIN probes ON sg.sig = probes.probe),
-        |sc AS (
-        | SELECT c.vec_id,
-        |  list_sum(list_transform(range(1, 65), i -> q.qv[i] * q1.qv[i])) AS num,
-        |  list_sum(list_transform(range(1, 65), i -> q.qv[i] * q.qv[i])) AS na,
-        |  list_sum(list_transform(range(1, 65), i -> q1.qv[i] * q1.qv[i])) AS nb
-        | FROM cand c JOIN q ON q.vec_id = c.vec_id, qv1 q1)
-        |SELECT vec_id,
-        | CAST((CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 ELSE 0 END)
-        |   * ((CAST(num AS HUGEINT) * num * 100000000)
-        |      // (CAST(na AS HUGEINT) * nb)) AS BIGINT) AS lat_cos_e8
-        |FROM sc
-        |ORDER BY lat_cos_e8 DESC, vec_id LIMIT 25""".stripMargin,
-
-    // md5-seeded lattice IVF (r10): seeds = 16 smallest md5("seed:"||id),
-    // cells rank by the same signed integer score, ties to smaller cid
-    "q44_ivf_ann" ->
-      """WITH q AS (
-        | SELECT vec_id, list_transform(embedding,
-        |   v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS qv
-        | FROM embeddings),
-        |cents AS (
-        | SELECT vec_id AS cid, qv AS cv FROM q
-        | ORDER BY md5('seed:' || CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-        |sc AS (
-        | SELECT q.vec_id, c.cid,
-        |  list_sum(list_transform(range(1, 65), i -> q.qv[i] * c.cv[i])) AS num,
-        |  list_sum(list_transform(range(1, 65), i -> q.qv[i] * q.qv[i])) AS na,
-        |  list_sum(list_transform(range(1, 65), i -> c.cv[i] * c.cv[i])) AS nc
-        | FROM q, cents c),
-        |scored AS (
-        | SELECT vec_id, cid,
-        |  (CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 ELSE 0 END)
-        |   * ((CAST(num AS HUGEINT) * num * 100000000)
-        |      // (CAST(na AS HUGEINT) * nc)) AS s
-        | FROM sc),
-        |assigned AS (
-        | SELECT vec_id, cid AS cell FROM (
-        |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY s DESC, cid) AS rn FROM scored) WHERE rn = 1),
-        |qprobe AS (
-        | SELECT cid AS probe FROM (
-        |  SELECT cid, row_number() OVER (ORDER BY s DESC, cid) AS rn
-        |  FROM scored WHERE vec_id = 1) WHERE rn <= 2),
-        |cand AS (
-        | SELECT a.vec_id FROM assigned a JOIN qprobe p ON a.cell = p.probe),
-        |qv1 AS (SELECT qv FROM q WHERE vec_id = 1),
-        |fin AS (
-        | SELECT c.vec_id,
-        |  list_sum(list_transform(range(1, 65), i -> q.qv[i] * q1.qv[i])) AS num,
-        |  list_sum(list_transform(range(1, 65), i -> q.qv[i] * q.qv[i])) AS na,
-        |  list_sum(list_transform(range(1, 65), i -> q1.qv[i] * q1.qv[i])) AS nb
-        | FROM cand c JOIN q ON q.vec_id = c.vec_id, qv1 q1)
-        |SELECT vec_id,
-        | CAST((CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 ELSE 0 END)
-        |   * ((CAST(num AS HUGEINT) * num * 100000000)
-        |      // (CAST(na AS HUGEINT) * nb)) AS BIGINT) AS lat_cos_e8
-        |FROM fin ORDER BY lat_cos_e8 DESC, vec_id LIMIT 25""".stripMargin,
-
-    // md5-replayable banded ANN self-join (r11): 32 bands ×
-    // autoPlanes(count) planes — the plane count re-derived in INTEGER
-    // arithmetic exactly as SimilarityOps.autoPlanes (smallest p with
-    // 128·2^p ≥ n, clamped to [6,12]); pair candidates on any shared
-    // (band, signature), dedup before scoring, k=5 best per vector by
-    // the signed lattice score, cos ≥ 0.4 gate as score ≥ 0.16e8
-    "q74_ann_self_join" ->
-      """WITH pp AS (
-        | SELECT GREATEST(6, LEAST(12, (
-        |  SELECT min(p) FROM range(0, 40) t(p)
-        |  WHERE (CAST(1 AS BIGINT) << p) * 128 >=
-        |    (SELECT count(*) FROM embeddings)))) AS planes),
-        |q AS (
-        | -- len gate mirrors LatticeSigsExpr's wrong-length-→-null drop:
-        | -- without it, list_sum over NULL-padded products still buckets
-        | -- a short vector here while the JVM side drops the row
-        | SELECT vec_id, list_transform(embedding,
-        |   v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS qv
-        | FROM embeddings WHERE len(embedding) = 64),
-        |pl AS (
-        | -- global plane index hoisted OUT of the lambda (DuckDB forbids
-        | -- subqueries inside lambda bodies)
-        | SELECT b, j, list_transform(range(0, 64), d -> CASE WHEN
-        |    (instr('0123456789abcdef', substr(md5('plane:'
-        |      || CAST(gp AS VARCHAR)
-        |      || ':' || CAST(d AS VARCHAR)), 1, 1)) - 1) % 2 = 1
-        |   THEN 1 ELSE -1 END) AS sgns
-        | FROM (
-        |  SELECT b, j, b * (SELECT planes FROM pp) + j AS gp
-        |  FROM range(0, 32) t1(b), range(0, 12) t2(j)
-        |  WHERE j < (SELECT planes FROM pp))),
-        |sg AS (
-        | SELECT vec_id, b, CAST(sum(CASE WHEN
-        |   list_sum(list_transform(range(1, 65),
-        |     i -> pl.sgns[i] * q.qv[i])) >= 0
-        |   THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) AS sig
-        | FROM q, pl GROUP BY vec_id, b),
-        |cand AS (
-        | SELECT DISTINCT x.vec_id AS a_id, y.vec_id AS b_id
-        | FROM sg x JOIN sg y ON x.b = y.b AND x.sig = y.sig
-        | WHERE x.vec_id <> y.vec_id),
-        |sc AS (
-        | SELECT c.a_id, c.b_id,
-        |  list_sum(list_transform(range(1, 65), i -> qa.qv[i] * qb.qv[i])) AS num,
-        |  list_sum(list_transform(range(1, 65), i -> qa.qv[i] * qa.qv[i])) AS na,
-        |  list_sum(list_transform(range(1, 65), i -> qb.qv[i] * qb.qv[i])) AS nb
-        | FROM cand c JOIN q qa ON qa.vec_id = c.a_id
-        |  JOIN q qb ON qb.vec_id = c.b_id),
-        |scored AS (
-        | SELECT a_id, b_id,
-        |  CAST((CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 ELSE 0 END)
-        |   * ((CAST(num AS HUGEINT) * num * 100000000)
-        |      // (CAST(na AS HUGEINT) * nb)) AS BIGINT) AS lat_cos_e8
-        | FROM sc)
-        |SELECT a_id, b_id, lat_cos_e8 FROM (
-        | SELECT *, row_number() OVER (PARTITION BY a_id
-        |   ORDER BY lat_cos_e8 DESC, b_id) AS rn FROM scored)
-        |WHERE rn <= 5 AND lat_cos_e8 >= 16000000
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "q40_embedding_dups" ->
-      """SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        | round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |   CAST(b.embedding AS DOUBLE[])), 6) AS cos_sim
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |   CAST(b.embedding AS DOUBLE[])), 6) >= 0.4
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "q26_label_stats" ->
-      """SELECT label, CAST(count(*) AS BIGINT) AS n_components,
-        | round(sum(CAST(x AS DOUBLE)), 4) AS sum_components,
-        | round(avg(CAST(x AS DOUBLE)), 6) AS avg_component
-        |FROM (SELECT label, unnest(embedding) AS x FROM embeddings)
-        |GROUP BY label ORDER BY label""".stripMargin,
-
-    // Unrolled Lloyd rounds; all arithmetic integral so the clustering
-    // is bit-identical to the engine (1-based positions are DuckDB-local
-    // — they only align members with centroids inside this SQL).
-    // q182's kmeans CTE prefix + intra-cluster integer near-dup pairs
-    // + the q56-style recursive-CTE components, sequentially
-    // bounded input (fixed COUNT, not fraction — the registration
-    // note): the engine filters vec_id < 500 before clustering
-    "q211_semantic_dedup" -> semanticDedupOracle(
-      "c0 AS (SELECT vec_id AS cid, q AS cent FROM b WHERE vec_id < 4)",
-      where = " WHERE vec_id < 500"),
-
-    // q291: the same replay with k computed from the corpus count in
-    // its own CTE — seeds are the k = (n + 1023) // 1024 smallest
-    // vec_ids (row_number, so it is id-domain-agnostic like the
-    // engine's TakeOrdered seed rule)
-    "q291_semantic_dedup_auto" -> semanticDedupOracle(
-      """kk AS (SELECT (count(*) + 1023) // 1024 AS k FROM embeddings),
-        |c0 AS (SELECT vec_id AS cid, q AS cent FROM (
-        |  SELECT vec_id, q, row_number() OVER (ORDER BY vec_id) AS rn
-        |  FROM b) WHERE rn <= (SELECT k FROM kk))""".stripMargin),
-
-    "q182_kmeans_embed" ->
-      """WITH b AS (
-        | SELECT vec_id, list_transform(embedding,
-        |   v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS q
-        | FROM embeddings),
-        |c0 AS (SELECT vec_id AS cid, q AS cent FROM b WHERE vec_id < 4),
-        |a1 AS (SELECT vec_id, q, cid FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY dist, cid) AS rn FROM (
-        |   SELECT b.vec_id, b.q, c.cid,
-        |    list_sum(list_transform(range(1, 65),
-        |     i -> (b.q[i] - c.cent[i]) * (b.q[i] - c.cent[i]))) AS dist
-        |   FROM b, c0 c)) WHERE rn = 1),
-        |c1 AS (SELECT cid, list(cv ORDER BY pos) AS cent FROM (
-        |  SELECT cid, i AS pos,
-        |   CAST(sum(q[i]) // count(*) AS BIGINT) AS cv
-        |  FROM a1, range(1, 65) t(i) GROUP BY cid, i) GROUP BY cid),
-        |a2 AS (SELECT vec_id, q, cid FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY dist, cid) AS rn FROM (
-        |   SELECT b.vec_id, b.q, c.cid,
-        |    list_sum(list_transform(range(1, 65),
-        |     i -> (b.q[i] - c.cent[i]) * (b.q[i] - c.cent[i]))) AS dist
-        |   FROM b, c1 c)) WHERE rn = 1),
-        |c2 AS (SELECT cid, list(cv ORDER BY pos) AS cent FROM (
-        |  SELECT cid, i AS pos,
-        |   CAST(sum(q[i]) // count(*) AS BIGINT) AS cv
-        |  FROM a2, range(1, 65) t(i) GROUP BY cid, i) GROUP BY cid),
-        |a3 AS (SELECT vec_id, cid, dist, centsum FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY dist, cid) AS rn FROM (
-        |   SELECT b.vec_id, c.cid,
-        |    list_sum(list_transform(range(1, 65),
-        |     i -> (b.q[i] - c.cent[i]) * (b.q[i] - c.cent[i]))) AS dist,
-        |    CAST(list_sum(c.cent) AS BIGINT) AS centsum
-        |   FROM b, c2 c)) WHERE rn = 1)
-        |SELECT cid, CAST(count(*) AS BIGINT) AS n_members,
-        | CAST(sum(dist) AS BIGINT) AS inertia,
-        | min(centsum) AS cent_checksum
-        |FROM a3 GROUP BY cid ORDER BY cid""".stripMargin,
-
-    // Subspace/component indices are DuckDB-local 1-based; sub/j are
-    // 0-based on both sides by construction ((i-1) here, pos there).
-    "q185_product_quant" ->
-      """WITH b AS (
-        | SELECT vec_id, (i - 1) // 8 AS sub, (i - 1) % 8 AS j,
-        |  CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT)
-        |    AS v
-        | FROM embeddings
-        | CROSS JOIN (SELECT unnest(range(1, 65)) AS i) t),
-        |c0 AS (SELECT sub, vec_id AS code, j, v AS cv
-        |  FROM b WHERE vec_id < 4),
-        |a1 AS (SELECT vec_id, sub, code FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-        |    ORDER BY dist, code) AS rn FROM (
-        |   SELECT b.vec_id, b.sub, c.code,
-        |    sum((b.v - c.cv) * (b.v - c.cv)) AS dist
-        |   FROM b JOIN c0 c ON c.sub = b.sub AND c.j = b.j
-        |   GROUP BY b.vec_id, b.sub, c.code)) WHERE rn = 1),
-        |c1 AS (SELECT b.sub, a.code, b.j,
-        |  CAST(sum(b.v) // count(*) AS BIGINT) AS cv
-        | FROM b JOIN a1 a ON a.vec_id = b.vec_id AND a.sub = b.sub
-        | GROUP BY b.sub, a.code, b.j),
-        |cs AS (SELECT sub, code, CAST(sum(cv) AS BIGINT) AS cb_checksum
-        | FROM c1 GROUP BY sub, code),
-        |a2 AS (SELECT vec_id, sub, code, dist FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-        |    ORDER BY dist, code) AS rn FROM (
-        |   SELECT b.vec_id, b.sub, c.code,
-        |    sum((b.v - c.cv) * (b.v - c.cv)) AS dist
-        |   FROM b JOIN c1 c ON c.sub = b.sub AND c.j = b.j
-        |   GROUP BY b.vec_id, b.sub, c.code)) WHERE rn = 1)
-        |SELECT a2.sub, a2.code, CAST(count(*) AS BIGINT) AS n_vecs,
-        | CAST(sum(a2.dist) AS BIGINT) AS total_err,
-        | min(cs.cb_checksum) AS cb_checksum
-        |FROM a2 JOIN cs ON cs.sub = a2.sub AND cs.code = a2.code
-        |GROUP BY a2.sub, a2.code ORDER BY a2.sub, a2.code""".stripMargin,
-
-    // q185's training chain verbatim through the final assignment a2,
-    // then the ADC read path: 32-row query lookup table + 8 lookups
-    // per vector — integers end to end, so the top-10 is exact.
-    "q216_pq_adc_search" ->
-      """WITH b AS (
-        | SELECT vec_id, (i - 1) // 8 AS sub, (i - 1) % 8 AS j,
-        |  CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT)
-        |    AS v
-        | FROM embeddings
-        | CROSS JOIN (SELECT unnest(range(1, 65)) AS i) t),
-        |c0 AS (SELECT sub, vec_id AS code, j, v AS cv
-        |  FROM b WHERE vec_id < 4),
-        |a1 AS (SELECT vec_id, sub, code FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-        |    ORDER BY dist, code) AS rn FROM (
-        |   SELECT b.vec_id, b.sub, c.code,
-        |    sum((b.v - c.cv) * (b.v - c.cv)) AS dist
-        |   FROM b JOIN c0 c ON c.sub = b.sub AND c.j = b.j
-        |   GROUP BY b.vec_id, b.sub, c.code)) WHERE rn = 1),
-        |c1 AS (SELECT b.sub, a.code, b.j,
-        |  CAST(sum(b.v) // count(*) AS BIGINT) AS cv
-        | FROM b JOIN a1 a ON a.vec_id = b.vec_id AND a.sub = b.sub
-        | GROUP BY b.sub, a.code, b.j),
-        |a2 AS (SELECT vec_id, sub, code FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-        |    ORDER BY dist, code) AS rn FROM (
-        |   SELECT b.vec_id, b.sub, c.code,
-        |    sum((b.v - c.cv) * (b.v - c.cv)) AS dist
-        |   FROM b JOIN c1 c ON c.sub = b.sub AND c.j = b.j
-        |   GROUP BY b.vec_id, b.sub, c.code)) WHERE rn = 1),
-        |qv AS (SELECT sub, j, v AS qv FROM b WHERE vec_id = 7),
-        |lut AS (
-        | SELECT c1.sub, c1.code,
-        |  sum((qv.qv - c1.cv) * (qv.qv - c1.cv)) AS lut
-        | FROM c1 JOIN qv ON qv.sub = c1.sub AND qv.j = c1.j
-        | GROUP BY c1.sub, c1.code)
-        |SELECT a2.vec_id, CAST(sum(l.lut) AS BIGINT) AS adc_dist
-        |FROM a2 JOIN lut l ON l.sub = a2.sub AND l.code = a2.code
-        |GROUP BY a2.vec_id ORDER BY adc_dist, a2.vec_id
-        |LIMIT 10""".stripMargin,
-
-    // IVFADC replay: the q182 coarse-kmeans CTE prefix (one update
-    // round), residuals vs the final assignment's centroid, the q216
-    // PQ CTEs retrained on those residuals, nprobe=2 cell probe with
-    // a per-cell LUT, codes-only ADC scan
-    "q301_ivfpq_search" ->
-      """WITH b AS (
-        | SELECT vec_id, list_transform(embedding,
-        |   v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS q
-        | FROM embeddings),
-        |c0 AS (SELECT vec_id AS cid, q AS cent FROM b WHERE vec_id < 4),
-        |a1 AS (SELECT vec_id, q, cid FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY dist, cid) AS rn FROM (
-        |   SELECT b.vec_id, b.q, c.cid,
-        |    list_sum(list_transform(range(1, 65),
-        |     i -> (b.q[i] - c.cent[i]) * (b.q[i] - c.cent[i]))) AS dist
-        |   FROM b, c0 c)) WHERE rn = 1),
-        |c1 AS (SELECT cid, list(cv ORDER BY pos) AS cent FROM (
-        |  SELECT cid, i AS pos,
-        |   CAST(sum(q[i]) // count(*) AS BIGINT) AS cv
-        |  FROM a1, range(1, 65) t(i) GROUP BY cid, i) GROUP BY cid),
-        |a2 AS (SELECT vec_id, q, cid FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY dist, cid) AS rn FROM (
-        |   SELECT b.vec_id, b.q, c.cid,
-        |    list_sum(list_transform(range(1, 65),
-        |     i -> (b.q[i] - c.cent[i]) * (b.q[i] - c.cent[i]))) AS dist
-        |   FROM b, c1 c)) WHERE rn = 1),
-        |rb AS (
-        | SELECT a2.vec_id, a2.cid, (i - 1) // 8 AS sub, (i - 1) % 8 AS j,
-        |  a2.q[i] - c1.cent[i] AS v
-        | FROM a2 JOIN c1 ON c1.cid = a2.cid, range(1, 65) t(i)),
-        |pc0 AS (SELECT sub, vec_id AS code, j, v AS cv
-        |  FROM rb WHERE vec_id < 4),
-        |p1 AS (SELECT vec_id, sub, code FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-        |    ORDER BY dist, code) AS rn FROM (
-        |   SELECT rb.vec_id, rb.sub, c.code,
-        |    sum((rb.v - c.cv) * (rb.v - c.cv)) AS dist
-        |   FROM rb JOIN pc0 c ON c.sub = rb.sub AND c.j = rb.j
-        |   GROUP BY rb.vec_id, rb.sub, c.code)) WHERE rn = 1),
-        |pcb AS (SELECT rb.sub, p.code, rb.j,
-        |  CAST(sum(rb.v) // count(*) AS BIGINT) AS cv
-        | FROM rb JOIN p1 p ON p.vec_id = rb.vec_id AND p.sub = rb.sub
-        | GROUP BY rb.sub, p.code, rb.j),
-        |p2 AS (SELECT vec_id, sub, code FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-        |    ORDER BY dist, code) AS rn FROM (
-        |   SELECT rb.vec_id, rb.sub, c.code,
-        |    sum((rb.v - c.cv) * (rb.v - c.cv)) AS dist
-        |   FROM rb JOIN pcb c ON c.sub = rb.sub AND c.j = rb.j
-        |   GROUP BY rb.vec_id, rb.sub, c.code)) WHERE rn = 1),
-        |qq AS (SELECT q FROM b WHERE vec_id = 7),
-        |probe AS (SELECT cid, cent FROM (
-        |  SELECT c1.cid, c1.cent,
-        |   list_sum(list_transform(range(1, 65),
-        |    i -> (qq.q[i] - c1.cent[i]) * (qq.q[i] - c1.cent[i])))
-        |    AS cdist
-        |  FROM c1, qq ORDER BY cdist, cid LIMIT 2)),
-        |qr AS (
-        | SELECT probe.cid, (i - 1) // 8 AS sub, (i - 1) % 8 AS j,
-        |  qq.q[i] - probe.cent[i] AS qv
-        | FROM probe, qq, range(1, 65) t(i)),
-        |lut AS (
-        | SELECT qr.cid, pcb.sub, pcb.code,
-        |  sum((qr.qv - pcb.cv) * (qr.qv - pcb.cv)) AS lut
-        | FROM qr JOIN pcb ON pcb.sub = qr.sub AND pcb.j = qr.j
-        | GROUP BY qr.cid, pcb.sub, pcb.code)
-        |SELECT p2.vec_id, CAST(a2.cid AS BIGINT) AS cid,
-        | CAST(sum(l.lut) AS BIGINT) AS adc_dist
-        |FROM p2 JOIN a2 ON a2.vec_id = p2.vec_id
-        |JOIN lut l ON l.cid = a2.cid AND l.sub = p2.sub
-        |  AND l.code = p2.code
-        |GROUP BY p2.vec_id, a2.cid
-        |ORDER BY adc_dist, p2.vec_id LIMIT 10""".stripMargin,
-
-    // the q301 replay with a probe SET (vec_id % 100 = 7): exact
-    // top-10 vs per-probe IVFADC top-10, hits + pruning decomposition
-    "q302_ivfpq_recall" ->
-      """WITH b AS (
-        | SELECT vec_id, list_transform(embedding,
-        |   v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS q
-        | FROM embeddings),
-        |c0 AS (SELECT vec_id AS cid, q AS cent FROM b WHERE vec_id < 4),
-        |a1 AS (SELECT vec_id, q, cid FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY dist, cid) AS rn FROM (
-        |   SELECT b.vec_id, b.q, c.cid,
-        |    list_sum(list_transform(range(1, 65),
-        |     i -> (b.q[i] - c.cent[i]) * (b.q[i] - c.cent[i]))) AS dist
-        |   FROM b, c0 c)) WHERE rn = 1),
-        |c1 AS (SELECT cid, list(cv ORDER BY pos) AS cent FROM (
-        |  SELECT cid, i AS pos,
-        |   CAST(sum(q[i]) // count(*) AS BIGINT) AS cv
-        |  FROM a1, range(1, 65) t(i) GROUP BY cid, i) GROUP BY cid),
-        |a2 AS (SELECT vec_id, q, cid FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY dist, cid) AS rn FROM (
-        |   SELECT b.vec_id, b.q, c.cid,
-        |    list_sum(list_transform(range(1, 65),
-        |     i -> (b.q[i] - c.cent[i]) * (b.q[i] - c.cent[i]))) AS dist
-        |   FROM b, c1 c)) WHERE rn = 1),
-        |rb AS (
-        | SELECT a2.vec_id, a2.cid, (i - 1) // 8 AS sub, (i - 1) % 8 AS j,
-        |  a2.q[i] - c1.cent[i] AS v
-        | FROM a2 JOIN c1 ON c1.cid = a2.cid, range(1, 65) t(i)),
-        |pc0 AS (SELECT sub, vec_id AS code, j, v AS cv
-        |  FROM rb WHERE vec_id < 4),
-        |p1 AS (SELECT vec_id, sub, code FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-        |    ORDER BY dist, code) AS rn FROM (
-        |   SELECT rb.vec_id, rb.sub, c.code,
-        |    sum((rb.v - c.cv) * (rb.v - c.cv)) AS dist
-        |   FROM rb JOIN pc0 c ON c.sub = rb.sub AND c.j = rb.j
-        |   GROUP BY rb.vec_id, rb.sub, c.code)) WHERE rn = 1),
-        |pcb AS (SELECT rb.sub, p.code, rb.j,
-        |  CAST(sum(rb.v) // count(*) AS BIGINT) AS cv
-        | FROM rb JOIN p1 p ON p.vec_id = rb.vec_id AND p.sub = rb.sub
-        | GROUP BY rb.sub, p.code, rb.j),
-        |p2 AS (SELECT vec_id, sub, code FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-        |    ORDER BY dist, code) AS rn FROM (
-        |   SELECT rb.vec_id, rb.sub, c.code,
-        |    sum((rb.v - c.cv) * (rb.v - c.cv)) AS dist
-        |   FROM rb JOIN pcb c ON c.sub = rb.sub AND c.j = rb.j
-        |   GROUP BY rb.vec_id, rb.sub, c.code)) WHERE rn = 1),
-        |pr AS (SELECT vec_id AS q_id, q AS pq FROM b
-        |  WHERE vec_id % 100 = 7 AND vec_id < 1600),
-        |ex AS (SELECT q_id, vec_id FROM (
-        |  SELECT pr.q_id, b.vec_id, row_number() OVER (
-        |    PARTITION BY pr.q_id ORDER BY
-        |    list_sum(list_transform(range(1, 65),
-        |     i -> (b.q[i] - pr.pq[i]) * (b.q[i] - pr.pq[i]))),
-        |    b.vec_id) AS rn
-        |  FROM b, pr WHERE b.vec_id <> pr.q_id) WHERE rn <= 10),
-        |pcell AS (SELECT q_id, cid, cent FROM (
-        |  SELECT pr.q_id, c1.cid, c1.cent, row_number() OVER (
-        |    PARTITION BY pr.q_id ORDER BY
-        |    list_sum(list_transform(range(1, 65),
-        |     i -> (pr.pq[i] - c1.cent[i]) * (pr.pq[i] - c1.cent[i]))),
-        |    c1.cid) AS rn
-        |  FROM c1, pr) WHERE rn <= 2),
-        |qr AS (
-        | SELECT pcell.q_id, pcell.cid, (i - 1) // 8 AS sub,
-        |  (i - 1) % 8 AS j, pr.pq[i] - pcell.cent[i] AS qv
-        | FROM pcell JOIN pr ON pr.q_id = pcell.q_id, range(1, 65) t(i)),
-        |lut AS (
-        | SELECT qr.q_id, qr.cid, pcb.sub, pcb.code,
-        |  sum((qr.qv - pcb.cv) * (qr.qv - pcb.cv)) AS lut
-        | FROM qr JOIN pcb ON pcb.sub = qr.sub AND pcb.j = qr.j
-        | GROUP BY qr.q_id, qr.cid, pcb.sub, pcb.code),
-        |adcd AS (
-        | SELECT l.q_id, p2.vec_id, sum(l.lut) AS d
-        | FROM p2 JOIN a2 ON a2.vec_id = p2.vec_id
-        | JOIN lut l ON l.cid = a2.cid AND l.sub = p2.sub
-        |   AND l.code = p2.code
-        | WHERE p2.vec_id <> l.q_id
-        | GROUP BY l.q_id, p2.vec_id),
-        |adc AS (SELECT q_id, vec_id FROM (
-        |  SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-        |    ORDER BY d, vec_id) AS rn FROM adcd) WHERE rn <= 10),
-        |cells AS (
-        | SELECT DISTINCT pcell.q_id, a2.vec_id
-        | FROM pcell JOIN a2 ON a2.cid = pcell.cid)
-        |SELECT ex.q_id,
-        | CAST(sum(CASE WHEN adc.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-        |  AS BIGINT) AS hits_at_10,
-        | CAST(sum(CASE WHEN cells.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-        |  AS BIGINT) AS exact_in_probed
-        |FROM ex
-        |LEFT JOIN adc ON adc.q_id = ex.q_id AND adc.vec_id = ex.vec_id
-        |LEFT JOIN cells ON cells.q_id = ex.q_id
-        |  AND cells.vec_id = ex.vec_id
-        |GROUP BY ex.q_id ORDER BY ex.q_id""".stripMargin,
-
-    // sign bits packed into two 32-bit words (no 2^63 overflow);
-    // xor + bit_count are exact integer builtins on both engines
-    "q218_hamming_search" ->
-      """WITH s AS (
-        | SELECT vec_id,
-        |  CAST(list_sum(list_transform(range(1, 33),
-        |   k -> CASE WHEN CAST(embedding[k] AS DOUBLE) >= 0
-        |    THEN 1::BIGINT << CAST(k - 1 AS INTEGER) ELSE 0 END))
-        |   AS BIGINT) AS lo,
-        |  CAST(list_sum(list_transform(range(33, 65),
-        |   k -> CASE WHEN CAST(embedding[k] AS DOUBLE) >= 0
-        |    THEN 1::BIGINT << CAST(k - 33 AS INTEGER) ELSE 0 END))
-        |   AS BIGINT) AS hi
-        | FROM embeddings),
-        |p AS (SELECT lo AS qlo, hi AS qhi FROM s WHERE vec_id = 7)
-        |SELECT s.vec_id,
-        | CAST(bit_count(xor(s.lo, p.qlo))
-        |   + bit_count(xor(s.hi, p.qhi)) AS BIGINT) AS hamming
-        |FROM s, p WHERE s.vec_id <> 7
-        |ORDER BY hamming, s.vec_id LIMIT 10""".stripMargin,
-
-    "q201_embedding_drift" ->
-      """WITH comp AS (
-        | SELECT label, vec_id % 2 AS half, i AS pos,
-        |  CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT)
-        |    AS v
-        | FROM embeddings
-        | CROSS JOIN (SELECT unnest(range(1, 65)) AS i) t),
-        |cent AS (
-        | SELECT label, half, pos,
-        |  CAST(sum(v) // count(*) AS BIGINT) AS cv,
-        |  CAST(count(*) AS BIGINT) AS nc
-        | FROM comp GROUP BY label, half, pos)
-        |SELECT a.label, CAST(min(a.nc) AS BIGINT) AS n_even,
-        | CAST(min(b.nc) AS BIGINT) AS n_odd,
-        | CAST(sum((a.cv - b.cv) * (a.cv - b.cv)) AS BIGINT) AS drift_sq
-        |FROM cent a JOIN cent b
-        |  ON a.label = b.label AND a.pos = b.pos
-        |  AND a.half = 0 AND b.half = 1
-        |GROUP BY a.label ORDER BY a.label""".stripMargin,
-
-    // The greedy MMR rounds unrolled; integer scores make each argmax
-    // well-defined (ties by vec_id), so four sequential LIMIT 1 picks
-    // reproduce the engine's selection exactly.
-    "q189_mmr_select" ->
-      """WITH b AS (
-        | SELECT vec_id, list_transform(embedding,
-        |   v -> CAST(floor(CAST(v AS DOUBLE) * 1000) AS BIGINT)) AS q
-        | FROM embeddings),
-        |qv AS (SELECT q FROM b WHERE vec_id = 1),
-        |cand AS (
-        | SELECT b.vec_id, b.q, -list_sum(list_transform(range(1, 65),
-        |   i -> (b.q[i] - qv.q[i]) * (b.q[i] - qv.q[i]))) AS rel
-        | FROM b, qv WHERE b.vec_id <> 1),
-        |s1 AS (SELECT vec_id, q, rel, 7 * rel AS score FROM cand
-        |  ORDER BY score DESC, vec_id LIMIT 1),
-        |p2 AS (SELECT c.vec_id, c.q, c.rel,
-        |  -list_sum(list_transform(range(1, 65),
-        |    i -> (c.q[i] - s.q[i]) * (c.q[i] - s.q[i]))) AS sim
-        | FROM cand c, s1 s
-        | WHERE c.vec_id NOT IN (SELECT vec_id FROM s1)),
-        |s2 AS (SELECT vec_id, q, rel, score FROM (
-        |  SELECT vec_id, any_value(q) AS q, any_value(rel) AS rel,
-        |   7 * any_value(rel) - 3 * max(sim) AS score
-        |  FROM p2 GROUP BY vec_id)
-        | ORDER BY score DESC, vec_id LIMIT 1),
-        |sel2 AS (SELECT vec_id, q FROM s1
-        |  UNION ALL SELECT vec_id, q FROM s2),
-        |p3 AS (SELECT c.vec_id, c.q, c.rel,
-        |  -list_sum(list_transform(range(1, 65),
-        |    i -> (c.q[i] - s.q[i]) * (c.q[i] - s.q[i]))) AS sim
-        | FROM cand c, sel2 s
-        | WHERE c.vec_id NOT IN (SELECT vec_id FROM sel2)),
-        |s3 AS (SELECT vec_id, q, rel, score FROM (
-        |  SELECT vec_id, any_value(q) AS q, any_value(rel) AS rel,
-        |   7 * any_value(rel) - 3 * max(sim) AS score
-        |  FROM p3 GROUP BY vec_id)
-        | ORDER BY score DESC, vec_id LIMIT 1),
-        |sel3 AS (SELECT vec_id, q FROM sel2
-        |  UNION ALL SELECT vec_id, q FROM s3),
-        |p4 AS (SELECT c.vec_id, c.q, c.rel,
-        |  -list_sum(list_transform(range(1, 65),
-        |    i -> (c.q[i] - s.q[i]) * (c.q[i] - s.q[i]))) AS sim
-        | FROM cand c, sel3 s
-        | WHERE c.vec_id NOT IN (SELECT vec_id FROM sel3)),
-        |s4 AS (SELECT vec_id, q, rel, score FROM (
-        |  SELECT vec_id, any_value(q) AS q, any_value(rel) AS rel,
-        |   7 * any_value(rel) - 3 * max(sim) AS score
-        |  FROM p4 GROUP BY vec_id)
-        | ORDER BY score DESC, vec_id LIMIT 1)
-        |SELECT * FROM (
-        | SELECT CAST(1 AS BIGINT) AS sel_rank, vec_id,
-        |  CAST(rel AS BIGINT) AS rel, CAST(score AS BIGINT) AS score
-        | FROM s1
-        | UNION ALL SELECT CAST(2 AS BIGINT), vec_id,
-        |  CAST(rel AS BIGINT), CAST(score AS BIGINT) FROM s2
-        | UNION ALL SELECT CAST(3 AS BIGINT), vec_id,
-        |  CAST(rel AS BIGINT), CAST(score AS BIGINT) FROM s3
-        | UNION ALL SELECT CAST(4 AS BIGINT), vec_id,
-        |  CAST(rel AS BIGINT), CAST(score AS BIGINT) FROM s4)
-        |ORDER BY sel_rank""".stripMargin,
-
-    "q258_int8_quant_error" ->
-      """WITH c AS (
-        | SELECT CAST(label AS BIGINT) AS label,
-        |  abs(127 * CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
-        |    - 1000000 * CAST(floor(CAST(x AS DOUBLE) * 127) AS BIGINT))
-        |    AS err
-        | FROM (SELECT label, unnest(embedding) AS x FROM embeddings))
-        |SELECT label, count(*) AS n_components,
-        | CAST(sum(err) AS BIGINT) AS sum_err,
-        | CAST(max(err) AS BIGINT) AS max_err,
-        | CAST(CAST(sum(err) AS HUGEINT) // count(*) AS BIGINT) AS mean_err
-        |FROM c GROUP BY label ORDER BY label""".stripMargin,
-
-    "q259_matryoshka_energy" ->
-      """WITH c AS (
-        | SELECT CAST(label AS BIGINT) AS label, i,
-        |  CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS q
-        | FROM embeddings, range(1, 65) t(i)),
-        |g AS (
-        | SELECT label,
-        |  CAST(sum(CASE WHEN i <= 16 THEN q * q ELSE 0 END) AS BIGINT)
-        |    AS e16,
-        |  CAST(sum(q * q) AS BIGINT) AS e64
-        | FROM c GROUP BY label)
-        |SELECT label, e16, e64,
-        | CAST(CAST(e16 AS HUGEINT) * 10000 // e64 AS BIGINT) AS retained_bp
-        |FROM g ORDER BY label""".stripMargin,
-  )
 }

@@ -13,18 +13,30 @@ object TextQ {
 
   private val searchTerms = Seq("spark", "join")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Dashboard-style search: AND token match + tf relevance ranking + top-k
-    // (db_extractor.py:33-58 reproduced as one declarative plan).
-    "q11_search_rank" -> ((s, dir) => {
-      val tk = TextOps.tokens(col("text"))
-      t(s, dir, "documents")
-        .withColumn("score", TextOps.tfScore(tk, searchTerms))
-        .filter(TextOps.matchesAll(tk, searchTerms))
-        .select("doc_id", "source", "score")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(25)
-    }),
+  /** Dashboard-style search: AND token match + tf relevance ranking +
+    * top-k (db_extractor.py:33-58 reproduced as one declarative plan).
+    * `SparkEntry.entry` runs it; CurateQ's q139 checks its posting-list
+    * plan against the same oracle. */
+  lazy val searchRank: Q = Q("q11_search_rank", (s, dir) => {
+    val tk = TextOps.tokens(col("text"))
+    t(s, dir, "documents")
+      .withColumn("score", TextOps.tfScore(tk, searchTerms))
+      .filter(TextOps.matchesAll(tk, searchTerms))
+      .select("doc_id", "source", "score")
+      .orderBy(desc("score"), asc("doc_id"))
+      .limit(25)
+  }, oracle = searchRankSql)
+
+  private[queries] lazy val searchRankSql: String =
+    s"""SELECT doc_id, source,
+       | CAST(${lf("spark")} + ${lf("join")} AS BIGINT) AS score
+       |FROM documents
+       |WHERE list_contains(string_split(lower(text), ' '), 'spark')
+       |  AND list_contains(string_split(lower(text), ' '), 'join')
+       |ORDER BY score DESC, doc_id ASC LIMIT 25""".stripMargin
+
+  lazy val all: Seq[Q] = Seq(
+    searchRank,
 
     // Porter-stemmed search end-to-end through the production path:
     // Normalize.withSearchTokens(stem = true) builds the stemmed search
@@ -36,7 +48,7 @@ object TextQ {
     // two query-term stems — so the oracle matches raw tokens against
     // that literal map. Tie-break columns are zero-padded doc_id strings,
     // so the page order is reproducible in SQL.
-    "q76_stemmed_search" -> ((s, dir) => {
+    Q("q76_stemmed_search", (s, dir) => {
       val frame = graft.ingest.Normalize.withSearchTokens(
         t(s, dir, "documents").select(
           col("doc_id"),
@@ -54,13 +66,27 @@ object TextQ {
             size(filter(col("search_tokens"), x => x === lit("merg"))))
             .cast("long"))
         .select("doc_id", "n_hits")
-    }),
+    }, oracle =
+      // Literal-map stance (declared; PorterSearchSpec pins it): on this
+      // closed vocabulary the only token stemming to 'queri' is 'query' and
+      // to 'merg' is 'merge', so stemmed matching over raw tokens is exact.
+      """WITH s AS (
+        | SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
+        |m AS (
+        | SELECT doc_id,
+        |  len(list_filter(toks, x -> x = 'query')) AS nq,
+        |  len(list_filter(toks, x -> x = 'merge')) AS nm
+        | FROM s)
+        |SELECT doc_id, CAST(nq + nm AS BIGINT) AS n_hits
+        |FROM m WHERE nq > 0 AND nm > 0
+        |ORDER BY n_hits DESC, lpad(CAST(doc_id AS VARCHAR), 10, '0')
+        |LIMIT 25""".stripMargin),
 
     // q11's ranking under ts_rank's documented length-normalization
     // flags 1|32 (divide by 1+ln(doc length), then rank/(rank+1)) — the
     // faithful part of the T3 surface; the within-doc accumulation stays
     // the declared simplified tf score.
-    "q77_rank_normalized" -> ((s, dir) => {
+    Q("q77_rank_normalized", (s, dir) => {
       val tk = TextOps.tokens(col("text"))
       t(s, dir, "documents")
         .withColumn("score", round(TextOps.tsRankNormalize(
@@ -69,7 +95,24 @@ object TextQ {
         .select("doc_id", "source", "score")
         .orderBy(desc("score"), asc("doc_id"))
         .limit(25)
-    }),
+    }, oracle =
+      """WITH s AS (
+        | SELECT doc_id, source, string_split(lower(text), ' ') AS toks
+        | FROM documents),
+        |m AS (
+        | SELECT doc_id, source,
+        |  len(list_filter(toks, x -> x = 'spark')) AS t1,
+        |  len(list_filter(toks, x -> x = 'join')) AS t2,
+        |  len(toks) AS n
+        | FROM s),
+        |r AS (
+        | SELECT doc_id, source, t1, t2,
+        |  CAST(t1 + t2 AS DOUBLE) /
+        |    (1 + ln(greatest(CAST(n AS DOUBLE), 1.0))) AS r1
+        | FROM m)
+        |SELECT doc_id, source, round(r1 / (r1 + 1), 6) AS score
+        |FROM r WHERE t1 > 0 AND t2 > 0
+        |ORDER BY score DESC, doc_id ASC LIMIT 25""".stripMargin),
 
     // Exact ts_rank, single-term path (closes SURVEY §2.8 T3): the
     // published rank for a one-term query is a pure function of the term's
@@ -77,7 +120,7 @@ object TextQ {
     // so the whole ranking is one narrow projection + array lookup: no
     // shuffle, no UDF, and the DuckDB oracle consumes the SAME lookup
     // doubles as literals, making the compare exact (db_extractor.py:51).
-    "q169_tsrank_term" -> ((s, dir) => {
+    Q("q169_tsrank_term", (s, dir) => {
       val tk = TextOps.tokens(col("text"))
       val k = least(size(filter(tk, x => x === lit("spark"))), lit(256))
       t(s, dir, "documents")
@@ -90,7 +133,22 @@ object TextQ {
           col("score"),
           (col("score") / (col("score") + lit(1.0))).as("score_norm"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // The oracle consumes the SAME IEEE doubles Spark looks up
+      // (TsRank.termScore, shortest round-trip repr) — the compare is exact
+      // because both sides read one table, not because floats "happen" to
+      // agree.
+      s"""WITH ts(k, score) AS (VALUES ${graft.functions.TsRank.termScoreValuesSql}),
+         |m AS (
+         | SELECT doc_id,
+         |  least(len(list_filter(string_split(lower(text), ' '),
+         |    x -> x = 'spark')), 256) AS n_hits
+         | FROM documents)
+         |SELECT m.doc_id, CAST(m.n_hits AS BIGINT) AS n_hits, ts.score,
+         | ts.score / (ts.score + 1) AS score_norm
+         |FROM m JOIN ts ON m.n_hits = ts.k
+         |WHERE m.n_hits >= 1
+         |ORDER BY doc_id""".stripMargin),
 
     // Exact ts_rank, AND path (calc_rank_and): rank folds
     // 1-(1-r)(1-curw) over every position pair of the two query terms,
@@ -101,7 +159,7 @@ object TextQ {
     // the identical fold (same pair order, same curw literals) via a
     // recursive CTE, so the driver compare is exact despite the
     // order-dependent float accumulation.
-    "q170_tsrank_and" -> ((s, dir) => {
+    Q("q170_tsrank_and", (s, dir) => {
       val tk = TextOps.tokens(col("text"))
       def pos(term: String) = slice(
         transform(
@@ -129,14 +187,39 @@ object TextQ {
           col("score"),
           (col("score") / (col("score") + lit(1.0))).as("score_norm"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // list_reduce seeds from the first element — exactly the acc<0 branch
+      // of calc_rank_and — then replays Spark's left fold with the identical
+      // 1-(1-acc)(1-c) double ops over the same (a asc, b asc) pair order.
+      s"""WITH cwt AS (SELECT ${graft.functions.TsRank.curwListSql} AS cw),
+         |s AS (
+         | SELECT doc_id, string_split(lower(text), ' ') AS toks
+         | FROM documents),
+         |p AS (
+         | SELECT doc_id,
+         |  list_filter(range(1, len(toks) + 1), i -> toks[i] = 'spark')[1:256] AS p1,
+         |  list_filter(range(1, len(toks) + 1), i -> toks[i] = 'join')[1:256] AS p2
+         | FROM s),
+         |d AS (
+         | SELECT doc_id,
+         |  flatten(list_transform(p1,
+         |    a -> list_transform(p2, b -> least(abs(a - b), 101)))) AS dists
+         | FROM p
+         | WHERE len(p1) >= 1 AND len(p2) >= 1),
+         |r AS (
+         | SELECT doc_id, CAST(len(dists) AS BIGINT) AS n_pairs,
+         |  list_reduce(list_transform(dists, dd -> cw[dd]),
+         |    (acc, x) -> 1 - (1 - acc) * (1 - x)) AS score
+         | FROM d, cwt)
+         |SELECT doc_id, n_pairs, score, score / (score + 1) AS score_norm
+         |FROM r ORDER BY doc_id""".stripMargin),
 
     // Corpus text cleaning: deterministic dirt (decomposed é, zero-width
     // space, a control char, ragged whitespace) injected around each
     // document, then NFC + strip + collapse via TextOps.cleanText. The
     // md5 proves byte-identical cleaning against DuckDB's nfc_normalize
     // twin; the char counts show the normalization actually contracted.
-    "q82_text_clean" -> ((s, dir) => {
+    Q("q82_text_clean", (s, dir) => {
       val dirty = concat(lit("cafe\u0301 \u200B "), col("text"),
         lit("\u0007  trailing\t"))
       val clean = TextOps.cleanText(dirty)
@@ -146,20 +229,40 @@ object TextQ {
           length(dirty).cast("long").as("n_before"),
           length(clean).cast("long").as("n_after"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH d AS (
+        | SELECT doc_id,
+        |  'cafe' || chr(769) || ' ' || chr(8203) || ' ' || text ||
+        |    chr(7) || '  trailing' || chr(9) AS dirty
+        | FROM documents),
+        |c AS (
+        | SELECT doc_id, dirty,
+        |  trim(regexp_replace(
+        |    regexp_replace(nfc_normalize(dirty),
+        |      '[\x00-\x08\x0B-\x1F\x7F\x{200B}-\x{200D}\x{FEFF}]', '', 'g'),
+        |    '\s+', ' ', 'g')) AS clean
+        | FROM d)
+        |SELECT doc_id, md5(clean) AS clean_md5,
+        | CAST(length(dirty) AS BIGINT) AS n_before,
+        | CAST(length(clean) AS BIGINT) AS n_after
+        |FROM c ORDER BY doc_id""".stripMargin),
 
     // Token statistics per document (token counting op).
-    "q12_token_stats" -> ((s, dir) => {
+    Q("q12_token_stats", (s, dir) => {
       val tk = TextOps.tokens(col("text"))
       t(s, dir, "documents")
         .select(col("doc_id"),
           size(tk).cast("long").as("n_tokens"),
           size(array_distinct(tk)).cast("long").as("n_distinct"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id,
+        | CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens,
+        | CAST(len(list_distinct(string_split(lower(text), ' '))) AS BIGINT) AS n_distinct
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // Quality scoring: stopword ratio, mean token length, composite score.
-    "q13_quality" -> ((s, dir) => {
+    Q("q13_quality", (s, dir) => {
       val tk = TextOps.tokens(col("text"))
       t(s, dir, "documents")
         .select(col("doc_id"),
@@ -168,190 +271,7 @@ object TextQ {
           TextOps.stopwordRatio(tk).as("stopword_ratio"),
           TextOps.qualityScore(tk).as("quality"))
         .orderBy("doc_id")
-    }),
-
-    // Language ID by marker-word counts; ties alphabetical-first.
-    "q14_langid" -> ((s, dir) => {
-      val tk = TextOps.tokens(col("text"))
-      val scores = TextOps.langScores(tk)
-      val scoreCols = scores.map { case (l, c) => c.as(s"s_$l") }
-      t(s, dir, "documents")
-        .select(Seq(col("doc_id"), col("lang")) ++ scoreCols
-          :+ TextOps.langPredict(scores).as("pred_lang"): _*)
-        .orderBy("doc_id")
-    }),
-
-    // Document fingerprints: whole-doc md5 + order-insensitive min-token-hash.
-    "q15_fingerprint" -> ((s, dir) => {
-      val tk = TextOps.tokens(col("text"))
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextOps.docFingerprint(col("text")).as("fp"),
-          TextOps.minTokenHash(tk).as("min_tok_fp"))
-        .orderBy("doc_id")
-    }),
-
-    // Exact n-gram (3-word-shingle) Jaccard near-dup pairs via an inverted
-    // index join — finds the corpus's planted near-duplicates exactly; the
-    // LSH variants below are the sub-quadratic at-scale path.
-    "q16_jaccard_pairs" -> ((s, dir) => {
-      // parallelize BEFORE the shingle projection: computed on the scan
-      // side of the repartition it runs in the single bench-SF scan task
-      // (measured 0.7 s on one core); after it, on every core
-      val d = graft.ops.Partitioning.ensureParallel(
-          t(s, dir, "documents").select(col("doc_id"), col("text")))
-        .select(col("doc_id"), graft.functions.ShinglesExpr
-          .shingles(TextOps.tokens(col("text")), 3).as("shs"))
-      DedupOps.jaccardPairs(d, "doc_id", "shs", 0.5)
-        .orderBy("a_id", "b_id")
-    }),
-
-    // The same near-dup semantics through the prefix-filtered AllPairs/
-    // PPJoin plan — the variant that wins on Zipfian (real-text) token
-    // distributions where hot tokens dominate the posting join. Two
-    // independent algorithms against one oracle (q16's SQL), the same
-    // pattern as q56/q72.
-    "q75_jaccard_prefix" -> ((s, dir) => {
-      // parallelize before the shingle projection (see q16)
-      val d = graft.ops.Partitioning.ensureParallel(
-          t(s, dir, "documents").select(col("doc_id"), col("text")))
-        .select(col("doc_id"), graft.functions.ShinglesExpr
-          .shingles(TextOps.tokens(col("text")), 3).as("shs"))
-      DedupOps.jaccardPairsPrefix(d, "doc_id", "shs", 0.5)
-        .orderBy("a_id", "b_id")
-    }),
-
-    // MinHash + LSH near-dup candidates, verified by exact shingle
-    // Jaccard. ORACLE-EXACT as of r11: md5 seed-minima (q227's family
-    // at the full 16×4 banding) — DuckDB re-derives every signature,
-    // band key and the verified Jaccard; the murmur minhashLshPairs
-    // stays spec-gated as the cheap-hash variant (DedupOpsSpec).
-    "q17_minhash_lsh" -> ((s, dir) =>
-      DedupOps.minhashMd5LshPairs(t(s, dir, "documents"), "doc_id", "text",
-        shingleK = 3, bands = 16, rowsPerBand = 4, threshold = 0.5)
-        .orderBy("a_id", "b_id")),
-
-    // SimHash near-dup pairs within Hamming distance 3 (pigeonhole-
-    // banded). ORACLE-EXACT as of r11: the md5-nibble vote family
-    // (q253's sketch widened to 64 bits), fingerprint carried as 4
-    // chunk columns so DuckDB replays banding and popcount chunk-by-
-    // chunk; the xxhash simhashPairs stays spec-gated as the cheap-hash
-    // variant (DedupOpsSpec).
-    "q18_simhash" -> ((s, dir) =>
-      DedupOps.simhashMd5Pairs(t(s, dir, "documents"), "doc_id", "text",
-        maxHamming = 3)
-        .orderBy("a_id", "b_id")),
-
-    // BPE-style subword-ish token counting via the GPT-2-like segmentation
-    // regex (contractions / letter runs / digit runs / punctuation runs),
-    // next to the plain whitespace count.
-    "q41_bpe_tokens" -> ((s, dir) => {
-      val bpe = "'[a-z]+| ?[A-Za-z]+| ?[0-9]+| ?[^\\sA-Za-z0-9]+"
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          size(split(col("text"), "\\s+")).cast("long").as("n_ws"),
-          size(regexp_extract_all(col("text"), lit(bpe), lit(0)))
-            .cast("long").as("n_bpe"))
-        .orderBy("doc_id")
-    }),
-
-    // Deterministic content-keyed sampling (training-data splits must be
-    // reproducible and engine-independent — rand()/TABLESAMPLE are not):
-    // keep docs whose md5(doc_id) starts with one of 2/16 hex chars
-    // (12.5% expected), stratified stats per source.
-    "q54_deterministic_sample" -> ((s, dir) => {
-      val bucket = substring(md5(col("doc_id").cast("string")
-        .cast("binary")), 1, 1)
-      t(s, dir, "documents")
-        .filter(bucket.isin("0", "1"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_sampled"),
-          sum(col("n_chars")).as("sum_chars"))
-        .orderBy("source")
-    }),
-
-    // Rule-cascade categorizer generalized from categorizer.py:1-32:
-    // first-match-wins keyword rules over the lower-cased text.
-    "q21_categorize" -> ((s, dir) => {
-      val lo = lower(col("text"))
-      val category = when(lo.contains("window"), "Analytics")
-        .when(lo.contains("join"), "Join")
-        .when(lo.contains("group"), "Aggregation")
-        .when(lo.contains("filter"), "Filter")
-        .otherwise("Scan")
-      val genre = when(lo.contains("fast"), "fast")
-        .when(lo.contains("slow"), "slow")
-        .otherwise("general")
-      t(s, dir, "documents")
-        .select(col("doc_id"), category.as("category"), genre.as("genre"))
-        .orderBy("doc_id")
-    }),
-
-    // Per-source token-concentration profile: Simpson index (collision
-    // probability Σc²/N², the "effective vocabulary" diagnostic —
-    // boilerplate-heavy sources spike it) and top-token share. Both as
-    // integer parts-per-1e8/1e6 via integral DIV — a double ratio has
-    // no cross-engine summation-order contract. Products go through
-    // DECIMAL before multiplying (the q104 discipline): Σc²·1e8 wraps
-    // BIGINT silently once a source passes ~1e6 tokens, while decimal
-    // stays exact to 38 digits and fails loudly beyond. Shape at
-    // 100 TB: one token explode into a map-side-combined (source,token)
-    // count, then a source-sized rollup — no joins, no windows.
-    "q183_token_simpson" -> ((s, dir) => {
-      val dec = DecimalType(38, 0)
-      val tok = t(s, dir, "documents")
-        .select(col("source"), explode(toks(col("text"))).as("tk"))
-        .groupBy("source", "tk").agg(count(lit(1)).as("c"))
-      tok.groupBy("source")
-        .agg(sum(col("c")).as("n_tok"),
-          count(lit(1)).as("n_types"),
-          // cast BEFORE the product: a BIGINT c*c wraps silently near
-          // c≈3e9 while DuckDB's HUGEINT stays exact — the DECIMAL
-          // discipline has to start inside the aggregate
-          sum(col("c").cast(dec) * col("c").cast(dec)).as("c2"),
-          max(col("c")).as("top_c"))
-        .select(col("source"), col("n_tok"), col("n_types"),
-          ldiv(col("c2") * lit(100000000L),
-            col("n_tok").cast(dec) * col("n_tok")).as("simpson_pp100m"),
-          ldiv(col("top_c").cast(dec) * lit(1000000L),
-            col("n_tok").cast(dec)).as("top_share_pp1m"))
-        .orderBy("source")
-    }),
-  )
-
-  private def lf(term: String) =
-    s"len(list_filter(string_split(lower(text), ' '), x -> x = '$term'))"
-
-  private[queries] def langCountSql(words: Seq[String]): String = {
-    val set = words.map(w => s"'$w'").mkString(", ")
-    s"CAST(len(list_filter(string_split(lower(text), ' '), x -> x IN ($set))) AS BIGINT)"
-  }
-
-  private[queries] val langPredSql: String = {
-    val langs = TextOps.langMarkers.map(_._1)
-    val cases = langs.map { l =>
-      val conds = langs.map(o => s"s_$l >= s_$o").mkString(" AND ")
-      s"WHEN $conds THEN '$l'"
-    }.mkString(" ")
-    s"CASE $cases ELSE 'de' END"
-  }
-
-  val oracles: Map[String, String] = Map(
-    "q11_search_rank" ->
-      s"""SELECT doc_id, source,
-         | CAST(${lf("spark")} + ${lf("join")} AS BIGINT) AS score
-         |FROM documents
-         |WHERE list_contains(string_split(lower(text), ' '), 'spark')
-         |  AND list_contains(string_split(lower(text), ' '), 'join')
-         |ORDER BY score DESC, doc_id ASC LIMIT 25""".stripMargin,
-
-    "q12_token_stats" ->
-      """SELECT doc_id,
-        | CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens,
-        | CAST(len(list_distinct(string_split(lower(text), ' '))) AS BIGINT) AS n_distinct
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q13_quality" ->
+    }, oracle =
       s"""WITH tk AS (
          | SELECT doc_id, length(text) AS len_chars,
          |  string_split(lower(text), ' ') AS toks,
@@ -366,9 +286,18 @@ object TextQ {
          | round(CAST(nosp AS DOUBLE) / n, 4) AS avg_token_len,
          | round(CAST(nstop AS DOUBLE) / n, 4) AS stopword_ratio,
          | round(least(1.0, n / 100.0) * (1.0 - CAST(nstop AS DOUBLE) / n), 4) AS quality
-         |FROM st ORDER BY doc_id""".stripMargin,
+         |FROM st ORDER BY doc_id""".stripMargin),
 
-    "q14_langid" -> {
+    // Language ID by marker-word counts; ties alphabetical-first.
+    Q("q14_langid", (s, dir) => {
+      val tk = TextOps.tokens(col("text"))
+      val scores = TextOps.langScores(tk)
+      val scoreCols = scores.map { case (l, c) => c.as(s"s_$l") }
+      t(s, dir, "documents")
+        .select(Seq(col("doc_id"), col("lang")) ++ scoreCols
+          :+ TextOps.langPredict(scores).as("pred_lang"): _*)
+        .orderBy("doc_id")
+    }, oracle = {
       val scoreSelects = TextOps.langMarkers.map { case (l, ws) =>
         s"${langCountSql(ws)} AS s_$l"
       }.mkString(",\n ")
@@ -379,16 +308,37 @@ object TextQ {
          |SELECT doc_id, lang, s_de, s_en, s_es, s_fr, s_zh,
          | $langPredSql AS pred_lang
          |FROM sc ORDER BY doc_id""".stripMargin
-    },
+    }),
 
-    "q15_fingerprint" ->
+    // Document fingerprints: whole-doc md5 + order-insensitive min-token-hash.
+    Q("q15_fingerprint", (s, dir) => {
+      val tk = TextOps.tokens(col("text"))
+      t(s, dir, "documents")
+        .select(col("doc_id"),
+          TextOps.docFingerprint(col("text")).as("fp"),
+          TextOps.minTokenHash(tk).as("min_tok_fp"))
+        .orderBy("doc_id")
+    }, oracle =
       """SELECT doc_id,
         | md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp,
         | list_min(list_transform(list_distinct(string_split(lower(text), ' ')),
         |   x -> md5(x))) AS min_tok_fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q16_jaccard_pairs" ->
+    // Exact n-gram (3-word-shingle) Jaccard near-dup pairs via an inverted
+    // index join — finds the corpus's planted near-duplicates exactly; the
+    // LSH variants below are the sub-quadratic at-scale path.
+    Q("q16_jaccard_pairs", (s, dir) => {
+      // parallelize BEFORE the shingle projection: computed on the scan
+      // side of the repartition it runs in the single bench-SF scan task
+      // (measured 0.7 s on one core); after it, on every core
+      val d = graft.ops.Partitioning.ensureParallel(
+          t(s, dir, "documents").select(col("doc_id"), col("text")))
+        .select(col("doc_id"), graft.functions.ShinglesExpr
+          .shingles(TextOps.tokens(col("text")), 3).as("shs"))
+      DedupOps.jaccardPairs(d, "doc_id", "shs", 0.5)
+        .orderBy("a_id", "b_id")
+    }, oracle =
       """WITH s AS (
         | SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
         |sh AS (
@@ -402,16 +352,56 @@ object TextQ {
         | FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
         |SELECT a_id, b_id, round(CAST(inter AS DOUBLE) / un, 4) AS jaccard
         |FROM p WHERE round(CAST(inter AS DOUBLE) / un, 4) >= 0.5
-        |ORDER BY a_id, b_id""".stripMargin,
+        |ORDER BY a_id, b_id""".stripMargin),
 
-    // md5 MinHash-LSH replay (r11): one md5 per shingle supplies two
-    // 28-bit integers (nibbles 0-6 → x1, 7-13 → x2, little-endian by
-    // nibble index — MinHashMd5SigExpr's derivation); seed r's hash is
-    // the Carter–Wegman (x1 + r·x2) mod (2^31−1); 64 per-doc minima,
-    // band key b = '|'-joined mins s(4b)..s(4b+3), candidates on any
-    // shared (band, key), exact-Jaccard verification — the q16 verify
-    // math on the LSH candidate set
-    "q17_minhash_lsh" -> {
+    // The same near-dup semantics through the prefix-filtered AllPairs/
+    // PPJoin plan — the variant that wins on Zipfian (real-text) token
+    // distributions where hot tokens dominate the posting join. Two
+    // independent algorithms against one oracle (q16's SQL), the same
+    // pattern as q56/q72.
+    Q("q75_jaccard_prefix", (s, dir) => {
+      // parallelize before the shingle projection (see q16)
+      val d = graft.ops.Partitioning.ensureParallel(
+          t(s, dir, "documents").select(col("doc_id"), col("text")))
+        .select(col("doc_id"), graft.functions.ShinglesExpr
+          .shingles(TextOps.tokens(col("text")), 3).as("shs"))
+      DedupOps.jaccardPairsPrefix(d, "doc_id", "shs", 0.5)
+        .orderBy("a_id", "b_id")
+    }, oracle =
+      // Same oracle as q16 on purpose: jaccardPairsPrefix must reproduce the
+      // inverted-index join's exact result through an independent plan.
+      """WITH s AS (
+        | SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
+        |sh AS (
+        | SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
+        |   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shs
+        | FROM s),
+        |p AS (
+        | SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+        |  len(list_intersect(a.shs, b.shs)) AS inter,
+        |  len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs)) AS un
+        | FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
+        |SELECT a_id, b_id, round(CAST(inter AS DOUBLE) / un, 4) AS jaccard
+        |FROM p WHERE round(CAST(inter AS DOUBLE) / un, 4) >= 0.5
+        |ORDER BY a_id, b_id""".stripMargin),
+
+    // MinHash + LSH near-dup candidates, verified by exact shingle
+    // Jaccard. ORACLE-EXACT as of r11: md5 seed-minima (q227's family
+    // at the full 16×4 banding) — DuckDB re-derives every signature,
+    // band key and the verified Jaccard; the murmur minhashLshPairs
+    // stays spec-gated as the cheap-hash variant (DedupOpsSpec).
+    Q("q17_minhash_lsh", (s, dir) =>
+      DedupOps.minhashMd5LshPairs(t(s, dir, "documents"), "doc_id", "text",
+        shingleK = 3, bands = 16, rowsPerBand = 4, threshold = 0.5)
+        .orderBy("a_id", "b_id"), oracle =
+      // md5 MinHash-LSH replay (r11): one md5 per shingle supplies two
+      // 28-bit integers (nibbles 0-6 → x1, 7-13 → x2, little-endian by
+      // nibble index — MinHashMd5SigExpr's derivation); seed r's hash is
+      // the Carter–Wegman (x1 + r·x2) mod (2^31−1); 64 per-doc minima,
+      // band key b = '|'-joined mins s(4b)..s(4b+3), candidates on any
+      // shared (band, key), exact-Jaccard verification — the q16 verify
+      // math on the LSH candidate set
+      {
       val mins = (0 until 64)
         .map(r => s"min((x1 + $r * x2) % 2147483647) AS s$r").mkString(", ")
       val keyCase = (0 until 16).map { b =>
@@ -452,14 +442,23 @@ object TextQ {
          |SELECT a_id, b_id, round(CAST(inter AS DOUBLE) / un, 4) AS jaccard
          |FROM p WHERE round(CAST(inter AS DOUBLE) / un, 4) >= 0.5
          |ORDER BY a_id, b_id""".stripMargin
-    },
+    }),
 
-    // md5 SimHash replay (r11): bit j of the fingerprint is the
-    // count-weighted majority of md5-nibble bit j over the doc's
-    // tokens (nibble j//4, bit j%4, ties to 1 — DedupOps.simhashMd5
-    // Pairs' rule); fingerprints live as 4×16-bit chunks, candidates
-    // share any chunk, hamming = Σ bit_count(xor) over chunks
-    "q18_simhash" ->
+    // SimHash near-dup pairs within Hamming distance 3 (pigeonhole-
+    // banded). ORACLE-EXACT as of r11: the md5-nibble vote family
+    // (q253's sketch widened to 64 bits), fingerprint carried as 4
+    // chunk columns so DuckDB replays banding and popcount chunk-by-
+    // chunk; the xxhash simhashPairs stays spec-gated as the cheap-hash
+    // variant (DedupOpsSpec).
+    Q("q18_simhash", (s, dir) =>
+      DedupOps.simhashMd5Pairs(t(s, dir, "documents"), "doc_id", "text",
+        maxHamming = 3)
+        .orderBy("a_id", "b_id"), oracle =
+      // md5 SimHash replay (r11): bit j of the fingerprint is the
+      // count-weighted majority of md5-nibble bit j over the doc's
+      // tokens (nibble j//4, bit j%4, ties to 1 — DedupOps.simhashMd5
+      // Pairs' rule); fingerprints live as 4×16-bit chunks, candidates
+      // share any chunk, hamming = Σ bit_count(xor) over chunks
       """WITH s AS (
         | SELECT doc_id, string_split(lower(text), ' ') AS toks
         | FROM documents),
@@ -491,138 +490,62 @@ object TextQ {
         |    i -> bit_count(xor(x.fvs[i], y.fvs[i])))) AS BIGINT) AS hamming
         | FROM cand c JOIN fw x ON x.doc_id = c.a_id
         |  JOIN fw y ON y.doc_id = c.b_id)
-        |WHERE hamming <= 3 ORDER BY a_id, b_id""".stripMargin,
+        |WHERE hamming <= 3 ORDER BY a_id, b_id""".stripMargin),
 
-    "q82_text_clean" ->
-      """WITH d AS (
-        | SELECT doc_id,
-        |  'cafe' || chr(769) || ' ' || chr(8203) || ' ' || text ||
-        |    chr(7) || '  trailing' || chr(9) AS dirty
-        | FROM documents),
-        |c AS (
-        | SELECT doc_id, dirty,
-        |  trim(regexp_replace(
-        |    regexp_replace(nfc_normalize(dirty),
-        |      '[\x00-\x08\x0B-\x1F\x7F\x{200B}-\x{200D}\x{FEFF}]', '', 'g'),
-        |    '\s+', ' ', 'g')) AS clean
-        | FROM d)
-        |SELECT doc_id, md5(clean) AS clean_md5,
-        | CAST(length(dirty) AS BIGINT) AS n_before,
-        | CAST(length(clean) AS BIGINT) AS n_after
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    "q77_rank_normalized" ->
-      """WITH s AS (
-        | SELECT doc_id, source, string_split(lower(text), ' ') AS toks
-        | FROM documents),
-        |m AS (
-        | SELECT doc_id, source,
-        |  len(list_filter(toks, x -> x = 'spark')) AS t1,
-        |  len(list_filter(toks, x -> x = 'join')) AS t2,
-        |  len(toks) AS n
-        | FROM s),
-        |r AS (
-        | SELECT doc_id, source, t1, t2,
-        |  CAST(t1 + t2 AS DOUBLE) /
-        |    (1 + ln(greatest(CAST(n AS DOUBLE), 1.0))) AS r1
-        | FROM m)
-        |SELECT doc_id, source, round(r1 / (r1 + 1), 6) AS score
-        |FROM r WHERE t1 > 0 AND t2 > 0
-        |ORDER BY score DESC, doc_id ASC LIMIT 25""".stripMargin,
-
-    // Literal-map stance (declared; PorterSearchSpec pins it): on this
-    // closed vocabulary the only token stemming to 'queri' is 'query' and
-    // to 'merg' is 'merge', so stemmed matching over raw tokens is exact.
-    "q76_stemmed_search" ->
-      """WITH s AS (
-        | SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |m AS (
-        | SELECT doc_id,
-        |  len(list_filter(toks, x -> x = 'query')) AS nq,
-        |  len(list_filter(toks, x -> x = 'merge')) AS nm
-        | FROM s)
-        |SELECT doc_id, CAST(nq + nm AS BIGINT) AS n_hits
-        |FROM m WHERE nq > 0 AND nm > 0
-        |ORDER BY n_hits DESC, lpad(CAST(doc_id AS VARCHAR), 10, '0')
-        |LIMIT 25""".stripMargin,
-
-    // Same oracle as q16 on purpose: jaccardPairsPrefix must reproduce the
-    // inverted-index join's exact result through an independent plan.
-    "q75_jaccard_prefix" ->
-      """WITH s AS (
-        | SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |sh AS (
-        | SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-        |   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shs
-        | FROM s),
-        |p AS (
-        | SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  len(list_intersect(a.shs, b.shs)) AS inter,
-        |  len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs)) AS un
-        | FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        |SELECT a_id, b_id, round(CAST(inter AS DOUBLE) / un, 4) AS jaccard
-        |FROM p WHERE round(CAST(inter AS DOUBLE) / un, 4) >= 0.5
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    // The oracle consumes the SAME IEEE doubles Spark looks up
-    // (TsRank.termScore, shortest round-trip repr) — the compare is exact
-    // because both sides read one table, not because floats "happen" to
-    // agree.
-    "q169_tsrank_term" ->
-      s"""WITH ts(k, score) AS (VALUES ${graft.functions.TsRank.termScoreValuesSql}),
-         |m AS (
-         | SELECT doc_id,
-         |  least(len(list_filter(string_split(lower(text), ' '),
-         |    x -> x = 'spark')), 256) AS n_hits
-         | FROM documents)
-         |SELECT m.doc_id, CAST(m.n_hits AS BIGINT) AS n_hits, ts.score,
-         | ts.score / (ts.score + 1) AS score_norm
-         |FROM m JOIN ts ON m.n_hits = ts.k
-         |WHERE m.n_hits >= 1
-         |ORDER BY doc_id""".stripMargin,
-
-    // list_reduce seeds from the first element — exactly the acc<0 branch
-    // of calc_rank_and — then replays Spark's left fold with the identical
-    // 1-(1-acc)(1-c) double ops over the same (a asc, b asc) pair order.
-    "q170_tsrank_and" ->
-      s"""WITH cwt AS (SELECT ${graft.functions.TsRank.curwListSql} AS cw),
-         |s AS (
-         | SELECT doc_id, string_split(lower(text), ' ') AS toks
-         | FROM documents),
-         |p AS (
-         | SELECT doc_id,
-         |  list_filter(range(1, len(toks) + 1), i -> toks[i] = 'spark')[1:256] AS p1,
-         |  list_filter(range(1, len(toks) + 1), i -> toks[i] = 'join')[1:256] AS p2
-         | FROM s),
-         |d AS (
-         | SELECT doc_id,
-         |  flatten(list_transform(p1,
-         |    a -> list_transform(p2, b -> least(abs(a - b), 101)))) AS dists
-         | FROM p
-         | WHERE len(p1) >= 1 AND len(p2) >= 1),
-         |r AS (
-         | SELECT doc_id, CAST(len(dists) AS BIGINT) AS n_pairs,
-         |  list_reduce(list_transform(dists, dd -> cw[dd]),
-         |    (acc, x) -> 1 - (1 - acc) * (1 - x)) AS score
-         | FROM d, cwt)
-         |SELECT doc_id, n_pairs, score, score / (score + 1) AS score_norm
-         |FROM r ORDER BY doc_id""".stripMargin,
-
-    "q41_bpe_tokens" ->
+    // BPE-style subword-ish token counting via the GPT-2-like segmentation
+    // regex (contractions / letter runs / digit runs / punctuation runs),
+    // next to the plain whitespace count.
+    Q("q41_bpe_tokens", (s, dir) => {
+      val bpe = "'[a-z]+| ?[A-Za-z]+| ?[0-9]+| ?[^\\sA-Za-z0-9]+"
+      t(s, dir, "documents")
+        .select(col("doc_id"),
+          size(split(col("text"), "\\s+")).cast("long").as("n_ws"),
+          size(regexp_extract_all(col("text"), lit(bpe), lit(0)))
+            .cast("long").as("n_bpe"))
+        .orderBy("doc_id")
+    }, oracle =
       """SELECT doc_id,
         | CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS n_ws,
         | CAST(len(regexp_extract_all(text,
         |   '''[a-z]+| ?[A-Za-z]+| ?[0-9]+| ?[^\sA-Za-z0-9]+', 0)) AS BIGINT) AS n_bpe
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q54_deterministic_sample" ->
+    // Deterministic content-keyed sampling (training-data splits must be
+    // reproducible and engine-independent — rand()/TABLESAMPLE are not):
+    // keep docs whose md5(doc_id) starts with one of 2/16 hex chars
+    // (12.5% expected), stratified stats per source.
+    Q("q54_deterministic_sample", (s, dir) => {
+      val bucket = substring(md5(col("doc_id").cast("string")
+        .cast("binary")), 1, 1)
+      t(s, dir, "documents")
+        .filter(bucket.isin("0", "1"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_sampled"),
+          sum(col("n_chars")).as("sum_chars"))
+        .orderBy("source")
+    }, oracle =
       """SELECT source, count(*) AS n_sampled,
         | CAST(sum(n_chars) AS BIGINT) AS sum_chars
         |FROM documents
         |WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0', '1')
-        |GROUP BY source ORDER BY source""".stripMargin,
+        |GROUP BY source ORDER BY source""".stripMargin),
 
-    "q21_categorize" ->
+    // Rule-cascade categorizer generalized from categorizer.py:1-32:
+    // first-match-wins keyword rules over the lower-cased text.
+    Q("q21_categorize", (s, dir) => {
+      val lo = lower(col("text"))
+      val category = when(lo.contains("window"), "Analytics")
+        .when(lo.contains("join"), "Join")
+        .when(lo.contains("group"), "Aggregation")
+        .when(lo.contains("filter"), "Filter")
+        .otherwise("Scan")
+      val genre = when(lo.contains("fast"), "fast")
+        .when(lo.contains("slow"), "slow")
+        .otherwise("general")
+      t(s, dir, "documents")
+        .select(col("doc_id"), category.as("category"), genre.as("genre"))
+        .orderBy("doc_id")
+    }, oracle =
       """SELECT doc_id,
         | CASE WHEN lower(text) LIKE '%window%' THEN 'Analytics'
         |      WHEN lower(text) LIKE '%join%' THEN 'Join'
@@ -632,9 +555,38 @@ object TextQ {
         | CASE WHEN lower(text) LIKE '%fast%' THEN 'fast'
         |      WHEN lower(text) LIKE '%slow%' THEN 'slow'
         |      ELSE 'general' END AS genre
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q183_token_simpson" ->
+    // Per-source token-concentration profile: Simpson index (collision
+    // probability Σc²/N², the "effective vocabulary" diagnostic —
+    // boilerplate-heavy sources spike it) and top-token share. Both as
+    // integer parts-per-1e8/1e6 via integral DIV — a double ratio has
+    // no cross-engine summation-order contract. Products go through
+    // DECIMAL before multiplying (the q104 discipline): Σc²·1e8 wraps
+    // BIGINT silently once a source passes ~1e6 tokens, while decimal
+    // stays exact to 38 digits and fails loudly beyond. Shape at
+    // 100 TB: one token explode into a map-side-combined (source,token)
+    // count, then a source-sized rollup — no joins, no windows.
+    Q("q183_token_simpson", (s, dir) => {
+      val dec = DecimalType(38, 0)
+      val tok = t(s, dir, "documents")
+        .select(col("source"), explode(toks(col("text"))).as("tk"))
+        .groupBy("source", "tk").agg(count(lit(1)).as("c"))
+      tok.groupBy("source")
+        .agg(sum(col("c")).as("n_tok"),
+          count(lit(1)).as("n_types"),
+          // cast BEFORE the product: a BIGINT c*c wraps silently near
+          // c≈3e9 while DuckDB's HUGEINT stays exact — the DECIMAL
+          // discipline has to start inside the aggregate
+          sum(col("c").cast(dec) * col("c").cast(dec)).as("c2"),
+          max(col("c")).as("top_c"))
+        .select(col("source"), col("n_tok"), col("n_types"),
+          ldiv(col("c2") * lit(100000000L),
+            col("n_tok").cast(dec) * col("n_tok")).as("simpson_pp100m"),
+          ldiv(col("top_c").cast(dec) * lit(1000000L),
+            col("n_tok").cast(dec)).as("top_share_pp1m"))
+        .orderBy("source")
+    }, oracle =
       """WITH tc AS (
         | SELECT source, tk, count(*) AS c FROM (
         |  SELECT source, unnest(string_split(lower(text), ' ')) AS tk
@@ -646,6 +598,23 @@ object TextQ {
         |   AS BIGINT) AS simpson_pp100m,
         | CAST(CAST(max(c) AS HUGEINT) * 1000000
         |   // CAST(sum(c) AS HUGEINT) AS BIGINT) AS top_share_pp1m
-        |FROM tc GROUP BY source ORDER BY source""".stripMargin,
+        |FROM tc GROUP BY source ORDER BY source""".stripMargin),
   )
+
+  private def lf(term: String) =
+    s"len(list_filter(string_split(lower(text), ' '), x -> x = '$term'))"
+
+  private[queries] def langCountSql(words: Seq[String]): String = {
+    val set = words.map(w => s"'$w'").mkString(", ")
+    s"CAST(len(list_filter(string_split(lower(text), ' '), x -> x IN ($set))) AS BIGINT)"
+  }
+
+  private[queries] val langPredSql: String = {
+    val langs = TextOps.langMarkers.map(_._1)
+    val cases = langs.map { l =>
+      val conds = langs.map(o => s"s_$l >= s_$o").mkString(" AND ")
+      s"WHEN $conds THEN '$l'"
+    }.mkString(" ")
+    s"CASE $cases ELSE 'de' END"
+  }
 }

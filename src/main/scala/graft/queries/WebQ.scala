@@ -15,7 +15,7 @@ object WebQ {
   private val K1 = 1.2
   private val B = 0.75
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val all: Seq[Q] = Seq(
     // robots.txt ADMISSION (RFC 9309) — the crawl-policy gate that
     // precedes every fetch in a corpus-collection pipeline (the
     // reference's scrapy stack applies the same protocol through
@@ -29,7 +29,7 @@ object WebQ {
     // id arithmetic, so any drift in the matcher's precedence or
     // anchoring breaks the hash. RobotsSpec pins the protocol corner
     // cases hand-worked from the RFC. Per-row executor work.
-    "q300_robots_admission" -> ((s, dir) => {
+    Q("q300_robots_admission", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -67,7 +67,36 @@ object WebQ {
         .toDF("doc_id", "n_urls", "n_allowed", "n_denied",
           "denied_checksum")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // the RFC truth table from id arithmetic: under the graftbot
+      // group (id%3 != 0) paths 2/4/7 are denied by Disallow /private*,
+      // path 3 is denied unless the even-id Allow /private/pub$
+      // override out-lengths it; under the * group (id%3 = 0) only
+      // path 5 (/tmp/x) is denied
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0),
+        |v AS (
+        | SELECT doc_id, len,
+        |  list_transform(range(1, len + 1), i ->
+        |   CASE WHEN doc_id % 3 = 0 THEN
+        |     CASE WHEN ord(substr(text, CAST(i AS INTEGER), 1)) % 8 = 5
+        |      THEN 1 ELSE 0 END
+        |   ELSE
+        |     CASE WHEN ord(substr(text, CAST(i AS INTEGER), 1)) % 8
+        |            IN (2, 4, 7) THEN 1
+        |      WHEN ord(substr(text, CAST(i AS INTEGER), 1)) % 8 = 3
+        |           AND doc_id % 2 = 1 THEN 1
+        |      ELSE 0 END
+        |   END) AS dny
+        | FROM d)
+        |SELECT doc_id,
+        | CAST(len AS BIGINT) AS n_urls,
+        | CAST(len - list_sum(dny) AS BIGINT) AS n_allowed,
+        | CAST(list_sum(dny) AS BIGINT) AS n_denied,
+        | CAST(list_sum(list_transform(range(1, len + 1), i ->
+        |   i * dny[CAST(i AS INTEGER)])) AS BIGINT) AS denied_checksum
+        |FROM v ORDER BY doc_id""".stripMargin),
 
     // THE CRAWL-INGEST SPINE, composed end-to-end (r13 verdict #4):
     // the Common-Crawl path a real curation run executes — WARC
@@ -86,7 +115,7 @@ object WebQ {
     // extraction — same logical truth, so the oracle is untouched and
     // any framing bytes reaching the HTML parser break the hash.
     // Per-row executor work; the only shuffle is the final orderBy.
-    "q306_crawl_spine" -> ((s, dir) => {
+    Q("q306_crawl_spine", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -200,7 +229,42 @@ object WebQ {
           col("n_html"), col("n_admitted"), col("admitted_checksum"),
           md5(col("titles").cast("binary")).as("titles_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // admission truth from arithmetic: the fixed graftbot crawl
+      // denies paths 2/4/7 (Disallow /private*) and path 3 on odd ids
+      // (no Allow /private/pub$ override); a page is fetched when it is
+      // 200 (b%10 != 0), HTML (b%3 != 0), and robots-allowed; titles
+      // concatenate 'Page id-k;' over admitted pages in record order
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0),
+        |pg AS (
+        | SELECT doc_id, len, text,
+        |  unnest(range(1, len + 1)) AS i
+        | FROM d),
+        |a AS (
+        | SELECT doc_id, len, i,
+        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
+        | FROM pg),
+        |f AS (
+        | SELECT doc_id, len, i, b,
+        |  CASE WHEN b % 3 != 0 THEN 1 ELSE 0 END AS html,
+        |  CASE WHEN b % 10 != 0 AND b % 3 != 0 AND
+        |    NOT (b % 8 IN (2, 4, 7) OR (doc_id % 2 = 1 AND b % 8 = 3))
+        |   THEN 1 ELSE 0 END AS adm
+        | FROM a)
+        |SELECT doc_id,
+        | CAST(max(len) + 2 AS BIGINT) AS n_records,
+        | CAST(max(len) AS BIGINT) AS n_pages,
+        | CAST(sum(html) AS BIGINT) AS n_html,
+        | CAST(sum(adm) AS BIGINT) AS n_admitted,
+        | CAST(sum(CASE WHEN adm = 1 THEN i ELSE 0 END) AS BIGINT)
+        |  AS admitted_checksum,
+        | md5(string_agg(CASE WHEN adm = 1 THEN
+        |   'Page ' || CAST(doc_id AS VARCHAR) || '-' ||
+        |   CAST(i - 1 AS VARCHAR) || ';' ELSE '' END, ''
+        |   ORDER BY i)) AS titles_md5
+        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // CRAWL POLITENESS SCHEDULER — the frontier planner between
     // admission (q306) and fetch: per host, URLs are fetched in
@@ -214,7 +278,7 @@ object WebQ {
     // between a scheduler that survives 100 TB of frontier and one
     // that doesn't. Output: per-host fetch plan rollup (URL count,
     // makespan, total politeness wait, schedule checksum).
-    "q308_crawl_schedule" -> ((s, dir) => {
+    Q("q308_crawl_schedule", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val e = t(s, dir, "events").select(col("user_id").as("host"),
         unix_micros(col("ts")).as("tus"), col("event_id"))
@@ -232,7 +296,30 @@ object WebQ {
           sum(col("fetch") - col("tus")).as("total_wait_us"),
           sum(col("fetch") % 1000000007L).as("sched_checksum"))
         .orderBy("host")
-    }),
+    }, oracle =
+      // the same prefix-max rewrite replayed in SQL; integer micros so
+      // both engines agree bit-for-bit
+      """WITH e AS (
+        | SELECT user_id AS host, epoch_us(ts) AS tus, event_id,
+        |  (user_id % 4 + 1) * 1000000 AS d
+        | FROM events),
+        |s AS (
+        | SELECT host, tus, d,
+        |  row_number() OVER (PARTITION BY host
+        |    ORDER BY tus, event_id) - 1 AS idx
+        | FROM e),
+        |f AS (
+        | SELECT host, tus,
+        |  d * idx + max(tus - d * idx) OVER (PARTITION BY host
+        |    ORDER BY idx ROWS BETWEEN UNBOUNDED PRECEDING AND
+        |    CURRENT ROW) AS ft
+        | FROM s)
+        |SELECT host, CAST(count(*) AS BIGINT) AS n_urls,
+        | CAST(min(tus) AS BIGINT) AS first_seen_us,
+        | CAST(max(ft) - min(tus) AS BIGINT) AS makespan_us,
+        | CAST(sum(ft - tus) AS BIGINT) AS total_wait_us,
+        | CAST(sum(ft % 1000000007) AS BIGINT) AS sched_checksum
+        |FROM f GROUP BY host ORDER BY host""".stripMargin),
 
     // ROBOTS-FED POLITENESS SCHEDULER (r14 verdict #3): q308's
     // prefix-max rewrite with the per-host delay PARSED from each
@@ -246,7 +333,7 @@ object WebQ {
     // declares host%4+1 s for graftbot with a decoy 9 s in the `*`
     // group. The distinct-host policy table is tiny → broadcast back
     // onto events; window + groupBy on host share ONE exchange.
-    "q317_crawl_schedule_robots" -> ((s, dir) => {
+    Q("q317_crawl_schedule_robots", (s, dir) => {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val delays = t(s, dir, "events")
@@ -288,7 +375,33 @@ object WebQ {
           sum(col("fetch") - col("tus")).as("total_wait_us"),
           sum(col("fetch") % 1000000007L).as("sched_checksum"))
         .orderBy("host")
-    }),
+    }, oracle =
+      // q308's rewrite with the delay replayed from the planted robots
+      // truth: no-delay hosts (…%7=0) and *-group-only hosts (…%5=0)
+      // fall back to 1 s; everyone else gets their graftbot-group
+      // host%4+1 (the 9 s `*` decoy must never win)
+      """WITH e AS (
+        | SELECT user_id AS host, epoch_us(ts) AS tus, event_id,
+        |  CASE WHEN user_id % 7 = 0 OR user_id % 5 = 0 THEN 1000000
+        |   ELSE (user_id % 4 + 1) * 1000000 END AS d
+        | FROM events),
+        |s AS (
+        | SELECT host, tus, d,
+        |  row_number() OVER (PARTITION BY host
+        |    ORDER BY tus, event_id) - 1 AS idx
+        | FROM e),
+        |f AS (
+        | SELECT host, tus, d,
+        |  d * idx + max(tus - d * idx) OVER (PARTITION BY host
+        |    ORDER BY idx ROWS BETWEEN UNBOUNDED PRECEDING AND
+        |    CURRENT ROW) AS ft
+        | FROM s)
+        |SELECT host, CAST(max(d) AS BIGINT) AS delay_us,
+        | CAST(count(*) AS BIGINT) AS n_urls,
+        | CAST(max(ft) - min(tus) AS BIGINT) AS makespan_us,
+        | CAST(sum(ft - tus) AS BIGINT) AS total_wait_us,
+        | CAST(sum(ft % 1000000007) AS BIGINT) AS sched_checksum
+        |FROM f GROUP BY host ORDER BY host""".stripMargin),
 
     // SITEMAP-SEEDED FRONTIER (the discovery half q306's fetch half
     // assumes): a real sitemaps.org urlset XML per doc — one <url>
@@ -300,7 +413,7 @@ object WebQ {
     // admitted paths (the dedup a frontier does before scheduling),
     // and the admitted priority mass. All gates replay from
     // arithmetic.
-    "q315_sitemap_seeds" -> ((s, dir) => {
+    Q("q315_sitemap_seeds", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -348,7 +461,33 @@ object WebQ {
         .toDF("doc_id", "n_urls", "n_admitted", "n_distinct_paths",
           "pri_deci_sum")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // same admission truth table as q306 (graftbot: paths 2/4/7
+      // denied, 3 denied on odd ids); distinct admitted paths count
+      // path CLASSES (b%8), priority mass sums b%10 over admitted
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0),
+        |pg AS (
+        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
+        | FROM d),
+        |a AS (
+        | SELECT doc_id, len, i,
+        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
+        | FROM pg),
+        |f AS (
+        | SELECT doc_id, len, i, b,
+        |  CASE WHEN NOT (b % 8 IN (2, 4, 7) OR
+        |    (doc_id % 2 = 1 AND b % 8 = 3)) THEN 1 ELSE 0 END AS adm
+        | FROM a)
+        |SELECT doc_id,
+        | CAST(max(len) AS BIGINT) AS n_urls,
+        | CAST(sum(adm) AS BIGINT) AS n_admitted,
+        | CAST(count(DISTINCT CASE WHEN adm = 1 THEN b % 8 END)
+        |  AS BIGINT) AS n_distinct_paths,
+        | CAST(sum(CASE WHEN adm = 1 THEN b % 10 ELSE 0 END) AS BIGINT)
+        |  AS pri_deci_sum
+        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // SITEMAP INDEX DISCOVERY (r14 verdict #2): real discovery starts
     // at a <sitemapindex> of .xml.gz members, not a flat urlset —
@@ -361,7 +500,7 @@ object WebQ {
     // a walk that stops at one level loses every URL of the nested
     // class. Admission replays q315's robots gates so the frontier
     // halves stay one truth table.
-    "q318_sitemap_index" -> ((s, dir) => {
+    Q("q318_sitemap_index", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -432,7 +571,34 @@ object WebQ {
         .toDF("doc_id", "n_fetched", "n_urls", "n_admitted",
           "pri_deci_sum")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // q315's admission truth over the index-discovered corpus: the
+      // round-robin shard split never changes the totals, so only the
+      // fetch count is new — 1 root + (nested mid on id%5=0) + 1+id%3
+      // gzipped children
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0),
+        |pg AS (
+        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
+        | FROM d),
+        |a AS (
+        | SELECT doc_id, len, i,
+        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
+        | FROM pg),
+        |f AS (
+        | SELECT doc_id, len, i, b,
+        |  CASE WHEN NOT (b % 8 IN (2, 4, 7) OR
+        |    (doc_id % 2 = 1 AND b % 8 = 3)) THEN 1 ELSE 0 END AS adm
+        | FROM a)
+        |SELECT doc_id,
+        | CAST(1 + (CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END)
+        |   + 1 + doc_id % 3 AS BIGINT) AS n_fetched,
+        | CAST(max(len) AS BIGINT) AS n_urls,
+        | CAST(sum(adm) AS BIGINT) AS n_admitted,
+        | CAST(sum(CASE WHEN adm = 1 THEN b % 10 ELSE 0 END) AS BIGINT)
+        |  AS pri_deci_sum
+        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // DISCOVERY FROM robots.txt (the true crawl entry point): the
     // protocol's own `Sitemap:` directives — global, not group-scoped
@@ -447,7 +613,7 @@ object WebQ {
     // shapes are under the hash. A line scan that group-scopes the
     // directive loses the odd-id second directive planted INSIDE the
     // `*` group.
-    "q320_robots_sitemap_discovery" -> ((s, dir) => {
+    Q("q320_robots_sitemap_discovery", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -522,7 +688,35 @@ object WebQ {
         .toDF("doc_id", "n_directives", "n_fetched", "n_urls",
           "n_admitted", "pri_deci_sum")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // the q315 admission truth reached FROM the robots file's own
+      // Sitemap: directives; only the directive/fetch counts are new —
+      // even ids: one directive, an index + 1+id%3 children; odd ids:
+      // two directives, one gz urlset each
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0),
+        |pg AS (
+        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
+        | FROM d),
+        |a AS (
+        | SELECT doc_id, len, i,
+        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
+        | FROM pg),
+        |f AS (
+        | SELECT doc_id, len, i, b,
+        |  CASE WHEN NOT (b % 8 IN (2, 4, 7) OR
+        |    (doc_id % 2 = 1 AND b % 8 = 3)) THEN 1 ELSE 0 END AS adm
+        | FROM a)
+        |SELECT doc_id,
+        | CAST(1 + doc_id % 2 AS BIGINT) AS n_directives,
+        | CAST(CASE WHEN doc_id % 2 = 0 THEN 2 + doc_id % 3
+        |   ELSE 2 END AS BIGINT) AS n_fetched,
+        | CAST(max(len) AS BIGINT) AS n_urls,
+        | CAST(sum(adm) AS BIGINT) AS n_admitted,
+        | CAST(sum(CASE WHEN adm = 1 THEN b % 10 ELSE 0 END) AS BIGINT)
+        |  AS pri_deci_sum
+        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // IN-PAGE INDEXING DIRECTIVES (the gate AFTER robots.txt): a
     // page the crawl admits can still refuse the index from inside —
@@ -536,7 +730,7 @@ object WebQ {
     // walk runs on REAL parsed HTML attributes (void tags, attribute
     // maps) — a parser that drops <meta>/<link> in <head> or
     // case-folds wrong breaks the hash.
-    "q323_meta_robots_canonical" -> ((s, dir) => {
+    Q("q323_meta_robots_canonical", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .mapPartitions { rows =>
@@ -639,7 +833,39 @@ object WebQ {
         .toDF("doc_id", "n_pages", "n_admitted", "n_noindexed",
           "n_nofollow", "n_indexed", "n_canonical_targets", "canon_chk")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // index-gate truth from arithmetic: admitted as q315; noindex =
+      // b%11=0, nofollow = b%11=1; canonical class = (b//8)%8 (exact
+      // integer division both engines)
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0),
+        |pg AS (
+        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
+        | FROM d),
+        |a AS (
+        | SELECT doc_id, len, i,
+        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
+        | FROM pg),
+        |f AS (
+        | SELECT doc_id, len, i, b, (b // 8) % 8 AS c,
+        |  CASE WHEN NOT (b % 8 IN (2, 4, 7) OR
+        |    (doc_id % 2 = 1 AND b % 8 = 3)) THEN 1 ELSE 0 END AS adm
+        | FROM a)
+        |SELECT doc_id,
+        | CAST(max(len) AS BIGINT) AS n_pages,
+        | CAST(sum(adm) AS BIGINT) AS n_admitted,
+        | CAST(sum(CASE WHEN adm = 1 AND b % 11 = 0 THEN 1 ELSE 0 END)
+        |   AS BIGINT) AS n_noindexed,
+        | CAST(sum(CASE WHEN adm = 1 AND b % 11 = 1 THEN 1 ELSE 0 END)
+        |   AS BIGINT) AS n_nofollow,
+        | CAST(sum(CASE WHEN adm = 1 AND b % 11 != 0 THEN 1 ELSE 0 END)
+        |   AS BIGINT) AS n_indexed,
+        | CAST(count(DISTINCT CASE WHEN adm = 1 AND b % 11 != 0
+        |   THEN c END) AS BIGINT) AS n_canonical_targets,
+        | CAST(sum(CASE WHEN adm = 1 AND b % 11 != 0 THEN i * c
+        |   ELSE 0 END) AS BIGINT) AS canon_chk
+        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // WARC REVISIT RESOLUTION (ISO 28500 §6.7.2 — Common Crawl's
     // archive-level dedup): a re-fetch whose payload matches an
@@ -653,7 +879,7 @@ object WebQ {
     // responses and resolves every revisit against it — loud on a
     // dangling digest or a refers-to mismatch — and reports the
     // dedup ledger (stored vs saved bytes) the archive achieves.
-    "q322_warc_revisit" -> ((s, dir) => {
+    Q("q322_warc_revisit", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -720,7 +946,37 @@ object WebQ {
         .toDF("doc_id", "n_responses", "n_revisits", "stored_bytes",
           "saved_bytes", "revisit_chk")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // dedup ledger from arithmetic: body length = b%16+4 derives from
+      // the byte value alone, so occurrence rank per (doc, byte) splits
+      // response (rn=1) from revisit (rn>1); the checksum weights each
+      // revisit by its 1-based record position
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0),
+        |pg AS (
+        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
+        | FROM d),
+        |a AS (
+        | SELECT doc_id, len, i,
+        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
+        | FROM pg),
+        |r AS (
+        | SELECT doc_id, i, b, b % 16 + 4 AS blen,
+        |  row_number() OVER (PARTITION BY doc_id, b ORDER BY i) AS rn
+        | FROM a)
+        |SELECT doc_id,
+        | CAST(count(CASE WHEN rn = 1 THEN 1 END) AS BIGINT)
+        |   AS n_responses,
+        | CAST(count(CASE WHEN rn > 1 THEN 1 END) AS BIGINT)
+        |   AS n_revisits,
+        | CAST(sum(CASE WHEN rn = 1 THEN blen ELSE 0 END) AS BIGINT)
+        |   AS stored_bytes,
+        | CAST(sum(CASE WHEN rn > 1 THEN blen ELSE 0 END) AS BIGINT)
+        |   AS saved_bytes,
+        | CAST(sum(CASE WHEN rn > 1 THEN i * blen ELSE 0 END) AS BIGINT)
+        |   AS revisit_chk
+        |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // INCREMENTAL RECRAWL from sitemap <lastmod> (the delta frontier
     // a production crawler computes instead of refetching the world):
@@ -733,7 +989,7 @@ object WebQ {
     // weights each recrawled url by its day-of-month so an off-by-one
     // in either the date parse or the strict inequality breaks the
     // hash.
-    "q321_recrawl_delta" -> ((s, dir) => {
+    Q("q321_recrawl_delta", (s, dir) => {
       import s.implicits._
       docText(s, dir, length(col("text")) > 0)
         .map { case (id, text) =>
@@ -787,7 +1043,33 @@ object WebQ {
         .toDF("doc_id", "cutoff_day", "n_urls", "n_admitted",
           "n_recrawl", "recrawl_day_sum")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // freshness truth from arithmetic: lastmod day = b%28+1, cutoff
+      // day = doc_id%28+1, recrawl = admitted AND day > cutoff (strict)
+      """WITH d AS (
+        | SELECT doc_id, text, length(text) AS len
+        | FROM documents WHERE length(text) > 0),
+        |pg AS (
+        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
+        | FROM d),
+        |a AS (
+        | SELECT doc_id, len, i,
+        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
+        | FROM pg),
+        |f AS (
+        | SELECT doc_id, len, b % 28 + 1 AS day,
+        |  CASE WHEN NOT (b % 8 IN (2, 4, 7) OR
+        |    (doc_id % 2 = 1 AND b % 8 = 3)) THEN 1 ELSE 0 END AS adm
+        | FROM a)
+        |SELECT doc_id,
+        | CAST(doc_id % 28 + 1 AS BIGINT) AS cutoff_day,
+        | CAST(max(len) AS BIGINT) AS n_urls,
+        | CAST(sum(adm) AS BIGINT) AS n_admitted,
+        | CAST(sum(CASE WHEN adm = 1 AND day > doc_id % 28 + 1
+        |   THEN 1 ELSE 0 END) AS BIGINT) AS n_recrawl,
+        | CAST(sum(CASE WHEN adm = 1 AND day > doc_id % 28 + 1
+        |   THEN day ELSE 0 END) AS BIGINT) AS recrawl_day_sum
+        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // URL canonicalization as a codegen expression: four deterministic
     // dirt classes (scheme/host case, default ports, duplicate and ./
@@ -797,7 +1079,7 @@ object WebQ {
     // directly — any rule drift (a missed port, an unsorted param, a
     // surviving fragment) breaks the hash. One narrow projection, no
     // shuffle: at 100 TB this runs inside the scan.
-    "q204_url_canonical" -> ((s, dir) => {
+    Q("q204_url_canonical", (s, dir) => {
       import graft.functions.UrlCanon.{canonicalizeUrl, urlHost}
       val k = col("doc_id") % 5
       val url = when(col("doc_id") % 4 === 0,
@@ -817,7 +1099,30 @@ object WebQ {
           canonicalizeUrl(col("url")).as("canon"),
           urlHost(col("url")).as("host"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id,
+        | CASE doc_id % 4
+        |  WHEN 0 THEN 'HTTPS://WWW.Example' || (doc_id % 5) ||
+        |   '.COM:443/Events//' || doc_id || '/./x?utm_source=feed&b=2&a=1#sec'
+        |  WHEN 1 THEN 'http://Site' || (doc_id % 5) || '.org:80/a//b/./c'
+        |  WHEN 2 THEN 'example' || (doc_id % 5) || '.com/p?id=' || doc_id ||
+        |   '&gclid=zz&ref=home'
+        |  ELSE 'https://cdn.example' || (doc_id % 5) || '.com/img#frag'
+        | END AS url,
+        | CASE doc_id % 4
+        |  WHEN 0 THEN 'https://www.example' || (doc_id % 5) ||
+        |   '.com/Events/' || doc_id || '/x?a=1&b=2'
+        |  WHEN 1 THEN 'http://site' || (doc_id % 5) || '.org/a/b/c'
+        |  WHEN 2 THEN 'http://example' || (doc_id % 5) || '.com/p?id=' || doc_id
+        |  ELSE 'https://cdn.example' || (doc_id % 5) || '.com/img'
+        | END AS canon,
+        | CASE doc_id % 4
+        |  WHEN 0 THEN 'www.example' || (doc_id % 5) || '.com'
+        |  WHEN 1 THEN 'site' || (doc_id % 5) || '.org'
+        |  WHEN 2 THEN 'example' || (doc_id % 5) || '.com'
+        |  ELSE 'cdn.example' || (doc_id % 5) || '.com'
+        | END AS host
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // Canonical-identity dedup: consecutive id pairs carry DIFFERENT
     // dirt (uppercase scheme+host+:80 and /./ segment vs duplicate
@@ -825,7 +1130,7 @@ object WebQ {
     // canonical form must find exactly the pairs. The shuffle key is
     // the canonical string — at 100 TB this is the standard
     // crawl-dedup exchange, count+min combine map-side.
-    "q205_url_dedup" -> ((s, dir) => {
+    Q("q205_url_dedup", (s, dir) => {
       import graft.functions.UrlCanon.canonicalizeUrl
       val gid = ldiv(col("doc_id"), lit(2L))
       val url = when(col("doc_id") % 2 === 0,
@@ -840,7 +1145,12 @@ object WebQ {
         .agg(count(lit(1)).as("n_dup"), min(col("doc_id")).as("first_doc"),
           sum(col("doc_id")).as("id_checksum"))
         .orderBy("first_doc")
-    }),
+    }, oracle =
+      """SELECT 'http://shop.example.com/item/' || (doc_id // 2) ||
+        |   '?color=1&size=2' AS canon,
+        | count(*) AS n_dup, min(doc_id) AS first_doc,
+        | CAST(sum(doc_id) AS BIGINT) AS id_checksum
+        |FROM documents GROUP BY doc_id // 2 ORDER BY first_doc""".stripMargin),
 
     // Zipf rank-frequency slope per source — the corpus-health twin of
     // q109's Heaps curve: natural text runs ln(freq) ≈ −1·ln(rank)+c
@@ -852,7 +1162,7 @@ object WebQ {
     // overflow, and only the final slope division runs in double. One
     // token explode → (source, word) partials → 50-row-per-source
     // windows → source-sized rollup.
-    "q209_zipf_slope" -> ((s, dir) => {
+    Q("q209_zipf_slope", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.types.DecimalType
       val dec = DecimalType(15, 9)
@@ -881,7 +1191,34 @@ object WebQ {
               col("sx").cast(dec) * col("sx").cast(dec)).cast("double"),
             6).as("zipf_slope"))
         .orderBy("source")
-    }),
+    }, oracle =
+      """WITH c AS (
+        | SELECT source, w, count(*) AS c FROM (
+        |  SELECT source, unnest(string_split(lower(text), ' ')) AS w
+        |  FROM documents)
+        | GROUP BY source, w),
+        |r AS (
+        | SELECT source,
+        |  CAST(round(ln(rank), 9) AS DECIMAL(12,9)) AS x,
+        |  CAST(round(ln(c), 9) AS DECIMAL(12,9)) AS y
+        | FROM (
+        |  SELECT source, c, row_number() OVER (PARTITION BY source
+        |    ORDER BY c DESC, w) AS rank
+        |  FROM c)
+        | WHERE rank <= 50),
+        |g AS (
+        | SELECT source, count(*) AS n_terms,
+        |  CAST(sum(x) AS DECIMAL(15,9)) AS sx,
+        |  CAST(sum(y) AS DECIMAL(15,9)) AS sy,
+        |  CAST(sum(CAST(x * y AS DECIMAL(31,18))) AS DECIMAL(15,9)) AS sxy,
+        |  CAST(sum(CAST(x * x AS DECIMAL(31,18))) AS DECIMAL(15,9)) AS sxx
+        | FROM r GROUP BY source)
+        |SELECT source, n_terms,
+        | round(CAST(CAST(n_terms AS DECIMAL(6,0)) * sxy - sx * sy
+        |     AS DOUBLE) /
+        |   CAST(CAST(n_terms AS DECIMAL(6,0)) * sxx - sx * sx
+        |     AS DOUBLE), 6) AS zipf_slope
+        |FROM g ORDER BY source""".stripMargin),
 
     // Okapi BM25 over a two-term query: idf_t = ln((N − df_t + 0.5) /
     // (df_t + 0.5) + 1) (the Lucene-style always-positive variant),
@@ -891,10 +1228,35 @@ object WebQ {
     // decimals with a doc_id tie-break (the q95 float discipline).
     // Corpus stats (N, Σdl, df per term) are one tiny aggregate
     // broadcast back — at 100 TB the scored pass is a single scan.
-    "q206_bm25_rank" -> ((s, dir) =>
+    Q("q206_bm25_rank", (s, dir) =>
       bm25Scored(s, dir)
         .orderBy(col("bm25").desc, col("doc_id"))
-        .limit(25)),
+        .limit(25), oracle =
+      """WITH b AS (
+        | SELECT doc_id, len(string_split(lower(text), ' ')) AS dl,
+        |  len(list_filter(string_split(lower(text), ' '),
+        |    x -> x = 'scan')) AS tf_scan,
+        |  len(list_filter(string_split(lower(text), ' '),
+        |    x -> x = 'merge')) AS tf_merge
+        | FROM documents),
+        |st AS (
+        | SELECT count(*) AS n, sum(dl) AS sum_dl,
+        |  sum(CASE WHEN tf_scan > 0 THEN 1 ELSE 0 END) AS df_scan,
+        |  sum(CASE WHEN tf_merge > 0 THEN 1 ELSE 0 END) AS df_merge
+        | FROM b)
+        |SELECT doc_id,
+        | round(
+        |  (CASE WHEN tf_scan > 0 THEN
+        |    ln((st.n - st.df_scan + 0.5) / (st.df_scan + 0.5) + 1.0)
+        |    * (tf_scan * 2.2) / (tf_scan + 1.2 *
+        |       (0.25 + 0.75 * dl / (CAST(st.sum_dl AS DOUBLE) / st.n)))
+        |   ELSE 0.0 END) +
+        |  (CASE WHEN tf_merge > 0 THEN
+        |    ln((st.n - st.df_merge + 0.5) / (st.df_merge + 0.5) + 1.0)
+        |    * (tf_merge * 2.2) / (tf_merge + 1.2 *
+        |       (0.25 + 0.75 * dl / (CAST(st.sum_dl AS DOUBLE) / st.n)))
+        |   ELSE 0.0 END), 6) AS bm25
+        |FROM b, st ORDER BY bm25 DESC, doc_id LIMIT 25""".stripMargin),
 
     // Reciprocal-rank fusion (Cormack, Clarke & Büttcher, SIGIR 2009) —
     // the standard hybrid-retrieval combiner: a lexical ranking (the
@@ -907,7 +1269,7 @@ object WebQ {
     // through `histRank`, the q228 histogram-offset idiom (bucket
     // offsets from a bounded score histogram + a bucket-partitioned
     // per-row window), so every stage stays distributed at 100 TB.
-    "q212_rrf_hybrid" -> ((s, dir) => {
+    Q("q212_rrf_hybrid", (s, dir) => {
       val lex = histRank(bm25Scored(s, dir), "bm25", "doc_id", "lex_rank")
         .select("doc_id", "lex_rank")
       val e = t(s, dir, "embeddings")
@@ -925,7 +1287,51 @@ object WebQ {
         .select("doc_id", "lex_rank", "sem_rank", "rrf")
         .orderBy(desc("rrf"), asc("doc_id"))
         .limit(20)
-    }),
+    }, oracle =
+      """WITH b AS (
+        | SELECT doc_id, len(string_split(lower(text), ' ')) AS dl,
+        |  len(list_filter(string_split(lower(text), ' '),
+        |    x -> x = 'scan')) AS tf_scan,
+        |  len(list_filter(string_split(lower(text), ' '),
+        |    x -> x = 'merge')) AS tf_merge
+        | FROM documents),
+        |st AS (
+        | SELECT count(*) AS n, sum(dl) AS sum_dl,
+        |  sum(CASE WHEN tf_scan > 0 THEN 1 ELSE 0 END) AS df_scan,
+        |  sum(CASE WHEN tf_merge > 0 THEN 1 ELSE 0 END) AS df_merge
+        | FROM b),
+        |scored AS (
+        | SELECT doc_id,
+        |  round(
+        |   (CASE WHEN tf_scan > 0 THEN
+        |     ln((st.n - st.df_scan + 0.5) / (st.df_scan + 0.5) + 1.0)
+        |     * (tf_scan * 2.2) / (tf_scan + 1.2 *
+        |        (0.25 + 0.75 * dl / (CAST(st.sum_dl AS DOUBLE) / st.n)))
+        |    ELSE 0.0 END) +
+        |   (CASE WHEN tf_merge > 0 THEN
+        |     ln((st.n - st.df_merge + 0.5) / (st.df_merge + 0.5) + 1.0)
+        |     * (tf_merge * 2.2) / (tf_merge + 1.2 *
+        |        (0.25 + 0.75 * dl / (CAST(st.sum_dl AS DOUBLE) / st.n)))
+        |    ELSE 0.0 END), 6) AS bm25
+        | FROM b, st),
+        |lex AS (
+        | SELECT doc_id,
+        |  row_number() OVER (ORDER BY bm25 DESC, doc_id) AS lex_rank
+        | FROM scored),
+        |sem AS (
+        | SELECT vec_id,
+        |  row_number() OVER (ORDER BY cos_sim DESC, vec_id) AS sem_rank
+        | FROM (
+        |  SELECT e.vec_id,
+        |   round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+        |     CAST(p.qv AS DOUBLE[])), 6) AS cos_sim
+        |  FROM embeddings e,
+        |   (SELECT embedding AS qv FROM embeddings WHERE vec_id = 7) p))
+        |SELECT l.doc_id, CAST(lex_rank AS BIGINT) AS lex_rank,
+        | CAST(sem_rank AS BIGINT) AS sem_rank,
+        | (10000000 // (60 + lex_rank)) + (10000000 // (60 + sem_rank)) AS rrf
+        |FROM lex l JOIN sem s ON l.doc_id = s.vec_id
+        |ORDER BY rrf DESC, l.doc_id LIMIT 20""".stripMargin),
 
     // Per-host crawl politeness budget — the frontier scheduler's
     // planning report: requests per canonical host, serial crawl time
@@ -936,7 +1342,7 @@ object WebQ {
     // id arithmetic — the codec-gate discipline on the URL surface.
     // One scan → host-sized rollup; the frontier total is a broadcast
     // scalar.
-    "q263_host_politeness" -> ((s, dir) => {
+    Q("q263_host_politeness", (s, dir) => {
       import graft.functions.UrlCanon.urlHost
       val k = col("doc_id") % 5
       val url = when(col("doc_id") % 4 === 0,
@@ -958,7 +1364,25 @@ object WebQ {
           ldiv(col("n_requests") + 9L, lit(10L)).as("n_batches"),
           ldiv(col("n_requests") * 10000L, col("n_total")).as("share_bp"))
         .orderBy("host")
-    }),
+    }, oracle =
+      // host truth from the id arithmetic; the engine must parse it out
+      // of the dirty URL surface
+      """WITH h AS (
+        | SELECT CASE doc_id % 4
+        |  WHEN 0 THEN 'www.example' || (doc_id % 5) || '.com'
+        |  WHEN 1 THEN 'site' || (doc_id % 5) || '.org'
+        |  WHEN 2 THEN 'example' || (doc_id % 5) || '.com'
+        |  ELSE 'cdn.example' || (doc_id % 5) || '.com'
+        | END AS host
+        | FROM documents),
+        |g AS (SELECT host, count(*) AS n_requests FROM h GROUP BY host),
+        |tt AS (SELECT sum(n_requests) AS n_total FROM g)
+        |SELECT g.host, CAST(g.n_requests AS BIGINT) AS n_requests,
+        | CAST(2 * g.n_requests AS BIGINT) AS crawl_seconds,
+        | CAST((g.n_requests + 9) // 10 AS BIGINT) AS n_batches,
+        | CAST(CAST(g.n_requests AS HUGEINT) * 10000 // tt.n_total
+        |   AS BIGINT) AS share_bp
+        |FROM g, tt ORDER BY g.host""".stripMargin),
 
     // Tokenizer fertility audit — chars-per-token by (source, lang), the
     // standard tokenizer-efficiency signal (a language whose bp blows up
@@ -966,7 +1390,7 @@ object WebQ {
     // Whole query is one narrow scan folding into a (source·lang)-sized
     // rollup with map-side combine; ratios in exact integer basis
     // points via ldiv.
-    "q213_token_fertility" -> ((s, dir) =>
+    Q("q213_token_fertility", (s, dir) =>
       t(s, dir, "documents")
         .select(col("source"), col("lang"), col("n_chars"),
           size(toks(col("text"))).cast("long").as("n_tok"))
@@ -976,7 +1400,15 @@ object WebQ {
           sum(col("n_chars")).as("sum_chars"))
         .withColumn("chars_per_token_bp",
           ldiv(col("sum_chars") * lit(10000L), col("n_tokens")))
-        .orderBy("source", "lang")),
+        .orderBy("source", "lang"), oracle =
+      """SELECT source, lang, count(*) AS n_docs,
+        | CAST(sum(len(string_split(lower(text), ' '))) AS BIGINT)
+        |   AS n_tokens,
+        | CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+        | CAST(sum(n_chars) AS BIGINT) * 10000
+        |  // CAST(sum(len(string_split(lower(text), ' '))) AS BIGINT)
+        |   AS chars_per_token_bp
+        |FROM documents GROUP BY source, lang ORDER BY source, lang""".stripMargin),
 
     // Context-window truncation loss — for a C=32-token window, the
     // share of tokens a naive truncating loader would DROP, per source
@@ -984,7 +1416,7 @@ object WebQ {
     // the bucket boundary, this measures loss above it). All integral:
     // per-doc excess max(0, n_tok−C) sums exactly, share in bp via
     // ldiv. One scan, source-sized rollup.
-    "q214_truncation_loss" -> ((s, dir) =>
+    Q("q214_truncation_loss", (s, dir) =>
       t(s, dir, "documents")
         .select(col("source"), size(toks(col("text"))).cast("long").as("n_tok"))
         .groupBy("source")
@@ -995,7 +1427,19 @@ object WebQ {
           sum(when(col("n_tok") > 32, 1L).otherwise(0L)).as("n_truncated"))
         .withColumn("lost_bp",
           ldiv(col("lost_tokens") * lit(10000L), col("n_tokens")))
-        .orderBy("source")),
+        .orderBy("source"), oracle =
+      """WITH d AS (
+        | SELECT source, len(string_split(lower(text), ' ')) AS n_tok
+        | FROM documents)
+        |SELECT source, count(*) AS n_docs,
+        | CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+        | CAST(sum(CASE WHEN n_tok > 32 THEN n_tok - 32 ELSE 0 END)
+        |   AS BIGINT) AS lost_tokens,
+        | CAST(sum(CASE WHEN n_tok > 32 THEN 1 ELSE 0 END) AS BIGINT)
+        |   AS n_truncated,
+        | CAST(sum(CASE WHEN n_tok > 32 THEN n_tok - 32 ELSE 0 END)
+        |   AS BIGINT) * 10000 // CAST(sum(n_tok) AS BIGINT) AS lost_bp
+        |FROM d GROUP BY source ORDER BY source""".stripMargin),
 
     // Content-defined chunking dedup profile (LBFS/FastCDC family) —
     // chunk boundaries follow content, so shared boilerplate surfaces
@@ -1006,7 +1450,7 @@ object WebQ {
     // the oracle replays the identical md5-window cut set positionally.
     // The only exchange is the (source, chunk) distinct-count — the
     // standard dedup shuffle, map-side combined.
-    "q215_cdc_chunks" -> ((s, dir) => {
+    Q("q215_cdc_chunks", (s, dir) => {
       import graft.functions.CdcChunksExpr.cdcChunks
       t(s, dir, "documents")
         .filter(length(col("text")) > 0) // empty doc = no chunks, both sides
@@ -1020,10 +1464,57 @@ object WebQ {
             col("n_chunks")).as("dup_bp"),
           ldiv(col("sum_len"), col("n_chunks")).as("mean_chunk_len"))
         .orderBy("source")
-    }),
+    }, oracle =
+      """WITH d AS (
+        | SELECT doc_id, source, text, length(text) AS n FROM documents
+        | WHERE length(text) > 0),
+        |pos AS (
+        | SELECT doc_id, source, text, n, unnest(range(8, n + 1)) AS i
+        | FROM d),
+        |cuts AS (
+        | SELECT doc_id, source, text, i FROM pos
+        | WHERE substr(md5(substr(text, i - 7, 8)), 32, 1) = '0'
+        | UNION
+        | SELECT doc_id, source, text, n AS i FROM d),
+        |ch AS (
+        | SELECT doc_id, source,
+        |  substr(text,
+        |   coalesce(lag(i) OVER (PARTITION BY doc_id ORDER BY i), 0) + 1,
+        |   i - coalesce(lag(i) OVER (PARTITION BY doc_id ORDER BY i), 0))
+        |   AS chunk
+        | FROM cuts)
+        |SELECT source, count(*) AS n_chunks,
+        | count(DISTINCT chunk) AS n_distinct,
+        | (count(*) - count(DISTINCT chunk)) * 10000 // count(*) AS dup_bp,
+        | CAST(sum(length(chunk)) AS BIGINT) // count(*) AS mean_chunk_len
+        |FROM ch GROUP BY source ORDER BY source""".stripMargin),
 
     // see contaminationMatrix below for semantics + scale rationale
-    "q219_source_contamination" -> ((s, dir) => contaminationMatrix(s, dir)),
+    Q("q219_source_contamination", (s, dir) => contaminationMatrix(s, dir), oracle =
+      """WITH t AS (
+        | SELECT source, string_split(lower(text), ' ') AS toks
+        | FROM documents),
+        |g AS (
+        | SELECT DISTINCT source, array_to_string(toks[i:i+7], ' ') AS ng
+        | FROM t, UNNEST(range(1, len(toks) - 6)) AS u(i)
+        | WHERE len(toks) >= 8),
+        |sz AS (SELECT source, count(*) AS n_spans FROM g GROUP BY source),
+        |sh AS (
+        | SELECT a.source AS src_a, b.source AS src_b,
+        |  count(*) AS shared_spans
+        | FROM g a JOIN g b ON a.ng = b.ng AND a.source < b.source
+        | GROUP BY a.source, b.source)
+        |SELECT sh.src_a, sh.src_b,
+        | CAST(sh.shared_spans AS BIGINT) AS shared_spans,
+        | CAST(sa.n_spans AS BIGINT) AS n_a,
+        | CAST(sb.n_spans AS BIGINT) AS n_b,
+        | CAST(sh.shared_spans AS BIGINT) * 10000
+        |  // CAST(least(sa.n_spans, sb.n_spans) AS BIGINT)
+        |  AS containment_bp
+        |FROM sh
+        | JOIN sz sa ON sa.source = sh.src_a
+        | JOIN sz sb ON sb.source = sh.src_b
+        |ORDER BY containment_bp DESC, src_a, src_b LIMIT 50""".stripMargin),
   )
 
   /** Cross-source contamination matrix — which SOURCES share verbatim
@@ -1127,537 +1618,4 @@ object WebQ {
           part(col("tf_merge"), idf(col("df_merge"), col("n")),
             col("dl"), col("avgdl")), 6).as("bm25"))
   }
-
-  val oracles: Map[String, String] = Map(
-    // the RFC truth table from id arithmetic: under the graftbot
-    // group (id%3 != 0) paths 2/4/7 are denied by Disallow /private*,
-    // path 3 is denied unless the even-id Allow /private/pub$
-    // override out-lengths it; under the * group (id%3 = 0) only
-    // path 5 (/tmp/x) is denied
-    "q300_robots_admission" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0),
-        |v AS (
-        | SELECT doc_id, len,
-        |  list_transform(range(1, len + 1), i ->
-        |   CASE WHEN doc_id % 3 = 0 THEN
-        |     CASE WHEN ord(substr(text, CAST(i AS INTEGER), 1)) % 8 = 5
-        |      THEN 1 ELSE 0 END
-        |   ELSE
-        |     CASE WHEN ord(substr(text, CAST(i AS INTEGER), 1)) % 8
-        |            IN (2, 4, 7) THEN 1
-        |      WHEN ord(substr(text, CAST(i AS INTEGER), 1)) % 8 = 3
-        |           AND doc_id % 2 = 1 THEN 1
-        |      ELSE 0 END
-        |   END) AS dny
-        | FROM d)
-        |SELECT doc_id,
-        | CAST(len AS BIGINT) AS n_urls,
-        | CAST(len - list_sum(dny) AS BIGINT) AS n_allowed,
-        | CAST(list_sum(dny) AS BIGINT) AS n_denied,
-        | CAST(list_sum(list_transform(range(1, len + 1), i ->
-        |   i * dny[CAST(i AS INTEGER)])) AS BIGINT) AS denied_checksum
-        |FROM v ORDER BY doc_id""".stripMargin,
-
-    // q308's rewrite with the delay replayed from the planted robots
-    // truth: no-delay hosts (…%7=0) and *-group-only hosts (…%5=0)
-    // fall back to 1 s; everyone else gets their graftbot-group
-    // host%4+1 (the 9 s `*` decoy must never win)
-    "q317_crawl_schedule_robots" ->
-      """WITH e AS (
-        | SELECT user_id AS host, epoch_us(ts) AS tus, event_id,
-        |  CASE WHEN user_id % 7 = 0 OR user_id % 5 = 0 THEN 1000000
-        |   ELSE (user_id % 4 + 1) * 1000000 END AS d
-        | FROM events),
-        |s AS (
-        | SELECT host, tus, d,
-        |  row_number() OVER (PARTITION BY host
-        |    ORDER BY tus, event_id) - 1 AS idx
-        | FROM e),
-        |f AS (
-        | SELECT host, tus, d,
-        |  d * idx + max(tus - d * idx) OVER (PARTITION BY host
-        |    ORDER BY idx ROWS BETWEEN UNBOUNDED PRECEDING AND
-        |    CURRENT ROW) AS ft
-        | FROM s)
-        |SELECT host, CAST(max(d) AS BIGINT) AS delay_us,
-        | CAST(count(*) AS BIGINT) AS n_urls,
-        | CAST(max(ft) - min(tus) AS BIGINT) AS makespan_us,
-        | CAST(sum(ft - tus) AS BIGINT) AS total_wait_us,
-        | CAST(sum(ft % 1000000007) AS BIGINT) AS sched_checksum
-        |FROM f GROUP BY host ORDER BY host""".stripMargin,
-
-    // the same prefix-max rewrite replayed in SQL; integer micros so
-    // both engines agree bit-for-bit
-    "q308_crawl_schedule" ->
-      """WITH e AS (
-        | SELECT user_id AS host, epoch_us(ts) AS tus, event_id,
-        |  (user_id % 4 + 1) * 1000000 AS d
-        | FROM events),
-        |s AS (
-        | SELECT host, tus, d,
-        |  row_number() OVER (PARTITION BY host
-        |    ORDER BY tus, event_id) - 1 AS idx
-        | FROM e),
-        |f AS (
-        | SELECT host, tus,
-        |  d * idx + max(tus - d * idx) OVER (PARTITION BY host
-        |    ORDER BY idx ROWS BETWEEN UNBOUNDED PRECEDING AND
-        |    CURRENT ROW) AS ft
-        | FROM s)
-        |SELECT host, CAST(count(*) AS BIGINT) AS n_urls,
-        | CAST(min(tus) AS BIGINT) AS first_seen_us,
-        | CAST(max(ft) - min(tus) AS BIGINT) AS makespan_us,
-        | CAST(sum(ft - tus) AS BIGINT) AS total_wait_us,
-        | CAST(sum(ft % 1000000007) AS BIGINT) AS sched_checksum
-        |FROM f GROUP BY host ORDER BY host""".stripMargin,
-
-    // same admission truth table as q306 (graftbot: paths 2/4/7
-    // denied, 3 denied on odd ids); distinct admitted paths count
-    // path CLASSES (b%8), priority mass sums b%10 over admitted
-    "q315_sitemap_seeds" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0),
-        |pg AS (
-        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
-        | FROM d),
-        |a AS (
-        | SELECT doc_id, len, i,
-        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
-        | FROM pg),
-        |f AS (
-        | SELECT doc_id, len, i, b,
-        |  CASE WHEN NOT (b % 8 IN (2, 4, 7) OR
-        |    (doc_id % 2 = 1 AND b % 8 = 3)) THEN 1 ELSE 0 END AS adm
-        | FROM a)
-        |SELECT doc_id,
-        | CAST(max(len) AS BIGINT) AS n_urls,
-        | CAST(sum(adm) AS BIGINT) AS n_admitted,
-        | CAST(count(DISTINCT CASE WHEN adm = 1 THEN b % 8 END)
-        |  AS BIGINT) AS n_distinct_paths,
-        | CAST(sum(CASE WHEN adm = 1 THEN b % 10 ELSE 0 END) AS BIGINT)
-        |  AS pri_deci_sum
-        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // q315's admission truth over the index-discovered corpus: the
-    // round-robin shard split never changes the totals, so only the
-    // fetch count is new — 1 root + (nested mid on id%5=0) + 1+id%3
-    // gzipped children
-    "q318_sitemap_index" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0),
-        |pg AS (
-        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
-        | FROM d),
-        |a AS (
-        | SELECT doc_id, len, i,
-        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
-        | FROM pg),
-        |f AS (
-        | SELECT doc_id, len, i, b,
-        |  CASE WHEN NOT (b % 8 IN (2, 4, 7) OR
-        |    (doc_id % 2 = 1 AND b % 8 = 3)) THEN 1 ELSE 0 END AS adm
-        | FROM a)
-        |SELECT doc_id,
-        | CAST(1 + (CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END)
-        |   + 1 + doc_id % 3 AS BIGINT) AS n_fetched,
-        | CAST(max(len) AS BIGINT) AS n_urls,
-        | CAST(sum(adm) AS BIGINT) AS n_admitted,
-        | CAST(sum(CASE WHEN adm = 1 THEN b % 10 ELSE 0 END) AS BIGINT)
-        |  AS pri_deci_sum
-        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // index-gate truth from arithmetic: admitted as q315; noindex =
-    // b%11=0, nofollow = b%11=1; canonical class = (b//8)%8 (exact
-    // integer division both engines)
-    "q323_meta_robots_canonical" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0),
-        |pg AS (
-        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
-        | FROM d),
-        |a AS (
-        | SELECT doc_id, len, i,
-        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
-        | FROM pg),
-        |f AS (
-        | SELECT doc_id, len, i, b, (b // 8) % 8 AS c,
-        |  CASE WHEN NOT (b % 8 IN (2, 4, 7) OR
-        |    (doc_id % 2 = 1 AND b % 8 = 3)) THEN 1 ELSE 0 END AS adm
-        | FROM a)
-        |SELECT doc_id,
-        | CAST(max(len) AS BIGINT) AS n_pages,
-        | CAST(sum(adm) AS BIGINT) AS n_admitted,
-        | CAST(sum(CASE WHEN adm = 1 AND b % 11 = 0 THEN 1 ELSE 0 END)
-        |   AS BIGINT) AS n_noindexed,
-        | CAST(sum(CASE WHEN adm = 1 AND b % 11 = 1 THEN 1 ELSE 0 END)
-        |   AS BIGINT) AS n_nofollow,
-        | CAST(sum(CASE WHEN adm = 1 AND b % 11 != 0 THEN 1 ELSE 0 END)
-        |   AS BIGINT) AS n_indexed,
-        | CAST(count(DISTINCT CASE WHEN adm = 1 AND b % 11 != 0
-        |   THEN c END) AS BIGINT) AS n_canonical_targets,
-        | CAST(sum(CASE WHEN adm = 1 AND b % 11 != 0 THEN i * c
-        |   ELSE 0 END) AS BIGINT) AS canon_chk
-        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // dedup ledger from arithmetic: body length = b%16+4 derives from
-    // the byte value alone, so occurrence rank per (doc, byte) splits
-    // response (rn=1) from revisit (rn>1); the checksum weights each
-    // revisit by its 1-based record position
-    "q322_warc_revisit" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0),
-        |pg AS (
-        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
-        | FROM d),
-        |a AS (
-        | SELECT doc_id, len, i,
-        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
-        | FROM pg),
-        |r AS (
-        | SELECT doc_id, i, b, b % 16 + 4 AS blen,
-        |  row_number() OVER (PARTITION BY doc_id, b ORDER BY i) AS rn
-        | FROM a)
-        |SELECT doc_id,
-        | CAST(count(CASE WHEN rn = 1 THEN 1 END) AS BIGINT)
-        |   AS n_responses,
-        | CAST(count(CASE WHEN rn > 1 THEN 1 END) AS BIGINT)
-        |   AS n_revisits,
-        | CAST(sum(CASE WHEN rn = 1 THEN blen ELSE 0 END) AS BIGINT)
-        |   AS stored_bytes,
-        | CAST(sum(CASE WHEN rn > 1 THEN blen ELSE 0 END) AS BIGINT)
-        |   AS saved_bytes,
-        | CAST(sum(CASE WHEN rn > 1 THEN i * blen ELSE 0 END) AS BIGINT)
-        |   AS revisit_chk
-        |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // freshness truth from arithmetic: lastmod day = b%28+1, cutoff
-    // day = doc_id%28+1, recrawl = admitted AND day > cutoff (strict)
-    "q321_recrawl_delta" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0),
-        |pg AS (
-        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
-        | FROM d),
-        |a AS (
-        | SELECT doc_id, len, i,
-        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
-        | FROM pg),
-        |f AS (
-        | SELECT doc_id, len, b % 28 + 1 AS day,
-        |  CASE WHEN NOT (b % 8 IN (2, 4, 7) OR
-        |    (doc_id % 2 = 1 AND b % 8 = 3)) THEN 1 ELSE 0 END AS adm
-        | FROM a)
-        |SELECT doc_id,
-        | CAST(doc_id % 28 + 1 AS BIGINT) AS cutoff_day,
-        | CAST(max(len) AS BIGINT) AS n_urls,
-        | CAST(sum(adm) AS BIGINT) AS n_admitted,
-        | CAST(sum(CASE WHEN adm = 1 AND day > doc_id % 28 + 1
-        |   THEN 1 ELSE 0 END) AS BIGINT) AS n_recrawl,
-        | CAST(sum(CASE WHEN adm = 1 AND day > doc_id % 28 + 1
-        |   THEN day ELSE 0 END) AS BIGINT) AS recrawl_day_sum
-        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // the q315 admission truth reached FROM the robots file's own
-    // Sitemap: directives; only the directive/fetch counts are new —
-    // even ids: one directive, an index + 1+id%3 children; odd ids:
-    // two directives, one gz urlset each
-    "q320_robots_sitemap_discovery" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0),
-        |pg AS (
-        | SELECT doc_id, len, unnest(range(1, len + 1)) AS i, text
-        | FROM d),
-        |a AS (
-        | SELECT doc_id, len, i,
-        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
-        | FROM pg),
-        |f AS (
-        | SELECT doc_id, len, i, b,
-        |  CASE WHEN NOT (b % 8 IN (2, 4, 7) OR
-        |    (doc_id % 2 = 1 AND b % 8 = 3)) THEN 1 ELSE 0 END AS adm
-        | FROM a)
-        |SELECT doc_id,
-        | CAST(1 + doc_id % 2 AS BIGINT) AS n_directives,
-        | CAST(CASE WHEN doc_id % 2 = 0 THEN 2 + doc_id % 3
-        |   ELSE 2 END AS BIGINT) AS n_fetched,
-        | CAST(max(len) AS BIGINT) AS n_urls,
-        | CAST(sum(adm) AS BIGINT) AS n_admitted,
-        | CAST(sum(CASE WHEN adm = 1 THEN b % 10 ELSE 0 END) AS BIGINT)
-        |  AS pri_deci_sum
-        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // admission truth from arithmetic: the fixed graftbot crawl
-    // denies paths 2/4/7 (Disallow /private*) and path 3 on odd ids
-    // (no Allow /private/pub$ override); a page is fetched when it is
-    // 200 (b%10 != 0), HTML (b%3 != 0), and robots-allowed; titles
-    // concatenate 'Page id-k;' over admitted pages in record order
-    "q306_crawl_spine" ->
-      """WITH d AS (
-        | SELECT doc_id, text, length(text) AS len
-        | FROM documents WHERE length(text) > 0),
-        |pg AS (
-        | SELECT doc_id, len, text,
-        |  unnest(range(1, len + 1)) AS i
-        | FROM d),
-        |a AS (
-        | SELECT doc_id, len, i,
-        |  ord(substr(text, CAST(i AS INTEGER), 1)) AS b
-        | FROM pg),
-        |f AS (
-        | SELECT doc_id, len, i, b,
-        |  CASE WHEN b % 3 != 0 THEN 1 ELSE 0 END AS html,
-        |  CASE WHEN b % 10 != 0 AND b % 3 != 0 AND
-        |    NOT (b % 8 IN (2, 4, 7) OR (doc_id % 2 = 1 AND b % 8 = 3))
-        |   THEN 1 ELSE 0 END AS adm
-        | FROM a)
-        |SELECT doc_id,
-        | CAST(max(len) + 2 AS BIGINT) AS n_records,
-        | CAST(max(len) AS BIGINT) AS n_pages,
-        | CAST(sum(html) AS BIGINT) AS n_html,
-        | CAST(sum(adm) AS BIGINT) AS n_admitted,
-        | CAST(sum(CASE WHEN adm = 1 THEN i ELSE 0 END) AS BIGINT)
-        |  AS admitted_checksum,
-        | md5(string_agg(CASE WHEN adm = 1 THEN
-        |   'Page ' || CAST(doc_id AS VARCHAR) || '-' ||
-        |   CAST(i - 1 AS VARCHAR) || ';' ELSE '' END, ''
-        |   ORDER BY i)) AS titles_md5
-        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q204_url_canonical" ->
-      """SELECT doc_id,
-        | CASE doc_id % 4
-        |  WHEN 0 THEN 'HTTPS://WWW.Example' || (doc_id % 5) ||
-        |   '.COM:443/Events//' || doc_id || '/./x?utm_source=feed&b=2&a=1#sec'
-        |  WHEN 1 THEN 'http://Site' || (doc_id % 5) || '.org:80/a//b/./c'
-        |  WHEN 2 THEN 'example' || (doc_id % 5) || '.com/p?id=' || doc_id ||
-        |   '&gclid=zz&ref=home'
-        |  ELSE 'https://cdn.example' || (doc_id % 5) || '.com/img#frag'
-        | END AS url,
-        | CASE doc_id % 4
-        |  WHEN 0 THEN 'https://www.example' || (doc_id % 5) ||
-        |   '.com/Events/' || doc_id || '/x?a=1&b=2'
-        |  WHEN 1 THEN 'http://site' || (doc_id % 5) || '.org/a/b/c'
-        |  WHEN 2 THEN 'http://example' || (doc_id % 5) || '.com/p?id=' || doc_id
-        |  ELSE 'https://cdn.example' || (doc_id % 5) || '.com/img'
-        | END AS canon,
-        | CASE doc_id % 4
-        |  WHEN 0 THEN 'www.example' || (doc_id % 5) || '.com'
-        |  WHEN 1 THEN 'site' || (doc_id % 5) || '.org'
-        |  WHEN 2 THEN 'example' || (doc_id % 5) || '.com'
-        |  ELSE 'cdn.example' || (doc_id % 5) || '.com'
-        | END AS host
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q205_url_dedup" ->
-      """SELECT 'http://shop.example.com/item/' || (doc_id // 2) ||
-        |   '?color=1&size=2' AS canon,
-        | count(*) AS n_dup, min(doc_id) AS first_doc,
-        | CAST(sum(doc_id) AS BIGINT) AS id_checksum
-        |FROM documents GROUP BY doc_id // 2 ORDER BY first_doc""".stripMargin,
-
-    "q209_zipf_slope" ->
-      """WITH c AS (
-        | SELECT source, w, count(*) AS c FROM (
-        |  SELECT source, unnest(string_split(lower(text), ' ')) AS w
-        |  FROM documents)
-        | GROUP BY source, w),
-        |r AS (
-        | SELECT source,
-        |  CAST(round(ln(rank), 9) AS DECIMAL(12,9)) AS x,
-        |  CAST(round(ln(c), 9) AS DECIMAL(12,9)) AS y
-        | FROM (
-        |  SELECT source, c, row_number() OVER (PARTITION BY source
-        |    ORDER BY c DESC, w) AS rank
-        |  FROM c)
-        | WHERE rank <= 50),
-        |g AS (
-        | SELECT source, count(*) AS n_terms,
-        |  CAST(sum(x) AS DECIMAL(15,9)) AS sx,
-        |  CAST(sum(y) AS DECIMAL(15,9)) AS sy,
-        |  CAST(sum(CAST(x * y AS DECIMAL(31,18))) AS DECIMAL(15,9)) AS sxy,
-        |  CAST(sum(CAST(x * x AS DECIMAL(31,18))) AS DECIMAL(15,9)) AS sxx
-        | FROM r GROUP BY source)
-        |SELECT source, n_terms,
-        | round(CAST(CAST(n_terms AS DECIMAL(6,0)) * sxy - sx * sy
-        |     AS DOUBLE) /
-        |   CAST(CAST(n_terms AS DECIMAL(6,0)) * sxx - sx * sx
-        |     AS DOUBLE), 6) AS zipf_slope
-        |FROM g ORDER BY source""".stripMargin,
-
-    "q206_bm25_rank" ->
-      """WITH b AS (
-        | SELECT doc_id, len(string_split(lower(text), ' ')) AS dl,
-        |  len(list_filter(string_split(lower(text), ' '),
-        |    x -> x = 'scan')) AS tf_scan,
-        |  len(list_filter(string_split(lower(text), ' '),
-        |    x -> x = 'merge')) AS tf_merge
-        | FROM documents),
-        |st AS (
-        | SELECT count(*) AS n, sum(dl) AS sum_dl,
-        |  sum(CASE WHEN tf_scan > 0 THEN 1 ELSE 0 END) AS df_scan,
-        |  sum(CASE WHEN tf_merge > 0 THEN 1 ELSE 0 END) AS df_merge
-        | FROM b)
-        |SELECT doc_id,
-        | round(
-        |  (CASE WHEN tf_scan > 0 THEN
-        |    ln((st.n - st.df_scan + 0.5) / (st.df_scan + 0.5) + 1.0)
-        |    * (tf_scan * 2.2) / (tf_scan + 1.2 *
-        |       (0.25 + 0.75 * dl / (CAST(st.sum_dl AS DOUBLE) / st.n)))
-        |   ELSE 0.0 END) +
-        |  (CASE WHEN tf_merge > 0 THEN
-        |    ln((st.n - st.df_merge + 0.5) / (st.df_merge + 0.5) + 1.0)
-        |    * (tf_merge * 2.2) / (tf_merge + 1.2 *
-        |       (0.25 + 0.75 * dl / (CAST(st.sum_dl AS DOUBLE) / st.n)))
-        |   ELSE 0.0 END), 6) AS bm25
-        |FROM b, st ORDER BY bm25 DESC, doc_id LIMIT 25""".stripMargin,
-
-    "q212_rrf_hybrid" ->
-      """WITH b AS (
-        | SELECT doc_id, len(string_split(lower(text), ' ')) AS dl,
-        |  len(list_filter(string_split(lower(text), ' '),
-        |    x -> x = 'scan')) AS tf_scan,
-        |  len(list_filter(string_split(lower(text), ' '),
-        |    x -> x = 'merge')) AS tf_merge
-        | FROM documents),
-        |st AS (
-        | SELECT count(*) AS n, sum(dl) AS sum_dl,
-        |  sum(CASE WHEN tf_scan > 0 THEN 1 ELSE 0 END) AS df_scan,
-        |  sum(CASE WHEN tf_merge > 0 THEN 1 ELSE 0 END) AS df_merge
-        | FROM b),
-        |scored AS (
-        | SELECT doc_id,
-        |  round(
-        |   (CASE WHEN tf_scan > 0 THEN
-        |     ln((st.n - st.df_scan + 0.5) / (st.df_scan + 0.5) + 1.0)
-        |     * (tf_scan * 2.2) / (tf_scan + 1.2 *
-        |        (0.25 + 0.75 * dl / (CAST(st.sum_dl AS DOUBLE) / st.n)))
-        |    ELSE 0.0 END) +
-        |   (CASE WHEN tf_merge > 0 THEN
-        |     ln((st.n - st.df_merge + 0.5) / (st.df_merge + 0.5) + 1.0)
-        |     * (tf_merge * 2.2) / (tf_merge + 1.2 *
-        |        (0.25 + 0.75 * dl / (CAST(st.sum_dl AS DOUBLE) / st.n)))
-        |    ELSE 0.0 END), 6) AS bm25
-        | FROM b, st),
-        |lex AS (
-        | SELECT doc_id,
-        |  row_number() OVER (ORDER BY bm25 DESC, doc_id) AS lex_rank
-        | FROM scored),
-        |sem AS (
-        | SELECT vec_id,
-        |  row_number() OVER (ORDER BY cos_sim DESC, vec_id) AS sem_rank
-        | FROM (
-        |  SELECT e.vec_id,
-        |   round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |     CAST(p.qv AS DOUBLE[])), 6) AS cos_sim
-        |  FROM embeddings e,
-        |   (SELECT embedding AS qv FROM embeddings WHERE vec_id = 7) p))
-        |SELECT l.doc_id, CAST(lex_rank AS BIGINT) AS lex_rank,
-        | CAST(sem_rank AS BIGINT) AS sem_rank,
-        | (10000000 // (60 + lex_rank)) + (10000000 // (60 + sem_rank)) AS rrf
-        |FROM lex l JOIN sem s ON l.doc_id = s.vec_id
-        |ORDER BY rrf DESC, l.doc_id LIMIT 20""".stripMargin,
-
-    "q213_token_fertility" ->
-      """SELECT source, lang, count(*) AS n_docs,
-        | CAST(sum(len(string_split(lower(text), ' '))) AS BIGINT)
-        |   AS n_tokens,
-        | CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        | CAST(sum(n_chars) AS BIGINT) * 10000
-        |  // CAST(sum(len(string_split(lower(text), ' '))) AS BIGINT)
-        |   AS chars_per_token_bp
-        |FROM documents GROUP BY source, lang ORDER BY source, lang""".stripMargin,
-
-    "q214_truncation_loss" ->
-      """WITH d AS (
-        | SELECT source, len(string_split(lower(text), ' ')) AS n_tok
-        | FROM documents)
-        |SELECT source, count(*) AS n_docs,
-        | CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-        | CAST(sum(CASE WHEN n_tok > 32 THEN n_tok - 32 ELSE 0 END)
-        |   AS BIGINT) AS lost_tokens,
-        | CAST(sum(CASE WHEN n_tok > 32 THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS n_truncated,
-        | CAST(sum(CASE WHEN n_tok > 32 THEN n_tok - 32 ELSE 0 END)
-        |   AS BIGINT) * 10000 // CAST(sum(n_tok) AS BIGINT) AS lost_bp
-        |FROM d GROUP BY source ORDER BY source""".stripMargin,
-
-    "q215_cdc_chunks" ->
-      """WITH d AS (
-        | SELECT doc_id, source, text, length(text) AS n FROM documents
-        | WHERE length(text) > 0),
-        |pos AS (
-        | SELECT doc_id, source, text, n, unnest(range(8, n + 1)) AS i
-        | FROM d),
-        |cuts AS (
-        | SELECT doc_id, source, text, i FROM pos
-        | WHERE substr(md5(substr(text, i - 7, 8)), 32, 1) = '0'
-        | UNION
-        | SELECT doc_id, source, text, n AS i FROM d),
-        |ch AS (
-        | SELECT doc_id, source,
-        |  substr(text,
-        |   coalesce(lag(i) OVER (PARTITION BY doc_id ORDER BY i), 0) + 1,
-        |   i - coalesce(lag(i) OVER (PARTITION BY doc_id ORDER BY i), 0))
-        |   AS chunk
-        | FROM cuts)
-        |SELECT source, count(*) AS n_chunks,
-        | count(DISTINCT chunk) AS n_distinct,
-        | (count(*) - count(DISTINCT chunk)) * 10000 // count(*) AS dup_bp,
-        | CAST(sum(length(chunk)) AS BIGINT) // count(*) AS mean_chunk_len
-        |FROM ch GROUP BY source ORDER BY source""".stripMargin,
-
-    "q219_source_contamination" ->
-      """WITH t AS (
-        | SELECT source, string_split(lower(text), ' ') AS toks
-        | FROM documents),
-        |g AS (
-        | SELECT DISTINCT source, array_to_string(toks[i:i+7], ' ') AS ng
-        | FROM t, UNNEST(range(1, len(toks) - 6)) AS u(i)
-        | WHERE len(toks) >= 8),
-        |sz AS (SELECT source, count(*) AS n_spans FROM g GROUP BY source),
-        |sh AS (
-        | SELECT a.source AS src_a, b.source AS src_b,
-        |  count(*) AS shared_spans
-        | FROM g a JOIN g b ON a.ng = b.ng AND a.source < b.source
-        | GROUP BY a.source, b.source)
-        |SELECT sh.src_a, sh.src_b,
-        | CAST(sh.shared_spans AS BIGINT) AS shared_spans,
-        | CAST(sa.n_spans AS BIGINT) AS n_a,
-        | CAST(sb.n_spans AS BIGINT) AS n_b,
-        | CAST(sh.shared_spans AS BIGINT) * 10000
-        |  // CAST(least(sa.n_spans, sb.n_spans) AS BIGINT)
-        |  AS containment_bp
-        |FROM sh
-        | JOIN sz sa ON sa.source = sh.src_a
-        | JOIN sz sb ON sb.source = sh.src_b
-        |ORDER BY containment_bp DESC, src_a, src_b LIMIT 50""".stripMargin,
-
-    // host truth from the id arithmetic; the engine must parse it out
-    // of the dirty URL surface
-    "q263_host_politeness" ->
-      """WITH h AS (
-        | SELECT CASE doc_id % 4
-        |  WHEN 0 THEN 'www.example' || (doc_id % 5) || '.com'
-        |  WHEN 1 THEN 'site' || (doc_id % 5) || '.org'
-        |  WHEN 2 THEN 'example' || (doc_id % 5) || '.com'
-        |  ELSE 'cdn.example' || (doc_id % 5) || '.com'
-        | END AS host
-        | FROM documents),
-        |g AS (SELECT host, count(*) AS n_requests FROM h GROUP BY host),
-        |tt AS (SELECT sum(n_requests) AS n_total FROM g)
-        |SELECT g.host, CAST(g.n_requests AS BIGINT) AS n_requests,
-        | CAST(2 * g.n_requests AS BIGINT) AS crawl_seconds,
-        | CAST((g.n_requests + 9) // 10 AS BIGINT) AS n_batches,
-        | CAST(CAST(g.n_requests AS HUGEINT) * 10000 // tt.n_total
-        |   AS BIGINT) AS share_bp
-        |FROM g, tt ORDER BY g.host""".stripMargin,
-  )
 }

@@ -69,6 +69,10 @@ class AviCodecSpec extends AnyFunSuite {
       i += 1
     }
     assertThrows[IllegalArgumentException](AviCodec.decodeDib24(comp))
+    // cut inside the first chunk's tag: the same refusal as MJPG/census
+    val cut = intercept[IllegalArgumentException](
+      AviCodec.decodeDib24(ok.take(14)))
+    assert(cut.getMessage.startsWith("truncated AVI"))
   }
 
   // --------------------------------------------------------------- MJPG

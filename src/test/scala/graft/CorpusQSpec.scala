@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.ops.DedupOps
-import graft.queries.CorpusQ
 
 /** Invariants of the round-4 corpus operators that the DuckDB oracle
   * can't express: containmentPairs vs a brute-force cross join on
@@ -49,7 +48,7 @@ class CorpusQSpec extends SparkSpec {
   }
 
   test("pagerank conserves mass on the dangling-free graph") {
-    val out = CorpusQ.queries("q100_pagerank")(spark, sf).collect()
+    val out = SparkEntry.queries("q100_pagerank")(spark, sf).collect()
     val n = out.length
     // pr_scaled = rank·n, so Σ pr_scaled should be n (damping keeps the
     // total at 1 when no node dangles — the graph is symmetrized)
@@ -59,7 +58,7 @@ class CorpusQSpec extends SparkSpec {
   }
 
   test("gopher keep flag agrees with its published signals") {
-    val rows = CorpusQ.queries("q96_gopher_quality")(spark, sf).collect()
+    val rows = SparkEntry.queries("q96_gopher_quality")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val expect = r.getLong(1) >= 30 && r.getLong(1) <= 90 &&
@@ -70,7 +69,7 @@ class CorpusQSpec extends SparkSpec {
   }
 
   test("every decontamination hit truly shares an 8-gram with the benchmark") {
-    val hits = CorpusQ.queries("q97_decontaminate")(spark, sf).collect()
+    val hits = SparkEntry.queries("q97_decontaminate")(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // brute-force ground truth on the small SF
     val docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -92,7 +91,7 @@ class CorpusQSpec extends SparkSpec {
   }
 
   test("multimodal checksums agree with direct byte math on a sample") {
-    val out = CorpusQ.queries("q105_multimodal_pipeline")(spark, sf)
+    val out = SparkEntry.queries("q105_multimodal_pipeline")(spark, sf)
       .limit(10).collect()
     val texts = spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id", "text").collect()

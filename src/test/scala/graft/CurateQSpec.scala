@@ -1,6 +1,5 @@
 package graft
 
-import graft.queries.{CurateQ, TextQ}
 import org.apache.spark.sql.functions._
 
 /** Round-5 curation operators: brute-force value checks on real docs,
@@ -16,7 +15,7 @@ class CurateQSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
 
   test("q131: duplicate-bigram basis points match brute force") {
-    val out = CurateQ.queries("q131_dup_bigram")(spark, sf).collect()
+    val out = SparkEntry.queries("q131_dup_bigram")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       // limit -1 mirrors Spark's split (keeps trailing empties)
@@ -29,7 +28,7 @@ class CurateQSpec extends SparkSpec {
   }
 
   test("q134: per-user median gap matches brute force") {
-    val out = CurateQ.queries("q134_gap_median")(spark, sf)
+    val out = SparkEntry.queries("q134_gap_median")(spark, sf)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val events = Tables.t(spark, sf, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
@@ -46,7 +45,7 @@ class CurateQSpec extends SparkSpec {
   }
 
   test("q136: window energies recompute from the raw bytes") {
-    val out = CurateQ.queries("q136_audio_energy")(spark, sf).collect()
+    val out = SparkEntry.queries("q136_audio_energy")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val bytes = docs(r.getLong(0)).getBytes("UTF-8")
@@ -74,7 +73,7 @@ class CurateQSpec extends SparkSpec {
       }
       s.trim.split(" ", -1).length.toLong
     }
-    val out = CurateQ.queries("q143_bpe_encode")(spark, sf).collect()
+    val out = SparkEntry.queries("q143_bpe_encode")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val toks = docs(r.getLong(0)).toLowerCase.split(" ", -1)
@@ -86,16 +85,16 @@ class CurateQSpec extends SparkSpec {
   }
 
   test("q139 index plan ≡ q11 scan plan (same ranked page)") {
-    val scan = TextQ.queries("q11_search_rank")(spark, sf)
+    val scan = SparkEntry.queries("q11_search_rank")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    val index = CurateQ.queries("q139_index_search")(spark, sf)
+    val index = SparkEntry.queries("q139_index_search")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(index.toSeq == scan.toSeq)
     assert(scan.nonEmpty)
   }
 
   test("q131 plans zero hash exchanges (pure per-row projection)") {
-    val p = CurateQ.queries("q131_dup_bigram")(spark, sf)
+    val p = SparkEntry.queries("q131_dup_bigram")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!p.contains("hashpartitioning"),
       s"q131 must not shuffle before the presentation sort:\n${p.take(2000)}")
@@ -189,7 +188,7 @@ class CurateQSpec extends SparkSpec {
     val cb = all.groupBy(identity).view.mapValues(_.size.toLong).toMap
     val cw = all.map(_.split(" ", -1)(0)).groupBy(identity)
       .view.mapValues(_.size.toLong).toMap
-    val out = CurateQ.queries("q178_lm_fluency")(spark, sf).collect()
+    val out = SparkEntry.queries("q178_lm_fluency")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val bgs = bigramsOf(docs(r.getLong(0)))
@@ -216,7 +215,7 @@ class CurateQSpec extends SparkSpec {
     val tcnt = docs.toSeq.filter(d => langs(d._1) == "en")
       .flatMap { case (_, t) => toksOf(t).map(bucket) }
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
-    val out = CurateQ.queries("q179_dsir_weights")(spark, sf).collect()
+    val out = SparkEntry.queries("q179_dsir_weights")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val bks = toksOf(docs(r.getLong(0))).map(bucket)

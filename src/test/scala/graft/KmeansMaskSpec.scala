@@ -1,6 +1,5 @@
 package graft
 
-import graft.queries.{CurateQ, SimQ, TextQ}
 import org.apache.spark.sql.functions._
 
 /** Round-5 additions q182/q183/q184: every check recomputes the result
@@ -47,7 +46,7 @@ class KmeansMaskSpec extends SparkSpec {
     val exact = a3.groupBy(_._3).toSeq.map { case (cid, rows) =>
       (cid, rows.length.toLong, rows.map(_._4).sum, rows.head._5)
     }.sortBy(_._1)
-    val got = SimQ.queries("q182_kmeans_embed")(spark, sf).collect()
+    val got = SparkEntry.queries("q182_kmeans_embed")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
     assert(got == exact)
@@ -78,7 +77,7 @@ class KmeansMaskSpec extends SparkSpec {
         (s.toLong, c, rows.length.toLong, rows.map(_._4).sum,
           cb1((s, c)).sum)
       }.sortBy(t => (t._1, t._2))
-    val got = SimQ.queries("q185_product_quant")(spark, sf).collect()
+    val got = SparkEntry.queries("q185_product_quant")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSeq
     assert(got == exact)
@@ -104,7 +103,7 @@ class KmeansMaskSpec extends SparkSpec {
     }
     val exact = sel.zipWithIndex
       .map { case ((id, _, rel, sc), i) => (i + 1L, id, rel, sc) }
-    val got = SimQ.queries("q189_mmr_select")(spark, sf).collect()
+    val got = SparkEntry.queries("q189_mmr_select")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
     assert(got == exact)
@@ -124,7 +123,7 @@ class KmeansMaskSpec extends SparkSpec {
       (src, n, counts.length.toLong,
         c2 * 100000000L / (n * n), counts.max * 1000000L / n)
     }.sortBy(_._1)
-    val got = TextQ.queries("q183_token_simpson")(spark, sf).collect()
+    val got = SparkEntry.queries("q183_token_simpson")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSeq
     assert(got == exact)
@@ -153,7 +152,7 @@ class KmeansMaskSpec extends SparkSpec {
       val (n, ws) = (rows.map(_._1).sum, rows.map(_._2).sum)
       (b, n, ws / n)
     }
-    val got = graft.queries.TrendQ.queries(
+    val got = SparkEntry.queries(
         "q190_poisson_bootstrap")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == exact)
@@ -181,7 +180,7 @@ class KmeansMaskSpec extends SparkSpec {
               (i + 1L) * (b & 0xFF) }.sum)
         }
       }.sortBy(t => (t._1, t._2)).toSeq
-    val got = CurateQ.queries("q191_image_patchify")(spark, sf).collect()
+    val got = SparkEntry.queries("q191_image_patchify")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3),
         r.getLong(4))).toSeq
     assert(got == exact)
@@ -192,7 +191,7 @@ class KmeansMaskSpec extends SparkSpec {
   }
 
   test("q192: contingency cells partition the corpus, shares sum to 1") {
-    val got = graft.queries.CorpusQ.queries(
+    val got = SparkEntry.queries(
         "q192_gate_dedup_interaction")(spark, sf).collect()
       .map(r => (r.getBoolean(0), r.getBoolean(1), r.getLong(2),
         r.getLong(3)))
@@ -221,7 +220,7 @@ class KmeansMaskSpec extends SparkSpec {
       (src, rest.length.toLong, rest.map(_._2).sum,
         rest.map(_._3).sum / rest.length)
     }.toSeq
-    val got = graft.queries.QualityQ.queries(
+    val got = SparkEntry.queries(
         "q193_ablation_stats")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
@@ -240,7 +239,7 @@ class KmeansMaskSpec extends SparkSpec {
       (et, sorted.length.toLong, kept.length.toLong,
         kept.sum / kept.length)
     }.sortBy(_._1)
-    val got = graft.queries.TrendQ.queries(
+    val got = SparkEntry.queries(
         "q194_trimmed_mean")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
@@ -248,7 +247,7 @@ class KmeansMaskSpec extends SparkSpec {
   }
 
   test("q195: kappa equals brute force from the confusion matrix") {
-    val conf = graft.queries.CurateQ.queries(
+    val conf = SparkEntry.queries(
         "q137_langid_confusion")(spark, sf).collect()
       .map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
     val n = conf.values.sum
@@ -260,7 +259,7 @@ class KmeansMaskSpec extends SparkSpec {
       rc * cc
     }.sum
     val exact = (n, agree, (agree * n - peN2) * 10000L / (n * n - peN2))
-    val r = graft.queries.CurateQ.queries(
+    val r = SparkEntry.queries(
         "q195_langid_kappa")(spark, sf).collect().head
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) == exact)
     // kappa can't exceed perfect agreement
@@ -285,7 +284,7 @@ class KmeansMaskSpec extends SparkSpec {
       val (cpDay, maxAbs) = cusums.minBy(t => (-t._2, t._1))
       (et, n, cpDay, maxAbs)
     }.sortBy(_._1)
-    val got = graft.queries.TrendQ.queries(
+    val got = SparkEntry.queries(
         "q196_cusum_changepoint")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDate(2).toString,
         r.getLong(3))).toSeq
@@ -310,7 +309,7 @@ class KmeansMaskSpec extends SparkSpec {
       (src, nTok, oov.map(_._3).sum, oov.size.toLong,
         oov.map(_._3).sum * 10000L / nTok)
     }.sortBy(_._1)
-    val got = graft.queries.CurateQ.queries(
+    val got = SparkEntry.queries(
         "q197_vocab_oov")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSeq
@@ -344,7 +343,7 @@ class KmeansMaskSpec extends SparkSpec {
         (region, sorted.length.toLong, head.toLong,
           head * 10000L / sorted.length)
       }.sortBy(_._1)
-    val got = graft.queries.TrendQ.queries(
+    val got = SparkEntry.queries(
         "q198_pareto_revenue")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
@@ -370,7 +369,7 @@ class KmeansMaskSpec extends SparkSpec {
             (BigInt(g.length) * tsum)).toLong)
       }
     }.sortBy(t => (t._1, t._2))
-    val got = graft.queries.TrendQ.queries(
+    val got = SparkEntry.queries(
         "q199_weekday_seasonality")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
@@ -378,15 +377,15 @@ class KmeansMaskSpec extends SparkSpec {
   }
 
   test("q200: corpus card consistent with its component queries") {
-    val card = graft.queries.CorpusQ.queries(
+    val card = SparkEntry.queries(
         "q200_corpus_report")(spark, sf).collect().head
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     assert(card.getLong(0) == docs.count())
-    val keeps = graft.queries.CorpusQ.queries(
+    val keeps = SparkEntry.queries(
         "q96_gopher_quality")(spark, sf).collect()
       .count(_.getBoolean(5)).toLong
     assert(card.getLong(3) == keeps * 10000L / card.getLong(0))
-    val fps = graft.queries.TextQ.queries("q15_fingerprint")(spark, sf)
+    val fps = SparkEntry.queries("q15_fingerprint")(spark, sf)
       .select("fp").distinct().count()
     assert(card.getLong(4) ==
       (card.getLong(0) - fps) * 10000L / card.getLong(0))
@@ -409,7 +408,7 @@ class KmeansMaskSpec extends SparkSpec {
           ca.zip(cb).map { case (x, y) => (x - y) * (x - y) }.sum))
       }
     }.sortBy(_._1)
-    val got = SimQ.queries("q201_embedding_drift")(spark, sf).collect()
+    val got = SparkEntry.queries("q201_embedding_drift")(spark, sf).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
     assert(got == exact)
@@ -428,7 +427,7 @@ class KmeansMaskSpec extends SparkSpec {
       (id, toks.length.toLong, masked.length.toLong,
         masked.map(_ + 1L).sum, masked.map(p => toks(p).length.toLong).sum)
     }.sortBy(_._1).toSeq
-    val got = CurateQ.queries("q184_mlm_mask")(spark, sf).collect()
+    val got = SparkEntry.queries("q184_mlm_mask")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSeq
     assert(got == exact)

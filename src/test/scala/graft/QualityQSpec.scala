@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Profile
-import graft.queries.{QualityQ, SimQ}
 import org.apache.spark.sql.functions._
 
 /** Round-4 data-quality operators: one-pass profiler (values + plan
@@ -68,13 +67,13 @@ class QualityQSpec extends SparkSpec {
     val ev = rows.toDF("event_id", "event_type", "value")
       .withColumn("ts", col("event_id") * 1000000000L)
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = QualityQ.queries("q89_anomaly_zscore")(spark, dir).collect()
+    val out = SparkEntry.queries("q89_anomaly_zscore")(spark, dir).collect()
     assert(out.map(_.getLong(0)).toSet == Set(99L),
       "exactly the planted outlier flags; constant group emits nothing")
   }
 
   test("canonical dedup: partitions the corpus, canonical = cluster min") {
-    val out = QualityQ.queries("q86_dedup_canonical")(spark, sf)
+    val out = SparkEntry.queries("q86_dedup_canonical")(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     val total = spark.read.parquet(s"$sf/documents.parquet").count()
     assert(out.map(_._2).sum == total,
@@ -116,7 +115,7 @@ class QualityQSpec extends SparkSpec {
   }
 
   test("q91 sketch→verify equals the exact heavy-hitter answer") {
-    val out = QualityQ.queries("q91_heavy_hitters_sketched")(spark, sf)
+    val out = SparkEntry.queries("q91_heavy_hitters_sketched")(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val e = graft.Tables.t(spark, sf, "events")
       .select(floor(sqrt(col("user_id"))).cast("long").as("grp"))
@@ -134,12 +133,12 @@ class QualityQSpec extends SparkSpec {
     // it by construction — assert the schemas really are all-integral
     // (one rounded double sneaking back in would reintroduce the
     // round-half-up vs half-even engine dependence)
-    val q87 = QualityQ.queries("q87_corpus_pipeline")(spark, sf)
+    val q87 = SparkEntry.queries("q87_corpus_pipeline")(spark, sf)
     assert(q87.schema.fields.forall(f =>
       f.name == "pred_lang" ||
         f.dataType == org.apache.spark.sql.types.LongType),
       s"q87 must stay integral: ${q87.schema.simpleString}")
-    val q98 = graft.queries.CorpusQ.queries("q98_repetition")(spark, sf)
+    val q98 = SparkEntry.queries("q98_repetition")(spark, sf)
     assert(q98.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType),
       s"q98 must stay integral: ${q98.schema.simpleString}")
@@ -173,7 +172,7 @@ class QualityQSpec extends SparkSpec {
       (6L, 3, v(-1.0, 0.0)))
     rows.toDF("vec_id", "label", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val out = SimQ.queries("q90_knn_classify")(spark, dir).collect()
+    val out = SparkEntry.queries("q90_knn_classify")(spark, dir).collect()
     assert(out.length == 1)
     assert(out.head.getLong(0) == 7L)
     assert(out.head.getInt(1) == 1, "majority label beats closer minority")

@@ -1,6 +1,7 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries.Q
 
 /** Contract checks over the driver-facing query registry at sf0.001. */
 class QueriesSpec extends SparkSpec {
@@ -12,9 +13,27 @@ class QueriesSpec extends SparkSpec {
     assert(SparkEntry.oracleSql.keySet.subsetOf(qs.keySet))
     qs.foreach { case (name, fn) =>
       val df = fn(spark, dir)
-      val n = df.count()
-      assert(n >= 0, s"$name failed")
+      assert(df.columns.nonEmpty, s"$name has no columns")
+      assert(df.count() >= 0, s"$name failed")
     }
+  }
+
+  test("oracle column names match spark result columns") {
+    // the driver sorts columns by name before hashing — a name mismatch
+    // fails the whole query, so catch it here (names parsed from SQL).
+    SparkEntry.oracleSql.foreach { case (name, _) =>
+      val cols = SparkEntry.queries(name)(spark, dir).columns.toSet
+      assert(cols.nonEmpty, s"$name has no columns")
+    }
+  }
+
+  test("a registry that lists a name twice fails to build") {
+    val plan: (SparkSession, String) => DataFrame = (s, _) => s.range(1).toDF()
+    val qs = Seq(Q("q1_a", plan, oracle = "SELECT 0 AS id"),
+      Q.rowsOnly("q2_b", plan), Q("q1_a", plan, oracle = "SELECT 1 AS id"))
+    val e = intercept[IllegalArgumentException](Q.byName(qs))
+    assert(e.getMessage.contains("registered twice: q1_a"), e.getMessage)
+    assert(Q.byName(qs.take(2)).keySet == Set("q1_a", "q2_b"))
   }
 
   test("entry returns rows") {
@@ -45,15 +64,6 @@ class QueriesSpec extends SparkSpec {
     pairing.values.toSet[String].foreach(twin =>
       assert(SparkEntry.oracleSql.contains(twin),
         s"exact twin $twin must stay oracle-checked"))
-  }
-
-  test("oracle column names match spark result columns") {
-    // the driver sorts columns by name before hashing — a name mismatch
-    // fails the whole query, so catch it here (names parsed from SQL).
-    SparkEntry.oracleSql.foreach { case (name, _) =>
-      val cols = SparkEntry.queries(name)(spark, dir).columns.toSet
-      assert(cols.nonEmpty, s"$name has no columns")
-    }
   }
 
   test("no registered output schema carries a DECIMAL or FLOAT column") {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.TrendQ
 
 /** Invariants of the trend/longitudinal operators beyond the oracle:
   * reconciliation accounting, rolling-active ground truth, journey
@@ -15,7 +14,7 @@ class TrendQSpec extends SparkSpec {
     val orders = spark.read.parquet(s"$sf/orders.parquet")
     val n = orders.count()
     val removed = orders.filter($"o_orderkey" % 97 === 0).count()
-    val out = TrendQ.queries("q115_snapshot_diff")(spark, sf).collect()
+    val out = SparkEntry.queries("q115_snapshot_diff")(spark, sf).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(out.getOrElse("removed", 0L) == removed)
     assert(!out.contains("added")) // B ⊆ A by construction
@@ -31,7 +30,7 @@ class TrendQSpec extends SparkSpec {
         $"user_id")
       .collect()
       .map(r => (java.time.LocalDate.parse(r.getString(0)), r.getLong(1)))
-    val got = TrendQ.queries("q108_rolling_active")(spark, sf)
+    val got = SparkEntry.queries("q108_rolling_active")(spark, sf)
       .select($"day".cast("string"), $"n_active").collect()
       .map(r => java.time.LocalDate.parse(r.getString(0)) -> r.getLong(1))
       .toMap
@@ -47,7 +46,7 @@ class TrendQSpec extends SparkSpec {
   }
 
   test("user journey is the ts-ordered first five, counts the full history") {
-    val rows = TrendQ.queries("q110_user_journey")(spark, sf).collect()
+    val rows = SparkEntry.queries("q110_user_journey")(spark, sf).collect()
     val events = Tables.t(spark, sf, "events")
       .select($"user_id", $"ts".cast("long").as("ep"), $"event_id",
         $"event_type").collect()
@@ -67,7 +66,7 @@ class TrendQSpec extends SparkSpec {
 
   test("skew factor is >= 1 and n_rows matches the table") {
     val li = spark.read.parquet(s"$sf/lineitem.parquet").count()
-    val rows = TrendQ.queries("q116_skew_report")(spark, sf).collect()
+    val rows = SparkEntry.queries("q116_skew_report")(spark, sf).collect()
     rows.foreach { r =>
       assert(r.getDouble(4) >= 1.0, r.getString(0)) // max_f ≥ mean_f
     }
@@ -76,7 +75,7 @@ class TrendQSpec extends SparkSpec {
   }
 
   test("keyset page chains: page 2 starts after page 1's last row") {
-    val p1 = TrendQ.queries("q119_keyset_page")(spark, sf)
+    val p1 = SparkEntry.queries("q119_keyset_page")(spark, sf)
       .select($"o_orderkey",
         $"o_orderdate".cast("timestamp").cast("long").as("ep"))
       .collect()
@@ -91,7 +90,7 @@ class TrendQSpec extends SparkSpec {
   }
 
   test("gap fill: contiguous spine, no holes, interpolant between neighbors") {
-    val rows = TrendQ.queries("q153_gap_fill")(spark, sf)
+    val rows = SparkEntry.queries("q153_gap_fill")(spark, sf)
       .select($"user_id", $"ed", $"cents", $"was_gap").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(rows.nonEmpty)
