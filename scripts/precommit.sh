@@ -17,14 +17,24 @@ if [ -n "$stray" ]; then
   echo "$stray"
   exit 1
 fi
-# one document accessor: the typed (doc_id, text) prelude of the codec
-# pipelines is Tables.docText; a query module does not spread
-# t(s, dir, "documents") and cast it to (Long, String) by hand
-prelude=$(perl -0777 -ne 'while (/ensureParallel(\(\s*t\(s, dir, "documents"\)(?:[^()]++|(\((?:[^()]++|(?2))*\)))*\))\s*\.as\[\(Long, String\)\]/g) { printf "%s:%d\n", $ARGV, 1 + (substr($_, 0, $-[0]) =~ tr/\n//) }' \
+# one document accessor: the (doc_id, text) prelude of the codec and
+# shingle pipelines is Tables.docText; a query module does not spread
+# t(s, dir, "documents") and cast it to (Long, String) by hand, nor
+# spread its bare (doc_id, text) projection
+prelude=$(perl -0777 -ne 'while (/ensureParallel(\(\s*t\(s, dir, "documents"\)(?:[^()]++|(\((?:[^()]++|(?2))*\)))*\))\s*\.as\[\(Long, String\)\]|ensureParallel\(\s*t\(s, dir, "documents"\)\s*\.select\(col\("doc_id"\), col\("text"\)\)\)/g) { printf "%s:%d\n", $ARGV, 1 + (substr($_, 0, $-[0]) =~ tr/\n//) }' \
   src/main/scala/graft/queries/*.scala)
 if [ -n "$prelude" ]; then
   echo "[precommit] hand-written documents prelude (use Tables.docText):"
   echo "$prelude"
+  exit 1
+fi
+# one lattice quantizer: floor(x·1000) is SimilarityOps.lattice (and
+# latticeVec); a second spelling could drift from the oracles' replay
+quant=$(find src -name '*.scala' ! -path 'src/main/scala/graft/ops/SimilarityOps.scala' \
+  -exec perl -0777 -ne 'while (/cast\("double"\) \* 1000\)\s*\.cast\("long"\)/g) { printf "%s:%d\n", $ARGV, 1 + (substr($_, 0, $-[0]) =~ tr/\n//) }' {} +)
+if [ -n "$quant" ]; then
+  echo "[precommit] lattice quantizer outside SimilarityOps (use lattice/latticeVec):"
+  echo "$quant"
   exit 1
 fi
 # docs/scripts-only commits don't need the JVM spin-up

@@ -33,33 +33,47 @@ object DedupOps {
 
   /** All pairs (a_id < b_id) with element-set Jaccard ≥ threshold, via an
     * inverted index: explode to (element, id) postings, equi-join postings
-    * on the element, count co-occurrences = |A∩B|, then join back the set
-    * sizes for |A∪B|. Exact (pairs sharing no element have Jaccard 0 <
+    * on the element, count co-occurrences = |A∩B|, with the set sizes
+    * carried through the postings for |A∪B|. Exact (pairs sharing no element have Jaccard 0 <
     * threshold) but never materializes the cross join — the shuffle key is
     * the element, so cost is Σ|posting|², the SSJoin bound that holds at
     * scale. `toksCol` must already be distinct elements. */
   def jaccardPairs(df: DataFrame, idCol: String, toksCol: String,
-      threshold: Double): DataFrame = {
-    // carry each set's size through its postings: the pair join then has
-    // both sizes in hand — no extra joins back to a sizes table, and the
-    // two posting sides are identical subplans, so the shuffle is planned
-    // once and reused for the other side (ReusedExchange)
-    val posts = Partitioning.ensureParallel(
+      threshold: Double): DataFrame =
+    overlaps(postings(df, idCol, toksCol))
+      .withColumn("jaccard", round(col("inter").cast("double")
+        / (col("a_sz") + col("b_sz") - col("inter")), 4))
+      .filter(col("jaccard") >= threshold)
+      .select("a_id", "b_id", "jaccard")
+
+  /** The (id, sz, tok) postings of a distinct-token set column: one row
+    * per (set, token), each carrying its set's size, so a pair join over
+    * them has both sizes in hand — no join back to a sizes table. The
+    * (id, toks) input is spread over every core first (the token explode
+    * and the posting join are the CPU-heavy stages). Feeds
+    * [[jaccardPairs]] (q16 and the `ScaleQ.dedupEdges` family),
+    * [[containmentPairs]] (q101) and [[jaccardPairsPrefix]] (q75). */
+  private def postings(df: DataFrame, idCol: String,
+      toksCol: String): DataFrame =
+    Partitioning.ensureParallel(
         df.select(col(idCol).as("id"), col(toksCol).as("toks")))
       .select(col("id"), size(col("toks")).as("sz"),
         explode(col("toks")).as("tok"))
-    val pairs = posts.as("x").join(posts.as("y"),
+
+  /** Every unordered pair (a_id < b_id) sharing at least one posting
+    * token, with both set sizes and its overlap `inter` = |A∩B|: one
+    * equi-join of the postings on the token (cost Σ|posting|², never the
+    * cross join), counted per pair. The two posting sides are identical
+    * subplans, so the shuffle is planned once and reused for the other
+    * side (ReusedExchange). Shared by [[jaccardPairs]] and
+    * [[containmentPairs]]. */
+  private def overlaps(posts: DataFrame): DataFrame =
+    posts.as("x").join(posts.as("y"),
         col("x.tok") === col("y.tok") && col("x.id") < col("y.id"))
       .select(col("x.id").as("a_id"), col("y.id").as("b_id"),
         col("x.sz").as("a_sz"), col("y.sz").as("b_sz"))
       .groupBy("a_id", "b_id", "a_sz", "b_sz")
       .agg(count(lit(1)).as("inter"))
-    pairs
-      .withColumn("jaccard", round(col("inter").cast("double")
-        / (col("a_sz") + col("b_sz") - col("inter")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
-  }
 
   /** Directed containment pairs: (a, b, |A∩B|/|A|) for every ordered pair
     * with containment ≥ threshold — the asymmetric cousin of
@@ -69,18 +83,8 @@ object DedupOps {
     * produced ONCE by the size-carrying posting join, then fanned into
     * its two directions by a 2-element explode — no second join pass. */
   def containmentPairs(df: DataFrame, idCol: String, toksCol: String,
-      threshold: Double): DataFrame = {
-    val posts = Partitioning.ensureParallel(
-        df.select(col(idCol).as("id"), col(toksCol).as("toks")))
-      .select(col("id"), size(col("toks")).as("sz"),
-        explode(col("toks")).as("tok"))
-    val pairs = posts.as("x").join(posts.as("y"),
-        col("x.tok") === col("y.tok") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("a_id"), col("y.id").as("b_id"),
-        col("x.sz").as("a_sz"), col("y.sz").as("b_sz"))
-      .groupBy("a_id", "b_id", "a_sz", "b_sz")
-      .agg(count(lit(1)).as("inter"))
-    pairs
+      threshold: Double): DataFrame =
+    overlaps(postings(df, idCol, toksCol))
       .select(col("inter"), explode(array(
         struct(col("a_id").as("src"), col("b_id").as("dst"),
           col("a_sz").as("sz")),
@@ -90,7 +94,6 @@ object DedupOps {
         round(col("inter").cast("double") / col("d.sz"), 4)
           .as("containment"))
       .filter(col("containment") >= threshold)
-  }
 
   /** MinHash signature (numHashes values) over a distinct string-array column.
     * Universal hashing over the 32-bit murmur3 of each element:
@@ -115,45 +118,17 @@ object DedupOps {
     * bounded by collision rate, and the only quadratic work is within-bucket. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
-    val sh = graft.functions.ShinglesExpr.shingles(
-      TextOps.tokens(col("__text")), shingleK)
-    // the (id, shingles) relation feeds the banded signature pass and
-    // both sides of the verify join, so shingles are recomputed per
-    // consumer. A lazy localCheckpoint here was MEASURED as a loss
-    // (r12): one pass + materialization cost 32 task-sec vs 21 for
-    // three recomputed passes at sf0.1 — serializing the shingle
-    // arrays into block storage exceeds the recompute, and the md5
-    // signature (the actually expensive expression) is only ever
-    // evaluated once, in the bucket pass. Recompute is the scale
-    // posture too: CPU-linear and partition-local, no working set.
-    val withSh = Partitioning.ensureParallel(
-        df.select(col(idCol).as("id"), col(textCol).as("__text")))
-      .select(col("id"), sh.as("sh"))
-      .filter(size(col("sh")) > 0)
-    val withSig = withSh.withColumn("sig",
-      graft.functions.HashExprs.minhash_sig(col("sh"), bands * rowsPerBand))
-    // band index -> hash of the signature slice for that band. Only
-    // (id, band-hash) flows through candidate generation — the shingle
-    // payload is joined back for the (small) verified candidate set, so
-    // the bucket shuffle moves ids, not documents.
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        hash(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)).as("bh"))
+      threshold: Double = 0.5): DataFrame =
+    lshVerifiedPairs(df, idCol, textCol, shingleK, threshold) { withSh =>
+      val withSig = withSh.withColumn("sig", graft.functions.HashExprs
+        .minhash_sig(col("sh"), bands * rowsPerBand))
+      // band index -> hash of the signature slice for that band
+      val bandCols = (0 until bands).map { b =>
+        struct(lit(b).as("band"),
+          hash(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)).as("bh"))
+      }
+      withSig.select(col("id"), explode(array(bandCols: _*)).as("bk"))
     }
-    val buckets = withSig
-      .select(col("id"), explode(array(bandCols: _*)).as("bk"))
-    val a = buckets.select(col("bk"), col("id").as("a_id"))
-    val b = buckets.select(col("bk"), col("id").as("b_id"))
-    val candidates = a.join(b, Seq("bk")).filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").dropDuplicates("a_id", "b_id")
-    candidates
-      .join(withSh.select(col("id").as("a_id"), col("sh").as("a_sh")), "a_id")
-      .join(withSh.select(col("id").as("b_id"), col("sh").as("b_sh")), "b_id")
-      .withColumn("jaccard", round(jaccard(col("a_sh"), col("b_sh")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
-  }
 
   /** MinHash-LSH near-dup pairs on the md5 hash family — the
     * oracle-replayable twin of [[minhashLshPairs]] (q17's conversion to
@@ -169,7 +144,31 @@ object DedupOps {
     * the md5-banding's candidate recall over the true pair set. */
   def minhashMd5LshPairs(df: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
+      threshold: Double = 0.5): DataFrame =
+    lshVerifiedPairs(df, idCol, textCol, shingleK, threshold) { withSh =>
+      // fused one-pass signature + band keys (the declarative 64-min-agg
+      // twin cost ×6.7 at sf0.1, and the slice/transform/concat_ws band
+      // build another interpreted layer — r11 bench findings, same class
+      // as minhash_sig). Band key = '|'-joined row-mins (integers need a
+      // separator: "12|3" vs "1|23"); the oracle builds the same string.
+      withSh.select(col("id"), posexplode(
+        graft.functions.MinHashMd5SigExpr.minhashMd5Bands(
+          col("sh"), bands, rowsPerBand)).as(Seq("band", "bh")))
+        .select(struct(col("band"), col("bh")).as("bk"), col("id"))
+    }
+
+  /** The MinHash-LSH body shared by [[minhashLshPairs]] (the murmur
+    * twin, DedupOpsSpec) and [[minhashMd5LshPairs]] (q17): word
+    * `shingleK`-shingle sets of the spread (id, text) relation, empty
+    * sets dropped; `buckets` maps that (id, sh) relation to one (id, bk)
+    * row per band bucket; candidates are the distinct a_id < b_id pairs
+    * of one bucket-key shuffle join (ids only — the shingle payload is
+    * joined back for the small candidate set, so the bucket shuffle
+    * moves ids, not documents), verified with the exact Jaccard ≥
+    * `threshold`. */
+  private def lshVerifiedPairs(df: DataFrame, idCol: String,
+      textCol: String, shingleK: Int, threshold: Double)(
+      buckets: DataFrame => DataFrame): DataFrame = {
     val sh = graft.functions.ShinglesExpr.shingles(
       TextOps.tokens(col("__text")), shingleK)
     // the (id, shingles) relation feeds the banded signature pass and
@@ -185,17 +184,9 @@ object DedupOps {
         df.select(col(idCol).as("id"), col(textCol).as("__text")))
       .select(col("id"), sh.as("sh"))
       .filter(size(col("sh")) > 0)
-    // fused one-pass signature + band keys (the declarative 64-min-agg
-    // twin cost ×6.7 at sf0.1, and the slice/transform/concat_ws band
-    // build another interpreted layer — r11 bench findings, same class
-    // as minhash_sig). Band key = '|'-joined row-mins (integers need a
-    // separator: "12|3" vs "1|23"); the oracle builds the same string.
-    val buckets = withSh.select(col("id"), posexplode(
-      graft.functions.MinHashMd5SigExpr.minhashMd5Bands(
-        col("sh"), bands, rowsPerBand)).as(Seq("band", "bh")))
-      .select(struct(col("band"), col("bh")).as("bk"), col("id"))
-    val a = buckets.select(col("bk"), col("id").as("a_id"))
-    val b = buckets.select(col("bk"), col("id").as("b_id"))
+    val bk = buckets(withSh)
+    val a = bk.select(col("bk"), col("id").as("a_id"))
+    val b = bk.select(col("bk"), col("id").as("b_id"))
     val candidates = a.join(b, Seq("bk")).filter(col("a_id") < col("b_id"))
       .select("a_id", "b_id").dropDuplicates("a_id", "b_id")
     candidates
@@ -228,9 +219,7 @@ object DedupOps {
   def jaccardPairsPrefix(df: DataFrame, idCol: String, toksCol: String,
       threshold: Double): DataFrame = {
     val full = df.select(col(idCol).as("id"), col(toksCol).as("toks"))
-    val posts = Partitioning.ensureParallel(full)
-      .select(col("id"), size(col("toks")).as("sz"),
-        explode(col("toks")).as("tok"))
+    val posts = postings(df, idCol, toksCol)
     val dfreq = posts.groupBy("tok").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(col("id")).orderBy(asc("df"), asc("tok"))
     // All bounds are conservative against double rounding (an epsilon
@@ -290,9 +279,9 @@ object DedupOps {
     * inside the repo's bounded-collect discipline — and the gate is
     * re-checked per contraction round, so a 100 TB run still does its
     * heavy shrinking distributed and only the residual ever lands on
-    * the driver. Env-tunable like the other scale knobs. */
-  private val LocalFinishEdges =
-    sys.env.getOrElse("SPARK_GRAFT_CC_LOCAL_EDGES", "65536").toLong
+    * the driver. Callers that need another bound pass
+    * `localFinishEdges`. */
+  private val LocalFinishEdges = 65536L
 
   /** One union-find pass over a collected edge set: (node, cluster =
     * component minimum) for every endpoint — exactly the distributed

@@ -67,17 +67,21 @@ object SimilarityOps {
       hyperplaneSig(col(vecCol), dim, nPlanes))
     val qSig = broadcast(query.select(col(queryVecCol).as("__qv"))
       .withColumn("__qsig", hyperplaneSig(col("__qv"), dim, nPlanes)))
-    // probe exact bucket + all 1-bit-flip buckets
-    val probeSigs = explode(array(
-      (Seq(col("__qsig")) ++ (0 until nPlanes).map(p =>
-        col("__qsig").bitwiseXOR(lit(1L << p)))): _*)).as("__probe")
-    val probes = qSig.select(col("__qv"), probeSigs)
+    val probes = qSig.select(col("__qv"), flipProbes(col("__qsig"), nPlanes))
     sigged.join(probes, col("__sig") === col("__probe"))
       .withColumn("cos_sim", round(cosine(col(vecCol), col("__qv")), 6))
       .select(col(idCol), col("cos_sim"))
       .orderBy(desc("cos_sim"), asc(idCol))
       .limit(k)
   }
+
+  /** The probe set of a multi-probe LSH lookup, one row per bucket
+    * (`__probe`): the query's own signature `qsig` plus every 1-bit flip
+    * of its `nPlanes` bits. Shared by [[annTopK]] and [[latticeAnnTopK]]
+    * (q25). */
+  private def flipProbes(qsig: Column, nPlanes: Int): Column =
+    explode(array((qsig +: (0 until nPlanes).map(p =>
+      qsig.bitwiseXOR(lit(1L << p)))): _*)).as("__probe")
 
   /** IVF (inverted-file) ANN: vectors are assigned to their nearest of K
     * centroid "cells"; a query probes only the `nprobe` nearest cells.
@@ -151,12 +155,27 @@ object SimilarityOps {
   // exact query (the q253 hash-checkable-sketch rule applied to ANN).
   // ------------------------------------------------------------------
 
-  /** Quantize a float embedding onto the integer lattice floor(v·1000):
-    * float→double widening and the double multiply are IEEE-exact on
-    * every engine, so the lattice vector — and every integer derived
-    * from it — is engine-independent. */
-  def latticeVec(vec: Column): Column =
-    transform(vec, v => floor(v.cast("double") * 1000).cast("long"))
+  /** Quantize one float component onto the integer lattice
+    * floor(x·1000): float→double widening and the double multiply are
+    * IEEE-exact on every engine, so the lattice value — and every
+    * integer derived from it — is engine-independent. The one spelling
+    * of the quantizer: every lattice query (q182, q185/q216, q189,
+    * q201, q211, q230, q237/q240/q292's grid, q238, q259, q291,
+    * q301/q302 and the lattice ANN ops here) goes through it or
+    * [[latticeVec]]. */
+  def lattice(x: Column): Column = floor(x.cast("double") * 1000).cast("long")
+
+  /** [[lattice]] over every component of a float embedding. */
+  def latticeVec(vec: Column): Column = transform(vec, lattice(_))
+
+  /** ‖a−b‖² of two lattice vectors, expanded to dot identities so each
+    * distance is three codegen'd integer loops (LongDotExpr), not an
+    * interpreted zip_with fold — the same BIGINT as Σ(aᵢ−bᵢ)². The Lloyd
+    * and IVF distance of q182, q301/q302 and [[semanticDedup]]. */
+  private[graft] def dist2(a: Column, b: Column): Column = {
+    import graft.functions.LongDotExpr.longDot
+    longDot(a, a) - lit(2L) * longDot(a, b) + longDot(b, b)
+  }
 
   /** md5-derived hyperplane sign (±1): the parity of the first hex
     * digit of md5("plane:p:d"). Both engines compute the same standard
@@ -238,10 +257,7 @@ object SimilarityOps {
     val qSig = broadcast(base.filter(col(idCol) === queryId)
       .select(col("__q").as("__qv"))
       .withColumn("__qsig", latticeSig(col("__qv"), dim, nPlanes)))
-    val probeSigs = explode(array(
-      (Seq(col("__qsig")) ++ (0 until nPlanes).map(p =>
-        col("__qsig").bitwiseXOR(lit(1L << p)))): _*)).as("__probe")
-    val probes = qSig.select(col("__qv"), probeSigs)
+    val probes = qSig.select(col("__qv"), flipProbes(col("__qsig"), nPlanes))
     sigged.join(probes, col("__sig") === col("__probe"))
       .withColumn("lat_cos_e8", latticeCosE8(col("__q"), col("__qv")))
       .select(col(idCol), col("lat_cos_e8"))
@@ -412,33 +428,11 @@ object SimilarityOps {
     * materialize the cross product; duplicate candidates across bands are
     * collapsed BEFORE the cosine so each pair is verified exactly once. */
   def annSelfJoin(vectors: DataFrame, idCol: String, vecCol: String, dim: Int,
-      k: Int, planesPerBand: Int = 8, bands: Int = 16): DataFrame = {
-    // ensureParallel: signature hashing is bands × planes × dim work
-    // per row, and a bench-SF single-file vector scan would serialize
-    // it into one task (at scale the splits already parallelize)
-    val base = Partitioning.ensureParallel(
-      vectors.select(col(idCol).as("id"), col(vecCol).as("v")))
-    // all band signatures in one codegen'd pass per row (the declarative
-    // per-plane fold is interpreted and costs bands × planes × dim boxed
-    // steps), then one row per (band, sig) bucket key
-    val sigged = base.select(col("id"), posexplode(
-        graft.functions.HashExprs.hyperplane_sigs(col("v"), dim,
-          planesPerBand, bands)).as(Seq("band", "sig")))
-    val a = sigged.select(col("band"), col("sig"), col("id").as("a_id"))
-    val b = sigged.select(col("band"), col("sig"), col("id").as("b_id"))
-    val cands = a.join(b, Seq("band", "sig"))
-      .filter(col("a_id") =!= col("b_id"))
-      .select("a_id", "b_id")
-      .dropDuplicates("a_id", "b_id")
-    val pairs = cands
-      .join(base.select(col("id").as("a_id"), col("v").as("a_v")), "a_id")
-      .join(base.select(col("id").as("b_id"), col("v").as("b_v")), "b_id")
-      .withColumn("cos_sim", round(cosine(col("a_v"), col("b_v")), 6))
-    val w = Window.partitionBy(col("a_id"))
-      .orderBy(desc("cos_sim"), asc("b_id"))
-    pairs.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("a_id", "b_id", "cos_sim")
-  }
+      k: Int, planesPerBand: Int = 8, bands: Int = 16): DataFrame =
+    bandedSelfJoin(vectors.select(col(idCol).as("id"), col(vecCol).as("v")),
+      graft.functions.HashExprs.hyperplane_sigs(col("v"), dim,
+        planesPerBand, bands),
+      k, "cos_sim", round(cosine(col("a_v"), col("b_v")), 6))
 
   /** md5-replayable banded ANN self-join (oracle-exact q74 form, r11):
     * the exact plan shape of [[annSelfJoin]] — one fused-signature pass
@@ -451,12 +445,32 @@ object SimilarityOps {
     * product. Output: (a_id, b_id, lat_cos_e8), both directions, k best
     * bucket-mates per vector. */
   def latticeAnnSelfJoin(vectors: DataFrame, idCol: String, vecCol: String,
-      dim: Int, k: Int, planesPerBand: Int, bands: Int): DataFrame = {
-    val base = Partitioning.ensureParallel(
-      vectors.select(col(idCol).as("id"), latticeVec(col(vecCol)).as("v")))
-    val sigged = base.select(col("id"), posexplode(
-        graft.functions.HashExprs.lattice_sigs(col("v"), dim,
-          planesPerBand, bands)).as(Seq("band", "sig")))
+      dim: Int, k: Int, planesPerBand: Int, bands: Int): DataFrame =
+    bandedSelfJoin(
+      vectors.select(col(idCol).as("id"), latticeVec(col(vecCol)).as("v")),
+      graft.functions.HashExprs.lattice_sigs(col("v"), dim,
+        planesPerBand, bands),
+      k, "lat_cos_e8", latticeCosE8(col("a_v"), col("b_v")))
+
+  /** The banded self-join body of [[annSelfJoin]] (the scale path of
+    * [[nearDupPairs]], q40 past its exact cap) and [[latticeAnnSelfJoin]]
+    * (q74): `idv` is the (id, v) relation, `sigs` the fused all-band
+    * signature array over `v`, `score` the pair score over (a_v, b_v),
+    * emitted as `scoreName`. Shape: one signature pass per row, one row per
+    * (band, sig) bucket key, `bands` bucket-joins, cross-band dedup
+    * BEFORE scoring (each pair is scored once), join-back of the two
+    * vectors, and an a_id-partitioned top-k window (score desc, b_id). */
+  private def bandedSelfJoin(idv: DataFrame, sigs: Column, k: Int,
+      scoreName: String, score: Column): DataFrame = {
+    // ensureParallel: signature hashing is bands × planes × dim work
+    // per row, and a bench-SF single-file vector scan would serialize
+    // it into one task (at scale the splits already parallelize)
+    val base = Partitioning.ensureParallel(idv)
+    // all band signatures in one codegen'd pass per row (the declarative
+    // per-plane fold is interpreted and costs bands × planes × dim boxed
+    // steps), then one row per (band, sig) bucket key
+    val sigged = base.select(col("id"),
+      posexplode(sigs).as(Seq("band", "sig")))
     val a = sigged.select(col("band"), col("sig"), col("id").as("a_id"))
     val b = sigged.select(col("band"), col("sig"), col("id").as("b_id"))
     val cands = a.join(b, Seq("band", "sig"))
@@ -466,11 +480,11 @@ object SimilarityOps {
     val pairs = cands
       .join(base.select(col("id").as("a_id"), col("v").as("a_v")), "a_id")
       .join(base.select(col("id").as("b_id"), col("v").as("b_v")), "b_id")
-      .withColumn("lat_cos_e8", latticeCosE8(col("a_v"), col("b_v")))
+      .withColumn(scoreName, score)
     val w = Window.partitionBy(col("a_id"))
-      .orderBy(desc("lat_cos_e8"), asc("b_id"))
+      .orderBy(desc(scoreName), asc("b_id"))
     pairs.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("a_id", "b_id", "lat_cos_e8")
+      .select("a_id", "b_id", scoreName)
   }
 
   /** SemDeDup (Abbas et al. 2023): cluster the embedding corpus with k
@@ -507,7 +521,6 @@ object SimilarityOps {
   def semanticDedup(vectors: DataFrame, idCol: String, vecCol: String,
       k: Int): DataFrame = {
     require(k >= 1, s"semanticDedup needs k >= 1, got $k")
-    import graft.Tables.ldiv
     import graft.functions.LongDotExpr.longDot
     // keyed by vec_id (not round-robin) before the checkpoint, which
     // preserves the partitioning: all three assignment rounds' per-
@@ -521,62 +534,34 @@ object SimilarityOps {
       .localCheckpoint()
     val c0 = base.orderBy("vec_id").limit(k)
       .select(col("vec_id").as("cid"), col("q").as("cent"))
-    // ‖q−c‖² expanded to dot identities so each distance is three
-    // codegen'd integer loops (LongDotExpr), not an interpreted
-    // zip_with fold — bit-identical values, same (dist, cid) argmin
-    def dist2(q: Column, cent: Column): Column =
-      longDot(q, q) - lit(2L) * longDot(q, cent) + longDot(cent, cent)
     // size-dispatched argmin (the nearDupPairs precedent): identical
     // values either way — (dist, cid) is duplicate-free per vector —
     // but different plans for different k regimes.
-    def assign(cents: DataFrame): DataFrame = {
-      val scored = base.crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("q"), col("cid"),
-          dist2(col("q"), col("cent")).as("dist"))
-      if (k <= 8) {
-        // pinned-small k (the q211 registry's k=4): the window argmin —
-        // its n·k candidate exchange is bounded by 8 narrow rows per
-        // vector, and it benches ~25% faster than the aggregate form
-        // at this size (no SortAggregate pass)
-        val w = Window.partitionBy("vec_id").orderBy("dist", "cid")
-        scored.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1).drop("rn", "dist")
-      } else {
-        // k ∝ n (the semanticDedupAuto regime): a window would SHUFFLE
-        // all n·k candidate rows — a quadratic exchange once k grows
-        // with n. min_by aggregates instead: every vector's k
-        // candidates sit in one partition of the broadcast-crossJoin
-        // output, so the partial pass resolves each vector map-side
-        // and the exchange carries n rows regardless of k. The vector
-        // payload is DROPPED before the aggregation and joined back
-        // from the checkpointed base after — min_by's struct buffer
-        // plans as SortAggregate, and sorting n·k 24-byte (dist, cid)
-        // rows instead of ~550-byte q-carrying rows cut the measured
-        // ×100 spill ~20× for the price of one n-row join.
-        scored.drop("q").groupBy("vec_id")
-          .agg(min_by(col("cid"), struct(col("dist"), col("cid")))
-            .as("cid"))
-          .join(base, "vec_id")
-          .select(col("vec_id"), col("q"), col("cid"))
-      }
-    }
-    // one cid-keyed exchange serves both aggregation levels (hash(cid)
-    // satisfies the (cid, pos) clustering, so the component means
-    // aggregate in place and the array re-assembly reuses the same
-    // partitioning)
-    def update(assigned: DataFrame): DataFrame =
-      assigned
-        .select(col("cid"), posexplode(col("q")).as(Seq("pos", "v")))
-        .repartition(col("cid"))
-        .groupBy("cid", "pos")
-        .agg(ldiv(sum(col("v")), count(lit(1))).as("cv"))
-        .groupBy("cid")
-        .agg(transform(array_sort(collect_list(struct(col("pos"),
-          col("cv")))), x => x.getField("cv")).as("cent"))
+    def assign(cents: DataFrame): DataFrame =
+      // pinned-small k (the q211 registry's k=4): the window argmin —
+      // its n·k candidate exchange is bounded by 8 narrow rows per
+      // vector, and it benches ~25% faster than the aggregate form
+      // at this size (no SortAggregate pass)
+      if (k <= 8) lloydAssign(base, cents).drop("dist")
+      // k ∝ n (the semanticDedupAuto regime): a window would SHUFFLE
+      // all n·k candidate rows — a quadratic exchange once k grows
+      // with n. min_by aggregates instead: every vector's k
+      // candidates sit in one partition of the broadcast-crossJoin
+      // output, so the partial pass resolves each vector map-side
+      // and the exchange carries n rows regardless of k. The vector
+      // payload is DROPPED before the aggregation and joined back
+      // from the checkpointed base after — min_by's struct buffer
+      // plans as SortAggregate, and sorting n·k 24-byte (dist, cid)
+      // rows instead of ~550-byte q-carrying rows cut the measured
+      // ×100 spill ~20× for the price of one n-row join.
+      else lloydScores(base, cents).drop("q").groupBy("vec_id")
+        .agg(min_by(col("cid"), struct(col("dist"), col("cid"))).as("cid"))
+        .join(base, "vec_id")
+        .select(col("vec_id"), col("q"), col("cid"))
     // per-vector squared norm computed ONCE before the checkpoint (it
     // materializes with the assignment) — the pair stage below must
     // never recompute an O(dim) quantity per PAIR, only the dot
-    val a3 = assign(update(assign(update(assign(c0)))))
+    val a3 = assign(lloydUpdate(assign(lloydUpdate(assign(c0)))))
       .withColumn("nv", longDot(col("q"), col("q")))
       .localCheckpoint() // two consumers: pair join sides + rollup
     val x = a3.select(col("cid"), col("vec_id").as("a_id"),
@@ -605,6 +590,92 @@ object SimilarityOps {
         coalesce(col("n_edges"), lit(0L)).as("n_edges"),
         col("n_removed"), col("kept_checksum"))
       .orderBy("cid")
+  }
+
+  /** Every (vector, centroid) pair of a lattice Lloyd round: `base`
+    * (vec_id, q) crossJoined with the broadcast centroid table `cents`
+    * (cid, cent), projected to (vec_id, q, cid, carry…, dist) with
+    * dist = [[dist2]](q, cent). `carry` columns are evaluated per pair
+    * and kept. The centroid broadcast holds while k·dim·8 B stays
+    * broadcastable (k ≲ 10⁵ at dim 64). */
+  private def lloydScores(base: DataFrame, cents: DataFrame,
+      carry: Column*): DataFrame =
+    base.crossJoin(broadcast(cents))
+      .select(Seq(col("vec_id"), col("q"), col("cid")) ++ carry :+
+        dist2(col("q"), col("cent")).as("dist"): _*)
+
+  /** One integer-Lloyd assignment: each vector of `base` (vec_id, q)
+    * keeps its nearest centroid of `cents` (cid, cent) by the exact
+    * (dist, cid) order — a per-vector row_number window over the
+    * [[lloydScores]] pairs, partitioned by vec_id (never global), so the
+    * argmin is duplicate-free and engine-independent. Output: (vec_id,
+    * q, cid, carry…, dist). Used by q182 (carrying its centroid
+    * checksum), the q301/q302 coarse quantizer (carrying the centroid
+    * for the residual) and [[semanticDedup]]'s k ≤ 8 branch (q211). */
+  private[graft] def lloydAssign(base: DataFrame, cents: DataFrame,
+      carry: Column*): DataFrame = {
+    val w = Window.partitionBy("vec_id").orderBy("dist", "cid")
+    lloydScores(base, cents, carry: _*)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1).drop("rn")
+  }
+
+  /** One Lloyd centroid update over an assignment (cid, q): each
+    * component's truncated mean (integral DIV, toward zero on both
+    * engines), reassembled into the `cent` array in component order.
+    * One cid-keyed exchange serves both aggregation levels (hash(cid)
+    * satisfies the (cid, pos) clustering, so the component means
+    * aggregate in place and the array re-assembly reuses the same
+    * partitioning). Used by [[semanticDedup]] (q211/q291) and the
+    * q301/q302 coarse quantizer; q182 keeps its own partially
+    * aggregating update. */
+  private[graft] def lloydUpdate(assigned: DataFrame): DataFrame = {
+    import graft.Tables.ldiv
+    assigned
+      .select(col("cid"), posexplode(col("q")).as(Seq("pos", "v")))
+      .repartition(col("cid"))
+      .groupBy("cid", "pos")
+      .agg(ldiv(sum(col("v")), count(lit(1))).as("cv"))
+      .groupBy("cid")
+      .agg(transform(array_sort(collect_list(struct(col("pos"),
+        col("cv")))), x => x.getField("cv")).as("cent"))
+  }
+
+  /** Product-quantizer codebook on the integer lattice: `base` holds
+    * one row per vector component (vec_id, sub, j, v) — 64 dims → 8
+    * subspaces `sub` × 8 components `j` — and the k codes of every
+    * subspace are seeded from the components of vec_id < k, then
+    * trained by one Lloyd round ([[pqAssign]], then a truncated-mean
+    * update, integral DIV toward zero). Returns the (sub, code, j, cv)
+    * codebook, localCheckpointed once because both callers read it
+    * twice (encode + lookup table). Trains q185/q216's codebook on the
+    * quantized vectors and q301/q302's on the coarse residuals. */
+  private[graft] def pqTrain(base: DataFrame, k: Int): DataFrame = {
+    import graft.Tables.ldiv
+    val c0 = base.filter(col("vec_id") < k)
+      .select(col("sub"), col("vec_id").as("code"), col("j"),
+        col("v").as("cv"))
+    base.join(pqAssign(base, c0).select("vec_id", "sub", "code"),
+        Seq("vec_id", "sub"))
+      .groupBy("sub", "code", "j")
+      .agg(ldiv(sum(col("v")), count(lit(1))).as("cv"))
+      .localCheckpoint()
+  }
+
+  /** PQ encoding: each (vec_id, sub) of the component rows `base`
+    * keeps its nearest code of codebook `cb` (sub, code, j, cv) by the
+    * exact BIGINT Σ(v − cv)² with ties to the smaller code — a
+    * (vec_id, sub)-partitioned row_number window. Output: (vec_id, sub,
+    * code, dist). Used by [[pqTrain]] and by q185/q216 and q301/q302
+    * to encode the corpus. */
+  private[graft] def pqAssign(base: DataFrame, cb: DataFrame): DataFrame = {
+    val w = Window.partitionBy("vec_id", "sub").orderBy("dist", "code")
+    base.join(broadcast(cb), Seq("sub", "j"))
+      .groupBy("vec_id", "sub", "code")
+      .agg(sum((col("v") - col("cv")) * (col("v") - col("cv")))
+        .as("dist"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1).drop("rn")
   }
 
   /** The production SemDeDup entry: k ∝ n. One bounded count sizes

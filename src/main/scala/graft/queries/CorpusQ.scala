@@ -411,10 +411,8 @@ object CorpusQ {
     Q("q101_containment", (s, dir) => {
       // parallelize before the shingle projection (the q156 lesson)
       graft.ops.DedupOps.containmentPairs(
-        graft.ops.Partitioning.ensureParallel(
-          t(s, dir, "documents").select(col("doc_id"), col("text")))
-          .select(col("doc_id"),
-            ShinglesExpr.shingles(toks, 3).as("sh")),
+        docText(s, dir).select(col("doc_id"),
+          ShinglesExpr.shingles(toks, 3).as("sh")),
         "doc_id", "sh", 0.8)
         .orderBy("a_id", "b_id")
     }, oracle =
@@ -745,8 +743,7 @@ object CorpusQ {
     // candidates as usual. Emits, per new doc, how many established
     // docs it duplicates and the best match.
     Q("q118_incremental_dedup", (s, dir) => {
-      val docs = graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents").select(col("doc_id"), col("text")))
+      val docs = docText(s, dir)
       val mx = docs.agg((max(col("doc_id")) + 1).as("m"))
       val posts = docs
         .select(col("doc_id"), ShinglesExpr.shingles(toks, 3).as("shs"))

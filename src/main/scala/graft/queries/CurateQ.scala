@@ -1008,9 +1008,7 @@ object CurateQ {
       // serializes it into one task (measured 3.2 s of a 4 s wall on
       // one core; at scale the splits already parallelize — guide §2.5
       // input-skew fix)
-      val spans = graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents")
-          .select(col("doc_id"), col("text")))
+      val spans = docText(s, dir)
         .withColumn("split",
           when(h < "cccc", "train").when(h < "e666", "val")
             .otherwise("test"))
@@ -1272,8 +1270,7 @@ object CurateQ {
       // transform/slice/concat_ws chain evaluates interpreted per
       // element (HigherOrderFunction is outside whole-stage codegen)
       // and this relation is the query's hot pass, consumed twice
-      val bg = graft.ops.Partitioning.ensureParallel(
-        t(s, dir, "documents").select(col("doc_id"), col("text")))
+      val bg = docText(s, dir)
         .select(col("doc_id"), toks(col("text")).as("tk"))
         .filter(size(col("tk")) >= 2)
         .select(col("doc_id"), explode(graft.functions.ShinglesExpr

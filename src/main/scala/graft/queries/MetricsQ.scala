@@ -80,11 +80,10 @@ object MetricsQ {
     * qualifying pair meets on exactly one cell key. Returns
     * (a_id, b_id, dinf) with a_id < b_id. */
   private def gridPairs(embeddings: DataFrame, r: Long): DataFrame = {
+    import graft.ops.SimilarityOps.lattice
     val pts = embeddings.select(col("vec_id"),
-      floor(element_at(col("embedding"), 1).cast("double") * 1000)
-        .cast("long").as("x"),
-      floor(element_at(col("embedding"), 2).cast("double") * 1000)
-        .cast("long").as("y"))
+      lattice(element_at(col("embedding"), 1)).as("x"),
+      lattice(element_at(col("embedding"), 2)).as("y"))
     def cell(c: Column) = ldiv(c, lit(r))
     val a = pts.select(col("vec_id").as("a_id"), col("x").as("ax"),
       col("y").as("ay"), cell(col("x")).as("cx"), cell(col("y")).as("cy"))
@@ -781,8 +780,7 @@ object MetricsQ {
     // schema hash-fails on formatting alone (r8 verdict root cause);
     // string digits are exact at any magnitude.
     Q("q230_embedding_covariance", (s, dir) => {
-      val quant = transform(col("embedding"),
-        v => floor(v.cast("double") * 1000).cast("long"))
+      val quant = graft.ops.SimilarityOps.latticeVec(col("embedding"))
       // parallelize before the 2016-per-row pair fan-out (the q156
       // lesson — this partial agg measured ~1 s CPU on the single
       // bench-SF scan task; at scale the splits already parallelize)
@@ -1582,8 +1580,7 @@ object MetricsQ {
     // (q_id, vec_id) equi join of two 10-row-per-probe sets.
     Q("q238_hamming_recall", (s, dir) => {
       import graft.functions.LongDotExpr.longDot
-      val quant = transform(col("embedding"),
-        v => floor(v.cast("double") * 1000).cast("long"))
+      val quant = graft.ops.SimilarityOps.latticeVec(col("embedding"))
       def word(lo: Int, hi: Int): Column =
         (lo to hi).map(k =>
           when(element_at(col("embedding"), k + 1).cast("double") >= 0,
@@ -2053,8 +2050,7 @@ object MetricsQ {
       val exact = ScaleQ.dedupEdges(s, dir).select("a_id", "b_id")
       // parallelize before the shingle+md5 signature rollup (the q156
       // lesson): single-file bench scans otherwise run it one-task
-      val sh = graft.ops.Partitioning.ensureParallel(
-          t(s, dir, "documents").select(col("doc_id"), col("text")))
+      val sh = docText(s, dir)
         .select(col("doc_id"), explode(graft.functions.ShinglesExpr
           .shingles(TextOps.tokens(col("text")), 3)).as("sh"))
       val sigAggs = (0 until 8).map(r =>

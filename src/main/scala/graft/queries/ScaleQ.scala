@@ -548,8 +548,7 @@ object ScaleQ {
     // stays spec-gated as the cheap-hash variant, and the winnowing
     // guarantee itself is PropertySpec-pinned for both families.
     Q("q68_winnow_dups", (s, dir) => {
-      val d = Partitioning.ensureParallel(
-          t(s, dir, "documents").select(col("doc_id"), col("text")))
+      val d = docText(s, dir)
         .select(col("doc_id").as("id"),
           graft.functions.WinnowMd5Expr.winnowMd5(toks(col("text")), 3, 4)
             .as("fps"))

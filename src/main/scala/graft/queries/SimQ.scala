@@ -484,29 +484,16 @@ object SimQ {
     // The centroid checksum rides along the final assignment instead of
     // re-evaluating the update subplan a second time.
     Q("q182_kmeans_embed", (s, dir) => {
+      import SimilarityOps.lloydAssign
       val k = 4
-      val quant = transform(col("embedding"),
-        v => floor(v.cast("double") * 1000).cast("long"))
       val base = t(s, dir, "embeddings")
-        .select(col("vec_id"), quant.as("q"))
+        .select(col("vec_id"), SimilarityOps.latticeVec(col("embedding"))
+          .as("q"))
         .localCheckpoint()
       val c0 = base.filter(col("vec_id") < k)
         .select(col("vec_id").as("cid"), col("q").as("cent"))
-      // ‖q−c‖² via codegen'd dot identities (LongDotExpr) — identical
-      // integers, no interpreted per-element lambdas in the assign scan
-      def dist2(q: Column, cent: Column): Column = {
-        import graft.functions.LongDotExpr.longDot
-        longDot(q, q) - lit(2L) * longDot(q, cent) + longDot(cent, cent)
-      }
-      def assign(cents: DataFrame): DataFrame = {
-        val w = Window.partitionBy("vec_id").orderBy("dist", "cid")
-        base.crossJoin(broadcast(cents))
-          .select(col("vec_id"), col("q"), col("cid"),
-            dist2(col("q"), col("cent")).as("dist"),
-            aggregate(col("cent"), lit(0L), (a, v) => a + v).as("centsum"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1).drop("rn")
-      }
+      // a partially aggregating update (no cid pre-exchange), unlike
+      // SimilarityOps.lloydUpdate
       def update(assigned: DataFrame): DataFrame =
         assigned
           .select(col("cid"), posexplode(col("q")).as(Seq("pos", "v")))
@@ -515,7 +502,9 @@ object SimQ {
           .groupBy("cid")
           .agg(transform(array_sort(collect_list(struct(col("pos"),
             col("cv")))), x => x.getField("cv")).as("cent"))
-      val finalAssign = assign(update(assign(update(assign(c0)))))
+      val finalAssign = lloydAssign(base,
+        update(lloydAssign(base, update(lloydAssign(base, c0)))),
+        aggregate(col("cent"), lit(0L), (a, v) => a + v).as("centsum"))
       finalAssign.groupBy("cid")
         .agg(count(lit(1)).as("n_members"),
           sum(col("dist")).as("inertia"),
@@ -768,7 +757,7 @@ object SimQ {
       val probed = cents1.crossJoin(broadcast(qv))
         .select(col("cid"),
           zip_with(col("qq"), col("cent"), (a, b) => a - b).as("qr"),
-          qdist2(col("qq"), col("cent")).as("cdist"))
+          SimilarityOps.dist2(col("qq"), col("cent")).as("cdist"))
         .orderBy("cdist", "cid").limit(2)
       val qrExpl = probed
         .select(col("cid"), posexplode(col("qr")).as(Seq("pos", "v")))
@@ -884,7 +873,7 @@ object SimQ {
       val exact = q.crossJoin(broadcast(probes))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id"),
-          qdist2(col("q"), col("pq")).as("d"))
+          SimilarityOps.dist2(col("q"), col("pq")).as("d"))
         .withColumn("rn", row_number().over(wq))
         .filter(col("rn") <= 10)
         .select("q_id", "vec_id")
@@ -892,7 +881,7 @@ object SimQ {
       val pcell = cents1.crossJoin(broadcast(probes))
         .select(col("q_id"), col("cid"),
           zip_with(col("pq"), col("cent"), (a, b) => a - b).as("qr"),
-          qdist2(col("pq"), col("cent")).as("cd"))
+          SimilarityOps.dist2(col("pq"), col("cent")).as("cd"))
         .withColumn("rn", row_number().over(wc))
         .filter(col("rn") <= 2)
         .select("q_id", "cid", "qr")
@@ -1102,8 +1091,8 @@ object SimQ {
         -(longDot(q, q) - lit(2L) * longDot(q, typedlit(c)) + lit(cc))
       }
       val base = t(s, dir, "embeddings")
-        .select(col("vec_id"), transform(col("embedding"),
-          v => floor(v.cast("double") * 1000).cast("long")).as("q"))
+        .select(col("vec_id"),
+          SimilarityOps.latticeVec(col("embedding")).as("q"))
         .localCheckpoint()
       val qvec = base.filter(col("vec_id") === 1)
         .collect().headOption.getOrElse(throw new IllegalStateException(
@@ -1205,8 +1194,7 @@ object SimQ {
     Q("q201_embedding_drift", (s, dir) => {
       val comp = t(s, dir, "embeddings")
         .select(col("label"), (col("vec_id") % 2).as("half"),
-          posexplode(transform(col("embedding"),
-            v => floor(v.cast("double") * 1000).cast("long")))
+          posexplode(SimilarityOps.latticeVec(col("embedding")))
             .as(Seq("pos", "v")))
       val cent = comp.groupBy("label", "half", "pos")
         .agg(ldiv(sum(col("v")), count(lit(1))).as("cv"),
@@ -1304,7 +1292,7 @@ object SimQ {
     // arithmetic → exact bp via IntegralDivide. Same explode→rollup
     // shape as q258; the dim predicate folds into the partial agg.
     Q("q259_matryoshka_energy", (s, dir) => {
-      val q = floor(col("x").cast("double") * 1000).cast("long")
+      val q = SimilarityOps.lattice(col("x"))
       t(s, dir, "embeddings")
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
         .select(col("label").cast("long").as("label"),
@@ -1331,20 +1319,6 @@ object SimQ {
         |FROM g ORDER BY label""".stripMargin),
   )
 
-  /** Shared PQ lattice + one-Lloyd-round training (q185's codebook,
-    * reused by q216's ADC read path): 64 dims → 8 subspaces × 8
-    * components on the floor(x·1000) integer lattice, k=4 codes seeded
-    * from vec_id<4, one truncated-mean (toward zero, integral DIV)
-    * update. Returns (base, codebook, assignment-with-dist); base and
-    * the 256-row codebook are each localCheckpointed ONCE because both
-    * have two consumers downstream (checkpoint-two-consumers rule). */
-  /** Integer-exact squared L2 via dot identities (three codegen
-    * LongDotExpr loops, no interpreted zip_with fold). */
-  private def qdist2(a: Column, b: Column): Column = {
-    import graft.functions.LongDotExpr.longDot
-    longDot(a, a) - lit(2L) * longDot(a, b) + longDot(b, b)
-  }
-
   /** IVFADC training shared by q301/q302 (the q301 registration note
     * has the full story): quantized vectors, 4-cell coarse quantizer
     * (seeds vec_id<4, one Lloyd update), residuals vs the final
@@ -1353,36 +1327,17 @@ object SimQ {
     * relations are localCheckpointed where they have two consumers. */
   private def ivfPqTrained(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import graft.Tables.ldiv
+    import SimilarityOps.{lloydAssign, lloydUpdate, pqAssign, pqTrain}
     val q = t(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"),
-          v => floor(v.cast("double") * 1000).cast("long")).as("q"))
+        SimilarityOps.latticeVec(col("embedding")).as("q"))
       .localCheckpoint() // consumers: coarse rounds + query probe
     val c0 = q.filter(col("vec_id") < 4)
       .select(col("vec_id").as("cid"), col("q").as("cent"))
-    def coarseAssign(cents: DataFrame): DataFrame = {
-      val w = Window.partitionBy("vec_id").orderBy("dist", "cid")
-      q.crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("q"), col("cid"), col("cent"),
-          qdist2(col("q"), col("cent")).as("dist"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn", "dist")
-    }
-    // one cid-keyed exchange serves both aggregation levels (hash(cid)
-    // satisfies the (cid, pos) clustering)
-    def coarseUpdate(a: DataFrame): DataFrame = a
-      .select(col("cid"), posexplode(col("q")).as(Seq("pos", "v")))
-      .repartition(col("cid"))
-      .groupBy("cid", "pos")
-      .agg(ldiv(sum(col("v")), count(lit(1))).as("cv"))
-      .groupBy("cid")
-      .agg(transform(array_sort(collect_list(struct(col("pos"),
-        col("cv")))), x => x.getField("cv")).as("cent"))
-    val cents1 = coarseUpdate(coarseAssign(c0))
+    val cents1 = lloydUpdate(lloydAssign(q, c0).drop("dist"))
       .localCheckpoint() // consumers: final assign + query probe
     // final assignment carries the centroid so the residual is one
     // zip_with away - no second join back to the centroid table
-    val withRes = coarseAssign(cents1)
+    val withRes = lloydAssign(q, cents1, col("cent"))
       .select(col("vec_id"), col("cid"),
         zip_with(col("q"), col("cent"), (a, b) => a - b).as("r"))
       .localCheckpoint() // consumers: PQ train/encode + cell lookup
@@ -1390,56 +1345,28 @@ object SimQ {
       .select(col("vec_id"), posexplode(col("r")).as(Seq("pos", "v")))
       .select(col("vec_id"), ldiv(col("pos"), lit(8L)).as("sub"),
         (col("pos") % 8L).as("j"), col("v"))
-      .localCheckpoint() // consumers: two PQ assigns + update
-    val pc0 = rb.filter(col("vec_id") < 4)
-      .select(col("sub"), col("vec_id").as("code"), col("j"),
-        col("v").as("cv"))
-    def pqAssign(cb: DataFrame): DataFrame = {
-      val w = Window.partitionBy("vec_id", "sub").orderBy("dist", "code")
-      rb.join(broadcast(cb), Seq("sub", "j"))
-        .groupBy("vec_id", "sub", "code")
-        .agg(sum((col("v") - col("cv")) * (col("v") - col("cv")))
-          .as("dist"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn")
-    }
-    def pqUpdate(a: DataFrame): DataFrame =
-      rb.join(a.select("vec_id", "sub", "code"), Seq("vec_id", "sub"))
-        .groupBy("sub", "code", "j")
-        .agg(ldiv(sum(col("v")), count(lit(1))).as("cv"))
-    val cb1 = pqUpdate(pqAssign(pc0)).localCheckpoint()
-    val codes = pqAssign(cb1).select("vec_id", "sub", "code")
+      .localCheckpoint() // consumers: PQ training + encoding
+    val cb1 = pqTrain(rb, 4)
+    val codes = pqAssign(rb, cb1).select("vec_id", "sub", "code")
     (q, cents1, cb1, codes, withRes.select("vec_id", "cid"))
   }
 
+  /** q185/q216's PQ training: the quantized corpus as (vec_id, sub, j,
+    * v) component rows, localCheckpointed ONCE (both training and the
+    * encoding read it), and its k=4 codebook
+    * ([[SimilarityOps.pqTrain]]). Returns (base, codebook,
+    * assignment-with-dist). */
   private def pqTrained(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val k = 4
     val base = t(s, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding"))
         .as(Seq("pos", "x")))
       .select(col("vec_id"), ldiv(col("pos"), lit(8L)).as("sub"),
         (col("pos") % 8L).as("j"),
-        floor(col("x").cast("double") * 1000).cast("long").as("v"))
+        SimilarityOps.lattice(col("x")).as("v"))
       .localCheckpoint()
-    val c0 = base.filter(col("vec_id") < k)
-      .select(col("sub"), col("vec_id").as("code"), col("j"),
-        col("v").as("cv"))
-    def assign(cb: DataFrame): DataFrame = {
-      val w = Window.partitionBy("vec_id", "sub").orderBy("dist", "code")
-      base.join(broadcast(cb), Seq("sub", "j"))
-        .groupBy("vec_id", "sub", "code")
-        .agg(sum((col("v") - col("cv")) * (col("v") - col("cv")))
-          .as("dist"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn")
-    }
-    def update(a: DataFrame): DataFrame =
-      base.join(a.select("vec_id", "sub", "code"), Seq("vec_id", "sub"))
-        .groupBy("sub", "code", "j")
-        .agg(ldiv(sum(col("v")), count(lit(1))).as("cv"))
-    val cb1 = update(assign(c0)).localCheckpoint()
-    (base, cb1, assign(cb1))
+    val cb1 = SimilarityOps.pqTrain(base, 4)
+    (base, cb1, SimilarityOps.pqAssign(base, cb1))
   }
 
 

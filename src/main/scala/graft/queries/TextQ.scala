@@ -332,8 +332,7 @@ object TextQ {
       // parallelize BEFORE the shingle projection: computed on the scan
       // side of the repartition it runs in the single bench-SF scan task
       // (measured 0.7 s on one core); after it, on every core
-      val d = graft.ops.Partitioning.ensureParallel(
-          t(s, dir, "documents").select(col("doc_id"), col("text")))
+      val d = docText(s, dir)
         .select(col("doc_id"), graft.functions.ShinglesExpr
           .shingles(TextOps.tokens(col("text")), 3).as("shs"))
       DedupOps.jaccardPairs(d, "doc_id", "shs", 0.5)
@@ -361,8 +360,7 @@ object TextQ {
     // pattern as q56/q72.
     Q("q75_jaccard_prefix", (s, dir) => {
       // parallelize before the shingle projection (see q16)
-      val d = graft.ops.Partitioning.ensureParallel(
-          t(s, dir, "documents").select(col("doc_id"), col("text")))
+      val d = docText(s, dir)
         .select(col("doc_id"), graft.functions.ShinglesExpr
           .shingles(TextOps.tokens(col("text")), 3).as("shs"))
       DedupOps.jaccardPairsPrefix(d, "doc_id", "shs", 0.5)

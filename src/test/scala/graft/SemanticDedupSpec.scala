@@ -45,6 +45,68 @@ class SemanticDedupSpec extends SparkSpec {
     assert(report.map(_.getLong(2)).sum == 3)
   }
 
+  /** semanticDedup in plain Scala: floor(x·1000) lattice, the k smallest
+    * ids as seeds, three (dist, cid)-argmin assignments around two
+    * truncated-mean updates (Long division truncates toward zero, like
+    * the engine's DIV), cos ≥ 0.4 intra-cluster edges, min-id component
+    * survivors. Rows: (cid, n_vecs, n_edges, n_removed, kept_checksum). */
+  private def replica(vecs: Seq[(Long, Seq[Float])],
+      k: Int): Seq[(Long, Long, Long, Long, Long)] = {
+    val q = vecs.map { case (id, v) =>
+      id -> v.map(x => math.floor(x.toDouble * 1000).toLong) }.toMap
+    def dot(a: Seq[Long], b: Seq[Long]) =
+      a.zip(b).map { case (x, y) => x * y }.sum
+    def assign(cents: Map[Long, Seq[Long]]): Map[Long, Long] =
+      q.map { case (id, v) =>
+        id -> cents.toSeq.map { case (cid, c) =>
+          (v.zip(c).map { case (x, y) => (x - y) * (x - y) }.sum, cid)
+        }.min._2 }
+    def update(a: Map[Long, Long]): Map[Long, Seq[Long]] =
+      a.groupBy(_._2).map { case (cid, members) =>
+        val vs = members.keys.toSeq.map(q)
+        cid -> vs.transpose.map(_.sum / vs.size) }
+    val seeds = q.keys.toSeq.sorted.take(k).map(id => id -> q(id)).toMap
+    val cluster = assign(update(assign(update(assign(seeds)))))
+    val edges = for {
+      (a, ca) <- cluster.toSeq; (b, cb) <- cluster.toSeq
+      if ca == cb && a < b
+      d = dot(q(a), q(b))
+      if d > 0 && 25 * d * d >= 4 * dot(q(a), q(a)) * dot(q(b), q(b))
+    } yield (ca, a, b)
+    // min-label propagation to a fixpoint: label = component minimum
+    var label = cluster.keys.map(id => id -> id).toMap
+    var changed = true
+    while (changed) {
+      val next = edges.foldLeft(label) { case (l, (_, a, b)) =>
+        val m = math.min(l(a), l(b)); l.updated(a, m).updated(b, m) }
+      changed = next != label
+      label = next
+    }
+    cluster.groupBy(_._2).toSeq.sortBy(_._1).map { case (cid, members) =>
+      val ids = members.keys.toSeq
+      val kept = ids.filter(id => label(id) == id)
+      (cid, ids.size.toLong, edges.count(_._1 == cid).toLong,
+        (ids.size - kept.size).toLong, kept.sum)
+    }
+  }
+
+  test("k > 8 (the min_by argmin) matches a plain-Scala replica at k = 12") {
+    // ids 0 and 1 carry one vector: their seed centroids tie for every
+    // vector, so the (dist, cid) tiebreak decides the first assignment.
+    // At n = 90 a floor (not truncating) centroid mean moves a vector,
+    // so the report also pins truncation toward zero.
+    val vecs = (0L until 90L).map(i =>
+      (i, Seq.tabulate(8)(d => comp(math.max(i, 1L), d))))
+    val report = SimilarityOps.semanticDedup(
+      vecs.toDF("vec_id", "embedding"), "vec_id", "embedding", k = 12)
+      .collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+      .toSeq
+    val expected = replica(vecs, 12)
+    assert(expected.map(_._4).sum > 0, "the corpus must exercise dedup")
+    assert(report == expected)
+  }
+
   test("semanticDedupAuto picks k = ceil(n / target)") {
     val df = corpus(240)
     val auto = SimilarityOps.semanticDedupAuto(
