@@ -37,6 +37,21 @@ if [ -n "$quant" ]; then
   echo "$quant"
   exit 1
 fi
+# one inflate loop: every inflate in the engine goes through Zlib (the
+# FDICT refusal, the truncation check, the output bound); no other main
+# file builds an Inflater or reads through a JDK inflating stream.
+# Doc-comment and // lines are not code; src/test may use JDK streams
+# as references.
+infl=$(grep -rnE --include='*.scala' \
+  'new (java\.util\.zip\.)?Inflater|withInflater|InflaterInputStream|GZIPInputStream|ZipInputStream' \
+  src/main \
+  | grep -v '^src/main/scala/graft/multimodal/Zlib\.scala:' \
+  | grep -v '^[^:]*:[0-9]*:[[:space:]]*\(\*\|//\)' || true)
+if [ -n "$infl" ]; then
+  echo "[precommit] inflate outside Zlib (use Zlib.inflate/gunzip, ZipCodec.read):"
+  echo "$infl"
+  exit 1
+fi
 # docs/scripts-only commits don't need the JVM spin-up
 if git diff --cached --name-only | grep -q '\.scala$\|\.sbt$'; then
   # Test/compile builds main too, and catches a change that breaks a test

@@ -81,12 +81,12 @@ object DocParse {
     out.result()
   }
 
-  /** S9, binary half: decode a .docx IN-ENGINE (DocxCodec — pure JDK
-    * zip + DOM, no external codec) and apply the reference's extraction
-    * order (document_spider.py:163-253): tables first — header row +
-    * data rows, headers resolved through the SAME synonym map as the
-    * CSV path — and only when no table yields a valid record, the
-    * paragraph state machine over the document text. */
+  /** S9, binary half: decode a .docx IN-ENGINE (DocxCodec — ZipCodec's
+    * zip reader + DOM, no external codec) and apply the reference's
+    * extraction order (document_spider.py:163-253): tables first —
+    * header row + data rows, headers resolved through the SAME synonym
+    * map as the CSV path — and only when no table yields a valid
+    * record, the paragraph state machine over the document text. */
   def parseDocx(bytes: Array[Byte]): Seq[DocRecord] = {
     val c = DocxCodec.decode(bytes)
     val fromTables = c.tables.flatMap(recordsFromTable)
@@ -131,17 +131,18 @@ object DocParse {
   /** Content-based format detection — the reference routes uploads by
     * file extension (tasks.py, document_spider.py handler map); magic
     * bytes are the honest version of the same dispatch (an extension
-    * lies, a header doesn't). Zip containers are discriminated by their
-    * defining part. */
+    * lies, a header doesn't). Zip containers are discriminated by the
+    * NAME of their defining part in the central directory; no member
+    * is inflated here, so a docx whose document.xml is corrupt sniffs
+    * as docx and fails in the docx decoder. */
   def sniff(bytes: Array[Byte]): String = {
     if (bytes.length >= 5 &&
       new String(bytes, 0, 5, "ISO-8859-1") == "%PDF-") "pdf"
     else if (bytes.length >= 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
       bytes(2) == 3 && bytes(3) == 4) {
-      if (DocxCodec.zipEntryBytes(bytes, "word/document.xml").isDefined)
-        "docx"
-      else if (DocxCodec.zipEntryBytes(bytes, "xl/workbook.xml").isDefined)
-        "xlsx"
+      val names = graft.multimodal.ZipCodec.census(bytes).map(_.name)
+      if (names.contains("word/document.xml")) "docx"
+      else if (names.contains("xl/workbook.xml")) "xlsx"
       else "zip"
     } else {
       val s = new String(bytes, "UTF-8")

@@ -1,12 +1,15 @@
 package graft.ingest
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
+import java.io.ByteArrayOutputStream
+import java.util.zip.{ZipEntry, ZipOutputStream}
+
+import graft.multimodal.ZipCodec
 
 /** In-engine .docx (OOXML) binary codec — closes the S9 "binary decode
-  * out-of-engine" stance with pure JDK plumbing (ZipInputStream + JAXP
-  * DOM): no external codec dependency. Mirrors exactly the surface the
-  * reference touches through python-docx (document_spider.py:163-253):
+  * out-of-engine" stance with in-engine plumbing (ZipCodec's
+  * central-directory reader + JAXP DOM): no external codec dependency.
+  * Mirrors exactly the surface the reference touches through
+  * python-docx (document_spider.py:163-253):
   * `Document.tables` as rows of trimmed cell texts and
   * `Document.paragraphs` as flat strings, in body order.
   *
@@ -27,7 +30,8 @@ object DocxCodec {
 
   /** Decode a .docx binary into body-order paragraphs and tables. */
   def decode(bytes: Array[Byte]): DocxContent = {
-    val xml = zipEntryBytes(bytes, "word/document.xml")
+    val xml = ZipCodec.census(bytes).find(_.name == "word/document.xml")
+      .map(ZipCodec.read(bytes, _))
       .getOrElse(throw new IllegalArgumentException(
         "not a docx: missing word/document.xml"))
     // thread-local hardened builder (no doctypes, no external entities)
@@ -136,20 +140,5 @@ object DocxCodec {
     }
     zip.close()
     out.toByteArray
-  }
-
-  private[ingest] def zipEntryBytes(bytes: Array[Byte],
-      name: String): Option[Array[Byte]] = {
-    val zin = new ZipInputStream(new ByteArrayInputStream(bytes))
-    try {
-      Iterator.continually(zin.getNextEntry).takeWhile(_ != null)
-        .collectFirst { case e if e.getName == name =>
-          val buf = new ByteArrayOutputStream()
-          val tmp = new Array[Byte](8192)
-          var n = zin.read(tmp)
-          while (n > 0) { buf.write(tmp, 0, n); n = zin.read(tmp) }
-          buf.toByteArray
-        }
-    } finally zin.close()
   }
 }

@@ -1,7 +1,9 @@
 package graft.ingest
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.{Deflater, Inflater}
+import java.util.zip.Deflater
+
+import graft.multimodal.{PngCodec, Zlib}
 
 /** In-engine PDF text codec — the S10 "binary decode out-of-engine"
   * stance narrowed to its honest core. The reference's PDF route
@@ -474,7 +476,7 @@ object PdfCodec {
       (1, xrefAt.toLong, 0)) // the xref stream references itself
     val (xdata, parms) =
       if (predictor)
-        (deflated(pngPredictEncode(table, 6, _ => 2)),
+        (deflated(PngCodec.filterRows(table, 6, 1, _ => 2)),
           " /DecodeParms << /Predictor 12 /Columns 6 >>")
       else (deflated(table), "")
     pdf.stream(5, "/Type /XRef /Size 6 /W [1 4 1] /Root 1 0 R " +
@@ -814,7 +816,7 @@ object PdfCodec {
       .map(_.group(1).toInt).getOrElse(1)
     val predictor = intParm(dict, "/Predictor", 1)
     val content0 = allFilters.foldLeft(seg) { (bytes, f) => f match {
-      case "/FlateDecode" => inflate(bytes)
+      case "/FlateDecode" => Zlib.inflate(bytes)
       case "/ASCIIHexDecode" => asciiHexDecode(bytes)
       case "/ASCII85Decode" => ascii85Decode(bytes)
       case "/RunLengthDecode" => runLengthDecode(bytes)
@@ -1141,90 +1143,17 @@ object PdfCodec {
   /** PNG predictor un-filtering (RFC 2083 §6; PDF /Predictor 10-15):
     * each stored row is one filter-type byte (0 None, 1 Sub, 2 Up,
     * 3 Average, 4 Paeth) followed by ceil(columns·colors·bpc/8)
-    * filtered bytes; the row above the first is all zeros. */
+    * filtered bytes; the row above the first is all zeros. The rows
+    * invert through PngCodec's predictor, `bpp` = max(1, colors·bpc/8). */
   private[graft] def pngUnpredict(data: Array[Byte], columns: Int,
       colors: Int, bpc: Int): Array[Byte] = {
     val rowLen = (columns * colors * bpc + 7) / 8
-    val bpp = math.max(1, colors * bpc / 8)
     require(rowLen > 0, s"bad PNG predictor geometry cols=$columns")
     require(data.length % (rowLen + 1) == 0,
       s"PNG-predicted data (${data.length} B) is not whole " +
         s"${rowLen + 1}-byte rows")
-    val nRows = data.length / (rowLen + 1)
-    val out = new Array[Byte](nRows * rowLen)
-    val prior = new Array[Byte](rowLen)
-    var r = 0
-    while (r < nRows) {
-      val ft = data(r * (rowLen + 1)) & 0xff
-      val src = r * (rowLen + 1) + 1
-      val dst = r * rowLen
-      var i = 0
-      while (i < rowLen) {
-        val rawB = data(src + i) & 0xff
-        val left = if (i >= bpp) out(dst + i - bpp) & 0xff else 0
-        val up = prior(i) & 0xff
-        val ul = if (i >= bpp) prior(i - bpp) & 0xff else 0
-        val v = ft match {
-          case 0 => rawB
-          case 1 => rawB + left
-          case 2 => rawB + up
-          case 3 => rawB + ((left + up) >> 1)
-          case 4 => rawB + paeth(left, up, ul)
-          case other => throw new IllegalArgumentException(
-            s"bad PNG row filter $other at row $r")
-        }
-        out(dst + i) = (v & 0xff).toByte
-        i += 1
-      }
-      System.arraycopy(out, dst, prior, 0, rowLen)
-      r += 1
-    }
-    out
-  }
-
-  private def paeth(a: Int, b: Int, c: Int): Int = {
-    val p = a + b - c
-    val pa = math.abs(p - a)
-    val pb = math.abs(p - b)
-    val pc = math.abs(p - c)
-    if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-  }
-
-  /** Mirror PNG-predictor encoder (fixture side): colors=1, bpc=8;
-    * `rowFilter(r)` picks the 0..4 filter type per row so one fixture
-    * exercises None/Sub/Up/Average/Paeth together. */
-  private[graft] def pngPredictEncode(data: Array[Byte], columns: Int,
-      rowFilter: Int => Int): Array[Byte] = {
-    require(data.length % columns == 0,
-      s"pngPredictEncode needs whole rows (${data.length} % $columns)")
-    val nRows = data.length / columns
-    val out = new Array[Byte](nRows * (columns + 1))
-    val zero = new Array[Byte](columns)
-    var r = 0
-    while (r < nRows) {
-      val ft = rowFilter(r)
-      out(r * (columns + 1)) = ft.toByte
-      val prior = if (r == 0) zero else data
-      val priorOff = (r - 1) * columns
-      var i = 0
-      while (i < columns) {
-        val cur = data(r * columns + i) & 0xff
-        val left = if (i >= 1) data(r * columns + i - 1) & 0xff else 0
-        val up = if (r == 0) 0 else prior(priorOff + i) & 0xff
-        val ul = if (r == 0 || i < 1) 0 else prior(priorOff + i - 1) & 0xff
-        val predv = ft match {
-          case 0 => 0
-          case 1 => left
-          case 2 => up
-          case 3 => (left + up) >> 1
-          case 4 => paeth(left, up, ul)
-        }
-        out(r * (columns + 1) + 1 + i) = ((cur - predv) & 0xff).toByte
-        i += 1
-      }
-      r += 1
-    }
-    out
+    PngCodec.unfilterRows(data, 0, rowLen, data.length / (rowLen + 1),
+      math.max(1, colors * bpc / 8))
   }
 
   /** TIFF Predictor 2 (horizontal differencing) un-filter: each byte
@@ -1270,30 +1199,6 @@ object PdfCodec {
     }
     out
   }
-
-  private def inflate(data: Array[Byte]): Array[Byte] =
-    graft.multimodal.Zlib.withInflater(nowrap = false) { inf =>
-      inf.setInput(data)
-      val out = new ByteArrayOutputStream(data.length * 4)
-      val tmp = new Array[Byte](8192)
-      try {
-        while (!inf.finished()) {
-          val n = inf.inflate(tmp)
-          if (n == 0 && inf.needsInput())
-            throw new IllegalArgumentException("truncated Flate stream")
-          out.write(tmp, 0, n)
-        }
-      } catch {
-        // zlib's checked exception (bad header, dictionary mismatch,
-        // failed adler check — what RC4 garbage from a corrupted
-        // encrypted stream produces) is a perimeter hit like any other:
-        // refuse loudly with the standard exception type
-        case e: java.util.zip.DataFormatException =>
-          throw new IllegalArgumentException(
-            s"corrupt Flate stream: ${e.getMessage}")
-      }
-      out.toByteArray
-    }
 
   /** ASCIIHexDecode (PDF 32000-1 §7.4.2): hex digit pairs, whitespace
     * ignored, `>` is EOD; an odd trailing digit implies a final 0. */
@@ -1776,11 +1681,11 @@ object PdfCodec {
       case "a85+flate" => // chain: inflate happens LAST on decode
         ascii85Encode(deflated(content))
       case "flate+predpng" => // row filter cycles None/Sub/Up/Avg/Paeth
-        deflated(pngPredictEncode(rowPadded, predCols, r => r % 5))
+        deflated(PngCodec.filterRows(rowPadded, predCols, 1, _ % 5))
       case "flate+pred2" => // TIFF horizontal differencing
         deflated(tiffPredictEncode(rowPadded, predCols))
       case "lzw+predpng" => // predictor parameterizes LZW too (§7.4.4.4)
-        lzwEncode(pngPredictEncode(rowPadded, predCols, r => r % 5))
+        lzwEncode(PngCodec.filterRows(rowPadded, predCols, 1, _ % 5))
       case "raw" => content
       case other => throw new IllegalArgumentException(
         s"unknown filterName $other — flate | raw | ahx | a85 | rle | " +
@@ -1822,7 +1727,7 @@ object PdfCodec {
   }
 
   private def deflated(b: Array[Byte]): Array[Byte] =
-    graft.multimodal.Zlib.deflate(b, level = Deflater.BEST_SPEED)
+    Zlib.deflate(b, level = Deflater.BEST_SPEED)
 
   /** One fixture file being written: its bytes plus the offset of every
     * numbered object, so cross-reference sections are computed from

@@ -1,15 +1,17 @@
 package graft.ingest
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
+import java.io.ByteArrayOutputStream
+import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import graft.multimodal.ZipCodec
 import org.w3c.dom.Element
 
 /** In-engine .xlsx (OOXML spreadsheet) codec — closes the S8 Excel
-  * stance the same way DocxCodec closed S9: pure JDK zip + namespace-
-  * aware DOM, no external codec dependency. Mirrors the surface the
-  * reference touches through `pd.read_excel` (document_spider.py:136-161):
-  * sheets in workbook order, each as rows of cell strings.
+  * stance the same way DocxCodec closed S9: ZipCodec's central-
+  * directory reader + namespace-aware DOM, no external codec
+  * dependency. Mirrors the surface the reference touches through
+  * `pd.read_excel` (document_spider.py:136-161): sheets in workbook
+  * order, each as rows of cell strings.
   *
   * Decode covers what real producers write: shared strings (`t="s"`,
   * including rich-text `<r>` runs), inline strings (`t="inlineStr"`),
@@ -313,22 +315,12 @@ object XlsxCodec {
   private def dom(xml: Array[Byte]): org.w3c.dom.Document =
     SecureXml.parse(xml) // thread-local builder; hardened (no doctypes)
 
-  /** One pass over the zip, all entries materialized (workbooks need
-    * random part access: rels point forward and backward). */
-  private def zipEntries(bytes: Array[Byte]): Map[String, Array[Byte]] = {
-    val zin = new ZipInputStream(new ByteArrayInputStream(bytes))
-    try {
-      Iterator.continually(zin.getNextEntry).takeWhile(_ != null)
-        .filterNot(_.isDirectory)
-        .map { e =>
-          val buf = new ByteArrayOutputStream()
-          val tmp = new Array[Byte](8192)
-          var n = zin.read(tmp)
-          while (n > 0) { buf.write(tmp, 0, n); n = zin.read(tmp) }
-          e.getName -> buf.toByteArray
-        }.toMap
-    } finally zin.close()
-  }
+  /** Every file member, read through the central directory
+    * (workbooks need random part access: rels point forward and
+    * backward). */
+  private def zipEntries(bytes: Array[Byte]): Map[String, Array[Byte]] =
+    ZipCodec.census(bytes).filterNot(_.name.endsWith("/"))
+      .map(e => e.name -> ZipCodec.read(bytes, e)).toMap
 
   /** Encode sheets as a minimal valid .xlsx — the test and roundtrip-
     * query side. `sharedStrings=true` writes string cells through a

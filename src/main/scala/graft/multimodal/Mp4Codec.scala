@@ -212,6 +212,45 @@ object Mp4Codec {
     ftyp ++ moov ++ box("mdat", mdatPayload)
   }
 
+  /** Big-endian field reads over one file, and the one box walk
+    * (§4.2) behind [[sampleTable]], [[avcConfig]] and [[census]]. */
+  private final class Boxes(bytes: Array[Byte]) {
+    def u16(at: Int): Int =
+      ((bytes(at) & 0xff) << 8) | (bytes(at + 1) & 0xff)
+    def u32(at: Int): Long =
+      ((bytes(at) & 0xffL) << 24) | ((bytes(at + 1) & 0xffL) << 16) |
+        ((bytes(at + 2) & 0xffL) << 8) | (bytes(at + 3) & 0xffL)
+    def u64(at: Int): Long = (u32(at) << 32) | u32(at + 4)
+    def typ(at: Int): String = new String(
+      java.util.Arrays.copyOfRange(bytes, at, at + 4), "US-ASCII")
+
+    /** Walk the boxes in [start, end): size + type header, 64-bit
+      * largesize, size 0 = to `end`; each box must fit its parent.
+      * `visit(type, bodyAt, bodyEnd, size)` sees every box before the
+      * walk recurses into it (standard containers only); the walk
+      * stops once `done` holds. */
+    def walk(start: Int, end: Int, done: => Boolean = false)(
+        visit: (String, Int, Int, Long) => Unit): Unit = {
+      var pos = start
+      while (pos < end && !done) {
+        require(pos + 8 <= end, s"truncated box header at offset $pos")
+        val size0 = u32(pos)
+        val t = typ(pos + 4)
+        val (size, hdr) =
+          if (size0 == 1) {
+            require(pos + 16 <= end, s"truncated largesize at $pos")
+            (u64(pos + 8), 16)
+          } else if (size0 == 0) ((end - pos).toLong, 8)
+          else (size0, 8)
+        require(size >= hdr && pos + size <= end,
+          s"box '$t' at $pos declares $size bytes past offset $end")
+        visit(t, pos + hdr, pos + size.toInt, size)
+        if (Containers(t)) walk(pos + hdr, pos + size.toInt, done)(visit)
+        pos += size.toInt
+      }
+    }
+  }
+
   final case class SampleSlice(sample: Int, offset: Long, size: Long)
 
   /** Expand the sample tables into per-sample byte ranges — the walk
@@ -229,73 +268,49 @@ object Mp4Codec {
     var sizes: Seq[Long] = null
     var chunkOffs: Seq[Long] = null
     var stsc: Seq[(Int, Int)] = null
-    def u32(at: Int): Long =
-      ((bytes(at) & 0xffL) << 24) | ((bytes(at + 1) & 0xffL) << 16) |
-        ((bytes(at + 2) & 0xffL) << 8) | (bytes(at + 3) & 0xffL)
-    def u64(at: Int): Long = (u32(at) << 32) | u32(at + 4)
-    def typ(at: Int): String = new String(
-      java.util.Arrays.copyOfRange(bytes, at, at + 4), "US-ASCII")
-    def walk(start: Int, end: Int): Unit = {
-      var pos = start
-      while (pos < end) {
-        require(pos + 8 <= end, s"truncated box header at offset $pos")
-        val size0 = u32(pos)
-        val t = typ(pos + 4)
-        val (size, hdr) =
-          if (size0 == 1) {
-            require(pos + 16 <= end, s"truncated largesize at $pos")
-            (u64(pos + 8), 16)
-          } else if (size0 == 0) ((end - pos).toLong, 8)
-          else (size0, 8)
-        require(size >= hdr && pos + size <= end,
-          s"box '$t' at $pos declares $size bytes past offset $end")
-        val bodyAt = pos + hdr
-        val bodyEnd = pos + size.toInt
-        t match {
-          case c if Containers(c) => walk(bodyAt, bodyEnd)
-          case "stsd" =>
-            require(bodyAt + 16 <= bodyEnd, "stsd too small")
-            require(u32(bodyAt + 4) >= 1, "stsd with no entries")
-            codec = typ(bodyAt + 12)
-          case "stsz" =>
-            require(bodyAt + 12 <= bodyEnd, "stsz too small")
-            val fixed = u32(bodyAt + 4)
-            val n = u32(bodyAt + 8).toInt
-            sizes =
-              if (fixed != 0) Seq.fill(n)(fixed)
-              else {
-                require(bodyAt + 12 + 4L * n <= bodyEnd,
-                  s"stsz table truncated: $n entries")
-                (0 until n).map(k => u32(bodyAt + 12 + 4 * k))
-              }
-          case "stco" =>
-            require(bodyAt + 8 <= bodyEnd, "stco too small")
-            val n = u32(bodyAt + 4).toInt
-            require(bodyAt + 8 + 4L * n <= bodyEnd,
-              s"stco table truncated: $n entries")
-            chunkOffs = (0 until n).map(k => u32(bodyAt + 8 + 4 * k))
-          case "co64" =>
-            require(bodyAt + 8 <= bodyEnd, "co64 too small")
-            val n = u32(bodyAt + 4).toInt
-            require(bodyAt + 8 + 8L * n <= bodyEnd,
-              s"co64 table truncated: $n entries")
-            chunkOffs = (0 until n).map(k => u64(bodyAt + 8 + 8 * k))
-          case "stsc" =>
-            require(bodyAt + 8 <= bodyEnd, "stsc too small")
-            val n = u32(bodyAt + 4).toInt
-            require(bodyAt + 8 + 12L * n <= bodyEnd,
-              s"stsc table truncated: $n entries")
-            stsc = (0 until n).map { k =>
-              (u32(bodyAt + 8 + 12 * k).toInt,
-                u32(bodyAt + 12 + 12 * k).toInt)
+    val r = new Boxes(bytes); import r._
+    require(bytes.length >= 8, s"not a BMFF file: ${bytes.length} bytes")
+    walk(0, bytes.length) { (t, bodyAt, bodyEnd, _) =>
+      t match {
+        case "stsd" =>
+          require(bodyAt + 16 <= bodyEnd, "stsd too small")
+          require(u32(bodyAt + 4) >= 1, "stsd with no entries")
+          codec = typ(bodyAt + 12)
+        case "stsz" =>
+          require(bodyAt + 12 <= bodyEnd, "stsz too small")
+          val fixed = u32(bodyAt + 4)
+          val n = u32(bodyAt + 8).toInt
+          sizes =
+            if (fixed != 0) Seq.fill(n)(fixed)
+            else {
+              require(bodyAt + 12 + 4L * n <= bodyEnd,
+                s"stsz table truncated: $n entries")
+              (0 until n).map(k => u32(bodyAt + 12 + 4 * k))
             }
-          case _ => ()
-        }
-        pos += size.toInt
+        case "stco" =>
+          require(bodyAt + 8 <= bodyEnd, "stco too small")
+          val n = u32(bodyAt + 4).toInt
+          require(bodyAt + 8 + 4L * n <= bodyEnd,
+            s"stco table truncated: $n entries")
+          chunkOffs = (0 until n).map(k => u32(bodyAt + 8 + 4 * k))
+        case "co64" =>
+          require(bodyAt + 8 <= bodyEnd, "co64 too small")
+          val n = u32(bodyAt + 4).toInt
+          require(bodyAt + 8 + 8L * n <= bodyEnd,
+            s"co64 table truncated: $n entries")
+          chunkOffs = (0 until n).map(k => u64(bodyAt + 8 + 8 * k))
+        case "stsc" =>
+          require(bodyAt + 8 <= bodyEnd, "stsc too small")
+          val n = u32(bodyAt + 4).toInt
+          require(bodyAt + 8 + 12L * n <= bodyEnd,
+            s"stsc table truncated: $n entries")
+          stsc = (0 until n).map { k =>
+            (u32(bodyAt + 8 + 12 * k).toInt,
+              u32(bodyAt + 12 + 12 * k).toInt)
+          }
+        case _ => ()
       }
     }
-    require(bytes.length >= 8, s"not a BMFF file: ${bytes.length} bytes")
-    walk(0, bytes.length)
     require(sizes != null, "no stsz box")
     require(chunkOffs != null, "no stco/co64 box")
     require(stsc != null && stsc.nonEmpty, "no stsc box")
@@ -344,80 +359,54 @@ object Mp4Codec {
     * None when the track's first entry is not avc1 or carries no
     * avcC; loud on a malformed record. */
   def avcConfig(bytes: Array[Byte]): Option[AvcConfig] = {
-    def u32(at: Int): Long =
-      ((bytes(at) & 0xffL) << 24) | ((bytes(at + 1) & 0xffL) << 16) |
-        ((bytes(at + 2) & 0xffL) << 8) | (bytes(at + 3) & 0xffL)
-    def u16(at: Int): Int =
-      ((bytes(at) & 0xff) << 8) | (bytes(at + 1) & 0xff)
-    def typ(at: Int): String = new String(
-      java.util.Arrays.copyOfRange(bytes, at, at + 4), "US-ASCII")
+    val r = new Boxes(bytes); import r._
     var found: Option[AvcConfig] = None
-    def walk(start: Int, end: Int): Unit = {
-      var pos = start
-      while (pos < end && found.isEmpty) {
-        require(pos + 8 <= end, s"truncated box header at offset $pos")
-        val size0 = u32(pos)
-        val t = typ(pos + 4)
-        val (size, hdr) =
-          if (size0 == 1) {
-            require(pos + 16 <= end, s"truncated largesize at $pos")
-            (u32(pos + 8) << 32 | u32(pos + 12), 16)
-          }
-          else if (size0 == 0) ((end - pos).toLong, 8)
-          else (size0, 8)
-        require(size >= hdr && pos + size <= end,
-          s"box '$t' at $pos declares $size bytes past offset $end")
-        val bodyAt = pos + hdr
-        val bodyEnd = pos + size.toInt
-        if (Containers(t)) walk(bodyAt, bodyEnd)
-        else if (t == "stsd") {
-          require(bodyAt + 16 <= bodyEnd, "stsd too small")
-          if (typ(bodyAt + 12) == "avc1") {
-            val entryAt = bodyAt + 8
-            val entryEnd = entryAt + u32(entryAt).toInt
-            require(entryEnd <= bodyEnd, "sample entry overruns stsd")
-            var c = entryAt + 8 + 78 // past the VisualSampleEntry fields
-            while (c + 8 <= entryEnd && found.isEmpty) {
-              val csz = u32(c).toInt
-              require(csz >= 8 && c + csz <= entryEnd,
-                s"sample-entry child box at $c declares $csz bytes")
-              if (typ(c + 4) == "avcC") {
-                val at = c + 8
-                require(at + 7 <= entryEnd, "avcC too small")
-                require((bytes(at) & 0xff) == 1,
-                  s"avcC configurationVersion ${bytes(at) & 0xff}")
-                val profile = bytes(at + 1) & 0xff
-                val level = bytes(at + 3) & 0xff
-                val lengthSize = (bytes(at + 4) & 3) + 1
-                var p = at + 6
-                def takeNals(count: Int): Seq[Array[Byte]] =
-                  (0 until count).map { _ =>
-                    require(p + 2 <= entryEnd,
-                      "avcC parameter-set length truncated")
-                    val len = u16(p); p += 2
-                    require(p + len <= entryEnd,
-                      s"avcC parameter set of $len bytes overruns")
-                    val a = java.util.Arrays.copyOfRange(bytes, p, p + len)
-                    p += len
-                    a
-                  }
-                val sps = takeNals(bytes(at + 5) & 0x1f)
-                require(p < entryEnd, "avcC missing numPPS")
-                val nPps = bytes(p) & 0xff
-                p += 1
-                val pps = takeNals(nPps)
-                found = Some(AvcConfig(profile, level, lengthSize,
-                  sps, pps))
-              }
-              c += csz
+    require(bytes.length >= 8, s"not a BMFF file: ${bytes.length} bytes")
+    walk(0, bytes.length, found.nonEmpty) { (t, bodyAt, bodyEnd, _) =>
+      if (t == "stsd") {
+        require(bodyAt + 16 <= bodyEnd, "stsd too small")
+        if (typ(bodyAt + 12) == "avc1") {
+          val entryAt = bodyAt + 8
+          val entryEnd = entryAt + u32(entryAt).toInt
+          require(entryEnd <= bodyEnd, "sample entry overruns stsd")
+          var c = entryAt + 8 + 78 // past the VisualSampleEntry fields
+          while (c + 8 <= entryEnd && found.isEmpty) {
+            val csz = u32(c).toInt
+            require(csz >= 8 && c + csz <= entryEnd,
+              s"sample-entry child box at $c declares $csz bytes")
+            if (typ(c + 4) == "avcC") {
+              val at = c + 8
+              require(at + 7 <= entryEnd, "avcC too small")
+              require((bytes(at) & 0xff) == 1,
+                s"avcC configurationVersion ${bytes(at) & 0xff}")
+              val profile = bytes(at + 1) & 0xff
+              val level = bytes(at + 3) & 0xff
+              val lengthSize = (bytes(at + 4) & 3) + 1
+              var p = at + 6
+              def takeNals(count: Int): Seq[Array[Byte]] =
+                (0 until count).map { _ =>
+                  require(p + 2 <= entryEnd,
+                    "avcC parameter-set length truncated")
+                  val len = u16(p); p += 2
+                  require(p + len <= entryEnd,
+                    s"avcC parameter set of $len bytes overruns")
+                  val a = java.util.Arrays.copyOfRange(bytes, p, p + len)
+                  p += len
+                  a
+                }
+              val sps = takeNals(bytes(at + 5) & 0x1f)
+              require(p < entryEnd, "avcC missing numPPS")
+              val nPps = bytes(p) & 0xff
+              p += 1
+              val pps = takeNals(nPps)
+              found = Some(AvcConfig(profile, level, lengthSize,
+                sps, pps))
             }
+            c += csz
           }
         }
-        pos += size.toInt
       }
     }
-    require(bytes.length >= 8, s"not a BMFF file: ${bytes.length} bytes")
-    walk(0, bytes.length)
     found
   }
 
@@ -429,72 +418,45 @@ object Mp4Codec {
     var brand = ""; var handler = ""; var codec = ""
     var nBoxes = 0; var nSamples = -1L
     var timescale = -1L; var duration = -1L; var mdatBytes = -1L
-    def u32(at: Int): Long =
-      ((bytes(at) & 0xffL) << 24) | ((bytes(at + 1) & 0xffL) << 16) |
-        ((bytes(at + 2) & 0xffL) << 8) | (bytes(at + 3) & 0xffL)
-    def u64(at: Int): Long = (u32(at) << 32) | u32(at + 4)
-    def typ(at: Int): String = {
-      val b = java.util.Arrays.copyOfRange(bytes, at, at + 4)
-      new String(b, "US-ASCII")
-    }
-    def walk(start: Int, end: Int): Unit = {
-      var pos = start
-      while (pos < end) {
-        require(pos + 8 <= end, s"truncated box header at offset $pos")
-        val size0 = u32(pos)
-        val t = typ(pos + 4)
-        val (size, hdr) =
-          if (size0 == 1) {
-            require(pos + 16 <= end, s"truncated largesize at $pos")
-            (u64(pos + 8), 16)
-          } else if (size0 == 0) ((end - pos).toLong, 8)
-          else (size0, 8)
-        require(size >= hdr && pos + size <= end,
-          s"box '$t' at $pos declares $size bytes past offset $end")
-        val bodyAt = pos + hdr
-        val bodyEnd = pos + size.toInt
-        nBoxes += 1
-        t match {
-          case c if Containers(c) => walk(bodyAt, bodyEnd)
-          case "ftyp" =>
-            require(bodyAt + 4 <= bodyEnd, "ftyp too small")
-            brand = typ(bodyAt)
-          case "mvhd" =>
-            // loud bound BEFORE the reads, like hdlr/stsd/stsz — a
-            // truncated mvhd near EOF must refuse, not AIOOBE (r13
-            // ADVICE); version 1 widens creation/modification/duration
-            require(bodyAt + 4 <= bodyEnd, "mvhd too small")
-            val v = bytes(bodyAt) & 0xff
-            require(bodyAt + (if (v == 1) 32 else 20) <= bodyEnd,
-              "mvhd too small")
-            if (v == 1) {
-              timescale = u32(bodyAt + 20); duration = u64(bodyAt + 24)
-            } else {
-              timescale = u32(bodyAt + 12); duration = u32(bodyAt + 16)
-            }
-          case "hdlr" =>
-            require(bodyAt + 12 <= bodyEnd, "hdlr too small")
-            handler = typ(bodyAt + 8)
-          case "stsd" =>
-            require(bodyAt + 16 <= bodyEnd, "stsd too small")
-            require(u32(bodyAt + 4) >= 1, "stsd with no entries")
-            codec = typ(bodyAt + 12) // first sample entry's fourcc
-          case "stsz" =>
-            require(bodyAt + 12 <= bodyEnd, "stsz too small")
-            nSamples = u32(bodyAt + 8)
-          case "mdat" =>
-            mdatBytes = size
-          case _ => ()
-        }
-        pos += size.toInt
-      }
-      require(pos == end, s"box walk overran: $pos vs $end")
-    }
+    val r = new Boxes(bytes); import r._
     require(bytes.length >= 8, s"not a BMFF file: ${bytes.length} bytes")
     require(typ(4) == "ftyp" || typ(4) == "moov" || typ(4) == "mdat" ||
       typ(4) == "free" || typ(4) == "styp",
       s"not a BMFF file: leading box '${typ(4)}'")
-    walk(0, bytes.length)
+    walk(0, bytes.length) { (t, bodyAt, bodyEnd, size) =>
+      nBoxes += 1
+      t match {
+        case "ftyp" =>
+          require(bodyAt + 4 <= bodyEnd, "ftyp too small")
+          brand = typ(bodyAt)
+        case "mvhd" =>
+          // loud bound BEFORE the reads, like hdlr/stsd/stsz — a
+          // truncated mvhd near EOF must refuse, not AIOOBE (r13
+          // ADVICE); version 1 widens creation/modification/duration
+          require(bodyAt + 4 <= bodyEnd, "mvhd too small")
+          val v = bytes(bodyAt) & 0xff
+          require(bodyAt + (if (v == 1) 32 else 20) <= bodyEnd,
+            "mvhd too small")
+          if (v == 1) {
+            timescale = u32(bodyAt + 20); duration = u64(bodyAt + 24)
+          } else {
+            timescale = u32(bodyAt + 12); duration = u32(bodyAt + 16)
+          }
+        case "hdlr" =>
+          require(bodyAt + 12 <= bodyEnd, "hdlr too small")
+          handler = typ(bodyAt + 8)
+        case "stsd" =>
+          require(bodyAt + 16 <= bodyEnd, "stsd too small")
+          require(u32(bodyAt + 4) >= 1, "stsd with no entries")
+          codec = typ(bodyAt + 12) // first sample entry's fourcc
+        case "stsz" =>
+          require(bodyAt + 12 <= bodyEnd, "stsz too small")
+          nSamples = u32(bodyAt + 8)
+        case "mdat" =>
+          mdatBytes = size
+        case _ => ()
+      }
+    }
     require(brand.nonEmpty, "no ftyp box")
     require(timescale > 0, "no mvhd box")
     Mp4Census(brand, handler, codec, nBoxes, nSamples, timescale,

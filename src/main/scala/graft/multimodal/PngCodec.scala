@@ -45,33 +45,43 @@ object PngCodec {
       "a PNG needs at least one non-empty IDAT")
     val out = new ByteArrayOutputStream()
     out.write(Signature)
-    def u32(b: ByteArrayOutputStream, v: Long): Unit = {
-      b.write(((v >> 24) & 0xff).toInt); b.write(((v >> 16) & 0xff).toInt)
-      b.write(((v >> 8) & 0xff).toInt); b.write((v & 0xff).toInt)
-    }
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      u32(out, data.length.toLong)
-      val tb = typ.getBytes("US-ASCII")
-      out.write(tb)
-      out.write(data)
-      val crc = new CRC32()
-      crc.update(tb); crc.update(data)
-      u32(out, crc.getValue)
-    }
     val ihdr = new ByteArrayOutputStream()
-    u32(ihdr, width); u32(ihdr, height)
+    putU32(ihdr, width); putU32(ihdr, height)
     ihdr.write(bitDepth); ihdr.write(colorType)
     ihdr.write(0); ihdr.write(0); ihdr.write(0) // deflate, none, none
-    chunk("IHDR", ihdr.toByteArray)
+    putChunk(out, "IHDR", ihdr.toByteArray)
     idatSizes.foreach { n =>
-      chunk("IDAT", Array.tabulate[Byte](n)(i => ((i * 73 + n) % 251).toByte))
+      putChunk(out, "IDAT",
+        Array.tabulate[Byte](n)(i => ((i * 73 + n) % 251).toByte))
     }
-    chunk("IEND", Array.empty[Byte])
+    putChunk(out, "IEND", Array.empty[Byte])
     out.toByteArray
   }
 
+  /** Big-endian u32, and one length-type-data-CRC chunk (§5.3). */
+  private def putU32(b: ByteArrayOutputStream, v: Long): Unit = {
+    b.write(((v >> 24) & 0xff).toInt); b.write(((v >> 16) & 0xff).toInt)
+    b.write(((v >> 8) & 0xff).toInt); b.write((v & 0xff).toInt)
+  }
+  private def putChunk(out: ByteArrayOutputStream, typ: String,
+      data: Array[Byte]): Unit = {
+    putU32(out, data.length.toLong)
+    val tb = typ.getBytes("US-ASCII")
+    out.write(tb); out.write(data)
+    val crc = new CRC32()
+    crc.update(tb); crc.update(data)
+    putU32(out, crc.getValue)
+  }
+
   /** Walk the chunks; verify every CRC; report the routing row. */
-  def census(bytes: Array[Byte]): PngCensus = {
+  def census(bytes: Array[Byte]): PngCensus = walk(bytes)((_, _, _) => ())
+
+  /** The one chunk walk behind [[census]] and [[decode]]: the
+    * signature, then each chunk bounds- and CRC-checked and handed to
+    * `visit(type, dataAt, length)` once the census has checked it,
+    * through an IEND that must end the file. */
+  private def walk(bytes: Array[Byte])(
+      visit: (String, Int, Int) => Unit): PngCensus = {
     require(bytes.length >= Signature.length + 12,
       s"not a PNG: ${bytes.length} bytes")
     var i = 0
@@ -125,6 +135,7 @@ object PngCodec {
           ended = true
         case _ => () // unknown ancillary chunk: CRC-checked, counted
       }
+      visit(typ, dataAt.toInt, len.toInt)
       pos = (dataAt + len + 4).toInt
     }
     require(nIdat >= 1, "PNG without IDAT")
@@ -152,6 +163,80 @@ object PngCodec {
       s"colour type $t is not in ISO 15948 §11.2.2")
   }
 
+  /** §8.2 Adam7 passes of a w×h image: (x0, y0, dx, dy, pw, ph) per
+    * pass with a non-empty pw×ph reduced image. A pass whose reduced
+    * image is zero-width or zero-height contributes NO scanlines at
+    * all (not even filter bytes), so it is left out. */
+  private def adam7(w: Int, h: Int): Seq[(Int, Int, Int, Int, Int, Int)] =
+    Seq((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
+      (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
+      .map { case (x0, y0, dx, dy) =>
+        (x0, y0, dx, dy, (w - x0 + dx - 1) / dx, (h - y0 + dy - 1) / dy)
+      }.filter { case (_, _, _, _, pw, ph) => pw > 0 && ph > 0 }
+
+  /** The one §9 row predictor (PNG scanlines, PDF /Predictor 10-15):
+    * rows of `rowLen` bytes, `bpp` bytes per pixel (the distance to
+    * the "left" byte), the row above the first all zeros. The forward
+    * filter prefixes each row with its type `filterOfRow(row)`. */
+  private[graft] def filterRows(pix: Array[Byte], rowLen: Int, bpp: Int,
+      filterOfRow: Int => Int): Array[Byte] = {
+    require(rowLen > 0 && pix.length % rowLen == 0,
+      s"${pix.length} bytes are not whole $rowLen-byte rows")
+    val nRows = pix.length / rowLen
+    val out = new Array[Byte]((1 + rowLen) * nRows)
+    var y = 0
+    while (y < nRows) {
+      val f = filterOfRow(y)
+      require(f >= 0 && f <= 4, s"filter $f is not in §9 (row $y)")
+      out(y * (1 + rowLen)) = f.toByte
+      var i = 0
+      while (i < rowLen) {
+        out(y * (1 + rowLen) + 1 + i) = ((pix(y * rowLen + i) & 0xff) -
+          predict(f, pix, y * rowLen, rowLen, y > 0, i, bpp)).toByte
+        i += 1
+      }
+      y += 1
+    }
+    out
+  }
+
+  /** Invert [[filterRows]] over `nRows` rows read from `raw` at `off`. */
+  private[graft] def unfilterRows(raw: Array[Byte], off: Int, rowLen: Int,
+      nRows: Int, bpp: Int): Array[Byte] = {
+    val pix = new Array[Byte](rowLen * nRows)
+    var y = 0
+    while (y < nRows) {
+      val f = raw(off + y * (1 + rowLen)) & 0xff
+      require(f <= 4, s"row $y carries filter $f, not in §9")
+      var i = 0
+      while (i < rowLen) {
+        pix(y * rowLen + i) = (raw(off + y * (1 + rowLen) + 1 + i) +
+          predict(f, pix, y * rowLen, rowLen, y > 0, i, bpp)).toByte
+        i += 1
+      }
+      y += 1
+    }
+    pix
+  }
+
+  /** Filter `f`'s prediction for byte `i` of the row at `at` in `pix`,
+    * from its left, above and upper-left neighbours (0 off the edge). */
+  private def predict(f: Int, pix: Array[Byte], at: Int, rowLen: Int,
+      hasUp: Boolean, i: Int, bpp: Int): Int = {
+    val left = if (i >= bpp) pix(at + i - bpp) & 0xff else 0
+    val up = if (hasUp) pix(at - rowLen + i) & 0xff else 0
+    f match {
+      case 0 => 0
+      case 1 => left
+      case 2 => up
+      case 3 => (left + up) / 2
+      case 4 =>
+        val ul = if (hasUp && i >= bpp) pix(at - rowLen + i - bpp) & 0xff
+          else 0
+        paeth(left, up, ul)
+    }
+  }
+
   private def paeth(a: Int, b: Int, c: Int): Int = {
     // §9.4: the neighbour (left, above, upper-left) nearest to the
     // linear gradient prediction, ties broken left, above, upper-left
@@ -159,78 +244,6 @@ object PngCodec {
     val pa = math.abs(p - a); val pb = math.abs(p - b)
     val pc = math.abs(p - c)
     if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-  }
-
-  /** §8.2 Adam7 pass grid: (x0, y0, dx, dy) per pass. A pass whose
-    * reduced image is zero-width or zero-height contributes NO
-    * scanlines at all (not even filter bytes). */
-  private val Adam7: Seq[(Int, Int, Int, Int)] = Seq(
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-
-  /** Forward-filter one (sub-)image into `out` at `off`; returns the
-    * bytes written = (1 + width·ch)·height. */
-  private def filterSub(pix: Array[Byte], width: Int, height: Int,
-      ch: Int, filterOfRow: Int => Int, out: Array[Byte], off: Int)
-      : Int = {
-    val stride = width * ch
-    var y = 0
-    while (y < height) {
-      val f = filterOfRow(y)
-      require(f >= 0 && f <= 4, s"filter $f is not in §9 (row $y)")
-      out(off + y * (1 + stride)) = f.toByte
-      var i = 0
-      while (i < stride) {
-        val cur = pix(y * stride + i) & 0xff
-        val left = if (i >= ch) pix(y * stride + i - ch) & 0xff else 0
-        val up = if (y > 0) pix((y - 1) * stride + i) & 0xff else 0
-        val ul = if (y > 0 && i >= ch) pix((y - 1) * stride + i - ch) & 0xff
-          else 0
-        val pred = f match {
-          case 0 => 0
-          case 1 => left
-          case 2 => up
-          case 3 => (left + up) / 2
-          case 4 => paeth(left, up, ul)
-        }
-        out(off + y * (1 + stride) + 1 + i) = (cur - pred).toByte
-        i += 1
-      }
-      y += 1
-    }
-    (1 + stride) * height
-  }
-
-  /** Invert the per-row filter of one (sub-)image read from `raw` at
-    * `off`; returns (pixels, bytes consumed). */
-  private def unfilterSub(raw: Array[Byte], off: Int, width: Int,
-      height: Int, ch: Int): (Array[Byte], Int) = {
-    val stride = width * ch
-    val pix = new Array[Byte](stride * height)
-    var y = 0
-    while (y < height) {
-      val f = raw(off + y * (1 + stride)) & 0xff
-      require(f <= 4, s"row $y carries filter $f, not in §9")
-      var i = 0
-      while (i < stride) {
-        val x = raw(off + y * (1 + stride) + 1 + i) & 0xff
-        val left = if (i >= ch) pix(y * stride + i - ch) & 0xff else 0
-        val up = if (y > 0) pix((y - 1) * stride + i) & 0xff else 0
-        val ul = if (y > 0 && i >= ch) pix((y - 1) * stride + i - ch) & 0xff
-          else 0
-        val pred = f match {
-          case 0 => 0
-          case 1 => left
-          case 2 => up
-          case 3 => (left + up) / 2
-          case 4 => paeth(left, up, ul)
-        }
-        pix(y * stride + i) = ((x + pred) & 0xff).toByte
-        i += 1
-      }
-      y += 1
-    }
-    (pix, (1 + stride) * height)
   }
 
   /** Encode an 8-bit raster as a real PNG: per-row §9 forward filter
@@ -252,75 +265,48 @@ object PngCodec {
       palette.length >= 3 && palette.length <= 768),
       s"colour type 3 needs an RGB palette, got ${palette.length} bytes")
     val raw =
-      if (!interlace) {
-        val out = new Array[Byte]((1 + width * ch) * height)
-        filterSub(pix, width, height, ch, filterOfRow, out, 0)
-        out
-      } else {
-        val passes = Adam7.map { case (x0, y0, dx, dy) =>
-          ((width - x0 + dx - 1) / dx, (height - y0 + dy - 1) / dy)
-        }
-        val total = passes.map { case (pw, ph) =>
-          if (pw > 0 && ph > 0) (1 + pw * ch) * ph else 0
-        }.sum
-        val out = new Array[Byte](total)
-        var off = 0
-        Adam7.zip(passes).foreach { case ((x0, y0, dx, dy), (pw, ph)) =>
-          if (pw > 0 && ph > 0) {
-            val sub = new Array[Byte](pw * ph * ch)
-            var j = 0
-            while (j < ph) {
-              var i = 0
-              while (i < pw) {
-                val sy = y0 + j * dy; val sx = x0 + i * dx
-                var c = 0
-                while (c < ch) {
-                  sub((j * pw + i) * ch + c) = pix((sy * width + sx) * ch + c)
-                  c += 1
-                }
-                i += 1
+      if (!interlace) filterRows(pix, width * ch, ch, filterOfRow)
+      else Array.concat(adam7(width, height).map {
+        case (x0, y0, dx, dy, pw, ph) =>
+          val sub = new Array[Byte](pw * ph * ch)
+          var j = 0
+          while (j < ph) {
+            var i = 0
+            while (i < pw) {
+              val sy = y0 + j * dy; val sx = x0 + i * dx
+              var c = 0
+              while (c < ch) {
+                sub((j * pw + i) * ch + c) = pix((sy * width + sx) * ch + c)
+                c += 1
               }
-              j += 1
+              i += 1
             }
-            off += filterSub(sub, pw, ph, ch, filterOfRow, out, off)
+            j += 1
           }
-        }
-        out
-      }
+          filterRows(sub, pw * ch, ch, filterOfRow)
+      }: _*)
     val z = Zlib.deflate(raw, // zlib-wrapped; synthesis-side level
       level = java.util.zip.Deflater.BEST_SPEED)
 
     val out = new ByteArrayOutputStream()
     out.write(Signature)
-    def u32(b: ByteArrayOutputStream, v: Long): Unit = {
-      b.write(((v >> 24) & 0xff).toInt); b.write(((v >> 16) & 0xff).toInt)
-      b.write(((v >> 8) & 0xff).toInt); b.write((v & 0xff).toInt)
-    }
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      u32(out, data.length.toLong)
-      val tb = typ.getBytes("US-ASCII")
-      out.write(tb); out.write(data)
-      val crc = new CRC32()
-      crc.update(tb); crc.update(data)
-      u32(out, crc.getValue)
-    }
     val ihdr = new ByteArrayOutputStream()
-    u32(ihdr, width.toLong); u32(ihdr, height.toLong)
+    putU32(ihdr, width.toLong); putU32(ihdr, height.toLong)
     ihdr.write(8); ihdr.write(colorType)
     ihdr.write(0); ihdr.write(0) // deflate, filter method 0
     ihdr.write(if (interlace) 1 else 0)
-    chunk("IHDR", ihdr.toByteArray)
-    if (colorType == 3) chunk("PLTE", palette)
+    putChunk(out, "IHDR", ihdr.toByteArray)
+    if (colorType == 3) putChunk(out, "PLTE", palette)
     val n = math.max(1, math.min(nIdat, z.length))
     val per = (z.length + n - 1) / n
     var off = 0
     while (off < z.length) {
       val take = math.min(per, z.length - off)
-      chunk("IDAT", java.util.Arrays.copyOfRange(z, off, off + take))
+      putChunk(out, "IDAT", java.util.Arrays.copyOfRange(z, off, off + take))
       off += take
     }
-    if (z.length == 0) chunk("IDAT", Array.empty[Byte])
-    chunk("IEND", Array.empty[Byte])
+    if (z.length == 0) putChunk(out, "IDAT", Array.empty[Byte])
+    putChunk(out, "IEND", Array.empty[Byte])
     out.toByteArray
   }
 
@@ -333,102 +319,71 @@ object PngCodec {
     * the (pass-structure) geometry, a palette index past PLTE, or
     * any census refusal. */
   def decode(bytes: Array[Byte]): PngImage = {
-    // reuse the census walk for structure + CRC enforcement
-    val cen = census(bytes)
+    // the census walk enforces structure + CRCs; IHDR, PLTE and the
+    // IDAT stream are gathered on the same pass
+    var ihdrAt = 0; var plteAt = 0; var plteLen = -1
+    val z = new ByteArrayOutputStream()
+    val cen = walk(bytes) { (typ, at, len) => typ match {
+      case "IHDR" => ihdrAt = at
+      case "PLTE" => plteAt = at; plteLen = len
+      case "IDAT" => z.write(bytes, at, len)
+      case _ => ()
+    }}
     require(cen.bitDepth == 8,
       s"bit depth ${cen.bitDepth}: only 8-bit samples decode (documented perimeter)")
     val ch = rawChannels(cen.colorType)
-    // second pass: gather PLTE + IDAT + interlace (census keeps none)
-    def u32(at: Int): Long =
-      ((bytes(at) & 0xffL) << 24) | ((bytes(at + 1) & 0xffL) << 16) |
-        ((bytes(at + 2) & 0xffL) << 8) | (bytes(at + 3) & 0xffL)
-    var pos = Signature.length
-    var palette: Array[Byte] = Array.empty
-    var interlace = 0
-    val z = new ByteArrayOutputStream()
-    var ended = false
-    while (!ended) {
-      val len = u32(pos).toInt
-      val typ = new String(bytes, pos + 4, 4, "US-ASCII")
-      typ match {
-        case "IHDR" =>
-          // IHDR data: w(4) h(4) depth(1) colour(1) comp(1) filt(1) il(1)
-          require((bytes(pos + 18) & 0xff) == 0,
-            s"compression method ${bytes(pos + 18) & 0xff}, not deflate")
-          require((bytes(pos + 19) & 0xff) == 0,
-            s"filter method ${bytes(pos + 19) & 0xff}, not 0")
-          interlace = bytes(pos + 20) & 0xff
-          require(interlace <= 1,
-            s"interlace method $interlace is not in §8.2 (0 or 1)")
-        case "PLTE" =>
-          require(len % 3 == 0 && len >= 3 && len <= 768,
-            s"PLTE carries $len bytes")
-          palette = java.util.Arrays.copyOfRange(bytes, pos + 8,
-            pos + 8 + len)
-        case "IDAT" => z.write(bytes, pos + 8, len)
-        case "IEND" => ended = true
-        case _ => ()
-      }
-      pos += 12 + len
-    }
+    // IHDR data: w(4) h(4) depth(1) colour(1) comp(1) filt(1) il(1)
+    require((bytes(ihdrAt + 10) & 0xff) == 0,
+      s"compression method ${bytes(ihdrAt + 10) & 0xff}, not deflate")
+    require((bytes(ihdrAt + 11) & 0xff) == 0,
+      s"filter method ${bytes(ihdrAt + 11) & 0xff}, not 0")
+    val interlace = bytes(ihdrAt + 12) & 0xff
+    require(interlace <= 1,
+      s"interlace method $interlace is not in §8.2 (0 or 1)")
+    require(plteLen < 0 || (plteLen % 3 == 0 && plteLen >= 3 &&
+      plteLen <= 768), s"PLTE carries $plteLen bytes")
+    val palette = if (plteLen < 0) Array.empty[Byte]
+      else java.util.Arrays.copyOfRange(bytes, plteAt, plteAt + plteLen)
+    // IHDR sides run to 2^32-1: refuse a raster whose buffers (RGB
+    // expansion and Adam7 filter bytes included) could not be arrays,
+    // before any Int size below can overflow
+    require(cen.width < (1L << 29) &&
+      (cen.width * 4 + 2) * cen.height < Int.MaxValue - 16,
+      s"IHDR geometry ${cen.width}x${cen.height} exceeds an array")
     val w = cen.width.toInt; val h = cen.height.toInt
     val stride = w * ch
-    // Adam7 reduced-image geometry (empty passes carry no scanlines)
-    val passes: Seq[(Int, Int, Int, Int, Int, Int)] =
-      if (interlace == 0) Nil
-      else Adam7.map { case (x0, y0, dx, dy) =>
-        (x0, y0, dx, dy, (w - x0 + dx - 1) / dx, (h - y0 + dy - 1) / dy)
-      }
+    val passes = if (interlace == 0) Nil else adam7(w, h)
     val rawLen =
       if (interlace == 0) (1 + stride) * h
-      else passes.map { case (_, _, _, _, pw, ph) =>
-        if (pw > 0 && ph > 0) (1 + pw * ch) * ph else 0
-      }.sum
-    val raw = new Array[Byte](rawLen)
-    Zlib.withInflater(nowrap = false) { infl =>
-      infl.setInput(z.toByteArray)
-      var got = 0
-      try {
-        while (got < raw.length && !infl.finished()) {
-          val n = infl.inflate(raw, got, raw.length - got)
-          require(n > 0 || infl.finished(), "truncated IDAT zlib stream")
-          got += n
-        }
-        require(got == raw.length && (infl.finished() ||
-          infl.inflate(new Array[Byte](1)) == 0),
-          s"IDAT inflates to $got bytes, geometry needs ${raw.length}")
-      } catch {
-        case e: java.util.zip.DataFormatException =>
-          throw new IllegalArgumentException(
-            s"corrupt IDAT zlib: ${e.getMessage}")
-      }
-    }
+      else passes.map { case (_, _, _, _, pw, ph) => (1 + pw * ch) * ph }.sum
+    // the geometry bounds the inflate: a longer stream is refused
+    val raw = Zlib.inflate(z.toByteArray, size = rawLen)
+    require(raw.length == rawLen,
+      s"IDAT inflates to ${raw.length} bytes, geometry needs $rawLen")
 
     val pix =
-      if (interlace == 0) unfilterSub(raw, 0, w, h, ch)._1
+      if (interlace == 0) unfilterRows(raw, 0, stride, h, ch)
       else {
         // §8.2: each pass is an independently-filtered reduced image;
         // unfilter it alone, then scatter onto the full-size grid
         val full = new Array[Byte](stride * h)
         var off = 0
         passes.foreach { case (x0, y0, dx, dy, pw, ph) =>
-          if (pw > 0 && ph > 0) {
-            val (sub, used) = unfilterSub(raw, off, pw, ph, ch)
-            off += used
-            var j = 0
-            while (j < ph) {
-              var i = 0
-              while (i < pw) {
-                val sy = y0 + j * dy; val sx = x0 + i * dx
-                var c = 0
-                while (c < ch) {
-                  full((sy * w + sx) * ch + c) = sub((j * pw + i) * ch + c)
-                  c += 1
-                }
-                i += 1
+          val sub = unfilterRows(raw, off, pw * ch, ph, ch)
+          off += (1 + pw * ch) * ph
+          var j = 0
+          while (j < ph) {
+            var i = 0
+            while (i < pw) {
+              val sy = y0 + j * dy; val sx = x0 + i * dx
+              var c = 0
+              while (c < ch) {
+                full((sy * w + sx) * ch + c) = sub((j * pw + i) * ch + c)
+                c += 1
               }
-              j += 1
+              i += 1
             }
+            j += 1
           }
         }
         full

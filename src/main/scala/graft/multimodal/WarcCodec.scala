@@ -272,8 +272,7 @@ object WarcCodec {
       case Some("deflate") =>
         val zlibWrapped = body.length >= 2 && (body(0) & 0x0f) == 8 &&
           (((body(0) & 0xff) << 8) | (body(1) & 0xff)) % 31 == 0
-        try Zlib.inflate(body, nowrap = !zlibWrapped,
-          sizeHint = body.length * 4)
+        try Zlib.inflate(body, nowrap = !zlibWrapped)
         catch { case e: IllegalArgumentException =>
           throw new IllegalArgumentException(
             s"corrupt deflate body: ${e.getMessage}")

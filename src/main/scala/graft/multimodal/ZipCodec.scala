@@ -12,8 +12,11 @@ import java.util.zip.CRC32
   * parser-differential used to smuggle content past corpus filters.
   * The census walks the EOCD → central directory → each entry's
   * local header and REPORTS the disagreements instead of silently
-  * picking a side. STORE and DEFLATE methods are recognized; member
-  * data is never decompressed.
+  * picking a side. STORE and DEFLATE methods are recognized; the
+  * census never decompresses member data. [[read]] does, for one
+  * entry the census returned: the bytes the DIRECTORY points at, so
+  * every reader in the engine (the OOXML codecs, DocParse's sniff)
+  * sees the one view the census reports.
   *
   * zip64 (r15 — archives >4 GiB or >65535 entries, real at 100 TB
   * shard scale, APPNOTE §4.3.14/4.5.3): when any EOCD field is at its
@@ -30,8 +33,10 @@ import java.util.zip.CRC32
   * violations. Per-row executor work, scan-fused. */
 object ZipCodec {
 
+  /** One central-directory entry; `dataAt` is where its member data
+    * starts, past the local header it points at. */
   final case class ZipEntry(name: String, method: Int, csize: Long,
-      usize: Long, crc: Long, localMismatch: Boolean)
+      usize: Long, crc: Long, localMismatch: Boolean, dataAt: Long)
 
   private val LocalSig = 0x04034b50L
   private val CentralSig = 0x02014b50L
@@ -253,14 +258,38 @@ object ZipCodec {
       val lName = new String(bytes, la + 30, lNameLen, "US-ASCII")
       val mismatch = lName != name || lMethod != method ||
         lCsize != csize || lUsize != usize
-      require(la + 30 + lNameLen + u16(la + 28) + csize <= bytes.length,
+      val dataAt = la + 30L + lNameLen + u16(la + 28)
+      require(dataAt + csize <= bytes.length,
         s"entry '$name' data runs past EOF")
-      entries += ZipEntry(name, method, csize, usize, crc, mismatch)
+      entries += ZipEntry(name, method, csize, usize, crc, mismatch,
+        dataAt)
       pos += 46 + nameLen + extraLen + cmtLen
       k += 1
     }
     require(pos == (cdAt + cdSize).toInt,
       s"central directory walk overran: $pos vs ${cdAt + cdSize}")
     entries.result()
+  }
+
+  /** The member bytes of entry `e` of `bytes` (an entry [[census]]
+    * returned): STORE copied, DEFLATE inflated with the entry's usize
+    * as the bound, then checked against the directory's usize and
+    * CRC-32. Loud on any other method or a mismatch. */
+  def read(bytes: Array[Byte], e: ZipEntry): Array[Byte] = {
+    require(e.usize <= Int.MaxValue - 8,
+      s"entry '${e.name}' declares ${e.usize} bytes, past an array")
+    val data = java.util.Arrays.copyOfRange(bytes, e.dataAt.toInt,
+      (e.dataAt + e.csize).toInt)
+    val out = e.method match {
+      case 0 => data
+      case 8 => Zlib.inflate(data, nowrap = true, size = e.usize.toInt)
+      case m => throw new IllegalArgumentException(
+        s"entry '${e.name}' uses method $m — only STORE (0) and DEFLATE (8)")
+    }
+    require(out.length == e.usize,
+      s"entry '${e.name}' holds ${out.length} bytes, directory says ${e.usize}")
+    val crc = new CRC32(); crc.update(out)
+    require(crc.getValue == e.crc, s"entry '${e.name}' fails its CRC-32")
+    out
   }
 }

@@ -18,6 +18,10 @@ import java.util.zip.{CRC32, DataFormatException, Deflater, Inflater}
   * resources. Nested use on one thread (an inflate inside an inflate)
   * falls back to a bounded per-thread stack, never to shared state.
   *
+  * Every inflate in the engine (gunzip, WARC content-coding, PDF
+  * FlateDecode, PNG IDAT, zip members) runs through the one loop in
+  * [[drain]], so its refusals and its output bound hold everywhere.
+  *
   * Byte-compatibility: [[gzip]] emits the bytes
   * `java.util.zip.GZIPOutputStream` emits (default-level raw deflate,
   * CRC32 + ISIZE trailer) except the header's OS byte — the JDK writes
@@ -69,14 +73,51 @@ object Zlib {
   /** Run `f` with a pooled Deflater (reset before reuse; constructed at
     * `level`). The deflater must be fully drained inside `f`; do not
     * call `end()` on it. */
-  def withDeflater[R](nowrap: Boolean,
-      level: Int = Deflater.DEFAULT_COMPRESSION)(f: Deflater => R): R =
+  private def withDeflater[R](nowrap: Boolean, level: Int)(
+      f: Deflater => R): R =
     deflPool(nowrap, level).withOne(f)
 
   /** Run `f` with a pooled Inflater (reset before reuse). Do not call
     * `end()` on it. */
-  def withInflater[R](nowrap: Boolean)(f: Inflater => R): R =
+  private def withInflater[R](nowrap: Boolean)(f: Inflater => R): R =
     (if (nowrap) inflRaw else inflZlib).withOne(f)
+
+  /** The one inflate loop: drain `i` to the end of its stream and
+    * return the output, in a buffer that starts at `initial` bytes and
+    * doubles. `size` >= 0 is an output size the caller already knows
+    * (PNG IHDR geometry, a zip member's usize): a stream that inflates
+    * past it is refused, and a shorter output is returned for the
+    * caller to judge. The buffer never outgrows the output, so a
+    * declared size alone allocates nothing. Refuses a preset
+    * dictionary (FDICT makes `inflate` return 0 with finished=false,
+    * needsInput=false forever, so a loop without the check spins), a
+    * stream that ends before its final block and check value, and
+    * corrupt bytes — all as IllegalArgumentException. */
+  private def drain(i: Inflater, size: Int, initial: Int): Array[Byte] = {
+    val bound = if (size >= 0) size else Int.MaxValue - 8
+    var out = new Array[Byte](math.min(bound, initial))
+    var got = 0
+    try {
+      while (!i.finished()) {
+        // full: grow toward the bound; at the bound, one spare byte
+        // can only be filled by output past it
+        if (got == out.length) out = java.util.Arrays.copyOf(out,
+          if (got >= bound) got + 1
+          else math.min(bound.toLong, math.max(64L, 2L * got)).toInt)
+        val n = i.inflate(out, got, out.length - got)
+        if (n == 0 && !i.finished()) {
+          require(!i.needsDictionary(), "preset dictionary unsupported")
+          throw new IllegalArgumentException("truncated deflate stream")
+        }
+        got += n
+        require(got <= bound, s"deflate stream inflates past $bound bytes")
+      }
+    } catch { case e: DataFormatException =>
+      throw new IllegalArgumentException(
+        s"corrupt deflate stream: ${e.getMessage}")
+    }
+    if (got == out.length) out else java.util.Arrays.copyOf(out, got)
+  }
 
   /** One-shot deflate. `nowrap=false` = zlib-wrapped (RFC 1950) —
     * byte-identical to `new Deflater()` drained the same way at the
@@ -96,31 +137,15 @@ object Zlib {
       out.toByteArray
     }
 
-  /** One-shot inflate. Throws IllegalArgumentException on a corrupt or
-    * truncated stream. */
+  /** One-shot inflate of a whole stream. `size` >= 0 is the output
+    * size the caller already knows: the stream may not inflate past it
+    * (see [[drain]]). Throws IllegalArgumentException on a corrupt,
+    * truncated or preset-dictionary stream. */
   def inflate(data: Array[Byte], nowrap: Boolean = false,
-      sizeHint: Int = 0): Array[Byte] =
+      size: Int = -1): Array[Byte] =
     withInflater(nowrap) { i =>
       i.setInput(data)
-      try {
-        val out = new java.io.ByteArrayOutputStream(
-          math.max(64, if (sizeHint > 0) sizeHint else data.length * 4))
-        val buf = new Array[Byte](8192)
-        var n = i.inflate(buf)
-        while (n > 0 || (!i.finished() && !i.needsInput())) {
-          // a zlib header with FDICT set makes inflate return 0 with
-          // finished=false, needsInput=false forever — fail loudly
-          // instead of spinning (reachable from a WARC
-          // Content-Encoding: deflate body)
-          require(!i.needsDictionary(), "preset dictionary unsupported")
-          out.write(buf, 0, n); n = i.inflate(buf)
-        }
-        require(i.finished(), "truncated deflate stream")
-        out.toByteArray
-      } catch { case e: DataFormatException =>
-        throw new IllegalArgumentException(
-          s"corrupt deflate stream: ${e.getMessage}")
-      }
+      drain(i, size, math.max(64, data.length * 4))
     }
 
   /** RFC 1952 gzip — same bytes as GZIPOutputStream at the default
@@ -207,34 +232,18 @@ object Zlib {
     require(pos + 8 <= data.length, "truncated gzip stream")
     withInflater(nowrap = true) { i =>
       i.setInput(data, pos, data.length - pos)
-      try {
-        val out = new java.io.ByteArrayOutputStream(
-          math.max(64, (data.length - pos) * 4))
-        val buf = new Array[Byte](8192)
-        var n = i.inflate(buf)
-        while (n > 0 || (!i.finished() && !i.needsInput())) {
-          // FDICT would spin this loop forever (inflate returns 0,
-          // finished=false, needsInput=false) — refuse loudly
-          require(!i.needsDictionary(), "preset dictionary unsupported")
-          out.write(buf, 0, n); n = i.inflate(buf)
-        }
-        require(i.finished(), "truncated gzip deflate body")
-        val res = out.toByteArray
-        val tp = data.length - i.getRemaining // after the deflate body
-        require(tp + 8 <= data.length, "truncated gzip trailer")
-        def le32(o: Int): Long =
-          ((data(o) & 0xffL)) | ((data(o + 1) & 0xffL) << 8) |
-            ((data(o + 2) & 0xffL) << 16) | ((data(o + 3) & 0xffL) << 24)
-        val crc = new CRC32(); crc.update(res)
-        require(le32(tp) == crc.getValue, "gzip CRC mismatch")
-        require(le32(tp + 4) == (res.length.toLong & 0xffffffffL),
-          "gzip ISIZE mismatch")
-        all.write(res, 0, res.length)
-        tp + 8
-      } catch { case e: DataFormatException =>
-        throw new IllegalArgumentException(
-          s"corrupt gzip stream: ${e.getMessage}")
-      }
+      val res = drain(i, -1, math.max(64, (data.length - pos) * 4))
+      val tp = data.length - i.getRemaining // after the deflate body
+      require(tp + 8 <= data.length, "truncated gzip trailer")
+      def le32(o: Int): Long =
+        ((data(o) & 0xffL)) | ((data(o + 1) & 0xffL) << 8) |
+          ((data(o + 2) & 0xffL) << 16) | ((data(o + 3) & 0xffL) << 24)
+      val crc = new CRC32(); crc.update(res)
+      require(le32(tp) == crc.getValue, "gzip CRC mismatch")
+      require(le32(tp + 4) == (res.length.toLong & 0xffffffffL),
+        "gzip ISIZE mismatch")
+      all.write(res, 0, res.length)
+      tp + 8
     }
   }
 }

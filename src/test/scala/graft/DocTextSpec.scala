@@ -402,7 +402,7 @@ class DocTextSpec extends SparkSpec {
     val ramp = Array.tabulate[Byte](24 * 5)(i => (i % 251).toByte)
     for (d <- Seq(noisy, ramp); cols <- Seq(1, 3, 24)) {
       assert(PdfCodec.pngUnpredict(
-        PdfCodec.pngPredictEncode(d, cols, r => r % 5), cols, 1, 8)
+        graft.multimodal.PngCodec.filterRows(d, cols, 1, _ % 5), cols, 1, 8)
         .toSeq == d.toSeq, s"png cols=$cols")
       assert(PdfCodec.tiffUnpredict(
         PdfCodec.tiffPredictEncode(d, cols), cols, 1, 8)
@@ -732,6 +732,47 @@ class DocTextSpec extends SparkSpec {
     assert(DocParse.sniff("just prose".getBytes) == "text")
     assert(DocParse.sniff("  {\"k\":1}".getBytes) == "json")
     assert(DocParse.sniff("[1,2]".getBytes) == "json")
+  }
+
+  test("zip reader: members come from the central directory, checked") {
+    import graft.ingest.DocxCodec
+    import graft.multimodal.ZipCodec
+    // DEFLATE members (ZipOutputStream, data descriptors) read back
+    // exactly what the JDK's streaming reader reads
+    val docx = DocxCodec.encode(Seq("alpha", "beta"))
+    val zin = new java.util.zip.ZipInputStream(
+      new java.io.ByteArrayInputStream(docx))
+    val jdk = Iterator.continually(zin.getNextEntry).takeWhile(_ != null)
+      .map(e => e.getName -> zin.readAllBytes().toSeq).toMap
+    val ents = ZipCodec.census(docx)
+    assert(ents.map(e => e.name -> ZipCodec.read(docx, e).toSeq).toMap ==
+      jdk)
+    // a member whose bytes disagree with the directory's CRC-32
+    val stored = ZipCodec.synth(Seq("a.txt" -> "hello zip".getBytes("UTF-8")))
+    val e = ZipCodec.census(stored).head
+    assert(new String(ZipCodec.read(stored, e), "UTF-8") == "hello zip")
+    stored(e.dataAt.toInt) = 'j'.toByte
+    val crc = intercept[IllegalArgumentException](ZipCodec.read(stored, e))
+    assert(crc.getMessage.contains("CRC-32"), crc.getMessage)
+    // usize bounds the inflate: a member that inflates past it refuses
+    val doc = ents.find(_.name == "word/document.xml").get
+    val past = intercept[IllegalArgumentException](
+      ZipCodec.read(docx, doc.copy(usize = doc.usize - 1)))
+    assert(past.getMessage.contains("past"), past.getMessage)
+  }
+
+  test("sniff reads zip names only: a corrupt document.xml is a docx") {
+    import graft.ingest.{DocParse, DocxCodec}
+    import graft.multimodal.ZipCodec
+    val docx = DocxCodec.encode(Seq("Name: Event", "Venue: Hall"))
+    val doc = ZipCodec.census(docx).find(_.name == "word/document.xml").get
+    var k = doc.dataAt.toInt + 2
+    while (k < doc.dataAt + doc.csize - 2) { docx(k) = 0xff.toByte; k += 1 }
+    assert(DocParse.sniff(docx) == "docx")
+    DocParse.parseAnySafe(docx) match {
+      case Left(f) => assert(f.format == "docx", f)
+      case Right(r) => fail(s"corrupt docx parsed: $r")
+    }
   }
 
   test("parseCsvRows: RFC-4180 quoting, CRLF, escaped quotes") {

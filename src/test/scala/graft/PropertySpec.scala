@@ -233,6 +233,7 @@ class PropertySpec extends SparkSpec {
 
   test("PDF predictor encode/decode are inverse on random rasters") {
     import graft.ingest.PdfCodec
+    import graft.multimodal.PngCodec
     val bytesGen = for {
       cols <- Gen.choose(1, 40)
       rows <- Gen.choose(1, 30)
@@ -243,7 +244,7 @@ class PropertySpec extends SparkSpec {
       // every PNG row-filter mix must invert, including all-one-type
       for (pick <- Seq[Int => Int](_ % 5, _ => 0, _ => 1, _ => 2,
           _ => 3, _ => 4)) {
-        val enc = PdfCodec.pngPredictEncode(data, cols, pick)
+        val enc = PngCodec.filterRows(data, cols, 1, pick)
         assert(PdfCodec.pngUnpredict(enc, cols, 1, 8).toSeq == data.toSeq,
           s"png cols=$cols")
       }
