@@ -52,6 +52,15 @@ if [ -n "$infl" ]; then
   echo "$infl"
   exit 1
 fi
+# one term-frequency count: size(filter(arr, x => x === t)) evaluates its
+# lambda interpreted per element; TextOps.countIn is the codegen'd loop
+tf=$(find src/main -name '*.scala' \
+  -exec perl -0777 -ne 'while (/size\(\s*filter\((?:[^(),]++|(\((?:[^()]++|(?1))*\)))*,\s*(\w+)\s*=>\s*\2\s*===/g) { printf "%s:%d\n", $ARGV, 1 + (substr($_, 0, $-[0]) =~ tr/\n//) }' {} +)
+if [ -n "$tf" ]; then
+  echo "[precommit] interpreted count lambda (use TextOps.countIn):"
+  echo "$tf"
+  exit 1
+fi
 # docs/scripts-only commits don't need the JVM spin-up
 if git diff --cached --name-only | grep -q '\.scala$\|\.sbt$'; then
   # Test/compile builds main too, and catches a change that breaks a test

@@ -240,7 +240,7 @@ object ScaleQ {
         terms.map(tm => sum(when(array_contains(col("tk"), tm), 1L)
           .otherwise(0L)).as(s"df_$tm")): _*)
       val score = terms.map { tm =>
-        size(filter(col("tk"), x => x === lit(tm))).cast("double") *
+        TextOps.countIn(col("tk"), Seq(tm)).cast("double") *
           log((col("n") + lit(1.0)) / (col(s"df_$tm") + lit(1.0)))
       }.reduce(_ + _)
       d.crossJoin(broadcast(stats))

@@ -62,9 +62,8 @@ object TextQ {
           search = Some("querying merges"), stemmed = true)
         .rows
         .withColumn("n_hits",
-          (size(filter(col("search_tokens"), x => x === lit("queri"))) +
-            size(filter(col("search_tokens"), x => x === lit("merg"))))
-            .cast("long"))
+          TextOps.countIn(col("search_tokens"), Seq("queri")) +
+            TextOps.countIn(col("search_tokens"), Seq("merg")))
         .select("doc_id", "n_hits")
     }, oracle =
       // Literal-map stance (declared; PorterSearchSpec pins it): on this
@@ -122,7 +121,7 @@ object TextQ {
     // doubles as literals, making the compare exact (db_extractor.py:51).
     Q("q169_tsrank_term", (s, dir) => {
       val tk = TextOps.tokens(col("text"))
-      val k = least(size(filter(tk, x => x === lit("spark"))), lit(256))
+      val k = least(TextOps.countIn(tk, Seq("spark")).cast("int"), lit(256))
       t(s, dir, "documents")
         .withColumn("n_hits", k)
         .filter(col("n_hits") >= 1)

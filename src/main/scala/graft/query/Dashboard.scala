@@ -1,7 +1,8 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.ObservationGlue
 import graft.ops.TextOps
 
 /** The reference's single user-facing query (§3.1: app.py:56-67 +
@@ -12,13 +13,26 @@ import graft.ops.TextOps
   * (relevance when searching, else event_date,name) → page slice. Every
   * page compiles to TakeOrderedAndProject (per-partition top
   * offset+limit, driver merge — no global sort, no single-partition
-  * window). Sibling plans: total count and the DISTINCT dropdown
-  * domains. */
+  * window). The page's total rides on that same job: an Observation
+  * counts the filtered rows as the top-k reads them, so a page is one
+  * Spark job. Sibling plan: the DISTINCT dropdown domains. */
 object Dashboard {
 
   val PerPage = 25 // app.py:10, db_extractor.py:6
 
-  final case class Page(rows: DataFrame, total: Long, totalPages: Long)
+  /** One page: `rows` is its plan, `total` the number of filtered rows.
+    * The top-k reads every filtered row, so the count observed by the
+    * rows' own job is exact: collect `rows`, then read `total`, and the
+    * page costs one job. If `rows` never ran, `total` counts the observed
+    * frame instead; that count completes the observation too, so the
+    * session's ObservationManager holds nothing for the page once
+    * `total` is read. */
+  final class Page private[Dashboard] (val rows: DataFrame,
+      observation: Observation, observed: DataFrame) {
+    lazy val total: Long = ObservationGlue.rowOrEmpty(observation)
+      .fold(observed.count())(_.getLong(0))
+    def totalPages: Long = (total + PerPage - 1) / PerPage
+  }
 
   private def predicate(source: Option[String], category: Option[String],
       terms: Seq[String]): Column = {
@@ -49,8 +63,10 @@ object Dashboard {
     val terms = normalizeQuery(search, stemmed)
     val filtered = events.filter(predicate(source, category, terms))
 
-    def tf(column: String, t: String) =
-      size(filter(col(column), x => x === lit(t)))
+    // the search path only ranks rows whose search_tokens contain every
+    // term, and Normalize.withWeightedTokens never emits a null array, so
+    // tf never sees a null array
+    def tf(column: String, t: String) = TextOps.countIn(col(column), Seq(t))
     val sortCols: Seq[Column] =
       if (terms.nonEmpty) {
         val raw =
@@ -66,13 +82,14 @@ object Dashboard {
         Seq(score.desc, asc("event_date"), asc("name"))
       } else Seq(asc("event_date"), asc("name"), asc("url"))
 
-    val total = filtered.count()
+    val observation = Observation()
+    val observed = filtered.observe(observation, count(lit(1)).as("total"))
     // offset+limit after orderBy plans as TakeOrderedAndProject (each
     // partition keeps offset+limit rows, driver merges) — unlike a global
     // row_number window, which would move every row to one partition.
-    val rows = filtered.orderBy(sortCols: _*)
+    val rows = observed.orderBy(sortCols: _*)
       .offset(math.max(page - 1, 0) * PerPage).limit(PerPage)
-    Page(rows, total, (total + PerPage - 1) / PerPage)
+    new Page(rows, observation, observed)
   }
 
   /** A2: dropdown domains. */

@@ -24,9 +24,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object PlanDump {
 
   /** Expression ids (`#123`, `#123L`), lambda-variable suffixes
-    * (`x_42`), lambda class names (`Foo$$Lambda/0x…@1a2b`), RDD ids and
-    * exchange `plan_id`s change from run to run; everything else in a
-    * plan string is its shape. */
+    * (`x_42`), lambda class names (`Foo$$Lambda/0x…@1a2b`), RDD ids,
+    * exchange `plan_id`s and random UUIDs (the default name of an
+    * `Observation`'s `CollectMetrics`) change from run to run; everything
+    * else in a plan string is its shape. */
   def normalize(plan: String): String = plan
     .replaceAll("#\\d+L?", "#N")
     .replaceAll("\\b(lambda [A-Za-z]+)_\\d+", "$1_N")
@@ -34,6 +35,7 @@ object PlanDump {
     .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
     .replaceAll("plan_id=\\d+", "plan_id=N")
     .replaceAll("@[0-9a-f]{4,}\\b", "@N")
+    .replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "UUID")
 
   /** Expression ids come from one JVM-wide counter, and some rules
     * order their output by a hash that includes them (the distinct

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{CollectMetricsExec, FileSourceScanExec, QueryExecution, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
@@ -123,9 +123,20 @@ class PlanSpec extends SparkSpec {
       .withColumn("url", org.apache.spark.sql.functions.col("event_id")
         .cast("string"))
     val page3 = graft.query.Dashboard.query(events, page = 3).rows
-    val p = page3.queryExecution.executedPlan.toString
+    val plan = page3.queryExecution.executedPlan
+    val p = plan.toString
     assert(p.contains("TakeOrderedAndProject"), p.take(3000))
     assert(!p.contains("Window"), s"deep page still windows:\n${p.take(3000)}")
+    // the page's total is observed by the top-k's own scan
+    val topk = plan.collectFirst { case t: TakeOrderedAndProjectExec => t }
+    assert(topk.exists(_.exists(_.isInstanceOf[CollectMetricsExec])),
+      s"no observation under the top-k:\n${p.take(3000)}")
+    // and the observation does not block column pruning: a page showing
+    // one column reads the same columns as before the total was observed
+    val scan = page3.select("url").queryExecution.executedPlan
+      .collectFirst { case f: FileSourceScanExec => f }
+    assert(scan.map(_.requiredSchema.catalogString) ==
+      Some("struct<event_id:bigint,ts:timestamp_ntz>"))
   }
 
   test("stratified sample windows per stratum, not globally") {
