@@ -106,7 +106,7 @@ object Bench {
       else "/tmp/bench_subset.json")
     if (outPath.nonEmpty) try {
       val detail = allRuns.toSeq.sortBy(_._1).map { case (name, m) =>
-        s"""  ${json(name)}: {"median": ${results(name)}, "task_sec": ${f"${m.taskSec}%.3f"}, "gc_sec": ${f"${m.gcSec}%.3f"}, "steal_pct": ${f"${m.stealPct}%.2f"}, "load1_runs": [${m.loads.map(l => f"$l%.2f").mkString(", ")}], "runs": [${m.times.mkString(", ")}]}"""
+        s"""  ${json(name)}: {"median": ${results(name)}, "task_sec": ${f"${m.taskSec}%.3f"}, "gc_sec": ${f"${m.gcSec}%.3f"}, "steal_pct": ${f"${m.stealPct}%.2f"}, "codegen_compiles": ${m.codegenCompiles}, "load1_runs": [${m.loads.map(l => f"$l%.2f").mkString(", ")}], "runs": [${m.times.mkString(", ")}]}"""
       }.mkString(",\n")
       val doc =
         s"""{

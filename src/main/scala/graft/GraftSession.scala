@@ -20,6 +20,15 @@ import org.apache.spark.sql.SparkSession
   *     TIMESTAMP(MICROS) generations surface as NTZ and Tables.t casts
   *     them to session-tz TIMESTAMP).
   *   - UTC session timezone — deterministic timestamp display/parse.
+  *   - artifact isolation off — with it on (Spark's default) every
+  *     session UUID gets its own executor class loader, and Structured
+  *     Streaming runs each query in a cloned session with a new UUID.
+  *     Spark's codegen cache is keyed by (class loader, code), so every
+  *     `UploadStream.start` drain re-compiled its byte-identical plan
+  *     (24 Janino compiles per upload).
+  *     The engine never calls `addArtifact`, so per-session isolation
+  *     buys it nothing; off, every session's tasks share the default
+  *     class loader and a repeat drain hits the cache.
   *   - custom SQL functions registered (minhash_sig, simhash64,
   *     shingles, ngrams, cosine_sim, winnow, stem_tokens).
   *   - `local()` only: Spark UI off — no tool or test reads it, and
@@ -38,6 +47,7 @@ object GraftSession {
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** Local session with every engine function registered. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),

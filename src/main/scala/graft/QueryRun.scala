@@ -28,6 +28,7 @@ final class QueryRun(val spark: SparkSession) {
     import QueryRun.runs
     collector.delta() // drop whatever ran before this measurement
     val steal0 = QueryRun.stealNow()
+    val compiles0 = QueryRun.codegenCompiles()
     val loads = Seq.newBuilder[Double]
     val times = (1 to runs).flatMap { _ =>
       // a /proc/loadavg sample before EVERY run timestamps external
@@ -38,7 +39,7 @@ final class QueryRun(val spark: SparkSession) {
       catch { case e: Throwable => onFail(e); None }
     }
     QueryRun.Measured(runs, times, loads.result(), QueryRun.stealPct(steal0),
-      collector.delta())
+      collector.delta(), QueryRun.codegenCompiles() - compiles0)
   }
 }
 
@@ -117,13 +118,23 @@ object QueryRun {
     case c => c.toString
   } + "\""
 
+  /** Janino compiles of generated code so far in this JVM (Spark's
+    * process-wide `CodegenMetrics`; one count per cache miss). A
+    * measurement's delta is nonzero on warm runs only when the codegen
+    * cache misses, e.g. when each run gets a new class loader. */
+  def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      .getCount
+
   /** Task metrics summed over the tasks of a measurement (peak: the
     * largest single task), plus one line per completed stage. */
   final case class Delta(taskMs: Long, gcMs: Long, spillBytes: Long,
       peakBytes: Long, stages: Seq[String])
 
+  /** `codegenCompiles`: Janino compiles during the measurement, in any
+    * thread of the JVM (see [[codegenCompiles]]). */
   final case class Measured(runs: Int, times: Seq[Double], loads: Seq[Double],
-      stealPct: Double, metrics: Delta) {
+      stealPct: Double, metrics: Delta, codegenCompiles: Long) {
     def failed: Boolean = times.size < runs
     def median: Double = QueryRun.median(times)
     // mean per run: one accumulator can't split the runs apart

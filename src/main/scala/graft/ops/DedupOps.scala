@@ -21,9 +21,12 @@ object DedupOps {
   }
 
   /** Idempotent append: keep only rows whose key is absent from `existing`
-    * (left-anti join ≙ ON CONFLICT (url) DO NOTHING across batches). */
+    * (left-anti join ≙ ON CONFLICT (url) DO NOTHING across batches). A
+    * left-anti join ignores duplicate keys on its right side, so the
+    * existing keys go in as scanned: no aggregate, no shuffle of every
+    * existing key. */
   def antiJoinNew(batch: DataFrame, existing: DataFrame, key: String): DataFrame =
-    batch.join(existing.select(key).distinct(), Seq(key), "left_anti")
+    batch.join(existing.select(key), Seq(key), "left_anti")
 
   /** Exact Jaccard over two distinct-element arrays, as a double ∈ [0,1]. */
   def jaccard(a: Column, b: Column): Column = {

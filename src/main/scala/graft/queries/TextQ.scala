@@ -120,11 +120,12 @@ object TextQ {
     // shuffle, no UDF, and the DuckDB oracle consumes the SAME lookup
     // doubles as literals, making the compare exact (db_extractor.py:51).
     Q("q169_tsrank_term", (s, dir) => {
-      val tk = TextOps.tokens(col("text"))
-      val k = least(TextOps.countIn(tk, Seq("spark")).cast("int"), lit(256))
+      // filter on the count before the clamp: `least` skips a null, so a
+      // null-text document would otherwise read 256 hits
+      val k = TextOps.countIn(TextOps.tokens(col("text")), Seq("spark"))
       t(s, dir, "documents")
-        .withColumn("n_hits", k)
-        .filter(col("n_hits") >= 1)
+        .filter(k >= 1)
+        .withColumn("n_hits", least(k.cast("int"), lit(256)))
         .withColumn("score",
           element_at(typedlit(graft.functions.TsRank.termScore),
             col("n_hits")))

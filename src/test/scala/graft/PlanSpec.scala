@@ -592,6 +592,28 @@ class PlanSpec extends SparkSpec {
     assert(plan.collectLeaves().size == 1, plan.toString)
   }
 
+  test("incremental load anti-joins the scanned silver urls, no aggregate") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    val silverDir = java.nio.file.Files.createTempDirectory("graft_silver")
+      .resolve("silver").toString
+    Seq(("http://a", "a"), ("http://a", "a2")).toDF("url", "name")
+      .write.parquet(silverDir)
+    val batch = Seq((1L, "http://a", "a"), (2L, "http://b", "b"))
+      .toDF("id", "url", "name")
+    val df = graft.pipeline.Etl.dedupForLoad(batch,
+      Some(spark.read.parquet(silverDir)))
+    val plan = df.queryExecution.optimizedPlan
+    val anti = plan.collect { case j: Join if j.joinType == LeftAnti => j }
+    assert(anti.size == 1, plan.toString)
+    // a left-anti join ignores duplicate right keys: a distinct there
+    // only adds an aggregate and a shuffle of every silver url
+    assert(anti.head.right.collect { case a: Aggregate => a }.isEmpty,
+      plan.toString)
+    assert(df.select("url").as[String].collect().toSeq == Seq("http://b"))
+  }
+
   // Which queries spread a one-split scan is a per-query choice (a plan
   // shape rule would also spread q105 and q136, and q150's spread was
   // reverted), so the set is pinned here: a round-robin exchange whose

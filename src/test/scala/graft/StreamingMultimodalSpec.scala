@@ -8,13 +8,14 @@ import org.apache.spark.sql.functions._
 class StreamingMultimodalSpec extends SparkSpec {
   import spark.implicits._
 
+  private def envelope(id: Long, url: String): String =
+    s"""{"id": $id, "source_spider": "ticketmaster", "raw_json": "{\\"name\\": \\"show $id\\", \\"url\\": \\"$url\\", \\"venue_name\\": \\"ryman\\"}"}"""
+
   test("R2 upload stream: AvailableNow drains files, dedups, is idempotent") {
     val base = Files.createTempDirectory("graft_stream").toString
     val up = s"$base/uploads"; val silver = s"$base/silver"
     val ck1 = s"$base/ck1"; val ck2 = s"$base/ck2"
     Files.createDirectories(Paths.get(up))
-    def envelope(id: Long, url: String): String =
-      s"""{"id": $id, "source_spider": "ticketmaster", "raw_json": "{\\"name\\": \\"show $id\\", \\"url\\": \\"$url\\", \\"venue_name\\": \\"ryman\\"}"}"""
     Files.writeString(Paths.get(s"$up/batch1.jsonl"),
       Seq(envelope(1, "http://tm/a"), envelope(2, "http://tm/b"),
         envelope(3, "http://tm/a")).mkString("\n"))
@@ -60,8 +61,6 @@ class StreamingMultimodalSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft_cron").toString
     val up = s"$base/uploads"; val silver = s"$base/silver"
     Files.createDirectories(Paths.get(up))
-    def envelope(id: Long, url: String): String =
-      s"""{"id": $id, "source_spider": "ticketmaster", "raw_json": "{\\"name\\": \\"show $id\\", \\"url\\": \\"$url\\", \\"venue_name\\": \\"ryman\\"}"}"""
     Files.writeString(Paths.get(s"$up/batch1.jsonl"),
       Seq(envelope(1, "http://tm/a"), envelope(2, "http://tm/b"))
         .mkString("\n"))
@@ -432,6 +431,29 @@ class StreamingMultimodalSpec extends SparkSpec {
       .filter($"user_id" === 1L).orderBy("s")
       .select("n", "sum_v").as[(Long, Double)].collect().toSeq
     assert(got == Seq((2L, 3.0), (1L, 4.0)))
+  }
+
+  test("a repeat upload drain compiles no generated code") {
+    // Each drain runs in its own cloned session. With per-session
+    // artifact class loaders, every drain missed Spark's codegen cache
+    // (keyed by class loader and code) and re-compiled ~24 classes.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val base = Files.createTempDirectory("graft_recompile").toString
+    val up = s"$base/uploads"; val silver = s"$base/silver"
+    Files.createDirectories(Paths.get(up))
+    def drain(n: Int): Long = {
+      Files.writeString(Paths.get(s"$up/upload$n.jsonl"),
+        (1 to 3).map(i => envelope(10L * n + i, s"http://tm/$n/$i"))
+          .mkString("\n"))
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      UploadStream.start(spark, up, silver, s"$base/ck").awaitTermination()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    drain(1) // no silver yet: the plan has no url anti-join
+    drain(2) // the first plan with the anti-join
+    val compiles = drain(3)
+    assert(compiles == 0, s"third drain compiled $compiles classes")
+    assert(spark.read.parquet(silver).count() == 9)
   }
 
   test("paced backfill: maxFilesPerTrigger drains in bounded micro-batches") {

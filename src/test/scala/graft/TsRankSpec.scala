@@ -75,6 +75,16 @@ class TsRankSpec extends SparkSpec {
       assert(r.getDouble(1) == r.getDouble(0) / (r.getDouble(0) + 1.0)))
   }
 
+  test("q169 drops a document whose text is null, as the oracle does") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_nulltext").toString
+    Seq((1L, Some("spark spark join")), (2L, None), (3L, Some("join")))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val got = SparkEntry.queries("q169_tsrank_term")(spark, dir)
+      .select("doc_id", "n_hits").as[(Long, Long)].collect().toSeq
+    assert(got == Seq((1L, 2L)))
+  }
+
   test("the scoring is a pure projection — no hash shuffle, no join") {
     val dir = "/root/testdata/sf0.001"
     for (q <- Seq("q169_tsrank_term", "q170_tsrank_and")) {
