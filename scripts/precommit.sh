@@ -61,6 +61,16 @@ if [ -n "$tf" ]; then
   echo "$tf"
   exit 1
 fi
+# one order-statistic selection: exact k-th values and global ranks go
+# through OrderStats (kth/rank); `local_k`, the rank inside the selected
+# bucket, marks a hand-written histogram-selection copy
+sel=$(grep -rn --include='*.scala' 'local_k' src/main \
+  | grep -v '^src/main/scala/graft/ops/OrderStats\.scala:' || true)
+if [ -n "$sel" ]; then
+  echo "[precommit] histogram selection outside OrderStats (use OrderStats.kth):"
+  echo "$sel"
+  exit 1
+fi
 # docs/scripts-only commits don't need the JVM spin-up
 if git diff --cached --name-only | grep -q '\.scala$\|\.sbt$'; then
   # Test/compile builds main too, and catches a change that breaks a test

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables._
-import graft.ops.TextOps
+import graft.ops.{OrderStats, TextOps}
 
 /** Round-7 evaluation-and-analysis tier: the metrics a curation run
   * computes ABOUT its own gates and sketches (ROC-AUC, Count-Min error,
@@ -39,40 +39,6 @@ object MetricsQ {
       |        - len(list_filter(string_split(lower(text), ' '),
       |            x -> x IN ('the','a','an','of','to','and','in','is','on','for')))) * 10000
       |       // len(string_split(lower(text), ' ')) END AS BIGINT)""".stripMargin
-
-  /** Exact lower median per group by distributed selection — q159's
-    * histogram machinery generalized to grouped data: per-(key, bucket)
-    * histogram → per-key cumulative over the ≤|buckets|-row histogram
-    * locates each key's rank-k bucket → only those buckets' rows are
-    * ranked. No window ever partitions by the bare group key over raw
-    * rows (a 100 TB group would serialize into one task); every raw-row
-    * window is (key, bucket)-scoped. Input needs (key, cents) columns;
-    * bucketing happens HERE so callers can't drift from the width, and
-    * uses true floor division (ldiv truncates toward zero, which would
-    * fold buckets -1 and 0 together across the origin and break the
-    * bucket-order ≡ value-order invariant on negative values). */
-  private def lowerMedianPerGroup(vIn: DataFrame, key: String,
-      bucketW: Long): DataFrame = {
-    val w = lit(bucketW)
-    val v = vIn.withColumn("bk",
-      ldiv(col("cents") - pmod(col("cents"), w), w))
-    val hist = v.groupBy(key, "bk").agg(count(lit(1)).as("cnt"))
-    val nk = hist.groupBy(key).agg(sum("cnt").as("n"),
-      ldiv(sum("cnt") + 1, lit(2L)).as("k"))
-    val wH = Window.partitionBy(key).orderBy("bk")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val target = hist
-      .withColumn("below", coalesce(sum("cnt").over(wH), lit(0L)))
-      .join(broadcast(nk), Seq(key))
-      .filter(col("below") < col("k") &&
-        col("k") <= col("below") + col("cnt"))
-      .select(col(key), col("bk"), (col("k") - col("below")).as("local_k"))
-    val wB = Window.partitionBy(key, "bk").orderBy("cents")
-    v.join(broadcast(target), Seq(key, "bk"))
-      .withColumn("rn", row_number().over(wB))
-      .filter(col("rn") === col("local_k"))
-      .select(col(key), col("cents").as("kth"))
-  }
 
   /** Grid-blocked L∞ ≤ R neighbor pairs over the first two quantized
     * embedding dims (the q237 shape, shared with q240's clustering):
@@ -156,56 +122,6 @@ object MetricsQ {
   private def dbscanEps(n: Long): Long =
     (1L to 200L).reverse.find(e => e * e * n <= 312500L).getOrElse(1L)
 
-  /** Multi-quantile generalization of the grouped selection: ALL the
-    * requested order statistics (name, num, den) — k = ⌈num·n/den⌉ per
-    * key — from ONE corpus pass. The histogram, its cumulative and the
-    * per-(key, bucket) rank are computed once; each quantile only adds
-    * a row to the broadcast target table. Same invariant as
-    * lowerMedianPerGroup: no window ever partitions by the bare key
-    * over raw rows. The rank is computed on the base BEFORE the target
-    * join (a target bucket can serve several quantiles — ranking after
-    * the join would count the duplicated rows). */
-  private def quantilesPerGroup(vIn: DataFrame, key: String, bucketW: Long,
-      qs: Seq[(String, Long, Long)]): DataFrame =
-    quantilesPerGroupW(vIn, key, lit(bucketW), qs)
-
-  /** [[quantilesPerGroup]] with a per-row bucket width column, so
-    * heterogeneous metrics (different natural bucket sizes) can stack
-    * into ONE long-format pass keyed by metric name — the q279 shape:
-    * three metrics' fences from one histogram-selection machinery run
-    * instead of three. */
-  private def quantilesPerGroupW(vIn: DataFrame, key: String, w: Column,
-      qs: Seq[(String, Long, Long)]): DataFrame = {
-    val wB = Window.partitionBy(key, "bk").orderBy("cents")
-    val v = vIn
-      .withColumn("bk", ldiv(col("cents") - pmod(col("cents"), w), w))
-      .withColumn("rn", row_number().over(wB))
-      .localCheckpoint(false)
-    val hist = v.groupBy(key, "bk").agg(count(lit(1)).as("cnt"))
-    val nk = hist.groupBy(key).agg(sum("cnt").as("n"))
-    val wH = Window.partitionBy(key).orderBy("bk")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val below = hist
-      .withColumn("below", coalesce(sum("cnt").over(wH), lit(0L)))
-      .join(broadcast(nk), Seq(key))
-    val targets = qs.map { case (label, num, den) =>
-      below
-        .withColumn("k", ldiv(col("n") * num + (den - 1), lit(den)))
-        .filter(col("below") < col("k") &&
-          col("k") <= col("below") + col("cnt"))
-        .select(col(key), col("bk"),
-          (col("k") - col("below")).as("local_k"), lit(label).as("q"))
-    }.reduce(_ unionByName _)
-    v.join(broadcast(targets), Seq(key, "bk"))
-      .filter(col("rn") === col("local_k"))
-      .groupBy(key)
-      .agg(qs.map { case (label, _, _) =>
-        min(when(col("q") === label, col("cents"))).as(label)
-      }.head, qs.tail.map { case (label, _, _) =>
-        min(when(col("q") === label, col("cents"))).as(label)
-      }: _*)
-  }
-
   lazy val all: Seq[Q] = Seq(
     // Equi-depth quartile profile per group (feature-binning edges +
     // IQR outlier fences): exact ⌈p·n⌉ order statistics of event value
@@ -218,10 +134,13 @@ object MetricsQ {
         .select(col("event_type"),
           (col("value").cast(DecimalType(20, 2)) * 100)
             .cast("long").as("cents"))
-      quantilesPerGroup(v, "event_type", 1000L,
-        Seq(("p25_cents", 1L, 4L), ("p50_cents", 1L, 2L),
-          ("p75_cents", 3L, 4L)))
-        .withColumn("iqr_cents", col("p75_cents") - col("p25_cents"))
+      OrderStats.kth(v, Seq("event_type"), "cents",
+          OrderStats.floorBucket(col("cents"), lit(1000L)),
+          Seq(("p25_cents", 1L, 4L), ("p50_cents", 1L, 2L),
+            ("p75_cents", 3L, 4L)))
+        .select(col("event_type"), col("p25_cents"), col("p50_cents"),
+          col("p75_cents"),
+          (col("p75_cents") - col("p25_cents")).as("iqr_cents"))
         .orderBy("event_type")
     }, oracle =
       """WITH v AS (
@@ -347,23 +266,27 @@ object MetricsQ {
     // raw rows — the per-group generalization of q159/q224, and the
     // shape that survives a 100 TB single-type skew.
     Q("q236_event_value_mad", (s, dir) => {
-      val W = 1000L // cents per bucket: $10 bands over [$0, $491]
+      // cents per bucket: $10 bands over [$0, $491]
+      val bk = OrderStats.floorBucket(col("cents"), lit(1000L))
       val v = t(s, dir, "events")
         .select(col("event_type"),
           (col("value").cast(DecimalType(20, 2)) * 100)
             .cast("long").as("cents"))
-      val med = lowerMedianPerGroup(v, "event_type", W)
-        .withColumnRenamed("kth", "median_cents")
+      val med = OrderStats.kth(v, Seq("event_type"), "cents", bk,
+          Seq(("median_cents", 1L, 2L)))
+        .select(col("event_type"), col("n").as("n_events"),
+          col("median_cents"))
+      // each type's count and median ride through the MAD selection as
+      // group keys (both are fixed per type); the deviations are
+      // checkpointed, as the selection reads its input twice
       val dev = v.join(broadcast(med), "event_type")
-        .select(col("event_type"),
+        .select(col("event_type"), col("n_events"), col("median_cents"),
           abs(col("cents") - col("median_cents")).as("cents"))
-      val mad = lowerMedianPerGroup(dev, "event_type", W)
-        .withColumnRenamed("kth", "mad_cents")
-      val n = v.groupBy("event_type").agg(count(lit(1)).as("n"))
-      n.join(broadcast(med), "event_type")
-        .join(broadcast(mad), "event_type")
-        .select(col("event_type"), col("n"), col("median_cents"),
-          col("mad_cents"))
+        .localCheckpoint(false)
+      OrderStats.kth(dev, Seq("event_type", "n_events", "median_cents"),
+          "cents", bk, Seq(("mad_cents", 1L, 2L)))
+        .select(col("event_type"), col("n_events").as("n"),
+          col("median_cents"), col("mad_cents"))
         .orderBy("event_type")
     }, oracle =
       """WITH v AS (
@@ -447,20 +370,21 @@ object MetricsQ {
     // stddev-based fence this replaces breaks the moment a corrupt
     // batch drags the mean.
     Q("q250_mad_outliers", (s, dir) => {
-      val W = 1000L
       val v = t(s, dir, "events")
         .select(col("event_type"),
           (col("value").cast(DecimalType(20, 2)) * 100)
             .cast("long").as("cents"))
-      val med = lowerMedianPerGroup(v, "event_type", W)
-        .withColumnRenamed("kth", "med")
-      val dev = v.join(broadcast(med), "event_type")
+      def median(df: DataFrame, value: String, label: String) =
+        OrderStats.kth(df, Seq("event_type"), value,
+          OrderStats.floorBucket(col(value), lit(1000L)),
+          Seq((label, 1L, 2L))).select("event_type", label)
+      // two consumers (the MAD selection, which reads it twice, and the
+      // scoring pass)
+      val dev = v.join(broadcast(median(v, "cents", "med")), "event_type")
         .select(col("event_type"), col("cents"),
           abs(col("cents") - col("med")).as("adev"))
-      val mad = lowerMedianPerGroup(
-        dev.select(col("event_type"), col("adev").as("cents")),
-        "event_type", W).withColumnRenamed("kth", "mad")
-      dev.join(broadcast(mad), "event_type")
+        .localCheckpoint(false)
+      dev.join(broadcast(median(dev, "adev", "mad")), "event_type")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum((col("adev") * lit(10000L) > col("mad") * lit(44478L))
@@ -682,28 +606,18 @@ object MetricsQ {
     // shards (rank r → shard snake(r), so every shard gets the same
     // quality PROFILE, not just the same count — the standard trick for
     // difficulty-balanced training shards). The global rank is computed
-    // WITHOUT a global window: the total order is (q_bp desc, bucket,
-    // doc_id), offsets come from a cumulative over the (q_bp × 32
-    // buckets) HISTOGRAM (≤320k rows at any corpus size), and the only
-    // per-row window partitions by (q_bp, bucket) — the q159/PrefixSum
-    // distributed-selection idiom applied to ranking.
+    // WITHOUT a global window (`OrderStats.rank`): the total order is
+    // (q_bp desc, doc_id % 32, doc_id), offsets come from a cumulative
+    // over the (q_bp × 32 buckets) HISTOGRAM (≤320k rows at any corpus
+    // size), and the only per-row window partitions by (q_bp, bucket).
     Q("q228_curriculum_shards", (s, dir) => {
-      val nb = 32L
       val d = t(s, dir, "documents")
         .select(col("doc_id"), qbp.as("q_bp"))
-        .withColumn("bk", pmod(col("doc_id"), lit(nb)))
-      val hist = d.groupBy("q_bp", "bk").agg(count(lit(1)).as("c"))
-      val wOff = Window.orderBy(desc("q_bp"), asc("bk"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val off = hist
-        .withColumn("off", coalesce(sum("c").over(wOff), lit(0L)))
-        .select("q_bp", "bk", "off")
-      val wIn = Window.partitionBy("q_bp", "bk").orderBy("doc_id")
-      val r0 = col("off") + row_number().over(wIn) - 1
       val pass = ldiv(col("r0"), lit(8L))
       val pos = pmod(col("r0"), lit(8L))
-      d.join(broadcast(off), Seq("q_bp", "bk"))
-        .withColumn("r0", r0)
+      OrderStats.rank(d, Seq(-col("q_bp"), pmod(col("doc_id"), lit(32L))),
+          Seq(col("doc_id")), "rank")
+        .withColumn("r0", col("rank") - 1)
         .withColumn("shard",
           when(pmod(pass, lit(2L)) === 0, pos).otherwise(lit(7L) - pos))
         .groupBy("shard")
@@ -1876,8 +1790,8 @@ object MetricsQ {
     // Spearman rank correlation between document length and quality —
     // the curation readout that says whether a length gate double-
     // counts a quality gate. Ranks (deterministic (value, doc_id)
-    // tie-break) come from the q228 histogram-offset idiom for BOTH
-    // variables — bucket offsets over the bounded value histograms,
+    // tie-break) come from `OrderStats.rank` for BOTH variables —
+    // bucket offsets over the bounded value histograms,
     // bucket-partitioned row_numbers — never a corpus-sized global
     // window; ρ = 1 − 6Σd²/(n(n²−1)) stays integral (DECIMAL
     // numerator, one IntegralDivide to bp).
@@ -1885,21 +1799,12 @@ object MetricsQ {
       val d = t(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"), qbp.as("q_bp"))
         .localCheckpoint(false)
-      def rankBy(v: String, rn: String): DataFrame = {
-        val hist = d.groupBy(v).agg(count(lit(1)).as("c"))
-        val wOff = Window.orderBy(asc(v))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val off = hist
-          .withColumn("off", coalesce(sum("c").over(wOff), lit(0L)))
-          .select(col(v), col("off"))
-        val wIn = Window.partitionBy(v).orderBy("doc_id")
-        d.join(broadcast(off), v)
-          .withColumn(rn, (col("off") + row_number().over(wIn))
-            .cast("long"))
-          .select(col("doc_id"), col(rn))
-      }
+      val rx = OrderStats.rank(d, Seq(col("n_chars")), Seq(col("doc_id")),
+        "rx").select("doc_id", "rx")
+      val ry = OrderStats.rank(d, Seq(col("q_bp")), Seq(col("doc_id")),
+        "ry").select("doc_id", "ry")
       val dd = col("rx") - col("ry")
-      rankBy("n_chars", "rx").join(rankBy("q_bp", "ry"), "doc_id")
+      rx.join(ry, "doc_id")
         .agg(count(lit(1)).as("n_docs"),
           sum(dd * dd).as("sum_d2"))
         .select(col("n_docs"), col("sum_d2"),
@@ -1940,7 +1845,7 @@ object MetricsQ {
     // customer-value grid: each user scores 1..5 per dimension by
     // which exact quintile fence their metric clears, segments are the
     // (r, f, m) cells. Fences are exact ⌈q·n/5⌉ order statistics from
-    // quantilesPerGroup (one histogram-selection pass per metric over
+    // OrderStats.kth (one histogram-selection pass for all metrics over
     // the USER-level rollup — at 100 TB that's billions of rows, so no
     // global window is admissible and ntile() is exactly the wrong
     // tool); scores are fence comparisons in one scoring pass.
@@ -1958,9 +1863,6 @@ object MetricsQ {
         .select(col("user_id"),
           ldiv(col("ref") - col("last_ep"), lit(86400L)).as("rec_days"),
           col("freq"), col("cents"))
-        // NB: the group column must not be named "k" — quantilesPerGroup
-        // uses "k" internally for the quantile rank
-        .withColumn("grp", lit("all"))
         .localCheckpoint(false)
       val qs = Seq(("p20", 1L, 5L), ("p40", 2L, 5L), ("p60", 3L, 5L),
         ("p80", 4L, 5L))
@@ -1972,14 +1874,16 @@ object MetricsQ {
       val metrics = Seq(("rec_days", 7L), ("freq", 8L),
         ("cents", 100000L))
       val long = u.select(explode(array(metrics.map { case (m, bw) =>
-          struct(lit(m).as("grp"), col(m).as("cents"), lit(bw).as("bw"))
+          struct(lit(m).as("grp"), col(m).as("value"), lit(bw).as("bw"))
         }: _*)).as("x"))
-        .select(col("x.grp").as("grp"), col("x.cents").as("cents"),
+        .select(col("x.grp").as("grp"), col("x.value").as("value"),
           col("x.bw").as("bw"))
+        .localCheckpoint(false) // the selection reads it twice
       val fenceCols = metrics.flatMap { case (m, _) =>
         qs.map { case (l, _, _) =>
           min(when(col("grp") === m, col(l))).as(s"${m}_$l") } }
-      val fences = quantilesPerGroupW(long, "grp", col("bw"), qs)
+      val fences = OrderStats.kth(long, Seq("grp"), "value",
+          OrderStats.floorBucket(col("value"), col("bw")), qs)
         .agg(fenceCols.head, fenceCols.tail: _*)
       def score(metric: String): Column =
         qs.map { case (l, _, _) =>
@@ -2129,7 +2033,7 @@ object MetricsQ {
     // event_type-partitioned rank windows over raw rows; this trims by
     // quantile-VALUE fences from histogram selection, so no window
     // ever sees a full group). Fences are EXACT ⌈p·n⌉ order statistics from
-    // one quantilesPerGroup histogram-selection pass (no group-wide
+    // one OrderStats.kth histogram-selection pass (no group-wide
     // sort, no percentile_approx); the trimmed mean itself is one
     // conditional-sum scoring scan against the broadcast fence table,
     // reported exactly in cents·10⁴ via IntegralDivide.
@@ -2139,7 +2043,8 @@ object MetricsQ {
           (col("value").cast(DecimalType(20, 2)) * 100)
             .cast("long").as("cents"))
         .localCheckpoint(false)
-      val fences = quantilesPerGroup(v, "event_type", 1000L,
+      val fences = OrderStats.kth(v, Seq("event_type"), "cents",
+        OrderStats.floorBucket(col("cents"), lit(1000L)),
         Seq(("p10_cents", 1L, 10L), ("p90_cents", 9L, 10L)))
       val in = col("cents").between(col("p10_cents"), col("p90_cents"))
       v.join(broadcast(fences), "event_type")

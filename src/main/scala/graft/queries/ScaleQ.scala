@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables._
-import graft.ops.{DedupOps, Partitioning, PrefixSum, RangeJoin, TextOps}
+import graft.ops.{DedupOps, OrderStats, Partitioning, PrefixSum, RangeJoin,
+  TextOps}
 
 /** Scale-shaped operators round 2: distributed prefix sum, dedup
   * clustering (connected components), PII redaction, unpivot, date-spine
@@ -649,37 +650,24 @@ object ScaleQ {
     // selection — the scalable replacement for a global sort or a
     // single-partition rank window. Pass 1: value-bucket histogram (one
     // small aggregate); pass 2: a histogram-sized cumulative locates the
-    // bucket holding rank k and the local rank within it; pass 3: rank
-    // ONLY that bucket's rows (a bounded sort over n/buckets rows, one
-    // partition of bucket size — never the table). Same family as the
-    // q55 prefix sum; values in integer cents so the selected element is
-    // bit-exact. At 100 TB the bucket width is the knob: pick it from
-    // min/max so each bucket fits an executor (a second histogram pass
-    // refines if a bucket is still too fat).
+    // bucket holding rank k and the local rank within it; pass 3: count
+    // ONLY that bucket's rows per distinct value and take the least
+    // value whose running count reaches the local rank (a bounded sort
+    // over n/buckets rows, never the table; `OrderStats.kth`). Same
+    // family as the q55 prefix sum; values in integer cents so the
+    // selected element is bit-exact. At 100 TB the bucket width is the
+    // knob: pick it from min/max so each bucket fits an executor (a
+    // second histogram pass refines if a bucket is still too fat).
     Q("q159_global_median", (s, dir) => {
-      val W = 1000000L // cents per bucket: $10k bands over [$900, $105k]
+      // cents per bucket: $1k bands over [$900, $105k], so the selected
+      // bucket holds ~1% of the rows
+      val W = 100000L
       val v = t(s, dir, "lineitem")
         .select((col("l_extendedprice").cast(DecimalType(20, 2)) * 100)
           .cast("long").as("cents"))
-        .withColumn("bk", ldiv(col("cents"), lit(W)))
-      val hist = v.groupBy("bk").agg(count(lit(1)).as("cnt"))
-      val nk = hist.agg(sum(col("cnt")).as("n"),
-        ldiv(sum(col("cnt")) + 1, lit(2L)).as("k"))
-      val wH = Window.orderBy("bk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val target = hist
-        .withColumn("below", coalesce(sum(col("cnt")).over(wH), lit(0L)))
-        .crossJoin(broadcast(nk))
-        .filter(col("below") < col("k") &&
-          col("k") <= col("below") + col("cnt"))
-        .select(col("bk").as("tbk"), (col("k") - col("below"))
-          .as("local_k"))
-      val wB = Window.partitionBy("bk").orderBy("cents")
-      v.join(broadcast(target), col("bk") === col("tbk"))
-        .withColumn("rn", row_number().over(wB))
-        .filter(col("rn") === col("local_k"))
-        .crossJoin(broadcast(nk))
-        .select(col("n"), col("k"), col("cents").as("median_cents"))
+      OrderStats.kth(v, Nil, "cents", ldiv(col("cents"), lit(W)),
+          Seq(("median_cents", 1L, 2L)))
+        .select(col("n"), col("median_cents_k").as("k"), col("median_cents"))
     }, oracle =
       """WITH v AS (
         | SELECT CAST(CAST(l_extendedprice AS DECIMAL(20,2)) * 100
@@ -703,33 +691,15 @@ object ScaleQ {
     // bucket-sized cumulative window; no global sort anywhere. K =
     // (Σw+1) DIV 2 (lower weighted median), everything exact integers.
     Q("q224_weighted_median", (s, dir) => {
-      val W = 1000000L // cents per bucket, as q159
+      val W = 1000000L // cents per bucket: $10k bands over [$900, $105k]
       val v = t(s, dir, "lineitem")
         .select((col("l_extendedprice").cast(DecimalType(20, 2)) * 100)
           .cast("long").as("cents"),
           col("l_quantity").cast("long").as("w"))
-        .withColumn("bk", ldiv(col("cents"), lit(W)))
-      val hist = v.groupBy("bk").agg(sum(col("w")).as("wsum"))
-      val nk = hist.agg(sum(col("wsum")).as("total_w"),
-        ldiv(sum(col("wsum")) + 1, lit(2L)).as("k"))
-      val wH = Window.orderBy("bk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val target = hist
-        .withColumn("below", coalesce(sum(col("wsum")).over(wH), lit(0L)))
-        .crossJoin(broadcast(nk))
-        .filter(col("below") < col("k") &&
-          col("k") <= col("below") + col("wsum"))
-        .select(col("bk").as("tbk"),
-          (col("k") - col("below")).as("local_k"))
-      val wB = Window.partitionBy("bk").orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, 0)
-      v.join(broadcast(target), col("bk") === col("tbk"))
-        .groupBy("bk", "cents", "local_k").agg(sum(col("w")).as("cw"))
-        .withColumn("cum", sum(col("cw")).over(wB))
-        .filter(col("cum") >= col("local_k"))
-        .agg(min(col("cents")).as("weighted_median_cents"))
-        .crossJoin(broadcast(nk))
-        .select(col("total_w"), col("k"), col("weighted_median_cents"))
+      OrderStats.kth(v, Nil, "cents", ldiv(col("cents"), lit(W)),
+          Seq(("weighted_median_cents", 1L, 2L)), weight = col("w"))
+        .select(col("n").as("total_w"), col("weighted_median_cents_k").as("k"),
+          col("weighted_median_cents"))
     }, oracle =
       """WITH v AS (
         | SELECT CAST(CAST(l_extendedprice AS DECIMAL(20,2)) * 100

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.ops.OrderStats
 
 /** Web-corpus curation operators added in round 6: URL canonicalization
   * and canonical-identity dedup (the crawl-side generalization of the
@@ -1266,11 +1267,16 @@ object WebQ {
     // exact integers — ldiv(10⁷, 60+rank) on both engines — so the
     // fused ordering has a defined cross-engine answer. Neither
     // ranking runs a corpus-sized single-partition window: both rank
-    // through `histRank`, the q228 histogram-offset idiom (bucket
-    // offsets from a bounded score histogram + a bucket-partitioned
-    // per-row window), so every stage stays distributed at 100 TB.
+    // through `OrderStats.rank` (bucket offsets from a bounded score
+    // histogram + a bucket-partitioned per-row window), so every stage
+    // stays distributed at 100 TB. floor(score·1000) buckets keep the
+    // score order (x ↦ floor(1000x) is monotone in IEEE doubles),
+    // negated for the descending rank.
     Q("q212_rrf_hybrid", (s, dir) => {
-      val lex = histRank(bm25Scored(s, dir), "bm25", "doc_id", "lex_rank")
+      def rank(df: DataFrame, score: String, id: String, out: String) =
+        OrderStats.rank(df, Seq(-floor(col(score) * 1000)),
+          Seq(desc(score), asc(id)), out)
+      val lex = rank(bm25Scored(s, dir), "bm25", "doc_id", "lex_rank")
         .select("doc_id", "lex_rank")
       val e = t(s, dir, "embeddings")
       val probe = e.filter(col("vec_id") === 7)
@@ -1278,7 +1284,7 @@ object WebQ {
       val scored = e.crossJoin(broadcast(probe))
         .withColumn("cos_sim",
           round(graft.ops.SimilarityOps.cosine(col("embedding"), col("qv")), 6))
-      val sem = histRank(scored, "cos_sim", "vec_id", "sem_rank")
+      val sem = rank(scored, "cos_sim", "vec_id", "sem_rank")
         .select(col("vec_id"), col("sem_rank"))
       lex.join(sem, col("doc_id") === col("vec_id"))
         .withColumn("rrf",
@@ -1562,32 +1568,6 @@ object WebQ {
     * q212 (the lexical leg of RRF). Corpus stats (N, Σdl, df per term)
     * are one tiny aggregate broadcast back; the scored pass is a single
     * scan at any corpus size. */
-  /** Exact global rank by (`score` desc, `id` asc) WITHOUT a
-    * corpus-sized single-partition window — the q228 histogram-offset
-    * idiom generalized to continuous scores. floor(score·1000) buckets
-    * preserve the cross-bucket sort order (x ↦ floor(1000x) is
-    * monotone in IEEE doubles), the bucket histogram's cumulative
-    * offsets are a window over a bounded score-range-sized frame, and
-    * the only per-row window partitions by bucket. rank = bucket
-    * offset + in-bucket row_number, identical to the global
-    * row_number it replaces. */
-  private def histRank(df: DataFrame, score: String, id: String,
-      rankName: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val b = df.withColumn("__bk", floor(col(score) * 1000).cast("long"))
-    val hist = b.groupBy("__bk").agg(count(lit(1)).as("__c"))
-    val wOff = Window.orderBy(desc("__bk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val off = hist
-      .withColumn("__off", coalesce(sum("__c").over(wOff), lit(0L)))
-      .select("__bk", "__off")
-    val wIn = Window.partitionBy("__bk").orderBy(desc(score), asc(id))
-    b.join(broadcast(off), "__bk")
-      .withColumn(rankName,
-        (col("__off") + row_number().over(wIn)).cast("long"))
-      .drop("__bk", "__off")
-  }
-
   private def bm25Scored(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.CountInSetExpr.countInSet
     val base = t(s, dir, "documents")

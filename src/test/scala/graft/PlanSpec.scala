@@ -302,17 +302,23 @@ class PlanSpec extends SparkSpec {
   }
 
   test("grouped selection never windows a bare group over raw rows") {
-    // q236's scale contract: every raw-row window is (event_type, bk)-
-    // scoped — a window partitioned by event_type alone would serialize
-    // a 100 TB single-type skew into one task. The histogram cumulative
-    // (tiny) is the only type-partitioned window allowed, and it runs
-    // over the grouped histogram, whose plan rows carry `cnt`.
-    val p = planOf("q236_event_value_mad")
-    val windows = p.linesIterator.filter(_.contains("Window ")).toSeq
-    assert(windows.nonEmpty, p.take(2000))
-    windows.foreach { w =>
-      assert(w.contains("bk") || w.contains("cnt"),
-        s"window not bucket-scoped: $w")
+    // OrderStats.kth's scale contract: every raw-row window is (group,
+    // bk)-scoped — a window partitioned by the group alone (or by
+    // nothing) would serialize a 100 TB single-group skew into one
+    // task. The histogram cumulative (tiny) is the only group-wide
+    // window allowed, and it runs over the grouped histogram, whose
+    // plan rows carry `cnt`.
+    for (q <- Seq("q159_global_median", "q224_weighted_median",
+        "q236_event_value_mad", "q246_equidepth_quartiles",
+        "q250_mad_outliers", "q275_interquantile_mean",
+        "q279_rfm_segments")) {
+      val p = planOf(q)
+      val windows = p.linesIterator.filter(_.contains("Window ")).toSeq
+      assert(windows.nonEmpty, s"$q:\n${p.take(2000)}")
+      windows.foreach { w =>
+        assert(w.contains("bk") || w.contains("cnt"),
+          s"$q: window not bucket-scoped: $w")
+      }
     }
   }
 
