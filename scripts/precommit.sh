@@ -71,6 +71,19 @@ if [ -n "$sel" ]; then
   echo "$sel"
   exit 1
 fi
+# one hash family per sketch: the similarity sketches hash with md5 (or
+# the md5-signed lattice), which DuckDB replays, so every sketch query is
+# oracle-checked; a murmur or xxhash sketch in the engine's function and
+# operator code could only be spec-checked. Doc-comment and // lines are
+# not code.
+hashfam=$(grep -rn --include='*.scala' 'Murmur3_x86_32\|XXH64\|xxhash64(' \
+  src/main/scala/graft/functions src/main/scala/graft/ops \
+  | grep -v '^[^:]*:[0-9]*:[[:space:]]*\(\*\|//\)' || true)
+if [ -n "$hashfam" ]; then
+  echo "[precommit] non-replayable sketch hash (use the md5 family):"
+  echo "$hashfam"
+  exit 1
+fi
 # docs/scripts-only commits don't need the JVM spin-up
 if git diff --cached --name-only | grep -q '\.scala$\|\.sbt$'; then
   # Test/compile builds main too, and catches a change that breaks a test

@@ -15,8 +15,8 @@ object Bench {
       val tiny = spark.range(64).select(col("id"),
         concat_ws(" ", (0 until 24).map(i =>
           concat(lit(s"w$i"), pmod(col("id") + i, lit(7)))): _*).as("text"))
-      DedupOps.simhashPairs(tiny, "id", "text", maxHamming = 12).count()
-      DedupOps.minhashLshPairs(tiny, "id", "text", 3, 16, 4, 0.1).count()
+      DedupOps.simhashMd5Pairs(tiny, "id", "text", maxHamming = 3).count()
+      DedupOps.minhashMd5LshPairs(tiny, "id", "text", 3, 16, 4, 0.1).count()
       tiny.select(explode(graft.functions.ShinglesExpr
         .ngrams(split(col("text"), " "), 2)).as("g"))
         .groupBy("g").count().count()

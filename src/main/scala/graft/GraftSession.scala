@@ -29,8 +29,9 @@ import org.apache.spark.sql.SparkSession
   *     The engine never calls `addArtifact`, so per-session isolation
   *     buys it nothing; off, every session's tasks share the default
   *     class loader and a repeat drain hits the cache.
-  *   - custom SQL functions registered (minhash_sig, simhash64,
-  *     shingles, ngrams, cosine_sim, winnow, stem_tokens).
+  *   - custom SQL functions registered (shingles, ngrams, cosine_sim,
+  *     winnow_md5, minhash_md5_bands, simhash_md5_chunks, lattice_sigs,
+  *     stem_tokens).
   *   - `local()` only: Spark UI off — no tool or test reads it, and
   *     every local session in this repo is built here (Bench, Verify,
   *     Explain, ScaleProbe, the test suites; `Smoke` alone stays bare, to

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.IntegerType
   *   SparkSession.builder().withExtensions(new GraftExtensions) …
   *   — or spark.sql.extensions=graft.functions.GraftExtensions
   *
-  *   SELECT minhash_sig(shingles(tokens, 3), 64) FROM docs
+  *   SELECT minhash_md5_bands(shingles(tokens, 3), 16, 4) FROM docs
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -50,13 +50,9 @@ object ShingleFilterSimplify extends Rule[LogicalPlan] {
           Literal(0, IntegerType)) =>
         GreaterThanOrEqual(Size(sh.child, legacy), Literal(sh.k))
       case IsNotNull(sh: ShinglesExpr) => IsNotNull(sh.child)
-      // winnow(toks, k, w) emits ≥ 1 fingerprint iff ≥ 1 k-gram exists
-      // (the window loop always runs when nGrams ≥ 1), so the same
-      // token-count equivalence holds
-      case GreaterThan(Size(wx: WinnowExpr, legacy),
-          Literal(0, IntegerType)) =>
-        GreaterThanOrEqual(Size(wx.child, legacy), Literal(wx.k))
-      case IsNotNull(wx: WinnowExpr) => IsNotNull(wx.child)
+      // winnow_md5(toks, k, w) emits ≥ 1 fingerprint iff ≥ 1 k-gram
+      // exists (the window loop always runs when nGrams ≥ 1), so the
+      // same token-count equivalence holds
       case GreaterThan(Size(wx: WinnowMd5Expr, legacy),
           Literal(0, IntegerType)) =>
         GreaterThanOrEqual(Size(wx.child, legacy), Literal(wx.k))
@@ -75,13 +71,6 @@ object GraftFunctions {
 
   val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
     Seq(
-      (FunctionIdentifier("minhash_sig"),
-        new ExpressionInfo(classOf[MinHashSigExpr].getName, "minhash_sig"),
-        (args: Seq[Expression]) =>
-          MinHashSigExpr(args.head, intArg(args(1), "numHashes"))),
-      (FunctionIdentifier("simhash64"),
-        new ExpressionInfo(classOf[SimHash64Expr].getName, "simhash64"),
-        (args: Seq[Expression]) => SimHash64Expr(args.head)),
       (FunctionIdentifier("shingles"),
         new ExpressionInfo(classOf[ShinglesExpr].getName, "shingles"),
         (args: Seq[Expression]) =>
@@ -93,10 +82,6 @@ object GraftFunctions {
       (FunctionIdentifier("cosine_sim"),
         new ExpressionInfo(classOf[CosineSimExpr].getName, "cosine_sim"),
         (args: Seq[Expression]) => CosineSimExpr(args.head, args(1))),
-      (FunctionIdentifier("winnow"),
-        new ExpressionInfo(classOf[WinnowExpr].getName, "winnow"),
-        (args: Seq[Expression]) =>
-          WinnowExpr(args.head, intArg(args(1), "k"), intArg(args(2), "w"))),
       (FunctionIdentifier("winnow_md5"),
         new ExpressionInfo(classOf[WinnowMd5Expr].getName, "winnow_md5"),
         (args: Seq[Expression]) =>

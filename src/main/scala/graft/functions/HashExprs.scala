@@ -6,9 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen support for the custom one-pass expressions: emit a call back
@@ -40,17 +38,6 @@ trait EvalCallCodegen extends UnaryExpression {
   * per-row map — no change to the distribution/shuffle story.
   */
 object HashExprs {
-  /** 64-bit MinHash signature column over a string-array column. */
-  def minhash_sig(elems: Column, numHashes: Int): Column =
-    toCol(MinHashSigExpr(toExpr(elems), numHashes))
-
-  /** 64-bit SimHash column over a string-array column. */
-  def simhash64(toks: Column): Column = toCol(SimHash64Expr(toExpr(toks)))
-
-  private[functions] def murmur(s: UTF8String): Long =
-    Murmur3_x86_32.hashUnsafeBytes(
-      s.getBaseObject, s.getBaseOffset, s.numBytes, 42) & 0xFFFFFFFFL
-
   /** Per-thread MD5 instance for the md5-family expressions —
     * getInstance does a provider lookup + allocation, and the fused
     * expressions call it once per ROW (the r9-ADVICE per-row-setup
@@ -58,14 +45,6 @@ object HashExprs {
   private[functions] val Md5 =
     ThreadLocal.withInitial[java.security.MessageDigest](() =>
       java.security.MessageDigest.getInstance("MD5"))
-
-  /** 64-bit avalanche (splitmix64 finalizer) of the 32-bit murmur. */
-  private[functions] def mix64(x0: Long): Long = {
-    var z = x0 * 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
 
   /** Deterministic "random" hyperplane component (plane p, dimension d)
     * from a splitmix-style sequence — the single source for both the
@@ -91,72 +70,6 @@ object HashExprs {
   def lattice_sigs(latVec: Column, dim: Int, planesPerBand: Int,
       bands: Int): Column =
     toCol(LatticeSigsExpr(toExpr(latVec), dim, planesPerBand, bands))
-}
-
-/** MinHash signature: for hash family h_i(x) = (a_i·m(x) + b_i) mod p over
-  * the 32-bit murmur m, returns array[numHashes] of per-function minima.
-  * Same family as the declarative DedupOps.minhashSignature. */
-case class MinHashSigExpr(child: Expression, numHashes: Int)
-    extends UnaryExpression with EvalCallCodegen {
-  private val P = 4294967311L // smallest prime > 2^32
-  private val as = Array.tabulate(numHashes)(i => 2L * i + 1)
-  private val bs = Array.tabulate(numHashes)(i => 1000003L * (i + 1) % P)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      val h = HashExprs.murmur(arr.getUTF8String(i))
-      var j = 0
-      while (j < numHashes) {
-        val hv = (as(j) * h + bs(j)) % P
-        if (hv < mins(j)) mins(j) = hv
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(mins)
-  }
-  override protected def withNewChildInternal(c: Expression): MinHashSigExpr =
-    copy(child = c)
-}
-
-/** 64-bit SimHash: bit j set iff ≥ half of the element hashes have bit j
-  * set. Uses the same xxhash64(seed 42) as Spark's `xxhash64` function, so
-  * the declarative DedupOps.simhash64 formulation is bit-identical (the
-  * DedupOpsSpec cross-check relies on this). */
-case class SimHash64Expr(child: Expression)
-    extends UnaryExpression with EvalCallCodegen {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val counts = new Array[Int](64)
-    var i = 0
-    while (i < n) {
-      val s = arr.getUTF8String(i)
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
-      var j = 0
-      while (j < 64) {
-        if (((h >>> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1
-        j += 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var j = 0
-    while (j < 64) {
-      if (counts(j) >= 0) out |= (1L << j)
-      j += 1
-    }
-    java.lang.Long.valueOf(out)
-  }
-  override protected def withNewChildInternal(c: Expression): SimHash64Expr =
-    copy(child = c)
 }
 
 /** Cosine similarity of two numeric arrays in one JVM pass per row —
@@ -427,74 +340,17 @@ object ArrayPairsExpr {
   def pairs(arr: Column): Column = toCol(ArrayPairsExpr(toExpr(arr)))
 }
 
-/** Winnowing document fingerprints (the rolling-hash scheme of MOSS):
-  * hash every k-gram, slide a window of `w` consecutive hashes, keep each
-  * window's minimum (rightmost on ties), dedupe. Guarantees any shared
-  * substring of ≥ w+k-1 tokens yields ≥ 1 shared fingerprint, while
-  * storing ~2/(w+1) of the hashes — the standard robust fingerprint for
-  * near-dup/plagiarism detection at corpus scale. One pass per row; the
-  * hash family is engine-internal, so queries over it get the driver's
-  * rows-only check (properties are spec-verified instead). */
-case class WinnowExpr(child: Expression, k: Int, w: Int)
-    extends UnaryExpression with EvalCallCodegen {
-  require(k >= 1 && w >= 1)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val nGrams = n - k + 1
-    if (nGrams <= 0) return new GenericArrayData(Array.emptyLongArray)
-    // k-gram rolling hashes: combine member-token murmurs via mix64 chain
-    val gh = new Array[Long](nGrams)
-    var i = 0
-    while (i < nGrams) {
-      var h = 0L
-      var j = 0
-      while (j < k) {
-        h = HashExprs.mix64(h ^ HashExprs.murmur(arr.getUTF8String(i + j)))
-        j += 1
-      }
-      gh(i) = h
-      i += 1
-    }
-    val out = new java.util.LinkedHashSet[java.lang.Long]()
-    val lastWin = math.max(nGrams - w, 0)
-    var s = 0
-    while (s <= lastWin) {
-      val end = math.min(s + w, nGrams)
-      var minIdx = s
-      var j = s + 1
-      while (j < end) {
-        if (gh(j) <= gh(minIdx)) minIdx = j // rightmost minimum
-        j += 1
-      }
-      out.add(gh(minIdx))
-      s += 1
-    }
-    new GenericArrayData(out.toArray.asInstanceOf[Array[AnyRef]])
-  }
-  override protected def withNewChildInternal(c: Expression): WinnowExpr =
-    copy(child = c)
-}
-
-object WinnowExpr {
-  import org.apache.spark.sql.graftglue.ColumnGlue.{col => toCol, expr => toExpr}
-  def winnow(toks: Column, k: Int, w: Int): Column =
-    toCol(WinnowExpr(toExpr(toks), k, w))
-}
-
-/** Winnowing with an md5 fingerprint family — the oracle-replayable
-  * twin of [[WinnowExpr]] (q68's conversion to oracle-exact, r11): the
-  * k-gram hash is md5 of the space-joined gram (the q227 shingle
-  * convention), kept as the lowercase-hex STRING so the window minimum
-  * is a plain lexicographic compare both engines order identically
-  * (lowercase hex ≡ the 128-bit value). Same selection rule — windows
-  * of `w` consecutive grams, each window's minimum, RIGHTMOST on ties,
-  * distinct — and the same ≥ w+k-1 shared-run guarantee (the guarantee
-  * is hash-family-independent; PropertySpec pins both). One md5 per
-  * k-gram per row; fingerprints are ~2/(w+1) of grams, so postings
-  * stay the sampled size that makes winnowing the corpus-scale
-  * fingerprint. */
+/** Winnowing document fingerprints (the rolling-hash scheme of MOSS),
+  * on the md5 family (q68, oracle-exact since r11): hash every k-gram,
+  * slide a window of `w` consecutive hashes, keep each window's minimum
+  * (RIGHTMOST on ties), dedupe. Any shared substring of ≥ w+k-1 tokens
+  * yields ≥ 1 shared fingerprint (PropertySpec pins it), while only
+  * ~2/(w+1) of the hashes are kept — so postings stay the sampled size
+  * that makes winnowing the corpus-scale fingerprint. The k-gram hash
+  * is md5 of the space-joined gram (the q227 shingle convention), kept
+  * as the lowercase-hex STRING so the window minimum is a plain
+  * lexicographic compare both engines order identically (lowercase hex
+  * ≡ the 128-bit value). One md5 per k-gram per row. */
 case class WinnowMd5Expr(child: Expression, k: Int, w: Int)
     extends UnaryExpression with EvalCallCodegen {
   require(k >= 1 && w >= 1)

@@ -50,33 +50,8 @@ object Schemas {
     StructField("latitude", StringType),
     StructField("longitude", StringType)))
 
-  /** AI-extraction output record (transform_data.py:26-43): 9 string
-    * fields, `name` required. */
-  val aiEvent: StructType = StructType(Seq(
-    StructField("name", StringType),
-    StructField("date", StringType),
-    StructField("time", StringType),
-    StructField("venue_name", StringType),
-    StructField("venue_address", StringType),
-    StructField("description", StringType),
-    StructField("category", StringType),
-    StructField("price", StringType),
-    StructField("url", StringType)))
-
   /** Document-upload text payload (tasks.py:111-114). */
   val docText: StructType = StructType(Seq(
     StructField("text", StringType),
     StructField("original_filepath", StringType)))
-
-  /** ArcGIS feature payload (nashville_arcgis.py:104-156): attributes map
-    * plus point/polygon/polyline geometry in EPSG:2274. */
-  val arcgisFeature: StructType = StructType(Seq(
-    StructField("attributes", MapType(StringType, StringType)),
-    StructField("geometry", StructType(Seq(
-      StructField("x", DoubleType),
-      StructField("y", DoubleType),
-      StructField("rings",
-        ArrayType(ArrayType(ArrayType(DoubleType)))),
-      StructField("paths",
-        ArrayType(ArrayType(ArrayType(DoubleType)))))))))
 }

@@ -17,17 +17,6 @@ import org.apache.spark.sql.types._
   * census) — each driver-hash-gated by its own q-query. */
 object BinaryOps {
 
-  /** media row: content + typed metadata (the multimodal table schema). */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType),
-    StructField("kind", StringType),      // image | audio | video
-    StructField("content", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("sample_rate", IntegerType),
-      StructField("duration_ms", LongType))))))
-
   final case class MediaFeature(media_id: Long, kind: String,
       n_bytes: Long, content_hash: Long, feature: Array[Float])
 

@@ -20,7 +20,6 @@ object H264Codec {
   /** §7.4.1 table anchors the census reports on. */
   val TypeNonIdr = 1
   val TypeIdr = 5
-  val TypeSei = 6
   val TypeSps = 7
   val TypePps = 8
 

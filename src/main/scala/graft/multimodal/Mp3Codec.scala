@@ -3,11 +3,12 @@ package graft.multimodal
 import java.io.ByteArrayOutputStream
 
 /** MPEG-1 Audio Layer III frame-level scan — the metadata half of the
-  * compressed-audio story (the full polyphase/IMDCT sample decode stays
-  * outside the perimeter, declared loudly below). A corpus pipeline needs
-  * exactly this layer from MP3s: frame census, bitrate profile, duration,
-  * byte extents — what `ffprobe` reads — and it is fully determined by
-  * the published header tables (ISO/IEC 11172-3 §2.4.1.3/2.4.2.3):
+  * compressed-audio story (the full polyphase/IMDCT sample decode is
+  * outside the perimeter: there is no sample decoder). A corpus
+  * pipeline needs exactly this layer from MP3s: frame census, bitrate
+  * profile, duration, byte extents — what `ffprobe` reads — and it is
+  * fully determined by the published header tables (ISO/IEC 11172-3
+  * §2.4.1.3/2.4.2.3):
   * frame_bytes = 144000·bitrate_kbps / sample_rate + padding,
   * 1152 samples per frame.
   *
@@ -130,13 +131,6 @@ object Mp3Codec {
     }
     frames.result()
   }
-
-  /** The declared perimeter for sample decode, spelled out. */
-  def decodeSamples(bytes: Array[Byte]): Nothing =
-    throw new UnsupportedOperationException(
-      "MP3 sample decode (hybrid filterbank/IMDCT) is outside the " +
-        "engine's codec perimeter; scan() provides the frame-level " +
-        "census (bitrate/duration/extents) a curation pipeline consumes")
 
   // ------------------------------------------------------- ID3v2 frames
   //

@@ -98,80 +98,24 @@ object DedupOps {
           .as("containment"))
       .filter(col("containment") >= threshold)
 
-  /** MinHash signature (numHashes values) over a distinct string-array column.
-    * Universal hashing over the 32-bit murmur3 of each element:
-    * h_i(x) = (a_i * x + b_i) mod p, with a deterministic seed schedule.
-    * Pure expressions — computed in one codegen'd projection per row. */
-  def minhashSignature(elems: Column, numHashes: Int): Column = {
-    val p = 4294967311L // smallest prime > 2^32
-    val hashes = transform(elems, x => hash(x).cast("long").bitwiseAND(lit(0xFFFFFFFFL)))
-    val seeds = array((0 until numHashes).map { i =>
-      struct(lit(2L * i + 1).as("a"), lit(1000003L * (i + 1) % p).as("b"))
-    }: _*)
-    transform(seeds, s =>
-      array_min(transform(hashes, h =>
-        pmod(s.getField("a") * h + s.getField("b"), lit(p)))))
-  }
-
   /** MinHash + LSH near-dup pairs at `threshold` Jaccard over word
-    * `shingleK`-shingles. bands×rowsPerBand = signature length; candidate
-    * generation is a groupBy on (band, band-hash) — a key shuffle, not a
-    * cross join — then candidates are verified with exact Jaccard.
-    * This is the partition strategy that survives 100 TB: bucket sizes are
-    * bounded by collision rate, and the only quadratic work is within-bucket. */
-  def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
-      threshold: Double = 0.5): DataFrame =
-    lshVerifiedPairs(df, idCol, textCol, shingleK, threshold) { withSh =>
-      val withSig = withSh.withColumn("sig", graft.functions.HashExprs
-        .minhash_sig(col("sh"), bands * rowsPerBand))
-      // band index -> hash of the signature slice for that band
-      val bandCols = (0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          hash(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)).as("bh"))
-      }
-      withSig.select(col("id"), explode(array(bandCols: _*)).as("bk"))
-    }
-
-  /** MinHash-LSH near-dup pairs on the md5 hash family — the
-    * oracle-replayable twin of [[minhashLshPairs]] (q17's conversion to
-    * oracle-exact, r11; q227's seed-min family at the full
-    * bands×rowsPerBand scheme). Same plan shape as minhashLshPairs: one
-    * fused signature projection per doc (MinHashMd5SigExpr — all
-    * bands·rows seed-minima in one JVM pass; lexicographic min of
-    * lowercase md5 hex ≡ min of the 128-bit value, portable), band keys
-    * are the concatenated row-mins, candidates come from the
-    * (band, key) shuffle join, and only the verified candidate set ever
-    * rejoins the shingle payload — ids move through the bucket shuffle,
-    * not documents. Verification is the exact Jaccard, so the output is
-    * the md5-banding's candidate recall over the true pair set. */
+    * `shingleK`-shingles, on the md5 hash family (q17, oracle-exact
+    * since r11; q227's seed-min family at the full bands×rowsPerBand
+    * scheme). bands×rowsPerBand = signature length; candidate
+    * generation is a (band, key) shuffle join — not a cross join —
+    * then candidates are verified with the exact Jaccard. Bucket sizes
+    * are bounded by collision rate, and the only quadratic work is
+    * within-bucket. One fused signature projection per doc
+    * (MinHashMd5SigExpr — all bands·rows seed-minima in one JVM pass;
+    * lexicographic min of lowercase md5 hex ≡ min of the 128-bit value,
+    * portable); band keys are the concatenated row-mins; only the
+    * verified candidate set ever rejoins the shingle payload — ids move
+    * through the bucket shuffle, not documents. The output is the
+    * md5-banding's candidate recall over the true pair set. Empty
+    * shingle sets are dropped. */
   def minhashMd5LshPairs(df: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
-      threshold: Double = 0.5): DataFrame =
-    lshVerifiedPairs(df, idCol, textCol, shingleK, threshold) { withSh =>
-      // fused one-pass signature + band keys (the declarative 64-min-agg
-      // twin cost ×6.7 at sf0.1, and the slice/transform/concat_ws band
-      // build another interpreted layer — r11 bench findings, same class
-      // as minhash_sig). Band key = '|'-joined row-mins (integers need a
-      // separator: "12|3" vs "1|23"); the oracle builds the same string.
-      withSh.select(col("id"), posexplode(
-        graft.functions.MinHashMd5SigExpr.minhashMd5Bands(
-          col("sh"), bands, rowsPerBand)).as(Seq("band", "bh")))
-        .select(struct(col("band"), col("bh")).as("bk"), col("id"))
-    }
-
-  /** The MinHash-LSH body shared by [[minhashLshPairs]] (the murmur
-    * twin, DedupOpsSpec) and [[minhashMd5LshPairs]] (q17): word
-    * `shingleK`-shingle sets of the spread (id, text) relation, empty
-    * sets dropped; `buckets` maps that (id, sh) relation to one (id, bk)
-    * row per band bucket; candidates are the distinct a_id < b_id pairs
-    * of one bucket-key shuffle join (ids only — the shingle payload is
-    * joined back for the small candidate set, so the bucket shuffle
-    * moves ids, not documents), verified with the exact Jaccard ≥
-    * `threshold`. */
-  private def lshVerifiedPairs(df: DataFrame, idCol: String,
-      textCol: String, shingleK: Int, threshold: Double)(
-      buckets: DataFrame => DataFrame): DataFrame = {
+      threshold: Double = 0.5): DataFrame = {
     val sh = graft.functions.ShinglesExpr.shingles(
       TextOps.tokens(col("__text")), shingleK)
     // the (id, shingles) relation feeds the banded signature pass and
@@ -187,7 +131,15 @@ object DedupOps {
         df.select(col(idCol).as("id"), col(textCol).as("__text")))
       .select(col("id"), sh.as("sh"))
       .filter(size(col("sh")) > 0)
-    val bk = buckets(withSh)
+    // fused one-pass signature + band keys (the declarative 64-min-agg
+    // twin cost ×6.7 at sf0.1, and the slice/transform/concat_ws band
+    // build another interpreted layer — r11 bench findings). Band key =
+    // '|'-joined row-mins (integers need a separator: "12|3" vs
+    // "1|23"); the oracle builds the same string.
+    val bk = withSh.select(col("id"), posexplode(
+        graft.functions.MinHashMd5SigExpr.minhashMd5Bands(
+          col("sh"), bands, rowsPerBand)).as(Seq("band", "bh")))
+      .select(struct(col("band"), col("bh")).as("bk"), col("id"))
     val a = bk.select(col("bk"), col("id").as("a_id"))
     val b = bk.select(col("bk"), col("id").as("b_id"))
     val candidates = a.join(b, Seq("bk")).filter(col("a_id") < col("b_id"))
@@ -469,67 +421,28 @@ object DedupOps {
     pointed.union(roots)
   }
 
-  /** 64-bit SimHash of a token array: bit j of the result is set iff the
-    * majority of token xxhash64s have bit j set. Pure expressions. */
-  def simhash64(toks: Column): Column = {
-    val th = transform(toks, x => xxhash64(x))
-    val masks = array((0 until 64).map(j => lit(1L << j)): _*)
-    val bits = transform(masks, m =>
-      when(size(filter(th, h => h.bitwiseAND(m) =!= 0)) * 2 >= size(th), m)
-        .otherwise(lit(0L)))
-    aggregate(bits, lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
-
-  /** SimHash near-dup pairs with Hamming distance ≤ maxHamming. Pigeonhole
-    * banding: split the 64-bit hash into (maxHamming+1) chunks; any pair
-    * within distance must agree on ≥1 chunk, so candidates come from a
-    * chunk-equality shuffle join, then exact popcount verification. */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3): DataFrame = {
-    val chunks = maxHamming + 1
-    val bitsPer = 64 / chunks
-    val withH = Partitioning.ensureParallel(
-        df.select(col(idCol).as("id"), col(textCol).as("__text")))
-      .select(col("id"),
-        graft.functions.HashExprs.simhash64(TextOps.tokens(col("__text")))
-          .as("h"))
-    val chunkCols = (0 until chunks).map { c =>
-      struct(lit(c).as("chunk"),
-        shiftright(col("h"), c * bitsPer)
-          .bitwiseAND(lit((1L << bitsPer) - 1)).as("cv"))
-    }
-    val buckets = withH.select(col("id"), col("h"),
-      explode(array(chunkCols: _*)).as("bk"))
-    val a = buckets.select(col("bk"), col("id").as("a_id"), col("h").as("a_h"))
-    val b = buckets.select(col("bk"), col("id").as("b_id"), col("h").as("b_h"))
-    a.join(b, Seq("bk")).filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id", "a_h", "b_h").dropDuplicates("a_id", "b_id")
-      .withColumn("hamming",
-        bit_count(col("a_h").bitwiseXOR(col("b_h"))).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select("a_id", "b_id", "hamming")
-  }
-
-  /** SimHash near-dup pairs on the md5 hash family — the
-    * oracle-replayable twin of [[simhashPairs]] (q18's conversion to
-    * oracle-exact, r11; the q253 16-bit vote sketch widened to the full
-    * 64-bit pair pipeline). Same plan shape as simhashPairs: one fused
-    * fingerprint projection per doc (SimHashMd5ChunksExpr — per-
-    * occurrence votes, exactly the count-weighted vote table the
-    * oracle rebuilds from a (doc, token) rollup), pigeonhole
-    * chunk-equality candidates, exact popcount verification. The
-    * 64-bit fingerprint lives as (maxHamming+1) chunk columns end to
-    * end — never packed into one BIGINT — so neither engine touches
-    * the sign bit and the oracle replays chunk-by-chunk. Bit j =
+  /** SimHash near-dup pairs with Hamming distance ≤ maxHamming, on the
+    * md5 hash family (q18, oracle-exact since r11; the q253 16-bit vote
+    * sketch widened to the full 64-bit pair pipeline). Pigeonhole
+    * banding: split the 64-bit fingerprint into (maxHamming+1) chunks;
+    * any pair within distance must agree on ≥1 chunk, so candidates
+    * come from a chunk-equality shuffle join, then exact popcount
+    * verification. One fused fingerprint projection per doc
+    * (SimHashMd5ChunksExpr — per-occurrence votes, exactly the
+    * count-weighted vote table the oracle rebuilds from a (doc, token)
+    * rollup). The 64-bit fingerprint lives as (maxHamming+1) chunk
+    * columns end to end — never packed into one BIGINT — so neither
+    * engine touches the sign bit and the oracle replays chunk-by-chunk.
+    * Bit j =
     * [Σ_tok (2·bit_j(md5(tok))−1) ≥ 0] with bit_j read from md5's hex
-    * nibble j/4 (ties to 1, matching simhashPairs' majority rule). */
+    * nibble j/4 (ties to 1). */
   def simhashMd5Pairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
     val chunks = maxHamming + 1
     require(64 % chunks == 0, s"maxHamming+1 = $chunks must divide 64")
     // fused one-pass fingerprint per doc — no (doc, token) rollup at
-    // all, matching simhashPairs' shape (the declarative 64-vote-agg
-    // twin cost ×5.8 at sf0.1 — r11 bench finding)
+    // all (the declarative 64-vote-agg twin cost ×5.8 at sf0.1 — r11
+    // bench finding)
     val sigs = Partitioning.ensureParallel(
         df.select(col(idCol).as("id"), col(textCol).as("__text")))
       .withColumn("__fc", graft.functions.SimHashMd5ChunksExpr

@@ -65,12 +65,6 @@ object Geo {
     (math.toDegrees(lon), math.toDegrees(phi))
   }
 
-  /** U6 as a column: struct(longitude, latitude) from state-plane coords. */
-  val toWgs84 = udf { (x: java.lang.Double, y: java.lang.Double) =>
-    if (x == null || y == null) null
-    else { val (lon, lat) = invert(x, y); (lon, lat) }
-  }
-
   /** A3: polygon centroid — mean of ring vertex coords
     * (nashville_arcgis.py:143-148). `ring` is ARRAY<ARRAY<DOUBLE>> of
     * [x, y] pairs; returns struct(x, y). Pure expressions. */

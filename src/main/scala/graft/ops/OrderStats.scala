@@ -73,7 +73,13 @@ object OrderStats {
     val kCol = if (q.isEmpty) col(s"${ks.head._1}_k").as("__k")
       else inline(array(ks.map { case (label, _, _) =>
         struct(lit(label).as("__q"), col(s"${label}_k").as("__k")) }: _*))
-    val kRows = nk.select(keys.map(col) :+ kCol: _*)
+    // n and every label_k ride to the output under private names (no
+    // clash with the input's columns), so the plan reads nk once; each
+    // is one value per group, which `max` passes through the aggregates
+    val nkCols = "n" +: ks.map { case (l, _, _) => s"${l}_k" }
+    val carried = nkCols.map(c => s"__o$c")
+    val kRows = nk.select(keys.map(col) ++
+      nkCols.zip(carried).map { case (c, o) => col(c).as(o) } :+ kCol: _*)
     // (group, bucket) of each k, renamed on the target side so that the
     // join below keeps only the input's copy
     val on = (keys :+ "__bk").map(c => c -> s"__t$c")
@@ -83,24 +89,26 @@ object OrderStats {
       .filter(col("__below") < col("__k") &&
         col("__k") <= col("__below") + col("__cnt"))
       .select(on.map { case (c, t) => col(c).as(t) } ++
-        Seq((col("__k") - col("__below")).as("local_k")) ++ q.map(col): _*)
+        Seq((col("__k") - col("__below")).as("local_k")) ++
+        (q ++ carried).map(col): _*)
     val part = keys ++ q :+ "__bk"
     val cum = Window.partitionBy(part.map(col): _*).orderBy(value)
       .rowsBetween(Window.unboundedPreceding, 0)
+    val carry = carried.map(c => max(c).as(c))
     val picks = ks.map { case (label, _, _) =>
       min(if (q.isEmpty) col(value)
         else when(col("__q") === label, col(value))).as(label) }
-    val picked = v.join(broadcast(targets),
+    v.join(broadcast(targets),
         on.map { case (c, t) => col(c) === col(t) }.reduce(_ && _))
       .groupBy((part ++ Seq(value, "local_k")).map(col): _*)
-      .agg(sum("__w").as("__cw"))
+      .agg(sum("__w").as("__cw"), carry: _*)
       .withColumn("__cum", sum("__cw").over(cum))
       .filter(col("__cum") >= col("local_k"))
       .groupBy(keys.map(col): _*)
-      .agg(picks.head, picks.tail: _*)
-    val out = keys ++ ("n" +: ks.flatMap { case (l, _, _) =>
-      Seq(l, s"${l}_k") })
-    joinOn(picked, broadcast(nk), keys).select(out.map(col): _*)
+      .agg(picks.head, picks.tail ++ carry: _*)
+      .select(keys.map(col) ++ (col("__on").as("n") +: ks.flatMap {
+        case (l, _, _) =>
+          Seq(col(l), col(s"__o${l}_k").as(s"${l}_k")) }): _*)
   }
 
   /** Appends `out`, the exact 1-based global rank of each row in the

@@ -81,14 +81,6 @@ object Partitioning {
     if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
   }
 
-  /** Write co-partitioned by a join key: downstream equi-joins on `key`
-    * against tables written the same way need no shuffle (bucket-join
-    * analogue for path-based tables). */
-  def writePartitioned(df: DataFrame, path: String, key: String,
-      numFiles: Int): Unit =
-    df.repartition(numFiles, col(key))
-      .write.mode("overwrite").parquet(path)
-
   /** Hive-style directory partitioning on a low-cardinality column:
     * reads filtered on `key` prune to matching directories (the storage
     * analogue of the reference's btree-on-source index, SURVEY §4). */

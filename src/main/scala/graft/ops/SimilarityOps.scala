@@ -56,99 +56,16 @@ object SimilarityOps {
     bits.reduce(_ + _)
   }
 
-  /** ANN top-k: probe only vectors whose hyperplane bucket matches the
-    * query's (multi-probe over `probes` nearest buckets by flipping one
-    * bit). Recall < 1 by construction; intended as the 100 TB path where
-    * the bucket column is also the storage partition key. */
-  def annTopK(vectors: DataFrame, idCol: String, vecCol: String, dim: Int,
-      query: DataFrame, queryVecCol: String, k: Int,
-      nPlanes: Int = 8): DataFrame = {
-    val sigged = vectors.withColumn("__sig",
-      hyperplaneSig(col(vecCol), dim, nPlanes))
-    val qSig = broadcast(query.select(col(queryVecCol).as("__qv"))
-      .withColumn("__qsig", hyperplaneSig(col("__qv"), dim, nPlanes)))
-    val probes = qSig.select(col("__qv"), flipProbes(col("__qsig"), nPlanes))
-    sigged.join(probes, col("__sig") === col("__probe"))
-      .withColumn("cos_sim", round(cosine(col(vecCol), col("__qv")), 6))
-      .select(col(idCol), col("cos_sim"))
-      .orderBy(desc("cos_sim"), asc(idCol))
-      .limit(k)
-  }
-
   /** The probe set of a multi-probe LSH lookup, one row per bucket
     * (`__probe`): the query's own signature `qsig` plus every 1-bit flip
-    * of its `nPlanes` bits. Shared by [[annTopK]] and [[latticeAnnTopK]]
-    * (q25). */
+    * of its `nPlanes` bits. Used by [[latticeAnnTopK]] (q25). */
   private def flipProbes(qsig: Column, nPlanes: Int): Column =
     explode(array((qsig +: (0 until nPlanes).map(p =>
       qsig.bitwiseXOR(lit(1L << p)))): _*)).as("__probe")
 
-  /** IVF (inverted-file) ANN: vectors are assigned to their nearest of K
-    * centroid "cells"; a query probes only the `nprobe` nearest cells.
-    * Centroids here are a deterministic stride-sample of the corpus (a
-    * k-means refinement would slot in without changing the query path).
-    * At scale the cell id is the storage partition key, so a probe reads
-    * `nprobe/K` of the data. */
-  def ivfAssign(vectors: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[(Int, Array[Double])]): DataFrame = {
-    val cellScores = centroids.map { case (cid, cv) =>
-      struct(lit(cid).as("cell"),
-        cosine(col(vecCol), array(cv.map(lit(_)): _*)).as("sim"))
-    }
-    // argmax over cells: sort the (cell, sim) structs by sim desc, take 1
-    vectors.withColumn("__cells", array(cellScores: _*))
-      .withColumn("cell",
-        element_at(array_sort(col("__cells"),
-          (l, r) => when(l.getField("sim") > r.getField("sim"), -1)
-            .when(l.getField("sim") < r.getField("sim"), 1)
-            .otherwise(when(l.getField("cell") < r.getField("cell"), -1)
-              .otherwise(1))), 1).getField("cell"))
-      .drop("__cells")
-  }
-
-  /** Deterministic centroid sample: the k vectors with the smallest
-    * xxhash64(id) — a uniform bottom-k-by-hash sketch. Plans as
-    * TakeOrderedAndProject (per-partition top-k, driver merge): no count
-    * pass, no global sort, no single-partition window, so it holds at any
-    * corpus size. Centroid ids follow the (deterministic) hash order the
-    * bottom-k sort already established. */
-  def strideCentroids(vectors: DataFrame, idCol: String, vecCol: String,
-      k: Int): Seq[(Int, Array[Double])] =
-    vectors.select(col(idCol), col(vecCol))
-      .orderBy(xxhash64(col(idCol)), col(idCol))
-      .limit(k)
-      .collect()
-      .zipWithIndex
-      .map { case (r, i) =>
-        i -> r.getSeq[Float](1).map(_.toDouble).toArray
-      }.toSeq
-
-  /** IVF top-k: probe the query's `nprobe` nearest cells only. */
-  def ivfTopK(vectors: DataFrame, idCol: String, vecCol: String,
-      query: DataFrame, queryVecCol: String, k: Int,
-      centroids: Seq[(Int, Array[Double])], nprobe: Int = 2): DataFrame = {
-    val assigned = ivfAssign(vectors, idCol, vecCol, centroids)
-    val qAssigned = query.select(col(queryVecCol).as("__qv"))
-    // rank cells for the query, keep nprobe best
-    val qCells = broadcast(qAssigned.withColumn("__cells",
-        array(centroids.map { case (cid, cv) =>
-          struct(cosine(col("__qv"), array(cv.map(lit(_)): _*)).as("sim"),
-            lit(cid).as("cell"))
-        }: _*))
-      .withColumn("probe", explode(slice(array_sort(col("__cells"),
-        (l, r) => when(l.getField("sim") > r.getField("sim"), -1)
-          .otherwise(1)), 1, nprobe).getField("cell")))
-      .select(col("__qv"), col("probe")))
-    assigned.join(qCells, col("cell") === col("probe"))
-      .withColumn("cos_sim", round(cosine(col(vecCol), col("__qv")), 6))
-      .select(col(idCol), col("cos_sim"))
-      .orderBy(desc("cos_sim"), asc(idCol))
-      .limit(k)
-  }
-
   // ------------------------------------------------------------------
-  // md5-replayable integer-lattice ANN (r10): the same probe shapes as
-  // annTopK / ivfTopK, but every number is an integer derived from the
+  // md5-replayable integer-lattice ANN (r10): multi-probe LSH and IVF
+  // probe shapes where every number is an integer derived from the
   // floor(x·1000) lattice (q182/q211/q230 convention) and every
   // "random" constant from standard md5 — so the results replay
   // bit-exactly in ANSI SQL and the driver hash-checks them like any
@@ -246,10 +163,12 @@ object SimilarityOps {
           "(den > 2^63/1e4) — vectors are far off unit norm")).cast("long"))
   }
 
-  /** md5-replayable ANN top-k (oracle-exact q25 form): identical probe
-    * shape to annTopK — single sigged corpus scan, broadcast 1+nPlanes
-    * probe buckets, TakeOrderedAndProject — so the 100 TB story is
-    * unchanged (bucket column = storage partition key, probes prune). */
+  /** md5-replayable ANN top-k (oracle-exact q25 form): probe only
+    * vectors whose lattice-LSH bucket matches the query's (multi-probe
+    * over the query's bucket and its 1-bit flips). Recall < 1 by
+    * construction. One sigged corpus scan, broadcast 1+nPlanes probe
+    * buckets, TakeOrderedAndProject — at scale the bucket column is
+    * the storage partition key, so probes prune. */
   def latticeAnnTopK(vectors: DataFrame, idCol: String, vecCol: String,
       dim: Int, queryId: Long, k: Int, nPlanes: Int = 8): DataFrame = {
     val base = vectors.select(col(idCol), latticeVec(col(vecCol)).as("__q"))
@@ -269,10 +188,11 @@ object SimilarityOps {
     * are the nCells vectors with the smallest md5("seed:"||id) (both
     * engines sort the same lowercase-hex strings), cells rank by the
     * integer lattice score with ties to the smaller centroid id, the
-    * query probes its nprobe best cells. Same scale shape as ivfTopK:
-    * the collected centroids are k tiny rows (strideCentroids
-    * precedent), assignment is one codegen'd projection, and at scale
-    * the cell id is the storage partition key. */
+    * query probes its nprobe best cells. The collected centroids are
+    * nCells tiny rows (a bottom-k-by-hash sketch: no count pass, no
+    * global sort), assignment is one codegen'd projection, and at scale
+    * the cell id is the storage partition key, so a probe reads
+    * nprobe/nCells of the data. */
   def latticeIvfTopK(vectors: DataFrame, idCol: String, vecCol: String,
       queryId: Long, k: Int, nCells: Int = 16, nprobe: Int = 2)
       : DataFrame = {

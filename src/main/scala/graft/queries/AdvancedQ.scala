@@ -417,9 +417,7 @@ object AdvancedQ {
 
     // Weighted mean as a pure decimal expression plan: exact Σ(v·k)/Σk in
     // DECIMAL(30,2) with no object-buffer UDAF, so the aggregate stays in
-    // whole-stage codegen with map-side partial aggregation. The typed
-    // WeightedMean Aggregator (the UDAF API surface) is hash-equality
-    // checked against this plan in WeightedMeanSpec.
+    // whole-stage codegen with map-side partial aggregation.
     Q("q47_weighted_mean", (s, dir) => weightedMeanExpr(t(s, dir, "events")), oracle =
       """WITH e AS (
         | SELECT event_type, value,
@@ -534,18 +532,6 @@ object AdvancedQ {
             .cast("double") / sum(col("k")).cast("double"), 6).as("wmean"),
         sum(col("k")).as("sum_w"))
       .orderBy("event_type")
-
-  /** The same aggregation through the typed Aggregator (UDAF API surface);
-    * kept off the bench hot path — WeightedMeanSpec asserts it is
-    * result-identical to [[weightedMeanExpr]]. */
-  def weightedMeanUdaf(events: DataFrame): DataFrame = {
-    val wm = udaf(graft.functions.WeightedMean)
-    weightedKeyed(events)
-      .groupBy("event_type")
-      .agg(round(wm(col("value"), col("k")), 6).as("wmean"),
-        sum(col("k")).as("sum_w"))
-      .orderBy("event_type")
-  }
 
   private def weightedKeyed(events: DataFrame): DataFrame =
     events

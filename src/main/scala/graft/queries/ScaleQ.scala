@@ -33,11 +33,6 @@ object ScaleQ {
   // Bench's phase transition can't silently miss (or corrupt) one
   graft.SessionCaches.register(() => sharedEdges.clear())
 
-  /** Drop all cached edge sets (the checkpoint blocks are reclaimed by
-    * the context cleaner once unreferenced) — used by Bench between its
-    * warm-up and timed phases via SessionCaches.resetAll(). */
-  private[graft] def resetSharedEdges(): Unit = sharedEdges.clear()
-
   private[queries] def dedupEdges(s: SparkSession, dir: String): DataFrame = {
     sharedEdges.keysIterator
       .filter(_._1.sparkContext.isStopped)
@@ -545,9 +540,8 @@ object ScaleQ {
     // the ~2/(w+1)-sampled fingerprint set — smaller postings for the
     // same guarantee. ORACLE-EXACT as of r11: the fingerprint family is
     // md5 of the space-joined gram (lowercase-hex min ≡ 128-bit min, so
-    // DuckDB replays window selection exactly); the murmur WinnowExpr
-    // stays spec-gated as the cheap-hash variant, and the winnowing
-    // guarantee itself is PropertySpec-pinned for both families.
+    // DuckDB replays window selection exactly); the winnowing
+    // guarantee itself is PropertySpec-pinned.
     Q("q68_winnow_dups", (s, dir) => {
       val d = docText(s, dir)
         .select(col("doc_id").as("id"),

@@ -66,9 +66,8 @@ object SimQ {
     // signature, probe query bucket ± 1 bit. ORACLE-EXACT as of r10
     // (r9 verdict optional #5): md5-derived plane signs on the
     // floor(x·1000) integer lattice, signed integer cosine ×1e8 —
-    // same probe/plan shape as the float annTopK (which keeps its own
-    // spec coverage in GeoSimSpec), but every number replays in
-    // DuckDB, shrinking the rows-only set 7 → 5.
+    // every number replays in DuckDB, shrinking the rows-only set
+    // 7 → 5.
     Q("q25_ann_topk", (s, dir) =>
       SimilarityOps.latticeAnnTopK(
         t(s, dir, "embeddings").select("vec_id", "embedding"),
@@ -116,8 +115,7 @@ object SimQ {
 
     // IVF-bucketed ANN: md5-seeded centroids (16 smallest
     // md5("seed:"||id)), integer-lattice cell ranking, probe the 2
-    // nearest cells. ORACLE-EXACT as of r10 — same IVF shape as the
-    // float ivfTopK/strideCentroids (GeoSimSpec keeps those gated).
+    // nearest cells. ORACLE-EXACT as of r10.
     Q("q44_ivf_ann", (s, dir) =>
       SimilarityOps.latticeIvfTopK(
         t(s, dir, "embeddings").select("vec_id", "embedding"),

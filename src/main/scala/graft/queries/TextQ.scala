@@ -386,8 +386,7 @@ object TextQ {
     // MinHash + LSH near-dup candidates, verified by exact shingle
     // Jaccard. ORACLE-EXACT as of r11: md5 seed-minima (q227's family
     // at the full 16×4 banding) — DuckDB re-derives every signature,
-    // band key and the verified Jaccard; the murmur minhashLshPairs
-    // stays spec-gated as the cheap-hash variant (DedupOpsSpec).
+    // band key and the verified Jaccard.
     Q("q17_minhash_lsh", (s, dir) =>
       DedupOps.minhashMd5LshPairs(t(s, dir, "documents"), "doc_id", "text",
         shingleK = 3, bands = 16, rowsPerBand = 4, threshold = 0.5)
@@ -446,8 +445,7 @@ object TextQ {
     // banded). ORACLE-EXACT as of r11: the md5-nibble vote family
     // (q253's sketch widened to 64 bits), fingerprint carried as 4
     // chunk columns so DuckDB replays banding and popcount chunk-by-
-    // chunk; the xxhash simhashPairs stays spec-gated as the cheap-hash
-    // variant (DedupOpsSpec).
+    // chunk.
     Q("q18_simhash", (s, dir) =>
       DedupOps.simhashMd5Pairs(t(s, dir, "documents"), "doc_id", "text",
         maxHamming = 3)

@@ -20,14 +20,9 @@ object StreamJoin {
 
   def intervalJoin(left: DataFrame, leftKey: String, leftTs: String,
       right: DataFrame, rightKey: String, rightTs: String,
-      maxLagSec: Long, watermarkSec: Long): DataFrame = {
-    val l = left.withWatermark(leftTs, s"$watermarkSec seconds")
-    val r = right.withWatermark(rightTs, s"$watermarkSec seconds")
-    l.join(r,
-      col(leftKey) === col(rightKey) &&
-        col(rightTs) >= col(leftTs) &&
-        col(rightTs) <= col(leftTs) + expr(s"INTERVAL $maxLagSec SECONDS"))
-  }
+      maxLagSec: Long, watermarkSec: Long): DataFrame =
+    watermarkedJoin(left, leftKey, leftTs, right, rightKey, rightTs,
+      maxLagSec, watermarkSec, "inner")
 
   /** Left-outer variant: unmatched left events are EMITTED null-padded
     * once the watermark proves no in-window right event can still
@@ -37,13 +32,19 @@ object StreamJoin {
     * correctness/latency trade every streaming outer join makes). */
   def intervalJoinLeftOuter(left: DataFrame, leftKey: String,
       leftTs: String, right: DataFrame, rightKey: String, rightTs: String,
-      maxLagSec: Long, watermarkSec: Long): DataFrame = {
+      maxLagSec: Long, watermarkSec: Long): DataFrame =
+    watermarkedJoin(left, leftKey, leftTs, right, rightKey, rightTs,
+      maxLagSec, watermarkSec, "leftOuter")
+
+  private def watermarkedJoin(left: DataFrame, leftKey: String,
+      leftTs: String, right: DataFrame, rightKey: String, rightTs: String,
+      maxLagSec: Long, watermarkSec: Long, joinType: String): DataFrame = {
     val l = left.withWatermark(leftTs, s"$watermarkSec seconds")
     val r = right.withWatermark(rightTs, s"$watermarkSec seconds")
     l.join(r,
       col(leftKey) === col(rightKey) &&
         col(rightTs) >= col(leftTs) &&
         col(rightTs) <= col(leftTs) + expr(s"INTERVAL $maxLagSec SECONDS"),
-      "leftOuter")
+      joinType)
   }
 }

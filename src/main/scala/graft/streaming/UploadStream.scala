@@ -82,15 +82,4 @@ object UploadStream {
     * file is picked up without restarting the query. */
   def enriched(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
     stream.join(broadcast(dim), Seq(key), "left")
-
-  /** Streaming url-dedup with bounded state (R5): duplicates arriving
-    * within the watermark horizon are dropped; state for urls older than
-    * the watermark is evicted, so state size tracks the recent window,
-    * not history. (Cross-horizon idempotence still comes from the load
-    * anti-join in dedupForLoad.) */
-  def dedupedWithinWatermark(events: DataFrame,
-      lateness: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .dropDuplicatesWithinWatermark("url")
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{HashExprs, ShinglesExpr}
+import graft.functions.ShinglesExpr
 import graft.ops.{DedupOps, TextOps}
 
 class DedupOpsSpec extends SparkSpec {
@@ -12,22 +12,6 @@ class DedupOpsSpec extends SparkSpec {
     (2L, "the quick brown fox jumps over the lazy cat"),
     (3L, "completely different words entirely here now"),
   ).toDF("id", "text")
-
-  test("custom MinHash expression ≡ declarative HOF formulation") {
-    val toks = TextOps.tokens($"text")
-    val got = docs.select(
-      HashExprs.minhash_sig(toks, 16).as("fast"),
-      DedupOps.minhashSignature(toks, 16).as("slow"))
-    assert(got.filter($"fast" =!= $"slow").count() == 0)
-  }
-
-  test("custom SimHash expression ≡ declarative HOF formulation") {
-    val toks = TextOps.tokens($"text")
-    val got = docs.select(
-      HashExprs.simhash64(toks).as("fast"),
-      DedupOps.simhash64(toks).as("slow"))
-    assert(got.filter($"fast" =!= $"slow").count() == 0)
-  }
 
   test("custom shingles expression ≡ declarative HOF formulation") {
     val toks = TextOps.tokens($"text")
@@ -91,30 +75,17 @@ class DedupOpsSpec extends SparkSpec {
   }
 
   test("minhash LSH finds the near-dup pair and skips the unrelated doc") {
-    val pairs = DedupOps.minhashLshPairs(docs, "id", "text",
+    val pairs = DedupOps.minhashMd5LshPairs(docs, "id", "text",
       shingleK = 2, bands = 16, rowsPerBand = 4, threshold = 0.3)
       .collect()
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
-    // the md5 twin (q17's registered family since r11): same pair set
-    // on this corpus — banding probability is hash-family-independent
-    val md5Pairs = DedupOps.minhashMd5LshPairs(docs, "id", "text",
-      shingleK = 2, bands = 16, rowsPerBand = 4, threshold = 0.3)
-      .collect()
-    assert(md5Pairs.map(r => (r.getLong(0), r.getLong(1))).toSet ==
-      Set((1L, 2L)))
   }
 
   test("simhash pairs: near-dups within small hamming distance") {
-    val pairs = DedupOps.simhashPairs(docs, "id", "text", maxHamming = 16)
+    // chunked banding requires (maxHamming+1) | 64, so 16 bits × 4 chunks
+    val pairs = DedupOps.simhashMd5Pairs(docs, "id", "text", maxHamming = 15)
       .collect()
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))).contains((1L, 2L)))
-    // the md5 twin (q18's registered family since r11); its chunked
-    // banding requires (maxHamming+1) | 64, so 16 bits × 4 chunks
-    val md5Pairs = DedupOps.simhashMd5Pairs(docs, "id", "text",
-      maxHamming = 15)
-      .collect()
-    assert(md5Pairs.map(r => (r.getLong(0), r.getLong(1)))
-      .contains((1L, 2L)))
   }
 
   test("simhash md5 empty token arrays carry no signature (r11 ADVICE)") {
@@ -206,7 +177,7 @@ class DedupOpsSpec extends SparkSpec {
   }
 
   test("winnowing: shared long substring guarantees a shared fingerprint") {
-    import graft.functions.WinnowExpr
+    import graft.functions.WinnowMd5Expr.winnowMd5
     val k = 3; val w = 4
     val common = "one two three four five six seven eight nine ten"
     val pair = Seq(
@@ -215,17 +186,17 @@ class DedupOpsSpec extends SparkSpec {
       (3L, "completely unrelated words that overlap with nothing at all"))
       .toDF("id", "text")
     val fps = pair.select($"id",
-      WinnowExpr.winnow(TextOps.tokens($"text"), k, w).as("fps"))
+      winnowMd5(TextOps.tokens($"text"), k, w).as("fps"))
       .orderBy("id").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+      .map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
     // the shared 10-token run >= w+k-1 = 6 tokens -> >=1 shared fingerprint
     assert((fps(1L) & fps(2L)).nonEmpty)
     assert((fps(1L) & fps(3L)).isEmpty)
     // winnowing stores a fraction of the grams and is deterministic
     val nGrams = common.split(" ").length + 4 - k + 1
     assert(fps(1L).size < nGrams)
-    val again = pair.select(WinnowExpr.winnow(TextOps.tokens($"text"), k, w))
-      .orderBy($"id").collect().map(_.getSeq[Long](0).toSet)
+    val again = pair.select(winnowMd5(TextOps.tokens($"text"), k, w))
+      .orderBy($"id").collect().map(_.getSeq[String](0).toSet)
     assert(again(0) == fps(1L))
   }
 

@@ -71,42 +71,6 @@ class GeoSimSpec extends SparkSpec {
     assert(math.abs(r.getDouble(2) - 1.0) < 1e-12)
   }
 
-  test("IVF ANN: probes cells only, self is top-1, sims exact") {
-    val dir = "/root/testdata/sf0.001"
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
-    val cents = SimilarityOps.strideCentroids(e, "vec_id", "embedding", 8)
-    assert(cents.length == 8 && cents.head._2.length == 64)
-    val q = e.filter($"vec_id" === 1).select($"embedding")
-    val got = SimilarityOps.ivfTopK(e.select("vec_id", "embedding"),
-      "vec_id", "embedding", q, "embedding", 10, cents, nprobe = 2)
-      .collect()
-    assert(got.nonEmpty && got.head.getLong(0) == 1L)
-    assert(math.abs(got.head.getDouble(1) - 1.0) < 1e-6) // self cos = 1
-    // every cell assignment is one of the 8 cells and cells partition rows
-    val assigned = SimilarityOps.ivfAssign(
-      e.select("vec_id", "embedding"), "vec_id", "embedding", cents)
-    assert(assigned.count() == e.count())
-    val cells = assigned.select("cell").distinct().as[Int].collect().toSet
-    assert(cells.subsetOf((0 until 8).toSet))
-  }
-
-  test("ANN results are a subset of brute-force and self is top-1") {
-    val dir = "/root/testdata/sf0.001"
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
-    val q = e.filter($"vec_id" === 1).select($"embedding")
-    val brute = SimilarityOps.cosineTopK(
-      e.select("vec_id", "embedding"), "embedding", q, "embedding", 500)
-      .select("vec_id", "cos_sim").collect()
-    val bruteRank = brute.map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val ann = SimilarityOps.annTopK(e.select("vec_id", "embedding"),
-      "vec_id", "embedding", 64, q, "embedding", 10).collect()
-    assert(ann.nonEmpty)
-    assert(ann.head.getLong(0) == 1L) // query vector itself, cos=1
-    ann.foreach { r =>
-      assert(math.abs(bruteRank(r.getLong(0)) - r.getDouble(1)) < 1e-9)
-    }
-  }
-
   test("lattice ANN (md5-replayable): self-hit exact, scores track cos") {
     val dir = "/root/testdata/sf0.001"
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -116,9 +80,18 @@ class GeoSimSpec extends SparkSpec {
     val cosOf = SimilarityOps.cosineTopK(e, "embedding", q, "embedding",
         500).select("vec_id", "cos_sim")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    for (got <- Seq(
-        SimilarityOps.latticeAnnTopK(e, "vec_id", "embedding", 64,
-          queryId = 1, k = 10).collect(),
+    val ann = SimilarityOps.latticeAnnTopK(e, "vec_id", "embedding", 64,
+      queryId = 1, k = 10).collect()
+    // probing only the query's buckets returns a subset of the
+    // brute-force lattice scan, each id with its brute-force score
+    val qv = e.filter($"vec_id" === 1)
+      .select(SimilarityOps.latticeVec($"embedding").as("qv"))
+    val brute = e.crossJoin(qv)
+      .select($"vec_id", SimilarityOps.latticeCosE8(
+        SimilarityOps.latticeVec($"embedding"), $"qv"))
+      .as[(Long, Long)].collect().toMap
+    ann.foreach(r => assert(brute.get(r.getLong(0)).contains(r.getLong(1))))
+    for (got <- Seq(ann,
         SimilarityOps.latticeIvfTopK(e, "vec_id", "embedding",
           queryId = 1, k = 10).collect())) {
       assert(got.nonEmpty)

@@ -115,7 +115,5 @@ class Mp3CodecSpec extends org.scalatest.funsuite.AnyFunSuite {
     // garbage
     intercept[IllegalArgumentException](
       Mp3Codec.scan("not an mp3 stream".getBytes))
-    // sample decode is a declared refusal, not a stub
-    intercept[UnsupportedOperationException](Mp3Codec.decodeSamples(good))
   }
 }

@@ -322,6 +322,27 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("order statistics read the per-group n/k aggregate once per call") {
+    // OrderStats.kth aggregates the histogram once per group into n and
+    // each k, and carries them to its output. A second read of that
+    // aggregate (a join back for n/k) plans either a second final
+    // sum(__cnt) aggregate over the same histogram or, once Catalyst
+    // prunes it to the group keys, a key-only aggregate over the input.
+    // Each call has one histogram-offset window, so it counts the calls.
+    for (q <- Seq("q159_global_median", "q224_weighted_median",
+        "q236_event_value_mad", "q246_equidepth_quartiles",
+        "q250_mad_outliers", "q275_interquantile_mean",
+        "q279_rfm_segments")) {
+      val p = planOf(q)
+      val calls = """Window \[sum\(__cnt#""".r.findAllIn(p).size
+      val nk = """functions=\[sum\(__cnt#""".r.findAllIn(p).size
+      assert(calls >= 1 && nk == calls,
+        s"$q: $nk final n/k aggregates for $calls calls:\n${p.take(4000)}")
+      assert(!p.contains("functions=[]"),
+        s"$q: key-only aggregate (a pruned n/k re-read):\n${p.take(4000)}")
+    }
+  }
+
   test("grid neighbor join is a plain equi hash join, not a theta join") {
     // q237's 9-cell replication turns the L-inf band predicate into an
     // equi join on the cell key; a BroadcastNestedLoopJoin here would

@@ -205,18 +205,11 @@ class PropertySpec extends SparkSpec {
       // plant the run mid-document in both
       val da = (a.take(15) ++ run ++ a.drop(15)).mkString(" ")
       val db = (b.take(7) ++ run ++ b.drop(7)).mkString(" ")
-      val fps = Seq(da, db).toDF("text")
-        .select(graft.functions.WinnowExpr
-          .winnow(graft.ops.TextOps.tokens($"text"), k, w))
-        .collect().map(_.getSeq[Long](0).toSet)
-      assert((fps(0) & fps(1)).nonEmpty, s"case $i: no shared fingerprint")
-      // the guarantee is hash-family-independent: the md5-hex twin
-      // (q68's registered family since r11) must find the run too
       val fpm = Seq(da, db).toDF("text")
         .select(graft.functions.WinnowMd5Expr
           .winnowMd5(graft.ops.TextOps.tokens($"text"), k, w))
         .collect().map(_.getSeq[String](0).toSet)
-      assert((fpm(0) & fpm(1)).nonEmpty, s"case $i: no shared md5 fp")
+      assert((fpm(0) & fpm(1)).nonEmpty, s"case $i: no shared fingerprint")
     }
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import graft.multimodal.BinaryOps
-import graft.streaming.UploadStream
+import graft.streaming.{StreamDedup, UploadStream}
 import org.apache.spark.sql.functions._
 
 class StreamingMultimodalSpec extends SparkSpec {
@@ -365,7 +365,7 @@ class StreamingMultimodalSpec extends SparkSpec {
       (ts(0), "http://a", 1.0),
       (ts(1), "http://a", 2.0), // dup within horizon -> dropped
       (ts(2), "http://b", 3.0))
-    val q = UploadStream.dedupedWithinWatermark(events)
+    val q = StreamDedup.dedupWithinWatermark(events, "url", "ts", 600)
       .writeStream.outputMode("append")
       .format("parquet").option("path", s"$out/data")
       .option("checkpointLocation", s"$out/ck")
